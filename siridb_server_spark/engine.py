@@ -15,6 +15,7 @@ machinery of the reference is irrelevant — Spark owns distribution.
 
 from __future__ import annotations
 
+import functools
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -25,6 +26,7 @@ from . import help as HELP
 from .errors import InsertError, QueryError
 from .functions import pipeline as P
 from .functions.pipeline import COLS, StageResult, TypeSet
+from .localdf import arrow_df
 from .model import (
     CATALOG_SCHEMA,
     NAME_TPS,
@@ -43,6 +45,7 @@ from .operators.where import compile_where
 from .plans import nodes as N
 from .plans import timeexpr as TE
 from .plans.parser import Parser
+from .sources.store import merge_stats, point_stats
 
 #: defaults mirror include/siri/db/db.h:16-17
 DEFAULT_SELECT_POINTS_LIMIT = 1_000_000
@@ -69,8 +72,13 @@ class SiriEngine:
         # insert/drop/expiration never discard the wrapped data
         self._base_df: DataFrame | None = None
         self._catalog: DataFrame | None = None
-        #: driver-held catalog snapshot (micro-latency fast path)
+        #: driver-held catalog snapshot (micro-latency fast path):
+        #: ``_local_raw`` holds the store.merge_stats fold the rows of
+        #: ``_local_cat`` are derived from, ``_local_files`` the
+        #: catalog files it reflects (store-backed engines)
+        self._local_raw: dict | None = None
         self._local_cat: dict | None = None
+        self._local_files: frozenset | None = None
         self._seq = 0
         self._multi_cache: DataFrame | None = None
         #: driver-side catalog answers for list/count/skip-points
@@ -201,13 +209,7 @@ class SiriEngine:
         # reference's success message does
         rows = self._drop_expired_rows(rows)
         if rows:
-            if self.store is not None:
-                if self._auto_duration_pending:
-                    self._apply_auto_duration(rows)
-                self.store.append(self.spark, rows)
-            else:
-                self._mem_rows.extend(rows)
-        self._invalidate()
+            self._append(rows)
         # heartbeat analogue (heartbeat.c:62 →
         # siridb_update_shard_expiration): previously-valid shards that
         # crossed the cutoff are dropped on the next ingest
@@ -228,6 +230,8 @@ class SiriEngine:
         )
 
         self._auto_duration_pending = False
+        # the snapshot rows carry the shard durations set here
+        self._drop_snapshot()
         by_kind: dict = {}
         for r in rows:
             is_log = r[6] == TP_STRING
@@ -285,67 +289,121 @@ class SiriEngine:
                  {v: k for k, v in TP_NAMES.items()}[r["type"]]}
                 for r in rows]
 
-    def _invalidate(self):
+    def _append(self, rows: list):
+        """Append an insert's rows and fold them into the driver
+        catalog snapshot instead of dropping it — the reference
+        updates its live series structs in place on every insert
+        (siridb_series_add_point, series.c:131-178). A store-backed
+        snapshot is kept only when the catalog files after the append
+        are exactly the ones it reflected plus this append's delta
+        files (carried through an insert-triggered compaction by
+        :meth:`_rekey`); a foreign appender, a stale pending marker,
+        the Spark append path or a failed append drop it, and the
+        next read reloads it from the files."""
+        self._drop_frames()
+        if self.store is None:
+            self._mem_rows.extend(rows)
+            self._fold_snapshot(map(point_stats, rows))
+            return
+        try:
+            if self._auto_duration_pending:
+                self._apply_auto_duration(rows)
+            res = self.store.append(self.spark, rows)
+        except BaseException:
+            self._drop_snapshot()
+            raise
+        if res is None or self._local_files is None or not self._rekey(
+                self._local_files | res["delta"], res["compaction"]):
+            self._drop_snapshot()
+            return
+        self._fold_snapshot(res["stats"].items())
+
+    def _rekey(self, want: frozenset, compaction) -> bool:
+        """Point the snapshot at the catalog files it reflects now:
+        ``want`` (its files plus this engine's own delta writes),
+        carried through a ``_compact_catalog`` whose input was exactly
+        ``want`` — compaction changes the files, never the logical
+        catalog. False when the catalog on disk is anything else."""
+        if compaction is not None:
+            folded_from, left = compaction
+            if folded_from != want:
+                return False
+            want = left
+        if self.store.catalog_files() != want:
+            return False
+        self._local_files = want
+        return True
+
+    def _drop_frames(self):
+        """Forget the Spark frames derived from the data (rebuilt
+        lazily); the driver snapshot is kept."""
         self._mem_df = None
-        self._local_cat = None
         if self._catalog is not None:
-            try:
-                self._catalog.unpersist()
-            except Exception:
-                pass
+            self._catalog.unpersist()
         self._catalog = None
+
+    def _drop_snapshot(self):
+        self._local_raw = self._local_cat = self._local_files = None
+
+    def _invalidate(self):
+        self._drop_frames()
+        self._drop_snapshot()
 
     # ------------------------------------------------- catalog fast path
     def _catalog_local(self) -> dict | None:
         """Driver-held catalog snapshot — NO Spark job. The
-        micro-latency path for list/count/skip-points statements
-        (plans/fastpath.py): store-backed engines fold the catalog
-        parquet with pyarrow; memory-backed engines fold the in-heap
-        rows. None (→ distributed fallback) when a snapshot isn't
-        cheaply available: a crashed append needs the Spark-path
-        repair, or the points live in an arbitrary base DataFrame."""
+        micro-latency path for list/count/skip-points statements and
+        the seeds of selects (plans/fastpath.py): store-backed engines
+        fold the catalog parquet with pyarrow; memory-backed engines
+        fold the in-heap rows. Loaded once and then kept current by
+        the engine's own inserts (:meth:`_append`). None (→
+        distributed fallback) when a snapshot isn't cheaply
+        available: a crashed append needs the Spark-path repair, or
+        the points live in an arbitrary base DataFrame."""
         if self._local_cat is not None:
             return self._local_cat
-        raw = None
+        raw = files = None
         if self.store is not None:
-            raw = self.store.read_catalog_local()
+            files = self.store.catalog_files()
+            if files:
+                raw = self.store.read_catalog_local(files)
         elif self._base_df is None:
-            raw = {}
-            for r in self._mem_rows:
-                name, ts, seq, tp = r[0], r[1], r[2], r[6]
-                vals = (seq, r[3], r[4], r[5])
-                cur = raw.get(name)
-                if cur is None:
-                    raw[name] = (1, ts, ts, tp, vals, vals)
-                else:
-                    fst = vals if (ts, seq) < (cur[1], cur[4][0]) \
-                        else cur[4]
-                    lst = vals if (ts, seq) > (cur[2], cur[5][0]) \
-                        else cur[5]
-                    raw[name] = (cur[0] + 1, min(cur[1], ts),
-                                 max(cur[2], ts), max(cur[3], tp),
-                                 fst, lst)
+            raw = merge_stats({}, map(point_stats, self._mem_rows))
         if raw is None:
             return None
-        cat = {}
-        for name, (ln, st, en, tp, fst, lst) in raw.items():
-            cat[name] = {
-                "name": name,
-                "type": TP_NAMES[tp],
-                "length": ln, "start": st, "end": en,
-                "pool": 0,
-                "shard_duration": (self.duration_log
-                                   if tp == TP_STRING
-                                   else self.duration_num),
-                "tp": tp,
-                # typed first/last values (skip-points first()/last())
-                "first": fst[1] if tp == TP_INT
-                else fst[2] if tp == TP_DOUBLE else fst[3],
-                "last": lst[1] if tp == TP_INT
-                else lst[2] if tp == TP_DOUBLE else lst[3],
-            }
-        self._local_cat = cat
-        return cat
+        self._local_raw, self._local_files = raw, files
+        self._local_cat = {name: self._catalog_row(name, st)
+                           for name, st in raw.items()}
+        return self._local_cat
+
+    def _fold_snapshot(self, stats):
+        """Fold ``(name, stats)`` pairs of new points into the
+        snapshot, if one is held (store.merge_stats — the same fold
+        a reload applies to the catalog files)."""
+        if self._local_raw is None:
+            return
+        stats = list(stats)
+        merge_stats(self._local_raw, stats)
+        for name in {name for name, _ in stats}:
+            self._local_cat[name] = self._catalog_row(
+                name, self._local_raw[name])
+
+    def _catalog_row(self, name: str, stats: tuple) -> dict:
+        ln, st, en, tp, fst, lst = stats
+        return {
+            "name": name,
+            "type": TP_NAMES[tp],
+            "length": ln, "start": st, "end": en,
+            "pool": 0,
+            "shard_duration": (self.duration_log if tp == TP_STRING
+                               else self.duration_num),
+            "tp": tp,
+            # typed first/last values (skip-points first()/last())
+            "first": fst[1] if tp == TP_INT
+            else fst[2] if tp == TP_DOUBLE else fst[3],
+            "last": lst[1] if tp == TP_INT
+            else lst[2] if tp == TP_DOUBLE else lst[3],
+        }
 
     def _entity_rows_local(self, entity: str) -> list | None:
         """Driver-side rows for the non-series entities — they all
@@ -458,7 +516,6 @@ class SiriEngine:
             if self._base_df is not None and not self._mem_rows:
                 self._mem_df = self._base_df
             else:
-                from .localdf import arrow_df
                 df = arrow_df(self.spark, self._mem_rows,
                               POINTS_SCHEMA)
                 if self._base_df is not None:
@@ -673,6 +730,12 @@ class SiriEngine:
             self._multi_cache = None
 
     def _select_plan(self, stmt: N.SelectStmt, need_seeds: bool = True):
+        # query(): the seeds (names, type set, points bound) come from
+        # the driver snapshot when one is held — the same rows the
+        # catalog collect below would bring down, without building,
+        # caching and collecting the Spark catalog frame
+        local = self._local_selected(stmt.match, stmt.where) \
+            if need_seeds and self.fastpath_enabled else None
         # the one-pass stats branch below never touches the catalog —
         # don't build (and cache-register) it there
         cat = None
@@ -680,11 +743,16 @@ class SiriEngine:
         # catalog route for it (the one-pass branch would add a
         # points pass the skip path exists to avoid)
         skippable = self._skippable_agg(stmt) is not None
-        if need_seeds or self.store is not None \
-                or stmt.where is not None or skippable:
+        if local is None and (need_seeds or self.store is not None
+                              or stmt.where is not None or skippable):
             cat = self._selected_catalog(stmt.match, stmt.where)
         tp_of = {v: k for k, v in TP_NAMES.items()}
-        if need_seeds:
+        if local is not None:
+            sel_names = [r["name"] for r in local]
+            tps = frozenset(r["tp"] for r in local)
+            total_points = sum(r["length"] for r in local)
+            n_sel = len(sel_names)
+        elif need_seeds:
             # query(): ONE driver-side collect over the catalog — the
             # result dict is keyed per series, inherently driver-sized
             # (as in the reference), so the names must come down anyway
@@ -736,62 +804,34 @@ class SiriEngine:
                 (stmt.pipelines[0].prefix or "") + nm
                 + (stmt.pipelines[0].suffix or "") for nm in sel_names]
 
-        df = self._points_for_select()
-        pred = compile_match(stmt.match, self.groups, self.tags)
-        df = df.where(pred)
+        # the where-selected names, shared by the points path and the
+        # rollup path of every pipeline
+        roll_ctx: dict = {}
         if stmt.where is not None:
-            names = cat.select(F.col("name").alias("series"))
-            df = df.join(F.broadcast(names), "series", "semi")
+            roll_ctx["names"] = (
+                arrow_df(self.spark, [(nm,) for nm in sel_names],
+                         "series string")
+                if local is not None
+                else cat.select(F.col("name").alias("series")))
 
-        # time range (ref listener.c:1955-2129: after ⇒ ts>=t,
-        # before ⇒ ts<t, between ⇒ a<=ts<b) and head/tail.
-        # Store-backed frames carry the shard-id partition column:
-        # derive sid bounds so the scan prunes whole shard directories
-        # (the analogue of the reference's shard skipping,
-        # series.c:927-938).
-        has_sid = "_sid" in df.columns
-        maxdur = max(self.duration_num, self.duration_log)
+        # the points frame is built on first use only: a select whose
+        # every pipeline the rollup serves never lists the store or
+        # infers the points schema
+        @functools.cache
+        def points() -> DataFrame:
+            return self._select_points(stmt, roll_ctx.get("names"))
+
         tr = stmt.timerange
-        restricted = False
-        if tr is not None:
-            kind = tr[0]
-            if kind == "after":
-                df = df.where(F.col("ts") >= tr[1])
-                if has_sid:
-                    df = df.where(F.col("_sid") > tr[1] - maxdur)
-                restricted = True
-            elif kind == "before":
-                df = df.where(F.col("ts") < tr[1])
-                if has_sid:
-                    df = df.where(F.col("_sid") < tr[1])
-                restricted = True
-            elif kind == "between":
-                df = df.where((F.col("ts") >= tr[1])
-                              & (F.col("ts") < tr[2]))
-                if has_sid:
-                    df = df.where((F.col("_sid") > tr[1] - maxdur)
-                                  & (F.col("_sid") < tr[2]))
-                restricted = True
-            elif kind in ("head", "tail"):
-                order = [F.col("ts"), F.col("seq")] if kind == "head" else \
-                    [F.col("ts").desc(), F.col("seq").desc()]
-                w = Window.partitionBy("series").orderBy(*order)
-                df = (df.withColumn("_rn", F.row_number().over(w))
-                      .where(F.col("_rn") <= tr[1]).drop("_rn"))
-                if n_sel:  # unknown (0) on the one-pass stats path:
-                    # skipping the tightener only risks one extra
-                    # exact count below, never a missed error
-                    total_points = min(total_points,
-                                       tr[1] * n_sel)
-                restricted = True
-
-        if has_sid:
-            df = df.drop("_sid")
+        if tr is not None and tr[0] in ("head", "tail") and n_sel:
+            # unknown (0) on the one-pass stats path: skipping the
+            # tightener only risks one extra exact count below, never
+            # a missed error
+            total_points = min(total_points, tr[1] * n_sel)
 
         # select-points guardrail (db.h:16, listener.c:5598-5610):
         # catalog bound first; exact count only when the bound trips.
         if total_points > self.select_points_limit:
-            n = df.count()
+            n = points().count()
             if n > self.select_points_limit:
                 raise QueryError(
                     "Query has reached the maximum number of selected "
@@ -807,14 +847,20 @@ class SiriEngine:
                 raise QueryError(
                     "When using multiple select methods, add a prefix "
                     "and/or suffix to the selection to make them unique.")
+            self._release_multi_cache()
+
+        @functools.cache
+        def pipeline_points() -> DataFrame:
+            if not multi:
+                return points()
             # the reference reads each series' points once and reuses
             # them across comma-pipelines (listener.c:5632-5668); the
-            # cache is the Spark equivalent. At most ONE such cache is
-            # live per engine (select_df callers keep it until the
-            # next select), and query() releases it after collecting.
-            self._release_multi_cache()
-            df = df.cache()
-            self._multi_cache = df
+            # cache is the Spark equivalent, made when the first
+            # pipeline reads points. At most ONE such cache is live
+            # per engine (select_df callers keep it until the next
+            # select), and query() releases it after collecting.
+            self._multi_cache = points().cache()
+            return self._multi_cache
 
         merge = stmt.merge
         if merge is not None and merge.name == "":
@@ -824,11 +870,11 @@ class SiriEngine:
 
         results = []
         checks = []
-        roll_ctx: dict = {}
         for pl in stmt.pipelines:
             res = self._rollup_pipeline(pl, stmt, types, roll_ctx)
             if res is None:
-                res = self._run_pipeline(df, pl.funcs, types)
+                res = self._run_pipeline(pipeline_points(), pl.funcs,
+                                         types)
             out, rtypes = res.df, res.types
             checks.extend(res.checks)
             if merge is not None:
@@ -870,8 +916,6 @@ class SiriEngine:
             uni = res.df
             checks.extend(res.checks)
 
-        final = [(uni, None)]
-
         for chk in checks:
             chk.run()
 
@@ -889,8 +933,52 @@ class SiriEngine:
         # NOTE: the multi-pipeline cache stays resident until Spark's LRU
         # evicts it — unpersisting here would drop it before the caller
         # materializes the plan.
-        out_df = final[0][0]
-        return out_df, seeds
+        return uni, seeds
+
+    def _select_points(self, stmt: N.SelectStmt, names) -> DataFrame:
+        """The points a select reads: the matched series (semi-joined
+        to the where-selected ``names`` frame when the select has a
+        ``where``), restricted to its time range or head/tail."""
+        df = self._points_for_select()
+        pred = compile_match(stmt.match, self.groups, self.tags)
+        df = df.where(pred)
+        if names is not None:
+            df = df.join(F.broadcast(names), "series", "semi")
+
+        # time range (ref listener.c:1955-2129: after ⇒ ts>=t,
+        # before ⇒ ts<t, between ⇒ a<=ts<b) and head/tail.
+        # Store-backed frames carry the shard-id partition column:
+        # derive sid bounds so the scan prunes whole shard directories
+        # (the analogue of the reference's shard skipping,
+        # series.c:927-938).
+        has_sid = "_sid" in df.columns
+        maxdur = max(self.duration_num, self.duration_log)
+        tr = stmt.timerange
+        if tr is not None:
+            kind = tr[0]
+            if kind == "after":
+                df = df.where(F.col("ts") >= tr[1])
+                if has_sid:
+                    df = df.where(F.col("_sid") > tr[1] - maxdur)
+            elif kind == "before":
+                df = df.where(F.col("ts") < tr[1])
+                if has_sid:
+                    df = df.where(F.col("_sid") < tr[1])
+            elif kind == "between":
+                df = df.where((F.col("ts") >= tr[1])
+                              & (F.col("ts") < tr[2]))
+                if has_sid:
+                    df = df.where((F.col("_sid") > tr[1] - maxdur)
+                                  & (F.col("_sid") < tr[2]))
+            elif kind in ("head", "tail"):
+                order = [F.col("ts"), F.col("seq")] if kind == "head" else \
+                    [F.col("ts").desc(), F.col("seq").desc()]
+                w = Window.partitionBy("series").orderBy(*order)
+                df = (df.withColumn("_rn", F.row_number().over(w))
+                      .where(F.col("_rn") <= tr[1]).drop("_rn"))
+        if has_sid:
+            df = df.drop("_sid")
+        return df
 
     def _fast_select_dict(self, stmt: N.SelectStmt):
         """Zero-Spark-job twin of :meth:`_skip_points_plan` for the
@@ -1688,8 +1776,8 @@ class SiriEngine:
                 continue
             self._exp_applied[key] = cutoff_sid
             if self.store is not None:
-                self.store.expire(self.spark, cutoff_sid, tp_str)
-                changed = True
+                changed |= self.store.expire(self.spark, cutoff_sid,
+                                             tp_str)
                 continue
             keep = []
             for r in self._mem_rows:
@@ -1715,13 +1803,15 @@ class SiriEngine:
         """One operational entry point for the background maintenance
         the reference runs on timers (siri/optimize.c:33-55 shard
         rewrites, heartbeat.c:62 expiration): retention, shard
-        compaction, and catalog delta compaction."""
+        compaction, and catalog delta compaction. The driver snapshot
+        survives unless retention dropped a shard: shard and catalog
+        compaction change files, not the catalog."""
         self._exp_applied.clear()
         self._apply_expiration()
         if self.store is not None:
             self.store.optimize(self.spark, max_files_per_partition)
             with self.store._pending():
-                self.store._compact_catalog(self.spark)
+                compaction = self.store._compact_catalog(self.spark)
             # refresh the materialized rollup (compaction just
             # renamed every fragmented shard's files, so a stale
             # rollup would fall back to points everywhere)
@@ -1736,7 +1826,10 @@ class SiriEngine:
                     # next maintain() refreshes (same busy-skip
                     # _compact_catalog applies)
                     pass
-            self._invalidate()
+            self._drop_frames()
+            if self._local_files is not None and not self._rekey(
+                    self._local_files, compaction):
+                self._drop_snapshot()
         return {"success_msg": "Maintenance finished."}
 
     def _alter_series(self, stmt: N.AlterSeries) -> dict:

@@ -10,9 +10,17 @@ already in the maintained catalog should never launch one.
 This module gives the engine that path: pure-Python evaluators for
 the FROM-clause set algebra and the ``where`` cexpr over a
 driver-held catalog snapshot (a dict of per-series stats, loaded
-without Spark — see ``PointsStore.read_catalog_local``). The
+without Spark — see ``PointsStore.read_catalog_local`` — and then
+kept current by folding in the engine's own inserts, as the
+reference updates its series structs on every insert). The
 evaluators mirror ``operators/selection.py`` / ``operators/where.py``
 exactly, including error messages; goldens cover both paths.
+
+The same selection also seeds every ``query()`` select: the matched
+names, their type set and the points bound come from the snapshot,
+so planning a select builds no Spark catalog frame and runs no job
+for it. ``fastpath_enabled = False`` sends all of these through the
+Spark catalog instead.
 
 Scale note: the snapshot is O(|series|) driver memory — the same
 stance as the reference, whose series map lives in RAM on every

@@ -501,34 +501,20 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
                 os.makedirs(target, exist_ok=True)
                 os.rename(staged, os.path.join(
                     target, os.path.basename(staged)))
-        # fold per-task stats (associative; first/last by argmin/
-        # argmax over (start/end, seq)) and append ONE delta commit
-        folded: dict = {}
-        for msg in messages:
-            if msg is None:
-                continue
-            for st in msg.stats:
-                name = st[0]
-                row = (st[1], st[2], st[3], st[4],
-                       tuple(st[5:9]), tuple(st[9:13]))
-                cur = folded.get(name)
-                if cur is None:
-                    folded[name] = row
-                else:
-                    fst = row[4] if (row[1], row[4][0]) \
-                        < (cur[1], cur[4][0]) else cur[4]
-                    lst = row[5] if (row[2], row[5][0]) \
-                        > (cur[2], cur[5][0]) else cur[5]
-                    folded[name] = (
-                        cur[0] + row[0], min(cur[1], row[1]),
-                        max(cur[2], row[2]), max(cur[3], row[3]),
-                        fst, lst)
+        # fold per-task stats (store.merge_stats: associative,
+        # first/last by argmin/argmax over (ts, seq)) and append ONE
+        # delta commit
+        from .store import merge_stats, write_arrow_delta
+
+        folded = merge_stats({}, (
+            (st[0], (st[1], st[2], st[3], st[4],
+                     tuple(st[5:9]), tuple(st[9:13])))
+            for msg in messages if msg is not None
+            for st in msg.stats))
         if folded:
             # shared commit shape with the engine's small-append path
             # (store.write_arrow_delta): one file per touched bucket,
             # Hive-style bucket=N/ layout, one uuid per commit.
-            from .store import write_arrow_delta
-
             write_arrow_delta(self.path, folded,
                               self._store_buckets())
 

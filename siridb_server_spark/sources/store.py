@@ -141,7 +141,38 @@ def _fold_stats_table(tbl) -> dict:
     return folded
 
 
-def write_arrow_delta(path: str, folded: dict, buckets: int):
+def merge_stats(out: dict, stats) -> dict:
+    """Fold ``(name, stats)`` pairs into the catalog-stats dict ``out``
+    in place and return it — THE driver-side catalog fold, shared by
+    the snapshot reload (:meth:`PointsStore.read_catalog_local`), the
+    memory engine, the engine's write-through of its own inserts and
+    the Arrow datasource writer's per-task partials. Exact and
+    associative like the Spark ``_fold``: lengths sum, start takes the
+    min, end and tp the max, and the first/last value blocks are the
+    argmin/argmax over (ts, seq) across partials."""
+    for name, row in stats:
+        cur = out.get(name)
+        if cur is None:
+            out[name] = row
+            continue
+        fst = row[4] if (row[1], row[4][0]) < (cur[1], cur[4][0]) \
+            else cur[4]
+        lst = row[5] if (row[2], row[5][0]) > (cur[2], cur[5][0]) \
+            else cur[5]
+        out[name] = (cur[0] + row[0], min(cur[1], row[1]),
+                     max(cur[2], row[2]), max(cur[3], row[3]),
+                     fst, lst)
+    return out
+
+
+def point_stats(r) -> tuple:
+    """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
+    tuple), ready for :func:`merge_stats`."""
+    vals = (r[2], r[3], r[4], r[5])
+    return r[0], (1, r[1], r[1], r[6], vals, vals)
+
+
+def write_arrow_delta(path: str, folded: dict, buckets: int) -> list:
     """Append one catalog delta commit driver-side with pyarrow.
 
     ``folded`` is ``{name: (length, start, end, tp,
@@ -152,20 +183,24 @@ def write_arrow_delta(path: str, folded: dict, buckets: int):
     from both writers. All files of the commit share one uuid, so the
     store's append counter sees a single append. Bucket values are
     re-derived on fold, but use the store's persisted count so
-    pruning stays aligned after an auto-resize."""
+    pruning stays aligned after an auto-resize. Each file is written
+    under a dot-prefixed name and renamed into place, so a concurrent
+    catalog reader never sees a partial file. Returns the written
+    file paths."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .xxh import xxh64_signed
 
     if not folded:
-        return
+        return []
     by_bucket: dict = {}
     for n in sorted(folded):
         b = xxh64_signed(n.encode("utf-8")) % buckets
         by_bucket.setdefault(b, []).append(n)
     ddir = os.path.join(path, "_catalog_delta")
     commit = uuid.uuid4().hex
+    written = []
     for b, names in by_bucket.items():
         delta = pa.table({
             "name": pa.array(names, pa.string()),
@@ -196,8 +231,12 @@ def write_arrow_delta(path: str, folded: dict, buckets: int):
         })
         bdir = os.path.join(ddir, f"bucket={b}")
         os.makedirs(bdir, exist_ok=True)
-        pq.write_table(delta, os.path.join(
-            bdir, f"delta-{commit}.parquet"))
+        dest = os.path.join(bdir, f"delta-{commit}.parquet")
+        tmp = os.path.join(bdir, f".delta-{commit}.parquet")
+        pq.write_table(delta, tmp)
+        os.rename(tmp, dest)
+        written.append(dest)
+    return written
 
 
 #: ref src/siri/db/points.c:18
@@ -370,11 +409,11 @@ class PointsStore:
         return moved
 
     def append_rows(self, spark: SparkSession, rows: list):
-        self.append_local(spark, rows)
+        return self.append_local(spark, rows)
 
     # alias used by the engine
     def append(self, spark: SparkSession, rows: list):
-        self.append_rows(spark, rows)
+        return self.append_rows(spark, rows)
 
     # -------------------------------------------------------------- read
     def read(self, spark: SparkSession) -> DataFrame:
@@ -615,7 +654,7 @@ class PointsStore:
             # skip in-flight/crashed append stages (dot-prefixed)
             dirs[:] = [d for d in dirs if not d.startswith(".")]
             for f in files:
-                if not f.endswith(".parquet"):
+                if not f.endswith(".parquet") or f.startswith("."):
                     continue
                 jobs.add(f.split("-", 2)[-1] if f.startswith("part-")
                          else f)
@@ -678,16 +717,23 @@ class PointsStore:
         nothing but ~1 s of scheduling. Same crash protocol as the
         Spark path: per-appender pending marker, dot-prefixed temp +
         rename per file. Falls back to :meth:`append_df` above
-        LOCAL_APPEND_MAX_ROWS or without pyarrow."""
+        LOCAL_APPEND_MAX_ROWS or without pyarrow.
+
+        Returns what the append did to the catalog, so a caller that
+        holds a driver snapshot can fold the batch in instead of
+        reloading: ``{"stats": {name: stats}, "delta": frozenset of
+        the delta files written, "compaction": the
+        :meth:`_compact_catalog` result or None}``. None on the Spark
+        fallback."""
         if len(rows) > LOCAL_APPEND_MAX_ROWS:
             self.append_df(spark.createDataFrame(rows, POINTS_SCHEMA))
-            return
+            return None
         try:
             import pyarrow as pa
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
             self.append_df(spark.createDataFrame(rows, POINTS_SCHEMA))
-            return
+            return None
         groups: dict = {}
         for r in rows:
             kind = "log" if r[6] == TP_STRING else "num"
@@ -701,6 +747,7 @@ class PointsStore:
             rem = ts % dur if ts >= 0 else -((-ts) % dur)
             groups.setdefault((kind, ts - rem), []).append(r)
         schema = _pa_points_schema()
+        out = {"stats": {}, "delta": frozenset(), "compaction": None}
         with self._pending():
             commit = uuid.uuid4().hex
             tables = []
@@ -719,14 +766,15 @@ class PointsStore:
                 os.rename(tmp, os.path.join(tgt, base))
                 tables.append(tbl)
             if tables:
-                write_arrow_delta(
-                    self.path,
-                    _fold_stats_table(pa.concat_tables(tables)),
-                    self.catalog_buckets)
+                out["stats"] = _fold_stats_table(
+                    pa.concat_tables(tables))
+                out["delta"] = frozenset(write_arrow_delta(
+                    self.path, out["stats"], self.catalog_buckets))
                 if self._n_delta_appends() > self.DELTA_COMPACT_AT:
-                    self._compact_catalog(spark)
+                    out["compaction"] = self._compact_catalog(spark)
         if not os.path.exists(self._durations_path):
             self.persist_durations()
+        return out
 
     @property
     def _compact_lock_path(self) -> str:
@@ -762,28 +810,56 @@ class PointsStore:
         except FileNotFoundError:
             pass
 
-    def _delta_files(self) -> list:
-        """Current delta parquet files (skipping in-flight dot
-        stages), as absolute paths."""
+    @staticmethod
+    def _parquet_files(top: str) -> list:
+        """Parquet files under ``top`` as absolute paths, skipping
+        dot-prefixed in-flight stages and temp files."""
         out = []
-        if not os.path.isdir(self._delta_path):
+        if not os.path.isdir(top):
             return out
-        for root, dirs, files in os.walk(self._delta_path):
+        for root, dirs, files in os.walk(top):
             dirs[:] = [d for d in dirs if not d.startswith(".")]
             out.extend(os.path.join(root, f) for f in files
-                       if f.endswith(".parquet"))
+                       if f.endswith(".parquet")
+                       and not f.startswith("."))
         return out
 
+    def _delta_files(self) -> list:
+        """Current delta parquet files, as absolute paths."""
+        return self._parquet_files(self._delta_path)
+
+    def _base_files(self) -> list:
+        """Current base catalog parquet files, as absolute paths."""
+        return self._parquet_files(self._catalog_path)
+
+    def catalog_files(self) -> frozenset | None:
+        """The base and delta files the catalog consists of right now
+        — the key a driver snapshot is valid for. None when a crashed
+        append left a stale pending marker: the catalog then needs the
+        Spark-path repair (:meth:`read_catalog`) before any driver
+        fold of it can be trusted."""
+        if self._stale_markers():
+            return None
+        return frozenset(self._base_files() + self._delta_files())
+
     def _compact_catalog(self, spark: SparkSession):
+        """Fold the delta files into the base. The logical catalog is
+        unchanged, only its files are: returns ``(folded_from,
+        left)`` — the file set the compaction read and the file set
+        it left — so a driver snapshot of ``folded_from`` can be
+        re-keyed to ``left``. None when there was nothing to fold,
+        another compactor held the lock, the legacy-layout rebuild
+        ran, or a concurrent appender's delta landed meanwhile (no
+        clean re-key exists then)."""
         if not self._acquire_compact_lock():
-            return  # another compactor is live; our deltas fold later
+            return None  # another compactor is live; ours fold later
         try:
             if self._legacy_catalog():
                 # pre-r6 layout lacks the first/last value columns
                 # the folds carry now: one-time full recompute from
                 # the points (includes any just-appended batch)
                 self.rebuild_catalog(spark)
-                return
+                return None
             # Snapshot the delta FILE LIST first and fold exactly
             # those files; afterwards delete exactly those files. An
             # rmtree of the whole delta dir would race a concurrent
@@ -791,7 +867,8 @@ class PointsStore:
             # — silently dropping its stats with no marker left.
             files = self._delta_files()
             if not files:
-                return
+                return None
+            folded_from = frozenset(self._base_files() + files)
             delta = (spark.read.option("basePath", self._delta_path)
                      .parquet(*files))
             base = (spark.read.parquet(self._catalog_path)
@@ -846,6 +923,9 @@ class PointsStore:
                     os.rmdir(self._delta_path)
                 except OSError:
                     pass
+            if self._delta_files():
+                return None  # a concurrent append's delta landed
+            return folded_from, frozenset(self._base_files())
         finally:
             self._release_compact_lock()
 
@@ -979,47 +1059,35 @@ class PointsStore:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
             return False
-        candidates = []
-        if os.path.isdir(self._catalog_path):
-            for root, dirs, fs in os.walk(self._catalog_path):
-                dirs[:] = [d for d in dirs if not d.startswith(".")]
-                candidates.extend(os.path.join(root, f) for f in fs
-                                  if f.endswith(".parquet"))
-                if candidates:
-                    break  # one base file decides the base layout
-        candidates.extend(self._delta_files())
+        # one base file decides the base layout
+        candidates = self._base_files()[:1] + self._delta_files()
         for f in candidates:
             try:
                 if "f_seq" not in pq.read_schema(f).names:
                     return True
-            except Exception:
+            except FileNotFoundError:
                 continue  # racing compaction; decided by the rest
         return False
 
-    def read_catalog_local(self) -> dict | None:
+    def read_catalog_local(self, files=None) -> dict | None:
         """Driver-side catalog snapshot WITHOUT a Spark job: fold the
-        base + delta parquet files with pyarrow into
-        ``{name: (length, start, end, tp)}``. This is the engine's
-        micro-latency path (the reference answers list/count/
-        skip-points selects from in-memory series structs; Spark's
-        job floor is ~0.2 s). Returns None when a crashed append
-        needs the Spark-path repair first (stale pending marker) or
-        when no catalog exists — callers then fall back to the
-        distributed path."""
-        if self._stale_markers():
-            return None  # needs rebuild_catalog (Spark path) first
+        base + delta parquet files (``files``, default the current
+        :meth:`catalog_files`) with pyarrow into the
+        :func:`merge_stats` dict. This is the engine's micro-latency
+        path (the reference answers list/count/skip-points selects
+        from in-memory series structs; Spark's job floor is ~0.2 s).
+        Returns None when a crashed append needs the Spark-path repair
+        first (stale pending marker), when no catalog exists, when a
+        racing compaction removed a listed file, or when a pre-r6
+        legacy file lacks the value columns — callers then fall back
+        to the distributed path, which repairs or migrates."""
+        if files is None:
+            files = self.catalog_files()
+        if not files:
+            return None
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
-            return None
-        files = []
-        if os.path.isdir(self._catalog_path):
-            for root, dirs, fs in os.walk(self._catalog_path):
-                dirs[:] = [d for d in dirs if not d.startswith(".")]
-                files.extend(os.path.join(root, f) for f in fs
-                             if f.endswith(".parquet"))
-        files.extend(self._delta_files())
-        if not files:
             return None
         out: dict = {}
         cols = ["name", "length", "start", "end", "tp",
@@ -1027,33 +1095,21 @@ class PointsStore:
                 "l_seq", "l_int", "l_dbl", "l_str"]
         for f in files:
             try:
-                tbl = pq.read_table(f, columns=cols)
-            except Exception:
-                # racing compaction removed the file, or a pre-r6
-                # legacy file lacks the value columns → let the
-                # Spark path repair/migrate
-                return None
-            d = tbl.to_pydict()
-            for i, name in enumerate(d["name"]):
-                row = (d["length"][i], d["start"][i], d["end"][i],
-                       d["tp"][i],
-                       (d["f_seq"][i], d["f_int"][i], d["f_dbl"][i],
-                        d["f_str"][i]),
-                       (d["l_seq"][i], d["l_int"][i], d["l_dbl"][i],
-                        d["l_str"][i]))
-                cur = out.get(name)
-                if cur is None:
-                    out[name] = row
-                else:
-                    # argmin/argmax over (ts, seq) across partials
-                    fst = row[4] if (row[1], row[4][0]) \
-                        < (cur[1], cur[4][0]) else cur[4]
-                    lst = row[5] if (row[2], row[5][0]) \
-                        > (cur[2], cur[5][0]) else cur[5]
-                    out[name] = (cur[0] + row[0],
-                                 min(cur[1], row[1]),
-                                 max(cur[2], row[2]),
-                                 max(cur[3], row[3]), fst, lst)
+                pf = pq.ParquetFile(f)
+            except FileNotFoundError:
+                return None  # racing compaction removed the file
+            with pf:
+                if "f_seq" not in pf.schema_arrow.names:
+                    return None  # legacy layout: Spark path migrates
+                d = pf.read(columns=cols).to_pydict()
+            merge_stats(out, (
+                (name, (d["length"][i], d["start"][i], d["end"][i],
+                        d["tp"][i],
+                        (d["f_seq"][i], d["f_int"][i], d["f_dbl"][i],
+                         d["f_str"][i]),
+                        (d["l_seq"][i], d["l_int"][i], d["l_dbl"][i],
+                         d["l_str"][i])))
+                for i, name in enumerate(d["name"])))
         return out
 
     def shard_stats_local(self) -> list | None:
@@ -1061,8 +1117,9 @@ class PointsStore:
         FOOTERS only — pyarrow metadata, zero data pages read, no
         Spark job. The reference keeps exactly these stats on its
         in-memory shard structs (shard.h); parquet row-group
-        statistics make them free here. None on any surprise
-        (racing rewrite, missing ts stats) → Spark fallback."""
+        statistics make them free here. None (→ Spark fallback) when
+        a racing rewrite removed a shard file or a file lacks ts
+        statistics."""
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover
@@ -1070,13 +1127,18 @@ class PointsStore:
         out = []
         for kind, sid, p in self._sid_dirs():
             n, mn, mx = 0, None, None
-            for f in os.listdir(p):
-                if not f.endswith(".parquet"):
+            try:
+                names = os.listdir(p)
+            except FileNotFoundError:
+                return None  # racing rewrite swapped the shard dir
+            for f in names:
+                # dot-prefixed: an in-flight append's temp file
+                if not f.endswith(".parquet") or f.startswith("."):
                     continue
                 try:
                     md = pq.ParquetFile(os.path.join(p, f)).metadata
-                except Exception:
-                    return None
+                except FileNotFoundError:
+                    return None  # racing rewrite removed the file
                 n += md.num_rows
                 ts_idx = None
                 for i in range(md.num_columns):
@@ -1139,18 +1201,20 @@ class PointsStore:
                tp_str: bool):
         """Retention: drop whole shard partitions older than the
         cutoff (ref db.c:865-878 — expiration is shard-granular).
-        Directory removal only — no data rewrite."""
+        Directory removal only — no data rewrite. Returns whether
+        any shard was dropped (only then did the catalog change)."""
         want = "log" if tp_str else "num"
         doomed = [p for kind, sid, p in self._sid_dirs()
                   if kind == want and sid < cutoff_sid]
         if not doomed:
-            return
+            return False
         # pending marker: a crash mid-loop leaves the catalog stale,
         # and the next read_catalog() rebuilds it from the points
         with self._pending():
             for p in doomed:
                 shutil.rmtree(p)
             self.rebuild_catalog(spark)
+        return True
 
     def delete_series(self, spark: SparkSession, names: list):
         """Anti-join rewrite (drop series). At 100 TB this is a Delta

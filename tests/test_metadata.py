@@ -402,13 +402,25 @@ def test_catalog_fastpath_zero_jobs_and_agreement(spark, tmp_path):
         "count shards",
         "count shards size",
     ]
+    # bucketed selects plan from the snapshot's seeds (names, types,
+    # points bound) on the fast path and from the Spark catalog frame
+    # with the fast path off: both must agree
+    selects = [
+        "select mean(100) from /cpu.*/",
+        "select sum(100) prefix 's_' from `cpu` where length > 1",
+        "select count(100) from /.*/ where type == float",
+        "select max(50) from `cpu` - 'cpu-b' where end >= 150",
+    ]
     # warm the snapshot (first call may read catalog parquet but must
-    # not launch a job either way), then assert zero jobs per query
+    # not launch a job either way), write through it with one insert,
+    # then assert zero jobs per query
     eng.query("count series")
-    for q in queries:
+    eng.insert({"cpu-a": [[300, 3]], "cpu-c": [[250, 4.5]]})
+    for q in queries + selects:
         before = _n_jobs(spark)
         fast = eng.query(q)
-        assert _n_jobs(spark) == before, f"{q} launched a Spark job"
+        if q not in selects:
+            assert _n_jobs(spark) == before, f"{q} launched a Spark job"
         eng.fastpath_enabled = False
         try:
             slow = eng.query(q)

@@ -1173,6 +1173,107 @@ def test_append_local_matches_spark_writer(spark, tmp_path):
     assert ra == rb
 
 
+def test_write_through_snapshot_matches_reload(spark, tmp_path,
+                                               monkeypatch):
+    """The engine folds its own inserts into the driver catalog
+    snapshot instead of reloading it. After every step of a seeded
+    insert sequence (new and existing int/float/string series,
+    out-of-order and duplicate timestamps, an insert-triggered
+    catalog compaction, and a maintain()) the snapshot equals a
+    freshly opened engine's, and the catalog files were loaded once."""
+    import random
+
+    rng = random.Random(11)
+    path = str(tmp_path / "wdb")
+    eng = SiriEngine.open(spark, path, precision="s")
+    # catalog-file loads of the engine's store that built a snapshot,
+    # and the result of every catalog compaction
+    loads, compactions = [], []
+    orig_load = PointsStore.read_catalog_local
+    orig_compact = PointsStore._compact_catalog
+
+    def counted_load(self, files=None):
+        out = orig_load(self, files)
+        if self is eng.store and out is not None:
+            loads.append(1)
+        return out
+
+    def counted_compact(self, spark_):
+        out = orig_compact(self, spark_)
+        compactions.append(out)
+        return out
+
+    monkeypatch.setattr(PointsStore, "read_catalog_local", counted_load)
+    monkeypatch.setattr(PointsStore, "_compact_catalog", counted_compact)
+
+    values = {"i": lambda: rng.randint(-50, 50),
+              "f": lambda: rng.uniform(-5, 5),
+              "s": lambda: rng.choice(["a", "bb", "ccc"])}
+
+    def batch(step):
+        data = {}
+        for name in rng.sample([f"{k}{j}" for k in "ifs"
+                                for j in range(4)], 4) + [f"i-new{step}"]:
+            ts = [rng.randint(1000, 1040) for _ in range(3)]
+            ts.append(ts[0])                # duplicate timestamp
+            data[name] = [[t, values[name[0]]()] for t in ts]
+        return data
+
+    def check(step):
+        fresh = SiriEngine.open(spark, path, precision="s")
+        assert eng._catalog_local() == fresh._catalog_local(), step
+        assert len(loads) == 1, step
+
+    n_inserts = PointsStore.DELTA_COMPACT_AT + 4
+    for step in range(n_inserts):
+        eng.insert(batch(step))
+        check(step)
+    assert any(c is not None for c in compactions), \
+        "no insert-triggered compaction was re-keyed"
+    eng.maintain()
+    assert not eng.store._delta_files()
+    check("maintain")
+    for step in range(n_inserts, n_inserts + 2):
+        eng.insert(batch(step))
+        check(step)
+
+    # a foreign appender's delta is not in the snapshot: the engine's
+    # next insert sees files it did not write and reloads
+    foreign = PointsStore(path, eng.store.duration_num,
+                          eng.store.duration_log)
+    n_series = eng.query("count series")["series"]
+    foreign.append_rows(spark, [("foreign", 1020, 1 << 40, 7, None,
+                                 None, 0)])
+    eng.insert({"i0": [[1030, 1]]})
+    assert eng.query("count series") == {"series": n_series + 1}
+    assert "foreign" in {r[0] for r in
+                         eng.query("list series")["series"]}
+    assert len(loads) == 2
+    fresh = SiriEngine.open(spark, path, precision="s")
+    assert eng._catalog_local() == fresh._catalog_local()
+
+    # a stale pending marker (crashed appender) drops the snapshot
+    with open(os.path.join(path, PointsStore._PENDING_PREFIX + "x"),
+              "w") as fh:
+        fh.write("999999999")
+    eng.insert({"i0": [[1031, 2]]})
+    assert eng._local_cat is None and eng._catalog_local() is None
+
+
+def test_write_through_snapshot_memory_engine(spark):
+    """A memory-backed engine folds each insert's points into its
+    snapshot with the same fold a reload of the in-heap rows uses."""
+    eng = SiriEngine(spark, precision="s")
+    eng.insert({"a": [[10, 1], [5, 2]], "b": [[7, "x"]]})
+    assert eng._catalog_local() is not None
+    eng.insert({"a": [[5, 3], [20, 4]], "c": [[1, 0.5]]})
+    kept = eng._catalog_local()
+    eng._invalidate()
+    assert kept == eng._catalog_local()
+    assert kept["a"]["length"] == 4 and kept["a"]["first"] == 2
+    assert kept["a"]["last"] == 4
+
+
 def test_streaming_quantiles_match_batch_across_restart(
         spark, tmp_path):
     """The streaming quantile tracker's state is the SAME
