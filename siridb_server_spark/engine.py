@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import functools
 import time as _time
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,8 +29,6 @@ from .functions import pipeline as P
 from .functions.pipeline import COLS, StageResult, TypeSet
 from .localdf import arrow_df
 from .model import (
-    CATALOG_SCHEMA,
-    NAME_TPS,
     POINTS_SCHEMA,
     TP_DOUBLE,
     TP_INT,
@@ -40,12 +39,13 @@ from .model import (
     point_row,
     value_of_row,
 )
-from .operators.selection import collect_names, compile_match
+from .operators.selection import compile_match
 from .operators.where import compile_where
 from .plans import nodes as N
 from .plans import timeexpr as TE
 from .plans.parser import Parser
-from .sources.store import merge_stats, point_stats
+from .sources.store import PointsStore, catalog_stats, merge_stats, \
+    point_stats
 
 #: defaults mirror include/siri/db/db.h:16-17
 DEFAULT_SELECT_POINTS_LIMIT = 1_000_000
@@ -72,7 +72,7 @@ class SiriEngine:
         # insert/drop/expiration never discard the wrapped data
         self._base_df: DataFrame | None = None
         self._catalog: DataFrame | None = None
-        #: driver-held catalog snapshot (micro-latency fast path):
+        #: driver-held catalog snapshot (the catalog query() reads):
         #: ``_local_raw`` holds the store.merge_stats fold the rows of
         #: ``_local_cat`` are derived from, ``_local_files`` the
         #: catalog files it reflects (store-backed engines)
@@ -81,9 +81,6 @@ class SiriEngine:
         self._local_files: frozenset | None = None
         self._seq = 0
         self._multi_cache: DataFrame | None = None
-        #: driver-side catalog answers for list/count/skip-points
-        #: (plans/fastpath.py); off → always the distributed path
-        self.fastpath_enabled = True
         # serve count/sum/mean/min/max bucketed selects from the
         # store's materialized rollup when one is built (see
         # enable_rollup); False forces the points path
@@ -131,8 +128,6 @@ class SiriEngine:
         math), so the auto-derived duration is fixed at first insert
         and persisted. Durations always persist with the store and
         win over the opener's defaults on reopen."""
-        from .sources.store import PointsStore
-
         eng = cls(spark, precision)
         eng.store = PointsStore(path, eng.duration_num,
                                 eng.duration_log)
@@ -175,8 +170,10 @@ class SiriEngine:
             if not isinstance(name, str) or name == "" \
                     or len(name) > 65534:
                 raise InsertError("Series name is invalid.")
-        existing = {r["name"]: r["tp"] for r in self._series_types(
-            list(data.keys()))}
+        # type pre-flight from the driver snapshot (the reference
+        # reads the types off its in-memory series structs)
+        cat = self._catalog_local()
+        existing = {name: cat[name]["tp"] for name in data if name in cat}
         rows = []
         n = 0
         for name, points in data.items():
@@ -269,26 +266,6 @@ class SiriEngine:
             keep.append(r)
         return keep
 
-    def _series_types(self, names: list) -> list:
-        if (self._mem_df is None and not self._mem_rows
-                and self._base_df is None and self.store is None):
-            return []
-        if self.fastpath_enabled:
-            # type pre-flight from the driver snapshot: without this
-            # every insert pays a full Spark collect just to learn
-            # the existing series types (the reference reads them
-            # off the in-memory series structs)
-            cat = self._catalog_local()
-            if cat is not None:
-                return [{"name": n, "tp": cat[n]["tp"]}
-                        for n in names if n in cat]
-        cat = self.catalog_df()
-        rows = cat.where(F.col("name").isin(names)) \
-                  .select("name", "type").collect()
-        return [{"name": r["name"], "tp":
-                 {v: k for k, v in TP_NAMES.items()}[r["type"]]}
-                for r in rows]
-
     def _append(self, rows: list):
         """Append an insert's rows and fold them into the driver
         catalog snapshot instead of dropping it — the reference
@@ -308,7 +285,7 @@ class SiriEngine:
         try:
             if self._auto_duration_pending:
                 self._apply_auto_duration(rows)
-            res = self.store.append(self.spark, rows)
+            res = self.store.append_local(self.spark, rows)
         except BaseException:
             self._drop_snapshot()
             raise
@@ -349,32 +326,46 @@ class SiriEngine:
         self._drop_frames()
         self._drop_snapshot()
 
-    # ------------------------------------------------- catalog fast path
-    def _catalog_local(self) -> dict | None:
-        """Driver-held catalog snapshot — NO Spark job. The
-        micro-latency path for list/count/skip-points statements and
-        the seeds of selects (plans/fastpath.py): store-backed engines
-        fold the catalog parquet with pyarrow; memory-backed engines
-        fold the in-heap rows. Loaded once and then kept current by
-        the engine's own inserts (:meth:`_append`). None (→
-        distributed fallback) when a snapshot isn't cheaply
-        available: a crashed append needs the Spark-path repair, or
-        the points live in an arbitrary base DataFrame."""
+    # ------------------------------------------------- catalog snapshot
+    def _catalog_local(self) -> dict:
+        """Driver-held catalog snapshot — the one catalog ``query()``
+        reads: list/count/skip-points statements, the type pre-flight
+        of inserts, drops, tagging and the seeds of selects
+        (plans/fastpath.py). Store-backed engines fold the catalog
+        parquet with pyarrow (no Spark job); memory-backed engines
+        fold the in-heap rows; ``from_points`` engines fold one
+        collected per-series aggregate of their points. Loaded once
+        and then kept current by the engine's own inserts
+        (:meth:`_append`)."""
         if self._local_cat is not None:
             return self._local_cat
-        raw = files = None
+        files = None
         if self.store is not None:
-            files = self.store.catalog_files()
-            if files:
-                raw = self.store.read_catalog_local(files)
+            raw, files = self._read_store_catalog()
         elif self._base_df is None:
             raw = merge_stats({}, map(point_stats, self._mem_rows))
-        if raw is None:
-            return None
+        else:
+            agg = PointsStore._batch_stats(self.points_df()).toArrow()
+            raw = merge_stats({}, catalog_stats(agg.to_pydict()))
         self._local_raw, self._local_files = raw, files
         self._local_cat = {name: self._catalog_row(name, st)
                            for name, st in raw.items()}
         return self._local_cat
+
+    def _read_store_catalog(self) -> tuple:
+        """``(stats, files)`` of the store's catalog, read with
+        pyarrow. A stale pending marker (crashed append) or a pre-r6
+        legacy file first runs the store's one-time Spark repair
+        (``read_catalog``); a listed file that a racing compaction
+        removed means listing again."""
+        while True:
+            files = self.store.catalog_files()
+            raw = None if files is None \
+                else self.store.read_catalog_local(files)
+            if raw is not None:
+                return raw, files
+            if files is None or self.store._legacy_catalog():
+                self.store.read_catalog(self.spark)
 
     def _fold_snapshot(self, stats):
         """Fold ``(name, stats)`` pairs of new points into the
@@ -405,19 +396,15 @@ class SiriEngine:
             else lst[2] if tp == TP_DOUBLE else lst[3],
         }
 
-    def _entity_rows_local(self, entity: str) -> list | None:
+    def _entity_rows(self, entity: str) -> list:
         """Driver-side rows for the non-series entities — they all
         live in driver structures already (groups/tags/users are
-        dicts, servers is this process, pools is the single pool),
-        so listing/counting them through createDataFrame+collect was
-        pure Spark-job overhead. Group/pool series counts come from
-        the catalog snapshot; None → distributed fallback. Returns
-        row dicts that carry BOTH display values and the hidden
-        where-comparison twins (e.g. users' access_bits)."""
+        dicts, servers is this process, pools is the single pool).
+        Group/pool series counts come from the catalog snapshot.
+        Returns row dicts that carry BOTH display values and the
+        hidden where-comparison twins (e.g. users' access_bits)."""
         if entity == "groups":
             cat = self._catalog_local()
-            if cat is None:
-                return None
             import re as _re
             rows = []
             for name, (pat, ci) in sorted(self.groups.items()):
@@ -441,26 +428,24 @@ class SiriEngine:
                      "version": __version__, "online": True,
                      "status": status, "log_level": self.log_level}]
         if entity == "pools":
-            cat = self._catalog_local()
-            if cat is None:
-                return None
-            if not cat:
-                return []  # like the Spark groupBy over no series
-            return [{"pool": 0, "servers": 1, "series": len(cat)}]
+            # a database without series lists no pool
+            n = len(self._catalog_local())
+            return [{"pool": 0, "servers": 1, "series": n}] if n else []
         if entity == "shards":
-            return self._shards_rows_local()
-        return None
+            return self._shard_rows()
+        raise QueryError(f"Cannot list '{entity}'.")
 
-    def _shards_rows_local(self) -> list | None:
-        """Shard rows without a Spark job: store-backed engines read
-        parquet FOOTER statistics (row counts + ts min/max — the
-        stats the reference keeps on its shard structs, shard.h);
-        memory-backed engines bucket the in-heap rows. Row shape is
-        byte-identical to :meth:`_shards_df`."""
+    def _shard_rows(self) -> list:
+        """Shard rows, without a Spark job where the stats are at
+        hand: store-backed engines read parquet FOOTER statistics
+        (row counts + ts min/max — the stats the reference keeps on
+        its shard structs, shard.h); memory-backed engines bucket the
+        in-heap rows. ``from_points`` engines, and a store whose
+        footers lack the stats, aggregate the points
+        (:meth:`_shards_df`)."""
+        stats = None
         if self.store is not None:
             stats = self.store.shard_stats_local()
-            if stats is None:
-                return None
         elif self._base_df is None:
             buckets: dict = {}
             for r in self._mem_rows:
@@ -480,20 +465,19 @@ class SiriEngine:
                       "start": mn, "end": mx}
                      for (sid, kind), (n, mn, mx)
                      in sorted(buckets.items())]
-        else:
-            return None
+        if stats is None:
+            return sorted((r.asDict() for r in self._shards_df().collect()),
+                          key=lambda r: (r["sid"], r["type"]))
         return [{"sid": s["sid"], "pool": 0, "server": "sparksiri:0",
                  "size": s["points"] * 16, "start": s["start"],
                  "end": s["end"],
                  "type": "log" if s["kind"] == "log" else "number",
                  "status": "ok"} for s in stats]
 
-    def _local_selected(self, match, where) -> list | None:
+    def _selected(self, match, where) -> list:
         """Matched+filtered catalog rows (sorted by name) from the
-        driver snapshot, or None when unavailable."""
+        driver snapshot."""
         cat = self._catalog_local()
-        if cat is None:
-            return None
         from .plans import fastpath as FP
         pred = FP.match_fn(match, self.groups, self.tags) \
             if match is not None else (lambda s: True)
@@ -582,15 +566,11 @@ class SiriEngine:
     # --------------------------------------------------------------- query
     def _tzinfo(self):
         """Database timezone for ISO-8601 date strings (ref
-        query.c:916-945; 'NAIVE' behaves as UTC here)."""
+        query.c:916-945; 'NAIVE' behaves as UTC here). Set only to
+        zones ``alter database set timezone`` validated."""
         if self.timezone in ("NAIVE", "UTC"):
             return None
-        try:
-            from zoneinfo import ZoneInfo
-
-            return ZoneInfo(self.timezone)
-        except Exception:
-            return None
+        return ZoneInfo(self.timezone)
 
     def query(self, q: str) -> dict:
         return self.query_kinded(q)[1]
@@ -730,37 +710,29 @@ class SiriEngine:
             self._multi_cache = None
 
     def _select_plan(self, stmt: N.SelectStmt, need_seeds: bool = True):
-        # query(): the seeds (names, type set, points bound) come from
-        # the driver snapshot when one is held — the same rows the
-        # catalog collect below would bring down, without building,
-        # caching and collecting the Spark catalog frame
-        local = self._local_selected(stmt.match, stmt.where) \
-            if need_seeds and self.fastpath_enabled else None
-        # the one-pass stats branch below never touches the catalog —
-        # don't build (and cache-register) it there
-        cat = None
+        """The result frame of a select and its seed names. ``query()``
+        (``need_seeds``) plans from the driver snapshot: the names,
+        type set and points bound of the selected series — the result
+        dict is keyed per series, so the names come down anyway.
+        ``select_df()`` plans from Spark frames and never ships the
+        names to the driver."""
+        # where-selected names, shared by the points path and the
+        # rollup path of every pipeline
+        names = None
         # the skip-points plan answers FROM the catalog — keep the
         # catalog route for it (the one-pass branch would add a
         # points pass the skip path exists to avoid)
-        skippable = self._skippable_agg(stmt) is not None
-        if local is None and (need_seeds or self.store is not None
-                              or stmt.where is not None or skippable):
-            cat = self._selected_catalog(stmt.match, stmt.where)
-        tp_of = {v: k for k, v in TP_NAMES.items()}
-        if local is not None:
-            sel_names = [r["name"] for r in local]
-            tps = frozenset(r["tp"] for r in local)
-            total_points = sum(r["length"] for r in local)
+        skippable = not need_seeds \
+            and self._skippable_agg(stmt) is not None
+        if need_seeds:
+            sel = self._selected(stmt.match, stmt.where)
+            sel_names = [r["name"] for r in sel]
+            tps = frozenset(r["tp"] for r in sel)
+            total_points = sum(r["length"] for r in sel)
             n_sel = len(sel_names)
-        elif need_seeds:
-            # query(): ONE driver-side collect over the catalog — the
-            # result dict is keyed per series, inherently driver-sized
-            # (as in the reference), so the names must come down anyway
-            sel_rows = cat.select("name", "type", "length").collect()
-            tps = frozenset(tp_of[r["type"]] for r in sel_rows)
-            total_points = sum(r["length"] for r in sel_rows)
-            sel_names = [r["name"] for r in sel_rows]
-            n_sel = len(sel_names)
+            if stmt.where is not None:
+                names = arrow_df(self.spark, [(nm,) for nm in sel_names],
+                                 "series string")
         elif self.store is None and stmt.where is None \
                 and not skippable:
             # select_df() on a memory/wrapped-frame engine with no
@@ -786,6 +758,10 @@ class SiriEngine:
             # select_df(): the plan only needs the type set, the
             # points-limit bound, and the series count — one tiny
             # aggregation row, never O(|series|) on the driver
+            cat = self._selected_catalog(stmt.match, stmt.where)
+            if stmt.where is not None:
+                names = cat.select(F.col("name").alias("series"))
+            tp_of = {v: k for k, v in TP_NAMES.items()}
             agg = cat.agg(
                 F.collect_set("type").alias("tps"),
                 F.sum("length").alias("total"),
@@ -798,28 +774,19 @@ class SiriEngine:
             return self.points_df().limit(0), []
         types = TypeSet(tps)
 
-        fast = self._skip_points_plan(stmt)
-        if fast is not None:
-            return fast, [
-                (stmt.pipelines[0].prefix or "") + nm
-                + (stmt.pipelines[0].suffix or "") for nm in sel_names]
+        if skippable:
+            fast = self._skip_points_plan(stmt)
+            if fast is not None:
+                return fast, []
 
-        # the where-selected names, shared by the points path and the
-        # rollup path of every pipeline
-        roll_ctx: dict = {}
-        if stmt.where is not None:
-            roll_ctx["names"] = (
-                arrow_df(self.spark, [(nm,) for nm in sel_names],
-                         "series string")
-                if local is not None
-                else cat.select(F.col("name").alias("series")))
+        roll_ctx: dict = {} if names is None else {"names": names}
 
         # the points frame is built on first use only: a select whose
         # every pipeline the rollup serves never lists the store or
         # infers the points schema
         @functools.cache
         def points() -> DataFrame:
-            return self._select_points(stmt, roll_ctx.get("names"))
+            return self._select_points(stmt, names)
 
         tr = stmt.timerange
         if tr is not None and tr[0] in ("head", "tail") and n_sel:
@@ -988,24 +955,20 @@ class SiriEngine:
         — the reference's sub-ms metadata answer
         (listener.c:5447-5586), which a ~0.2 s Spark job floor would
         otherwise bury."""
-        if not self.fastpath_enabled:
-            return None
         f = self._skippable_agg(stmt)
         if f is None:
             return None
         pl = stmt.pipelines[0]
-        sel = self._local_selected(stmt.match, stmt.where)
-        if sel is None:
-            return None
+        sel = self._selected(stmt.match, stmt.where)
         pre, suf = pl.prefix or "", pl.suffix or ""
         if f.name == "count":
             return {f"{pre}{r['name']}{suf}":
                     [[r["end"], r["length"]]] for r in sel}
         if any(r.get("first") is None or r.get("last") is None
                for r in sel):
-            # snapshot without values, or a series with mixed tp
-            # (possible only via the raw datasource sink, which does
-            # not coerce): let the distributed pipeline decide
+            # a series with mixed tp (possible only via the raw
+            # datasource sink or a wrapped frame, which do not
+            # coerce): the points pipeline decides
             return None
         # to-one label: last point's ts, first's ts for first()
         # (aggregate.c:1110-1112)
@@ -1196,14 +1159,15 @@ class SiriEngine:
             return (tr[1], tr[2])
         return None    # head/tail need per-series row order
 
-    def _rollup_pipeline(self, pl, stmt, types, ctx=None):
+    def _rollup_pipeline(self, pl, stmt, types, ctx: dict):
         """Serve one pipeline from the materialized rollup, or None
         to use the points path. Stale/new shards (files changed
         since the build) contribute live partials — the hybrid stays
         exact while the rollup lags behind appends. ``ctx`` memoizes
         the rollup read (a driver-side shard listing + parquet scan)
-        and the where-clause names frame across the pipelines of one
-        select.
+        across the pipelines of one select and carries the
+        where-selected ``names`` frame, set whenever the select has a
+        ``where``.
 
         Time ranges (after/before/between) are served too: rollup
         buckets are right-closed (R−B, R], so a bucket lies entirely
@@ -1227,8 +1191,6 @@ class SiriEngine:
         if f.name not in P.ROLLUP_FNS \
                 or not self._rollup_servable(f.name, types):
             return None
-        if ctx is None:
-            ctx = {}
         if "roll" not in ctx:
             ctx["roll"] = self.store.read_rollup(self.spark)
         roll = ctx["roll"]
@@ -1283,10 +1245,6 @@ class SiriEngine:
         pred = compile_match(stmt.match, self.groups, self.tags)
         partials = partials.where(pred)
         if stmt.where is not None:
-            if "names" not in ctx:
-                ctx["names"] = self._selected_catalog(
-                    stmt.match, stmt.where) \
-                    .select(F.col("name").alias("series"))
             partials = partials.join(F.broadcast(ctx["names"]),
                                      "series", "semi")
         return P.compose_bucket_agg(partials, f.name, f.group_by,
@@ -1302,49 +1260,6 @@ class SiriEngine:
         return out
 
     # ------------------------------------------------------ list/count/show
-    def _entity_df(self, entity: str) -> DataFrame:
-        if entity == "series":
-            return self.catalog_df()
-        if entity == "groups":
-            rows = [(name, pat, self._group_count(name))
-                    for name, (pat, _ci) in sorted(self.groups.items())]
-            return self.spark.createDataFrame(
-                rows or [], "name string, expression string, series long")
-        if entity == "tags":
-            rows = [(name, len(members))
-                    for name, members in sorted(self.tags.items())]
-            return self.spark.createDataFrame(
-                rows or [], "name string, series long")
-        if entity == "users":
-            # access_bits is the hidden numeric twin of the printed
-            # profile string: `where access < modify` compares
-            # bitmasks (ref cexpr int compare on user->access_bit)
-            rows = [(name, ACL.access_to_str(u["access"]),
-                     u["access"])
-                    for name, u in sorted(self.users.items())]
-            return self.spark.createDataFrame(
-                rows or [],
-                "name string, access string, access_bits long")
-        if entity == "pools":
-            cat = self.catalog_df()
-            return cat.groupBy(F.col("pool")).agg(
-                F.lit(1).alias("servers"),
-                F.count(F.lit(1)).alias("series"))
-        if entity == "servers":
-            return self._servers_df()
-        if entity == "shards":
-            return self._shards_df()
-        raise QueryError(f"Cannot list '{entity}'.")
-
-    def _servers_df(self) -> DataFrame:
-        status = "running (backup mode)" if self.backup_mode \
-            else "running"
-        return self.spark.createDataFrame(
-            [(self.server_name, 0, __version__, True, status,
-              self.log_level)],
-            "name string, pool int, version string, online boolean, "
-            "status string, log_level string")
-
     def _shards_df(self) -> DataFrame:
         """Shard-equivalents: time buckets of the points table
         (ref shards.c:273-340 — shard id = ts/duration*duration)."""
@@ -1365,11 +1280,6 @@ class SiriEngine:
                     F.lit("ok").alias("status"))
         )
 
-    def _group_count(self, name: str) -> int:
-        pat, ci = self.groups[name]
-        rx = P.anchored_regex(pat, ci)
-        return self.catalog_df().where(F.col("name").rlike(rx)).count()
-
     _LIST_DEFAULT_COLS = {
         "series": ["name"],
         "groups": ["name", "series"],
@@ -1388,99 +1298,38 @@ class SiriEngine:
         pred = FP.where_fn(where)
         if entity == "users":
             # `where access < modify` compares the numeric bitmask
-            # (the Spark path's access→access_bits colmap)
+            # (ref cexpr int compare on user->access_bit)
             return [r for r in rows
                     if pred({**r, "access": r["access_bits"]})]
         return [r for r in rows if pred(r)]
 
-    def _validated_limit(self, stmt) -> int:
-        if stmt.limit is not None and (
-                stmt.limit <= 0 or stmt.limit > self.list_limit):
-            raise QueryError(
-                "Limit must be a value between 1 and "
-                f"{self.list_limit} but received: {stmt.limit}.")
-        return stmt.limit if stmt.limit is not None \
-            else self.list_limit
+    def _stmt_rows(self, stmt) -> list:
+        """The rows a list/count statement reads: the matched and
+        filtered series, or the where-filtered entity rows."""
+        if stmt.entity == "series":
+            return self._selected(stmt.match, stmt.where)
+        return self._apply_local_where(
+            stmt.entity, self._entity_rows(stmt.entity), stmt.where)
 
     def _list(self, stmt: N.ListStmt) -> dict:
-        if self.fastpath_enabled:
-            if stmt.entity == "series":
-                sel = self._local_selected(stmt.match, stmt.where)
-            else:
-                sel = self._entity_rows_local(stmt.entity)
-                if sel is not None:
-                    sel = self._apply_local_where(
-                        stmt.entity, sel, stmt.where)
-            if sel is not None:
-                cols = stmt.columns \
-                    or self._LIST_DEFAULT_COLS[stmt.entity]
-                limit = self._validated_limit(stmt)
-                return {"columns": cols, stmt.entity: [
-                    [r[c] for c in cols] for r in sel[:limit]]}
-        df = self._entity_df(stmt.entity)
-        if stmt.entity == "series" and stmt.match is not None:
-            pred = compile_match(stmt.match, self.groups, self.tags,
-                                 col=F.col("name"))
-            df = df.where(pred)
-        if stmt.where is not None:
-            df = df.where(compile_where(
-                stmt.where, self._where_colmap(stmt.entity)))
+        rows = self._stmt_rows(stmt)
         cols = stmt.columns or self._LIST_DEFAULT_COLS[stmt.entity]
-        limit = stmt.limit if stmt.limit is not None else self.list_limit
         if stmt.limit is not None and (
                 stmt.limit <= 0 or stmt.limit > self.list_limit):
             raise QueryError(
                 "Limit must be a value between 1 and "
                 f"{self.list_limit} but received: {stmt.limit}.")
-        rows = df.select(*cols).limit(limit).collect()
-        return {"columns": cols,
-                stmt.entity: [[r[c] for c in cols] for r in rows]}
-
-    @staticmethod
-    def _where_colmap(entity: str) -> dict:
-        if entity == "users":
-            return {"access": F.col("access_bits")}
-        return {}
+        limit = stmt.limit if stmt.limit is not None else self.list_limit
+        return {"columns": cols, stmt.entity: [
+            [r[c] for c in cols] for r in rows[:limit]]}
 
     def _count(self, stmt: N.CountStmt) -> dict:
-        if stmt.entity == "series":
-            if self.fastpath_enabled:
-                sel = self._local_selected(stmt.match, stmt.where)
-                if sel is not None:
-                    if stmt.variant == "length":
-                        return {"series_length":
-                                sum(r["length"] for r in sel)}
-                    return {"series": len(sel)}
-            cat = self.catalog_df()
-            if stmt.match is not None:
-                cat = cat.where(compile_match(
-                    stmt.match, self.groups, self.tags, col=F.col("name")))
-            if stmt.where is not None:
-                cat = cat.where(compile_where(stmt.where))
-            if stmt.variant == "length":
-                row = cat.agg(F.coalesce(F.sum("length"),
-                                         F.lit(0)).alias("n")).collect()[0]
-                return {"series_length": row["n"]}
-            return {"series": cat.count()}
-        if self.fastpath_enabled:
-            rows = self._entity_rows_local(stmt.entity)
-            if rows is not None:
-                rows = self._apply_local_where(
-                    stmt.entity, rows, stmt.where)
-                if stmt.entity == "shards" \
-                        and stmt.variant == "size":
-                    return {"shards_size":
-                            sum(r["size"] for r in rows)}
-                return {stmt.entity: len(rows)}
-        df = self._entity_df(stmt.entity)
-        if stmt.where is not None:
-            df = df.where(compile_where(
-                stmt.where, self._where_colmap(stmt.entity)))
+        rows = self._stmt_rows(stmt)
+        if stmt.entity == "series" and stmt.variant == "length":
+            return {"series_length": sum(r["length"] for r in rows)}
         if stmt.entity == "shards" and stmt.variant == "size":
-            row = df.agg(F.coalesce(F.sum("size"),
-                                    F.lit(0)).alias("n")).collect()[0]
-            return {"shards_size": row["n"]}
-        return {stmt.entity: df.count()}
+            return {"shards_size": sum(r["size"] for r in rows)}
+        return {stmt.entity: len(rows)}
 
     def _show(self, stmt: N.ShowStmt) -> dict:
         all_fields = self._show_fields()
@@ -1646,15 +1495,8 @@ class SiriEngine:
         raise QueryError(f"Cannot drop '{stmt.entity}'.")
 
     def _drop_series(self, stmt: N.DropStmt) -> dict:
-        cat = self.catalog_df()
-        total = cat.count()
-        sel = cat
-        if stmt.match is not None:
-            sel = sel.where(compile_match(stmt.match, self.groups,
-                                          self.tags, col=F.col("name")))
-        if stmt.where is not None:
-            sel = sel.where(compile_where(stmt.where))
-        names = [r["name"] for r in sel.select("name").collect()]
+        total = len(self._catalog_local())
+        names = [r["name"] for r in self._selected(stmt.match, stmt.where)]
         n = len(names)
         # drop_threshold guard (grammar.py:725-733, exit_drop_series)
         if (not stmt.ignore_threshold and total
@@ -1677,11 +1519,8 @@ class SiriEngine:
         return {"success_msg": f"Successfully dropped {n} series."}
 
     def _drop_shards(self, stmt: N.DropStmt) -> dict:
-        sh = self._shards_df()
-        if stmt.where is not None:
-            sh = sh.where(compile_where(stmt.where))
-        sids = {(r["sid"], r["type"]) for r in
-                sh.select("sid", "type").collect()}
+        sids = {(r["sid"], r["type"]) for r in self._apply_local_where(
+            "shards", self._shard_rows(), stmt.where)}
         n = len(sids)
         if self.store is not None:
             import shutil
@@ -1735,6 +1574,15 @@ class SiriEngine:
                     "Successfully changed select points limit from "
                     f"{old} to {int(value)}."}
         if key == "timezone":
+            if value not in ("NAIVE", "UTC"):
+                try:
+                    ZoneInfo(value)
+                except (KeyError, ValueError, OSError):
+                    # unknown zone, or a key that is not a zone file
+                    raise QueryError(
+                        f"Unknown time zone: '{value}'. (see 'help "
+                        "timezones' for a list of valid time zones)"
+                    ) from None
             old, self.timezone = self.timezone, value
             return {"success_msg":
                     f"Successfully changed timezone from '{old}' "
@@ -1833,8 +1681,7 @@ class SiriEngine:
         return {"success_msg": "Maintenance finished."}
 
     def _alter_series(self, stmt: N.AlterSeries) -> dict:
-        sel = self._selected_catalog(stmt.match, stmt.where)
-        names = {r["name"] for r in sel.select("name").collect()}
+        names = {r["name"] for r in self._selected(stmt.match, stmt.where)}
         if stmt.action == "tag":
             self.tags.setdefault(stmt.tag, set()).update(names)
             return {"success_msg":
@@ -1916,10 +1763,8 @@ class SiriEngine:
                 f"'{self.server_name}'."}
 
     def _alter_servers(self, stmt: N.AlterServers) -> dict:
-        n = 1
-        if stmt.where is not None:
-            sv = self._servers_df().where(compile_where(stmt.where))
-            n = sv.count()
+        n = len(self._apply_local_where(
+            "servers", self._entity_rows("servers"), stmt.where))
         if n:
             self.log_level = stmt.level
         return {"success_msg":

@@ -19,14 +19,15 @@ exactly, including error messages; goldens cover both paths.
 The same selection also seeds every ``query()`` select: the matched
 names, their type set and the points bound come from the snapshot,
 so planning a select builds no Spark catalog frame and runs no job
-for it. ``fastpath_enabled = False`` sends all of these through the
-Spark catalog instead.
+for it. The snapshot is the only catalog ``query()`` reads;
+``select_df()`` plans from the Spark catalog frame instead.
 
 Scale note: the snapshot is O(|series|) driver memory — the same
 stance as the reference, whose series map lives in RAM on every
-server (series.h:54-72). Engines at 100M+ series should rely on the
-distributed path (``select_df``/catalog_df); the engine falls back
-automatically whenever no snapshot is available.
+server (series.h:54-72). ``query()`` collects every selected name
+anyway, since its result is keyed per series; engines at 100M+
+series should use the distributed API (``select_df``/catalog_df),
+which never ships the names to the driver.
 """
 
 from __future__ import annotations

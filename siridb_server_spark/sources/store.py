@@ -36,6 +36,8 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,8 +75,6 @@ _STATS_COLS = ["series", "ts", "seq", "val_int", "val_dbl",
 
 
 def _pa_points_schema():
-    import pyarrow as pa
-
     return pa.schema([
         ("series", pa.string()), ("ts", pa.int64()),
         ("seq", pa.int64()), ("val_int", pa.int64()),
@@ -100,7 +100,6 @@ def _fold_stats_table(tbl) -> dict:
     per-series ``.loc`` loop that cost ~0.9 s per 100k-point append
     (the round-6 ingest regression)."""
     import numpy as np
-    import pyarrow as pa
 
     n = tbl.num_rows
     if n == 0:
@@ -165,6 +164,26 @@ def merge_stats(out: dict, stats) -> dict:
     return out
 
 
+#: catalog file columns, in :func:`catalog_stats` order
+CATALOG_COLS = ["name", "length", "start", "end", "tp",
+                "f_seq", "f_int", "f_dbl", "f_str",
+                "l_seq", "l_int", "l_dbl", "l_str"]
+
+
+def catalog_stats(d: dict):
+    """``(name, stats)`` pairs, ready for :func:`merge_stats`, of a
+    column dict in the catalog layout (:data:`CATALOG_COLS`): a
+    catalog file, or a collected ``PointsStore._batch_stats``
+    aggregate."""
+    return ((name, (d["length"][i], d["start"][i], d["end"][i],
+                    d["tp"][i],
+                    (d["f_seq"][i], d["f_int"][i], d["f_dbl"][i],
+                     d["f_str"][i]),
+                    (d["l_seq"][i], d["l_int"][i], d["l_dbl"][i],
+                     d["l_str"][i])))
+            for i, name in enumerate(d["name"]))
+
+
 def point_stats(r) -> tuple:
     """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
     tuple), ready for :func:`merge_stats`."""
@@ -187,9 +206,6 @@ def write_arrow_delta(path: str, folded: dict, buckets: int) -> list:
     under a dot-prefixed name and renamed into place, so a concurrent
     catalog reader never sees a partial file. Returns the written
     file paths."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from .xxh import xxh64_signed
 
     if not folded:
@@ -407,13 +423,6 @@ class PointsStore:
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         return moved
-
-    def append_rows(self, spark: SparkSession, rows: list):
-        return self.append_local(spark, rows)
-
-    # alias used by the engine
-    def append(self, spark: SparkSession, rows: list):
-        return self.append_rows(spark, rows)
 
     # -------------------------------------------------------------- read
     def read(self, spark: SparkSession) -> DataFrame:
@@ -682,20 +691,15 @@ class PointsStore:
         just-landed parquet files with pyarrow/pandas and write the
         delta commit directly (same layout the Spark path produces).
         Returns False — caller falls back to the distributed path —
-        when the landed bytes exceed ARROW_STATS_MAX_BYTES or pyarrow
-        is unavailable. This is exactly the Arrow datasource writer's
-        commit shape (datasource.py), so a streaming micro-batch
-        costs ONE Spark job (the points write), not two."""
+        when the landed bytes exceed ARROW_STATS_MAX_BYTES. This is
+        exactly the Arrow datasource writer's commit shape
+        (datasource.py), so a streaming micro-batch costs ONE Spark
+        job (the points write), not two."""
         try:
             total = sum(os.path.getsize(f) for f in landed)
         except OSError:
             return False
         if total > ARROW_STATS_MAX_BYTES:
-            return False
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
             return False
         # integer_object_nulls downstream: null int64 must stay exact
         # Python ints/None, not lossy float64-with-NaN
@@ -717,7 +721,7 @@ class PointsStore:
         nothing but ~1 s of scheduling. Same crash protocol as the
         Spark path: per-appender pending marker, dot-prefixed temp +
         rename per file. Falls back to :meth:`append_df` above
-        LOCAL_APPEND_MAX_ROWS or without pyarrow.
+        LOCAL_APPEND_MAX_ROWS.
 
         Returns what the append did to the catalog, so a caller that
         holds a driver snapshot can fold the batch in instead of
@@ -726,12 +730,6 @@ class PointsStore:
         :meth:`_compact_catalog` result or None}``. None on the Spark
         fallback."""
         if len(rows) > LOCAL_APPEND_MAX_ROWS:
-            self.append_df(spark.createDataFrame(rows, POINTS_SCHEMA))
-            return None
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
             self.append_df(spark.createDataFrame(rows, POINTS_SCHEMA))
             return None
         groups: dict = {}
@@ -1054,14 +1052,10 @@ class PointsStore:
     def _legacy_catalog(self) -> bool:
         """True when any catalog/delta file predates the r6 layout
         (no first/last value columns) — one-time migration via
-        rebuild_catalog, same stance as the marker repair."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
-            return False
-        # one base file decides the base layout
-        candidates = self._base_files()[:1] + self._delta_files()
-        for f in candidates:
+        rebuild_catalog, same stance as the marker repair. Checks
+        every file, as :meth:`read_catalog_local` does, so the two
+        never disagree on whether a migration is due."""
+        for f in self._base_files() + self._delta_files():
             try:
                 if "f_seq" not in pq.read_schema(f).names:
                     return True
@@ -1073,26 +1067,19 @@ class PointsStore:
         """Driver-side catalog snapshot WITHOUT a Spark job: fold the
         base + delta parquet files (``files``, default the current
         :meth:`catalog_files`) with pyarrow into the
-        :func:`merge_stats` dict. This is the engine's micro-latency
-        path (the reference answers list/count/skip-points selects
-        from in-memory series structs; Spark's job floor is ~0.2 s).
-        Returns None when a crashed append needs the Spark-path repair
-        first (stale pending marker), when no catalog exists, when a
-        racing compaction removed a listed file, or when a pre-r6
-        legacy file lacks the value columns — callers then fall back
-        to the distributed path, which repairs or migrates."""
+        :func:`merge_stats` dict; no files fold to ``{}``. This is the
+        engine's only catalog for ``query()`` (the reference answers
+        list/count/skip-points selects from in-memory series structs;
+        Spark's job floor is ~0.2 s). Returns None when a crashed
+        append needs :meth:`read_catalog`'s repair first (stale
+        pending marker), when a pre-r6 legacy file lacks the value
+        columns (:meth:`read_catalog` migrates it), or when a racing
+        compaction removed a listed file (list again)."""
         if files is None:
             files = self.catalog_files()
-        if not files:
-            return None
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
-            return None
+            if files is None:
+                return None
         out: dict = {}
-        cols = ["name", "length", "start", "end", "tp",
-                "f_seq", "f_int", "f_dbl", "f_str",
-                "l_seq", "l_int", "l_dbl", "l_str"]
         for f in files:
             try:
                 pf = pq.ParquetFile(f)
@@ -1100,16 +1087,9 @@ class PointsStore:
                 return None  # racing compaction removed the file
             with pf:
                 if "f_seq" not in pf.schema_arrow.names:
-                    return None  # legacy layout: Spark path migrates
-                d = pf.read(columns=cols).to_pydict()
-            merge_stats(out, (
-                (name, (d["length"][i], d["start"][i], d["end"][i],
-                        d["tp"][i],
-                        (d["f_seq"][i], d["f_int"][i], d["f_dbl"][i],
-                         d["f_str"][i]),
-                        (d["l_seq"][i], d["l_int"][i], d["l_dbl"][i],
-                         d["l_str"][i])))
-                for i, name in enumerate(d["name"])))
+                    return None  # legacy layout: read_catalog migrates
+                d = pf.read(columns=CATALOG_COLS).to_pydict()
+            merge_stats(out, catalog_stats(d))
         return out
 
     def shard_stats_local(self) -> list | None:
@@ -1117,13 +1097,9 @@ class PointsStore:
         FOOTERS only — pyarrow metadata, zero data pages read, no
         Spark job. The reference keeps exactly these stats on its
         in-memory shard structs (shard.h); parquet row-group
-        statistics make them free here. None (→ Spark fallback) when
-        a racing rewrite removed a shard file or a file lacks ts
-        statistics."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
-            return None
+        statistics make them free here. None (→ the engine aggregates
+        the points instead) when a racing rewrite removed a shard file
+        or a file lacks ts statistics."""
         out = []
         for kind, sid, p in self._sid_dirs():
             n, mn, mx = 0, None, None

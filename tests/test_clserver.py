@@ -228,8 +228,8 @@ def test_protocol_fast_path_zero_jobs_and_low_latency(spark,
     and skip-points selects answer over the SOCKET without launching
     a single Spark job, and the measured round-trip sits in the
     reference's interactive class (<5 ms median; the Spark job floor
-    is ~200 ms, so this also guards the fast path from silently
-    regressing to the distributed path)."""
+    is ~200 ms, so this also guards the snapshot path from silently
+    regressing to a Spark job)."""
     import time
 
     eng = SiriEngine.open(spark, str(tmp_path / "db"), precision="s")
@@ -264,13 +264,12 @@ def test_protocol_fast_path_zero_jobs_and_low_latency(spark,
         assert jobs() == before, "fast path took a Spark job"
         for q, med in lats.items():
             assert med < 0.005, (q, med)
-        # answers equal the distributed path
+        # answers equal references computed from Spark frames
         tp, body = c.query("count series")
-        eng.fastpath_enabled = False
-        try:
-            assert body == eng.query("count series")
-        finally:
-            eng.fastpath_enabled = True
+        assert body == {"series": eng.catalog_df().count()}
+        q = "select count() from /fp.*/"
+        tp, body = c.query(q)
+        assert body == eng._collect(eng.select_df(q))
     finally:
         c.close()
         srv.stop()

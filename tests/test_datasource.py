@@ -24,7 +24,7 @@ def store(spark, tmp_path):
     st = PointsStore(str(tmp_path / "db"), 1000, 1000)
     rows = [(f"s{i % 3}", t, i, i, None, None, 0)
             for i, t in enumerate(range(0, 5000, 7))]
-    st.append_rows(spark, rows)
+    st.append_local(spark, rows)
     register(spark)
     return st
 
@@ -80,7 +80,7 @@ def test_push_filters_all_returned_unhandled(store):
 
 
 def test_kind_partitions_split_types(spark, store):
-    store.append_rows(
+    store.append_local(
         spark, [("logline", 10, 900, None, None, "hello", 2)])
     df = spark.read.format("siridb").load(store.path)
     assert df.where("kind = 'log'").count() == 1
@@ -96,7 +96,7 @@ def test_empty_store_reads_zero_rows(spark, tmp_path):
 
 def test_stream_tails_new_appends_exactly_once(spark, tmp_path):
     st = PointsStore(str(tmp_path / "db"), 1000, 1000)
-    st.append_rows(spark, [("a", 1, 0, 1, None, None, 0),
+    st.append_local(spark, [("a", 1, 0, 1, None, None, 0),
                            ("a", 2, 1, 2, None, None, 0)])
     register(spark)
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
@@ -110,7 +110,7 @@ def test_stream_tails_new_appends_exactly_once(spark, tmp_path):
     try:
         q.processAllAvailable()
         assert spark.read.parquet(out).count() == 2
-        st.append_rows(spark, [("b", 5000, 2, 7, None, None, 0)])
+        st.append_local(spark, [("b", 5000, 2, 7, None, None, 0)])
         q.processAllAvailable()
         assert spark.read.parquet(out).count() == 3
     finally:
@@ -118,7 +118,7 @@ def test_stream_tails_new_appends_exactly_once(spark, tmp_path):
 
     # append while the query is DOWN; the restart resumes from the
     # checkpointed offset: no replay of the first three, no loss
-    st.append_rows(spark, [("c", 9000, 3, 8, None, None, 0)])
+    st.append_local(spark, [("c", 9000, 3, 8, None, None, 0)])
     q2 = start()
     try:
         q2.processAllAvailable()
@@ -139,7 +139,7 @@ def test_stream_from_store_through_engine_rollup(spark, tmp_path):
     from siridb_server_spark.streaming.ingest import windowed_rollup
 
     st = PointsStore(str(tmp_path / "db"), 1000, 1000)
-    st.append_rows(spark, [("cpu", 1, 0, None, 1.0, None, 1),
+    st.append_local(spark, [("cpu", 1, 0, None, 1.0, None, 1),
                            ("cpu", 5, 1, None, 2.0, None, 1),
                            ("cpu", 6, 2, None, 4.0, None, 1)])
     register(spark)
@@ -156,7 +156,7 @@ def test_stream_from_store_through_engine_rollup(spark, tmp_path):
         # right-closed buckets: ts 1,5 → bucket 5; ts 6 → bucket 10
         assert got == {("cpu", 5): 3.0, ("cpu", 10): 4.0}
         # live append lands in the next micro-batch
-        st.append_rows(spark, [("cpu", 9, 3, None, 10.0, None, 1)])
+        st.append_local(spark, [("cpu", 9, 3, None, 10.0, None, 1)])
         q.processAllAvailable()
         got = {(r["series"], r["bucket_ts"]): r["sum"]
                for r in spark.sql("select * from rollup").collect()}
@@ -213,7 +213,7 @@ def test_write_catalog_bucket_matches_spark_through_compaction(
     register(spark)
     path = str(tmp_path / "db")
     st = PointsStore(path, 1000, 1000)
-    st.append_rows(spark, [("cpu|1", 10, 0, 5, None, None, 0)])
+    st.append_local(spark, [("cpu|1", 10, 0, 5, None, None, 0)])
     _write(spark.createDataFrame(
         [("cpu|1", 2000, 1, 7, None, None, 0)], POINTS_SCHEMA), path)
     st._compact_catalog(spark)
@@ -333,7 +333,7 @@ def test_store_to_store_replication_pipeline(spark, tmp_path):
     Streaming query. New appends on the primary flow into the
     replica's shard layout and catalog without any custom plumbing."""
     primary = PointsStore(str(tmp_path / "p"), 1000, 1000)
-    primary.append_rows(spark, [("a", 1, 0, 1, None, None, 0),
+    primary.append_local(spark, [("a", 1, 0, 1, None, None, 0),
                                 ("a", 1500, 1, 2, None, None, 0)])
     register(spark)
     replica = str(tmp_path / "r")
@@ -349,7 +349,7 @@ def test_store_to_store_replication_pipeline(spark, tmp_path):
     try:
         q.processAllAvailable()
         assert spark.read.format("siridb").load(replica).count() == 2
-        primary.append_rows(spark, [("b", 9000, 2, 3, None, None, 0)])
+        primary.append_local(spark, [("b", 9000, 2, 3, None, None, 0)])
         q.processAllAvailable()
         got = spark.read.format("siridb").load(replica)
         assert got.count() == 3
@@ -379,7 +379,7 @@ def test_write_negative_ts_matches_store_sid_alignment(spark,
             ("n", -1500, 1, 2, None, None, 0),
             ("n", 5, 2, 3, None, None, 0)]
     _write(spark.createDataFrame(rows, POINTS_SCHEMA), path_a)
-    PointsStore(path_b, 1000, 1000).append_rows(spark, rows)
+    PointsStore(path_b, 1000, 1000).append_local(spark, rows)
     # compare the DIRECTORY sets: file counts differ legitimately
     # (append_local writes one file per shard, Spark one per task)
     sids = lambda p: {(k, s) for k, s, _f, _m in _shard_files(p)}
@@ -414,7 +414,7 @@ def test_stream_picks_up_backdated_mtime_files(spark, tmp_path):
     import time
 
     st = PointsStore(str(tmp_path / "db"), 1000, 1000)
-    st.append_rows(spark, [("a", 1, 0, 1, None, None, 0)])
+    st.append_local(spark, [("a", 1, 0, 1, None, None, 0)])
     register(spark)
     ckpt, out = str(tmp_path / "ck"), str(tmp_path / "out")
 

@@ -357,9 +357,16 @@ def _n_jobs(spark):
 def test_catalog_fastpath_zero_jobs_and_agreement(spark, tmp_path):
     """list/count/skip-points answers come from the driver catalog
     snapshot with ZERO Spark jobs (ref: in-memory series structs,
-    listener.c:5351-5586), and agree exactly with the distributed
-    path on match + where + limit + select-count."""
+    listener.c:5351-5586), and agree exactly with references computed
+    here: the selected names with the Catalyst compilers over
+    ``catalog_df()``, a ``from_points`` engine over the same points,
+    and ``select_df`` for the selects."""
+    from pyspark.sql import functions as F
+
     from siridb_server_spark import SiriEngine
+    from siridb_server_spark.operators.selection import compile_match
+    from siridb_server_spark.operators.where import compile_where
+    from siridb_server_spark.plans.parser import Parser
 
     eng = SiriEngine.open(spark, str(tmp_path / "fdb"), precision="s")
     eng.insert({"cpu-a": [[100, 1], [200, 2]],
@@ -403,8 +410,8 @@ def test_catalog_fastpath_zero_jobs_and_agreement(spark, tmp_path):
         "count shards size",
     ]
     # bucketed selects plan from the snapshot's seeds (names, types,
-    # points bound) on the fast path and from the Spark catalog frame
-    # with the fast path off: both must agree
+    # points bound); select_df plans the same statement from the
+    # Spark catalog frame
     selects = [
         "select mean(100) from /cpu.*/",
         "select sum(100) prefix 's_' from `cpu` where length > 1",
@@ -416,16 +423,45 @@ def test_catalog_fastpath_zero_jobs_and_agreement(spark, tmp_path):
     # then assert zero jobs per query
     eng.query("count series")
     eng.insert({"cpu-a": [[300, 3]], "cpu-c": [[250, 4.5]]})
+    answers = {}
     for q in queries + selects:
         before = _n_jobs(spark)
-        fast = eng.query(q)
+        answers[q] = eng.query(q)
         if q not in selects:
             assert _n_jobs(spark) == before, f"{q} launched a Spark job"
-        eng.fastpath_enabled = False
-        try:
-            slow = eng.query(q)
-        finally:
-            eng.fastpath_enabled = True
+
+    # the snapshot's FROM/where evaluators (plans/fastpath.py) select
+    # exactly the names the Catalyst compilers select
+    for q in queries:
+        stmt = Parser(q, "s").parse().stmt
+        if getattr(stmt, "entity", None) != "series":
+            continue
+        cat = eng.catalog_df()
+        if stmt.match is not None:
+            cat = cat.where(compile_match(stmt.match, eng.groups,
+                                          eng.tags, col=F.col("name")))
+        if stmt.where is not None:
+            cat = cat.where(compile_where(stmt.where))
+        want = {r["name"]: r["length"] for r in cat.collect()}
+        got = answers[q]
+        if q.startswith("count") and stmt.variant == "length":
+            assert got == {"series_length": sum(want.values())}, q
+        elif q.startswith("count"):
+            assert got == {"series": len(want)}, q
+        elif "limit" in q:
+            assert {r[0] for r in got["series"]} <= set(want), q
+        else:
+            assert sorted(r[0] for r in got["series"]) == \
+                sorted(want), q
+
+    # a from_points engine over the same points answers alike: its
+    # snapshot is folded from one aggregate of the points, not read
+    # from the store's catalog files or shard footers
+    ref = SiriEngine.from_points(spark, eng.points_df(), precision="s")
+    ref.groups = dict(eng.groups)
+    ref.tags = {k: set(v) for k, v in eng.tags.items()}
+    for q in queries + selects:
+        fast, slow = answers[q], ref.query(q)
         if q.split()[0] == "list":
             # row order (and WHICH rows under a limit) is engine-
             # internal, as in the reference; compare as sets, and
@@ -442,12 +478,96 @@ def test_catalog_fastpath_zero_jobs_and_agreement(spark, tmp_path):
                     sorted(map(tuple, slow[ent])), q
         else:
             assert fast == slow, q
-    # unknown group/tag raises identically on the fast path
+
+    # the distributed API plans every select from Spark frames
+    for q in selects + [q for q in queries if q.startswith("select")]:
+        assert eng._collect(eng.select_df(q)) == answers[q], q
+    # unknown group/tag raises identically on the snapshot path
     import pytest as _pytest
 
     from siridb_server_spark.errors import QueryError
     with _pytest.raises(QueryError, match="Cannot find group or tag"):
         eng.query("count series `nope`")
+
+
+def test_fresh_store_metadata_zero_jobs(spark, tmp_path):
+    """A store with no points yet has an empty catalog snapshot:
+    count/list statements and the first insert's type pre-flight
+    answer from it without a Spark job."""
+    from siridb_server_spark import SiriEngine
+
+    eng = SiriEngine.open(spark, str(tmp_path / "empty"), precision="s")
+    for q, want in (("count series", {"series": 0}),
+                    ("count pools", {"pools": 0}),
+                    ("list shards", {"columns": [
+                        "sid", "pool", "server", "size", "start", "end"],
+                        "shards": []}),
+                    ("list series", {"columns": ["name"],
+                                     "series": []})):
+        before = _n_jobs(spark)
+        assert eng.query(q) == want, q
+        assert _n_jobs(spark) == before, f"{q} launched a Spark job"
+    before = _n_jobs(spark)
+    eng.insert({"a": [[100, 1]], "b": [[100, "x"]]})
+    assert _n_jobs(spark) == before, "first insert launched a Spark job"
+    assert eng.query("count series") == {"series": 2}
+    assert eng.query("count pools") == {"pools": 1}
+
+
+def test_stale_marker_repaired_before_catalog_reads(spark, tmp_path,
+                                                    monkeypatch):
+    """An append that fails after its points landed abandons its
+    pending marker, so the catalog misses those points. The next
+    catalog read runs the store's repair first: count/list answer
+    from the points on disk."""
+    from siridb_server_spark import SiriEngine
+    from siridb_server_spark.sources import store as S
+
+    eng = SiriEngine.open(spark, str(tmp_path / "sdb"), precision="s")
+    eng.insert({"a": [[100, 1], [200, 2]], "b": [[100, 1.5]]})
+    assert eng.query("count series") == {"series": 2}
+
+    def crash(*_a, **_k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(S, "write_arrow_delta", crash)
+    with pytest.raises(OSError):
+        eng.insert({"a": [[300, 3]], "c": [[100, "x"]]})
+    monkeypatch.undo()
+    assert eng.store.catalog_files() is None  # stale marker
+
+    assert eng.query("count series") == {"series": 3}
+    assert eng.query("count series length") == {"series_length": 5}
+    assert sorted(eng.query("list series name, length")["series"]) == \
+        [["a", 3], ["b", 1], ["c", 1]]
+    assert eng.store.catalog_files() is not None  # marker cleared
+    ref = SiriEngine.from_points(spark, eng.points_df(), precision="s")
+    assert eng._catalog_local() == ref._catalog_local()
+
+
+def test_timezone_validated_and_applied(spark):
+    """ISO dates in a query are read in the database timezone; an
+    unknown zone is rejected and leaves the old one in place."""
+    from siridb_server_spark import SiriEngine
+
+    eng = SiriEngine(spark, precision="s")
+    # 2016-08-15 10:00:00 UTC, and one hour later
+    eng.insert({"t": [[1471255200, 1], [1471258800, 2]]})
+    q = "select * from 't' between '2016-08-15 12:00' and " \
+        "'2016-08-15 12:30'"
+    assert eng.query(q) == {"t": []}
+    assert eng.query("alter database set timezone 'Europe/Amsterdam'") \
+        == {"success_msg": "Successfully changed timezone from 'NAIVE' "
+            "to 'Europe/Amsterdam'."}
+    # CEST is UTC+2: 12:00 local is the first point
+    assert eng.query(q) == {"t": [[1471255200, 1]]}
+    for bad in ("Mars/Olympus", "Europe", "../etc/passwd"):
+        with pytest.raises(QueryError, match="Unknown time zone"):
+            eng.query(f"alter database set timezone '{bad}'")
+        assert eng.timezone == "Europe/Amsterdam"
+        assert eng.query(q) == {"t": [[1471255200, 1]]}
+    eng.query("alter database set timezone 'NAIVE'")
+    assert eng.query(q) == {"t": []}
 
 
 def test_group_tag_name_validation(spark):

@@ -96,7 +96,7 @@ def test_rollup_served_plan_reads_no_point_files(store_eng, spark):
     stmt = Parser("select count(600) from /.*/", "s").parse().stmt
     assert isinstance(stmt, N.SelectStmt)
     res = store_eng._rollup_pipeline(
-        stmt.pipelines[0], stmt, TypeSet(frozenset({TP_INT})))
+        stmt.pipelines[0], stmt, TypeSet(frozenset({TP_INT})), {})
     plan = res.df._jdf.queryExecution().executedPlan().toString()
     assert "_rollup" in plan
     assert "kind=" not in plan  # no point partitions in the scan
@@ -365,7 +365,7 @@ def test_rollup_aligned_range_reads_no_point_files(store_eng, spark):
         stmt = Parser(q, "s").parse().stmt
         assert isinstance(stmt, N.SelectStmt)
         res = store_eng._rollup_pipeline(
-            stmt.pipelines[0], stmt, TypeSet(frozenset({TP_INT})))
+            stmt.pipelines[0], stmt, TypeSet(frozenset({TP_INT})), {})
         assert res is not None, q
         return res.df._jdf.queryExecution().executedPlan().toString()
 
@@ -405,7 +405,7 @@ def test_rollup_serves_double_sum_mean_plan_and_equality(store_eng,
                   " between 601 and 1201", "s").parse().stmt
     assert isinstance(stmt, N.SelectStmt)
     res = store_eng._rollup_pipeline(
-        stmt.pipelines[0], stmt, TypeSet(frozenset({TP_DOUBLE})))
+        stmt.pipelines[0], stmt, TypeSet(frozenset({TP_DOUBLE})), {})
     assert res is not None
     plan = res.df._jdf.queryExecution().executedPlan().toString()
     assert "_rollup" in plan

@@ -243,7 +243,7 @@ def test_concurrent_appends_write_disjoint_deltas(spark, tmp_path):
     eng = SiriEngine.open(spark, str(tmp_path / "xdb"), precision="s")
 
     def append(base):
-        eng.store.append_rows(spark, [
+        eng.store.append_local(spark, [
             (f"s{base + i}", 100 + i, i, i, None, None, 0)
             for i in range(20)])
 
@@ -717,9 +717,9 @@ def test_optimize_sorts_shards_for_rowgroup_pruning(spark, tmp_path):
 
     st = PointsStore(str(tmp_path / "db"), 10_000, 10_000)
     # interleaved, out-of-order appends into one shard
-    st.append_rows(spark, [("z", 5, 0, 1, None, None, 0),
+    st.append_local(spark, [("z", 5, 0, 1, None, None, 0),
                            ("a", 3, 1, 2, None, None, 0)])
-    st.append_rows(spark, [("m", 1, 2, 3, None, None, 0),
+    st.append_local(spark, [("m", 1, 2, 3, None, None, 0),
                            ("a", 9, 3, 4, None, None, 0)])
     st.optimize(spark)
     [(kind, sid, p)] = list(st._sid_dirs())
@@ -966,7 +966,7 @@ def test_catalog_buckets_auto_grow(spark, tmp_path, monkeypatch):
     assert st.catalog_buckets == SM.N_CATALOG_BUCKETS
     rows = [(f"s{i}", 100 + i, 0, i, None, None, 0)
             for i in range(40)]
-    st.append_rows(spark, rows)
+    st.append_local(spark, rows)
     st._compact_catalog(spark)      # 40 rows / target 2 → 32 buckets
     grown = st.catalog_buckets
     assert grown == 32
@@ -976,7 +976,7 @@ def test_catalog_buckets_auto_grow(spark, tmp_path, monkeypatch):
     assert st2.catalog_buckets == grown
     # reads stay correct across the growth step: one row per series,
     # correct folds, and further appends under the new numbering merge
-    st2.append_rows(spark, [("s0", 500, 1, 7, None, None, 0)])
+    st2.append_local(spark, [("s0", 500, 1, 7, None, None, 0)])
     cat = {r["name"]: (r["length"], r["start"], r["end"])
            for r in st2.read_catalog(spark).collect()}
     assert len(cat) == 40
@@ -985,7 +985,7 @@ def test_catalog_buckets_auto_grow(spark, tmp_path, monkeypatch):
     # pinned count never auto-resizes
     pinned = SM.PointsStore(str(tmp_path / "pdb"), 10_000, 10_000,
                             catalog_buckets=4)
-    pinned.append_rows(spark, rows)
+    pinned.append_local(spark, rows)
     pinned._compact_catalog(spark)
     assert pinned.catalog_buckets == 4
 
@@ -1242,7 +1242,7 @@ def test_write_through_snapshot_matches_reload(spark, tmp_path,
     foreign = PointsStore(path, eng.store.duration_num,
                           eng.store.duration_log)
     n_series = eng.query("count series")["series"]
-    foreign.append_rows(spark, [("foreign", 1020, 1 << 40, 7, None,
+    foreign.append_local(spark, [("foreign", 1020, 1 << 40, 7, None,
                                  None, 0)])
     eng.insert({"i0": [[1030, 1]]})
     assert eng.query("count series") == {"series": n_series + 1}
@@ -1252,12 +1252,16 @@ def test_write_through_snapshot_matches_reload(spark, tmp_path,
     fresh = SiriEngine.open(spark, path, precision="s")
     assert eng._catalog_local() == fresh._catalog_local()
 
-    # a stale pending marker (crashed appender) drops the snapshot
+    # a stale pending marker (crashed appender) drops the snapshot;
+    # the next read repairs the catalog first, then reloads it
     with open(os.path.join(path, PointsStore._PENDING_PREFIX + "x"),
               "w") as fh:
         fh.write("999999999")
     eng.insert({"i0": [[1031, 2]]})
-    assert eng._local_cat is None and eng._catalog_local() is None
+    assert eng._local_cat is None
+    assert eng._catalog_local() == \
+        SiriEngine.open(spark, path, precision="s")._catalog_local()
+    assert eng.store.catalog_files() is not None and len(loads) == 3
 
 
 def test_write_through_snapshot_memory_engine(spark):
