@@ -356,7 +356,7 @@ class SiriEngine:
         """``(stats, files)`` of the store's catalog, read with
         pyarrow. A stale pending marker (crashed append) or a pre-r6
         legacy file first runs the store's one-time Spark repair
-        (``read_catalog``); a listed file that a racing compaction
+        (``repair_catalog``); a listed file that a racing compaction
         removed means listing again."""
         while True:
             files = self.store.catalog_files()
@@ -365,7 +365,7 @@ class SiriEngine:
             if raw is not None:
                 return raw, files
             if files is None or self.store._legacy_catalog():
-                self.store.read_catalog(self.spark)
+                self.store.repair_catalog(self.spark)
 
     def _fold_snapshot(self, stats):
         """Fold ``(name, stats)`` pairs of new points into the
@@ -527,17 +527,15 @@ class SiriEngine:
         return self.points_df()
 
     def catalog_df(self) -> DataFrame:
-        """Series catalog. Store-backed engines read the store's
-        incrementally-maintained catalog table (O(series), no points
-        scan — the analogue of the reference's live series structs,
-        series.h:54-72); memory-backed engines derive it with one
-        groupBy, cached until the next insert/drop."""
+        """Series catalog (name, type, length, start, end, pool,
+        shard_duration). Store- and memory-backed engines upload the
+        rows of the driver snapshot (:meth:`_catalog_local` — the
+        analogue of the reference's live series structs,
+        series.h:54-72); ``from_points`` engines derive it lazily with
+        one groupBy over their points. Cached until the next
+        insert/drop."""
         if self._catalog is None:
-            dur_num, dur_log = self.duration_num, self.duration_log
-            stats = None
-            if self.store is not None:
-                stats = self.store.read_catalog(self.spark)
-            if stats is None:
+            if self.store is None and self._base_df is not None:
                 stats = (
                     self.points_df()
                     .groupBy(F.col("series").alias("name"))
@@ -547,20 +545,27 @@ class SiriEngine:
                         F.max("ts").alias("end"),
                         F.max("tp").alias("tp"),
                     ))
-            cat = (
-                stats
-                .select(
+                self._catalog = stats.select(
                     "name",
                     F.when(F.col("tp") == TP_INT, "integer")
                     .when(F.col("tp") == TP_DOUBLE, "float")
                     .otherwise("string").alias("type"),
                     "length", "start", "end",
                     F.lit(0).alias("pool"),
-                    F.when(F.col("tp") == TP_STRING, dur_log)
-                    .otherwise(dur_num).cast("long").alias("shard_duration"),
-                )
-            )
-            self._catalog = cat.cache()
+                    F.when(F.col("tp") == TP_STRING, self.duration_log)
+                    .otherwise(self.duration_num).cast("long")
+                    .alias("shard_duration"),
+                ).cache()
+            else:
+                cols = ("name", "type", "length", "start", "end",
+                        "pool", "shard_duration")
+                self._catalog = arrow_df(
+                    self.spark,
+                    [tuple(r[c] for c in cols)
+                     for r in self._catalog_local().values()],
+                    "name string, type string, length long, "
+                    "start long, end long, pool int, "
+                    "shard_duration long")
         return self._catalog
 
     # --------------------------------------------------------------- query

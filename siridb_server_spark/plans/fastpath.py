@@ -25,9 +25,12 @@ for it. The snapshot is the only catalog ``query()`` reads;
 Scale note: the snapshot is O(|series|) driver memory — the same
 stance as the reference, whose series map lives in RAM on every
 server (series.h:54-72). ``query()`` collects every selected name
-anyway, since its result is keyed per series; engines at 100M+
-series should use the distributed API (``select_df``/catalog_df),
-which never ships the names to the driver.
+anyway, since its result is keyed per series. Store-backed engines
+hold their whole catalog on the driver in any case: the catalog
+files are folded there, and ``catalog_df`` uploads the snapshot.
+The distributed API (``select_df``) never collects the selected
+names, and ``from_points`` engines derive ``catalog_df`` with a
+distributed groupBy.
 """
 
 from __future__ import annotations

@@ -329,7 +329,8 @@ class SiriDBStreamReader(DataSourceStreamReader):
 class _WriteResult(WriterCommitMessage):
     #: [(kind, sid, staged_file)] written by this task
     files: list
-    #: [(name, length, start, end, tp)] partial catalog stats
+    #: [(name, stats)] partial catalog stats of the task's rows
+    #: (``store._fold_stats_table`` items, for ``store.merge_stats``)
     stats: list
 
 
@@ -340,17 +341,18 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
     Protocol (mirrors ``PointsStore.append_df``'s crash-consistency):
     each task writes its rows into per-(kind, sid) parquet files under
     the underscore-staged ``_writer_stage/`` (invisible to readers)
-    and reports the file list + per-series partial stats in its commit
-    message; ``commit`` — which only runs if every task succeeded —
-    sets the catalog pending marker, renames the staged files into
-    their shard partitions, appends ONE catalog delta commit built by
-    folding the per-task stats — sharded into the same Hive-style
-    ``bucket=N/`` layout as the engine's delta append (bucket =
-    Spark-compatible xxh64 pmod, no SparkSession needed) — and
-    clears the marker. ``abort`` discards
-    the staging directory; nothing ever became visible. A crash inside
-    commit leaves the marker set, and the next ``read_catalog``
-    rebuilds — lagging is possible, silent under-counting is not."""
+    and reports the file list + per-series partial stats
+    (``store._fold_stats_table``, exact for int64 and NaN values) in
+    its commit message; ``commit`` — which only runs if every task
+    succeeded — sets the store's pending marker
+    (``PointsStore._pending``), renames the staged files into their
+    shard partitions, folds the per-task stats with
+    ``store.merge_stats`` into ONE catalog delta file
+    (``store.write_arrow_delta``, the engine's own delta commit) and
+    clears the marker. ``abort`` discards the staging directory;
+    nothing ever became visible. A crash inside commit leaves the
+    marker set, and the next ``repair_catalog`` rebuilds — lagging is
+    possible, silent under-counting is not."""
 
     def __init__(self, options):
         self.path = options.get("path")
@@ -364,8 +366,6 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
                 "siridb sink requires duration_num and duration_log "
                 "options (shard durations in the store's ts unit)")
         self.dur_num, self.dur_log = int(dn), int(dl)
-        b = options.get("catalog_buckets")
-        self._buckets_opt = int(b) if b else None
         # per-writer staging dir: concurrent writes to the same store
         # must not rmtree each other's staged files on commit/abort
         import uuid
@@ -423,75 +423,29 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
                 pq.write_table(sub, fp, compression="zstd")
                 files.append(("log" if k_flag else "num",
                               int(s), fp))
-        import pandas as pd
+        from .store import _fold_stats_table
 
-        pdf = tbl.select(["series", "ts", "seq", "val_int",
-                          "val_dbl", "val_str", "tp"]).to_pandas()
-        g = pdf.groupby("series").agg(
-            length=("ts", "size"), start=("ts", "min"),
-            end=("ts", "max"), tp=("tp", "max"))
-        # positional first/last row per series in (ts, seq) order —
-        # the typed value block the r6 catalog carries. GroupBy.nth
-        # is positional (.first() would skip nulls and lie about
-        # which row is first); .loc by series name pairs the rows
-        # with g regardless of group ordering.
-        order = np.lexsort((pdf["seq"].to_numpy(),
-                            pdf["ts"].to_numpy()))
-        sdf = pdf.iloc[order]
-        gb = sdf.groupby("series", sort=False)
-        first_rows = gb.nth(0).set_index("series")
-        last_rows = gb.nth(-1).set_index("series")
-
-        def _val(row, col, caster):
-            v = row[col]
-            return None if pd.isna(v) else caster(v)
-
-        stats = []
-        for name, r in g.iterrows():
-            fr, lr = first_rows.loc[name], last_rows.loc[name]
-            stats.append((
-                str(name), int(r.length), int(r.start), int(r.end),
-                int(r.tp),
-                int(fr["seq"]), _val(fr, "val_int", int),
-                _val(fr, "val_dbl", float), _val(fr, "val_str", str),
-                int(lr["seq"]), _val(lr, "val_int", int),
-                _val(lr, "val_dbl", float), _val(lr, "val_str", str),
-            ))
+        stats = list(_fold_stats_table(tbl).items())
         return _WriteResult(files, stats)
 
     # ------------------------------------------------------ driver side
     def commit(self, messages):
-        import uuid
-
         from .store import PointsStore
 
-        # per-appender uuid/pid marker, registered in the process-
-        # wide active set so same-process readers see it as LIVE
-        # while the commit runs and as a crash signal if it raises
-        # (the r5 single shared "_catalog.pending" let any other
-        # appender's clear remove this commit's crash protection)
-        pending = os.path.join(
-            self.path,
-            f"{PointsStore._PENDING_PREFIX}{uuid.uuid4().hex}")
-        with open(pending, "w") as fh:
-            fh.write(str(os.getpid()))
-        PointsStore._process_active.add(pending)
-        try:
+        store = PointsStore(self.path, self.dur_num, self.dur_log)
+        # the store's per-appender marker: LIVE to same-process
+        # readers while the commit runs, left on disk as the crash
+        # signal if it raises
+        with store._pending():
             self._commit_inner(messages)
-        except BaseException:
-            # leave the marker on disk as the crash signal
-            PointsStore._process_active.discard(pending)
-            raise
         self._drop_stage()
-        PointsStore._process_active.discard(pending)
-        os.remove(pending)
-        dur_file = os.path.join(self.path, "_durations.json")
-        if not os.path.exists(dur_file):
+        if not os.path.exists(store._durations_path):
             # persist the sid layout like PointsStore.append_df does
-            st = PointsStore(self.path, self.dur_num, self.dur_log)
-            st.persist_durations()
+            store.persist_durations()
 
     def _commit_inner(self, messages):
+        from .store import merge_stats, write_arrow_delta
+
         for msg in messages:
             if msg is None:
                 continue
@@ -501,35 +455,10 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
                 os.makedirs(target, exist_ok=True)
                 os.rename(staged, os.path.join(
                     target, os.path.basename(staged)))
-        # fold per-task stats (store.merge_stats: associative,
-        # first/last by argmin/argmax over (ts, seq)) and append ONE
-        # delta commit
-        from .store import merge_stats, write_arrow_delta
-
-        folded = merge_stats({}, (
-            (st[0], (st[1], st[2], st[3], st[4],
-                     tuple(st[5:9]), tuple(st[9:13])))
-            for msg in messages if msg is not None
-            for st in msg.stats))
-        if folded:
-            # shared commit shape with the engine's small-append path
-            # (store.write_arrow_delta): one file per touched bucket,
-            # Hive-style bucket=N/ layout, one uuid per commit.
-            write_arrow_delta(self.path, folded,
-                              self._store_buckets())
-
-    def _store_buckets(self) -> int:
-        """Active catalog bucket count: explicit writer option wins,
-        else the store's persisted auto-scaled count, else 8."""
-        if self._buckets_opt is not None:
-            return self._buckets_opt
-        try:
-            import json
-            with open(os.path.join(
-                    self.path, "_catalog.meta.json")) as fh:
-                return int(json.load(fh)["buckets"])
-        except (OSError, ValueError, KeyError):
-            return 8
+        # fold the per-task partials and append ONE delta commit
+        write_arrow_delta(self.path, merge_stats({}, (
+            item for msg in messages if msg is not None
+            for item in msg.stats)))
 
     def abort(self, messages):
         # nothing became visible; drop the staging area

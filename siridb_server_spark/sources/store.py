@@ -23,6 +23,12 @@ series.h:149-157). Spark-first re-expression:
 - ``optimize()`` = the background shard-rewrite job (optimize.c:33-55):
   rewrites small fragmented appends into one compact file per
   partition.
+- the series catalog (``_catalog/`` base + ``_catalog_delta/``
+  deltas) is read, folded and written with pyarrow on the driver,
+  through one fold (:func:`merge_stats`); Spark computes only the
+  per-point aggregate (``_batch_stats``) of a large batch or a
+  rebuild. Catalog size is bounded by driver memory, like the
+  engine's snapshot of it.
 
 At 100 TB: the same layout holds — sid partitions bound scan width,
 appends are per-micro-batch files, OPTIMIZE compacts, and retention
@@ -46,24 +52,11 @@ from ..model import POINTS_SCHEMA, TP_STRING
 #: target points per shard (ref src/siri/db/shard.c:36)
 OPTIMAL_POINTS_PER_SHARD = 2000
 
-#: hash buckets for the incrementally-maintained series catalog — an
-#: ingest batch rewrites only the buckets its series hash into, so the
-#: per-batch catalog cost is O(|catalog|/buckets × touched buckets)
-#: instead of a single-task full rewrite. This is the FLOOR: the
-#: bucket count auto-grows at compaction time (powers of two, never
-#: shrinks) so each bucket stays under TARGET_ROWS_PER_BUCKET rows —
-#: a 100M-series catalog ends up at 128 buckets without anyone tuning
-#: it. Pass PointsStore(catalog_buckets=...) to pin a fixed count.
-N_CATALOG_BUCKETS = 8
-
-#: auto-scale target: grow the bucket count once the average bucket
-#: would exceed this many catalog rows
-TARGET_ROWS_PER_BUCKET = 1_000_000
-
-#: appends whose landed parquet bytes fit under this compute their
-#: catalog delta with pyarrow on the driver — one fewer Spark job per
-#: micro-batch (the common streaming-ingest shape). Larger appends
-#: read the landed files back distributed.
+#: appends whose landed parquet bytes fit under this fold their
+#: catalog delta from the landed files with pyarrow on the driver —
+#: one fewer Spark job per micro-batch (the common streaming-ingest
+#: shape). Larger appends aggregate the landed files distributed
+#: (``_batch_stats``); both sides write the same delta file.
 ARROW_STATS_MAX_BYTES = 64 * 1024 * 1024
 
 #: driver-held row batches up to this size write through the pure
@@ -142,13 +135,13 @@ def _fold_stats_table(tbl) -> dict:
 
 def merge_stats(out: dict, stats) -> dict:
     """Fold ``(name, stats)`` pairs into the catalog-stats dict ``out``
-    in place and return it — THE driver-side catalog fold, shared by
-    the snapshot reload (:meth:`PointsStore.read_catalog_local`), the
-    memory engine, the engine's write-through of its own inserts and
-    the Arrow datasource writer's per-task partials. Exact and
-    associative like the Spark ``_fold``: lengths sum, start takes the
-    min, end and tp the max, and the first/last value blocks are the
-    argmin/argmax over (ts, seq) across partials."""
+    in place and return it — THE catalog fold, shared by the snapshot
+    reload (:meth:`PointsStore.read_catalog_local`), catalog
+    compaction, the memory engine, the engine's write-through of its
+    own inserts and the Arrow datasource writer's per-task partials.
+    Exact and associative: lengths sum, start takes the min, end and
+    tp the max, and the first/last value blocks are the argmin/argmax
+    over (ts, seq) across partials."""
     for name, row in stats:
         cur = out.get(name)
         if cur is None:
@@ -164,10 +157,17 @@ def merge_stats(out: dict, stats) -> dict:
     return out
 
 
+#: catalog file schema, columns in :func:`catalog_stats` order
+_CATALOG_SCHEMA = pa.schema([
+    ("name", pa.string()), ("length", pa.int64()),
+    ("start", pa.int64()), ("end", pa.int64()), ("tp", pa.int32()),
+    ("f_seq", pa.int64()), ("f_int", pa.int64()),
+    ("f_dbl", pa.float64()), ("f_str", pa.string()),
+    ("l_seq", pa.int64()), ("l_int", pa.int64()),
+    ("l_dbl", pa.float64()), ("l_str", pa.string())])
+
 #: catalog file columns, in :func:`catalog_stats` order
-CATALOG_COLS = ["name", "length", "start", "end", "tp",
-                "f_seq", "f_int", "f_dbl", "f_str",
-                "l_seq", "l_int", "l_dbl", "l_str"]
+CATALOG_COLS = _CATALOG_SCHEMA.names
 
 
 def catalog_stats(d: dict):
@@ -184,6 +184,30 @@ def catalog_stats(d: dict):
             for i, name in enumerate(d["name"]))
 
 
+def _catalog_table(folded: dict):
+    """The catalog-file table of a :func:`merge_stats` dict, one row
+    per name — the inverse of :func:`catalog_stats`."""
+    flat = [(n, *st[:4], *st[4], *st[5])
+            for n, st in sorted(folded.items())]
+    cols = list(zip(*flat)) or [()] * len(CATALOG_COLS)
+    return pa.Table.from_pydict(
+        {c: list(v) for c, v in zip(CATALOG_COLS, cols)},
+        schema=_CATALOG_SCHEMA)
+
+
+def _write_catalog_file(dirpath: str, prefix: str, table) -> str:
+    """Write ``table`` as ``<dirpath>/<prefix>-<uuid>.parquet`` under
+    a dot-prefixed name and rename it into place, so a concurrent
+    catalog reader never sees a partial file. Returns the path."""
+    os.makedirs(dirpath, exist_ok=True)
+    name = f"{prefix}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(dirpath, f".{name}")
+    pq.write_table(table, tmp)
+    dest = os.path.join(dirpath, name)
+    os.rename(tmp, dest)
+    return dest
+
+
 def point_stats(r) -> tuple:
     """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
     tuple), ready for :func:`merge_stats`."""
@@ -191,68 +215,17 @@ def point_stats(r) -> tuple:
     return r[0], (1, r[1], r[1], r[6], vals, vals)
 
 
-def write_arrow_delta(path: str, folded: dict, buckets: int) -> list:
-    """Append one catalog delta commit driver-side with pyarrow.
-
-    ``folded`` is ``{name: (length, start, end, tp,
-    (f_seq, f_int, f_dbl, f_str), (l_seq, l_int, l_dbl, l_str))}``.
-    Writes one file per touched bucket under the same Hive-style
-    ``bucket=N/`` layout as the engine's sharded Spark delta append —
-    a consistent layout is what lets one ``spark.read`` cover deltas
-    from both writers. All files of the commit share one uuid, so the
-    store's append counter sees a single append. Bucket values are
-    re-derived on fold, but use the store's persisted count so
-    pruning stays aligned after an auto-resize. Each file is written
-    under a dot-prefixed name and renamed into place, so a concurrent
-    catalog reader never sees a partial file. Returns the written
-    file paths."""
-    from .xxh import xxh64_signed
-
+def write_arrow_delta(path: str, folded: dict) -> list:
+    """Append one catalog delta commit: ``folded`` (a
+    :func:`merge_stats` dict) as one flat ``delta-<uuid>.parquet``
+    under ``<path>/_catalog_delta/``. Shared by every appender — the
+    engine's driver and Spark appends and the Arrow datasource
+    writer. Returns the written file paths (none for an empty
+    fold)."""
     if not folded:
         return []
-    by_bucket: dict = {}
-    for n in sorted(folded):
-        b = xxh64_signed(n.encode("utf-8")) % buckets
-        by_bucket.setdefault(b, []).append(n)
-    ddir = os.path.join(path, "_catalog_delta")
-    commit = uuid.uuid4().hex
-    written = []
-    for b, names in by_bucket.items():
-        delta = pa.table({
-            "name": pa.array(names, pa.string()),
-            "length": pa.array(
-                [folded[n][0] for n in names], pa.int64()),
-            "start": pa.array(
-                [folded[n][1] for n in names], pa.int64()),
-            "end": pa.array(
-                [folded[n][2] for n in names], pa.int64()),
-            "tp": pa.array(
-                [folded[n][3] for n in names], pa.int32()),
-            "f_seq": pa.array(
-                [folded[n][4][0] for n in names], pa.int64()),
-            "f_int": pa.array(
-                [folded[n][4][1] for n in names], pa.int64()),
-            "f_dbl": pa.array(
-                [folded[n][4][2] for n in names], pa.float64()),
-            "f_str": pa.array(
-                [folded[n][4][3] for n in names], pa.string()),
-            "l_seq": pa.array(
-                [folded[n][5][0] for n in names], pa.int64()),
-            "l_int": pa.array(
-                [folded[n][5][1] for n in names], pa.int64()),
-            "l_dbl": pa.array(
-                [folded[n][5][2] for n in names], pa.float64()),
-            "l_str": pa.array(
-                [folded[n][5][3] for n in names], pa.string()),
-        })
-        bdir = os.path.join(ddir, f"bucket={b}")
-        os.makedirs(bdir, exist_ok=True)
-        dest = os.path.join(bdir, f"delta-{commit}.parquet")
-        tmp = os.path.join(bdir, f".delta-{commit}.parquet")
-        pq.write_table(delta, tmp)
-        os.rename(tmp, dest)
-        written.append(dest)
-    return written
+    return [_write_catalog_file(os.path.join(path, "_catalog_delta"),
+                                "delta", _catalog_table(folded))]
 
 
 #: ref src/siri/db/points.c:18
@@ -301,16 +274,10 @@ def duration_from_interval(interval: int, factor: int,
 
 
 class PointsStore:
-    def __init__(self, path: str, duration_num: int, duration_log: int,
-                 catalog_buckets: int | None = None):
+    def __init__(self, path: str, duration_num: int, duration_log: int):
         self.path = path
         self.duration_num = duration_num
         self.duration_log = duration_log
-        #: explicit override pins the count; None = auto-scale from
-        #: the observed catalog size at compaction time
-        self._buckets_fixed = catalog_buckets
-# class-level: see _process_active below (shared across every store
-# instance AND the Arrow datasource writer in this process)
 
     # ------------------------------------------------------------- write
     def _with_partitions(self, df: DataFrame) -> DataFrame:
@@ -328,7 +295,7 @@ class PointsStore:
         # pending marker is set BEFORE points land and cleared only
         # AFTER the catalog swap. An interrupt anywhere between
         # (killed micro-batch, process crash) leaves the marker, and
-        # the next read_catalog() sees it and rebuilds — the catalog
+        # the next repair_catalog() sees it and rebuilds — the catalog
         # can lag but can never silently under-count. (On Delta the
         # same guarantee comes from writing both in one transaction.)
         spark = df.sparkSession
@@ -372,13 +339,21 @@ class PointsStore:
                 # the read-back is a pruned scan of what it produced.
                 # Small appends (streaming micro-batches) fold the
                 # stats driver-side with pyarrow — no second Spark
-                # job at all; big ones read back distributed.
-                if not self._merge_catalog_arrow(spark, landed):
-                    stats_src = (spark.read
-                                 .option("basePath", self.path)
-                                 .parquet(*landed))
-                    self._merge_catalog(spark,
-                                        self._batch_stats(stats_src))
+                # job at all; big ones aggregate distributed. Either
+                # way the result is one delta file.
+                if sum(os.path.getsize(f) for f in landed) \
+                        > ARROW_STATS_MAX_BYTES:
+                    agg = self._batch_stats(
+                        spark.read.option("basePath", self.path)
+                        .parquet(*landed)).toArrow()
+                    folded = dict(catalog_stats(agg.to_pydict()))
+                else:
+                    folded = _fold_stats_table(pa.concat_tables(
+                        pq.read_table(f, columns=_STATS_COLS)
+                        for f in landed))
+                write_arrow_delta(self.path, folded)
+                if self._n_delta_appends() > self.DELTA_COMPACT_AT:
+                    self._compact_catalog(spark)
         if not os.path.exists(self._durations_path):
             # the durations define the sid layout; persist them with
             # the first data so every later opener agrees
@@ -441,21 +416,18 @@ class PointsStore:
             e.startswith("kind=") for e in os.listdir(self.path))
 
     # ------------------------------------------------------------ catalog
-    # Incrementally-maintained series catalog: (name, length, start,
-    # end, tp) merged per ingest batch. The reference keeps the same
-    # stats live on each series struct (series.h:54-72, updated on
-    # every insert); a derived groupBy over the points table would be
-    # a full 100 TB scan per `list series`/skip-points query, while
-    # this merge costs O(|catalog| + |batch|) per batch. The side
-    # table lives under `_catalog` — Spark's scan ignores
-    # underscore-prefixed paths, so it's invisible to points reads.
+    # Incrementally-maintained series catalog: per-series length,
+    # start, end, tp and typed first/last values, merged per ingest
+    # batch. The reference keeps the same stats live on each series
+    # struct (series.h:54-72, updated on every insert); a derived
+    # groupBy over the points table would be a full 100 TB scan per
+    # `list series`/skip-points query, while this merge costs
+    # O(|batch|) per batch. The side table lives under `_catalog` —
+    # Spark's scan ignores underscore-prefixed paths, so it's
+    # invisible to points reads.
     @property
     def _catalog_path(self) -> str:
         return os.path.join(self.path, "_catalog")
-
-    @property
-    def _catalog_meta_path(self) -> str:
-        return os.path.join(self.path, "_catalog.meta.json")
 
     # Shard durations are PART OF THE LAYOUT (sid = ts - ts % dur):
     # reopening a store with different durations would silently split
@@ -484,38 +456,6 @@ class PointsStore:
             return int(d["duration_num"]), int(d["duration_log"])
         except (OSError, ValueError, KeyError):
             return None
-
-    @property
-    def catalog_buckets(self) -> int:
-        """Active bucket count: the explicit override if pinned, else
-        the persisted auto-scaled count (so every appender process
-        agrees), else the floor default."""
-        if self._buckets_fixed is not None:
-            return self._buckets_fixed
-        try:
-            import json
-            with open(self._catalog_meta_path) as fh:
-                return int(json.load(fh)["buckets"])
-        except (OSError, ValueError, KeyError):
-            return N_CATALOG_BUCKETS
-
-    def _persist_buckets(self, n: int):
-        import json
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"{self._catalog_meta_path}.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"buckets": int(n)}, fh)
-        os.replace(tmp, self._catalog_meta_path)
-
-    @staticmethod
-    def _auto_buckets(n_rows: int) -> int:
-        """Power-of-two bucket count keeping the average bucket under
-        TARGET_ROWS_PER_BUCKET rows, floored at N_CATALOG_BUCKETS."""
-        b = N_CATALOG_BUCKETS
-        while n_rows > b * TARGET_ROWS_PER_BUCKET:
-            b *= 2
-        return b
 
     # Pending markers are PER-APPENDER (uuid-named, pid-stamped): a
     # shared single marker would let appender A's clear remove
@@ -553,7 +493,7 @@ class PointsStore:
     def _pending(self):
         """Pending-marker scope: cleared on success; on an exception
         the token is ABANDONED (dropped from the active set but left
-        on disk) so it reads as stale and the next read_catalog()
+        on disk) so it reads as stale and the next repair_catalog()
         repairs — without this, a failed append in a long-lived
         process would pin a 'live' marker over an under-counted
         catalog forever."""
@@ -626,21 +566,16 @@ class PointsStore:
                     "_f.f_seq", "_f.f_int", "_f.f_dbl", "_f.f_str",
                     "_l.l_seq", "_l.l_int", "_l.l_dbl", "_l.l_str"))
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        if "bucket" in df.columns:
-            return df
-        return df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("name"), F.lit(self.catalog_buckets))
-            .cast("int"))
-
     # The catalog is LSM-shaped: an ingest batch APPENDS one small
     # delta file — O(batch) work, no read-merge of the base — reads
     # fold base ∪ deltas (associative: sum/min/max), and once deltas
-    # pile up a compaction folds them into only the bucket partitions
-    # they touch. This is the reference's split between live in-memory
-    # series stats and the periodically-flushed database file
-    # (series.h:54-72 / db.c), re-expressed for a distributed FS.
+    # pile up a compaction folds them into one new base file. This is
+    # the reference's split between live in-memory series stats and
+    # the periodically-flushed database file (series.h:54-72 / db.c).
+    # Every fold is :func:`merge_stats` over pyarrow reads on the
+    # driver. Stores written before the flat layout keep their files
+    # under ``bucket=N/`` subdirectories; the listing walks them and
+    # their first compaction rewrites them flat.
     @property
     def _delta_path(self) -> str:
         return os.path.join(self.path, "_catalog_delta")
@@ -649,67 +584,8 @@ class PointsStore:
     DELTA_COMPACT_AT = 16
 
     def _n_delta_appends(self) -> int:
-        """Number of APPENDS (not files) in the delta dir: every file
-        of one Spark write job shares the job's UUID in its
-        ``part-NNNNN-<uuid>[...].parquet`` name, so distinct UUIDs
-        count commits; the Arrow datasource writer's single-file
-        ``delta-<uuid>.parquet`` appends count one each. Counting raw
-        files would trip the compaction threshold after one
-        multi-bucket append."""
-        if not os.path.isdir(self._delta_path):
-            return 0
-        jobs = set()
-        for root, dirs, files in os.walk(self._delta_path):
-            # skip in-flight/crashed append stages (dot-prefixed)
-            dirs[:] = [d for d in dirs if not d.startswith(".")]
-            for f in files:
-                if not f.endswith(".parquet") or f.startswith("."):
-                    continue
-                jobs.add(f.split("-", 2)[-1] if f.startswith("part-")
-                         else f)
-        return len(jobs)
-
-    def _merge_catalog(self, spark: SparkSession, stats: DataFrame):
-        # the appender holds the pending marker, so a crash anywhere
-        # here (or mid-compaction) triggers the one-time rebuild.
-        # The delta is sharded by the catalog's bucket column — an
-        # append touching 10⁷ series fans out across buckets instead
-        # of funneling through one task (the r4 coalesce(1)), and
-        # reads/compaction prune to touched bucket dirs. The
-        # repartition puts each bucket in one task → one file per
-        # touched bucket per append; stage+rename keeps concurrent
-        # appenders from sharing a committer _temporary dir.
-        self._append_via_stage(
-            self._with_bucket(stats).repartition("bucket"),
-            self._delta_path, ["bucket"])
-        if self._n_delta_appends() > self.DELTA_COMPACT_AT:
-            self._compact_catalog(spark)
-
-    def _merge_catalog_arrow(self, spark: SparkSession,
-                             landed: list) -> bool:
-        """Driver-side catalog delta for a SMALL append: fold the
-        just-landed parquet files with pyarrow/pandas and write the
-        delta commit directly (same layout the Spark path produces).
-        Returns False — caller falls back to the distributed path —
-        when the landed bytes exceed ARROW_STATS_MAX_BYTES. This is
-        exactly the Arrow datasource writer's commit shape
-        (datasource.py), so a streaming micro-batch costs ONE Spark
-        job (the points write), not two."""
-        try:
-            total = sum(os.path.getsize(f) for f in landed)
-        except OSError:
-            return False
-        if total > ARROW_STATS_MAX_BYTES:
-            return False
-        # integer_object_nulls downstream: null int64 must stay exact
-        # Python ints/None, not lossy float64-with-NaN
-        tbl = pa.concat_tables(
-            pq.read_table(f, columns=_STATS_COLS) for f in landed)
-        write_arrow_delta(self.path, _fold_stats_table(tbl),
-                          self.catalog_buckets)
-        if self._n_delta_appends() > self.DELTA_COMPACT_AT:
-            self._compact_catalog(spark)
-        return True
+        """Number of delta files — one per append commit."""
+        return len(self._delta_files())
 
     def append_local(self, spark: SparkSession, rows: list):
         """Driver-local ingest: write the rows straight to their
@@ -767,7 +643,7 @@ class PointsStore:
                 out["stats"] = _fold_stats_table(
                     pa.concat_tables(tables))
                 out["delta"] = frozenset(write_arrow_delta(
-                    self.path, out["stats"], self.catalog_buckets))
+                    self.path, out["stats"]))
                 if self._n_delta_appends() > self.DELTA_COMPACT_AT:
                     out["compaction"] = self._compact_catalog(spark)
         if not os.path.exists(self._durations_path):
@@ -833,9 +709,9 @@ class PointsStore:
     def catalog_files(self) -> frozenset | None:
         """The base and delta files the catalog consists of right now
         — the key a driver snapshot is valid for. None when a crashed
-        append left a stale pending marker: the catalog then needs the
-        Spark-path repair (:meth:`read_catalog`) before any driver
-        fold of it can be trusted."""
+        append left a stale pending marker: the catalog then needs
+        :meth:`repair_catalog` before any driver fold of it can be
+        trusted."""
         if self._stale_markers():
             return None
         return frozenset(self._base_files() + self._delta_files())
@@ -866,125 +742,43 @@ class PointsStore:
             files = self._delta_files()
             if not files:
                 return None
-            folded_from = frozenset(self._base_files() + files)
-            delta = (spark.read.option("basePath", self._delta_path)
-                     .parquet(*files))
-            base = (spark.read.parquet(self._catalog_path)
-                    if os.path.isdir(self._catalog_path) else None)
-            if base is None:
-                folded = self._fold(delta)
-                if self._buckets_fixed is None:
-                    want = self._auto_buckets(folded.count())
-                    if want != self.catalog_buckets:
-                        self._persist_buckets(want)
-                        folded = self._fold(delta)  # re-derive
-                self._write_catalog(folded, full=True)
-            elif (self._buckets_fixed is None
-                  and self._auto_buckets(base.count())
-                  != self.catalog_buckets):
-                # catalog outgrew its bucket layout: grow the count
-                # (inside the compaction lock) and rewrite the whole
-                # catalog under the new numbering in one pass
-                self._persist_buckets(self._auto_buckets(base.count()))
-                self._write_catalog(
-                    self._fold(base.unionByName(
-                        delta.select(*base.columns))),
-                    full=True)
-            else:
-                # fold deltas into ONLY the bucket partitions touched
-                # (bucket sets re-derived from names — on-disk bucket
-                # values may predate an auto-resize)
-                base = self._with_bucket(base.drop("bucket"))
-                dtouch = (self._with_bucket(delta.drop("bucket"))
-                          .select("bucket").distinct())
-                touched = base.join(dtouch, "bucket", "semi")
-                self._write_catalog(
-                    self._fold(touched.unionByName(
-                        self._with_bucket(delta.drop("bucket")))),
-                    full=False)
+            base = self._base_files()
+            folded = self._fold_files(base + files)
+            if folded is None:
+                return None  # a racing rewrite removed a listed file
+            self._write_base(_catalog_table(folded))
             for f in files:
-                try:
+                with contextlib.suppress(FileNotFoundError):
                     os.remove(f)
-                except FileNotFoundError:
-                    pass
-            # sweep now-empty bucket dirs (ignore non-empty: a
-            # concurrent append may have added files)
-            if os.path.isdir(self._delta_path):
-                for entry in os.listdir(self._delta_path):
-                    p = os.path.join(self._delta_path, entry)
-                    if os.path.isdir(p):
-                        try:
-                            os.rmdir(p)
-                        except OSError:
-                            pass
-                try:
-                    os.rmdir(self._delta_path)
-                except OSError:
-                    pass
+            # sweep the delta dir and a pre-flat layout's bucket=N/
+            # dirs once empty (a concurrent append's file keeps its dir)
+            for d in sorted({os.path.dirname(f) for f in files}
+                            | {self._delta_path}, key=len, reverse=True):
+                with contextlib.suppress(OSError):
+                    os.rmdir(d)
             if self._delta_files():
                 return None  # a concurrent append's delta landed
-            return folded_from, frozenset(self._base_files())
+            return (frozenset(base + files),
+                    frozenset(self._base_files()))
         finally:
             self._release_compact_lock()
 
-    def _fold(self, stats: DataFrame) -> DataFrame:
-        # bucket is ALWAYS re-derived from the name at the current
-        # count (never trusted from disk): grouping by an on-disk
-        # bucket would split one series into two rows whenever base
-        # and delta files were written under different bucket counts
-        # (auto-resize window). The first/last value blocks combine
-        # by argmin/argmax over (ts, seq) across partials — exact
-        # and associative, like the numeric folds.
-        first = F.min_by(
-            F.struct("f_seq", "f_int", "f_dbl", "f_str"),
-            F.struct("start", "f_seq"))
-        last = F.max_by(
-            F.struct("l_seq", "l_int", "l_dbl", "l_str"),
-            F.struct("end", "l_seq"))
-        folded = (stats.drop("bucket").groupBy("name").agg(
-            F.sum("length").alias("length"),
-            F.min("start").alias("start"),
-            F.max("end").alias("end"),
-            F.max("tp").alias("tp"),
-            first.alias("_f"), last.alias("_l"))
-            .select("name", "length", "start", "end", "tp",
-                    "_f.f_seq", "_f.f_int", "_f.f_dbl", "_f.f_str",
-                    "_l.l_seq", "_l.l_int", "_l.l_dbl", "_l.l_str"))
-        return self._with_bucket(folded)
-
-    def _write_catalog(self, stats: DataFrame, full: bool = True):
-        """Bucket-partitioned catalog write. ``full=False`` replaces
-        only the bucket partitions present in ``stats``. Both paths
-        stage to a sibling underscore dir first (the input may read
-        from the live catalog, and Spark refuses to overwrite a path
-        it is reading); crash-consistency comes from the caller's
-        pending marker, not from write atomicity. (On Delta this whole
-        dance is one MERGE.)"""
-        if "bucket" not in stats.columns:
-            stats = self._with_bucket(stats)
-        # uuid'd staging dir: a fixed name would collide between
-        # concurrent compactions/rebuilds
-        stage = f"{self._catalog_path}.stage-{uuid.uuid4().hex}"
-        # no explicit repartition: the _fold upstream already
-        # shuffled on (name, bucket) and AQE coalesces its output, so
-        # a tiny catalog writes from 1-2 tasks (few files per bucket
-        # dir) while a 100M-series one fans out across tasks
-        (stats.write.mode("overwrite")
-         .partitionBy("bucket")
-         .parquet(stage))
-        if full:
-            if os.path.isdir(self._catalog_path):
-                shutil.rmtree(self._catalog_path)
-            os.rename(stage, self._catalog_path)
-            return
-        for entry in os.listdir(stage):
-            if not entry.startswith("bucket="):
+    def _write_base(self, table):
+        """Replace the base catalog with ``table``: write it as one
+        new ``base-<uuid>.parquet`` (dot-temp + rename), then remove
+        every other entry under ``_catalog/`` — older base files and a
+        pre-flat layout's ``bucket=N/`` dirs. Base writers are
+        serialized (compaction lock) or run on a quiesced store;
+        crash consistency comes from the caller's pending marker."""
+        keep = _write_catalog_file(self._catalog_path, "base", table)
+        for entry in os.listdir(self._catalog_path):
+            p = os.path.join(self._catalog_path, entry)
+            if p == keep:
                 continue
-            target = os.path.join(self._catalog_path, entry)
-            if os.path.isdir(target):
-                shutil.rmtree(target)
-            os.rename(os.path.join(stage, entry), target)
-        shutil.rmtree(stage, ignore_errors=True)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
     # --------------------------------------------- crash-safe rewrites
     # Shard rewrites (delete_series/optimize) stage the new partition
@@ -1035,20 +829,6 @@ class PointsStore:
         shutil.rmtree(target)
         os.rename(tmp, target)
 
-    def _read_catalog_raw(self, spark: SparkSession) -> DataFrame | None:
-        has_base = os.path.isdir(self._catalog_path)
-        has_delta = self._n_delta_appends() > 0
-        if not has_base and not has_delta:
-            return None
-        if not has_delta:
-            return spark.read.parquet(self._catalog_path)
-        delta = self._with_bucket(spark.read.parquet(self._delta_path))
-        if not has_base:
-            return self._fold(delta)
-        base = self._with_bucket(spark.read.parquet(self._catalog_path))
-        return self._fold(base.unionByName(
-            delta.select(*base.columns)))
-
     def _legacy_catalog(self) -> bool:
         """True when any catalog/delta file predates the r6 layout
         (no first/last value columns) — one-time migration via
@@ -1071,14 +851,21 @@ class PointsStore:
         engine's only catalog for ``query()`` (the reference answers
         list/count/skip-points selects from in-memory series structs;
         Spark's job floor is ~0.2 s). Returns None when a crashed
-        append needs :meth:`read_catalog`'s repair first (stale
-        pending marker), when a pre-r6 legacy file lacks the value
-        columns (:meth:`read_catalog` migrates it), or when a racing
+        append needs :meth:`repair_catalog` first (stale pending
+        marker), when a pre-r6 legacy file lacks the value columns
+        (:meth:`repair_catalog` migrates it), or when a racing
         compaction removed a listed file (list again)."""
         if files is None:
             files = self.catalog_files()
             if files is None:
                 return None
+        return self._fold_files(files)
+
+    @staticmethod
+    def _fold_files(files) -> dict | None:
+        """:func:`merge_stats` fold of the catalog parquet ``files``,
+        read with pyarrow. None when a file predates the r6 layout or
+        a racing compaction removed it."""
         out: dict = {}
         for f in files:
             try:
@@ -1087,7 +874,7 @@ class PointsStore:
                 return None  # racing compaction removed the file
             with pf:
                 if "f_seq" not in pf.schema_arrow.names:
-                    return None  # legacy layout: read_catalog migrates
+                    return None  # legacy layout: repair_catalog migrates
                 d = pf.read(columns=CATALOG_COLS).to_pydict()
             merge_stats(out, catalog_stats(d))
         return out
@@ -1134,7 +921,10 @@ class PointsStore:
                             "start": mn, "end": mx})
         return out
 
-    def read_catalog(self, spark: SparkSession) -> DataFrame | None:
+    def repair_catalog(self, spark: SparkSession):
+        """Make the catalog files trustworthy for a driver fold: the
+        one-time rebuild after a crashed append (stale pending marker)
+        or of a pre-r6 legacy layout. A no-op otherwise."""
         stale = self._stale_markers()
         if stale:
             # an append CRASHED between points and catalog (its
@@ -1147,21 +937,20 @@ class PointsStore:
                 self._clear_pending(m)
         elif self._legacy_catalog():
             self.rebuild_catalog(spark)  # one-time r6 migration
-        return self._read_catalog_raw(spark)
 
     def rebuild_catalog(self, spark: SparkSession):
         """Full recompute — the rare maintenance path (after expire,
-        which changes per-series start/length at shard granularity).
-        Supersedes any pending deltas, so they are cleared. Assumes a
-        quiesced store (no concurrent appenders), like the
+        which changes per-series start/length at shard granularity):
+        the distributed per-series aggregate of the points, written as
+        the base. Supersedes any pending deltas, so they are cleared.
+        Assumes a quiesced store (no concurrent appenders), like the
         reference's optimize/backup passes."""
         shutil.rmtree(self._delta_path, ignore_errors=True)
         if not self._exists():
-            if os.path.isdir(self._catalog_path):
-                shutil.rmtree(self._catalog_path)
+            shutil.rmtree(self._catalog_path, ignore_errors=True)
             return
-        self._write_catalog(
-            self._batch_stats(spark.read.parquet(self.path)))
+        self._write_base(
+            self._batch_stats(spark.read.parquet(self.path)).toArrow())
 
     # ------------------------------------------------------- maintenance
     def _sid_dirs(self):
@@ -1185,7 +974,7 @@ class PointsStore:
         if not doomed:
             return False
         # pending marker: a crash mid-loop leaves the catalog stale,
-        # and the next read_catalog() rebuilds it from the points
+        # and the next repair_catalog() rebuilds it from the points
         with self._pending():
             for p in doomed:
                 shutil.rmtree(p)
@@ -1206,7 +995,12 @@ class PointsStore:
             .select("kind", "sid").distinct().collect()}
         if not hit_sids:
             return
-        cat = self.read_catalog(spark)
+        self.repair_catalog(spark)
+        cat = self._fold_files(self._base_files() + self._delta_files())
+        if cat is None:
+            raise RuntimeError(
+                "drop series: a catalog file was removed while it was "
+                "read (concurrent compaction); retry")
         with self._pending():
             for kind, sid, p in list(self._sid_dirs()):
                 if (kind, sid) not in hit_sids:
@@ -1218,13 +1012,12 @@ class PointsStore:
                     .option("compression", "zstd").parquet(tmp)
                 self._swap_partition(tmp, p)
             shutil.rmtree(self._rewrite_root, ignore_errors=True)
-            if cat is not None:
-                # cat is the FOLDED base ∪ deltas view; writing it as
-                # the new full base supersedes the delta files
-                self._write_catalog(
-                    cat.where(~F.col("name").isin(names)))
-                shutil.rmtree(self._delta_path, ignore_errors=True)
-
+            # cat is the folded base ∪ deltas; writing it as the new
+            # base supersedes the delta files
+            dropped = set(names)
+            self._write_base(_catalog_table(
+                {n: st for n, st in cat.items() if n not in dropped}))
+            shutil.rmtree(self._delta_path, ignore_errors=True)
 
     # ---------------------------------------------------------- rollup
     @property
@@ -1479,9 +1272,7 @@ class PointsStore:
 
     @classmethod
     def restore(cls, snapshot_path: str, dest: str,
-                duration_num: int, duration_log: int,
-                catalog_buckets: int | None = None
-                ) -> "PointsStore":
+                duration_num: int, duration_log: int) -> "PointsStore":
         """Materialize a snapshot as a live store at ``dest`` and
         open it. The copy is verbatim; the store's own crash-repair
         (pending-marker rebuild) covers a snapshot taken from an
@@ -1489,7 +1280,7 @@ class PointsStore:
         if os.path.exists(dest):
             raise FileExistsError(dest)
         shutil.copytree(snapshot_path, dest)
-        return cls(dest, duration_num, duration_log, catalog_buckets)
+        return cls(dest, duration_num, duration_log)
 
 
 # ---------------------------------------------------------------------

@@ -19,6 +19,13 @@ from siridb_server_spark.sources.datasource import (
 from siridb_server_spark.sources.store import PointsStore
 
 
+def _catalog(store, spark):
+    """The store's catalog as ``{name: stats}``, after its one-time
+    crash/legacy repair, folded on the driver."""
+    store.repair_catalog(spark)
+    return store.read_catalog_local()
+
+
 @pytest.fixture()
 def store(spark, tmp_path):
     st = PointsStore(str(tmp_path / "db"), 1000, 1000)
@@ -183,8 +190,7 @@ def test_write_roundtrip_and_catalog_delta(spark, tmp_path):
     assert spark.read.format("siridb").load(path).count() == len(rows)
     st = PointsStore(path, 1000, 1000)
     assert st.read(spark).count() == len(rows)
-    cat = {r["name"]: (r["length"], r["start"], r["end"])
-           for r in st.read_catalog(spark).collect()}
+    cat = {n: st_[:3] for n, st_ in _catalog(st, spark).items()}
     assert cat["s0"] == (239, 0, 4998)
     # staging and pending marker are gone after commit
     import os
@@ -194,21 +200,10 @@ def test_write_roundtrip_and_catalog_delta(spark, tmp_path):
 
 def test_write_catalog_bucket_matches_spark_through_compaction(
         spark, tmp_path):
-    """The writer computes catalog buckets with the pure-Python
-    xxh64; a store-side compaction folds base ∪ deltas grouped by
-    (name, bucket) — a bucket mismatch would leave duplicate rows
-    per name. Also pin xxh64 against Spark's xxhash64 directly."""
-    from pyspark.sql import functions as SF
-
+    """A series written by both the engine's driver append and the
+    sink folds to ONE catalog row through a store-side compaction
+    (both writers emit the same delta file)."""
     from siridb_server_spark.model import POINTS_SCHEMA
-    from siridb_server_spark.sources.xxh import xxh64_signed
-
-    names = ["", "a", "cpu|123", "x" * 7, "y" * 8, "z" * 31,
-             "w" * 32, "q" * 100, "héllo wörld" * 5]
-    got = spark.createDataFrame([(n,) for n in names], ["n"]) \
-        .select(SF.xxhash64("n").alias("h"), "n").collect()
-    for r in got:
-        assert xxh64_signed(r["n"].encode("utf-8")) == r["h"], r["n"]
 
     register(spark)
     path = str(tmp_path / "db")
@@ -217,10 +212,8 @@ def test_write_catalog_bucket_matches_spark_through_compaction(
     _write(spark.createDataFrame(
         [("cpu|1", 2000, 1, 7, None, None, 0)], POINTS_SCHEMA), path)
     st._compact_catalog(spark)
-    rows = st.read_catalog(spark).where("name = 'cpu|1'").collect()
-    assert len(rows) == 1
-    assert (rows[0]["length"], rows[0]["start"], rows[0]["end"]) \
-        == (2, 10, 2000)
+    assert st._n_delta_appends() == 0
+    assert _catalog(st, spark)["cpu|1"][:3] == (2, 10, 2000)
 
 
 def test_write_splits_kinds_by_type(spark, tmp_path):
@@ -293,8 +286,7 @@ def test_stream_write_appends_per_microbatch(spark, tmp_path):
         q.stop()
     assert spark.read.format("siridb").load(db).count() == 11
     st = PointsStore(db, 1000, 1000)
-    cat = {r["name"]: r["length"]
-           for r in st.read_catalog(spark).collect()}
+    cat = {n: st_[0] for n, st_ in _catalog(st, spark).items()}
     assert cat == {"s0": 6, "s1": 5}
 
 
@@ -322,8 +314,8 @@ def test_stream_write_replayed_batch_is_noop(spark, tmp_path):
     w.commit([msg2], 0)
     assert spark.read.format("siridb").load(db).count() == 1
     st = PointsStore(db, 1000, 1000)
-    assert {r["name"]: r["length"]
-            for r in st.read_catalog(spark).collect()} == {"a": 1}
+    assert {n: st_[0]
+            for n, st_ in _catalog(st, spark).items()} == {"a": 1}
 
 
 def test_store_to_store_replication_pipeline(spark, tmp_path):
@@ -360,8 +352,7 @@ def test_store_to_store_replication_pipeline(spark, tmp_path):
     finally:
         q.stop()
     rep = PointsStore(replica, 1000, 1000)
-    cat = {r["name"]: r["length"]
-           for r in rep.read_catalog(spark).collect()}
+    cat = {n: st_[0] for n, st_ in _catalog(rep, spark).items()}
     assert cat == {"a": 2, "b": 1}
 
 

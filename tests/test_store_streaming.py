@@ -12,9 +12,17 @@ from siridb_server_spark import SiriEngine
 from siridb_server_spark.sources.store import (
     OPTIMAL_POINTS_PER_SHARD,
     PointsStore,
+    _catalog_table,
     duration_from_interval,
 )
 from siridb_server_spark.streaming import ingest as ING
+
+
+def _catalog(store, spark):
+    """The store's catalog as ``{name: stats}``, after its one-time
+    crash/legacy repair, folded on the driver."""
+    store.repair_catalog(spark)
+    return store.read_catalog_local()
 
 
 def test_duration_from_interval():
@@ -152,39 +160,34 @@ def test_incremental_catalog_maintenance(spark, tmp_path):
     eng = SiriEngine.open(spark, str(tmp_path / "cdb"), precision="s")
     eng.insert({"a": [[100, 1], [200, 2]], "b": [[150, 1.5]]})
     eng.insert({"a": [[300, 3]]})
-    cat = {r["name"]: (r["length"], r["start"], r["end"])
-           for r in eng.store.read_catalog(spark).collect()}
+    cat = {n: st[:3] for n, st in _catalog(eng.store, spark).items()}
     assert cat == {"a": (3, 100, 300), "b": (1, 150, 150)}
     # skip-points count() answered from the maintained catalog
     assert eng.query("select count() from 'a'") == {"a": [[300, 3]]}
     # drop series → anti-joined out of the catalog
     eng.query('drop series "b" set ignore_threshold true')
-    names = [r["name"] for r in eng.store.read_catalog(spark).collect()]
+    names = list(_catalog(eng.store, spark))
     assert names == ["a"]
     # make the catalog stale (as if an append wrote points but died
     # before the catalog merge): under-counted length for 'a'
     import os
-    stale = spark.createDataFrame(
-        [("a", 1, 100, 100, 0, 0, 1, None, None, 0, 1, None, None)],
-        "name string, length long, start long, end long, tp int,"
-        " f_seq long, f_int long, f_dbl double, f_str string,"
-        " l_seq long, l_int long, l_dbl double, l_str string")
-    eng.store._write_catalog(stale)
+    eng.store._write_base(_catalog_table(
+        {"a": (1, 100, 100, 0, (0, 1, None, None), (0, 1, None, None))}))
     # a LIVE marker (in-flight append, this process) must NOT trigger
     # a rebuild — the appender's delta lands when it finishes
     tok = eng.store._set_pending()
-    live_view = {r["name"]: r["length"]
-                 for r in eng.store.read_catalog(spark).collect()}
+    live_view = {n: st[0]
+                 for n, st in _catalog(eng.store, spark).items()}
     assert live_view == {"a": 1}  # stale catalog returned as-is
     eng.store._clear_pending(tok)
     # a marker whose writing process is GONE is a crash signal:
-    # read_catalog() rebuilds from the points and clears it
+    # repair_catalog() rebuilds from the points and clears it
     dead = os.path.join(eng.store.path,
                         eng.store._PENDING_PREFIX + "deadbeef")
     with open(dead, "w") as fh:
         fh.write("3999999")  # beyond pid_max: no such process
-    repaired = {r["name"]: r["length"]
-                for r in eng.store.read_catalog(spark).collect()}
+    repaired = {n: st[0]
+                for n, st in _catalog(eng.store, spark).items()}
     assert repaired == {"a": 3}
     assert not os.path.exists(dead)
     assert eng.store._pending_markers() == []
@@ -235,8 +238,8 @@ def test_stateful_streaming_dedup_and_stats(spark, tmp_path):
 
 def test_concurrent_appends_write_disjoint_deltas(spark, tmp_path):
     """Two appenders racing on one store must not clobber each
-    other: delta appends are pure file additions (bucket-sharded,
-    job-uuid-named), so both batches' points AND catalog stats
+    other: delta appends are pure file additions (one uuid-named
+    file per commit), so both batches' points AND catalog stats
     survive a concurrent write."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -251,8 +254,7 @@ def test_concurrent_appends_write_disjoint_deltas(spark, tmp_path):
         futs = [ex.submit(append, 0), ex.submit(append, 1000)]
         for f in futs:
             f.result()
-    cat = {r["name"]: r["length"]
-           for r in eng.store.read_catalog(spark).collect()}
+    cat = {n: st[0] for n, st in _catalog(eng.store, spark).items()}
     assert len(cat) == 40 and all(v == 1 for v in cat.values())
     assert eng.store.read(spark).count() == 40
     # both append commits visible in the delta dir
@@ -260,22 +262,16 @@ def test_concurrent_appends_write_disjoint_deltas(spark, tmp_path):
 
 
 def test_catalog_lsm_deltas_and_bucketed_compaction(spark, tmp_path):
-    """The catalog is LSM-shaped for the 100 TB ingest path: an
-    append writes an O(batch) delta sharded by catalog bucket (no
-    read-merge of the base, no single-task funnel), reads fold
-    base ∪ deltas, and compaction rewrites only the bucket
-    partitions the deltas touch."""
+    """The catalog is LSM-shaped for the ingest path: an append
+    writes one O(batch) delta file (no read-merge of the base),
+    reads fold base ∪ deltas, and compaction folds them into one
+    flat base file and leaves no deltas."""
     eng = SiriEngine.open(spark, str(tmp_path / "bdb"), precision="s")
     store = eng.store
     eng.insert({f"s{i}": [[100 + i, float(i)]] for i in range(40)})
     # the append produced a delta, not a base rewrite
     assert store._n_delta_appends() == 1
     assert not os.path.isdir(store._catalog_path)
-    # the delta is bucket-partitioned: a wide append fans out across
-    # bucket dirs instead of one coalesce(1) task (VERDICT r4 #3)
-    dbuckets = [e for e in os.listdir(store._delta_path)
-                if e.startswith("bucket=")]
-    assert len(dbuckets) > 1
 
     def delta_files():
         return {os.path.join(r, f)
@@ -292,32 +288,23 @@ def test_catalog_lsm_deltas_and_bucketed_compaction(spark, tmp_path):
     assert first < second and all(
         os.path.exists(f) for f in first)
     # folded read is correct before any compaction
-    cat = {r["name"]: r["length"]
-           for r in store.read_catalog(spark).collect()}
+    cat = {n: st[0] for n, st in _catalog(store, spark).items()}
     assert cat["s0"] == 2 and len(cat) == 40
-    # compaction: deltas fold into hash-bucketed base partitions
+
+    def base_files():
+        return sorted(os.listdir(store._catalog_path))
+
+    # compaction: the deltas fold into one flat base file
     store._compact_catalog(spark)
     assert store._n_delta_appends() == 0
-    buckets = sorted(e for e in os.listdir(store._catalog_path)
-                     if e.startswith("bucket="))
-    assert len(buckets) > 1  # sharded, not one blob
-    before = {b: sorted(os.listdir(os.path.join(store._catalog_path,
-                                                b))) for b in buckets}
-    # a narrow batch + compaction rewrites ONLY its series' bucket
+    before = base_files()
+    assert len(before) == 1 and before[0].startswith("base-")
     eng.insert({"s0": [[1500, 8.0]]})
     store._compact_catalog(spark)
-    hit = store._with_bucket(
-        spark.createDataFrame([("s0",)], "name string"))\
-        .collect()[0]["bucket"]
-    changed = []
-    for b in sorted(e for e in os.listdir(store._catalog_path)
-                    if e.startswith("bucket=")):
-        bdir = os.path.join(store._catalog_path, b)
-        if sorted(os.listdir(bdir)) != before.get(b):
-            changed.append(int(b.split("=")[1]))
-    assert changed == [hit]
-    cat = {r["name"]: r["length"]
-           for r in store.read_catalog(spark).collect()}
+    assert store._n_delta_appends() == 0
+    after = base_files()
+    assert len(after) == 1 and after != before
+    cat = {n: st[0] for n, st in _catalog(store, spark).items()}
     assert cat["s0"] == 3 and len(cat) == 40
 
 
@@ -954,45 +941,9 @@ def test_streaming_holt_matches_batch_across_restart(spark, tmp_path):
         assert gf == (None if tr is None else lv + tr)
 
 
-def test_catalog_buckets_auto_grow(spark, tmp_path, monkeypatch):
-    """The catalog bucket count derives from observed catalog size at
-    compaction time (grow-only powers of two) and reads stay correct
-    across a growth step; an explicit catalog_buckets pins it."""
-    from siridb_server_spark.sources import store as SM
-
-    # shrink the growth target so 40 series force a resize
-    monkeypatch.setattr(SM, "TARGET_ROWS_PER_BUCKET", 2)
-    st = SM.PointsStore(str(tmp_path / "adb"), 10_000, 10_000)
-    assert st.catalog_buckets == SM.N_CATALOG_BUCKETS
-    rows = [(f"s{i}", 100 + i, 0, i, None, None, 0)
-            for i in range(40)]
-    st.append_local(spark, rows)
-    st._compact_catalog(spark)      # 40 rows / target 2 → 32 buckets
-    grown = st.catalog_buckets
-    assert grown == 32
-    # a fresh store instance over the same path sees the persisted
-    # count (appenders must agree on the numbering)
-    st2 = SM.PointsStore(str(tmp_path / "adb"), 10_000, 10_000)
-    assert st2.catalog_buckets == grown
-    # reads stay correct across the growth step: one row per series,
-    # correct folds, and further appends under the new numbering merge
-    st2.append_local(spark, [("s0", 500, 1, 7, None, None, 0)])
-    cat = {r["name"]: (r["length"], r["start"], r["end"])
-           for r in st2.read_catalog(spark).collect()}
-    assert len(cat) == 40
-    assert cat["s0"] == (2, 100, 500)
-    assert cat["s39"] == (1, 139, 139)
-    # pinned count never auto-resizes
-    pinned = SM.PointsStore(str(tmp_path / "pdb"), 10_000, 10_000,
-                            catalog_buckets=4)
-    pinned.append_local(spark, rows)
-    pinned._compact_catalog(spark)
-    assert pinned.catalog_buckets == 4
-
-
 def test_catalog_r6_migration_from_legacy_layout(spark, tmp_path):
     """A store whose catalog predates the first/last value columns
-    (pre-r6 layout) migrates transparently: read_catalog detects the
+    (pre-r6 layout) migrates transparently: repair_catalog detects the
     legacy schema and rebuilds once from the points; the skip-points
     first()/last() fast path works right after."""
     from siridb_server_spark import SiriEngine
@@ -1000,17 +951,17 @@ def test_catalog_r6_migration_from_legacy_layout(spark, tmp_path):
     eng = SiriEngine.open(spark, str(tmp_path / "mdb"), precision="s")
     eng.insert({"m": [[100, 1.5], [300, 9.5], [200, 4.5]]})
     # overwrite the catalog with the r5 (legacy) shape
-    legacy = spark.createDataFrame(
-        [("m", 3, 100, 300, 1)],
-        "name string, length long, start long, end long, tp int")
-    eng.store._write_catalog(legacy)
+    import pyarrow as pa
+    eng.store._write_base(pa.table({
+        "name": ["m"], "length": [3], "start": [100], "end": [300],
+        "tp": pa.array([1], pa.int32())}))
     eng._invalidate()
     assert eng.store._legacy_catalog()
-    # the local path refuses legacy files → engine falls back, the
-    # Spark path migrates, and afterwards both paths carry values
+    # the driver fold refuses legacy files; the repair migrates, and
+    # afterwards the catalog carries the values
     assert eng.store.read_catalog_local() is None
-    cat = {r["name"]: (r["length"], r["f_dbl"], r["l_dbl"])
-           for r in eng.store.read_catalog(spark).collect()}
+    cat = {n: (st[0], st[4][2], st[5][2])
+           for n, st in _catalog(eng.store, spark).items()}
     assert cat == {"m": (3, 1.5, 9.5)}
     assert not eng.store._legacy_catalog()
     assert eng.query("select first() from 'm'") == {
