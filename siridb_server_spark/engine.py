@@ -1204,14 +1204,6 @@ class SiriEngine:
         B = roll["bucket"]
         t0, t1 = rng if rng else (None, None)
         parts = []
-        if roll["partials"] is not None and not set(
-                P.ROLLUP_PARTIAL_COLS).issubset(
-                roll["partials"].columns):
-            # persisted rollup predates the current partial layout
-            # (e.g. no stable-double-sum statistics): don't serve —
-            # the points path stays exact and the next enable_rollup/
-            # maintain() rebuild migrates the store
-            return None
         if roll["partials"] is not None:
             pre = roll["partials"].select(*P.ROLLUP_PARTIAL_COLS)
             # interior buckets only — edges re-read below

@@ -31,7 +31,6 @@ import os
 from dataclasses import dataclass
 from typing import Iterable, Iterator, List, Sequence
 
-from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -48,18 +47,15 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..model import POINTS_SCHEMA
-
-#: points columns + the two partition-derived columns
-READ_SCHEMA = T.StructType(
-    list(POINTS_SCHEMA.fields)
-    + [
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("sid", T.LongType(), False),
-    ]
+from .store import (
+    STORE_SCHEMA,
+    _POINT_COLS,
+    PointsStore,
+    _fold_stats_table,
+    _pa_points_schema,
+    merge_stats,
+    write_arrow_delta,
 )
-
-_POINT_COLS = [f.name for f in POINTS_SCHEMA.fields]
 
 
 @dataclass
@@ -390,16 +386,7 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
         # normalize to the store's physical types — readers declare
         # int32 tp / int64 ts, and a permissive upstream (hand-built
         # batches, JSON inference) may carry wider lanes
-        target = pa.schema([
-            pa.field("series", pa.string()),
-            pa.field("ts", pa.int64()),
-            pa.field("seq", pa.int64()),
-            pa.field("val_int", pa.int64()),
-            pa.field("val_dbl", pa.float64()),
-            pa.field("val_str", pa.string()),
-            pa.field("tp", pa.int32()),
-        ])
-        tbl = tbl.select(_POINT_COLS).cast(target)
+        tbl = tbl.select(_POINT_COLS).cast(_pa_points_schema())
         ts = tbl.column("ts").to_numpy(zero_copy_only=False)
         tp = tbl.column("tp").to_numpy(zero_copy_only=False)
         is_log = tp == 2  # TP_STRING
@@ -423,15 +410,11 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
                 pq.write_table(sub, fp, compression="zstd")
                 files.append(("log" if k_flag else "num",
                               int(s), fp))
-        from .store import _fold_stats_table
-
         stats = list(_fold_stats_table(tbl).items())
         return _WriteResult(files, stats)
 
     # ------------------------------------------------------ driver side
     def commit(self, messages):
-        from .store import PointsStore
-
         store = PointsStore(self.path, self.dur_num, self.dur_log)
         # the store's per-appender marker: LIVE to same-process
         # readers while the commit runs, left on disk as the crash
@@ -444,8 +427,6 @@ class SiriDBArrowWriter(DataSourceArrowWriter):
             store.persist_durations()
 
     def _commit_inner(self, messages):
-        from .store import merge_stats, write_arrow_delta
-
         for msg in messages:
             if msg is None:
                 continue
@@ -516,7 +497,7 @@ class SiriDBDataSource(DataSource):
         return "siridb"
 
     def schema(self):
-        return READ_SCHEMA
+        return STORE_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
         return SiriDBShardReader(self.options)

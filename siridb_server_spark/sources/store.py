@@ -23,6 +23,10 @@ series.h:149-157). Spark-first re-expression:
 - ``optimize()`` = the background shard-rewrite job (optimize.c:33-55):
   rewrites small fragmented appends into one compact file per
   partition.
+- every read declares the layout (:data:`STORE_SCHEMA` for points,
+  the schema ``build_rollup`` records in the rollup meta for its
+  partials): Spark infers no schema, so a read launches no job of its
+  own — inference would read a footer in a job per read.
 - the series catalog (``_catalog/`` base + ``_catalog_delta/``
   deltas) is read, folded and written with pyarrow on the driver,
   through one fold (:func:`merge_stats`); Spark computes only the
@@ -46,8 +50,18 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..model import POINTS_SCHEMA, TP_STRING
+
+#: the store's file layout: the ``POINTS_SCHEMA`` columns in each
+#: parquet file, plus the ``kind``/``sid`` partition directories
+#: above it. Every points read declares it (:meth:`PointsStore._read`)
+#: and so does the ``format("siridb")`` source.
+STORE_SCHEMA = T.StructType(
+    list(POINTS_SCHEMA.fields)
+    + [T.StructField("kind", T.StringType(), False),
+       T.StructField("sid", T.LongType(), False)])
 
 #: target points per shard (ref src/siri/db/shard.c:36)
 OPTIMAL_POINTS_PER_SHARD = 2000
@@ -63,11 +77,13 @@ ARROW_STATS_MAX_BYTES = 64 * 1024 * 1024
 #: pyarrow path (zero Spark jobs); beyond it, distribute via Spark
 LOCAL_APPEND_MAX_ROWS = 5_000_000
 
-_STATS_COLS = ["series", "ts", "seq", "val_int", "val_dbl",
-               "val_str", "tp"]
+#: the columns of every points parquet file, in layout order
+_POINT_COLS = POINTS_SCHEMA.names
 
 
 def _pa_points_schema():
+    """The points file schema as pyarrow types — what the driver-side
+    writers cast to, so their files match :data:`STORE_SCHEMA`."""
     return pa.schema([
         ("series", pa.string()), ("ts", pa.int64()),
         ("seq", pa.int64()), ("val_int", pa.int64()),
@@ -291,6 +307,11 @@ class PointsStore:
                         .cast("long"))
 
     def append_df(self, df: DataFrame):
+        # conform to the file layout first, as append_local and the
+        # sink do: reads declare STORE_SCHEMA, so a caller's wider
+        # lane (tp as long) or extra column must not land as-is
+        df = df.select(*[F.col(f.name).cast(f.dataType)
+                         for f in POINTS_SCHEMA.fields])
         # crash-consistency protocol for the maintained catalog: the
         # pending marker is set BEFORE points land and cleared only
         # AFTER the catalog swap. An interrupt anywhere between
@@ -344,12 +365,11 @@ class PointsStore:
                 if sum(os.path.getsize(f) for f in landed) \
                         > ARROW_STATS_MAX_BYTES:
                     agg = self._batch_stats(
-                        spark.read.option("basePath", self.path)
-                        .parquet(*landed)).toArrow()
+                        self._read(spark, *landed)).toArrow()
                     folded = dict(catalog_stats(agg.to_pydict()))
                 else:
                     folded = _fold_stats_table(pa.concat_tables(
-                        pq.read_table(f, columns=_STATS_COLS)
+                        pq.read_table(f, columns=_POINT_COLS)
                         for f in landed))
                 write_arrow_delta(self.path, folded)
                 if self._n_delta_appends() > self.DELTA_COMPACT_AT:
@@ -400,6 +420,17 @@ class PointsStore:
         return moved
 
     # -------------------------------------------------------------- read
+    def _read(self, spark: SparkSession, *paths: str,
+              schema: T.StructType = STORE_SCHEMA) -> DataFrame:
+        """The store's one parquet reader: ``paths`` (files or
+        directories under the store) read with a DECLARED ``schema``.
+        Without one, Spark infers the schema by reading a footer in a
+        job of its own — a job floor of 50-100 ms before every read.
+        Points paths resolve ``kind``/``sid`` from their directory
+        names below the store root."""
+        return (spark.read.schema(schema)
+                .option("basePath", self.path).parquet(*paths))
+
     def read(self, spark: SparkSession) -> DataFrame:
         """Canonical points frame + the ``sid`` partition column (the
         engine adds sid predicates from time ranges → directory-level
@@ -407,9 +438,8 @@ class PointsStore:
         self._repair_rewrites()
         if not self._exists():
             return spark.createDataFrame([], POINTS_SCHEMA)
-        return spark.read.parquet(self.path).select(
-            "series", "ts", "seq", "val_int", "val_dbl", "val_str",
-            "tp", F.col("sid").cast("long").alias("_sid"))
+        return self._read(spark, self.path).select(
+            *_POINT_COLS, F.col("sid").alias("_sid"))
 
     def _exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -629,7 +659,7 @@ class PointsStore:
                     sorted(groups.items())):
                 tbl = pa.table(
                     {name: [r[j] for r in grp]
-                     for j, name in enumerate(_STATS_COLS)},
+                     for j, name in enumerate(_POINT_COLS)},
                     schema=schema)
                 tgt = os.path.join(self.path, f"kind={kind}",
                                    f"sid={sid}")
@@ -950,7 +980,7 @@ class PointsStore:
             shutil.rmtree(self._catalog_path, ignore_errors=True)
             return
         self._write_base(
-            self._batch_stats(spark.read.parquet(self.path)).toArrow())
+            self._batch_stats(self._read(spark, self.path)).toArrow())
 
     # ------------------------------------------------------- maintenance
     def _sid_dirs(self):
@@ -989,7 +1019,7 @@ class PointsStore:
         self._repair_rewrites()
         if not self._exists() or not names:
             return
-        df = spark.read.parquet(self.path)
+        df = self._read(spark, self.path)
         hit_sids = {(r["kind"], r["sid"]) for r in df.where(
             F.col("series").isin(names))
             .select("kind", "sid").distinct().collect()}
@@ -1005,8 +1035,8 @@ class PointsStore:
             for kind, sid, p in list(self._sid_dirs()):
                 if (kind, sid) not in hit_sids:
                     continue
-                part = spark.read.parquet(p).where(
-                    ~F.col("series").isin(names))
+                part = self._read(spark, p).where(
+                    ~F.col("series").isin(names)).select(*_POINT_COLS)
                 tmp = self._rewrite_tmp(kind, sid)
                 part.write.mode("overwrite") \
                     .option("compression", "zstd").parquet(tmp)
@@ -1089,31 +1119,25 @@ class PointsStore:
             os.makedirs(self._rollup_root, exist_ok=True)
             gen = uuid.uuid4().hex
             tmp = os.path.join(self._rollup_root, f".build-{gen}")
+            schema = None
             if paths:
-                pts = (spark.read.option("basePath", self.path)
-                       .parquet(*paths)
-                       .select("series", "ts", "seq", "val_int",
-                               "val_dbl", "val_str", "tp",
-                               F.col("kind").cast("string")
-                               .alias("kind"),
-                               F.col("sid").cast("long")
-                               .alias("sid")))
-                partials = rollup_partials(pts, bucket,
-                                           ["kind", "sid"])
+                partials = rollup_partials(self._read(spark, *paths),
+                                           bucket, ["kind", "sid"])
                 partials.write.mode("overwrite") \
                     .option("compression", "zstd").parquet(tmp)
+                schema = partials.schema.jsonValue()
             else:
                 os.makedirs(tmp, exist_ok=True)
             # commit protocol: land the new generation dir, point the
             # meta at it atomically, THEN drop older generations — a
             # crash at any step leaves a consistent (meta, data) pair
             os.replace(tmp, self._rollup_data_path(gen))
-            # v2: partials carry typed first/last structs (f/l) so
-            # bucketed first()/last() serve from the rollup too;
-            # v1 rollups are refused by read_rollup (points fallback
-            # until the next build/maintain rebuilds them)
-            meta = {"bucket": int(bucket), "gen": gen, "v": 2,
-                    "coverage": listing}
+            # v3: the meta records the partials schema, which
+            # read_rollup declares instead of inferring it; older
+            # metas are refused by read_rollup (points fallback until
+            # the next build/maintain rebuilds them)
+            meta = {"bucket": int(bucket), "gen": gen, "v": 3,
+                    "schema": schema, "coverage": listing}
             mtmp = self._rollup_meta_path + f".{uuid.uuid4().hex}"
             with open(mtmp, "w") as fh:
                 json.dump(meta, fh)
@@ -1135,7 +1159,7 @@ class PointsStore:
         never-covered) the caller must aggregate live from points."""
         meta = self.rollup_info()
         if meta is None or "gen" not in meta \
-                or meta.get("v") != 2:
+                or meta.get("v") != 3:
             return None
         current = self._rollup_listing()
         # negative timestamps (possible only via the raw append API —
@@ -1162,7 +1186,8 @@ class PointsStore:
         data = self._rollup_data_path(meta["gen"])
         if os.path.isdir(data) and any(
                 f.endswith(".parquet") for f in os.listdir(data)):
-            df = spark.read.parquet(data)
+            df = self._read(spark, data, schema=T.StructType.fromJson(
+                meta["schema"]))
         elif valid:
             # the generation the meta names is unreadable (crash or
             # concurrent swap window): covered shards MUST NOT be
@@ -1203,10 +1228,7 @@ class PointsStore:
                 paths.append(d)
         if not paths:
             return None
-        return (spark.read.option("basePath", self.path)
-                .parquet(*paths)
-                .select("series", "ts", "seq", "val_int", "val_dbl",
-                        "val_str", "tp"))
+        return self._read(spark, *paths).select(*_POINT_COLS)
 
     def optimize(self, spark: SparkSession,
                  max_files_per_partition: int = 1,
@@ -1227,7 +1249,7 @@ class PointsStore:
             files = [f for f in os.listdir(p) if f.endswith(".parquet")]
             if len(files) <= max_files_per_partition:
                 continue
-            part = spark.read.parquet(p) \
+            part = self._read(spark, p).select(*_POINT_COLS) \
                 .coalesce(max_files_per_partition)
             if sort:
                 part = part.sortWithinPartitions("series", "ts", "seq")
