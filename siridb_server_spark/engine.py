@@ -16,6 +16,7 @@ machinery of the reference is irrelevant — Spark owns distribution.
 from __future__ import annotations
 
 import functools
+import threading
 import time as _time
 from zoneinfo import ZoneInfo
 
@@ -26,6 +27,7 @@ from . import access as ACL
 from . import help as HELP
 from .errors import InsertError, QueryError
 from .functions import pipeline as P
+from .functions.memo import cols
 from .functions.pipeline import COLS, StageResult, TypeSet
 from .localdf import arrow_df
 from .model import (
@@ -110,6 +112,11 @@ class SiriEngine:
         #: derives+persists durations from the observed interval
         self._auto_duration_pending = False
         self._started = _time.time()
+        #: the engine is not thread-safe: every transport serving it
+        #: (sources/clserver.py, sources/http.py) holds this one lock
+        #: around each engine call, as the reference's single event
+        #: loop per database serializes its queries
+        self.lock = threading.Lock()
 
     @classmethod
     def open(cls, spark: SparkSession, path: str,
@@ -929,19 +936,18 @@ class SiriEngine:
         if tr is not None:
             kind = tr[0]
             if kind == "after":
-                df = df.where(F.col("ts") >= tr[1])
+                df = df.where(f"ts >= {tr[1]}")
                 if has_sid:
-                    df = df.where(F.col("_sid") > tr[1] - maxdur)
+                    df = df.where(f"_sid > {tr[1] - maxdur}")
             elif kind == "before":
-                df = df.where(F.col("ts") < tr[1])
+                df = df.where(f"ts < {tr[1]}")
                 if has_sid:
-                    df = df.where(F.col("_sid") < tr[1])
+                    df = df.where(f"_sid < {tr[1]}")
             elif kind == "between":
-                df = df.where((F.col("ts") >= tr[1])
-                              & (F.col("ts") < tr[2]))
+                df = df.where(f"(ts >= {tr[1]}) AND (ts < {tr[2]})")
                 if has_sid:
-                    df = df.where((F.col("_sid") > tr[1] - maxdur)
-                                  & (F.col("_sid") < tr[2]))
+                    df = df.where(f"(_sid > {tr[1] - maxdur})"
+                                  f" AND (_sid < {tr[2]})")
             elif kind in ("head", "tail"):
                 order = [F.col("ts"), F.col("seq")] if kind == "head" else \
                     [F.col("ts").desc(), F.col("seq").desc()]
@@ -1205,23 +1211,20 @@ class SiriEngine:
         t0, t1 = rng if rng else (None, None)
         parts = []
         if roll["partials"] is not None:
-            pre = roll["partials"].select(*P.ROLLUP_PARTIAL_COLS)
+            pre = roll["partials"]
             # interior buckets only — edges re-read below
             if t0 is not None:
-                pre = pre.where(F.col("rbucket") >= t0 + B - 1)
+                pre = pre.where(f"rbucket >= {t0 + B - 1}")
             if t1 is not None:
-                pre = pre.where(F.col("rbucket") <= t1 - 1)
+                pre = pre.where(f"rbucket <= {t1 - 1}")
             parts.append(pre)
             edges = self._rollup_edge_ranges(t0, t1, B)
             if edges:
                 epts = self._rollup_edge_points(roll["valid"], edges)
                 if epts is not None:
-                    cond = None
-                    for lo, hi in edges:
-                        c = (F.col("ts") >= lo) & (F.col("ts") <= hi)
-                        cond = c if cond is None else (cond | c)
-                    parts.append(P.rollup_partials(
-                        epts.where(cond), B))
+                    cond = " OR ".join(f"((ts >= {lo}) AND (ts <= {hi}))"
+                                       for lo, hi in edges)
+                    parts.append(P.rollup_partials(epts.where(cond), B))
         if roll["stale"]:
             live = self.store.read_points_of(self.spark,
                                              roll["stale"])
@@ -1230,9 +1233,9 @@ class SiriEngine:
                 # range first and every bucket (edge or interior)
                 # comes out exact
                 if t0 is not None:
-                    live = live.where(F.col("ts") >= t0)
+                    live = live.where(f"ts >= {t0}")
                 if t1 is not None:
-                    live = live.where(F.col("ts") < t1)
+                    live = live.where(f"ts < {t1}")
                 parts.append(P.rollup_partials(live, B))
         if not parts:
             return None
@@ -1248,7 +1251,7 @@ class SiriEngine:
                                     types)
 
     def _collect(self, df: DataFrame, seeds: list | None = None) -> dict:
-        rows = df.select(*COLS).collect()
+        rows = df.select(*cols(*COLS)).collect()
         rows.sort(key=lambda r: (r["ts"], r["seq"]))
         out: dict = {s: [] for s in seeds} if seeds else {}
         for r in rows:

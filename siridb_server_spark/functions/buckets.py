@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .memo import memoized
+
 
 def bucket_ts(ts: Column, group_by, offset=0) -> Column:
     """Right-closed, end-labeled bucket timestamp (int64-exact).
@@ -31,3 +33,10 @@ def bucket_ts(ts: Column, group_by, offset=0) -> Column:
     off = F.lit(offset) if isinstance(offset, int) else offset
     shifted = ts + g - F.lit(1)
     return (shifted - (shifted % g) + off).cast("long")
+
+
+@memoized
+def bucket_of(name: str, group_by: int, offset: int = 0) -> Column:
+    """:func:`bucket_ts` of column ``name`` at a constant width, built
+    once per (name, width, offset)."""
+    return bucket_ts(F.col(name), group_by, offset)

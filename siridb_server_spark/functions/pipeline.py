@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from ..errors import QueryError
 from ..model import TP_DOUBLE, TP_INT, TP_STRING
 from ..plans import nodes as N
-from .buckets import bucket_ts
+from .buckets import bucket_of
+from .memo import cols, memoized
 
 COLS = ["series", "ts", "seq", "val_int", "val_dbl", "val_str", "tp"]
 
@@ -75,18 +76,42 @@ class TypeSet:
         return self
 
 
-def _norm(df: DataFrame, *, ts, vi=None, vd=None, vs=None, tp=None,
+def _value_cols(vi=None, vd=None, vs=None, tp=None,
+                seq=None) -> list:
+    """``seq`` … ``tp`` of the canonical column layout from value
+    expressions (None: NULL; ``seq`` 0, ``tp`` the input's)."""
+    null = F.lit(None)
+    return [
+        (seq if seq is not None else F.lit(0)).cast("long").alias("seq"),
+        (vi if vi is not None else null).cast("long").alias("val_int"),
+        (vd if vd is not None else null).cast("double").alias("val_dbl"),
+        (vs if vs is not None else null).cast("string").alias("val_str"),
+        (tp if tp is not None else F.col("tp")).cast("int").alias("tp"),
+    ]
+
+
+@memoized
+def _norm_cols(vi, vd, tp, seq) -> list:
+    """The canonical-layout projection of a per-point stage: each
+    argument names the column holding that field (None: its default;
+    an int ``tp``: that type literal)."""
+    def c(name):
+        return None if name is None else F.col(name)
+    return [*cols("series"), F.col("ts").cast("long").alias("ts"),
+            *_value_cols(c(vi), c(vd), None,
+                         F.lit(tp) if isinstance(tp, int) else c(tp),
+                         c(seq))]
+
+
+def _norm(df: DataFrame, *, vi=None, vd=None, tp=None,
           seq=None) -> DataFrame:
     """Project a stage result back to the canonical column layout."""
-    return df.select(
-        F.col("series"),
-        ts.cast("long").alias("ts"),
-        (seq if seq is not None else F.lit(0)).cast("long").alias("seq"),
-        (vi if vi is not None else F.lit(None)).cast("long").alias("val_int"),
-        (vd if vd is not None else F.lit(None)).cast("double").alias("val_dbl"),
-        (vs if vs is not None else F.lit(None)).cast("string").alias("val_str"),
-        (tp if tp is not None else F.col("tp")).cast("int").alias("tp"),
-    )
+    return df.select(*_norm_cols(vi, vd, tp, seq))
+
+
+@memoized
+def _overflow_cond() -> Column:
+    return (F.col("tp") == TP_INT) & F.col("val_int").isNull()
 
 
 class OverflowCheck:
@@ -100,10 +125,7 @@ class OverflowCheck:
         self.fname = fname
 
     def run(self):
-        bad = self.df.where(
-            (F.col("tp") == TP_INT) & F.col("val_int").isNull()
-        )
-        if not bad.isEmpty():
+        if not self.df.where(_overflow_cond()).isEmpty():
             raise QueryError(
                 f"Overflow detected while using {self.fname}().")
 
@@ -113,6 +135,14 @@ class StageResult:
         self.df = df
         self.types = types
         self.checks = checks
+
+
+def _overflow_checks(out: DataFrame, name: str, types: TypeSet) -> list:
+    """The deferred int64-overflow probe of a sum/difference over int
+    series (none otherwise)."""
+    if name in ("sum", "difference") and TP_INT in types.tps:
+        return [OverflowCheck(out, name)]
+    return []
 
 
 # --------------------------------------------------------------- aggregates
@@ -174,7 +204,7 @@ STABLE_MEAN_SQL = (
     " / count({x}))")
 
 
-def _agg_exprs(name: str, types: TypeSet, timespan: float | None = None):
+def _agg_exprs(name: str, timespan: float | None = None):
     """Aggregate value expressions for one bucket/window group."""
     num = _num()
     if name == "count":
@@ -234,6 +264,27 @@ def _tp_expr(name: str) -> Column:
     return F.max("tp")
 
 
+@memoized
+def _agg_out(name: str, timespan, to_one: bool) -> list:
+    """The aggregate list of one bucket/window group, already in the
+    canonical layout after its grouping keys: the whole-window
+    collapse adds the ``ts`` label (last point's ts, first's for
+    ``first()``)."""
+    e = _agg_exprs(name, timespan)
+    label = []
+    if to_one:
+        label = [(F.min("ts") if name == "first" else F.max("ts"))
+                 .cast("long").alias("ts")]
+    return label + _value_cols(e.get("vi"), e.get("vd"), e.get("vs"),
+                               _tp_expr(name))
+
+
+@memoized
+def _bucket_keys(src: str, group_by: int) -> list:
+    """(series, right-closed END-labeled bucket of ``src`` as ts)."""
+    return [*cols("series"), bucket_of(src, group_by).alias("ts")]
+
+
 def _check_agg_types(name: str, types: TypeSet):
     if name in NUMERIC_ONLY or name in ("difference", "derivative"):
         if TP_STRING in types.tps and name not in ("first", "last", "count"):
@@ -275,6 +326,25 @@ def assign_sweep_buckets(df: DataFrame, group_by, offset) -> DataFrame:
     ``group_by``/``offset`` may be ints or per-series column names
     (limit()'s computed widths, aggregate.c:677-694).
     """
+    c = _sweep_cols(group_by, offset)
+    pts = df.withColumn("_b", c["b"]).withColumn("_g", c["g"]) \
+        .withColumn("_off", c["off"])
+    bstats = pts.groupBy(*cols("series", "_b")).agg(*c["bstats"])
+    labeled = (
+        bstats
+        .withColumn("_c", c["_c"])
+        .withColumn("_r", c["_r"])
+        .withColumn("_runstart", c["_runstart"])
+        .withColumn("_absorbed", c["_absorbed"])
+        .select(*c["label"])
+    )
+    return (pts.join(labeled, ["series", "_b"])
+            .drop("_b", "_g", "_off"))
+
+
+@memoized
+def _sweep_cols(group_by, offset) -> dict:
+    """The Columns of :func:`assign_sweep_buckets`, per width/offset."""
     g = (F.lit(group_by) if isinstance(group_by, int)
          else F.col(group_by)).cast("long")
     off = (F.lit(offset) if isinstance(offset, int)
@@ -282,36 +352,26 @@ def assign_sweep_buckets(df: DataFrame, group_by, offset) -> DataFrame:
     # closed-form candidate bucket; numerator >= 0 (ts >= 0, off < g)
     # so truncating int div == floor div; int64-exact for ns ts
     num = F.col("ts") - off + g - F.lit(1)
-    b = (num - (num % g) + off).cast("long")
-
-    pts = df.withColumn("_b", b).withColumn("_g", g).withColumn("_off", off)
-    bstats = (pts.groupBy("series", "_b")
-              .agg(F.min("ts").alias("_m"),
-                   F.first("_g").alias("_bg"),
-                   F.first("_off").alias("_boff")))
     w = Window.partitionBy("series").orderBy("_b")
     jump = F.col("_m") > F.col("_b") - F.col("_boff")
     chained = (F.lag(jump).over(w)
                & (F.col("_b") == F.lag("_b").over(w) + F.col("_bg")))
-    labeled = (
-        bstats
-        .withColumn("_c", F.coalesce(chained, F.lit(False)))
-        .withColumn("_r", F.row_number().over(w))
-        .withColumn("_runstart", F.max(
-            F.when(~F.col("_c"), F.col("_r"))).over(
-                w.rowsBetween(Window.unboundedPreceding,
-                              Window.currentRow)))
-        .withColumn("_absorbed",
-                    F.col("_c")
-                    & ((F.col("_r") - F.col("_runstart")) % 2 == 1))
-        .select(
-            "series", "_b",
-            F.when(F.col("_absorbed") | ~jump, F.col("_b"))
-            .otherwise(F.col("_b") + F.col("_bg"))
-            .cast("long").alias("bucket"))
-    )
-    return (pts.join(labeled, ["series", "_b"])
-            .drop("_b", "_g", "_off"))
+    return {
+        "b": (num - (num % g) + off).cast("long"), "g": g, "off": off,
+        "bstats": [F.min("ts").alias("_m"),
+                   F.first("_g").alias("_bg"),
+                   F.first("_off").alias("_boff")],
+        "_c": F.coalesce(chained, F.lit(False)),
+        "_r": F.row_number().over(w),
+        "_runstart": F.max(F.when(~F.col("_c"), F.col("_r"))).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        "_absorbed": F.col("_c")
+        & ((F.col("_r") - F.col("_runstart")) % 2 == 1),
+        "label": [*cols("series", "_b"),
+                  F.when(F.col("_absorbed") | ~jump, F.col("_b"))
+                  .otherwise(F.col("_b") + F.col("_bg"))
+                  .cast("long").alias("bucket")],
+    }
 
 
 def apply_bucket_agg(df: DataFrame, name: str, group_by, offset,
@@ -320,29 +380,21 @@ def apply_bucket_agg(df: DataFrame, name: str, group_by, offset,
     partial aggregation via Catalyst (mirrors the reference's per-pool
     pre-aggregation advice, help/help_select.md:84-96)."""
     _check_agg_types(name, types)
-    exprs = _agg_exprs(name, types, timespan)
     plain = isinstance(group_by, int) and isinstance(offset, int) \
         and offset == 0
     if plain:
-        grouped = df.groupBy(
-            "series", bucket_ts(F.col("ts"), group_by, offset).alias("ts"))
+        grouped = df.groupBy(*_bucket_keys("ts", group_by))
     else:
         swept = assign_sweep_buckets(df, group_by, offset)
-        grouped = swept.groupBy("series", F.col("bucket").alias("ts"))
-    agged = (
-        grouped
-        .agg(*[v.alias(k) for k, v in exprs.items()],
-             _tp_expr(name).alias("ntp"))
-    )
-    out = _norm(agged, ts=F.col("ts"),
-                vi=F.col("vi") if "vi" in exprs else None,
-                vd=F.col("vd") if "vd" in exprs else None,
-                vs=F.col("vs") if "vs" in exprs else None,
-                tp=F.col("ntp"))
-    checks = []
-    if name in ("sum", "difference") and TP_INT in types.tps:
-        checks.append(OverflowCheck(out, name))
-    return StageResult(out, types.after(name), checks)
+        grouped = swept.groupBy(*_sweep_keys())
+    out = grouped.agg(*_agg_out(name, timespan, False))
+    return StageResult(out, types.after(name),
+                       _overflow_checks(out, name, types))
+
+
+@memoized
+def _sweep_keys() -> list:
+    return [*cols("series"), F.col("bucket").alias("ts")]
 
 
 def apply_to_one(df: DataFrame, name: str, types: TypeSet,
@@ -350,22 +402,9 @@ def apply_to_one(df: DataFrame, name: str, types: TypeSet,
     """Whole-window collapse (AGGREGATE_to_one, aggregate.c:1068-1124):
     label = last point's ts; first's ts for first()."""
     _check_agg_types(name, types)
-    exprs = _agg_exprs(name, types, timespan)
-    label = F.min("ts") if name == "first" else F.max("ts")
-    agged = df.groupBy("series").agg(
-        label.alias("ts"),
-        *[v.alias(k) for k, v in exprs.items()],
-        _tp_expr(name).alias("ntp"),
-    )
-    out = _norm(agged, ts=F.col("ts"),
-                vi=F.col("vi") if "vi" in exprs else None,
-                vd=F.col("vd") if "vd" in exprs else None,
-                vs=F.col("vs") if "vs" in exprs else None,
-                tp=F.col("ntp"))
-    checks = []
-    if name in ("sum", "difference") and TP_INT in types.tps:
-        checks.append(OverflowCheck(out, name))
-    return StageResult(out, types.after(name), checks)
+    out = df.groupBy(*cols("series")).agg(*_agg_out(name, timespan, True))
+    return StageResult(out, types.after(name),
+                       _overflow_checks(out, name, types))
 
 
 # --------------------------------------------------------------- transforms
@@ -373,59 +412,66 @@ def _series_window():
     return Window.partitionBy("series").orderBy("ts", "seq")
 
 
+def _has_prev(w) -> Column:
+    return F.lag("ts").over(w).isNotNull().alias("has_prev")
+
+
+@memoized
+def _difference_cols() -> list:
+    w = _series_window()
+    return [*cols("series", "ts", "seq", "tp"),
+            F.try_subtract(F.col("val_int"), F.lag("val_int").over(w))
+            .alias("vi"),
+            (F.col("val_dbl") - F.lag("val_dbl").over(w)).alias("vd"),
+            _has_prev(w)]
+
+
+@memoized
+def _derivative_cols(timespan: float) -> list:
+    w = _series_window()
+    num = _num()
+    return [*cols("series", "ts", "seq"),
+            (F.try_divide(
+                num - F.lag(num).over(w),
+                (F.col("ts") - F.lag("ts").over(w)).cast("double"))
+             * F.lit(timespan)).alias("vd"),
+            _has_prev(w)]
+
+
+@memoized
+def _interval_cols() -> list:
+    w = _series_window()
+    return [*cols("series", "ts", "seq"),
+            (F.col("ts") - F.lag("ts").over(w)).alias("vi"),
+            _has_prev(w)]
+
+
 def apply_difference(df: DataFrame, types: TypeSet) -> StageResult:
     if TP_STRING in types.tps:
         raise QueryError("Cannot use difference() on string type.")
-    w = _series_window()
-    step = df.select(
-        "series", "ts", "seq", "tp",
-        F.try_subtract(F.col("val_int"), F.lag("val_int").over(w))
-        .alias("vi"),
-        (F.col("val_dbl") - F.lag("val_dbl").over(w)).alias("vd"),
-        F.lag("ts").over(w).isNotNull().alias("has_prev"),
-    ).where("has_prev")
-    out = _norm(step, ts=F.col("ts"), vi=F.col("vi"), vd=F.col("vd"),
-                seq=F.col("seq"))
-    checks = []
-    if TP_INT in types.tps:
-        checks.append(OverflowCheck(out, "difference"))
-    return StageResult(out, types, checks)
+    step = df.select(*_difference_cols()).where("has_prev")
+    out = _norm(step, vi="vi", vd="vd", seq="seq")
+    return StageResult(out, types,
+                       _overflow_checks(out, "difference", types))
 
 
 def apply_derivative(df: DataFrame, timespan: float,
                      types: TypeSet) -> StageResult:
     if TP_STRING in types.tps:
         raise QueryError("Cannot use derivative() on string type.")
-    w = _series_window()
-    num = _num()
-    step = df.select(
-        "series", "ts", "seq",
-        (F.try_divide(
-            num - F.lag(num).over(w),
-            (F.col("ts") - F.lag("ts").over(w)).cast("double"))
-         * F.lit(float(timespan))).alias("vd"),
-        F.lag("ts").over(w).isNotNull().alias("has_prev"),
-    ).where("has_prev")
-    out = _norm(step, ts=F.col("ts"), vd=F.col("vd"),
-                tp=F.lit(TP_DOUBLE), seq=F.col("seq"))
+    step = df.select(*_derivative_cols(float(timespan))).where("has_prev")
+    out = _norm(step, vd="vd", tp=TP_DOUBLE, seq="seq")
     return StageResult(out, TypeSet(frozenset({TP_DOUBLE})), [])
 
 
 def apply_interval(df: DataFrame, types: TypeSet) -> StageResult:
-    w = _series_window()
-    step = df.select(
-        "series", "ts", "seq",
-        (F.col("ts") - F.lag("ts").over(w)).alias("vi"),
-        F.lag("ts").over(w).isNotNull().alias("has_prev"),
-    ).where("has_prev")
-    out = _norm(step, ts=F.col("ts"), vi=F.col("vi"),
-                tp=F.lit(TP_INT), seq=F.col("seq"))
+    step = df.select(*_interval_cols()).where("has_prev")
+    out = _norm(step, vi="vi", tp=TP_INT, seq="seq")
     return StageResult(out, TypeSet(frozenset({TP_INT})), [])
 
 
 def apply_timeval(df: DataFrame, types: TypeSet) -> StageResult:
-    out = _norm(df, ts=F.col("ts"), vi=F.col("ts"),
-                tp=F.lit(TP_INT), seq=F.col("seq"))
+    out = _norm(df, vi="ts", tp=TP_INT, seq="seq")
     return StageResult(out, TypeSet(frozenset({TP_INT})), [])
 
 
@@ -479,44 +525,43 @@ def anchored_regex(pattern: str, case_insensitive: bool) -> str:
 
 def apply_filter(df: DataFrame, f: N.FilterFunc,
                  types: TypeSet) -> StageResult:
-    has_str = TP_STRING in types.tps
-    has_num = bool(types.tps & {TP_INT, TP_DOUBLE})
-
     if f.value_tp in ("string", "regex"):
-        if has_num:
+        if types.tps & {TP_INT, TP_DOUBLE}:
             raise QueryError("Cannot use a string filter on number type.")
-        if f.value_tp == "regex":
-            pat, ci = f.value
-            rx = anchored_regex(pat, ci)
-            cond = F.col("val_str").rlike(rx)
-            if f.op == "!=":
-                cond = ~cond
-        else:
-            cond = _cmp_str(F.col("val_str"), f.op, f.value)
-        return StageResult(df.where(cond), types, [])
-
-    # numeric filter
-    if has_str:
+    elif TP_STRING in types.tps:
         raise QueryError("Cannot use a number filter on string type.")
+    cond = _filter_cond(f.op, f.value_tp, f.value, types.tps)
+    return StageResult(df.where(cond), types, [])
+
+
+@memoized
+def _filter_cond(op: str, value_tp: str, value, tps: frozenset) -> Column:
+    if value_tp == "regex":
+        pat, ci = value
+        cond = F.col("val_str").rlike(anchored_regex(pat, ci))
+        return ~cond if op == "!=" else cond
+    if value_tp == "string":
+        return _cmp_str(F.col("val_str"), op, value)
+    # numeric filter
     conds = []
-    if TP_INT in types.tps:
+    if TP_INT in tps:
         # double filter value on int series truncates (aggregate.c:952)
-        bi = int(f.value) if f.value_tp in ("int", "double") else None
+        bi = int(value) if value_tp in ("int", "double") else None
         if bi is None:
             # nan/inf filter on int series: compare as double
             conds.append((F.col("tp") == TP_INT)
                          & _cmp_double(F.col("val_int").cast("double"),
-                                       f.op, float(f.value)))
+                                       op, float(value)))
         else:
             conds.append((F.col("tp") == TP_INT)
-                         & _cmp_int(F.col("val_int"), f.op, bi))
-    if TP_DOUBLE in types.tps:
+                         & _cmp_int(F.col("val_int"), op, bi))
+    if TP_DOUBLE in tps:
         conds.append((F.col("tp") == TP_DOUBLE)
-                     & _cmp_double(F.col("val_dbl"), f.op, float(f.value)))
+                     & _cmp_double(F.col("val_dbl"), op, float(value)))
     cond = conds[0]
     for c in conds[1:]:
         cond = cond | c
-    return StageResult(df.where(cond), types, [])
+    return cond
 
 
 # -------------------------------------------------------------------- limit
@@ -536,23 +581,32 @@ def apply_limit(df: DataFrame, limit: int, agg_name: str,
     hang off the same exchange, which Spark reuses (ReusedExchange).
     Measured ~25% faster than the former two-scan agg+broadcast-join
     shape at sf0.1."""
-    w = Window.partitionBy("series")
-    st = df.select(
-        *COLS,
-        F.min("ts").over(w).alias("_first_ts"),
-        F.max("ts").over(w).alias("_last_ts"),
-        F.count(F.lit(1)).over(w).alias("_cnt"))
-    # int64-exact: `div` (never double `/`) for ns-precision ts
-    g = (F.expr(f"(_last_ts - _first_ts) div {int(limit)}") + 1) \
-        .cast("long")
-    st = (st.withColumn("_g", F.when(F.col("_cnt") > limit, g))
-          .withColumn("_off",
-                      (F.col("_first_ts") - 1) % F.col("_g")))
-    passthrough = st.where(F.col("_g").isNull()).select(*COLS)
-    capped = st.where(F.col("_g").isNotNull())
+    c = _limit_cols(int(limit))
+    st = (df.select(*c["stats"])
+          .withColumn("_g", c["_g"]).withColumn("_off", c["_off"]))
+    passthrough = st.where(c["pass"]).select(*cols(*COLS))
+    capped = st.where(c["capped"])
     res = apply_bucket_agg(capped, agg_name, "_g", "_off", types)
     out = res.df.unionByName(passthrough)
     return StageResult(out, types.after(agg_name), res.checks)
+
+
+@memoized
+def _limit_cols(limit: int) -> dict:
+    """The Columns of :func:`apply_limit`, per limit."""
+    w = Window.partitionBy("series")
+    # int64-exact: `div` (never double `/`) for ns-precision ts
+    g = (F.expr(f"(_last_ts - _first_ts) div {limit}") + 1).cast("long")
+    return {
+        "stats": [*cols(*COLS),
+                  F.min("ts").over(w).alias("_first_ts"),
+                  F.max("ts").over(w).alias("_last_ts"),
+                  F.count(F.lit(1)).over(w).alias("_cnt")],
+        "_g": F.when(F.col("_cnt") > limit, g),
+        "_off": (F.col("_first_ts") - 1) % F.col("_g"),
+        "pass": F.col("_g").isNull(),
+        "capped": F.col("_g").isNotNull(),
+    }
 
 
 # --------------------------------------------------------------- rollups
@@ -563,8 +617,8 @@ ROLLUP_FNS = frozenset({"count", "sum", "mean", "min", "max",
                         "first", "last"})
 
 #: canonical partial-column layout (what rollup_partials emits, minus
-#: the grouping keys) — the engine projects persisted partials to
-#: this before unioning them with live-computed ones
+#: the grouping keys) — ``store.read_rollup`` projects persisted
+#: partials to this before the engine unions them with live ones
 ROLLUP_PARTIAL_COLS = [
     "series", "rbucket", "tp", "cnt", "vi_sum", "vi_oflow",
     "num_sum", "n_nan", "n_pinf", "n_ninf",
@@ -627,6 +681,22 @@ def rollup_partials(df: DataFrame, bucket: int,
     and num (mean numerator), plus the shared non-finite class
     counts — they let double-typed sum/mean compose bit-identically
     to the points path's :func:`stable_double_sum`."""
+    extra = cols(*extra_keys)
+    aggs, out = _partials_cols()
+    return (df.groupBy(*extra, *_partials_keys(bucket)).agg(*aggs)
+            .select(*extra, *out))
+
+
+@memoized
+def _partials_keys(bucket: int) -> list:
+    return [*cols("series"), bucket_of("ts", bucket).alias("rbucket")]
+
+
+@memoized
+def _partials_cols() -> tuple:
+    """(aggregates, output projection after the extra keys) of
+    :func:`rollup_partials`: one list for every bucket and extra-key
+    set, so the store's build and a select's live fallback share it."""
     # typed first/last per bucket ((ts, seq) order, insert-order
     # ties) so bucketed first()/last() compose from partials too —
     # argmin/argmax fold associatively across partials
@@ -636,32 +706,31 @@ def rollup_partials(df: DataFrame, bucket: int,
     dbl = F.col("val_dbl")
     stable = {**_stable_sum_partials(dbl, "vd"),
               **_stable_sum_partials(num, "nm")}
-    agged = (df.groupBy(
-        *extra_keys, "series",
-        bucket_ts(F.col("ts"), bucket).alias("rbucket"))
-        .agg(F.max("tp").alias("tp"),
-             F.count(F.lit(1)).alias("cnt"),
-             F.try_sum("val_int").alias("vi_sum"),
-             F.count("val_int").alias("n_int"),
-             F.sum(num).alias("num_sum"),
-             # non-finite classes live only in val_dbl (ints can't
-             # hold them), shared by the sum and mean composers
-             F.count(F.when(F.isnan(dbl), 1)).alias("n_nan"),
-             F.count(F.when(dbl == F.lit(float("inf")), 1))
-             .alias("n_pinf"),
-             F.count(F.when(dbl == F.lit(float("-inf")), 1))
-             .alias("n_ninf"),
-             *[v.alias(k) for k, v in stable.items()],
-             F.min("val_int").alias("vi_min"),
-             F.max("val_int").alias("vi_max"),
-             F.min("val_dbl").alias("vd_min"),
-             F.max("val_dbl").alias("vd_max"),
-             F.min_by(point, order).alias("f"),
-             F.max_by(point, order).alias("l")))
-    return agged.withColumn(
-        "vi_oflow",
-        F.when(F.col("vi_sum").isNull() & (F.col("n_int") > 0), 1)
-        .otherwise(0)).drop("n_int")
+    aggs = {
+        "tp": F.max("tp"),
+        "cnt": F.count(F.lit(1)),
+        "vi_sum": F.try_sum("val_int"),
+        "n_int": F.count("val_int"),
+        "num_sum": F.sum(num),
+        # non-finite classes live only in val_dbl (ints can't hold
+        # them), shared by the sum and mean composers
+        "n_nan": F.count(F.when(F.isnan(dbl), 1)),
+        "n_pinf": F.count(F.when(dbl == F.lit(float("inf")), 1)),
+        "n_ninf": F.count(F.when(dbl == F.lit(float("-inf")), 1)),
+        **stable,
+        "vi_min": F.min("val_int"),
+        "vi_max": F.max("val_int"),
+        "vd_min": F.min("val_dbl"),
+        "vd_max": F.max("val_dbl"),
+        "f": F.min_by(point, order),
+        "l": F.max_by(point, order),
+    }
+    # the per-partial overflow flag replaces the int count it needs
+    oflow = F.when(F.col("vi_sum").isNull() & (F.col("n_int") > 0), 1) \
+        .otherwise(0).alias("vi_oflow")
+    out = [*cols("series", "rbucket", *(k for k in aggs if k != "n_int")),
+           oflow]
+    return [v.alias(k) for k, v in aggs.items()], out
 
 
 def compose_bucket_agg(partials: DataFrame, name: str, group_by: int,
@@ -677,8 +746,16 @@ def compose_bucket_agg(partials: DataFrame, name: str, group_by: int,
     fallback class is order-dependent on both paths)."""
     assert name in ROLLUP_FNS, name
     _check_agg_types(name, types)
-    grouped = partials.groupBy(
-        "series", bucket_ts(F.col("rbucket"), group_by).alias("ts"))
+    out = partials.groupBy(*_bucket_keys("rbucket", group_by)) \
+        .agg(*_compose_out(name))
+    return StageResult(out, types.after(name),
+                       _overflow_checks(out, name, types))
+
+
+@memoized
+def _compose_out(name: str) -> list:
+    """The aggregate list of :func:`compose_bucket_agg`, in the
+    canonical layout after its (series, ts) keys."""
     n_nan = F.sum("n_nan")
     n_pinf = F.sum("n_pinf")
     n_ninf = F.sum("n_ninf")
@@ -708,17 +785,4 @@ def compose_bucket_agg(partials: DataFrame, name: str, group_by: int,
         vi = win.getField("val_int")
         vd = win.getField("val_dbl")
         vs = win.getField("val_str")
-    agged = grouped.agg(
-        *([vi.alias("vi")] if vi is not None else []),
-        *([vd.alias("vd")] if vd is not None else []),
-        *([vs.alias("vvs")] if vs is not None else []),
-        _tp_expr(name).alias("ntp"))
-    out = _norm(agged, ts=F.col("ts"),
-                vi=F.col("vi") if vi is not None else None,
-                vd=F.col("vd") if vd is not None else None,
-                vs=F.col("vvs") if vs is not None else None,
-                tp=F.col("ntp"))
-    checks = []
-    if name == "sum" and TP_INT in types.tps:
-        checks.append(OverflowCheck(out, name))
-    return StageResult(out, types.after(name), checks)
+    return _value_cols(vi, vd, vs, _tp_expr(name))

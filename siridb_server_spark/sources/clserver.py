@@ -32,9 +32,10 @@ the client's precision, exactly like the HTTP route's ``t`` option
 with sources/api.py). Unknown request types get no response, like
 the reference's switch without a default.
 
-Engine calls serialize behind the same one-lock discipline as the
-HTTP transport: SiriEngine is not thread-safe and the reference's
-event loop is single-threaded per database.
+Engine calls serialize behind the engine's own lock (``engine.lock``),
+the one the HTTP transport takes too: SiriEngine is not thread-safe,
+and the reference's event loop is single-threaded per database, so an
+engine served on both ports still runs one request at a time.
 """
 
 from __future__ import annotations
@@ -117,7 +118,7 @@ def _as_str(v) -> str:
 class _Handler(socketserver.BaseRequestHandler):
     def handle(self):
         engine = self.server.engine
-        lock = self.server.lock
+        lock = engine.lock
         authed = None  # per-connection, like client->siridb
         while True:
             try:
@@ -301,7 +302,6 @@ class ClientServer:
             self.port = self._server.server_address[1]
             self.pipe_path = None
         self._server.engine = engine
-        self._server.lock = threading.Lock()
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True)
 

@@ -10,7 +10,8 @@ The cluster/service admin
 routes on the service port (new-pool/new-replica/new-account,
 src/siri/service/) are N/A per SURVEY §2.7 — Spark owns distribution.
 
-Engine calls are serialized behind one lock: SiriEngine is not
+Engine calls are serialized behind the engine's own lock
+(``engine.lock``), shared with the qpack transport: SiriEngine is not
 thread-safe (``_seq``, session caches), and the reference's event
 loop is likewise single-threaded per database.
 """
@@ -107,9 +108,8 @@ class ApiServer:
     (port=0 picks a free one). ``stop()`` shuts the socket down."""
 
     def __init__(self, engine, host: str = "127.0.0.1", port: int = 0):
-        self._lock = threading.Lock()
         self.httpd = ThreadingHTTPServer(
-            (host, port), _make_handler(engine, self._lock))
+            (host, port), _make_handler(engine, engine.lock))
         self.host = host
         self.port = self.httpd.server_address[1]
         self._thread = threading.Thread(

@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.memo import cols, memoized
+from ..functions.pipeline import ROLLUP_PARTIAL_COLS, rollup_partials
 from ..model import POINTS_SCHEMA, TP_STRING
 
 #: the store's file layout: the ``POINTS_SCHEMA`` columns in each
@@ -79,6 +81,11 @@ LOCAL_APPEND_MAX_ROWS = 5_000_000
 
 #: the columns of every points parquet file, in layout order
 _POINT_COLS = POINTS_SCHEMA.names
+
+
+@memoized
+def _read_cols() -> list:
+    return [*cols(*_POINT_COLS), F.col("sid").alias("_sid")]
 
 
 def _pa_points_schema():
@@ -294,6 +301,10 @@ class PointsStore:
         self.path = path
         self.duration_num = duration_num
         self.duration_log = duration_log
+        #: (spark, rollup generation, its scan, valid shards, their
+        #: partials frame): what read_rollup reuses while the
+        #: generation and the valid set stand
+        self._rollup_frame = None
 
     # ------------------------------------------------------------- write
     def _with_partitions(self, df: DataFrame) -> DataFrame:
@@ -438,8 +449,7 @@ class PointsStore:
         self._repair_rewrites()
         if not self._exists():
             return spark.createDataFrame([], POINTS_SCHEMA)
-        return self._read(spark, self.path).select(
-            *_POINT_COLS, F.col("sid").alias("_sid"))
+        return self._read(spark, self.path).select(*_read_cols())
 
     def _exists(self) -> bool:
         return os.path.isdir(self.path) and any(
@@ -1090,8 +1100,6 @@ class PointsStore:
         build. Returns the coverage meta."""
         import json
 
-        from ..functions.pipeline import rollup_partials
-
         if bucket <= 0:
             raise ValueError("rollup bucket must be positive")
         covered_kinds = [
@@ -1142,6 +1150,7 @@ class PointsStore:
             with open(mtmp, "w") as fh:
                 json.dump(meta, fh)
             os.replace(mtmp, self._rollup_meta_path)
+            self._rollup_frame = None
             for entry in os.listdir(self._rollup_root):
                 if (entry.startswith("data-") and entry != f"data-{gen}") \
                         or entry.startswith(".build-"):
@@ -1153,10 +1162,13 @@ class PointsStore:
             self._release_compact_lock()
 
     def read_rollup(self, spark: SparkSession):
-        """(partials_df, stale_keys) — partials_df holds ONLY shards
-        whose current files exactly match the build-time coverage;
-        stale_keys lists "kind:sid" shards (changed, new, or
-        never-covered) the caller must aggregate live from points."""
+        """{"bucket", "partials", "stale", "valid"}: ``partials`` holds
+        ONLY the ``valid`` shards, whose current files exactly match
+        the build-time coverage, projected to ``ROLLUP_PARTIAL_COLS``;
+        ``stale`` lists "kind:sid" shards (changed, new, or
+        never-covered) the caller must aggregate live from points.
+        The partials frame is reused across reads
+        (:meth:`_rollup_partials`)."""
         meta = self.rollup_info()
         if meta is None or "gen" not in meta \
                 or meta.get("v") != 3:
@@ -1186,8 +1198,7 @@ class PointsStore:
         data = self._rollup_data_path(meta["gen"])
         if os.path.isdir(data) and any(
                 f.endswith(".parquet") for f in os.listdir(data)):
-            df = self._read(spark, data, schema=T.StructType.fromJson(
-                meta["schema"]))
+            df = self._rollup_partials(spark, meta, tuple(valid))
         elif valid:
             # the generation the meta names is unreadable (crash or
             # concurrent swap window): covered shards MUST NOT be
@@ -1198,24 +1209,42 @@ class PointsStore:
             df = None
         else:
             df = None
-        if df is not None:
-            if not valid:
-                df = df.limit(0)
-            else:
-                key = F.concat_ws(":", F.col("kind"),
-                                  F.col("sid").cast("string"))
-                if len(valid) <= 256:
-                    df = df.where(key.isin(valid))
-                else:
-                    from ..localdf import arrow_df
-                    vdf = arrow_df(spark, [(v,) for v in valid],
-                                   "k string")
-                    df = (df.withColumn("_k", key)
-                          .join(F.broadcast(vdf),
-                                F.col("_k") == F.col("k"), "semi")
-                          .drop("_k"))
         return {"bucket": meta["bucket"], "partials": df,
                 "stale": stale, "valid": valid}
+
+    def _rollup_partials(self, spark: SparkSession, meta: dict,
+                         valid: tuple) -> DataFrame:
+        """The partials of the ``valid`` shards. The generation's scan
+        is built once per (session, generation) — its data directory
+        never changes after the build, and a new build is a new
+        generation — and the filtered frame once per valid set."""
+        gen = meta["gen"]
+        hit = self._rollup_frame
+        if hit is None or hit[0] is not spark or hit[1] != gen:
+            scan = self._read(spark, self._rollup_data_path(gen),
+                              schema=T.StructType.fromJson(meta["schema"]))
+            hit = (spark, gen, scan, None, None)
+        if hit[3] == valid:
+            return hit[4]
+        df = hit[2]
+        if not valid:
+            df = df.limit(0)
+        else:
+            key = "concat_ws(':', kind, cast(sid as string))"
+            if len(valid) <= 256:
+                # valid keys are "num:<sid>"/"log:<sid>": no quoting
+                df = df.where(
+                    f"{key} IN ({', '.join(repr(v) for v in valid)})")
+            else:
+                from ..localdf import arrow_df
+                vdf = arrow_df(spark, [(v,) for v in valid], "k string")
+                df = (df.withColumn("_k", F.expr(key))
+                      .join(F.broadcast(vdf),
+                            F.col("_k") == F.col("k"), "semi")
+                      .drop("_k"))
+        df = df.select(*cols(*ROLLUP_PARTIAL_COLS))
+        self._rollup_frame = (spark, gen, hit[2], valid, df)
+        return df
 
     def read_points_of(self, spark: SparkSession, keys: list):
         """Points frame restricted to the given "kind:sid" shards
@@ -1228,13 +1257,22 @@ class PointsStore:
                 paths.append(d)
         if not paths:
             return None
-        return self._read(spark, *paths).select(*_POINT_COLS)
+        return self._read(spark, *paths).select(*cols(*_POINT_COLS))
 
     def optimize(self, spark: SparkSession,
                  max_files_per_partition: int = 1,
                  sort: bool = True):
-        """Compaction (ref src/siri/optimize.c:33-55): rewrite
-        fragmented partitions into ``max_files_per_partition`` files.
+        """Compaction (ref src/siri/optimize.c:33-55): rewrite every
+        partition holding more than ``max_files_per_partition`` files
+        into one file.
+
+        All fragmented partitions are rewritten by ONE Spark write:
+        hash-partitioned by (kind, sid), so each partition's rows meet
+        in one task and land as one file under
+        ``_rewrite_tmp(kind, sid)``; each staged partition is then
+        swapped in (a crash before its swap discards it, see
+        :meth:`_repair_rewrites`). A write per partition paid a Spark
+        job floor per fragmented shard.
 
         ``sort=True`` additionally lays each rewritten file out in
         (series, ts, seq) order — the reference's optimize pass
@@ -1245,18 +1283,22 @@ class PointsStore:
         range can't match, the format-native analogue of the
         reference's per-series block index."""
         self._repair_rewrites()
-        for kind, sid, p in list(self._sid_dirs()):
-            files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-            if len(files) <= max_files_per_partition:
-                continue
-            part = self._read(spark, p).select(*_POINT_COLS) \
-                .coalesce(max_files_per_partition)
-            if sort:
-                part = part.sortWithinPartitions("series", "ts", "seq")
-            tmp = self._rewrite_tmp(kind, sid)
-            part.write.mode("overwrite") \
-                .option("compression", "zstd").parquet(tmp)
-            self._swap_partition(tmp, p)
+        frag = [(kind, sid, p) for kind, sid, p in self._sid_dirs()
+                if sum(f.endswith(".parquet") for f in os.listdir(p))
+                > max_files_per_partition]
+        if frag:
+            # the partitioned writer needs its input ordered by the
+            # partition columns; leading with them keeps the sort one
+            order = ("kind", "sid", *(("series", "ts", "seq")
+                                      if sort else ()))
+            (self._read(spark, *(p for _k, _s, p in frag))
+             .repartition("kind", "sid").sortWithinPartitions(*order)
+             .write.partitionBy("kind", "sid").mode("overwrite")
+             .option("compression", "zstd").parquet(self._rewrite_root))
+            for kind, sid, p in frag:
+                tmp = self._rewrite_tmp(kind, sid)
+                if os.path.isdir(tmp):  # absent: the shard held no rows
+                    self._swap_partition(tmp, p)
         shutil.rmtree(self._rewrite_root, ignore_errors=True)
 
     def stats(self) -> dict:

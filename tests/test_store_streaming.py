@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from siridb_server_spark import SiriEngine
+from siridb_server_spark.model import POINTS_SCHEMA
 from siridb_server_spark.sources.store import (
     OPTIMAL_POINTS_PER_SHARD,
     PointsStore,
@@ -719,6 +720,47 @@ def test_optimize_sorts_shards_for_rowgroup_pruning(spark, tmp_path):
     assert rows == sorted(rows)
     # data intact after the sorted rewrite
     assert st.read(spark).count() == 4
+
+
+def test_optimize_rewrites_every_fragmented_shard_in_one_write(
+        spark, tmp_path):
+    """optimize() rewrites all fragmented shards of both kinds with
+    one Spark write: each lands as one (series, ts, seq)-sorted file
+    with its points intact, a shard already compact keeps its file,
+    and the job count does not grow with the number of shards."""
+    import pyarrow.parquet as pq
+
+    st = PointsStore(str(tmp_path / "db"), 100, 50)
+    # 300 ticks of num (duration 100) and log (duration 50) points,
+    # three out-of-order appends each; the last shard gets one file
+    rows = [(f"n{i % 4}", 10 * i + 3, i, i, None, None, 0)
+            for i in range(30)] + \
+           [(f"s{i % 3}", 10 * i + 1, 100 + i, None, None, f"v{i}", 2)
+            for i in range(30)]
+    for part in (rows[::3], rows[1::3], rows[2::3]):
+        st.append_local(spark, list(reversed(part)))
+    st.append_local(spark, [("n0", 5_000, 999, 7, None, None, 0)])
+    before = {(k, s): sorted(os.listdir(p)) for k, s, p in st._sid_dirs()}
+    frag = sorted(ks for ks, fs in before.items() if len(fs) > 1)
+    assert len(frag) >= 6 and {k for k, _s in frag} == {"num", "log"}
+    want = sorted(map(tuple, st.read(spark).collect()))
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    st.optimize(spark)
+    assert len(set(tracker.getJobIdsForGroup()) - jobs) <= 3
+    assert sorted(map(tuple, st.read(spark).collect())) == want
+    for kind, sid, p in st._sid_dirs():
+        files = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+        if (kind, sid) not in frag:
+            assert files == before[(kind, sid)]
+            continue
+        assert len(files) == 1
+        tbl = pq.read_table(os.path.join(p, files[0]))
+        assert tbl.column_names == list(POINTS_SCHEMA.names)
+        key = list(zip(*(tbl[c].to_pylist()
+                         for c in ("series", "ts", "seq"))))
+        assert key == sorted(key)
+    assert not os.path.isdir(st._rewrite_root)
 
 
 def test_sessionize_timeout_tombstone_keeps_seq(spark):
