@@ -46,8 +46,8 @@ from .operators.where import compile_where
 from .plans import nodes as N
 from .plans import timeexpr as TE
 from .plans.parser import Parser
-from .sources.store import PointsStore, catalog_stats, merge_stats, \
-    point_stats
+from .sources.store import CompactLockBusy, PointsStore, catalog_stats, \
+    merge_stats, point_stats
 
 #: defaults mirror include/siri/db/db.h:16-17
 DEFAULT_SELECT_POINTS_LIMIT = 1_000_000
@@ -1173,8 +1173,10 @@ class SiriEngine:
     def _rollup_pipeline(self, pl, stmt, types, ctx: dict):
         """Serve one pipeline from the materialized rollup, or None
         to use the points path. Stale/new shards (files changed
-        since the build) contribute live partials — the hybrid stays
-        exact while the rollup lags behind appends. ``ctx`` memoizes
+        since the build) contribute their points as one-row partials
+        (``P.point_partials``) — the hybrid stays exact while the
+        rollup lags behind appends, and the select aggregates once,
+        in the compose, whatever mix of data it reads. ``ctx`` memoizes
         the rollup read (a driver-side shard listing + parquet scan)
         across the pipelines of one select and carries the
         where-selected ``names`` frame, set whenever the select has a
@@ -1184,7 +1186,7 @@ class SiriEngine:
         buckets are right-closed (R−B, R], so a bucket lies entirely
         inside [t0, t1) iff R ≥ t0+B−1 and R ≤ t1−1 — those come
         from partials untouched; the ≤2 EDGE buckets the range cuts
-        through are re-aggregated live from a point read pruned to
+        through enter as one-row partials from a point read pruned to
         exactly the shards and timestamps of those buckets (the
         two-sided analogue of the reference's shard skipping). A
         range aligned to bucket boundaries therefore reads no points
@@ -1224,19 +1226,19 @@ class SiriEngine:
                 if epts is not None:
                     cond = " OR ".join(f"((ts >= {lo}) AND (ts <= {hi}))"
                                        for lo, hi in edges)
-                    parts.append(P.rollup_partials(epts.where(cond), B))
+                    parts.append(P.point_partials(epts.where(cond), B))
         if roll["stale"]:
             live = self.store.read_points_of(self.spark,
                                              roll["stale"])
             if live is not None:
-                # stale shards aggregate live anyway: filter to the
-                # range first and every bucket (edge or interior)
-                # comes out exact
+                # stale shards' points enter the compose as they
+                # are: filter to the range first and every bucket
+                # (edge or interior) comes out exact
                 if t0 is not None:
                     live = live.where(f"ts >= {t0}")
                 if t1 is not None:
                     live = live.where(f"ts < {t1}")
-                parts.append(P.rollup_partials(live, B))
+                parts.append(P.point_partials(live, B))
         if not parts:
             return None
         partials = parts[0]
@@ -1668,11 +1670,12 @@ class SiriEngine:
                 try:
                     self.store.build_rollup(self.spark,
                                             info["bucket"])
-                except RuntimeError:
+                except CompactLockBusy:
                     # another process holds the compact lock: skip —
                     # coverage mismatches keep answers exact and the
                     # next maintain() refreshes (same busy-skip
-                    # _compact_catalog applies)
+                    # _compact_catalog applies); any other failure
+                    # of the build propagates
                     pass
             self._drop_frames()
             if self._local_files is not None and not self._rekey(

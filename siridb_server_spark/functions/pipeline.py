@@ -158,6 +158,13 @@ def _dsum_small(x: Column) -> Column:
             & (F.abs(x) < F.lit(_DSUM_HUGE)))
 
 
+def _dsum_huge(x: Column) -> Column:
+    """Finite |x| ≥ 1e18: the plain-double fallback class."""
+    return (x.isNotNull() & ~F.isnan(x)
+            & (F.abs(x) >= F.lit(_DSUM_HUGE))
+            & (F.abs(x) != F.lit(float("inf"))))
+
+
 def stable_double_sum(x: Column) -> Column:
     """Partition-order-free double SUM with C-double semantics for
     non-finite values — the aggregate both the points path and the
@@ -177,9 +184,7 @@ def stable_double_sum(x: Column) -> Column:
     n_nan = F.count(F.when(F.isnan(x), 1))
     n_pinf = F.count(F.when(x == F.lit(float("inf")), 1))
     n_ninf = F.count(F.when(x == F.lit(float("-inf")), 1))
-    n_huge = F.count(F.when(x.isNotNull() & ~F.isnan(x)
-                            & (F.abs(x) >= F.lit(_DSUM_HUGE))
-                            & (F.abs(x) != F.lit(float("inf"))), 1))
+    n_huge = F.count(F.when(_dsum_huge(x), 1))
     n_fin = F.count(F.when(_dsum_small(x), 1))
     dsum = F.try_sum(F.when(_dsum_small(x), x)
                      .cast("decimal(38,18)"))
@@ -617,8 +622,9 @@ ROLLUP_FNS = frozenset({"count", "sum", "mean", "min", "max",
                         "first", "last"})
 
 #: canonical partial-column layout (what rollup_partials emits, minus
-#: the grouping keys) — ``store.read_rollup`` projects persisted
-#: partials to this before the engine unions them with live ones
+#: the extra keys, and what point_partials emits) —
+#: ``store.read_rollup`` projects persisted partials to this before the
+#: engine unions them with the one-row partials of live points
 ROLLUP_PARTIAL_COLS = [
     "series", "rbucket", "tp", "cnt", "vi_sum", "vi_oflow",
     "num_sum", "n_nan", "n_pinf", "n_ninf",
@@ -638,10 +644,7 @@ def _stable_sum_partials(x: Column, p: str) -> dict:
     return {
         f"{p}_cnt": F.count(x),
         f"{p}_fin": F.count(F.when(_dsum_small(x), 1)),
-        f"{p}_huge": F.count(
-            F.when(x.isNotNull() & ~F.isnan(x)
-                   & (F.abs(x) >= F.lit(_DSUM_HUGE))
-                   & (F.abs(x) != F.lit(float("inf"))), 1)),
+        f"{p}_huge": F.count(F.when(_dsum_huge(x), 1)),
         f"{p}_dsum": F.try_sum(F.when(_dsum_small(x), x)
                                .cast("decimal(38,18)")),
         f"{p}_psum": F.sum(x),
@@ -669,9 +672,10 @@ def _compose_stable_sum(p: str, n_nan, n_pinf, n_ninf) -> Column:
 
 def rollup_partials(df: DataFrame, bucket: int,
                     extra_keys: list = ()) -> DataFrame:
-    """Per-(extra_keys..., series, rollup-bucket) partial aggregates.
-    Shared by the store's build job and the engine's live fallback
-    for stale shards so both sides compose identically.
+    """Per-(extra_keys..., series, rollup-bucket) partial aggregates:
+    the store's rollup build (``PointsStore.build_rollup``). A select
+    never aggregates points into partials; its live points enter the
+    compose one row each through :func:`point_partials`.
 
     ``vi_oflow`` records an int64 overflow INSIDE one partial
     (try_sum went NULL with int rows present) so composition can
@@ -681,22 +685,16 @@ def rollup_partials(df: DataFrame, bucket: int,
     and num (mean numerator), plus the shared non-finite class
     counts — they let double-typed sum/mean compose bit-identically
     to the points path's :func:`stable_double_sum`."""
+    keys, aggs, out = _partials_cols(bucket)
     extra = cols(*extra_keys)
-    aggs, out = _partials_cols()
-    return (df.groupBy(*extra, *_partials_keys(bucket)).agg(*aggs)
+    return (df.groupBy(*extra, *keys).agg(*aggs)
             .select(*extra, *out))
 
 
 @memoized
-def _partials_keys(bucket: int) -> list:
-    return [*cols("series"), bucket_of("ts", bucket).alias("rbucket")]
-
-
-@memoized
-def _partials_cols() -> tuple:
-    """(aggregates, output projection after the extra keys) of
-    :func:`rollup_partials`: one list for every bucket and extra-key
-    set, so the store's build and a select's live fallback share it."""
+def _partials_cols(bucket: int) -> tuple:
+    """(grouping keys, aggregates, output projection after the extra
+    keys) of :func:`rollup_partials`."""
     # typed first/last per bucket ((ts, seq) order, insert-order
     # ties) so bucketed first()/last() compose from partials too —
     # argmin/argmax fold associatively across partials
@@ -730,7 +728,68 @@ def _partials_cols() -> tuple:
         .otherwise(0).alias("vi_oflow")
     out = [*cols("series", "rbucket", *(k for k in aggs if k != "n_int")),
            oflow]
-    return [v.alias(k) for k, v in aggs.items()], out
+    keys = [*cols("series"), bucket_of("ts", bucket).alias("rbucket")]
+    return keys, [v.alias(k) for k, v in aggs.items()], out
+
+
+def point_partials(df: DataFrame, bucket: int) -> DataFrame:
+    """Each point as the ``ROLLUP_PARTIAL_COLS`` row that
+    :func:`rollup_partials` would give a group holding only that
+    point — a projection, no aggregation. The compose aggregates are
+    associative, so a select unions these rows with the stored
+    partials and aggregates ONCE (:func:`compose_bucket_agg`) however
+    its data splits into valid shards, stale shards and cut edge
+    buckets. An int sum overflows only where the points path's does:
+    no per-partial int64 sum is taken."""
+    return df.select(*_point_partials_cols(bucket))
+
+
+@memoized
+def _point_partials_cols(bucket: int) -> list:
+    """The projection of :func:`point_partials`, in
+    ``ROLLUP_PARTIAL_COLS`` order and with the types of the stored
+    partials."""
+    def one_if(cond: Column) -> Column:
+        return F.when(cond, 1).otherwise(0).cast("long")
+
+    num = _num()
+    dbl = F.col("val_dbl")
+    vi = F.col("val_int")
+    point = F.struct("ts", "seq", "val_int", "val_dbl", "val_str")
+
+    def stable(x: Column, p: str) -> dict:
+        # _stable_sum_partials of a single term
+        return {
+            f"{p}_cnt": one_if(x.isNotNull()),
+            f"{p}_fin": one_if(_dsum_small(x)),
+            f"{p}_huge": one_if(_dsum_huge(x)),
+            f"{p}_dsum": F.when(_dsum_small(x), x)
+            .cast("decimal(38,18)"),
+            f"{p}_psum": x,
+        }
+
+    out = {
+        "series": F.col("series"),
+        "rbucket": bucket_of("ts", bucket),
+        "tp": F.col("tp"),
+        "cnt": F.lit(1).cast("long"),
+        "vi_sum": vi,
+        "vi_oflow": F.lit(0),
+        "num_sum": num,
+        "n_nan": one_if(F.isnan(dbl)),
+        "n_pinf": one_if(dbl == F.lit(float("inf"))),
+        "n_ninf": one_if(dbl == F.lit(float("-inf"))),
+        **stable(dbl, "vd"),
+        **stable(num, "nm"),
+        "vi_min": vi,
+        "vi_max": vi,
+        "vd_min": dbl,
+        "vd_max": dbl,
+        "f": point,
+        "l": point,
+    }
+    assert list(out) == ROLLUP_PARTIAL_COLS
+    return [v.alias(k) for k, v in out.items()]
 
 
 def compose_bucket_agg(partials: DataFrame, name: str, group_by: int,

@@ -79,6 +79,12 @@ ARROW_STATS_MAX_BYTES = 64 * 1024 * 1024
 #: pyarrow path (zero Spark jobs); beyond it, distribute via Spark
 LOCAL_APPEND_MAX_ROWS = 5_000_000
 
+
+class CompactLockBusy(RuntimeError):
+    """Another live process holds the store's compact lock: the
+    operation that needed it did not run (a later one may)."""
+
+
 #: the columns of every points parquet file, in layout order
 _POINT_COLS = POINTS_SCHEMA.names
 
@@ -1096,8 +1102,9 @@ class PointsStore:
         unit as ts). Serialized behind the compact lock so the file
         listing and the aggregation read see the same shards; appends
         landing DURING the build simply show up as coverage
-        mismatches and fall back to live partials until the next
-        build. Returns the coverage meta."""
+        mismatches and are read as points until the next build.
+        Returns the coverage meta; raises :class:`CompactLockBusy`
+        when another process holds the lock."""
         import json
 
         if bucket <= 0:
@@ -1112,7 +1119,7 @@ class PointsStore:
                 f"duration ({self.duration_num} num / "
                 f"{self.duration_log} log)")
         if not self._acquire_compact_lock():
-            raise RuntimeError("rollup build: compact lock busy")
+            raise CompactLockBusy("rollup build: compact lock busy")
         try:
             listing = {
                 key: files for key, files in

@@ -11,7 +11,10 @@ per-generation frame (``PointsStore._rollup_partials``). These tests pin:
   IDs stripped, against goldens (``plan_golden.json``) recorded from
   the previous revision of the engine, whose pipeline code rebuilt every
   Column on every select (``python tests/test_plan_build.py --record
-  tests/plan_golden.json`` with that revision on ``PYTHONPATH``);
+  tests/plan_golden.json`` with that revision on ``PYTHONPATH``). The
+  ``between`` and ``stale:`` entries were re-recorded when live points
+  began to enter the rollup compose as one-row partials: their plans
+  hold one ``Aggregate`` where they held two;
 - that the reused rollup frame follows every change of the store;
 - that the memo never serves a handle of a JVM that is gone;
 - the transports' shared engine lock and the exact ``arrow_df``.

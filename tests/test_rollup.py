@@ -492,3 +492,179 @@ def test_phrase_search_tokenizes_phrase_like_text(spark):
                                "doc_id bigint, text string")
     got = TX.phrase_search(df, "foo, bar").collect()
     assert len(got) == 1 and got[0]["first_pos"] == 1
+
+
+# ------------------------------------------------- one-row point partials
+def _special_points(seed: int) -> list:
+    """Seeded points over int, double and string series: duplicate ts
+    (insert-order seq ties), NaN, ±inf, -0.0, |x| ≥ 1e18 and int64
+    values near overflow. Huge doubles are multiples of 2**60 and
+    near-overflow ints multiples of 2**14, each series one-signed, so
+    the documented order-dependent fallbacks (the plain double fold,
+    an intermediate int64 overflow) give one answer in any order."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    seq = 0
+
+    def add(series, ts, v):
+        nonlocal seq
+        seq += 1
+        vi = v if isinstance(v, int) else None
+        vd = v if isinstance(v, float) else None
+        vs = v if isinstance(v, str) else None
+        tp = 0 if vi is not None else (1 if vd is not None else 2)
+        rows.append((series, ts, seq, vi, vd, vs, tp))
+
+    def sign():
+        return rng.choice((-1, 1))
+
+    for _ in range(120):
+        ts = rng.randrange(1, 400)
+        add("i-plain", ts, rng.randrange(-1000, 1000))
+        if rng.random() < 0.3:    # same ts, later seq
+            add("i-plain", ts, rng.randrange(-1000, 1000))
+        add("d-plain", ts, sign() * round(rng.uniform(1, 99), 2))
+        add("s-str", rng.randrange(1, 400), rng.choice("abcdef") * 2)
+    for _ in range(25):
+        add("i-big", rng.randrange(1, 400),
+            2 ** 62 + rng.randrange(1, 64) * 2 ** 14)
+        add("i-neg", rng.randrange(1, 400),
+            -(2 ** 62) - rng.randrange(1, 64) * 2 ** 14)
+        add("d-huge", rng.randrange(1, 400),
+            float(rng.randrange(1, 8) * 2 ** 60))
+    specials = [float("nan"), float("inf"), float("-inf"), -0.0]
+    for _ in range(60):
+        v = rng.choice(specials + [sign() * round(rng.uniform(1, 9), 1)])
+        add("d-special", rng.randrange(1, 400), v)
+    add("s-str", 77, "")
+    add("s-str", 77, "ümlaut")
+    return rows
+
+
+def _rows(df) -> list:
+    # repr: NaN-safe, and -0.0 stays apart from 0.0
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_point_partials_compose_like_rollup_partials_and_points(spark):
+    """For every rollup-servable aggregate and two (rollup, query)
+    bucket pairs, composing one-row point partials answers exactly as
+    composing aggregated partials and as the points path."""
+    from siridb_server_spark.functions import pipeline as P
+    from siridb_server_spark.localdf import arrow_df
+    from siridb_server_spark.model import TP_DOUBLE, TP_INT, TP_STRING
+
+    pts = arrow_df(spark, _special_points(11),
+                   "series string, ts long, seq long, val_int long, "
+                   "val_dbl double, val_str string, tp int") \
+        .repartition(3).cache()
+    numeric = pts.where("tp != 2")
+    every = P.TypeSet(frozenset({TP_INT, TP_DOUBLE, TP_STRING}))
+    nums = P.TypeSet(frozenset({TP_INT, TP_DOUBLE}))
+    try:
+        # the projection carries the stored partials' layout and types
+        stored = P.rollup_partials(pts, 10) \
+            .select(*P.ROLLUP_PARTIAL_COLS).schema
+        single = P.point_partials(pts, 10).schema
+        assert [(f.name, f.dataType) for f in single] \
+            == [(f.name, f.dataType) for f in stored]
+        for B, G in ((10, 30), (60, 60)):
+            for name in sorted(P.ROLLUP_FNS):
+                df, types = (pts, every) \
+                    if name in ("count", "first", "last") \
+                    else (numeric, nums)
+                want = _rows(P.apply_bucket_agg(df, name, G, 0,
+                                                types).df)
+                rolled = _rows(P.compose_bucket_agg(
+                    P.rollup_partials(df, B), name, G, types).df)
+                single = _rows(P.compose_bucket_agg(
+                    P.point_partials(df, B), name, G, types).df)
+                assert rolled == want, (name, B, G)
+                assert single == want, (name, B, G)
+    finally:
+        pts.unpersist()
+
+
+def _jobs_of(spark, group: str, fn):
+    """(fn(), the Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "rollup job count", False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stale_rollup_select_runs_no_more_jobs_than_points(store_eng,
+                                                           spark):
+    """A select over stale shards aggregates once: its live points
+    enter the compose as one-row partials, so it runs no more Spark
+    jobs than the same select on the points path."""
+    store_eng.enable_rollup(600)
+    store_eng.insert({"cpu-int": [[650, 100], [50, 1]],
+                      "mem-dbl": [[20, 4.5]]})
+    assert store_eng.store.read_rollup(spark)["stale"]
+    for i, q in enumerate(("select max(600) from /.*/ where type != string",
+                           "select sum(1200) from 'cpu-int' between 50 "
+                           "and 800")):
+        runs = {}
+        for flag in (True, False):
+            store_eng.rollup_enabled = flag
+            try:
+                store_eng.query(q)  # warm
+                runs[flag] = _jobs_of(spark, f"stale-{i}-{flag}",
+                                      lambda: store_eng.query(q))
+            finally:
+                store_eng.rollup_enabled = True
+        (got, rollup_jobs), (want, points_jobs) = runs[True], runs[False]
+        assert got == want, q
+        assert rollup_jobs <= points_jobs, (q, rollup_jobs, points_jobs)
+
+
+def test_maintain_skips_rollup_refresh_while_compact_lock_held(store_eng):
+    """Another compactor holding the compact lock skips the refresh
+    (and the catalog compaction); maintain() still succeeds and the
+    next one refreshes."""
+    store_eng.enable_rollup(600)
+    store = store_eng.store
+    gen = store.rollup_info()["gen"]
+    store_eng.insert({"cpu-int": [[650, 100]]})
+    assert store._acquire_compact_lock()
+    try:
+        assert store_eng.maintain() == {
+            "success_msg": "Maintenance finished."}
+        assert store.rollup_info()["gen"] == gen
+    finally:
+        store._release_compact_lock()
+    a, b = _both(store_eng, "select sum(600) from 'cpu-int'")
+    assert a == b
+    store_eng.maintain()
+    assert store.rollup_info()["gen"] != gen
+
+
+def test_maintain_raises_when_rollup_build_fails(store_eng, monkeypatch):
+    """A failed rollup refresh is an error of maintain(), not a
+    silent skip; the compact lock is released behind it."""
+    import os
+
+    from pyspark.errors import PySparkRuntimeError
+
+    from siridb_server_spark.sources import store as S
+
+    store_eng.enable_rollup(600)
+    store_eng.insert({"cpu-int": [[650, 100]]})
+
+    def fail(*_a, **_k):
+        raise PySparkRuntimeError(message="injected build failure")
+
+    monkeypatch.setattr(S, "rollup_partials", fail)
+    with pytest.raises(PySparkRuntimeError, match="injected"):
+        store_eng.maintain()
+    assert not os.path.exists(store_eng.store._compact_lock_path)
+    monkeypatch.undo()
+    a, b = _both(store_eng, "select sum(600) from 'cpu-int'")
+    assert a == b
