@@ -741,14 +741,16 @@ def point_partials(df: DataFrame, bucket: int) -> DataFrame:
     its data splits into valid shards, stale shards and cut edge
     buckets. An int sum overflows only where the points path's does:
     no per-partial int64 sum is taken."""
-    return df.select(*_point_partials_cols(bucket))
+    return df.select(*point_partials_cols(bucket))
 
 
 @memoized
-def _point_partials_cols(bucket: int) -> list:
+def point_partials_cols(bucket: int) -> list:
     """The projection of :func:`point_partials`, in
     ``ROLLUP_PARTIAL_COLS`` order and with the types of the stored
-    partials."""
+    partials. ``PointsStore.build_rollup`` builds it with the rollup
+    (~1,300 py4j round trips, once per process and bucket), so the
+    first select that reads stale shards does not."""
     def one_if(cond: Column) -> Column:
         return F.when(cond, 1).otherwise(0).cast("long")
 

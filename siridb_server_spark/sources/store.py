@@ -53,7 +53,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.memo import cols, memoized
-from ..functions.pipeline import ROLLUP_PARTIAL_COLS, rollup_partials
+from ..functions.pipeline import ROLLUP_PARTIAL_COLS, \
+    point_partials_cols, rollup_partials
 from ..model import POINTS_SCHEMA, TP_STRING
 
 #: the store's file layout: the ``POINTS_SCHEMA`` columns in each
@@ -78,6 +79,11 @@ ARROW_STATS_MAX_BYTES = 64 * 1024 * 1024
 #: driver-held row batches up to this size write through the pure
 #: pyarrow path (zero Spark jobs); beyond it, distribute via Spark
 LOCAL_APPEND_MAX_ROWS = 5_000_000
+
+#: an ``optimize`` whose fragmented shards' files total up to this
+#: many bytes rewrites them in-process with pyarrow, one shard at a
+#: time (zero Spark jobs); beyond it, one distributed Spark write
+LOCAL_OPTIMIZE_MAX_BYTES = 64 * 1024 * 1024
 
 
 class CompactLockBusy(RuntimeError):
@@ -1143,6 +1149,10 @@ class PointsStore:
                 schema = partials.schema.jsonValue()
             else:
                 os.makedirs(tmp, exist_ok=True)
+            # the Columns a select of this rollup's stale shards
+            # projects its points with (memoized: a no-op after the
+            # first build of the bucket in this process)
+            point_partials_cols(bucket)
             # commit protocol: land the new generation dir, point the
             # meta at it atomically, THEN drop older generations — a
             # crash at any step leaves a consistent (meta, data) pair
@@ -1273,13 +1283,16 @@ class PointsStore:
         partition holding more than ``max_files_per_partition`` files
         into one file.
 
-        All fragmented partitions are rewritten by ONE Spark write:
-        hash-partitioned by (kind, sid), so each partition's rows meet
-        in one task and land as one file under
-        ``_rewrite_tmp(kind, sid)``; each staged partition is then
-        swapped in (a crash before its swap discards it, see
-        :meth:`_repair_rewrites`). A write per partition paid a Spark
-        job floor per fragmented shard.
+        Fragmented partitions whose files total at most
+        LOCAL_OPTIMIZE_MAX_BYTES are rewritten in-process with
+        pyarrow (:meth:`_rewrite_local`, no Spark job: the shards an
+        ingest cycle fragments are small, and a Spark write's job
+        floor cost more than the rewrite itself). Larger ones are
+        rewritten by ONE Spark write: hash-partitioned by (kind, sid),
+        so each partition's rows meet in one task and land as one
+        file under ``_rewrite_tmp(kind, sid)``. Either way each staged
+        partition is then swapped in (a crash before its swap discards
+        it, see :meth:`_repair_rewrites`).
 
         ``sort=True`` additionally lays each rewritten file out in
         (series, ts, seq) order — the reference's optimize pass
@@ -1294,19 +1307,48 @@ class PointsStore:
                 if sum(f.endswith(".parquet") for f in os.listdir(p))
                 > max_files_per_partition]
         if frag:
-            # the partitioned writer needs its input ordered by the
-            # partition columns; leading with them keeps the sort one
-            order = ("kind", "sid", *(("series", "ts", "seq")
-                                      if sort else ()))
-            (self._read(spark, *(p for _k, _s, p in frag))
-             .repartition("kind", "sid").sortWithinPartitions(*order)
-             .write.partitionBy("kind", "sid").mode("overwrite")
-             .option("compression", "zstd").parquet(self._rewrite_root))
+            size = sum(os.path.getsize(f) for _k, _s, p in frag
+                       for f in self._parquet_files(p))
+            if size <= LOCAL_OPTIMIZE_MAX_BYTES:
+                self._rewrite_local(frag, sort)
+            else:
+                # the partitioned writer needs its input ordered by
+                # the partition columns; leading with them keeps the
+                # sort one
+                order = ("kind", "sid", *(("series", "ts", "seq")
+                                          if sort else ()))
+                (self._read(spark, *(p for _k, _s, p in frag))
+                 .repartition("kind", "sid").sortWithinPartitions(*order)
+                 .write.partitionBy("kind", "sid").mode("overwrite")
+                 .option("compression", "zstd")
+                 .parquet(self._rewrite_root))
             for kind, sid, p in frag:
                 tmp = self._rewrite_tmp(kind, sid)
                 if os.path.isdir(tmp):  # absent: the shard held no rows
                     self._swap_partition(tmp, p)
         shutil.rmtree(self._rewrite_root, ignore_errors=True)
+
+    def _rewrite_local(self, frag: list, sort: bool):
+        """The in-process half of :meth:`optimize`: each fragmented
+        shard's files are read with pyarrow, ordered by (series, ts,
+        seq) and staged as one file under ``_rewrite_tmp(kind, sid)``,
+        exactly where the Spark write stages it; the caller swaps.
+        At most one shard is held in memory."""
+        schema = _pa_points_schema()
+        for kind, sid, p in frag:
+            tbl = pq.read_table(self._parquet_files(p),
+                                columns=_POINT_COLS, schema=schema)
+            if not tbl.num_rows:
+                continue  # as the Spark write: no rows, nothing staged
+            if sort:
+                tbl = tbl.sort_by([("series", "ascending"),
+                                   ("ts", "ascending"),
+                                   ("seq", "ascending")])
+            tmp = self._rewrite_tmp(kind, sid)
+            os.makedirs(tmp, exist_ok=True)
+            pq.write_table(
+                tbl, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"),
+                compression="zstd")
 
     def stats(self) -> dict:
         out = {"partitions": 0, "files": 0, "bytes": 0}

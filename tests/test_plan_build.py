@@ -173,6 +173,22 @@ def test_stale_rollup_select_plans_in_few_round_trips(spark, tmp_path,
     assert n <= MAX_ROUND_TRIPS, n
 
 
+def test_rollup_build_prepares_the_stale_select_projection(
+        spark, tmp_path, monkeypatch, py4j_calls):
+    """The rollup build leaves the one-row projection of its bucket
+    (``P.point_partials_cols``) in the memo, so the first select of a
+    process that reads stale shards does not build it (~1,300 round
+    trips cold)."""
+    from siridb_server_spark.functions import memo
+    from siridb_server_spark.functions import pipeline as P
+
+    monkeypatch.setattr(memo, "MEMO", memo.ColumnMemo())
+    build_store(spark, str(tmp_path / "db"))
+    before = py4j_calls[0]
+    P.point_partials_cols(3600)
+    assert py4j_calls[0] == before
+
+
 def test_optimized_plans_match_the_unmemoized_plans(spark, tmp_path):
     with open(GOLDEN) as fh:
         want = json.load(fh)

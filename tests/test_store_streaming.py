@@ -723,13 +723,17 @@ def test_optimize_sorts_shards_for_rowgroup_pruning(spark, tmp_path):
 
 
 def test_optimize_rewrites_every_fragmented_shard_in_one_write(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """optimize() rewrites all fragmented shards of both kinds with
     one Spark write: each lands as one (series, ts, seq)-sorted file
     with its points intact, a shard already compact keeps its file,
     and the job count does not grow with the number of shards."""
     import pyarrow.parquet as pq
 
+    from siridb_server_spark.sources import store as store_mod
+
+    # the store is tiny: force the Spark write over the pyarrow one
+    monkeypatch.setattr(store_mod, "LOCAL_OPTIMIZE_MAX_BYTES", -1)
     st = PointsStore(str(tmp_path / "db"), 100, 50)
     # 300 ticks of num (duration 100) and log (duration 50) points,
     # three out-of-order appends each; the last shard gets one file
@@ -761,6 +765,71 @@ def test_optimize_rewrites_every_fragmented_shard_in_one_write(
                          for c in ("series", "ts", "seq"))))
         assert key == sorted(key)
     assert not os.path.isdir(st._rewrite_root)
+
+
+def test_optimize_pyarrow_rewrite_matches_the_spark_write(
+        spark, tmp_path, monkeypatch):
+    """Below LOCAL_OPTIMIZE_MAX_BYTES optimize() rewrites in-process
+    with pyarrow and runs no Spark job, and each shard's new file holds
+    the same rows, in the same (series, ts, seq) order and with the
+    same schema, as the Spark write makes of the same store."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from siridb_server_spark.sources import store as store_mod
+
+    big = 2**63 - 1
+    rows = [(s, ts, seq, vi, vd, vs, tp)
+            for seq, (s, ts, vi, vd, vs, tp) in enumerate([
+                ("é|1", 30, 1, None, None, 0),
+                ("Z", 30, -big - 1, None, None, 0),
+                ("a", 12, big, None, None, 0),
+                ("a", 12, 0, None, None, 0),  # duplicate ts: seq orders
+                ("ß", 7, None, float("nan"), None, 1),
+                ("ß", 3, None, float("-inf"), None, 1),
+                ("a b", 44, None, -0.0, None, 1),
+                ("a b", 41, None, float("inf"), None, 1),
+                ("log", 5, None, None, "", 2),
+                ("log", 25, None, None, "ünï", 2),
+                ("\u65e5", 130, 4, None, None, 0),
+                ("\u65e5", 101, 5, None, None, 0),
+            ])]
+    root = tmp_path / "spark"
+    st = PointsStore(str(root), 100, 50)
+    # one part written by Spark, two by pyarrow: the pyarrow rewrite
+    # reads both writers' files
+    st.append_df(spark.createDataFrame(rows[::3], POINTS_SCHEMA))
+    for part in (rows[1::3], rows[2::3]):
+        st.append_local(spark, list(reversed(part)))
+    shutil.copytree(root, tmp_path / "local")
+    local = PointsStore(str(tmp_path / "local"), 100, 50)
+
+    def rewritten(store):
+        out = {}
+        for kind, sid, p in store._sid_dirs():
+            [f] = [f for f in os.listdir(p) if f.endswith(".parquet")]
+            out[(kind, sid)] = pq.read_table(os.path.join(p, f))
+        return out
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    local.optimize(spark)
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    assert not os.path.isdir(local._rewrite_root)
+    monkeypatch.setattr(store_mod, "LOCAL_OPTIMIZE_MAX_BYTES", -1)
+    st.optimize(spark)
+    assert set(tracker.getJobIdsForGroup()) - jobs
+    want, got = rewritten(st), rewritten(local)
+    assert sorted(got) == sorted(want) and len(got) >= 3
+    for key, tbl in want.items():
+        assert got[key].schema.names == tbl.schema.names
+        assert [f.type for f in got[key].schema] == \
+            [f.type for f in tbl.schema]
+        # NaN != NaN: compare the repr of each row
+        assert repr(got[key].to_pylist()) == repr(tbl.to_pylist()), key
+    assert sorted(map(repr, local.read(spark).collect())) == \
+        sorted(map(repr, st.read(spark).collect()))
 
 
 def test_sessionize_timeout_tombstone_keeps_seq(spark):
