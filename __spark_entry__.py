@@ -1825,22 +1825,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load(spark, sf_dir, "documents").where("doc_id < 300"),
             threshold=0.5, shingle_n=3)
 
-    def _ev_fan(base, sf_dir):
-        """Events-family fan-out: ADJUDICATED OUT (round 14). The
-        user_id fan-out (see localdf.fan_out_keyed) was applied here
-        on the ts_* rationale, but these entries are sub-second
-        aggregates, not row-expanders: a dedicated interleaved A/B
-        (fan vs identity, 2 rounds, min-of-8) measured the fan side
-        slower on balance (family sum 6.53 vs 6.21 s; cohorts 0.385
-        vs 0.291, rfm 0.220 vs 0.174), and best-of-12-samples full
-        bench mins showed every events entry 0.74-0.88x vs the r13
-        tree — ~0.1 s of extra task-scheduling overhead per entry
-        from pinning 32 partitions under a ~0.3 s aggregate, for a
-        fan-out that is a no-op at any realistic scale anyway.
-        Kept as an identity hook so the decision is code-visible."""
-        del sf_dir
-        return base
-
     def events_cohorts(spark, sf_dir):
         """Weekly cohort-retention matrix: cohort = a user's first
         active week; one distinct (user, week) reduction, a tiny
@@ -1848,12 +1832,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         on user-sized data, no window over the full event stream."""
         week = 7 * 24 * 3600 * 10 ** 9
         ev = load(spark, sf_dir, "events")
-        wk = _ev_fan(ev.select(
+        wk = (ev.select(
             F.col("user_id").cast("long").alias("user_id"),
             epoch_ns(ev).alias("ets"))
             .select("user_id",
-                    F.expr(f"ets div {week}").alias("week")),
-            sf_dir).distinct()
+                    F.expr(f"ets div {week}").alias("week"))
+            .distinct())
         first = wk.groupBy("user_id").agg(
             F.min("week").alias("cohort"))
         return (wk.join(first, "user_id")
@@ -1871,12 +1855,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         user (single hash shuffle), one counting aggregate over
         |types|² keys, a broadcast per-source total."""
         ev = load(spark, sf_dir, "events")
-        e = _ev_fan(ev.select(
+        e = ev.select(
             F.col("user_id").cast("long").alias("user_id"),
             F.col("event_type").alias("et"),
             epoch_ns(ev).alias("ts"),
-            F.col("event_id").cast("long").alias("event_id")),
-            sf_dir)
+            F.col("event_id").cast("long").alias("event_id"))
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         pairs = (e.withColumn("nxt", F.lead("et").over(w))
                  .where(F.col("nxt").isNotNull())
@@ -3449,11 +3432,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         often do users click?" One (user, type) lag window, one
         counting agg; exact interpolated median."""
         ev = load(spark, sf_dir, "events")
-        base = _ev_fan(ev.select(F.col("user_id").cast("long")
+        base = ev.select(F.col("user_id").cast("long")
                          .alias("user_id"), "event_type",
                          epoch_ns(ev).alias("ts"),
-                         F.col("event_id").cast("long")
-                         .alias("eid")), sf_dir)
+                         F.col("event_id").cast("long").alias("eid"))
         w = Window.partitionBy("user_id", "event_type") \
             .orderBy("ts", "eid")
         # seconds, not raw ns: an avg over ~1e14-ns gaps carries a
@@ -3490,9 +3472,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         observed day range drop out via the inner join with DAU."""
         from siridb_server_spark.functions.stable import int_ppm
         ev = load(spark, sf_dir, "events")
-        dd = _ev_fan(ev.select(
+        dd = ev.select(
             F.unix_date(F.to_date("ts")).cast("long")
-            .alias("d"), "user_id"), sf_dir).distinct()
+            .alias("d"), "user_id").distinct()
         dau = dd.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
         ex = dd.select(
             F.explode(F.sequence(F.col("d"), F.col("d") + F.lit(6)))
@@ -3514,10 +3496,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rollup; every output column is an exact integer."""
         from siridb_server_spark.functions.stable import scaled_term
         ev = load(spark, sf_dir, "events")
-        return (_ev_fan(
-            ev.select("user_id", epoch_ns(ev).alias("ts"),
-                      scaled_term(F.col("value"), 2)
-                      .alias("vc")), sf_dir)
+        return (ev.select("user_id", epoch_ns(ev).alias("ts"),
+                          scaled_term(F.col("value"), 2).alias("vc"))
                 .groupBy("user_id")
                 .agg(F.max("ts").alias("last_ts"),
                      F.count(F.lit(1)).alias("n_events"),
@@ -3532,10 +3512,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sessionize window (one user shuffle); the rollup groupBy
         shares the same partitioning."""
         ev = load(spark, sf_dir, "events")
-        base = _ev_fan(ev.select(
+        base = ev.select(
             F.col("event_id").cast("long").alias("event_id"),
             F.col("user_id").cast("long").alias("user_id"),
-            "event_type", epoch_ns(ev).alias("ts")), sf_dir)
+            "event_type", epoch_ns(ev).alias("ts"))
         s = TSO.sessionize(base, gap=3_600_000_000_000,
                            seq_col="event_id")
         return (s.groupBy("user_id", "session_id")
@@ -3551,10 +3531,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Ordered 3-step funnel view → click → purchase: how many
         users reach each step with strict time ordering."""
         ev = load(spark, sf_dir, "events")
-        base = _ev_fan(ev.select(F.col("user_id").cast("long")
-                         .alias("user_id"),
-                         epoch_ns(ev).alias("ts"), "event_type"),
-                       sf_dir)
+        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
+                         epoch_ns(ev).alias("ts"), "event_type")
         per_user = TSO.funnel_steps(
             base, ["view", "click", "purchase"])
         return per_user.agg(
@@ -3574,10 +3552,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cross-engine. The number a funnel report needs before
         anyone compares two rates."""
         ev = load(spark, sf_dir, "events")
-        base = _ev_fan(ev.select(F.col("user_id").cast("long")
-                         .alias("user_id"),
-                         epoch_ns(ev).alias("ts"), "event_type"),
-                       sf_dir)
+        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
+                         epoch_ns(ev).alias("ts"), "event_type")
         per_user = TSO.funnel_steps(
             base, ["view", "click", "purchase"])
         c = per_user.agg(F.count("t1").alias("k1"),
@@ -3605,10 +3581,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Minutes-active per user: union of 5-minute activity
         intervals opened by each event (overlaps merge)."""
         ev = load(spark, sf_dir, "events")
-        base = _ev_fan(
-            ev.select(F.col("user_id").cast("long")
-                      .alias("user_id"), epoch_ns(ev).alias("ts")),
-            sf_dir)
+        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
+                         epoch_ns(ev).alias("ts"))
         return TSO.interval_coverage(base, length=300_000_000_000)
 
     q["events_coverage"] = events_coverage

@@ -188,44 +188,35 @@ BENCH_QUERIES = [
 ]
 
 
-def _aqe_min_partition_bytes(sf_dir: str, cpus: int) -> int:
-    """Stock AQE coalescing floor (1 MB, Spark's default). r13
-    derived a smaller floor from input size here to parallelize
-    row-expanding operators; the driver's three data points
-    (r12@32 stock 94.0 s, r13@8 clamped-to-stock 92.6 s, r13@32
-    derived-floor 101.7 s) showed the session-global knob was
-    net-negative at 32 cores — it taxed every multi-join plan
-    (tpch_q21ish 0.73→1.30 s) to speed a handful of entries. r14
-    removes it: the operators that needed post-shuffle parallelism
-    on small inputs now pin it per-operator via
-    localdf.fan_out_keyed (same single exchange, no-op at realistic
-    sizes), so the harness runs stock and the product owns the fix.
-    SPARK_GRAFT_AQE_FLOOR stays as an explicit-sweep-only knob."""
-    env = os.environ.get("SPARK_GRAFT_AQE_FLOOR")
-    if env:
-        return int(env)
-    return 1 << 20
-
-
-def main():
+def session(app: str = "sparksiri-bench"):
+    """The timing harnesses' SparkSession (bench.py and
+    scripts/qbench.py): local[CPUS] with CPUS shuffle partitions and
+    AQE coalescing at Spark's stock 1 MB floor. A smaller floor
+    derived from input size was net-negative at 32 cores
+    (OPTIMIZATION_r14.md); operators that need post-shuffle
+    parallelism on small inputs pin it themselves
+    (localdf.fan_out_keyed)."""
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sparksiri-bench")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                str(_aqe_min_partition_bytes(SF_DIR, CPUS)))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark
+
+
+def main():
+    spark = session()
 
     import __spark_entry__ as entry
 

@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 EXPLAIN_DIR = os.environ.get("SPARK_GRAFT_EXPLAIN_DIR")
 
@@ -34,25 +33,8 @@ def main():
         suffix = args[i + 1]
         del args[i:i + 2]
 
-    from pyspark.sql import SparkSession
-
-    from bench import _aqe_min_partition_bytes
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sparksiri-qbench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                str(_aqe_min_partition_bytes(SF_DIR, CPUS)))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from bench import session
+    spark = session("sparksiri-qbench")
 
     import __spark_entry__ as entry
     qs = entry.queries()

@@ -82,7 +82,6 @@ class SiriEngine:
         self._local_cat: dict | None = None
         self._local_files: frozenset | None = None
         self._seq = 0
-        self._multi_cache: DataFrame | None = None
         # serve count/sum/mean/min/max bucketed selects from the
         # store's materialized rollup when one is built (see
         # enable_rollup); False forces the points path
@@ -281,9 +280,9 @@ class SiriEngine:
         snapshot is kept only when the catalog files after the append
         are exactly the ones it reflected plus this append's delta
         files (carried through an insert-triggered compaction by
-        :meth:`_rekey`); a foreign appender, a stale pending marker,
-        the Spark append path or a failed append drop it, and the
-        next read reloads it from the files."""
+        :meth:`_rekey`); a foreign appender, a stale pending marker
+        or a failed append drop it, and the next read reloads it
+        from the files."""
         self._drop_frames()
         if self.store is None:
             self._mem_rows.extend(rows)
@@ -296,7 +295,7 @@ class SiriEngine:
         except BaseException:
             self._drop_snapshot()
             raise
-        if res is None or self._local_files is None or not self._rekey(
+        if self._local_files is None or not self._rekey(
                 self._local_files | res["delta"], res["compaction"]):
             self._drop_snapshot()
             return
@@ -709,17 +708,7 @@ class SiriEngine:
         if fast is not None:
             return fast
         out_df, seeds = self._select_plan(stmt)
-        try:
-            return self._collect(out_df, seeds)
-        finally:
-            # the multi-pipeline points cache is only useful within
-            # this query's materialization — release it eagerly
-            self._release_multi_cache()
-
-    def _release_multi_cache(self):
-        if self._multi_cache is not None:
-            self._multi_cache.unpersist()
-            self._multi_cache = None
+        return self._collect(out_df, seeds)
 
     def _select_plan(self, stmt: N.SelectStmt, need_seeds: bool = True):
         """The result frame of a select and its seed names. ``query()``
@@ -818,28 +807,13 @@ class SiriEngine:
                     "another time window, an aggregation function or "
                     "select less series to reduce the number of points.")
 
-        multi = len(stmt.pipelines) > 1
-        if multi:
+        if len(stmt.pipelines) > 1:
             presuf = {(p.prefix or "", p.suffix or "")
                       for p in stmt.pipelines}
             if len(presuf) != len(stmt.pipelines):
                 raise QueryError(
                     "When using multiple select methods, add a prefix "
                     "and/or suffix to the selection to make them unique.")
-            self._release_multi_cache()
-
-        @functools.cache
-        def pipeline_points() -> DataFrame:
-            if not multi:
-                return points()
-            # the reference reads each series' points once and reuses
-            # them across comma-pipelines (listener.c:5632-5668); the
-            # cache is the Spark equivalent, made when the first
-            # pipeline reads points. At most ONE such cache is live
-            # per engine (select_df callers keep it until the next
-            # select), and query() releases it after collecting.
-            self._multi_cache = points().cache()
-            return self._multi_cache
 
         merge = stmt.merge
         if merge is not None and merge.name == "":
@@ -852,8 +826,7 @@ class SiriEngine:
         for pl in stmt.pipelines:
             res = self._rollup_pipeline(pl, stmt, types, roll_ctx)
             if res is None:
-                res = self._run_pipeline(pipeline_points(), pl.funcs,
-                                         types)
+                res = self._run_pipeline(points(), pl.funcs, types)
             out, rtypes = res.df, res.types
             checks.extend(res.checks)
             if merge is not None:
@@ -909,9 +882,6 @@ class SiriEngine:
                 seeds.extend((pl.prefix or "") + nm + (pl.suffix or "")
                              for nm in sel_names)
 
-        # NOTE: the multi-pipeline cache stays resident until Spark's LRU
-        # evicts it — unpersisting here would drop it before the caller
-        # materializes the plan.
         return uni, seeds
 
     def _select_points(self, stmt: N.SelectStmt, names) -> DataFrame:
@@ -1649,7 +1619,7 @@ class SiriEngine:
         if changed:
             self._invalidate()
 
-    def maintain(self, max_files_per_partition: int = 1) -> dict:
+    def maintain(self) -> dict:
         """One operational entry point for the background maintenance
         the reference runs on timers (siri/optimize.c:33-55 shard
         rewrites, heartbeat.c:62 expiration): retention, shard
@@ -1659,7 +1629,7 @@ class SiriEngine:
         self._exp_applied.clear()
         self._apply_expiration()
         if self.store is not None:
-            self.store.optimize(self.spark, max_files_per_partition)
+            self.store.optimize(self.spark)
             with self.store._pending():
                 compaction = self.store._compact_catalog(self.spark)
             # refresh the materialized rollup (compaction just

@@ -64,10 +64,6 @@ class TypeSet:
 
     tps: frozenset
 
-    def require_numeric(self, fname: str):
-        if TP_STRING in self.tps:
-            raise QueryError(f"Cannot use {fname}() on string type.")
-
     def after(self, fname: str) -> "TypeSet":
         if fname in FORCE_DOUBLE or fname == "derivative":
             return TypeSet(frozenset({TP_DOUBLE}))

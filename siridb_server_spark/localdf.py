@@ -103,11 +103,8 @@ def fan_out_keyed(df: DataFrame, *key_cols: str,
     if est_bytes is not None:
         est = int(est_bytes)
     else:
-        try:
-            est = int(str(df._jdf.queryExecution().optimizedPlan()
-                          .stats().sizeInBytes()))
-        except Exception:
-            return df
+        est = int(str(df._jdf.queryExecution().optimizedPlan()
+                      .stats().sizeInBytes()))
     if est <= 0 or est >= cores * (1 << 20):
         return df
     return df.repartition(cores, *key_cols)
@@ -129,12 +126,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     at least core-count partitions — at production scale inputs
     arrive as thousands of native splits and this adds nothing.
     Row-preserving: cannot change any downstream result."""
+    if df.isStreaming:
+        # no partitions to count (streaming_minhash_dedup signs a
+        # stream); its micro-batches arrive spread by the source
+        return df
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if parts >= cores:
+    if df.rdd.getNumPartitions() >= cores:
         return df
     return df.repartition(cores)

@@ -22,19 +22,6 @@ _HASH_SPACE = 4294967296.0
 _stable_dsum = stable_dsum
 
 
-def _dec6(col: Column) -> Column:
-    """Round to 6 decimals, then emit as DECIMAL(18,6).
-
-    Rounded ratio contracts used to ship as DOUBLE; the rounded value
-    sits on a 1e-6 grid point, but the double's low bits are still a
-    float bit pattern a byte-level hasher can disagree on. Casting the
-    already-rounded value to an exact decimal removes every float bit
-    from the contract: the double is within ~1e-10 of the grid point,
-    so the half-up (Spark) and nearest (DuckDB) double→decimal casts
-    land on the same decimal no matter the tie-breaking rule."""
-    return F.round(col, 6).cast("decimal(18,6)")
-
-
 def uniform01(col: Column) -> Column:
     """Deterministic uniform in [0, 1) from any key column: first 8
     hex digits of md5, as an unsigned 32-bit fraction. Exactly

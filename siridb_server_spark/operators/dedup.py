@@ -134,16 +134,6 @@ def duplicate_spans(df: DataFrame, k: int = 10,
     )
 
 
-def _doc_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return (
-        df.select(F.col(id_col).alias("doc_id"),
-                  F.explode(F.split(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+")).alias("w"))
-        .where(F.col("w") != "")
-        .distinct()
-    )
-
-
 def _doc_word_hashes(df: DataFrame, text_col: str,
                      id_col: str) -> DataFrame:
     """Distinct (doc_id, word-hash) pairs. Hashing BEFORE the

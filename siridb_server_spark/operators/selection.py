@@ -83,19 +83,3 @@ def compile_match(node, groups: dict, tags: dict,
 
     return walk(node)
 
-
-def collect_names(node) -> list | None:
-    """If the match is a pure union of exact names, return them (lets
-    the engine skip regex evaluation and produce an IN-list filter the
-    parquet reader can use for row-group pruning)."""
-    names = []
-
-    def walk(n):
-        if isinstance(n, N.SeriesName):
-            names.append(n.name)
-            return True
-        if isinstance(n, N.SeriesSetOp) and n.op == "union":
-            return walk(n.left) and walk(n.right)
-        return False
-
-    return names if walk(node) else None

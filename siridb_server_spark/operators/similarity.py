@@ -187,39 +187,6 @@ def lsh_topk(emb: DataFrame, query_vec, k: int = 10, n_planes: int = 8,
         vec_col, id_col)
 
 
-def unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Normalize once per VECTOR (n rows), so pair similarity becomes a
-    single dot product — at n² pair scale this cuts the per-pair work
-    3× (no norms inside the join)."""
-    n = norm(F.col(vec_col))
-    return emb.withColumn(
-        "_uvec",
-        F.transform(F.col(vec_col),
-                    lambda x: F.try_divide(x.cast("double"), n)))
-
-
-def cosine_pairs_blocked_expr(emb: DataFrame, threshold: float = 0.35,
-                              vec_col: str = "embedding",
-                              id_col: str = "vec_id",
-                              block_col: str = "label") -> DataFrame:
-    """Pure-Catalyst variant of cosine_pairs_blocked (self-join +
-    zip_with dot). Correct, but higher-order-function expressions run
-    interpreted per pair — prefer cosine_pairs_blocked (BLAS) when
-    blocks are large."""
-    nv = unit_vectors(emb, vec_col).select(
-        id_col, block_col, "_uvec")
-    a, b = nv.alias("a"), nv.alias("b")
-    cos = dot(F.col("a._uvec"), F.col("b._uvec"))
-    return (
-        a.join(b, (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                (F.round(cos, 6) + F.lit(0.0)).alias("cos"))
-        .where(F.col("cos") >= threshold)
-    )
-
-
 def cosine_pairs_blocked(emb: DataFrame, threshold: float = 0.35,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",

@@ -101,10 +101,6 @@ class Parser:
             self.pos = m.end()
         return m
 
-    def _peek(self, rx: re.Pattern):
-        self._ws()
-        return rx.match(self.q, self.pos)
-
     def _token(self, tok: str) -> bool:
         """Match a literal operator/punctuation token."""
         self._ws()

@@ -79,22 +79,10 @@ def handle_request(engine, method: str, path: str, body,
         return 401, "UNAUTHORIZED"
     # the reference accepts application/json and application/[x-]qpack
     # and answers in the request's content type (api.c:351-368,
-    # :671-728); same negotiation here
-    if "qpack" in content_type:
-        if isinstance(body, (bytes, bytearray)):
-            from . import qpack
-            try:
-                body = qpack.unpackb(bytes(body))
-            except (ValueError, TypeError):
-                return 400, "BAD REQUEST"
-    elif "json" in content_type:
-        if isinstance(body, (bytes, str)):
-            try:
-                body = json.loads(body)
-            except (ValueError, TypeError):
-                return 400, "BAD REQUEST"
-    else:
-        return 415, "UNSUPPORTED MEDIA TYPE"
+    # :671-728)
+    err, body = _decode_body(body, content_type)
+    if err is not None:
+        return err
 
     have = engine.users[authed]["access"]
     needed = ACL.SELECT if route == "query" else ACL.INSERT
@@ -114,34 +102,14 @@ def handle_request(engine, method: str, path: str, body,
                 stmt, res = engine.query_kinded(body["q"])
                 # optional 't': convert result timestamps to the
                 # requested precision (ref api.c + itest
-                # test_http_api.py: {'q': ..., 't': 'ms'}). The
-                # reference converts select point timestamps
-                # (listener.c:6712, 6795) and calc values
-                # (listener.c:2148-2157, query.c:573-580) — never
-                # list/show/count rows, so branch on the statement
-                # kind, not the result shape.
+                # test_http_api.py: {'q': ..., 't': 'ms'})
                 t = body.get("t")
                 if t is not None:
-                    from ..plans import nodes as N
                     from ..plans import timeexpr as TE
                     if t not in TE.PRECISIONS:
                         return 400, {"error_msg":
                                      f"invalid time precision: '{t}'"}
-                    tf, ef = TE.factor(t), engine.factor
-                    if tf != ef and isinstance(res, dict):
-                        if isinstance(stmt, N.SelectStmt):
-                            # '__timeit__' rides alongside series
-                            # lists (a list of dicts) — convert only
-                            # real point lists
-                            res = {
-                                k: [[p[0] * tf // ef, p[1]] for p in v]
-                                if isinstance(v, list)
-                                and not k.startswith("__") else v
-                                for k, v in res.items()}
-                        elif isinstance(stmt, N.CalcStmt) and \
-                                isinstance(res.get("calc"), int):
-                            res = dict(res)
-                            res["calc"] = res["calc"] * tf // ef
+                    res = convert_precision(engine, stmt, res, t)
                 return 200, res
             except (QueryError, ParseError) as e:
                 return 400, {"error_msg": str(e)}
@@ -153,26 +121,56 @@ def handle_request(engine, method: str, path: str, body,
         engine.session_user = prev
 
 
+def convert_precision(engine, stmt, res, t: str):
+    """Convert result timestamps to the client's precision ``t`` —
+    the HTTP route's 't' option and the qpack protocol's
+    time_precision (clserver.py). The reference converts select
+    point timestamps (listener.c:6712, 6795) and calc values
+    (listener.c:2148-2157, query.c:573-580) — never list/show/count
+    rows, so this branches on the statement kind, not the result
+    shape."""
+    from ..plans import nodes as N
+    from ..plans import timeexpr as TE
+
+    tf, ef = TE.factor(t), engine.factor
+    if tf == ef or not isinstance(res, dict):
+        return res
+    if isinstance(stmt, N.SelectStmt):
+        # '__timeit__' rides alongside series lists (a list of
+        # dicts) — convert only real point lists
+        return {k: [[p[0] * tf // ef, p[1]] for p in v]
+                if isinstance(v, list) and not k.startswith("__")
+                else v
+                for k, v in res.items()}
+    if isinstance(stmt, N.CalcStmt) and isinstance(res.get("calc"),
+                                                   int):
+        res = dict(res)
+        res["calc"] = res["calc"] * tf // ef
+    return res
+
+
 def _decode_body(body, content_type: str):
-    """Shared JSON/qpack body negotiation; returns (ok, value)."""
-    if body is None:
-        return True, {}
+    """JSON/qpack body negotiation of every route; returns (error,
+    value). A bytes/str body is decoded by its content type, any
+    other body passes through; ``error`` is the (status, payload)
+    answer to an undecodable body or another content type, else
+    None."""
     if "qpack" in content_type:
         if isinstance(body, (bytes, bytearray)):
             from . import qpack
             try:
-                return True, qpack.unpackb(bytes(body))
+                return None, qpack.unpackb(bytes(body))
             except (ValueError, TypeError):
-                return False, None
+                return (400, "BAD REQUEST"), None
     elif "json" in content_type:
         if isinstance(body, (bytes, str)):
             try:
-                return True, json.loads(body)
+                return None, json.loads(body)
             except (ValueError, TypeError):
-                return False, None
+                return (400, "BAD REQUEST"), None
     else:
-        return False, None
-    return True, body
+        return (415, "UNSUPPORTED MEDIA TYPE"), None
+    return None, body
 
 
 def _handle_service(engine, method: str, route: str, body,
@@ -190,8 +188,9 @@ def _handle_service(engine, method: str, route: str, body,
         # api.c authenticates service requests against the service
         # accounts, not database users
         return 401, "UNAUTHORIZED"
-    ok, req = _decode_body(body, content_type)
-    if not ok:
+    err, req = (None, {}) if body is None \
+        else _decode_body(body, content_type)
+    if err is not None:
         return 400, "BAD REQUEST"
     req = req if isinstance(req, dict) else {}
 

@@ -28,9 +28,9 @@ CPROTO_ERR_QUERY, access violations as CPROTO_ERR_USER_ACCESS, and
 insert errors as CPROTO_ERR_INSERT (db/insert.c:395-427). The
 optional time_precision integer converts select/calc timestamps to
 the client's precision, exactly like the HTTP route's ``t`` option
-(clserver.c:489-498 computes the factor; conversion semantics shared
-with sources/api.py). Unknown request types get no response, like
-the reference's switch without a default.
+(clserver.c:489-498 computes the factor; both transports convert
+through sources/api.py ``convert_precision``). Unknown request types
+get no response, like the reference's switch without a default.
 
 Engine calls serialize behind the engine's own lock (``engine.lock``),
 the one the HTTP transport takes too: SiriEngine is not thread-safe,
@@ -47,7 +47,7 @@ import threading
 
 from .. import access as ACL
 from ..errors import InsertError, ParseError, QueryError
-from .api import DBNAME
+from .api import DBNAME, convert_precision
 from .qpack import packb, unpackb
 
 PKG_HEADER = struct.Struct("<IHBB")
@@ -204,7 +204,7 @@ class _Handler(socketserver.BaseRequestHandler):
         try:
             stmt, res = engine.query_kinded(q)
             if t is not None:
-                res = _convert_precision(engine, stmt, res, t)
+                res = convert_precision(engine, stmt, res, t)
             return pack_pkg(pid, CPROTO_RES_QUERY, res)
         except (QueryError, ParseError) as e:
             msg = str(e)
@@ -241,29 +241,6 @@ class _Handler(socketserver.BaseRequestHandler):
                             {"error_msg": str(e)})
         finally:
             engine.session_user = prev
-
-
-def _convert_precision(engine, stmt, res, t: str):
-    """Convert result timestamps to the client's precision — shared
-    semantics with the HTTP route's 't' option (api.py): select
-    point lists and calc integers convert; list/show/count rows
-    never do (ref listener.c:6712,6795 and query.c:573-580)."""
-    from ..plans import nodes as N
-    from ..plans import timeexpr as TE
-
-    tf, ef = TE.factor(t), engine.factor
-    if tf == ef or not isinstance(res, dict):
-        return res
-    if isinstance(stmt, N.SelectStmt):
-        return {k: [[p[0] * tf // ef, p[1]] for p in v]
-                if isinstance(v, list) and not k.startswith("__")
-                else v
-                for k, v in res.items()}
-    if isinstance(stmt, N.CalcStmt) and isinstance(res.get("calc"),
-                                                   int):
-        res = dict(res)
-        res["calc"] = res["calc"] * tf // ef
-    return res
 
 
 class _Server(socketserver.ThreadingTCPServer):

@@ -35,11 +35,13 @@ def _make_handler(engine, lock):
         def _creds(self):
             h = self.headers.get("Authorization", "")
             if h.startswith("Basic "):
+                # not base64 (binascii.Error), not UTF-8
+                # (UnicodeDecodeError) or no colon: all ValueError
                 try:
                     u, p = base64.b64decode(h[6:]).decode() \
                         .split(":", 1)
                     return u, p
-                except Exception:
+                except ValueError:
                     return None, None
             return None, None
 

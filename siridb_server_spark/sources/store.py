@@ -76,10 +76,6 @@ OPTIMAL_POINTS_PER_SHARD = 2000
 #: (``_batch_stats``); both sides write the same delta file.
 ARROW_STATS_MAX_BYTES = 64 * 1024 * 1024
 
-#: driver-held row batches up to this size write through the pure
-#: pyarrow path (zero Spark jobs); beyond it, distribute via Spark
-LOCAL_APPEND_MAX_ROWS = 5_000_000
-
 #: an ``optimize`` whose fragmented shards' files total up to this
 #: many bytes rewrites them in-process with pyarrow, one shard at a
 #: time (zero Spark jobs); beyond it, one distributed Spark write
@@ -648,18 +644,13 @@ class PointsStore:
         are already driver-resident, so a distributed write job buys
         nothing but ~1 s of scheduling. Same crash protocol as the
         Spark path: per-appender pending marker, dot-prefixed temp +
-        rename per file. Falls back to :meth:`append_df` above
-        LOCAL_APPEND_MAX_ROWS.
+        rename per file.
 
         Returns what the append did to the catalog, so a caller that
         holds a driver snapshot can fold the batch in instead of
         reloading: ``{"stats": {name: stats}, "delta": frozenset of
         the delta files written, "compaction": the
-        :meth:`_compact_catalog` result or None}``. None on the Spark
-        fallback."""
-        if len(rows) > LOCAL_APPEND_MAX_ROWS:
-            self.append_df(spark.createDataFrame(rows, POINTS_SCHEMA))
-            return None
+        :meth:`_compact_catalog` result or None}``."""
         groups: dict = {}
         for r in rows:
             kind = "log" if r[6] == TP_STRING else "num"
@@ -1247,18 +1238,9 @@ class PointsStore:
         if not valid:
             df = df.limit(0)
         else:
-            key = "concat_ws(':', kind, cast(sid as string))"
-            if len(valid) <= 256:
-                # valid keys are "num:<sid>"/"log:<sid>": no quoting
-                df = df.where(
-                    f"{key} IN ({', '.join(repr(v) for v in valid)})")
-            else:
-                from ..localdf import arrow_df
-                vdf = arrow_df(spark, [(v,) for v in valid], "k string")
-                df = (df.withColumn("_k", F.expr(key))
-                      .join(F.broadcast(vdf),
-                            F.col("_k") == F.col("k"), "semi")
-                      .drop("_k"))
+            # valid keys are "num:<sid>"/"log:<sid>": no quoting
+            df = df.where("concat_ws(':', kind, cast(sid as string)) "
+                          f"IN ({', '.join(repr(v) for v in valid)})")
         df = df.select(*cols(*ROLLUP_PARTIAL_COLS))
         self._rollup_frame = (spark, gen, hit[2], valid, df)
         return df
@@ -1276,12 +1258,10 @@ class PointsStore:
             return None
         return self._read(spark, *paths).select(*cols(*_POINT_COLS))
 
-    def optimize(self, spark: SparkSession,
-                 max_files_per_partition: int = 1,
-                 sort: bool = True):
+    def optimize(self, spark: SparkSession):
         """Compaction (ref src/siri/optimize.c:33-55): rewrite every
-        partition holding more than ``max_files_per_partition`` files
-        into one file.
+        partition holding more than one file into one file, laid out
+        in (series, ts, seq) order.
 
         Fragmented partitions whose files total at most
         LOCAL_OPTIMIZE_MAX_BYTES are rewritten in-process with
@@ -1294,31 +1274,28 @@ class PointsStore:
         partition is then swapped in (a crash before its swap discards
         it, see :meth:`_repair_rewrites`).
 
-        ``sort=True`` additionally lays each rewritten file out in
-        (series, ts, seq) order — the reference's optimize pass
-        likewise re-sorts shards that accumulated out-of-order
-        appends (HAS_OVERLAP, shard.h:12). Beyond parity, sorting
-        tightens parquet column-chunk min/max stats: a per-series
-        read of a compacted shard skips row groups whose series
-        range can't match, the format-native analogue of the
+        The (series, ts, seq) order matches the reference's optimize
+        pass, which likewise re-sorts shards that accumulated
+        out-of-order appends (HAS_OVERLAP, shard.h:12). Beyond parity,
+        sorting tightens parquet column-chunk min/max stats: a
+        per-series read of a compacted shard skips row groups whose
+        series range can't match, the format-native analogue of the
         reference's per-series block index."""
         self._repair_rewrites()
         frag = [(kind, sid, p) for kind, sid, p in self._sid_dirs()
-                if sum(f.endswith(".parquet") for f in os.listdir(p))
-                > max_files_per_partition]
+                if sum(f.endswith(".parquet") for f in os.listdir(p)) > 1]
         if frag:
             size = sum(os.path.getsize(f) for _k, _s, p in frag
                        for f in self._parquet_files(p))
             if size <= LOCAL_OPTIMIZE_MAX_BYTES:
-                self._rewrite_local(frag, sort)
+                self._rewrite_local(frag)
             else:
                 # the partitioned writer needs its input ordered by
                 # the partition columns; leading with them keeps the
                 # sort one
-                order = ("kind", "sid", *(("series", "ts", "seq")
-                                          if sort else ()))
                 (self._read(spark, *(p for _k, _s, p in frag))
-                 .repartition("kind", "sid").sortWithinPartitions(*order)
+                 .repartition("kind", "sid")
+                 .sortWithinPartitions("kind", "sid", "series", "ts", "seq")
                  .write.partitionBy("kind", "sid").mode("overwrite")
                  .option("compression", "zstd")
                  .parquet(self._rewrite_root))
@@ -1328,7 +1305,7 @@ class PointsStore:
                     self._swap_partition(tmp, p)
         shutil.rmtree(self._rewrite_root, ignore_errors=True)
 
-    def _rewrite_local(self, frag: list, sort: bool):
+    def _rewrite_local(self, frag: list):
         """The in-process half of :meth:`optimize`: each fragmented
         shard's files are read with pyarrow, ordered by (series, ts,
         seq) and staged as one file under ``_rewrite_tmp(kind, sid)``,
@@ -1340,10 +1317,9 @@ class PointsStore:
                                 columns=_POINT_COLS, schema=schema)
             if not tbl.num_rows:
                 continue  # as the Spark write: no rows, nothing staged
-            if sort:
-                tbl = tbl.sort_by([("series", "ascending"),
-                                   ("ts", "ascending"),
-                                   ("seq", "ascending")])
+            tbl = tbl.sort_by([("series", "ascending"),
+                               ("ts", "ascending"),
+                               ("seq", "ascending")])
             tmp = self._rewrite_tmp(kind, sid)
             os.makedirs(tmp, exist_ok=True)
             pq.write_table(

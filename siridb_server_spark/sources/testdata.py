@@ -34,6 +34,9 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 #: applicationId so a restarted session never sees a stale plan.
 _LOAD_MEMO: dict = {}
 
+#: parquet bytes per emulated native split of documents/embeddings
+_SPLIT_BYTES = 128 * 1024
+
 
 def _listing_fingerprint(path: str):
     """(names, sizes, mtimes) of a parquet file-or-directory — the
@@ -107,9 +110,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # keeps the FEW-split shape the light majority wants, and
         # the handful of measured-heavy operators fan out at their
         # own entry via localdf.fan_out (no-op at production split
-        # counts). SPARK_GRAFT_SPLIT_KB overrides for sweeps.
-        split_kb = int(os.environ.get("SPARK_GRAFT_SPLIT_KB", "128"))
-        target = min(cores, sz // (split_kb * 1024))
+        # counts).
+        target = min(cores, sz // _SPLIT_BYTES)
         if target > 1:
             df = df.repartition(target)
     if len(_LOAD_MEMO) > 64:  # bound: 10 tables × a few sf dirs

@@ -693,30 +693,6 @@ def make_bloom_novelty_sink(bloom_path: str, accepted_path: str,
     return sink
 
 
-def stream_bloom_novelty_ingest(stream_df, bloom_path: str,
-                                accepted_path: str,
-                                rejected_path: str | None = None,
-                                min_novel_ppm: int = 200_000,
-                                n: int = 3, m_bits: int = 1 << 20,
-                                k: int = 4, text_col: str = "text",
-                                id_col: str = "doc_id",
-                                checkpoint: str | None = None,
-                                available_now: bool = False):
-    """Start the Bloom novelty-gate stream (see
-    :func:`make_bloom_novelty_sink`). Returns the StreamingQuery."""
-    writer = stream_df.writeStream.foreachBatch(
-        make_bloom_novelty_sink(
-            bloom_path, accepted_path, rejected_path=rejected_path,
-            min_novel_ppm=min_novel_ppm, n=n, m_bits=m_bits, k=k,
-            text_col=text_col, id_col=id_col)) \
-        .outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def compact_bloom(spark, bloom_path: str, fs: str = "posix",
                   accepted_path: str | None = None) -> dict:
     """Fold the novelty gate's accumulated ``bits/batch=<id>``

@@ -378,73 +378,6 @@ def streaming_heavy_hitters(stream_df: DataFrame, *,
                 GroupStateTimeout.NoTimeout))
 
 
-HLL_SCHEMA = "key string, estimate double, n_registers int"
-_HLL_STATE_SCHEMA = "regs binary"
-
-
-def streaming_distinct_count(stream_df: DataFrame, *,
-                             b: int = 10,
-                             key_col: str = "key",
-                             value_col: str = "value") -> DataFrame:
-    """Streaming approximate COUNT(DISTINCT value) per key with
-    BOUNDED state: a HyperLogLog register array (2^b bytes) per key,
-    merged across micro-batches in the checkpoint — the streaming
-    twin of the batch ``corpus_sketch_stats`` sketches. State per
-    key is 2^b bytes forever, where exact streaming distinct-count
-    state grows with the distinct-value set.
-
-    Standard HLL: register j = max leading-zero rank of the hashed
-    values routed to it; the estimate applies the bias-corrected
-    harmonic mean (the small-m alpha constants for b < 7) with
-    linear counting in the small range. NULL values are ignored —
-    SQL COUNT(DISTINCT) semantics. Hashing runs JVM-side
-    (``F.xxhash64``) before the stateful operator, so the hot
-    Python loop only folds pre-hashed int64s. Emits
-    (key, estimate, n_registers) per touched key per batch (update
-    mode)."""
-    if not 4 <= b <= 18:
-        raise ValueError(f"b must be in [4, 18], got {b}")
-    m = 1 << b
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(
-        m, 0.7213 / (1 + 1.079 / m))
-    u64 = (1 << 64) - 1
-
-    def fn(key, pdfs, state: GroupState):
-        import math
-
-        import pandas as pd
-
-        regs = bytearray(state.get[0]) if state.exists \
-            else bytearray(m)
-        for pdf in pdfs:
-            for hs in pdf["h"]:
-                h = int(hs) & u64  # Spark xxhash64 is signed int64
-                j = h & (m - 1)
-                w = h >> b
-                rho = (64 - b) - w.bit_length() + 1
-                if rho > regs[j]:
-                    regs[j] = rho
-        state.update((bytes(regs),))
-        raw = alpha * m * m / sum(2.0 ** -r for r in regs)
-        zeros = sum(1 for r in regs if r == 0)
-        if raw <= 2.5 * m and zeros:
-            est = m * math.log(m / zeros)
-        else:
-            est = raw
-        yield pd.DataFrame({"key": [key[0]],
-                            "estimate": [round(est, 3)],
-                            "n_registers": [m]})
-
-    keyed = (stream_df
-             .where(F.col(value_col).isNotNull())
-             .select(F.col(key_col).alias("key"),
-                     F.xxhash64(F.col(value_col)).alias("h")))
-    return (keyed.groupBy("key")
-            .applyInPandasWithState(
-                fn, HLL_SCHEMA, _HLL_STATE_SCHEMA, "update",
-                GroupStateTimeout.NoTimeout))
-
-
 MINHASH_DEDUP_SCHEMA = "band long, bh long, doc_id long, dup_of long"
 _MINHASH_STATE_SCHEMA = "owner long, n long"
 

@@ -99,7 +99,6 @@ def plan_of(eng: SiriEngine, q: str):
 
     stmt = Parser(q, eng.precision).parse().stmt
     df, _seeds = eng._select_plan(stmt)
-    eng._release_multi_cache()
     return df
 
 

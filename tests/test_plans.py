@@ -419,3 +419,72 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
         spark.sql("DROP TABLE IF EXISTS bkt_docs")
         spark.sql("DROP TABLE IF EXISTS bkt_emb")
+
+
+MULTI = ('select mean(600) prefix "m-", max(600) prefix "x-" '
+         'from /s[0-3]/')
+SINGLES = ('select mean(600) prefix "m-" from /s[0-3]/',
+           'select max(600) prefix "x-" from /s[0-3]/')
+
+
+def _multi_engine(spark) -> SiriEngine:
+    eng = SiriEngine(spark, precision="s")
+    rng = random.Random(11)
+    eng.insert({f"s{i}": [[1_470_000_000 + j * 60, rng.random()]
+                          for j in range(50)] for i in range(5)})
+    return eng
+
+
+def test_multi_pipeline_select_persists_nothing(spark):
+    """Comma-pipelines read the same lazy points frame; no select
+    leaves a persisted relation behind in the session — not
+    ``select_df()`` on an engine that is then discarded, not
+    ``query()`` — and each answers like its pipelines run apart."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    eng = _multi_engine(spark)
+    got = rows(eng.select_df(MULTI))
+    want = sorted(r for q in SINGLES for r in rows(eng.select_df(q)))
+    del eng
+    assert got == want
+    assert persisted().size() == before
+
+    eng = _multi_engine(spark)
+    got = eng.query(MULTI)
+    want = {}
+    for q in SINGLES:
+        want.update(eng.query(q))
+    assert got == want and len(got) == 8
+    assert persisted().size() == before
+
+
+def test_rollup_read_of_many_shards_is_one_in_filter(spark, tmp_path):
+    """A rollup read keeps its valid shards with ONE ``IN`` filter at
+    any shard count (Catalyst turns a long list into ``INSET``): no
+    join, and the answers equal the points path's."""
+    from siridb_server_spark.sources.store import PointsStore
+
+    path = str(tmp_path / "db")
+    # 300 one-point shards of 60 s (persisted durations win on open)
+    PointsStore(path, 60, 60).append_local(
+        spark, [(f"s{i % 7}", 60 * i + 5, i, i, None, None, 0)
+                for i in range(300)])
+    eng = SiriEngine.open(spark, path, precision="s")
+    eng.enable_rollup(60)
+    roll = eng.store.read_rollup(spark)
+    assert len(roll["valid"]) == 300 and roll["stale"] == []
+    plan = roll["partials"]._jdf.queryExecution().optimizedPlan() \
+        .toString()
+    assert "INSET" in plan and "Join" not in plan
+    for q in ("select sum(60) from /.*/", "select max(120) from 's3'",
+              "select count(600) from /s[12]/"):
+        a = eng.query(q)
+        eng.rollup_enabled = False
+        try:
+            assert a == eng.query(q), q
+        finally:
+            eng.rollup_enabled = True
