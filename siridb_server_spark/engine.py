@@ -15,9 +15,14 @@ machinery of the reference is irrelevant — Spark owns distribution.
 
 from __future__ import annotations
 
+import atexit
 import functools
+import os
+import shutil
+import tempfile
 import threading
 import time as _time
+import uuid
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,7 +36,6 @@ from .functions.memo import cols
 from .functions.pipeline import COLS, StageResult, TypeSet
 from .localdf import arrow_df
 from .model import (
-    POINTS_SCHEMA,
     TP_DOUBLE,
     TP_INT,
     TP_STRING,
@@ -47,7 +51,7 @@ from .plans import nodes as N
 from .plans import timeexpr as TE
 from .plans.parser import Parser
 from .sources.store import CompactLockBusy, PointsStore, catalog_stats, \
-    merge_stats, point_stats
+    merge_stats
 
 #: defaults mirror include/siri/db/db.h:16-17
 DEFAULT_SELECT_POINTS_LIMIT = 1_000_000
@@ -58,6 +62,18 @@ DEFAULT_DURATION_LOG_S = 259200
 
 __version__ = "0.1.0"
 
+#: private store directories of store-less engines. They are removed
+#: at interpreter exit, not when their engine is collected: a
+#: select_df()/points_df() frame reads the files lazily and can
+#: outlive its engine.
+_PRIVATE_DIRS: list = []
+
+
+@atexit.register
+def _remove_private_dirs():
+    for path in _PRIVATE_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
 
 class SiriEngine:
     def __init__(self, spark: SparkSession, precision: str = "s",
@@ -67,11 +83,12 @@ class SiriEngine:
         self.spark = spark
         self.precision = precision
         self.factor = TE.factor(precision)
-        self.store = store  # optional sources.store.PointsStore
-        self._mem_rows: list = []
-        self._mem_df: DataFrame | None = None
-        # from_points() base frame; survives _invalidate() so
-        # insert/drop/expiration never discard the wrapped data
+        self.duration_num = DEFAULT_DURATION_NUM_S * self.factor
+        self.duration_log = DEFAULT_DURATION_LOG_S * self.factor
+        #: where the points live: the given store, else a private one
+        #: (its directory appears with the first write). None only on
+        #: an unmutated from_points() engine, which reads _base_df.
+        self.store = store if store is not None else self._private_store()
         self._base_df: DataFrame | None = None
         self._catalog: DataFrame | None = None
         #: driver-held catalog snapshot (the catalog query() reads):
@@ -104,8 +121,6 @@ class SiriEngine:
         self.expiration_num = 0
         self.expiration_log = 0
         self.tee = None
-        self.duration_num = DEFAULT_DURATION_NUM_S * self.factor
-        self.duration_log = DEFAULT_DURATION_LOG_S * self.factor
         self._exp_applied: dict = {}  # expiration key → last cutoff sid
         #: open(auto_duration=True) on a fresh store: first insert
         #: derives+persists durations from the observed interval
@@ -134,15 +149,14 @@ class SiriEngine:
         math), so the auto-derived duration is fixed at first insert
         and persisted. Durations always persist with the store and
         win over the opener's defaults on reopen."""
-        eng = cls(spark, precision)
-        eng.store = PointsStore(path, eng.duration_num,
-                                eng.duration_log)
+        eng = cls(spark, precision, PointsStore(path, 0, 0))
         saved = eng.store.load_durations()
         if saved is not None:
             eng.duration_num, eng.duration_log = saved
-            eng.store.duration_num, eng.store.duration_log = saved
         elif auto_duration:
             eng._auto_duration_pending = True
+        eng.store.duration_num = eng.duration_num
+        eng.store.duration_log = eng.duration_log
         return eng
 
     @classmethod
@@ -150,8 +164,12 @@ class SiriEngine:
                     precision: str = "s") -> "SiriEngine":
         """Wrap an existing long-format points DataFrame (columns
         series, ts, seq, val_int, val_dbl, val_str, tp) — the scale
-        path: the frame typically comes from partitioned parquet."""
+        path: the frame typically comes from partitioned parquet.
+        The engine reads the frame as it is until its first mutation
+        (insert, drop, retention) copies it into a private store
+        (:meth:`_own_store`)."""
         eng = cls(spark, precision)
+        eng.store = None
         eng._base_df = df
         # points inserted later must sort after the wrapped frame's
         # rows on (ts, seq) ties
@@ -272,6 +290,24 @@ class SiriEngine:
             keep.append(r)
         return keep
 
+    def _private_store(self) -> PointsStore:
+        """A store in a fresh temporary directory, removed at exit."""
+        path = os.path.join(tempfile.gettempdir(),
+                            f"sparksiri-{uuid.uuid4().hex}")
+        _PRIVATE_DIRS.append(path)
+        return PointsStore(path, self.duration_num, self.duration_log)
+
+    def _own_store(self) -> PointsStore:
+        """The store every mutation goes through. A from_points()
+        engine first copies its frame into a private store and reads
+        from there on."""
+        if self.store is None:
+            store = self._private_store()
+            store.append_df(self._base_df)
+            self.store, self._base_df = store, None
+            self._invalidate()
+        return self.store
+
     def _append(self, rows: list):
         """Append an insert's rows and fold them into the driver
         catalog snapshot instead of dropping it — the reference
@@ -284,14 +320,11 @@ class SiriEngine:
         or a failed append drop it, and the next read reloads it
         from the files."""
         self._drop_frames()
-        if self.store is None:
-            self._mem_rows.extend(rows)
-            self._fold_snapshot(map(point_stats, rows))
-            return
+        store = self._own_store()
         try:
             if self._auto_duration_pending:
                 self._apply_auto_duration(rows)
-            res = self.store.append_local(self.spark, rows)
+            res = store.append_local(self.spark, rows)
         except BaseException:
             self._drop_snapshot()
             raise
@@ -320,7 +353,6 @@ class SiriEngine:
     def _drop_frames(self):
         """Forget the Spark frames derived from the data (rebuilt
         lazily); the driver snapshot is kept."""
-        self._mem_df = None
         if self._catalog is not None:
             self._catalog.unpersist()
         self._catalog = None
@@ -337,21 +369,18 @@ class SiriEngine:
         """Driver-held catalog snapshot — the one catalog ``query()``
         reads: list/count/skip-points statements, the type pre-flight
         of inserts, drops, tagging and the seeds of selects
-        (plans/fastpath.py). Store-backed engines fold the catalog
-        parquet with pyarrow (no Spark job); memory-backed engines
-        fold the in-heap rows; ``from_points`` engines fold one
-        collected per-series aggregate of their points. Loaded once
-        and then kept current by the engine's own inserts
+        (plans/fastpath.py). The store's catalog parquet is folded
+        with pyarrow (no Spark job); an unmutated ``from_points``
+        engine folds one collected per-series aggregate of its frame.
+        Loaded once and then kept current by the engine's own inserts
         (:meth:`_append`)."""
         if self._local_cat is not None:
             return self._local_cat
         files = None
         if self.store is not None:
             raw, files = self._read_store_catalog()
-        elif self._base_df is None:
-            raw = merge_stats({}, map(point_stats, self._mem_rows))
         else:
-            agg = PointsStore._batch_stats(self.points_df()).toArrow()
+            agg = PointsStore._batch_stats(self._base_df).toArrow()
             raw = merge_stats({}, catalog_stats(agg.to_pydict()))
         self._local_raw, self._local_files = raw, files
         self._local_cat = {name: self._catalog_row(name, st)
@@ -443,34 +472,13 @@ class SiriEngine:
 
     def _shard_rows(self) -> list:
         """Shard rows, without a Spark job where the stats are at
-        hand: store-backed engines read parquet FOOTER statistics
-        (row counts + ts min/max — the stats the reference keeps on
-        its shard structs, shard.h); memory-backed engines bucket the
-        in-heap rows. ``from_points`` engines, and a store whose
-        footers lack the stats, aggregate the points
+        hand: the store's parquet FOOTER statistics (row counts + ts
+        min/max — the stats the reference keeps on its shard structs,
+        shard.h). An unmutated ``from_points`` engine, and a store
+        whose footers lack the stats, aggregate the points
         (:meth:`_shards_df`)."""
-        stats = None
-        if self.store is not None:
-            stats = self.store.shard_stats_local()
-        elif self._base_df is None:
-            buckets: dict = {}
-            for r in self._mem_rows:
-                ts, tp = r[1], r[6]
-                is_str = tp == TP_STRING
-                dur = self.duration_log if is_str \
-                    else self.duration_num
-                key = (ts - ts % dur, "log" if is_str else "num")
-                cur = buckets.get(key)
-                if cur is None:
-                    buckets[key] = [1, ts, ts]
-                else:
-                    cur[0] += 1
-                    cur[1] = min(cur[1], ts)
-                    cur[2] = max(cur[2], ts)
-            stats = [{"sid": sid, "kind": kind, "points": n,
-                      "start": mn, "end": mx}
-                     for (sid, kind), (n, mn, mx)
-                     in sorted(buckets.items())]
+        stats = None if self.store is None \
+            else self.store.shard_stats_local()
         if stats is None:
             return sorted((r.asDict() for r in self._shards_df().collect()),
                           key=lambda r: (r["sid"], r["type"]))
@@ -500,18 +508,11 @@ class SiriEngine:
 
     # -------------------------------------------------------------- frames
     def points_df(self) -> DataFrame:
-        if self.store is not None:
-            return self.store.read(self.spark).drop("_sid")
-        if self._mem_df is None:
-            if self._base_df is not None and not self._mem_rows:
-                self._mem_df = self._base_df
-            else:
-                df = arrow_df(self.spark, self._mem_rows,
-                              POINTS_SCHEMA)
-                if self._base_df is not None:
-                    df = self._base_df.unionByName(df)
-                self._mem_df = df
-        return self._mem_df
+        """The points (series, ts, seq, typed vals, tp): a lazy scan of
+        the store, or an unmutated ``from_points`` engine's frame."""
+        if self.store is None:
+            return self._base_df
+        return self.store.read(self.spark).drop("_sid")
 
     def register_views(self, prefix: str = "siri_") -> None:
         """Expose the engine's frames to plain Spark SQL as temp
@@ -528,20 +529,19 @@ class SiriEngine:
     def _points_for_select(self) -> DataFrame:
         """Points frame for select: keeps the shard-id partition column
         when store-backed so time ranges become PartitionFilters."""
-        if self.store is not None:
-            return self.store.read(self.spark)
-        return self.points_df()
+        if self.store is None:
+            return self._base_df
+        return self.store.read(self.spark)
 
     def catalog_df(self) -> DataFrame:
         """Series catalog (name, type, length, start, end, pool,
-        shard_duration). Store- and memory-backed engines upload the
-        rows of the driver snapshot (:meth:`_catalog_local` — the
-        analogue of the reference's live series structs,
-        series.h:54-72); ``from_points`` engines derive it lazily with
-        one groupBy over their points. Cached until the next
-        insert/drop."""
+        shard_duration). A store-backed engine uploads the rows of the
+        driver snapshot (:meth:`_catalog_local` — the analogue of the
+        reference's live series structs, series.h:54-72); an
+        unmutated ``from_points`` engine derives it lazily with one
+        groupBy over its frame. Kept until the next insert/drop."""
         if self._catalog is None:
-            if self.store is None and self._base_df is not None:
+            if self.store is None:
                 stats = (
                     self.points_df()
                     .groupBy(F.col("series").alias("name"))
@@ -736,7 +736,7 @@ class SiriEngine:
                                  "series string")
         elif self.store is None and stmt.where is None \
                 and not skippable:
-            # select_df() on a memory/wrapped-frame engine with no
+            # select_df() on an unmutated from_points engine with no
             # metadata where: the plan only needs the type set and
             # the points-limit bound — ONE partial-aggregated pass
             # over the matched points (collect_set over ≤3 tp values
@@ -1060,7 +1060,8 @@ class SiriEngine:
         from a pruned point read). Everything else — and
         every shard whose files changed since the build — reads
         points exactly as before, so answers are identical either
-        way (tests/test_rollup.py asserts equality)."""
+        way (tests/test_rollup.py asserts equality). An unmutated
+        ``from_points`` engine has no store and refuses."""
         if self.store is None:
             raise QueryError("rollups need a store-backed engine")
         return self.store.build_rollup(self.spark, bucket)
@@ -1477,55 +1478,27 @@ class SiriEngine:
                 f"This query would drop {n} series. Add 'set "
                 "ignore_threshold true' to the query statement if you "
                 "really want to do this.")
-        if self.store is not None:
-            self.store.delete_series(self.spark, names)
-        else:
-            self._mem_rows = [r for r in self._mem_rows
-                              if r[0] not in set(names)]
-            if self._base_df is not None and names:
-                self._base_df = self._base_df.where(
-                    ~F.col("series").isin(names))
+        try:
+            self._own_store().delete_series(self.spark, names)
+        finally:
+            self._invalidate()
         for members in self.tags.values():
             members -= set(names)
-        self._invalidate()
         return {"success_msg": f"Successfully dropped {n} series."}
 
     def _drop_shards(self, stmt: N.DropStmt) -> dict:
-        sids = {(r["sid"], r["type"]) for r in self._apply_local_where(
-            "shards", self._shard_rows(), stmt.where)}
-        n = len(sids)
-        if self.store is not None:
-            import shutil
-            for kind, sid, p in list(self.store._sid_dirs()):
-                tp_name = "log" if kind == "log" else "number"
-                if (sid, tp_name) in sids:
-                    shutil.rmtree(p)
-            self.store.rebuild_catalog(self.spark)
-        else:
-            dur_num, dur_log = self.duration_num, self.duration_log
-            keep = []
-            for r in self._mem_rows:
-                dur = dur_log if r[6] == TP_STRING else dur_num
-                sid = r[1] - r[1] % dur
-                tp_name = "log" if r[6] == TP_STRING else "number"
-                if (sid, tp_name) not in sids:
-                    keep.append(r)
-            self._mem_rows = keep
-            if self._base_df is not None and sids:
-                dur_c = F.when(F.col("tp") == TP_STRING,
-                               F.lit(dur_log)).otherwise(F.lit(dur_num))
-                sid_c = F.col("ts") - F.col("ts") % dur_c
-                tpn_c = F.when(F.col("tp") == TP_STRING,
-                               F.lit("log")).otherwise(F.lit("number"))
-                drop_c = F.lit(False)
-                for sid, tp_name in sids:
-                    drop_c = drop_c | ((sid_c == F.lit(sid))
-                                       & (tpn_c == F.lit(tp_name)))
-                self._base_df = self._base_df.where(~drop_c)
-        self._invalidate()
+        store = self._own_store()
+        keys = {("log" if r["type"] == "log" else "num", r["sid"])
+                for r in self._apply_local_where(
+                    "shards", self._shard_rows(), stmt.where)}
+        try:
+            store.drop_shards(self.spark, keys)
+        finally:
+            self._invalidate()
         return {"success_msg":
-                f"Successfully dropped {n} shards. (this number does not "
-                "include shards which are dropped on replica servers)"}
+                f"Successfully dropped {len(keys)} shards. (this number "
+                "does not include shards which are dropped on replica "
+                "servers)"}
 
     def _alter_database(self, stmt: N.AlterDatabase) -> dict:
         key, value = stmt.key, stmt.value
@@ -1595,27 +1568,12 @@ class SiriEngine:
             if self._exp_applied.get(key) == cutoff_sid:
                 continue
             self._exp_applied[key] = cutoff_sid
-            if self.store is not None:
-                changed |= self.store.expire(self.spark, cutoff_sid,
-                                             tp_str)
-                continue
-            keep = []
-            for r in self._mem_rows:
-                is_str = r[6] == TP_STRING
-                if is_str != tp_str:
-                    keep.append(r)
-                    continue
-                sid = r[1] - r[1] % dur
-                if sid >= cutoff_sid:
-                    keep.append(r)
-            self._mem_rows = keep
-            if self._base_df is not None:
-                match_c = ((F.col("tp") == TP_STRING) if tp_str
-                           else (F.col("tp") != TP_STRING))
-                sid_c = F.col("ts") - F.col("ts") % F.lit(dur)
-                self._base_df = self._base_df.where(
-                    ~(match_c & (sid_c < F.lit(cutoff_sid))))
-            changed = True
+            try:
+                changed |= self._own_store().expire(
+                    self.spark, cutoff_sid, tp_str)
+            except BaseException:
+                self._invalidate()
+                raise
         if changed:
             self._invalidate()
 

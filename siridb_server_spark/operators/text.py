@@ -595,11 +595,8 @@ def _gram_counts_if_small(grams: DataFrame,
     if est_bytes is not None:
         est = int(est_bytes)
     else:
-        try:
-            est = int(str(grams._jdf.queryExecution()
-                          .optimizedPlan().stats().sizeInBytes()))
-        except Exception:
-            return None
+        est = int(str(grams._jdf.queryExecution()
+                      .optimizedPlan().stats().sizeInBytes()))
     if not 0 < est < _GRAM_DEDUP_MAX_INPUT_BYTES:
         return None
     return grams.groupBy("g").agg(

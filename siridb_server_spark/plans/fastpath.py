@@ -25,12 +25,13 @@ for it. The snapshot is the only catalog ``query()`` reads;
 Scale note: the snapshot is O(|series|) driver memory — the same
 stance as the reference, whose series map lives in RAM on every
 server (series.h:54-72). ``query()`` collects every selected name
-anyway, since its result is keyed per series. Store-backed engines
-hold their whole catalog on the driver in any case: the catalog
-files are folded there, and ``catalog_df`` uploads the snapshot.
-The distributed API (``select_df``) never collects the selected
-names, and ``from_points`` engines derive ``catalog_df`` with a
-distributed groupBy.
+anyway, since its result is keyed per series. Every engine with a
+store (store-less engines get a private one) holds its whole catalog
+on the driver in any case: the catalog files are folded there, and
+``catalog_df`` uploads the snapshot. The distributed API
+(``select_df``) never collects the selected names, and an unmutated
+``from_points`` engine derives ``catalog_df`` with a distributed
+groupBy.
 """
 
 from __future__ import annotations

@@ -37,7 +37,8 @@ _MANIFEST = T.StructType([
 ])
 
 
-from .shards import clean_stale_shards, shard_key as _shard_key
+from .shards import clean_stale_shards, read_shard_files, \
+    shard_key as _shard_key
 
 
 def _write_shard_file(path, shard, table) -> dict:
@@ -120,9 +121,7 @@ def read_arrow_documents(spark: SparkSession,
         T.StructField("source", T.StringType()),
         T.StructField("shard", T.IntegerType()),
     ])
-    bf = (spark.read.format("binaryFile")
-          .load(path + "/shard-*.arrow")
-          .select("path", "content"))
+    bf = read_shard_files(spark, path, "shard-*.arrow")
 
     def decode(batches):
         for pdf in batches:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import TP_DOUBLE, TP_INT, TP_STRING
+from .shards import read_shard_files
 
 _LONG_CSV_SCHEMA = T.StructType([
     T.StructField("series", T.StringType(), False),
@@ -174,9 +175,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
         T.StructField("text", T.StringType()),
         T.StructField("shard", T.IntegerType()),
     ])
-    bf = (spark.read.format("binaryFile")
-          .load(path + "/shard-*.tar")
-          .select("path", "content"))
+    bf = read_shard_files(spark, path, "shard-*.tar")
 
     def untar(batches):
         for pdf in batches:

@@ -1,14 +1,15 @@
 """Shared scaffolding for the deterministic shard exporters
-(tfrecord, Arrow IPC): ONE definition of the md5 shard key and of
-the stale-file cleanup, so the sharding rule and the overwrite
-contract can't drift per format (they were previously copy-pasted
-per exporter)."""
+(tfrecord, Arrow IPC, tar): ONE definition of the md5 shard key, of
+the stale-file cleanup and of the shard-file scan, so the sharding
+rule and the overwrite contract can't drift per format (they were
+previously copy-pasted per exporter)."""
 
 from __future__ import annotations
 
 import glob
 import os
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -34,3 +35,16 @@ def clean_stale_shards(path: str, pattern: str) -> int:
         os.remove(f)
         n += 1
     return n
+
+
+def read_shard_files(spark: SparkSession, path: str,
+                     pattern: str) -> DataFrame:
+    """``(path, content)`` of the files in the directory ``path``
+    whose names match ``pattern`` (e.g. ``shard-*.arrow``). The
+    directory is loaded with a file-name filter: a glob path first
+    looks for a streaming sink's metadata directory and logs a WARN
+    with a Java stack trace on every read."""
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", pattern)
+            .load(path)
+            .select("path", "content"))

@@ -168,8 +168,9 @@ def merge_stats(out: dict, stats) -> dict:
     """Fold ``(name, stats)`` pairs into the catalog-stats dict ``out``
     in place and return it — THE catalog fold, shared by the snapshot
     reload (:meth:`PointsStore.read_catalog_local`), catalog
-    compaction, the memory engine, the engine's write-through of its
-    own inserts and the Arrow datasource writer's per-task partials.
+    compaction, the from_points aggregate, the engine's write-through
+    of its own inserts and the Arrow datasource writer's per-task
+    partials.
     Exact and associative: lengths sum, start takes the min, end and
     tp the max, and the first/last value blocks are the argmin/argmax
     over (ts, seq) across partials."""
@@ -237,13 +238,6 @@ def _write_catalog_file(dirpath: str, prefix: str, table) -> str:
     dest = os.path.join(dirpath, name)
     os.rename(tmp, dest)
     return dest
-
-
-def point_stats(r) -> tuple:
-    """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
-    tuple), ready for :func:`merge_stats`."""
-    vals = (r[2], r[3], r[4], r[5])
-    return r[0], (1, r[1], r[1], r[6], vals, vals)
 
 
 def write_arrow_delta(path: str, folded: dict) -> list:
@@ -1006,14 +1000,22 @@ class PointsStore:
                     yield kind, int(entry[4:]), os.path.join(kdir, entry)
 
     def expire(self, spark: SparkSession, cutoff_sid: int,
-               tp_str: bool):
+               tp_str: bool) -> bool:
         """Retention: drop whole shard partitions older than the
         cutoff (ref db.c:865-878 — expiration is shard-granular).
-        Directory removal only — no data rewrite. Returns whether
-        any shard was dropped (only then did the catalog change)."""
+        Returns whether any shard was dropped."""
         want = "log" if tp_str else "num"
+        return self.drop_shards(spark, {
+            (kind, sid) for kind, sid, _ in self._sid_dirs()
+            if kind == want and sid < cutoff_sid})
+
+    def drop_shards(self, spark: SparkSession, keys) -> bool:
+        """Drop the shard partitions of ``keys`` ((kind, sid) pairs)
+        and rebuild the catalog — directory removal only, no data
+        rewrite. Returns whether any shard was dropped (only then did
+        the catalog change)."""
         doomed = [p for kind, sid, p in self._sid_dirs()
-                  if kind == want and sid < cutoff_sid]
+                  if (kind, sid) in keys]
         if not doomed:
             return False
         # pending marker: a crash mid-loop leaves the catalog stale,

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .shards import read_shard_files
+
 # ------------------------------------------------------------- crc32c
 _CRC_TABLE = None
 
@@ -338,9 +340,7 @@ def read_tfrecord_documents(spark: SparkSession, path: str,
         T.StructField("source", T.StringType()),
         T.StructField("shard", T.IntegerType()),
     ])
-    bf = (spark.read.format("binaryFile")
-          .load(path + "/shard-*.tfrecord")
-          .select("path", "content"))
+    bf = read_shard_files(spark, path, "shard-*.tfrecord")
 
     def decode(batches):
         for pdf in batches:
@@ -428,9 +428,7 @@ def read_tfrecord_embeddings(spark: SparkSession, path: str,
         T.StructField("label", T.LongType()),
         T.StructField("shard", T.IntegerType()),
     ])
-    bf = (spark.read.format("binaryFile")
-          .load(path + "/shard-*.tfrecord")
-          .select("path", "content"))
+    bf = read_shard_files(spark, path, "shard-*.tfrecord")
 
     def decode(batches):
         for pdf in batches:

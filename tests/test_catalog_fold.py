@@ -20,8 +20,14 @@ from siridb_server_spark.sources.store import (
     _catalog_table,
     catalog_stats,
     merge_stats,
-    point_stats,
 )
+
+
+def point_stats(r) -> tuple:
+    """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
+    tuple), ready for ``merge_stats``."""
+    vals = (r[2], r[3], r[4], r[5])
+    return r[0], (1, r[1], r[1], r[6], vals, vals)
 
 
 def _write(df, path):

@@ -1,6 +1,8 @@
 """Insert validation goldens (semantics from
 /root/reference/itest/test_insert.py and src/siri/db/insert.c:93-126)."""
 
+import os
+
 import pytest
 
 from siridb_server_spark import InsertError, SiriEngine
@@ -135,6 +137,72 @@ def test_from_points_engine_survives_mutations(eng, spark):
     assert sorted(s[0] for s in got["series"]) == ["w", "y"]
     assert e2.query("select * from 'w'") == {
         "w": [[100, 1.0], [200, 2.0], [300, 3.0]]}
+
+
+def _private_dirs() -> set:
+    import glob
+    import tempfile
+    return set(glob.glob(os.path.join(tempfile.gettempdir(),
+                                      "sparksiri-*")))
+
+
+def test_private_store_removed_at_exit(tmp_path):
+    """A store-less engine keeps its points in a private store; the
+    directory is gone once the process exits. Inserting needs no
+    JVM: the store writes with pyarrow."""
+    import subprocess
+    import sys
+
+    code = ("import os\n"
+            "from siridb_server_spark import SiriEngine\n"
+            "eng = SiriEngine(None)\n"
+            "eng.insert({'a': [[1, 1], [2, 2.5]]})\n"
+            "assert os.path.isdir(eng.store.path)\n"
+            "print(eng.store.path)\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)}, timeout=120)
+    assert out.returncode == 0, out.stderr
+    path = out.stdout.strip().splitlines()[-1]
+    assert path.startswith(str(tmp_path))
+    assert not os.path.exists(path)
+
+
+def test_select_df_outlives_its_engine(spark):
+    """The private store stays until exit, so a frame that reads it
+    lazily still collects after its engine is collected."""
+    import gc
+
+    eng = SiriEngine(spark, precision="s")
+    eng.insert({"a": [[1, 1], [2, 2]], "b": [[1, 5]]})
+    df = eng.select_df("select * from 'a'")
+    path = eng.store.path
+    del eng
+    gc.collect()
+    assert os.path.isdir(path)
+    assert sorted((r["ts"], r["val_int"]) for r in df.collect()) == \
+        [(1, 1), (2, 2)]
+
+
+def test_open_and_from_points_make_no_private_store(spark, tmp_path):
+    """open() uses its own store, and an unmutated from_points engine
+    reads its frame: neither writes a private store, not even for
+    queries and select_df() (the driver-contract entries' path)."""
+    from siridb_server_spark import QueryError
+
+    before = _private_dirs()
+    eng = SiriEngine.open(spark, str(tmp_path / "db"), precision="s")
+    eng.insert({"a": [[1, 1], [2, 2]]})
+    e2 = SiriEngine.from_points(spark, eng.points_df(), precision="s")
+    assert e2.store is None
+    assert e2.query("select sum(2) from 'a'") == {"a": [[2, 3]]}
+    assert e2.query("count series") == {"series": 1}
+    assert e2.select_df("select * from 'a'").count() == 2
+    with pytest.raises(QueryError):
+        e2.enable_rollup(1)
+    assert e2.store is None
+    assert _private_dirs() == before
 
 
 def test_log_series_roundtrip(spark):

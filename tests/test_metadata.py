@@ -545,6 +545,43 @@ def test_stale_marker_repaired_before_catalog_reads(spark, tmp_path,
     assert eng._catalog_local() == ref._catalog_local()
 
 
+def test_drop_shards_crash_repaired_before_catalog_reads(spark, tmp_path,
+                                                         monkeypatch):
+    """`drop shards` that dies after removing its first shard leaves
+    a stale pending marker: the next catalog read rebuilds, so the
+    series lengths match a fresh rebuild from the points on disk."""
+    import shutil
+
+    from siridb_server_spark import SiriEngine
+
+    eng = SiriEngine.open(spark, str(tmp_path / "sdb"), precision="s")
+    week = 604800
+    eng.insert({"a": [[100, 1], [week + 100, 2], [2 * week + 100, 3]],
+                "b": [[week + 200, 1.5], [2 * week + 200, 2.5]]})
+    assert eng.query("count shards") == {"shards": 3}
+    real_rmtree = shutil.rmtree
+    calls = []
+
+    def crash_after_first(path, *a, **k):
+        calls.append(path)
+        if len(calls) > 1:
+            raise OSError("disk error")
+        real_rmtree(path, *a, **k)
+
+    monkeypatch.setattr(shutil, "rmtree", crash_after_first)
+    with pytest.raises(OSError):
+        eng.query("drop shards")
+    monkeypatch.undo()
+    assert eng.query("count shards") == {"shards": 2}
+
+    got = sorted(eng.query("list series name, length")["series"])
+    eng.store.rebuild_catalog(spark)
+    fresh = SiriEngine.open(spark, eng.store.path, precision="s")
+    assert got == sorted(
+        fresh.query("list series name, length")["series"])
+    assert sum(n for _, n in got) == eng.points_df().count()
+
+
 def test_timezone_validated_and_applied(spark):
     """ISO dates in a query are read in the database timezone; an
     unknown zone is rejected and leaves the old one in place."""
