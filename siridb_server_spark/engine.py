@@ -43,7 +43,7 @@ from .model import (
     coerce_value,
     infer_tp,
     point_row,
-    value_of_row,
+    reply_map,
 )
 from .operators.selection import compile_match
 from .operators.where import compile_where
@@ -353,8 +353,6 @@ class SiriEngine:
     def _drop_frames(self):
         """Forget the Spark frames derived from the data (rebuilt
         lazily); the driver snapshot is kept."""
-        if self._catalog is not None:
-            self._catalog.unpersist()
         self._catalog = None
 
     def _drop_snapshot(self):
@@ -539,7 +537,8 @@ class SiriEngine:
         driver snapshot (:meth:`_catalog_local` — the analogue of the
         reference's live series structs, series.h:54-72); an
         unmutated ``from_points`` engine derives it lazily with one
-        groupBy over its frame. Kept until the next insert/drop."""
+        groupBy over its frame, never cached: a cached frame outlives
+        its engine. Kept until the next insert/drop."""
         if self._catalog is None:
             if self.store is None:
                 stats = (
@@ -561,7 +560,7 @@ class SiriEngine:
                     F.when(F.col("tp") == TP_STRING, self.duration_log)
                     .otherwise(self.duration_num).cast("long")
                     .alias("shard_duration"),
-                ).cache()
+                )
             else:
                 cols = ("name", "type", "length", "start", "end",
                         "pool", "shard_duration")
@@ -1224,13 +1223,7 @@ class SiriEngine:
                                     types)
 
     def _collect(self, df: DataFrame, seeds: list | None = None) -> dict:
-        rows = df.select(*cols(*COLS)).collect()
-        rows.sort(key=lambda r: (r["ts"], r["seq"]))
-        out: dict = {s: [] for s in seeds} if seeds else {}
-        for r in rows:
-            out.setdefault(r["series"], []).append([r["ts"],
-                                                    value_of_row(r)])
-        return out
+        return reply_map(df.select(*cols(*COLS)).toArrow(), seeds)
 
     # ------------------------------------------------------ list/count/show
     def _shards_df(self) -> DataFrame:

@@ -24,6 +24,8 @@ from __future__ import annotations
 import math
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 
 from .errors import InsertError
@@ -143,14 +145,59 @@ def point_row(series: str, ts: int, value, seq: int, tp: int | None = None):
     return (series, ts, seq, None, None, str(value), TP_STRING)
 
 
-def value_of_row(row) -> object:
-    """Extract the python value of a collected points row."""
-    tp = row["tp"]
+#: the reply order of a points table: grouped by series, each
+#: series' points by (ts, seq); the sort is stable, so equal keys keep
+#: collect order
+_REPLY_ORDER = [("series", "ascending"), ("ts", "ascending"),
+                ("seq", "ascending")]
+
+
+def _value_column(tbl: pa.Table, tp) -> list:
+    """The python values of ``tbl``'s rows read as type ``tp``."""
     if tp == TP_INT:
-        return row["val_int"]
+        return tbl["val_int"].to_pylist()
     if tp == TP_DOUBLE:
-        v = row["val_dbl"]
-        # Spark collect may hand back None only for genuinely-null cells,
-        # which the model forbids; NaN round-trips as float('nan').
-        return float(v) if v is not None else math.nan
-    return row["val_str"]
+        # a null double reads as NaN (the model never stores one)
+        return pc.fill_null(tbl["val_dbl"], math.nan).to_pylist()
+    return tbl["val_str"].to_pylist()
+
+
+def _values(tbl: pa.Table) -> list:
+    """The python value of every row of a points table, picked by its
+    ``tp``: one ``tp`` takes its column whole, several go row by
+    row."""
+    tps = pc.unique(tbl["tp"]).to_pylist()
+    by_tp = {tp: _value_column(tbl, tp) for tp in tps}
+    if len(tps) == 1:
+        return by_tp[tps[0]]
+    return [by_tp[tp][i] for i, tp in enumerate(tbl["tp"].to_pylist())]
+
+
+def reply_map(tbl: pa.Table, seeds: list | None = None) -> dict:
+    """The select reply ``{series: [[ts, value], ...]}`` of a collected
+    points table (ref query.c:203-223). Keys: the ``seeds`` first, in
+    seed order, then every other series in order of its first
+    (ts, seq, collect position). Built from the columns, never through
+    pandas (which would turn a null-bearing int64 column to float64)."""
+    out: dict = {s: [] for s in seeds} if seeds else {}
+    if not tbl.num_rows:
+        return out
+    order = pc.sort_indices(tbl, sort_keys=_REPLY_ORDER)
+    tbl = tbl.take(order)
+    ts = tbl["ts"].to_pylist()
+    vals = _values(tbl)
+    runs = pc.run_end_encode(tbl["series"].combine_chunks())
+    fresh = []
+    start = 0
+    for name, end in zip(runs.values.to_pylist(),
+                         runs.run_ends.to_pylist()):
+        pts = [[t, v] for t, v in zip(ts[start:end], vals[start:end])]
+        if name in out:
+            out[name] = pts
+        else:
+            fresh.append((ts[start], tbl["seq"][start].as_py(),
+                          order[start].as_py(), name, pts))
+        start = end
+    for *_key, name, pts in sorted(fresh, key=lambda f: f[:3]):
+        out[name] = pts
+    return out

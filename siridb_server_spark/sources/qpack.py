@@ -63,25 +63,49 @@ class QpackError(ValueError):
 
 
 # ------------------------------------------------------------------ pack
+# Values dispatch on their exact type (one dict lookup); subclasses
+# (an IntEnum, a numpy float64) take the isinstance chain of
+# ``_pack_other``. Each fixed-width lane is one precompiled Struct
+# that writes the tag byte and the value together.
+_TAG_I8 = struct.Struct("<Bb").pack
+_TAG_I16 = struct.Struct("<Bh").pack
+_TAG_I32 = struct.Struct("<Bi").pack
+_TAG_I64 = struct.Struct("<Bq").pack
+_TAG_DOUBLE = struct.Struct("<Bd").pack
+_ARRAY2 = QP_ARRAY0 + 2
+#: a ``[ts, value]`` point pair with an INT32/INT64-lane ts and a
+#: double value off the fixed bytes: the array header and both tagged
+#: values in one call
+_PAIR_I32_D = struct.Struct("<BBiBd").pack
+_PAIR_I64_D = struct.Struct("<BBqBd").pack
+
+
 def _pack_int(out: bytearray, v: int):
-    if not _INT64_MIN <= v <= _INT64_MAX:
-        raise QpackError(f"integer out of int64 range: {v}")
     if 0 <= v < 64:
         out.append(v)
     elif -60 <= v < 0:
         out.append(63 - v)
     elif -(1 << 7) <= v < (1 << 7):
-        out.append(QP_INT8)
-        out += struct.pack("<b", v)
+        out += _TAG_I8(QP_INT8, v)
     elif -(1 << 15) <= v < (1 << 15):
-        out.append(QP_INT16)
-        out += struct.pack("<h", v)
+        out += _TAG_I16(QP_INT16, v)
     elif -(1 << 31) <= v < (1 << 31):
-        out.append(QP_INT32)
-        out += struct.pack("<i", v)
+        out += _TAG_I32(QP_INT32, v)
+    elif _INT64_MIN <= v <= _INT64_MAX:
+        out += _TAG_I64(QP_INT64, v)
     else:
-        out.append(QP_INT64)
-        out += struct.pack("<q", v)
+        raise QpackError(f"integer out of int64 range: {v}")
+
+
+def _pack_float(out: bytearray, v: float):
+    if v == 0.0:
+        out.append(126)
+    elif v == 1.0:
+        out.append(127)
+    elif v == -1.0:
+        out.append(125)
+    else:
+        out += _TAG_DOUBLE(QP_DOUBLE, v)
 
 
 def _pack_raw(out: bytearray, b: bytes):
@@ -103,157 +127,193 @@ def _pack_raw(out: bytearray, b: bytes):
     out += b
 
 
-def _pack(out: bytearray, v: Any):
-    if v is None:
-        out.append(QP_NULL)
-    elif v is True:
-        out.append(QP_TRUE)
-    elif v is False:
-        out.append(QP_FALSE)
-    elif isinstance(v, int):
-        _pack_int(out, v)
-    elif isinstance(v, float):
-        if v == 0.0:
-            out.append(126)
-        elif v == 1.0:
-            out.append(127)
-        elif v == -1.0:
-            out.append(125)
-        else:
-            out.append(QP_DOUBLE)
-            out += struct.pack("<d", v)
-    elif isinstance(v, str):
-        _pack_raw(out, v.encode("utf-8"))
-    elif isinstance(v, (bytes, bytearray, memoryview)):
-        _pack_raw(out, bytes(v))
-    elif isinstance(v, (list, tuple)):
-        if len(v) <= 5:
-            out.append(QP_ARRAY0 + len(v))
-            for item in v:
-                _pack(out, item)
-        else:
-            out.append(QP_ARRAY_OPEN)
-            for item in v:
-                _pack(out, item)
-            out.append(QP_ARRAY_CLOSE)
-    elif isinstance(v, dict):
-        if len(v) <= 5:
-            out.append(QP_MAP0 + len(v))
-            for k, item in v.items():
-                _pack(out, k)
-                _pack(out, item)
-        else:
-            out.append(QP_MAP_OPEN)
-            for k, item in v.items():
-                _pack(out, k)
-                _pack(out, item)
-            out.append(QP_MAP_CLOSE)
-    else:
-        raise QpackError(f"cannot qpack type {type(v).__name__}")
+def _pack_str(out: bytearray, v: str):
+    _pack_raw(out, v.encode("utf-8"))
+
+
+def _pack_bytes(out: bytearray, v):
+    _pack_raw(out, bytes(v))
+
+
+def _pack_none(out: bytearray, _v):
+    out.append(QP_NULL)
+
+
+def _pack_bool(out: bytearray, v: bool):
+    out.append(QP_TRUE if v else QP_FALSE)
+
+
+def _pack_array(out: bytearray, v):
+    n = len(v)
+    out.append(QP_ARRAY0 + n if n <= 5 else QP_ARRAY_OPEN)
+    get = _PACKERS.get
+    for item in v:
+        if type(item) is list and len(item) == 2:
+            ts, val = item
+            if type(ts) is int and type(val) is float \
+                    and val != 0.0 and val != 1.0 and val != -1.0:
+                if (1 << 31) <= ts <= _INT64_MAX:
+                    out += _PAIR_I64_D(_ARRAY2, QP_INT64, ts,
+                                       QP_DOUBLE, val)
+                    continue
+                if (1 << 15) <= ts < (1 << 31):
+                    out += _PAIR_I32_D(_ARRAY2, QP_INT32, ts,
+                                       QP_DOUBLE, val)
+                    continue
+        get(type(item), _pack_other)(out, item)
+    if n > 5:
+        out.append(QP_ARRAY_CLOSE)
+
+
+def _pack_map(out: bytearray, v: dict):
+    n = len(v)
+    out.append(QP_MAP0 + n if n <= 5 else QP_MAP_OPEN)
+    get = _PACKERS.get
+    for k, item in v.items():
+        get(type(k), _pack_other)(out, k)
+        get(type(item), _pack_other)(out, item)
+    if n > 5:
+        out.append(QP_MAP_CLOSE)
+
+
+_PACKERS = {
+    type(None): _pack_none, bool: _pack_bool, int: _pack_int,
+    float: _pack_float, str: _pack_str, bytes: _pack_bytes,
+    bytearray: _pack_bytes, memoryview: _pack_bytes,
+    list: _pack_array, tuple: _pack_array, dict: _pack_map,
+}
+_PACKERS_BY_BASE = (
+    (int, _pack_int), (float, _pack_float), (str, _pack_str),
+    ((bytes, bytearray, memoryview), _pack_bytes),
+    ((list, tuple), _pack_array), (dict, _pack_map),
+)
+
+
+def _pack_other(out: bytearray, v: Any):
+    for base, pack in _PACKERS_BY_BASE:
+        if isinstance(v, base):
+            pack(out, v)
+            return
+    raise QpackError(f"cannot qpack type {type(v).__name__}")
 
 
 def packb(v: Any) -> bytes:
     out = bytearray()
-    _pack(out, v)
+    _PACKERS.get(type(v), _pack_other)(out, v)
     return bytes(out)
 
 
 # ---------------------------------------------------------------- unpack
-class _Reader:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def eof(self) -> bool:
-        return self.pos >= len(self.buf)
-
-    def peek(self) -> int:
-        return self.buf[self.pos]
-
-    def take(self, n: int) -> bytes:
-        if self.pos + n > len(self.buf):
-            raise QpackError("truncated qpack data")
-        b = self.buf[self.pos:self.pos + n]
-        self.pos += n
-        return b
+# ``_unpack(buf, pos)`` decodes the value at ``pos`` and returns it
+# with the position after it. Reading past the end raises IndexError
+# or struct.error, which ``unpackb`` reports as truncated data.
+def _lane(fmt: str):
+    s = struct.Struct("<" + fmt)
+    return s.unpack_from, s.size
 
 
-def _raw(r: _Reader, n: int):
-    b = r.take(n)
+#: the length prefix of RAW8..RAW64
+_RAW_LENS = {QP_RAW8: _lane("B"), QP_RAW16: _lane("H"),
+             QP_RAW32: _lane("I"), QP_RAW64: _lane("Q")}
+_LANE_FMTS = {QP_INT8: "b", QP_INT16: "h", QP_INT32: "i",
+              QP_INT64: "q", QP_DOUBLE: "d"}
+#: the fixed-width int and double lanes
+_LANES = {tag: _lane(fmt) for tag, fmt in _LANE_FMTS.items()}
+#: a fixed array of two fixed-width values, read tags and all in one
+#: call: (first tag << 8 | second tag) -> (unpack_from, total width)
+_PAIRS = {(ta << 8) | tb: _lane(f"B{fa}B{fb}")
+          for ta, fa in _LANE_FMTS.items()
+          for tb, fb in _LANE_FMTS.items()}
+
+
+def _truncated() -> QpackError:
+    return QpackError("truncated qpack data")
+
+
+def _raw(buf: bytes, pos: int, n: int):
+    stop = pos + n
+    if stop > len(buf):
+        raise _truncated()
+    b = buf[pos:stop]
     try:
-        return b.decode("utf-8")
+        return b.decode("utf-8"), stop
     except UnicodeDecodeError:
-        return bytes(b)
+        return b, stop
 
 
-def _unpack(r: _Reader):
-    tp = r.take(1)[0]
+def _unpack(buf: bytes, pos: int):
+    tp = buf[pos]
+    pos += 1
+    if tp == _ARRAY2:  # the [ts, value] pair of a select reply
+        first = _LANES.get(buf[pos])
+        if first is not None:
+            pair = _PAIRS.get((buf[pos] << 8) | buf[pos + 1 + first[1]])
+            if pair is not None:
+                read, width = pair
+                _ta, a, _tb, b = read(buf, pos)
+                return [a, b], pos + width
     if tp < 64:
-        return tp
+        return tp, pos
     if tp < 124:
-        return 63 - tp
+        return 63 - tp, pos
     if tp == QP_HOOK:
         raise QpackError("hook objects are not supported")
     if tp < 128:  # 125..127
-        return float(tp - 126)
+        return float(tp - 126), pos
     if tp < 228:  # fixed raw
-        return _raw(r, tp - 128)
-    if tp == QP_RAW8:
-        return _raw(r, r.take(1)[0])
-    if tp == QP_RAW16:
-        return _raw(r, struct.unpack("<H", r.take(2))[0])
-    if tp == QP_RAW32:
-        return _raw(r, struct.unpack("<I", r.take(4))[0])
-    if tp == QP_RAW64:
-        return _raw(r, struct.unpack("<Q", r.take(8))[0])
-    if tp == QP_INT8:
-        return struct.unpack("<b", r.take(1))[0]
-    if tp == QP_INT16:
-        return struct.unpack("<h", r.take(2))[0]
-    if tp == QP_INT32:
-        return struct.unpack("<i", r.take(4))[0]
-    if tp == QP_INT64:
-        return struct.unpack("<q", r.take(8))[0]
-    if tp == QP_DOUBLE:
-        return struct.unpack("<d", r.take(8))[0]
+        return _raw(buf, pos, tp - 128)
+    if tp <= QP_RAW64:
+        read, width = _RAW_LENS[tp]
+        return _raw(buf, pos + width, read(buf, pos)[0])
+    if tp <= QP_DOUBLE:
+        read, width = _LANES[tp]
+        return read(buf, pos)[0], pos + width
     if tp <= 242:  # fixed array
-        return [_unpack(r) for _ in range(tp - QP_ARRAY0)]
+        items = []
+        for _ in range(tp - QP_ARRAY0):
+            v, pos = _unpack(buf, pos)
+            items.append(v)
+        return items, pos
     if tp <= 248:  # fixed map
-        return {_unpack(r): _unpack(r) for _ in range(tp - QP_MAP0)}
+        m = {}
+        for _ in range(tp - QP_MAP0):
+            k, pos = _unpack(buf, pos)
+            v, pos = _unpack(buf, pos)
+            m[k] = v
+        return m, pos
     if tp == QP_TRUE:
-        return True
+        return True, pos
     if tp == QP_FALSE:
-        return False
+        return False, pos
     if tp == QP_NULL:
-        return None
+        return None, pos
+    end = len(buf)
     if tp == QP_ARRAY_OPEN:
         items = []
-        while not r.eof() and r.peek() != QP_ARRAY_CLOSE:
-            items.append(_unpack(r))
-        if not r.eof():
-            r.take(1)
-        return items
+        while pos < end and buf[pos] != QP_ARRAY_CLOSE:
+            v, pos = _unpack(buf, pos)
+            items.append(v)
+        return items, min(pos + 1, end)
     if tp == QP_MAP_OPEN:
         m = {}
-        while not r.eof() and r.peek() != QP_MAP_CLOSE:
-            k = _unpack(r)
-            if r.eof() or r.peek() == QP_MAP_CLOSE:
+        while pos < end and buf[pos] != QP_MAP_CLOSE:
+            k, pos = _unpack(buf, pos)
+            if pos >= end or buf[pos] == QP_MAP_CLOSE:
                 raise QpackError("map key without value")
-            m[k] = _unpack(r)
-        if not r.eof():
-            r.take(1)
-        return m
+            v, pos = _unpack(buf, pos)
+            m[k] = v
+        return m, min(pos + 1, end)
     raise QpackError(f"unexpected close tag 0x{tp:02x}")
 
 
 def unpackb(buf: bytes) -> Any:
     if not buf:
         raise QpackError("empty qpack buffer")
-    r = _Reader(bytes(buf))
-    v = _unpack(r)
-    if not r.eof():
-        raise QpackError(
-            f"trailing bytes after qpack value at {r.pos}")
+    buf = bytes(buf)
+    try:
+        v, pos = _unpack(buf, 0)
+    except (IndexError, struct.error):
+        raise _truncated() from None
+    if pos < len(buf):
+        raise QpackError(f"trailing bytes after qpack value at {pos}")
     return v

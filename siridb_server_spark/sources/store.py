@@ -47,6 +47,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1029,16 +1030,33 @@ class PointsStore:
     def delete_series(self, spark: SparkSession, names: list):
         """Anti-join rewrite (drop series). At 100 TB this is a Delta
         DELETE / partition-scoped rewrite; on plain parquet we rewrite
-        the partitions that contain the series (parquet row-group
-        stats tell us which via a pushed-down filter)."""
+        the partitions that contain the series.
+
+        A store whose shard files total at most
+        LOCAL_OPTIMIZE_MAX_BYTES finds and rewrites the hit shards on
+        the driver with pyarrow (:meth:`_delete_local`, no Spark job);
+        a larger one finds them in one distinct-collect job and
+        rewrites each with a Spark write. Either way each rewrite is
+        staged under ``_rewrite_tmp(kind, sid)`` and swapped in."""
         self._repair_rewrites()
         if not self._exists() or not names:
             return
-        df = self._read(spark, self.path)
-        hit_sids = {(r["kind"], r["sid"]) for r in df.where(
-            F.col("series").isin(names))
-            .select("kind", "sid").distinct().collect()}
-        if not hit_sids:
+        shards = list(self._sid_dirs())
+        local = sum(os.path.getsize(f) for _k, _s, p in shards
+                    for f in self._parquet_files(p)) \
+            <= LOCAL_OPTIMIZE_MAX_BYTES
+        if local:
+            doomed = pa.array(names, pa.string())
+            hit = [(kind, sid, p) for kind, sid, p in shards
+                   if self._holds_any(p, doomed)]
+        else:
+            df = self._read(spark, self.path)
+            hit_sids = {(r["kind"], r["sid"]) for r in df.where(
+                F.col("series").isin(names))
+                .select("kind", "sid").distinct().collect()}
+            hit = [(kind, sid, p) for kind, sid, p in shards
+                   if (kind, sid) in hit_sids]
+        if not hit:
             return
         self.repair_catalog(spark)
         cat = self._fold_files(self._base_files() + self._delta_files())
@@ -1047,14 +1065,15 @@ class PointsStore:
                 "drop series: a catalog file was removed while it was "
                 "read (concurrent compaction); retry")
         with self._pending():
-            for kind, sid, p in list(self._sid_dirs()):
-                if (kind, sid) not in hit_sids:
-                    continue
-                part = self._read(spark, p).where(
-                    ~F.col("series").isin(names)).select(*_POINT_COLS)
+            for kind, sid, p in hit:
                 tmp = self._rewrite_tmp(kind, sid)
-                part.write.mode("overwrite") \
-                    .option("compression", "zstd").parquet(tmp)
+                if local:
+                    self._delete_local(p, tmp, doomed)
+                else:
+                    self._read(spark, p).where(
+                        ~F.col("series").isin(names)) \
+                        .select(*_POINT_COLS).write.mode("overwrite") \
+                        .option("compression", "zstd").parquet(tmp)
                 self._swap_partition(tmp, p)
             shutil.rmtree(self._rewrite_root, ignore_errors=True)
             # cat is the folded base ∪ deltas; writing it as the new
@@ -1063,6 +1082,28 @@ class PointsStore:
             self._write_base(_catalog_table(
                 {n: st for n, st in cat.items() if n not in dropped}))
             shutil.rmtree(self._delta_path, ignore_errors=True)
+
+    def _holds_any(self, part: str, doomed) -> bool:
+        """Whether the shard at ``part`` holds a row of a ``doomed``
+        series (reads its ``series`` column only)."""
+        files = self._parquet_files(part)
+        return bool(files) and bool(pc.any(pc.is_in(
+            pq.read_table(files, columns=["series"])["series"],
+            value_set=doomed)).as_py())
+
+    def _delete_local(self, part: str, tmp: str, doomed):
+        """The in-process half of :meth:`delete_series`: the shard's
+        files less the rows of the ``doomed`` series, in read order,
+        staged as one file under ``tmp``."""
+        tbl = pq.read_table(self._parquet_files(part),
+                            columns=_POINT_COLS,
+                            schema=_pa_points_schema())
+        tbl = tbl.filter(pc.invert(pc.is_in(tbl["series"],
+                                            value_set=doomed)))
+        os.makedirs(tmp, exist_ok=True)
+        pq.write_table(
+            tbl, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"),
+            compression="zstd")
 
     # ---------------------------------------------------------- rollup
     @property

@@ -488,3 +488,20 @@ def test_rollup_read_of_many_shards_is_one_in_filter(spark, tmp_path):
             assert a == eng.query(q), q
         finally:
             eng.rollup_enabled = True
+
+
+def test_from_points_catalog_persists_nothing(spark):
+    """A ``from_points`` engine derives its catalog lazily and caches
+    nothing: building and discarding two engines over the same points
+    (the second once asked to cache the first's plan again) leaves the
+    session's persisted RDDs as they were."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    points = _multi_engine(spark).points_df()
+    for _ in range(2):
+        eng = SiriEngine.from_points(spark, points, precision="s")
+        assert eng.catalog_df().count() == 5
+        assert eng.select_df(
+            "select max(600) from /.*/ where length > 10").count() == 30
+        del eng
+    assert persisted().size() == before

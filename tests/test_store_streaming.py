@@ -832,6 +832,85 @@ def test_optimize_pyarrow_rewrite_matches_the_spark_write(
         sorted(map(repr, st.read(spark).collect()))
 
 
+
+def test_delete_series_pyarrow_rewrite_matches_the_spark_write(
+        spark, tmp_path, monkeypatch):
+    """Below LOCAL_OPTIMIZE_MAX_BYTES delete_series() finds and
+    rewrites the hit shards in-process with pyarrow and runs no Spark
+    job; every shard is left holding the same files' worth of rows,
+    with the same schema, as the Spark rewrite leaves of the same
+    store — a shard only the dropped series held included — and the
+    catalogs agree."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from siridb_server_spark.sources import store as store_mod
+
+    big = 2**63 - 1
+    rows = [(s, ts, seq, vi, vd, vs, tp)
+            for seq, (s, ts, vi, vd, vs, tp) in enumerate([
+                ("é|1", 30, 1, None, None, 0),
+                ("Z", 30, -big - 1, None, None, 0),
+                ("a", 12, big, None, None, 0),
+                ("a", 12, 2**53 + 1, None, None, 0),
+                ("ß", 7, None, float("nan"), None, 1),
+                ("ß", 3, None, float("-inf"), None, 1),
+                ("a b", 44, None, -0.0, None, 1),
+                ("a b", 41, None, float("inf"), None, 1),
+                ("log", 5, None, None, "", 2),
+                ("log", 25, None, None, "ünï", 2),
+                ("\u65e5", 130, 4, None, None, 0),
+                ("\u65e5", 101, 5, None, None, 0),
+                ("a", 250, 6, None, None, 0),
+            ])]
+    root = tmp_path / "spark"
+    st = PointsStore(str(root), 100, 50)
+    st.append_df(spark.createDataFrame(rows[::3], POINTS_SCHEMA))
+    for part in (rows[1::3], rows[2::3]):
+        st.append_local(spark, list(reversed(part)))
+    shutil.copytree(root, tmp_path / "local")
+    local = PointsStore(str(tmp_path / "local"), 100, 50)
+    drop = ["a", "ß", "log", "absent"]
+
+    def shards(store):
+        out = {}
+        for kind, sid, p in store._sid_dirs():
+            files = store._parquet_files(p)
+            tbl = pq.read_table(files, schema=store_mod._pa_points_schema(
+            )) if files else None
+            out[(kind, sid)] = (
+                len(files), tbl.schema if tbl is not None else None,
+                sorted(map(repr, tbl.to_pylist())) if tbl else [])
+        return out
+
+    before = shards(st)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    local.delete_series(spark, drop)
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    assert not os.path.isdir(local._rewrite_root)
+    monkeypatch.setattr(store_mod, "LOCAL_OPTIMIZE_MAX_BYTES", -1)
+    st.delete_series(spark, drop)
+    assert set(tracker.getJobIdsForGroup()) - jobs
+    want, got = shards(st), shards(local)
+    assert sorted(got) == sorted(want) == sorted(before)
+    changed = [k for k in want if want[k] != before[k]]
+    assert len(changed) >= 3
+    # a shard only dropped series held keeps one row-less file
+    assert any(not want[k][2] for k in changed)
+    for key, (n, schema, rows_) in want.items():
+        got_n, got_schema, got_rows = got[key]
+        # the Spark side writes a file per input split; pyarrow one
+        assert got_n == (1 if key in changed else n), key
+        assert (got_schema, got_rows) == (schema, rows_), key
+    assert st.read_catalog_local() == local.read_catalog_local()
+    assert not {r["series"] for r in local.read(spark).collect()} & \
+        set(drop)
+    assert sorted(map(repr, local.read(spark).collect())) == \
+        sorted(map(repr, st.read(spark).collect()))
+
+
 def test_sessionize_timeout_tombstone_keeps_seq(spark):
     """State-transition contract of the idle-timeout flush, driven
     through a fake GroupState (the end-to-end processing-time test
