@@ -47,6 +47,7 @@ from .model import (
 )
 from .operators.selection import compile_match
 from .operators.where import compile_where
+from .plans import arrowpath as AP
 from .plans import nodes as N
 from .plans import timeexpr as TE
 from .plans.parser import Parser
@@ -131,6 +132,9 @@ class SiriEngine:
         #: around each engine call, as the reference's single event
         #: loop per database serializes its queries
         self.lock = threading.Lock()
+        #: selects answered per path (see :meth:`_select`)
+        self.select_paths = {"catalog": 0, "arrow": 0, "spark": 0}
+        self._select_path = None
 
     @classmethod
     def open(cls, spark: SparkSession, path: str,
@@ -597,10 +601,11 @@ class SiriEngine:
         result = self._dispatch(stmt)
         if parsed.timeit:
             result = dict(result)
-            result["__timeit__"] = [{
-                "server": "sparksiri:0",
-                "time": _time.perf_counter() - t0,
-            }]
+            entry = {"server": "sparksiri:0",
+                     "time": _time.perf_counter() - t0}
+            if isinstance(stmt, N.SelectStmt):
+                entry["path"] = self._select_path
+            result["__timeit__"] = [entry]
         return stmt, result
 
     # statement → required privilege bit (ref listener.c enter_*
@@ -695,27 +700,36 @@ class SiriEngine:
         if not isinstance(parsed.stmt, N.SelectStmt):
             raise QueryError("select_df() requires a select statement.")
         self._check_access(ACL.SELECT)
-        # need_seeds=False: the distributed API never ships the series
-        # names to the driver — at 100M series the type set and points
-        # bound come from a 1-row aggregation instead
+        # need_seeds=False: the frame carries no seed rows; a store
+        # engine plans from its driver snapshot, an unmutated
+        # from_points engine from a 1-row aggregation of its frame
         out_df, _seeds = self._select_plan(parsed.stmt,
                                            need_seeds=False)
         return out_df
 
     def _select(self, stmt: N.SelectStmt) -> dict:
-        fast = self._fast_select_dict(stmt)
-        if fast is not None:
-            return fast
-        out_df, seeds = self._select_plan(stmt)
-        return self._collect(out_df, seeds)
+        """A select's reply from the first path that serves it: the
+        catalog snapshot, the driver-side Arrow executor
+        (plans/arrowpath.py), else a Spark plan. The path is counted
+        in ``select_paths`` and kept for ``timeit``."""
+        out, path = self._fast_select_dict(stmt), "catalog"
+        if out is None:
+            out, path = AP.select(self, stmt), "arrow"
+        if out is None:
+            out_df, seeds = self._select_plan(stmt)
+            out, path = self._collect(out_df, seeds), "spark"
+        self.select_paths[path] += 1
+        self._select_path = path
+        return out
 
     def _select_plan(self, stmt: N.SelectStmt, need_seeds: bool = True):
         """The result frame of a select and its seed names. ``query()``
-        (``need_seeds``) plans from the driver snapshot: the names,
-        type set and points bound of the selected series — the result
-        dict is keyed per series, so the names come down anyway.
-        ``select_df()`` plans from Spark frames and never ships the
-        names to the driver."""
+        (``need_seeds``) and every ``select_df()`` of a store-backed
+        engine plan from the driver snapshot: the names, type set and
+        points bound of the selected series (``query()`` also seeds
+        its reply with the names, which it keys per series).
+        ``select_df()`` on an unmutated ``from_points`` engine plans
+        from Spark frames and never ships the names to the driver."""
         # where-selected names, shared by the points path and the
         # rollup path of every pipeline
         names = None
@@ -724,7 +738,7 @@ class SiriEngine:
         # points pass the skip path exists to avoid)
         skippable = not need_seeds \
             and self._skippable_agg(stmt) is not None
-        if need_seeds:
+        if need_seeds or self.store is not None:
             sel = self._selected(stmt.match, stmt.where)
             sel_names = [r["name"] for r in sel]
             tps = frozenset(r["tp"] for r in sel)
@@ -733,8 +747,9 @@ class SiriEngine:
             if stmt.where is not None:
                 names = arrow_df(self.spark, [(nm,) for nm in sel_names],
                                  "series string")
-        elif self.store is None and stmt.where is None \
-                and not skippable:
+            if not need_seeds:
+                sel_names = []
+        elif stmt.where is None and not skippable:
             # select_df() on an unmutated from_points engine with no
             # metadata where: the plan only needs the type set and
             # the points-limit bound — ONE partial-aggregated pass
@@ -755,9 +770,10 @@ class SiriEngine:
             sel_names = []
             n_sel = 0
         else:
-            # select_df(): the plan only needs the type set, the
-            # points-limit bound, and the series count — one tiny
-            # aggregation row, never O(|series|) on the driver
+            # select_df() on an unmutated from_points engine: the plan
+            # only needs the type set, the points-limit bound, and the
+            # series count — one tiny aggregation row, never
+            # O(|series|) on the driver
             cat = self._selected_catalog(stmt.match, stmt.where)
             if stmt.where is not None:
                 names = cat.select(F.col("name").alias("series"))
@@ -899,6 +915,9 @@ class SiriEngine:
         # derive sid bounds so the scan prunes whole shard directories
         # (the analogue of the reference's shard skipping,
         # series.c:927-938).
+        # Shard ids are trunc-mod (``ts - ts % dur``): a negative ts
+        # lands in a shard id at or above it, up to 0, so an upper
+        # bound below 1 prunes with 1.
         has_sid = "_sid" in df.columns
         maxdur = max(self.duration_num, self.duration_log)
         tr = stmt.timerange
@@ -911,12 +930,12 @@ class SiriEngine:
             elif kind == "before":
                 df = df.where(f"ts < {tr[1]}")
                 if has_sid:
-                    df = df.where(f"_sid < {tr[1]}")
+                    df = df.where(f"_sid < {max(tr[1], 1)}")
             elif kind == "between":
                 df = df.where(f"(ts >= {tr[1]}) AND (ts < {tr[2]})")
                 if has_sid:
                     df = df.where(f"(_sid > {tr[1] - maxdur})"
-                                  f" AND (_sid < {tr[2]})")
+                                  f" AND (_sid < {max(tr[2], 1)})")
             elif kind in ("head", "tail"):
                 order = [F.col("ts"), F.col("seq")] if kind == "head" else \
                     [F.col("ts").desc(), F.col("seq").desc()]

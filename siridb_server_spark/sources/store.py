@@ -1070,9 +1070,12 @@ class PointsStore:
                 if local:
                     self._delete_local(p, tmp, doomed)
                 else:
+                    # one file per shard, as the pyarrow side and
+                    # optimize leave it
                     self._read(spark, p).where(
                         ~F.col("series").isin(names)) \
-                        .select(*_POINT_COLS).write.mode("overwrite") \
+                        .select(*_POINT_COLS).coalesce(1) \
+                        .write.mode("overwrite") \
                         .option("compression", "zstd").parquet(tmp)
                 self._swap_partition(tmp, p)
             shutil.rmtree(self._rewrite_root, ignore_errors=True)

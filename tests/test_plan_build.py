@@ -36,6 +36,10 @@ import pytest
 
 from siridb_server_spark import SiriEngine
 
+# these tests compare Spark plans and paths: keep selects off the
+# driver-side Arrow executor
+pytestmark = pytest.mark.usefixtures("spark_selects")
+
 GOLDEN = os.path.join(os.path.dirname(__file__), "plan_golden.json")
 
 #: serve-read templates (perfbench/gen.py's read mix on this store)

@@ -19,6 +19,10 @@ import pytest
 
 from siridb_server_spark import SiriEngine
 
+# these tests compare Spark plans and paths: keep selects off the
+# driver-side Arrow executor
+pytestmark = pytest.mark.usefixtures("spark_selects")
+
 PY_NODES = ("BatchEvalPython", "ArrowEvalPython",
             "FlatMapGroupsInPandas", "MapInPandas")
 
@@ -83,7 +87,8 @@ def test_tpch_join_broadcasts(spark):
 
 def test_select_df_never_collects_series_names(store_eng, monkeypatch):
     """select_df (the distributed API) must not ship O(|series|) rows
-    to the driver — the type set and points bound come from a 1-row
+    to the driver — a store engine takes the type set and points bound
+    from its driver snapshot, a from_points engine from a 1-row
     aggregation. query() may collect names (its result dict is keyed
     per series, inherently driver-sized)."""
     from pyspark.sql import DataFrame

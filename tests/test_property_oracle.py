@@ -65,19 +65,19 @@ def check(got, expected, key):
 
 
 @pytest.mark.parametrize("fn", AGGS)
-def test_to_one(scenario, fn):
+def test_to_one(scenario, fn, query_both):
     eng, series = scenario
     for name, (pts, is_int) in series.items():
-        got = eng.query(f'select {fn}() from "{name}"')[name]
+        got = query_both(eng, f'select {fn}() from "{name}"')[name]
         check(got, O.to_one(fn, pts, is_int), (fn, name))
 
 
 @pytest.mark.parametrize("fn", AGGS)
 @pytest.mark.parametrize("g", [7, 600, 3600])
-def test_bucketed(scenario, fn, g):
+def test_bucketed(scenario, fn, g, query_both):
     eng, series = scenario
     for name, (pts, is_int) in series.items():
-        got = eng.query(f'select {fn}({g}) from "{name}"')[name]
+        got = query_both(eng, f'select {fn}({g}) from "{name}"')[name]
         check(got, O.bucketed(fn, pts, g, 0, is_int), (fn, g, name))
 
 

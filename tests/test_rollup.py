@@ -19,6 +19,10 @@ import pytest
 
 from siridb_server_spark import SiriEngine
 
+# these tests compare Spark plans and paths: keep selects off the
+# driver-side Arrow executor
+pytestmark = pytest.mark.usefixtures("spark_selects")
+
 QUERIES = [
     "select count(1800) from /.*/",
     "select count(600) from /.*/",

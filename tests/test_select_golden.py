@@ -11,11 +11,11 @@ from tests.golden_data import DATA, LENPOINTS, SORTED_DATA
 
 
 @pytest.fixture(scope="module")
-def eng(spark):
+def eng(spark, both_ways):
     e = SiriEngine(spark, precision="s")
     assert e.insert(DATA) == {
         "success_msg": f"Successfully inserted {LENPOINTS} point(s)."}
-    return e
+    return both_ways(e)
 
 
 def approx_result(got, expected):

@@ -20,11 +20,11 @@ def scale(pts):
 
 
 @pytest.fixture(scope="module")
-def eng(spark):
+def eng(spark, both_ways):
     e = SiriEngine(spark, precision="ns")
     e.insert({name: scale(pts) for name, pts in DATA.items()
               if name != "huge"})
-    return e
+    return both_ways(e)
 
 
 def check(got, expected, key):

@@ -901,8 +901,9 @@ def test_delete_series_pyarrow_rewrite_matches_the_spark_write(
     assert any(not want[k][2] for k in changed)
     for key, (n, schema, rows_) in want.items():
         got_n, got_schema, got_rows = got[key]
-        # the Spark side writes a file per input split; pyarrow one
-        assert got_n == (1 if key in changed else n), key
+        # each side leaves a rewritten shard as one file
+        assert got_n == n == (1 if key in changed else before[key][0]), \
+            key
         assert (got_schema, got_rows) == (schema, rows_), key
     assert st.read_catalog_local() == local.read_catalog_local()
     assert not {r["series"] for r in local.read(spark).collect()} & \
