@@ -3837,19 +3837,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("vec_id") != 0)
         vec = _query_vec(spark, sf_dir)
         idx = SIM.PQIndex.train(emb, m=8, k=16, iters=3)
-        res = idx.search_rerank(emb, vec, k=10, shortlist=200)
-        exact = SIM.l2_topk_exact(emb, vec, k=10)
-        hit = res.join(exact.select("vec_id"), "vec_id", "semi")
-        bad_code = idx.codes.where(
-            F.exists("code", lambda c: (c < 0) | (c >= 16)))
-        recall_ok = hit.agg(
-            F.lit("recall_at_10_ge_5").alias("prop"),
-            F.when(F.count(F.lit(1)) >= 5, F.lit(1)).otherwise(0)
-            .cast("long").alias("n"))
-        return (res.agg(F.lit("k_returned").alias("prop"),
-                        F.count(F.lit(1)).cast("long").alias("n"))
-                .unionByName(_prop("code_out_of_range", bad_code))
-                .unionByName(recall_ok))
+        # the rows are computed before the index's persisted codes
+        # are released, so the entry leaves no cached RDD behind
+        try:
+            res = idx.search_rerank(emb, vec, k=10, shortlist=200)
+            exact = SIM.l2_topk_exact(emb, vec, k=10)
+            hit = res.join(exact.select("vec_id"), "vec_id", "semi")
+            bad_code = idx.codes.where(
+                F.exists("code", lambda c: (c < 0) | (c >= 16)))
+            props = [
+                ("k_returned", res.count()),
+                ("code_out_of_range", bad_code.count()),
+                ("recall_at_10_ge_5", int(hit.count() >= 5)),
+            ]
+        finally:
+            idx.unpersist()
+        return arrow_df(spark, props, "prop string, n long")
 
     q["sim_pq_ann"] = sim_pq_ann
 

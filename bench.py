@@ -405,21 +405,14 @@ def main():
         return (len(spark.catalog.listTables()),
                 jsc.getPersistentRDDs().size())
 
-    # settle before baselining. Two distinct mechanisms leave
-    # fixture-era cached RDDs that the first timed query would get
-    # blamed for: (1) dedup's bounded signature cache STRONGLY
-    # holds frames the fixture builds persisted (the r12
-    # staged-curation fixture's flags frame) — the timing loop's
-    # own per-query release_sig_cache() then unpersists them
-    # mid-run as a spurious cached_rdds -1, and no amount of gc
-    # can reap a strongly-held frame, so release it HERE;
-    # (2) frames whose last reference died with the build are
-    # reaped by the ContextCleaner asynchronously — force that
-    # reap and wait for the persistent-RDD map to stabilize.
+    # settle before baselining: fixture-era frames whose last
+    # reference died with the build are reaped by the ContextCleaner
+    # asynchronously, and the first timed query would get blamed for
+    # them — force that reap and wait for the persistent-RDD map to
+    # stabilize.
     import gc as _gc
     import time as _time
 
-    D.release_sig_cache()
     _gc.collect()
     spark.sparkContext._jvm.System.gc()
     _prev = None
@@ -471,21 +464,14 @@ def main():
                 samples.append(time.perf_counter() - t0)
         except Exception as exc:
             # one broken query must not zero out the whole bench:
-            # record the failure and keep timing the rest (and
-            # still release the signature cache, or the leak gets
-            # attributed to the NEXT query)
+            # record the failure and keep timing the rest
             errors[name] = repr(exc)[:500]
-            D.release_sig_cache()
             state0 = _session_state()
             continue
         best = min(samples)
         timings[name] = round(best, 3)
         runs_detail[name] = [round(s, 3) for s in samples]
         total += best
-        # the dedup operators keep a BOUNDED (≤4) signature cache to
-        # feed self-joins; release it so the hygiene snapshot below
-        # checks for genuinely unbounded growth, not the cache fill
-        D.release_sig_cache()
         state1 = _session_state()
         if state1 != state0:
             hygiene[name] = {"tables": state1[0] - state0[0],

@@ -59,7 +59,6 @@ def main():
             df.write.format("noop").mode("overwrite").save()
         except Exception as exc:
             print(json.dumps({"name": name, "error": repr(exc)[:300]}))
-            D.release_sig_cache()
             continue
         if EXPLAIN_DIR:
             os.makedirs(EXPLAIN_DIR, exist_ok=True)
@@ -76,7 +75,6 @@ def main():
             samples.append(round(t2 - t0, 3))
             builds.append(round(t1 - t0, 3))
             execs.append(round(t2 - t1, 3))
-        D.release_sig_cache()
         print(json.dumps({"name": name, "best": min(samples),
                           "samples": samples, "build": builds,
                           "exec": execs}), flush=True)

@@ -20,12 +20,8 @@ before/after diff of the persistent-RDD map — identifies the blocks.
 That makes release correct under CONCURRENT queries too (two
 streaming sinks checkpointing on their own foreachBatch threads can
 never capture each other's registrations, which a map-diff could).
-A defensive diff fallback covers any future Spark where the logical
-plan shape changes; the fallback inherits the single-threaded-driver
-caveat, so it (a) restricts the diffed ids to locally-checkpointed
-RDDs — a concurrent query's ordinary ``.persist()`` can never be
-captured — and (b) warns loudly, so a production log shows exactly
-when release dropped to single-writer semantics.
+A Spark build whose plan shape breaks this introspection raises
+instead of guessing.
 
 Callers: the distributed connected-components loop (one superseded
 state frame per round) and the streaming ingest sinks (two frames
@@ -38,40 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _persistent_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-
-
 def _precise_owned(out: DataFrame) -> set[int]:
     """The checkpointed Dataset's own block id: its logical plan is
     LogicalRDD(rdd) where rdd IS the persisted checkpoint RDD
     (verified for eager and lazy on Spark 4)."""
     return {int(out._jdf.queryExecution().logical().rdd().id())}
-
-
-def _fallback_owned(sc, pre: set[int]) -> set[int]:
-    """Map-diff attribution restricted to locally-checkpointed RDDs.
-    The persisted RDD KEEPS its original class after localCheckpoint
-    (only its checkpointData changes), so the checkpoint-backed test
-    is ``isLocallyCheckpointed`` — true from the localCheckpoint()
-    call onward, eager or lazy. A concurrent thread's plain
-    ``.persist()`` is never locally checkpointed and can't be
-    captured; only another thread's SIMULTANEOUS localCheckpoint
-    could (the single-writer caveat the caller warns about)."""
-    new = _persistent_ids(sc) - pre
-    owned = set()
-    m = sc._jsc.getPersistentRDDs()
-    for k in list(m.keySet()):
-        if int(k) not in new:
-            continue
-        # re-fetch under the live map: a concurrent thread may have
-        # unpersisted this RDD between the keySet() snapshot and
-        # here — exactly the scenario the fallback exists for, so
-        # a vanished entry must be skipped, not dereferenced
-        rdd = m.get(k)
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            owned.add(int(k))
-    return owned
 
 
 def tracked_local_checkpoint(df: DataFrame,
@@ -80,35 +47,17 @@ def tracked_local_checkpoint(df: DataFrame,
     checkpoint owns — pass both to
     :func:`release_local_checkpoint` when the frame is finished.
     The returned frame must NOT be used after release."""
-    sc = df.sparkSession.sparkContext
-    pre = _persistent_ids(sc)
     out = df.localCheckpoint(eager=eager)
-    try:
-        return out, _precise_owned(out)
-    except Exception:
-        # say so in the logs instead of degrading silently
-        import warnings
-
-        warnings.warn(
-            "tracked_local_checkpoint: LogicalRDD introspection "
-            "failed on this Spark build; falling back to "
-            "persistent-map diff (single concurrent checkpointing "
-            "driver thread assumed)", RuntimeWarning,
-            stacklevel=2)
-        return out, _fallback_owned(sc, pre)
+    return out, _precise_owned(out)
 
 
 def release_local_checkpoint(df: DataFrame, ids) -> None:
     """Free the checkpoint blocks ``tracked_local_checkpoint``
     registered for ``df`` (blocking, so a hygiene snapshot taken
-    right after sees them gone). Safe on an empty id set; swallows
-    a torn-down context."""
+    right after sees them gone). Safe on an empty id set."""
     if not ids:
         return
-    try:
-        m = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-        for k in list(m.keySet()):
-            if int(k) in ids:
-                m.get(k).unpersist(True)
-    except Exception:
-        pass
+    m = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    for k in list(m.keySet()):
+        if int(k) in ids:
+            m.get(k).unpersist(True)

@@ -280,10 +280,8 @@ def dsir_weights(df: DataFrame, is_target: Column, k: float = 0.5,
         F.sum(F.when(F.col("is_t"), 1).otherwise(0)).alias("n_t"),
         F.sum(F.when(~F.col("is_t"), 1).otherwise(0)).alias("n_r"))
     # the |vocab|-row table feeds both the constants and the λ join;
-    # persist it so the corpus-tokenizing pass behind it runs ONCE
-    # (without this the plan re-scans the corpus a third time)
-    from .dedup import _persist_bounded
-    counts = _persist_bounded(counts)
+    # both read its one exchange (ReusedExchange), so the corpus-
+    # tokenizing pass behind it runs once per action
     consts = counts.agg(
         F.sum("n_t").alias("nt"), F.sum("n_r").alias("nr"),
         F.count(F.lit(1)).alias("v"))

@@ -28,42 +28,6 @@ from pyspark.sql import functions as F
 
 from ..functions.stable import stable_dsum
 
-# Signature frames feed both sides of a self-join, so they are
-# persisted — but the result is returned lazily, so they can't be
-# unpersisted here. Bound the footprint instead: keep the most recent
-# few and evict the oldest (the engine's points cache does the same,
-# one live entry).
-_SIG_CACHE: list[DataFrame] = []
-# 4, not 2: the staged-curation flags frame (pipelines.py) shares
-# this cache with the signature frames, and one curate_corpus call
-# can hold a sig frame + flags live at once
-_SIG_CACHE_MAX = 4
-
-
-def _persist_bounded(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _SIG_CACHE.append(df)
-    while len(_SIG_CACHE) > _SIG_CACHE_MAX:
-        try:
-            _SIG_CACHE.pop(0).unpersist()
-        except Exception:
-            pass
-    return df
-
-
-def release_sig_cache() -> None:
-    """Unpersist the bounded signature cache. The cache avoids
-    recomputing shingle/minhash signatures when one call feeds both
-    sides of a self-join (and across immediate re-runs); callers
-    that need a clean session afterwards — the bench's per-query
-    hygiene guard, long-lived services between jobs — release it
-    explicitly."""
-    while _SIG_CACHE:
-        try:
-            _SIG_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
@@ -613,10 +577,11 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16,
         "doc_id", "sig", F.explode(F.array(*band_cols)).alias("bb")
     ).select("doc_id", "sig",
              F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    banded = _cap_hot_buckets(banded, ["band", "bh"], max_bucket)
-    # signatures feed BOTH sides of the self-join: persist so the
-    # shingle explode + min aggregation runs once, not twice
-    banded = _persist_bounded(banded)
+    # signatures feed BOTH sides of the self-join: hash them on the
+    # join keys once, and both sides read that one exchange
+    # (ReusedExchange), so the shingle hashing runs once per action
+    banded = _cap_hot_buckets(banded, ["band", "bh"], max_bucket) \
+        .repartition("band", "bh")
     a = banded.alias("a")
     b_ = banded.alias("b")
     agree = F.size(F.filter(
@@ -944,9 +909,6 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3, bits: int = 64,
     of dropped buckets).
     Output: (id_a, id_b, hamming)."""
     sig = simhash(df, bits, text_col, id_col)
-    # both sides of the self-join read the signatures: persist so the
-    # tokenize + 48-way vote aggregation runs once, not twice
-    sig = _persist_bounded(sig)
     return hamming_pairs(sig, sig_col="simhash", id_col="doc_id",
                          bits=bits, bands=bands,
                          max_hamming=max_hamming,
@@ -984,7 +946,10 @@ def hamming_pairs(sig: DataFrame, sig_col: str, id_col: str,
     never all-pairs, the 100 TB shape. Output: (id_a, id_b,
     hamming)."""
     banded = banded_bits(sig, sig_col, id_col, bits, bands)
-    banded = _cap_hot_buckets(banded, ["band", "key"], max_bucket)
+    # both join sides read ONE exchange on the join keys
+    # (ReusedExchange): the signatures are computed once per action
+    banded = _cap_hot_buckets(banded, ["band", "key"], max_bucket) \
+        .repartition("band", "key")
     a, b_ = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(
         F.col("a._sig").bitwiseXOR(F.col("b._sig")))

@@ -299,10 +299,9 @@ def phash_pairs(media: DataFrame, max_hamming: int = 6,
     banding guarantees recall for distances < bands, candidates
     verify via bit_count(xor), never all-pairs. Output: (id_a,
     id_b, hamming)."""
-    from .dedup import _persist_bounded, hamming_pairs
+    from .dedup import hamming_pairs
 
     sig = image_phash(media).where(F.col("phash").isNotNull())
-    sig = _persist_bounded(sig)
     return hamming_pairs(sig, sig_col="phash", id_col="media_id",
                          bits=64, bands=bands,
                          max_hamming=max_hamming,
@@ -2176,9 +2175,9 @@ def audio_match_pairs(media: DataFrame, min_matches: int = 5,
     a 24-bit-ish hash with natural selectivity — the 100 TB shape.
     Output: (id_a, id_b, offset, n_matches) for the best-aligned
     offset of every pair clearing ``min_matches``."""
-    from .dedup import _persist_bounded
-
-    fps = _persist_bounded(audio_fingerprint(media, **fp_opts))
+    # both join sides read ONE exchange on fp (ReusedExchange), so
+    # the landmarks are fingerprinted once per action
+    fps = audio_fingerprint(media, **fp_opts).repartition("fp")
     a, b = fps.alias("a"), fps.alias("b")
     hist = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
                    & (F.col("a.media_id") < F.col("b.media_id")))
@@ -2260,7 +2259,7 @@ def video_match_pairs(media: DataFrame, max_hamming: int = 8,
     offset. Never all-pairs: banding + bit_count verify, one extra
     groupBy. Output: (id_a, id_b, offset, n_matches) for each
     pair's best-aligned offset clearing ``min_matches``."""
-    from .dedup import _persist_bounded, hamming_pairs
+    from .dedup import hamming_pairs
 
     sig = video_phash_frames(media, every_n=every_n)
     # pack (media, frame) into one id for the generic pair join;
@@ -2269,7 +2268,6 @@ def video_match_pairs(media: DataFrame, max_hamming: int = 8,
         (F.col("media_id") * F.lit(1 << 20)
          + F.col("frame_idx")).alias("fid"),
         "phash")
-    packed = _persist_bounded(packed)
     fp = hamming_pairs(packed, sig_col="phash", id_col="fid",
                        bits=64, bands=bands,
                        max_hamming=max_hamming,

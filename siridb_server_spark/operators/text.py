@@ -821,18 +821,18 @@ def tfidf_top_terms(df: DataFrame, k: int = 5,
     Output: (source, term, tf, score_micro) — tf · ln(N/df) in
     micro-units as BIGINT (quantized at birth, so the hashed column
     and the top-k ordering both carry no float bits)."""
-    from .dedup import _persist_bounded
-
     terms = (df.select(F.col(group_col).alias("source"),
                        F.explode(F.split(F.lower(F.col(text_col)),
                                          "[^a-z]+")).alias("term"))
              .where(F.col("term") != ""))
-    # tf feeds BOTH join sides (scores and document frequency);
-    # persist it so the corpus is tokenized once, not re-scanned per
-    # branch — at 100 TB the tf table is vocabulary×sources-sized,
-    # orders of magnitude smaller than the corpus
-    tf = _persist_bounded(terms.groupBy("source", "term").agg(
-        F.count(F.lit(1)).alias("tf")))
+    # tf feeds BOTH join sides (scores and document frequency) and
+    # stays lazy: Catalyst may plan the df side as its own distinct
+    # (source, term) aggregate and tokenize the corpus twice, which
+    # still measured faster than persisting tf or repartitioning the
+    # tokens on term (ARCHITECTURE.md "similar_docs / capped joins
+    # and caching")
+    tf = terms.groupBy("source", "term").agg(
+        F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"))
     # NULL groups don't count as a source (SQL COUNT(DISTINCT)

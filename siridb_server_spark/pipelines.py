@@ -129,19 +129,15 @@ def curate_corpus(docs: DataFrame, *, min_tokens: int = 10,
     w = Window.partitionBy(F.md5(F.col("_text")))
     exact_dup = F.col("doc_id") != F.min(
         F.when(F.col("_e").isNull(), F.col("doc_id"))).over(w)
-    # ONE pass computes every row-local/window stage flag, then the
-    # NARROW (doc_id, stage-or-null) frame is cached — the union
-    # branches and the dedup stages reuse it without recomputing
-    # gate/langid/window lineage (ids + a short string per doc: the
-    # hashes+ids materialization budget, never text). Bounded-
-    # eviction persist, NOT localCheckpoint: checkpointed RDDs have
-    # no release handle and each call leaked 3 cached RDDs into the
-    # session (caught by bench.py's hygiene guard, r9)
+    # ONE pass computes every row-local/window stage flag into the
+    # NARROW (doc_id, stage-or-null) frame; the union branches and
+    # the dedup stages read the window's one exchange
+    # (ReusedExchange) instead of recomputing the gate/langid
+    # lineage per branch
     flags = early.select(
         "doc_id",
         F.coalesce(F.col("_e"),
                    F.when(exact_dup, "exact_dup")).alias("_stage"))
-    flags = D._persist_bounded(flags)
     surv2 = (docs.join(flags.where(F.col("_stage").isNull())
                        .select("doc_id"), "doc_id")
              .select("doc_id", text_col)

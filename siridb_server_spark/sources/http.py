@@ -99,8 +99,8 @@ def _make_handler(engine, lock):
                 self.close_connection = True
                 try:
                     self._send(500, {"error_msg": str(exc)})
-                except Exception:
-                    pass
+                except OSError:
+                    pass  # the client's socket is gone
 
     return Handler
 

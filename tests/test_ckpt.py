@@ -1,11 +1,10 @@
-"""Releasable localCheckpoint ownership — precise path, the
-restricted map-diff fallback, and release semantics.
+"""Releasable localCheckpoint ownership and release semantics.
 
 The module under test exists because ``df.rdd.unpersist()`` after a
 localCheckpoint is a silent no-op (it wraps a NEW conversion RDD)
 while unpersisting the wrong persistent-map entry DESTROYS a live
-checkpoint; these tests pin both ownership paths so a Spark upgrade
-that changes the logical-plan shape degrades loudly and correctly.
+checkpoint; these tests pin the ownership path so a Spark upgrade
+that changes the logical-plan shape fails loudly.
 """
 
 import warnings
@@ -14,11 +13,13 @@ import pytest
 
 from siridb_server_spark import ckpt
 from siridb_server_spark.ckpt import (
-    _fallback_owned,
-    _persistent_ids,
     release_local_checkpoint,
     tracked_local_checkpoint,
 )
+
+
+def _persistent_ids(sc) -> set[int]:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
 
 
 def test_precise_ownership_and_release(spark):
@@ -35,52 +36,21 @@ def test_precise_ownership_and_release(spark):
     assert not (ids & _persistent_ids(sc))
 
 
-def test_fallback_ignores_plain_persist(spark):
-    """_fallback_owned must capture ONLY locally-checkpointed RDDs
-    from the diff window: a plain .persist() materialized in the
-    same window (another driver thread's cache, in production) is
-    excluded, so release can never unpersist a live cache it
-    doesn't own."""
-    sc = spark.sparkContext
-    pre = _persistent_ids(sc)
-    cached = spark.range(50).selectExpr("id", "id + 1 AS v") \
-        .persist()
-    cached.count()  # register in the persistent-RDD map
-    ck = spark.range(10).localCheckpoint(eager=True)
-    try:
-        owned = _fallback_owned(sc, pre)
-        assert owned, "fallback missed the checkpointed RDD"
-        # every owned id must be checkpoint-backed; the plain cache
-        # must survive a release of the owned set
-        release_local_checkpoint(ck, owned)
-        assert cached.count() == 50
-        assert cached.storageLevel.useMemory
-    finally:
-        cached.unpersist(blocking=True)
-
-
-def test_fallback_engages_with_warning(spark, monkeypatch):
-    """When the LogicalRDD introspection throws (a future Spark
-    build), tracked_local_checkpoint warns RuntimeWarning and still
-    returns a releasable owned set via the restricted diff."""
+def test_failed_introspection_raises(spark, monkeypatch):
+    """When the LogicalRDD introspection throws (a Spark build whose
+    plan shape changed), tracked_local_checkpoint raises: no guessed
+    owned set can ever unpersist blocks the caller does not own."""
     monkeypatch.setattr(
         ckpt, "_precise_owned",
         lambda out: (_ for _ in ()).throw(RuntimeError("no plan")))
-    sc = spark.sparkContext
-    with pytest.warns(RuntimeWarning, match="persistent-map diff"):
-        out, ids = tracked_local_checkpoint(
-            spark.range(25).selectExpr("id"), eager=True)
-    assert ids, "fallback returned an empty owned set"
-    assert ids <= _persistent_ids(sc)
-    assert out.count() == 25
-    release_local_checkpoint(out, ids)
-    assert not (ids & _persistent_ids(sc))
+    with pytest.raises(RuntimeError, match="no plan"):
+        tracked_local_checkpoint(spark.range(25).selectExpr("id"),
+                                 eager=True)
 
 
 def test_precise_path_emits_no_warning(spark):
-    """The normal path is silent — the RuntimeWarning is the
-    fallback's signature, so it must not fire when introspection
-    succeeds."""
+    """The normal path is silent: tracking a checkpoint emits no
+    RuntimeWarning."""
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         out, ids = tracked_local_checkpoint(

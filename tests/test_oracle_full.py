@@ -7,6 +7,8 @@ them in one command:
 
 Deselected from the default run (pytest.ini addopts) because it
 replays the whole inventory (~124 Spark jobs); select it explicitly.
+Every entry must also leave the session's persistent-RDD id set as
+it found it (or smaller).
 ``SPARK_GRAFT_ORACLE_SF_DIR`` overrides the data directory (default
 /root/testdata/sf0.01, falling back to sf0.001 when absent); it is
 deliberately distinct from bench.py's ``SPARK_GRAFT_SF_DIR`` so a
@@ -55,10 +57,20 @@ def oracle_con():
     con.close()
 
 
+def _persistent_ids(spark) -> set[int]:
+    return {int(k) for k in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_oracle(name, spark, oracle_con):
+    before = _persistent_ids(spark)
     err = compare_one(spark, oracle_con, SF_DIR, name,
                       _QUERIES[name], _ORACLES.get(name))
+    # id-set containment, not a count: the ContextCleaner may reap an
+    # earlier entry's blocks concurrently, which could hide a leak
+    assert _persistent_ids(spark) <= before, \
+        f"{name} left persisted RDDs behind"
     if err is not None and err.startswith("zero rows"):
         pytest.skip(err)  # rows-only entries warn, like the driver
     assert err is None, f"{name}: {err}"
