@@ -4,10 +4,12 @@ queries() covers SURVEY.md §2's operator inventory — every select-
 pipeline function, set algebra, where, time ranges, head/tail, merge —
 running through the REAL engine (SiriEngine.select_df), plus the
 training-data-pipeline operators (dedup, similarity search, text
-analysis, multimodal plumbing) and two TPC-H-style analytics queries.
-oracle_sql() gives the DuckDB-equivalent for every SQL-expressible
-entry (bucket label formula: right-closed end-labeled
-((ts+g-1)//g)*g — ref src/siri/db/aggregate.c:41-43).
+analysis, multimodal plumbing) and TPC-H-style analytics queries.
+oracle_sql() gives the DuckDB-equivalent of every entry.
+
+Each entry is declared once, with its family, Spark body and oracle,
+in a family module of the ``registry`` package; this module only
+assembles them in the driver's name sequence (``registry.ORDER``).
 
 Float columns are rounded identically on both sides (sum→4dp,
 ratios/moments→6dp) so value-hashes are insensitive to summation
@@ -18,82 +20,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from siridb_server_spark import SiriEngine
-from siridb_server_spark.functions.stable import scaled_dsum as SSD
-from siridb_server_spark.functions.stable import stable_dsum as SD
-from siridb_server_spark.operators import classify as CL
-from siridb_server_spark.operators import curation as CU
-from siridb_server_spark.operators import dedup as D
-from siridb_server_spark.operators import bpe as BPE
-from siridb_server_spark.operators import h264 as H264
-from siridb_server_spark.operators import multimodal as MM
-from siridb_server_spark.operators import similarity as SIM
-from siridb_server_spark.operators import asof as AS
-from siridb_server_spark import pipelines as PIPE
-from siridb_server_spark.operators import text as TX
-from siridb_server_spark.operators import timeseries as TSO
-from siridb_server_spark.sources.testdata import (
-    EVENTS_PTS_INT_SQL,
-    EVENTS_PTS_SQL,
-    epoch_ns,
-    events_points,
-    load,
-    table_bytes,
-)
-from siridb_server_spark.localdf import arrow_df, fan_out_keyed
+import registry
+from registry._common import _eng
 
 
-def _media_df(spark, rows):
-    """Fixture media frame through the Arrow path (localdf.arrow_df):
-    the classic list-path frame re-entered a Python pickle worker on
-    every scan (~0.4 s/scan on this platform) — for a constant 8-row
-    fixture that overhead dwarfed the decode being measured."""
-    from siridb_server_spark.operators.multimodal import MEDIA_SCHEMA
-    return arrow_df(spark, rows, MEDIA_SCHEMA)
-
-
-H = 3_600_000_000_000  # 1h in nanoseconds (engine precision = ns)
-D6 = 86_400_000_000_000  # 1d in ns
-BETWEEN_A = 1_704_844_800_000_000_000  # 2024-01-10T00:00:00Z in ns
-BETWEEN_B = 1_705_708_800_000_000_000  # 2024-01-20T00:00:00Z in ns
-
-
-def _eng(spark: SparkSession, sf_dir: str, as_int: bool = False) -> SiriEngine:
-    return SiriEngine.from_points(
-        spark, events_points(spark, sf_dir, as_int), precision="ns")
-
-
-def _pv(df: DataFrame, col: str, nd: int | None = None) -> DataFrame:
-    c = F.col(col)
-    if nd is not None:
-        # + 0.0 normalizes IEEE -0.0 to +0.0 so the value hash is
-        # stable across engines (Spark BigDecimal HALF_UP vs DuckDB
-        # round disagree on the sign of a zero result)
-        c = F.round(c, nd) + F.lit(0.0)
-    return df.select("series", "ts", c.alias("val"))
-
-
-def _sel(q: str, col: str = "val_dbl", nd: int | None = None,
-         as_int: bool = False):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _pv(_eng(spark, sf_dir, as_int).select_df(q), col, nd)
-    return run
-
-
-def _bucket_sql(agg: str, g: int, nd: int | None = None,
-                int_pts: bool = False) -> str:
-    val = f"round({agg}, {nd}) + 0.0" if nd is not None else agg
-    pre = EVENTS_PTS_INT_SQL if int_pts else EVENTS_PTS_SQL
-    return (
-        f"{pre} SELECT series, ((ts + {g - 1}) // {g}) * {g} AS ts, "
-        f"{val} AS val FROM pts GROUP BY 1, 2"
-    )
-
-
-# ---------------------------------------------------------------- flagship
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-series hourly mean/max fan-out with prefixes over
     sf0.001 — multi-pipeline select through the full engine."""
@@ -105,8346 +38,11 @@ def entry(spark: SparkSession) -> DataFrame:
                       + F.lit(0.0)).alias("val"))
 
 
-from functools import lru_cache
-
-
-@lru_cache(maxsize=1)
-def _h264_pframes_rows():
-    """Memoized P-frame fixture (driver-side H.264 encode is the
-    expensive part; caching it makes the bench measure the DECODE
-    operator, and every call is deterministic anyway)."""
-    import numpy as np
-    base = np.zeros((32, 32, 3), dtype=np.uint8)
-    yy, xx = np.mgrid[0:32, 0:32]
-    for c in range(3):
-        base[:, :, c] = ((xx * (3 + c) + yy * (5 - c)) % 256)
-    frames = [np.roll(base, (2 * i, 3 * i), axis=(0, 1))
-              for i in range(3)]
-    stream, _recons = H264.encode_h264_sequence(
-        frames, qp=24, disable_deblock_idc=0)
-    avcc = H264.build_avcc(stream)
-    samples = [len(nal).to_bytes(4, "big") + nal
-               for nal in H264.split_annexb(stream)
-               if H264._nal_header(nal)
-               and H264._nal_header(nal)[1] in (1, 5)]
-    mp4 = MM.build_minimal_mp4(32, 32, [],
-                               sample_payloads=samples,
-                               avcc=avcc)
-    return [(1, "video", mp4, "video/mp4"),
-            (2, "video", stream, "video/h264")]
-
-
-@lru_cache(maxsize=1)
-def _video_match_rows():
-    """Memoized video-dedup fixture (three deterministic H.264
-    encodes — see _h264_pframes_rows for why this caches)."""
-    import numpy as np
-
-    def frames_of(n, shift0=0):
-        yy, xx = np.mgrid[0:48, 0:64]
-        r2 = ((yy - 24.0) ** 2 / 576 + (xx - 32.0) ** 2 / 1024)
-        tex = ((xx // 8 + yy // 8) % 2) * 60
-        base = np.stack(
-            [np.clip(195 - 160 * r2, 0, 255),
-             np.clip(60 + 120 * np.exp(-r2 * 2) + tex, 0, 255),
-             np.clip(40 + 150 * r2 + tex, 0, 255)],
-            -1).astype(np.uint8)
-        return [np.roll(base, (3 * (i + shift0),
-                               5 * (i + shift0)), (0, 1))
-                for i in range(n)]
-
-    kinds = ("p16", "p16x8", "p8x16", "p8x8", "i16")
-    rng = np.random.default_rng(1)
-    rows = []
-    for mid, fr in ((1, frames_of(6)), (2, frames_of(4, 2)),
-                    (3, [rng.integers(0, 256, (48, 64, 3))
-                         .astype(np.uint8) for _ in range(4)])):
-        stream, _ = H264.encode_h264_sequence(
-            fr, qp=14, disable_deblock_idc=0, p_kinds=kinds)
-        rows.append((mid, "video", stream, "video/h264"))
-    rows.append((4, "video", b"junk", "application/x-junk"))
-    return rows
-
-
-# ----------------------------------------------------------------- queries
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable] = {}
+    return {n: e.body for n, e in registry.entries().items()
+            if e.body is not None}
 
-    # --- bucketed aggregates (SURVEY §2.1) over events points
-    q["siri_count_bucket"] = _sel("select count(1h) from /.*/", "val_int")
-    q["siri_sum_bucket"] = _sel("select sum(1h) from /.*/", "val_dbl", 4)
-    q["siri_mean_bucket"] = _sel("select mean(1d) from /.*/", "val_dbl", 6)
-    q["siri_median_bucket"] = _sel("select median(1d) from /.*/",
-                                   "val_dbl", 6)
-    q["siri_variance_bucket"] = _sel("select variance(1d) from /.*/",
-                                     "val_dbl", 6)
-    q["siri_first_bucket"] = _sel("select first(1d) from /.*/")
-    q["siri_derivative_bucket"] = _sel(
-        "select derivative(1s, 1d) from /.*/", "val_dbl", 6)
 
-    # --- int-typed series (type preservation + exact int64 math)
-    q["siri_sum_int_bucket"] = _sel("select sum(1d) from /.*/",
-                                    "val_int", as_int=True)
-
-    # --- transforms
-    q["siri_difference_points"] = _sel(
-        "select filter(>190) => difference() from /.*/", "val_dbl")
-    q["siri_derivative_points"] = _sel(
-        "select derivative(1s) from 'purchase|1', 'error|2'",
-        "val_dbl", 6)
-    q["siri_interval"] = _sel(
-        "select interval() from /error.*/", "val_int")
-    q["siri_filter_range"] = _sel(
-        "select filter(>50) => filter(<=150) from /.*/", "val_dbl")
-
-    # --- to-one collapse (label = last ts; first's for first())
-    q["siri_count_to_one"] = _sel("select count() from /.*/", "val_int")
-
-    # --- selection algebra / where / time ranges / head-tail
-    q["siri_set_algebra"] = _sel(
-        "select count() from /error.*/ | /signup.*/ - 'error|13'",
-        "val_int")
-    q["siri_where_length"] = _sel(
-        "select last() from /.*/ where length > 20")
-    q["siri_between_mean"] = _sel(
-        f"select mean(1d) from /.*/ between {BETWEEN_A} and {BETWEEN_B}",
-        "val_dbl", 6)
-
-    # --- merge + offset (sweep-bucketing path)
-    q["siri_merge_using_mean"] = _sel(
-        "select * from /.*/ merge as 'all' using mean(1d)",
-        "val_dbl", 6)
-    q["siri_offset_bucket"] = _sel(
-        "select * from /.*/ merge as 'all' using count(1d) => offset(1h)",
-        "val_int")
-
-    # --- adaptive downsample (limit) — oracle via window-fn sweep SQL
-    q["siri_limit_downsample"] = _sel(
-        "select limit(20, mean) from /.*/", "val_dbl", 6)
-
-    # --- catalog surface
-    def siri_catalog(spark, sf_dir):
-        eng = _eng(spark, sf_dir)
-        return eng.catalog_df().select(
-            "name", "type", "length", "start",
-            F.col("end").alias("end_ts"))
-
-    q["siri_catalog"] = siri_catalog
-
-    def siri_series_length(spark, sf_dir):
-        eng = _eng(spark, sf_dir)
-        return eng.catalog_df().agg(
-            F.sum("length").alias("total_points"))
-
-    q["siri_count_series_length"] = siri_series_length
-
-    # --- dedup operators
-    q["dedup_exact"] = lambda spark, sf_dir: D.exact_duplicates(
-        load(spark, sf_dir, "documents"))
-    # document-frequency cutoff for the exact-Jaccard entries: the
-    # production guard against quadratic hot-posting-list blowup
-    # (dedup._cap_posting_lists), mirrored verbatim in the oracles'
-    # _JP CTE. 100k never binds at the correctness/bench scales
-    # (max token df at sf0.1 is ~4k), so values are exact — but the
-    # bounded path IS the path being checked.
-    MAX_DF = 100_000
-
-    q["dedup_ngram_jaccard"] = lambda spark, sf_dir: D.ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents").where(F.col("doc_id") < 300),
-        threshold=0.8, max_df=MAX_DF)
-
-    q["dedup_cross_source"] = lambda spark, sf_dir: \
-        D.cross_source_dup_rates(
-            load(spark, sf_dir, "documents")
-            .where(F.col("doc_id") < 300), threshold=0.8,
-            max_df=MAX_DF)
-
-    q["dedup_similar_docs"] = lambda spark, sf_dir: \
-        D.similar_docs(load(spark, sf_dir, "documents"),
-                       query_id=7, k=10)
-
-    def dedup_cdc_tiling(spark, sf_dir):
-        """Content-defined chunking over the FULL documents table
-        (dedup.cdc_chunks — the rsync/LBFS boundary trick: edits
-        relocate only the chunks they touch, downstream chunks
-        re-align byte-identically), verified corpus-wide through its
-        tiling invariant: per source, the chunk table's byte total
-        and doc count must equal what the documents table says
-        directly — the oracle computes the right-hand side without
-        running CDC, so a single mis-sliced boundary anywhere in the
-        corpus flips the hash."""
-        ch = D.cdc_chunks(load(spark, sf_dir, "documents"))
-        docs = load(spark, sf_dir, "documents") \
-            .select("doc_id", "source")
-        return (ch.join(F.broadcast(docs), "doc_id")
-                .groupBy("source")
-                .agg(F.countDistinct("doc_id").alias("n_docs"),
-                     F.sum("length").alias("total_bytes")))
-
-    q["dedup_cdc_tiling"] = dedup_cdc_tiling
-
-    def _cdc_gen(n, seed):
-        # deterministic printable-ASCII corpus (LCG bytes; no RNG
-        # seeding ambiguity across machines)
-        out = bytearray()
-        x = seed
-        for _ in range(n):
-            x = (x * 6364136223846793005 + 1442695040888963407) \
-                % (1 << 64)
-            out.append(33 + (x >> 33) % 94)
-        return out.decode("ascii")
-
-    def dedup_cdc_resync(spark, sf_dir):
-        """THE content-defined-chunking property, pinned as
-        constants: against a 2000-byte base document, a copy with an
-        inserted header and a copy with a mid-document edit each
-        share 18 of 19 chunk hashes (every chunk outside the edited
-        window re-aligns), while an unrelated document shares none.
-        Fixed-size blocks would share ZERO after the header insert —
-        this row set is exactly the evidence CDC exists to produce."""
-        base = _cdc_gen(2000, 12345)
-        docs = arrow_df(spark, [
-            (1, base),
-            (2, "SHIFTED-HEADER-v2::" + base),
-            (3, base[:800] + "[EDITED SEGMENT]" + base[800:]),
-            (4, _cdc_gen(2000, 999)),
-            (5, None),
-            (6, ""),
-        ], "doc_id long, text string")
-        d = (D.cdc_chunks(docs)
-             .select("doc_id", "chunk_hash").distinct())
-        pairs = arrow_df(spark, [(1, 2, "header_insert"),
-                                 (1, 3, "mid_edit"),
-                                 (1, 4, "unrelated")],
-                         "left long, right long, pair string")
-        inter = (d.select(F.col("doc_id").alias("left"),
-                          F.col("chunk_hash").alias("h"))
-                 .join(d.select(F.col("doc_id").alias("right"),
-                                F.col("chunk_hash").alias("h")), "h")
-                 .groupBy("left", "right")
-                 .agg(F.count(F.lit(1)).alias("n_shared")))
-        counts = d.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n"))
-        return (pairs
-                .join(inter, ["left", "right"], "left")
-                .join(counts.select(F.col("doc_id").alias("left"),
-                                    F.col("n").alias("n_left")),
-                      "left")
-                .join(counts.select(F.col("doc_id").alias("right"),
-                                    F.col("n").alias("n_right")),
-                      "right")
-                .select("pair",
-                        F.coalesce("n_shared", F.lit(0))
-                        .alias("n_shared"),
-                        "n_left", "n_right"))
-
-    q["dedup_cdc_resync"] = dedup_cdc_resync
-
-    def io_tfrecord_roundtrip(spark, sf_dir):
-        """TFRecord sink + source (sources/tfrecord.py — framing,
-        CRC-32C masks, and tf.train.Example protos all implemented
-        from the public wire format, no tensorflow): export the
-        documents table to deterministic shards, read every record
-        back through the binaryFile + Arrow decode path with FULL
-        data-CRC verification, and hand the oracle the row-level
-        contract — every (doc_id, n_chars, source) must match what
-        DuckDB reads from the parquet directly. A single corrupted
-        varint, mis-sliced record, or CRC bug anywhere in the
-        round-trip flips the hash."""
-        import hashlib
-        import tempfile
-
-        from siridb_server_spark.sources import tfrecord as TFR
-
-        # stable per-corpus dir (NOT a fresh tempdir): the returned
-        # DataFrame reads these files lazily, so they must outlive
-        # this call; the deterministic exporter makes re-runs
-        # byte-identical overwrites, so steady-state disk is one copy
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        tmp = f"{tempfile.gettempdir()}/sparksiri-tfr-{tag}"
-        TFR.export_tfrecord_documents(
-            load(spark, sf_dir, "documents"), tmp,
-            n_shards=8).collect()       # materialize the export
-        back = TFR.read_tfrecord_documents(spark, tmp,
-                                           verify_data=True)
-        return back.select("doc_id",
-                           F.length("text").cast("long")
-                           .alias("n_chars"),
-                           "source")
-
-    q["io_tfrecord_roundtrip"] = io_tfrecord_roundtrip
-
-    def io_arrowipc_roundtrip(spark, sf_dir):
-        """Arrow IPC (Feather v2) sink + source
-        (sources/arrowipc.py): the zero-copy columnar container
-        training loaders mmap directly. Export is one hash shuffle
-        on a deterministic md5 shard key (byte-identical re-runs,
-        sha256 manifest); read is binaryFile + mapInPandas, no
-        shuffle. The oracle checks the roundtrip against the raw
-        table — any mis-sliced batch, dropped row, or mangled
-        string flips the hash."""
-        import hashlib
-        import tempfile
-
-        from siridb_server_spark.sources import arrowipc as AI
-
-        # stable per-corpus dir (same rationale as the tfrecord
-        # entry: lazy readers must outlive this call; deterministic
-        # export makes re-runs byte-identical overwrites)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        tmp = f"{tempfile.gettempdir()}/sparksiri-ipc-{tag}"
-        AI.export_arrow_documents(
-            load(spark, sf_dir, "documents"), tmp,
-            n_shards=8).collect()
-        back = AI.read_arrow_documents(spark, tmp)
-        return back.select("doc_id",
-                           F.length("text").cast("long")
-                           .alias("n_chars"),
-                           "source")
-
-    q["io_arrowipc_roundtrip"] = io_arrowipc_roundtrip
-
-    def sketch_hll_registers(spark, sf_dir):
-        """Mergeable HLL distinct-count sketch as a plain DataFrame
-        (operators/sketches.py): per event_type, the 4096-register
-        table over user_id — every register an md5-derived integer,
-        so the oracle rebuilds the identical table in SQL and the
-        hash pins the whole sketch construction (bucket split,
-        hex-aligned leading-zero count, groupBy-max). Estimation
-        accuracy is pytest-verified separately (float, policy)."""
-        from siridb_server_spark.operators import sketches as SK
-        return SK.hll_registers(load(spark, sf_dir, "events"),
-                                "event_type", "user_id") \
-            .select("event_type", "bucket", "rho")
-
-    q["sketch_hll_registers"] = sketch_hll_registers
-
-    def sketch_hll_merge(spark, sf_dir):
-        """THE mergeability theorem, cross-checked across engines
-        AND construction orders: partial sketches built per
-        (event_type, arbitrary 7-way split) then merged with
-        groupBy-max must equal the one-shot sketch — the oracle
-        builds the one-shot table directly, so any non-associative
-        slip in the merge (or the split) flips the hash. This is the
-        property that lets 100 TB of history live as persisted daily
-        register tables instead of being rescanned."""
-        from siridb_server_spark.operators import sketches as SK
-        ev = load(spark, sf_dir, "events")
-        part = (epoch_ns(ev) % F.lit(7)).alias("part")
-        daily = SK.hll_registers(ev.withColumn("part", part),
-                                 ["event_type", "part"], "user_id")
-        return SK.hll_merge(daily, "event_type") \
-            .select("event_type", "bucket", "rho")
-
-    q["sketch_hll_merge"] = sketch_hll_merge
-
-    def sketch_bloom_membership(spark, sf_dir):
-        """Bloom membership sketch, build AND probe pinned
-        cross-engine (operators/sketches.py bloom_bits /
-        bloom_might_contain): the reference side (3-word shingles
-        of docs with doc_id % 20 ≠ 0 — ~16k members at sf0.01)
-        becomes a distinct md5-positioned set-bit relation
-        (m = 2¹⁶, k = 4 — sized so the probe surface carries REAL
-        false positives, ~14% of the truly-novel probes at this
-        fill), the held-out docs' shingles probe it — the
-        bloom-backed approximate twin of text_ngram_novelty for
-        when the reference's member set can't be collected. The
-        construction is deterministic, so the exact
-        false-positive count is a hashable VALUE, not a
-        tolerance — the oracle replays positions, bits, semi-join
-        and the hits==k verdict in SQL. Props: bits_set,
-        ref_total / ref_missed (must be 0 — no false negatives,
-        the Bloom theorem), probe_total / probe_flagged."""
-        from siridb_server_spark.operators import sketches as SK
-        from siridb_server_spark.operators.dedup import shingles
-        docs = load(spark, sf_dir, "documents")
-        w = F.explode(shingles("text", 3)).alias("w")
-        ref = docs.where(F.col("doc_id") % 20 != 0).select(w)
-        probe = docs.where(F.col("doc_id") % 20 == 0).select(w)
-        bloom = SK.bloom_bits(ref, [], "w", m_bits=1 << 16, k=4)
-        self_mc = SK.bloom_might_contain(
-            ref, bloom, "w", m_bits=1 << 16, k=4)
-        probe_mc = SK.bloom_might_contain(
-            probe, bloom, "w", m_bits=1 << 16, k=4)
-        rows = [
-            bloom.agg(F.lit("bits_set").alias("prop"),
-                      F.count(F.lit(1)).cast("long").alias("n")),
-            self_mc.agg(F.lit("ref_total").alias("prop"),
-                        F.count(F.lit(1)).cast("long").alias("n")),
-            self_mc.where(~F.col("might_contain")).agg(
-                F.lit("ref_missed").alias("prop"),
-                F.count(F.lit(1)).cast("long").alias("n")),
-            probe_mc.agg(F.lit("probe_total").alias("prop"),
-                         F.count(F.lit(1)).cast("long").alias("n")),
-            probe_mc.where(F.col("might_contain")).agg(
-                F.lit("probe_flagged").alias("prop"),
-                F.count(F.lit(1)).cast("long").alias("n")),
-        ]
-        out = rows[0]
-        for r in rows[1:]:
-            out = out.unionByName(r)
-        return out
-
-    q["sketch_bloom_membership"] = sketch_bloom_membership
-
-    def sketch_kmv_values(spark, sf_dir):
-        """KMV (k-minimum-values) sketch per event_type over
-        user_id (operators/sketches.py, Beyer et al. 2007) — the
-        overlap-capable companion to the HLL entry: k smallest
-        distinct 60-bit md5 hashes with their order statistics,
-        rebuilt identically by the oracle in SQL (distinct +
-        windowed top-k over the same hash expression)."""
-        from siridb_server_spark.operators import sketches as SK
-        return SK.kmv_sketch(load(spark, sf_dir, "events"),
-                             "event_type", "user_id") \
-            .select("event_type", "pos", "h")
-
-    q["sketch_kmv_values"] = sketch_kmv_values
-
-    def sketch_kmv_merge(spark, sf_dir):
-        """KMV mergeability, pinned cross-engine: partial sketches
-        over an arbitrary 7-way split, merged (k smallest of the
-        union — EXACT, since the union's minima live inside the
-        partials' minima), must equal the one-shot sketch the
-        oracle builds directly."""
-        from siridb_server_spark.operators import sketches as SK
-        ev = load(spark, sf_dir, "events")
-        part = (epoch_ns(ev) % F.lit(7)).alias("part")
-        parts = SK.kmv_sketch(ev.withColumn("part", part),
-                              ["event_type", "part"], "user_id")
-        return SK.kmv_merge(parts, "event_type") \
-            .select("event_type", "pos", "h")
-
-    q["sketch_kmv_merge"] = sketch_kmv_merge
-
-    def sketch_quantile_sample(spark, sf_dir):
-        """Mergeable quantile sketch (operators/sketches.py
-        quantile_sketch): per event_type, the 256 rows with the
-        smallest md5(event_id) priorities, carrying their values —
-        a deterministic bottom-k priority sample whose order
-        statistics estimate population quantiles. The hash-coin
-        replaces the RNG of KLL/reservoir samplers, which is what
-        makes the ENTIRE sketch state pinnable by a cross-engine
-        value hash (the oracle rebuilds it in SQL from the same md5
-        expression). Estimation accuracy: sketch_quantile_accuracy
-        + tests/test_sketches.py."""
-        from siridb_server_spark.operators import sketches as SK
-        return SK.quantile_sketch(load(spark, sf_dir, "events"),
-                                  "event_type", "value", "event_id") \
-            .select("event_type", "pos", "pri", "val")
-
-    q["sketch_quantile_sample"] = sketch_quantile_sample
-
-    def sketch_quantile_merge(spark, sf_dir):
-        """Quantile-sketch mergeability, pinned cross-engine:
-        partials over an arbitrary 7-way split, merged (bottom-k of
-        the union — EXACT by the KMV containment theorem applied to
-        row priorities), must equal the one-shot sketch the oracle
-        builds directly. The property that lets per-day sample
-        partials stand in for a 100 TB history rescan."""
-        from siridb_server_spark.operators import sketches as SK
-        ev = load(spark, sf_dir, "events")
-        part = (F.col("event_id") % F.lit(7)).alias("part")
-        parts = SK.quantile_sketch(ev.withColumn("part", part),
-                                   ["event_type", "part"],
-                                   "value", "event_id")
-        return SK.quantile_merge(parts, "event_type") \
-            .select("event_type", "pos", "pri", "val")
-
-    q["sketch_quantile_merge"] = sketch_quantile_merge
-
-    def sketch_quantile_estimates(spark, sf_dir):
-        """p50/p90/p99 estimates per event_type from the quantile
-        sketch: sample order statistic at ceil(q·k'), quantiles
-        given as integer parts-per-million so the whole estimator is
-        exact arithmetic plus a value pass-through — hashable end to
-        end, unlike percentile sketches with float interpolation."""
-        from siridb_server_spark.operators import sketches as SK
-        sk = SK.quantile_sketch(load(spark, sf_dir, "events"),
-                                "event_type", "value", "event_id")
-        return SK.quantile_estimate(
-            sk, "event_type", [500000, 900000, 990000]) \
-            .select("event_type", "q_ppm", "sample_n", "est")
-
-    q["sketch_quantile_estimates"] = sketch_quantile_estimates
-
-    def sketch_quantile_accuracy(spark, sf_dir):
-        """Estimator-accuracy audit, same design as
-        dedup_minhash_accuracy / text_cms_accuracy: each estimate's
-        EXACT population rank (count of values ≤ estimate, one
-        broadcast-join aggregate over the full table) against its
-        target rank ceil(q·n), both integers. The sample-quantile
-        theory bound |err| ≲ n·√(q(1−q)/k) is asserted in pytest;
-        the hashed contract pins the measured integers so a silent
-        estimator regression flips the gate."""
-        from siridb_server_spark.operators import sketches as SK
-        ev = load(spark, sf_dir, "events").where(
-            F.col("value").isNotNull())
-        sk = SK.quantile_sketch(ev, "event_type", "value",
-                                "event_id")
-        est = SK.quantile_estimate(
-            sk, "event_type", [500000, 900000, 990000])
-        joined = ev.join(F.broadcast(est), "event_type")
-        out = (joined.groupBy("event_type", "q_ppm")
-               .agg(F.sum(F.when(F.col("value") <= F.col("est"), 1)
-                          .otherwise(0)).alias("exact_rank"),
-                    F.count(F.lit(1)).alias("n")))
-        tgt = F.expr("(CAST(q_ppm AS BIGINT) * n + 999999)"
-                     " div 1000000")
-        return out.select(
-            "event_type", "q_ppm", "n", "exact_rank",
-            tgt.alias("target_rank"),
-            F.abs(F.col("exact_rank") - tgt).alias("abs_err"))
-
-    q["sketch_quantile_accuracy"] = sketch_quantile_accuracy
-
-    def curation_quantile_filter(spark, sf_dir):
-        """Sketch-driven outlier gating (operators/curation.py
-        quantile_filter): per-source p5/p95 length cutoffs read off
-        the mergeable quantile sketch (at scale: off persisted
-        per-day partials, never a history rescan), thresholds
-        broadcast back, keep = value within [lo, hi]. Exact
-        arithmetic end to end — every keep/drop bit is in the
-        hash."""
-        return CU.quantile_filter(load(spark, sf_dir, "documents"),
-                                  "n_chars", "doc_id", "source")
-
-    q["curation_quantile_filter"] = curation_quantile_filter
-
-    def corpus_skew_report(spark, sf_dir):
-        """Join-key skew diagnostics (operators/curation.py
-        skew_report): the 10 heaviest event_type|user_id series
-        keys with exact row counts and ppm shares — the pre-join
-        check that decides salting/capping/broadcast at scale.
-        NULL keys surface as their own row (F.concat, not
-        concat_ws: it propagates NULL like the oracle's ||, so a
-        NULL user_id lands in the NULL-key row on BOTH engines)."""
-        ev = load(spark, sf_dir, "events")
-        keyed = ev.select(F.concat(
-            F.col("event_type"), F.lit("|"),
-            F.col("user_id").cast("string")).alias("series"))
-        return CU.skew_report(keyed, "series")
-
-    q["corpus_skew_report"] = corpus_skew_report
-
-    def corpus_datacard(spark, sf_dir):
-        """One-row corpus data card — the summary panel a training
-        run records next to its data snapshot: sizes, source/lang
-        diversity, exact-dup volume, quality keep count. Pure
-        composition of existing contracts (counts, whitespace
-        tokens, md5 exact-dup groups, the z_micro quality gate),
-        all exact integers; three bounded aggregates crossJoined
-        into the single row."""
-        docs = load(spark, sf_dir, "documents")
-        base = docs.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.length(F.trim("text")) > 0, 1)
-                  .otherwise(0)).alias("n_nonempty"),
-            F.count_distinct("source").alias("n_sources"),
-            F.count_distinct("lang").alias("n_langs"),
-            F.sum(F.length("text")).cast("long")
-            .alias("total_chars"),
-            F.sum(TX.token_count(F.col("text")))
-            .cast("long").alias("total_tokens"))
-        dup = (docs.where(F.col("text").isNotNull())
-               .groupBy(F.md5("text").alias("h"))
-               .agg(F.count(F.lit(1)).alias("c"))
-               .agg(F.coalesce(F.sum(F.when(F.col("c") > 1,
-                                            F.col("c"))),
-                               F.lit(0)).cast("long")
-                    .alias("dup_docs")))
-        keep = (TX.quality_score_linear(docs)
-                .agg(F.sum(F.when(F.col("z_micro") >= 0, 1)
-                           .otherwise(0)).cast("long")
-                     .alias("quality_keep")))
-        return base.crossJoin(F.broadcast(dup)) \
-            .crossJoin(F.broadcast(keep))
-
-    q["corpus_datacard"] = corpus_datacard
-
-    def ts_dtw_topk(spark, sf_dir):
-        """Banded-DTW series similarity search
-        (operators/timeseries.py dtw_topk): elastic alignment the
-        correlation top-k can't express, as an exact int64 DP per
-        series (values scaled ×1000) — row-local, linear in
-        |series|, no pairwise join. Query = lexicographically first
-        series; property contract: 10 rows, the query itself ranks
-        first at cost 0, costs non-negative (the DP itself is
-        pinned exactly by tests/test_timeseries.py against a
-        reference implementation — a recursive DP has no SQL
-        mirror)."""
-        pts = events_points(spark, sf_dir)
-        qname = pts.agg(F.min("series")).first()[0]
-        pts = pts.select("series", "ts",
-                         F.col("val_dbl").alias("val"))
-        # collect ONCE (k bounded rows) — three lazy property aggs
-        # over the un-persisted top-k would re-run the whole DP per
-        # branch (TakeOrdered is not a reusable exchange)
-        rows = TSO.dtw_topk(
-            pts, qname, k=10,
-            est_bytes=table_bytes(sf_dir, "events")).collect()
-        props = [
-            ("k_returned", len(rows)),
-            ("top1_is_query_at_zero",
-             int(bool(rows) and rows[0]["series"] == qname
-                 and rows[0]["dtw_cost"] == 0)),
-            ("neg_cost_rows",
-             sum(1 for r in rows if r["dtw_cost"] < 0)),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["ts_dtw_topk"] = ts_dtw_topk
-
-    def ts_sax_words(spark, sf_dir):
-        """SAX symbolic words per series (operators/timeseries.py
-        sax_words — the iSAX-style index representation that
-        prefilters candidates before the DTW DP): integer-exact
-        equi-range variant, one groupBy per stage, the whole word
-        table hashed cross-engine (PAA integer-div means, per-series
-        min/max breakpoints, ordered symbol concatenation)."""
-        pts = events_points(spark, sf_dir).select(
-            "series", "ts", F.col("val_dbl").alias("val"))
-        return TSO.sax_words(
-            pts, est_bytes=table_bytes(sf_dir, "events"))
-
-    q["ts_sax_words"] = ts_sax_words
-
-    def ts_dtw_prefilter(spark, sf_dir):
-        """SAX-gated EXACT DTW search (operators/timeseries.py
-        dtw_topk prefilter=True): a SAX-agreement pool's k-th DP
-        cost becomes threshold τ, non-pool series are pruned by the
-        provable endpoint lower bound (cost ≥ |s₀−q₀|+|s_l−q_l|),
-        survivors run the exact DP — equality with the unfiltered
-        ranking is a theorem. This AUDIT entry runs the gated AND
-        the unfiltered search and pins their equality (series,
-        n_points, exact integer costs, in order) plus
-        query-ranks-first-at-zero; the points frame is persisted
-        across the two searches and released before returning
-        (both otherwise rescan the raw corpus per driver
-        action)."""
-        pts = events_points(spark, sf_dir).select(
-            "series", "ts",
-            F.col("val_dbl").alias("val")).persist()
-        try:
-            qname = pts.agg(F.min("series")).first()[0]
-            eb = table_bytes(sf_dir, "events")
-            base = [(r["series"], r["n_points"], r["dtw_cost"])
-                    for r in TSO.dtw_topk(pts, qname, k=10,
-                                          est_bytes=eb).collect()]
-            gated = [(r["series"], r["n_points"], r["dtw_cost"])
-                     for r in TSO.dtw_topk(pts, qname, k=10,
-                                           prefilter=True,
-                                           est_bytes=eb)
-                     .collect()]
-        finally:
-            pts.unpersist()
-        props = [
-            ("k_returned", len(gated)),
-            ("equal_to_unfiltered", int(gated == base)),
-            ("top1_is_query_at_zero",
-             int(bool(gated) and gated[0][0] == qname
-                 and gated[0][2] == 0)),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["ts_dtw_prefilter"] = ts_dtw_prefilter
-
-    def ts_dtw_knn_join(spark, sf_dir):
-        """Batch exact-DTW join (operators/timeseries.py
-        dtw_knn_join): every query series' top-k corpus neighbors
-        in one job — per-query SAX pools, one collected τ row per
-        query, endpoint-LB pruning in pure Catalyst, ONE
-        mapInPandas DP pass over pool ∪ survivors; both sides stay
-        distributed. AUDIT contract: the join's answer for each of
-        3 query series equals the per-query dtw_topk(prefilter)
-        loop exactly (series, n_points, integer costs, in rank
-        order) — the same equality-by-construction the batch ANN
-        joins pin against their single-query paths."""
-        pts = events_points(spark, sf_dir).select(
-            "series", "ts",
-            F.col("val_dbl").alias("val")).persist()
-        try:
-            qnames = [r["series"] for r in
-                      pts.select("series").distinct()
-                      .orderBy("series").limit(3).collect()]
-            queries = pts.where(F.col("series").isin(qnames))
-            got = {}
-            for r in TSO.dtw_knn_join(
-                pts, queries, k=5,
-                est_bytes=table_bytes(sf_dir, "events"),
-                q_est_bytes=table_bytes(sf_dir, "events")) \
-                    .collect():
-                got.setdefault(r["qseries"], []).append(
-                    (r["rank"], r["series"], r["n_points"],
-                     r["dtw_cost"]))
-            equal = 1
-            self_first = 1
-            for qn in qnames:
-                want = [(i + 1, r["series"], r["n_points"],
-                         r["dtw_cost"]) for i, r in enumerate(
-                    TSO.dtw_topk(pts, qn, k=5, prefilter=True,
-                                 est_bytes=table_bytes(
-                                     sf_dir, "events"))
-                    .collect())]
-                g = sorted(got.get(qn, []))
-                if g != want:
-                    equal = 0
-                if not (g and g[0][1] == qn and g[0][3] == 0):
-                    self_first = 0
-        finally:
-            pts.unpersist()
-        props = [
-            ("n_queries_served", len(got)),
-            ("equal_to_per_query_loop", equal),
-            ("each_query_ranks_self_first_at_zero", self_first),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["ts_dtw_knn_join"] = ts_dtw_knn_join
-
-    def corpus_assign_ids(spark, sf_dir):
-        """Deterministic content ids for a raw corpus
-        (operators/curation.py assign_content_ids): 60-bit md5 of
-        (source ‖ NUL ‖ text), row-local and reproducible across
-        runs/partitionings — what every downstream dedup/sketch
-        operator keys on when the crawl has no id. Hashed contract:
-        the full (doc_id → content_id) mapping plus the collision
-        count (exact duplicates share ids BY DESIGN; distinct-text
-        collisions are birthday-bounded and audited separately)."""
-        docs = load(spark, sf_dir, "documents")
-        return (CU.assign_content_ids(docs)
-                .select("doc_id", "content_id"))
-
-    q["corpus_assign_ids"] = corpus_assign_ids
-
-    def curation_nb_lang_gate(spark, sf_dir):
-        """THE classifier-driven curation language gate
-        (pipelines.nb_lang_gate): keep documents whose quantized-NB
-        language prediction agrees with their declared lang. Runs
-        on the DEFAULT featurizer — character 3-grams, the
-        measured-better langid features (r11 default flip: word-NB
-        collapses to the label prior on short/out-of-vocabulary
-        docs where char-NB still separates languages —
-        tests/test_classify.py; delta recorded in COVERAGE.md).
-        Every keep/drop bit integer-exact and replayed by the
-        oracle end to end (grams → counts → fixlog2 scores →
-        argmax → keep)."""
-        return PIPE.nb_lang_gate(load(spark, sf_dir, "documents"))
-
-    q["curation_nb_lang_gate"] = curation_nb_lang_gate
-
-    def curation_nb_lang_gate_word(spark, sf_dir):
-        """The word-feature OPTION of the language gate
-        (pipelines.nb_lang_gate features="words") — right where
-        documents are long and in-vocabulary; kept as the named
-        non-default since the r11 char flip. Same integer
-        contract, word-token oracle replay."""
-        return PIPE.nb_lang_gate(load(spark, sf_dir, "documents"),
-                                 features="words")
-
-    q["curation_nb_lang_gate_word"] = curation_nb_lang_gate_word
-
-    def text_nb_confusion_ngram(spark, sf_dir):
-        """The char-3-gram model's full confusion matrix — the
-        accuracy surface the word-feature text_nb_confusion pins,
-        on the featurizer real langid uses (same exact fixlog2
-        integer scorer; zero-token short docs score the prior,
-        r10). Oracle replays grams → counts → quantized scores →
-        argmax → matrix end to end in SQL."""
-        docs = load(spark, sf_dir, "documents")
-        m = CL.nb_train(docs, label_col="lang",
-                        features="chars", ngram_n=3)
-        pred = CL.nb_predict_int(m, docs)
-        return CL.nb_confusion(docs, pred, label_col="lang")
-
-    q["text_nb_confusion_ngram"] = text_nb_confusion_ngram
-
-    def eval_retrieval_metrics(spark, sf_dir):
-        """Retrieval-evaluation machinery (operators/text.py
-        retrieval_metrics) with an END-TO-END cross-engine contract:
-        integer term-frequency runs (tf_rank_runs — deterministic
-        ties to the smaller id) scored against exact-containment
-        qrels, producing per-query n_rel / hits@10 / reciprocal
-        rank ×2520 (lcm(1..10), so 1/rank is integral). recall@k,
-        precision@k and MRR replay from these integers; the same
-        metrics over the float bm25 ranking are pytest-verified
-        (tests/test_retrieval_eval.py)."""
-        docs = load(spark, sf_dir, "documents")
-        terms = ["hash", "join", "model", "data", "spark"]
-        # one tokenize pass for run AND qrels (a term is relevant
-        # iff its tf row exists — same split regex defines both);
-        # row-identical to the two-operator shape, which paid a
-        # second corpus tokenize plus an array_contains BNLJ
-        run, qrels = TX.tf_rank_runs_with_qrels(docs, terms, k=10)
-        return TX.retrieval_metrics(run, qrels, k=10)
-
-    q["eval_retrieval_metrics"] = eval_retrieval_metrics
-
-    def curation_corpus_diff(spark, sf_dir):
-        """Snapshot delta (curation.corpus_diff): the documents
-        table against a deterministically mutated copy — ids
-        divisible by 97 dropped (removed), by 89 rewritten
-        (changed), a shifted id range appended (added), everything
-        else untouched (same). Per-doc status, full-outer hash
-        compare — the oracle rebuilds the identical mutation and
-        diff in SQL, so every row of the delta is pinned."""
-        docs = load(spark, sf_dir, "documents")
-        kept = docs.where("doc_id % 97 != 0")
-        mutated = kept.withColumn(
-            "text", F.when(F.col("doc_id") % 89 == 0,
-                           F.concat(F.lit("REVISED:: "),
-                                    F.coalesce("text", F.lit(""))))
-            .otherwise(F.col("text")))
-        added = docs.where("doc_id % 101 = 0").select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"),
-            "text", "lang", "source", "n_chars")
-        new = mutated.unionByName(added)
-        return CU.corpus_diff(docs, new)
-
-    q["curation_corpus_diff"] = curation_corpus_diff
-
-    def text_vocab_drift(spark, sf_dir):
-        """Vocabulary drift between corpus snapshots
-        (text.vocab_drift): top-20 terms by the integer
-        cross-product deviation |c_old·T_new − c_new·T_old| against
-        a mutated copy (every source='web' doc suffixed with a
-        drift marker phrase) — the pre-training "did the crawl
-        shift?" gate. TV distance replays as Σdev/(2·T_old·T_new)
-        from the returned integers; no float in the contract."""
-        docs = load(spark, sf_dir, "documents")
-        new = docs.withColumn(
-            "text", F.when(
-                F.col("source") == "web",
-                F.concat(F.coalesce("text", F.lit("")),
-                         F.lit(" driftmarker phrase injected")))
-            .otherwise(F.col("text")))
-        return TX.vocab_drift(docs, new, k=20)
-
-    q["text_vocab_drift"] = text_vocab_drift
-
-    def curation_leakage_safe_split(spark, sf_dir):
-        """Cluster-consistent train/eval split
-        (curation.leakage_safe_split): near-dup clusters follow
-        their representative's deterministic md5 draw, so a
-        near-copy of an eval document can never land in train — the
-        contamination bug a per-doc split has by construction. The
-        oracle replays the connected components (recursive CTE) and
-        the identical draw, pinning every (doc_id, keep_id, split)
-        row."""
-        docs = load(spark, sf_dir, "documents").where(
-            F.col("doc_id") < 300)
-        pairs = D.ngram_jaccard_pairs(docs, threshold=0.8,
-                                      max_df=MAX_DF)
-        return CU.leakage_safe_split(docs, pairs, eval_ppm=200_000)
-
-    q["curation_leakage_safe_split"] = curation_leakage_safe_split
-
-    def dedup_pipeline_summary(spark, sf_dir):
-        """End-to-end dedup report over one corpus slice: exact
-        duplicate volume, near-dup pair/cluster counts, and the
-        final keep count after cluster resolution — the one-row
-        answer to "how much of this corpus is redundant?"."""
-        docs = load(spark, sf_dir, "documents").where(
-            F.col("doc_id") < 300)
-        ex = D.exact_duplicates(docs)
-        exact = ex.agg(
-            F.count(F.lit(1)).alias("n_contents"),
-            F.sum(F.when(F.col("n_copies") > 1,
-                         F.col("n_copies")).otherwise(0))
-            .alias("n_docs_in_exact_dups"))
-        pairs = D.ngram_jaccard_pairs(docs, threshold=0.8,
-                                      max_df=MAX_DF)
-        res = D.resolve_duplicates(docs, pairs)
-        near = (res.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("is_kept").cast("long")).alias("n_keep"),
-            F.countDistinct(
-                F.when(~F.col("is_kept"), F.col("keep_id")))
-            .alias("n_clusters")))
-        np_ = pairs.agg(F.count(F.lit(1)).alias("n_near_pairs"))
-        return (near.crossJoin(F.broadcast(exact))
-                .crossJoin(F.broadcast(np_))
-                .select("n_docs", "n_contents",
-                        "n_docs_in_exact_dups", "n_near_pairs",
-                        "n_clusters", "n_keep"))
-
-    q["dedup_pipeline_summary"] = dedup_pipeline_summary
-
-    def curation_pipeline_report(spark, sf_dir):
-        """THE staged curation pipeline (pipelines.curate_corpus):
-        quality gate → language filter → exact dedup → near dedup,
-        each stage seeing only the previous stages' survivors, with
-        per-document first-failing-stage attribution — the retention
-        report is one groupBy, zero-count stages included. The
-        oracle replays every stage in SQL (gate features, marker
-        langid, md5 keep-first window, jaccard pairs + recursive-CTE
-        components with longest-wins resolution)."""
-        docs = load(spark, sf_dir, "documents") \
-            .where(F.col("doc_id") < 300).select("doc_id", "text")
-        _cur, staged = PIPE.curate_corpus(
-            docs, langs=("en",), near_threshold=0.8, max_df=MAX_DF)
-        return PIPE.curation_report(staged)
-
-    q["curation_pipeline_report"] = curation_pipeline_report
-    def _prop(name: str, df_count: DataFrame) -> DataFrame:
-        return df_count.agg(
-            F.lit(name).alias("prop"),
-            F.count(F.lit(1)).cast("long").alias("n"))
-
-    def dedup_minhash_lsh(spark, sf_dir):
-        """MinHash+LSH checked against ground truth: the oracle
-        computes the exact shingle-Jaccard pair count in SQL, and the
-        recall/precision rows are pinned invariants (the documents
-        tables have no pairs in (0.35, 0.9), so at (k=16, b=4) the
-        emitted set provably equals the exact J>=0.5 set — verified
-        empirically at sf0.001/0.01)."""
-        docs = load(spark, sf_dir, "documents")
-        emitted = D.minhash_lsh_pairs(docs, threshold=0.5)
-        exact_hi = D.shingle_jaccard_pairs(docs, threshold=0.5)
-        exact_floor = D.shingle_jaccard_pairs(docs, threshold=0.35)
-        on = ["id_a", "id_b"]
-        return (
-            _prop("high_j_pairs_total", exact_hi)
-            .unionByName(_prop(
-                "high_j_pairs_missed",
-                exact_hi.join(emitted, on, "left_anti")))
-            .unionByName(_prop(
-                "emitted_below_floor",
-                emitted.join(exact_floor, on, "left_anti"))))
-
-    q["dedup_minhash_lsh"] = dedup_minhash_lsh
-
-    def dedup_minhash_accuracy(spark, sf_dir):
-        """Estimator-quality audit for the MinHash family: on the
-        exact ground-truth pair set (3-gram shingle Jaccard ≥ 0.3,
-        tested as the integer rational i·10 ≥ u·3), the k=16
-        signature-agreement fraction must land within 0.25 of the
-        exact Jaccard for EVERY pair — in exact integer math,
-        |ag·u − 16·i| ≤ 4·u. (Observed max deviation on this corpus
-        is 0.11; one MinHash component's sd at j≈0.3 is ~0.115/√k.)
-        This is the audit a production dedup pipeline runs on a
-        BOUNDED SAMPLE before trusting the sketch at corpus scale —
-        the id-range cut below IS that bound (exact ground truth via
-        the inverted-index join stays sample-sized however big the
-        corpus grows; the estimator is row-local everywhere). The
-        oracle pins the ground-truth pair count in SQL and the
-        all-within-bound invariant as a matching count."""
-        docs = (load(spark, sf_dir, "documents")
-                .where(F.col("doc_id") < 1500)
-                .select("doc_id", "text"))
-        pairs = D._shingle_intersections(docs, 3, "text", "doc_id")
-        u = F.col("na") + F.col("nb") - F.col("i")
-        truth = (pairs.where(F.col("i") * 10 >= u * 3)
-                 .select("id_a", "id_b", "i", u.alias("u")))
-        sig = D.minhash_signatures(docs, 16, 3)
-        s1 = sig.alias("s1")
-        s2 = sig.alias("s2")
-        agree = F.size(F.filter(
-            F.zip_with(F.col("s1.sig"), F.col("s2.sig"),
-                       lambda x, y: x == y), lambda m: m))
-        j = (truth
-             .join(s1, F.col("id_a") == F.col("s1.doc_id"))
-             .join(s2, F.col("id_b") == F.col("s2.doc_id"))
-             .select("id_a", "id_b", "i", "u", agree.alias("ag")))
-        within = (F.abs(F.col("ag") * F.col("u")
-                        - F.col("i") * 16)
-                  <= F.col("u") * 4)
-        return (_prop("n_true_pairs", j)
-                .unionByName(_prop("est_within_quarter",
-                                   j.where(within))))
-
-    q["dedup_minhash_accuracy"] = dedup_minhash_accuracy
-
-    def dedup_simhash(spark, sf_dir):
-        """SimHash banding checked against the exact all-pairs
-        Hamming join (pigeonhole: 4 bands, hamming<=3 → at least one
-        band collides, so the banded join must emit exactly the
-        close-pair set). The all-pairs verify is the CHECK path only —
-        the operator itself never goes all-pairs."""
-        docs = load(spark, sf_dir, "documents")
-        emitted = D.simhash_pairs(docs, max_hamming=3)
-        sig = D.simhash(docs)
-        a, b = sig.alias("a"), sig.alias("b")
-        ham = F.bit_count(
-            F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-        close = (a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-                 .select(F.col("a.doc_id").alias("id_a"),
-                         F.col("b.doc_id").alias("id_b"),
-                         ham.alias("h"))
-                 .where(F.col("h") <= 3))
-        on = ["id_a", "id_b"]
-        return (
-            _prop("n_docs", docs)
-            .unionByName(_prop(
-                "close_pairs_missed",
-                close.join(emitted, on, "left_anti")))
-            .unionByName(_prop(
-                "emitted_not_close",
-                emitted.join(close, on, "left_anti"))))
-
-    q["dedup_simhash"] = dedup_simhash
-
-    def dedup_contamination(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return D.ngram_contamination(
-            docs.where(F.col("doc_id") % 20 != 0),
-            docs.where(F.col("doc_id") % 20 == 0), n=3)
-
-    q["dedup_contamination"] = dedup_contamination
-
-    def text_ngram_novelty(spark, sf_dir):
-        """Per-document n-gram novelty (operators/dedup.py
-        ngram_novelty): of each scored document's distinct 3-word
-        shingles, how many never appear in the reference corpus —
-        the freshness/memorization score of a new crawl against
-        what the model already saw (the scoring mirror of
-        dedup_contamination's threshold flag). Docs with doc_id %
-        20 == 0 are the scored 'new' slice, the rest the
-        reference; integer sufficient statistics (n_ngrams,
-        n_novel), the ratio left to the caller."""
-        docs = load(spark, sf_dir, "documents")
-        return D.ngram_novelty(
-            docs.where(F.col("doc_id") % 20 == 0),
-            docs.where(F.col("doc_id") % 20 != 0), n=3)
-
-    q["text_ngram_novelty"] = text_ngram_novelty
-
-    def dedup_bloom_novelty(spark, sf_dir):
-        """Bloom-approximate n-gram novelty (operators/dedup.py
-        bloom_novelty): text_ngram_novelty's 100 TB form — the
-        reference corpus collapses to a 2¹⁶-bit Bloom
-        (sketches.bloom_bits over its 3-word shingles) and each
-        held-out doc's shingles probe it. n_seen can only
-        OVERCOUNT (no false negatives), so the implied novelty
-        lower-bounds the exact one — pinned in pytest; here the
-        deterministic md5 positions make the approximate counts
-        themselves exact cross-engine values (full build+probe SQL
-        replay)."""
-        from siridb_server_spark.operators import sketches as SK
-        from siridb_server_spark.operators.dedup import shingles
-        docs = load(spark, sf_dir, "documents")
-        ref = docs.where(F.col("doc_id") % 20 != 0).select(
-            F.explode(shingles("text", 3)).alias("s"))
-        bloom = SK.bloom_bits(ref, [], "s", m_bits=1 << 16, k=4)
-        return D.bloom_novelty(
-            docs.where(F.col("doc_id") % 20 == 0), bloom, n=3,
-            m_bits=1 << 16, k=4)
-
-    q["dedup_bloom_novelty"] = dedup_bloom_novelty
-
-    def dedup_resolve(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents").where(
-            F.col("doc_id") < 300)
-        pairs = D.ngram_jaccard_pairs(docs, threshold=0.8,
-                                      max_df=MAX_DF)
-        return D.resolve_duplicates(docs, pairs)
-
-    q["dedup_resolve"] = dedup_resolve
-
-    def dedup_resolve_quality(spark, sf_dir):
-        """Keep the LONGEST member of each near-dup cluster (ties →
-        smaller id) — the policy-aware canonicalization."""
-        docs = load(spark, sf_dir, "documents").where(
-            F.col("doc_id") < 300)
-        pairs = D.ngram_jaccard_pairs(docs, threshold=0.8,
-                                      max_df=MAX_DF)
-        return D.resolve_duplicates_by(docs, pairs, "n_chars")
-
-    q["dedup_resolve_quality"] = dedup_resolve_quality
-
-    q["dedup_spans"] = lambda spark, sf_dir: D.duplicate_spans(
-        load(spark, sf_dir, "documents"), k=10)
-
-    # --- text analysis
-    q["text_quality"] = lambda spark, sf_dir: TX.quality_features(
-        load(spark, sf_dir, "documents"))
-
-    def text_langid(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return docs.select("doc_id",
-                           TX.lang_id(F.col("text")).alias("pred_lang"))
-
-    q["text_langid"] = text_langid
-
-    def text_tokens(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id",
-            TX.token_count(F.col("text")).alias("ws_tokens"),
-            TX.bpe_token_count(F.col("text")).alias("bpe_tokens"))
-
-    q["text_tokens"] = text_tokens
-
-    def text_clean(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id", TX.clean_text(F.col("text")).alias("cleaned"))
-
-    q["text_clean"] = text_clean
-
-    def text_pii_mask(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id", TX.mask_pii(F.col("text")).alias("masked"))
-
-    q["text_pii_mask"] = text_pii_mask
-
-    def text_fingerprint(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id", TX.fingerprint(F.col("text")).alias("fp"))
-
-    q["text_fingerprint"] = text_fingerprint
-
-    q["text_repetition"] = lambda spark, sf_dir: TX.repetition_features(
-        load(spark, sf_dir, "documents"))
-
-    # hashed contract = the exact-integer sufficient statistics of
-    # the tokenizer + count table + score join; the ln-seeded xent
-    # is pytest-verified, never hashed (same for bigram/trigram)
-    q["text_unigram_lm"] = lambda spark, sf_dir: TX.unigram_logprob(
-        load(spark, sf_dir, "documents")) \
-        .select("doc_id", "n_tokens", "n_types", "sum_nw", "max_nw")
-
-    q["text_top_ngrams"] = lambda spark, sf_dir: TX.top_ngrams(
-        load(spark, sf_dir, "documents"), n=2, k=50)
-
-    q["text_approx_top_ngrams"] = lambda spark, sf_dir: \
-        TX.approx_top_ngrams(load(spark, sf_dir, "documents"),
-                             n=2, k=20,
-                             est_bytes=table_bytes(sf_dir,
-                                                   "documents"))
-
-    q["text_cms_accuracy"] = lambda spark, sf_dir: \
-        TX.cms_accuracy(load(spark, sf_dir, "documents"), n=2,
-                        est_bytes=table_bytes(sf_dir, "documents"))
-
-    q["text_chunking"] = lambda spark, sf_dir: \
-        TX.chunk_documents(load(spark, sf_dir, "documents"),
-                           chunk_tokens=64, overlap=16)
-
-    q["text_sentences"] = lambda spark, sf_dir: \
-        TX.sentence_features(load(spark, sf_dir, "documents"))
-
-    def text_readability(spark, sf_dir):
-        """Readability signal (Flesch-style inputs): per document,
-        the exact sentence / word / syllable counts (syllables =
-        vowel-group runs, the standard heuristic) and the two
-        Flesch ratios as exact integer ppm — words-per-sentence and
-        syllables-per-word. The grade-level combination is a linear
-        float formula over these ratios, so the contract ships the
-        exact rational sufficient statistics and leaves the float
-        combination to the consumer (contract policy). Row-local —
-        fuses into the scan, zero shuffles."""
-        from siridb_server_spark.functions.stable import int_ppm
-        docs = load(spark, sf_dir, "documents")
-        t = F.col("text")
-        sents = F.size(F.filter(
-            F.transform(F.split(t, r"[.!?]+"), F.trim),
-            lambda s: s != ""))
-        words_ = F.size(F.filter(
-            F.split(F.lower(F.trim(t)), r"\s+"),
-            lambda w: w != ""))
-        syl = F.size(F.regexp_extract_all(
-            F.lower(t), F.lit("[aeiouy]+"), F.lit(0)))
-        out = docs.select(
-            "doc_id",
-            sents.cast("long").alias("n_sentences"),
-            words_.cast("long").alias("n_words"),
-            syl.cast("long").alias("n_syllables"))
-        nz = lambda c: F.when(F.col(c) > 0, F.col(c))
-        return out.select(
-            "doc_id", "n_sentences", "n_words", "n_syllables",
-            F.coalesce(int_ppm(F.col("n_words"),
-                               nz("n_sentences")), F.lit(0))
-            .alias("words_per_sentence_ppm"),
-            F.coalesce(int_ppm(F.col("n_syllables"),
-                               nz("n_words")), F.lit(0))
-            .alias("syllables_per_word_ppm"))
-
-    q["text_readability"] = text_readability
-
-    def text_phrase_search(spark, sf_dir):
-        """Exact phrase search ('scan scan' — a repeated term, the
-        positional edge case) via the single-shuffle anchor trick:
-        token at pos p matching phrase slot j emits anchor p-j; a
-        (doc, anchor) group holding all k distinct slots is a hit.
-        No self-joins; the term IN-list prunes the exploded stream
-        before the exchange. Oracle replays it positionally in SQL."""
-        return TX.phrase_search(load(spark, sf_dir, "documents"),
-                                "scan scan")
-
-    q["text_phrase_search"] = text_phrase_search
-
-    def text_vocab_stats(spark, sf_dir):
-        """Per-source corpus vocabulary statistics: one exploded
-        pass collapsed by map-side combine into (source, word)
-        counts, then a vocabulary-sized rollup — the corpus-scale
-        exchange is bounded by |vocab|. Hashed contract = the three
-        exact COUNT columns; the ppm ratios are derived pure
-        functions of them and are pytest-verified instead of hashed
-        (driver-red r6+r7 — ARCHITECTURE.md contract policy)."""
-        return TX.vocab_stats(load(spark, sf_dir, "documents")) \
-            .select("source", "n_tokens", "n_vocab", "n_hapax")
-
-    q["text_vocab_stats"] = text_vocab_stats
-
-    def text_char_diversity(spark, sf_dir):
-        """Exact-integer character-diversity signal: counts +
-        Simpson collision mass as half-up ppm of a rational — the
-        contract-policy-compliant proxy for character entropy
-        (repetitive/mashed text scores high collision, prose low)."""
-        return TX.char_diversity(load(spark, sf_dir, "documents"))
-
-    q["text_char_diversity"] = text_char_diversity
-
-    def curation_stratified_sample(spark, sf_dir):
-        """Deterministic stratified eval-set sampling: smallest
-        md5(doc_id) per source wins — no RNG, no partition-order
-        dependence, exactly replayable in SQL (the reproducibility
-        property a train/eval split needs)."""
-        return CU.stratified_sample(
-            load(spark, sf_dir, "documents"), "source", 20) \
-            .select("doc_id", "source")
-
-    q["curation_stratified_sample"] = curation_stratified_sample
-
-    def _bpe_fixture(spark):
-        return arrow_df(spark, [
-            (1, "The lower the better when lowering lowers."),
-            (2, "New, newer, NEWEST: lower and lowest!"),
-            (3, "Wider and wider widths widen the widest cases"),
-            (4, "low lows lowest lower low low"),
-            (5, "the the the and and a 42 42's"),
-            (6, None),
-            (7, ""),
-        ], "doc_id bigint, text string")
-
-    def text_bpe_merges(spark, sf_dir):
-        """REAL BPE tokenizer training (operators/bpe.py — the
-        public Sennrich merge-learning algorithm): one corpus-scale
-        word-count shuffle, then a driver-side merge loop over the
-        vocabulary-sized frequency table (bounded like the k-means
-        centroid loop). Deterministic tie-breaks make the learned
-        table an exact constant on this fixture corpus, which the
-        oracle pins in full (verified against an independent
-        in-memory implementation in tests/test_bpe.py)."""
-        return BPE.bpe_train(_bpe_fixture(spark), num_merges=8,
-                             vocab_cap=1000, min_count=2)
-
-    q["text_bpe_merges"] = text_bpe_merges
-
-    def text_bpe_encode(spark, sf_dir):
-        """Apply the learned merge table: Arrow-batched row-local
-        tokenization (no shuffle; the merge table rides the task
-        closure) with lowest-rank-first pair application and greedy
-        left-to-right replacement — every output token sequence is
-        an exact constant the oracle pins."""
-        df = _bpe_fixture(spark)
-        merges = BPE.bpe_train(df, num_merges=8, vocab_cap=1000,
-                               min_count=2)
-        return (BPE.bpe_encode(df, merges)
-                .select("doc_id", "n_tokens",
-                        F.array_join("tokens", " ")
-                        .alias("token_str")))
-
-    q["text_bpe_encode"] = text_bpe_encode
-
-    def text_wordpiece_vocab(spark, sf_dir):
-        """REAL WordPiece training (operators/wordpiece.py — the
-        BERT-style likelihood-scored merge: count(pair)/(count(l)·
-        count(r)) compared as exact cross-multiplied integers) on
-        the BPE fixture corpus. Alphabet pieces first, then merges
-        in learn order — a deterministic constant the oracle pins
-        in full; the corpus-wide contract is the tiling entry."""
-        from siridb_server_spark.operators import wordpiece as WP
-        return WP.wordpiece_train(_bpe_fixture(spark),
-                                  num_merges=12, min_count=2)
-
-    q["text_wordpiece_vocab"] = text_wordpiece_vocab
-
-    def text_wordpiece_encode(spark, sf_dir):
-        """Greedy longest-match-first WordPiece encoding with the
-        learned vocabulary (the standard serving-time algorithm —
-        no merge ranks needed): Arrow-batched, row-local, vocab in
-        the task closure. Every token sequence is an exact constant
-        the oracle pins, n_unk included."""
-        from siridb_server_spark.operators import wordpiece as WP
-        df = _bpe_fixture(spark)
-        v = WP.wordpiece_train(df, num_merges=12, min_count=2)
-        return (WP.wordpiece_encode(df, v)
-                .select("doc_id", "n_tokens", "n_unk",
-                        F.array_join("tokens", " ")
-                        .alias("token_str")))
-
-    q["text_wordpiece_encode"] = text_wordpiece_encode
-
-    def text_wordpiece_tiling(spark, sf_dir):
-        """WordPiece over the FULL documents corpus, verified
-        through the tiling invariant: per doc, Σ(piece chars minus
-        the ## prefixes) must equal the word characters the oracle
-        counts by stripping non-word characters — and n_unk must be
-        zero, because the alphabet is seeded from the corpus itself
-        (both word-initial and continuation forms). One mis-sliced
-        match anywhere flips the hash."""
-        from siridb_server_spark.operators import wordpiece as WP
-        docs = load(spark, sf_dir, "documents")
-        v = WP.wordpiece_train(docs, num_merges=40, min_count=2)
-        enc = WP.wordpiece_encode(docs, v)
-        piece_chars = F.aggregate(
-            "tokens", F.lit(0).cast("long"),
-            lambda a, t: a + F.length(t)
-            - F.when(t.startswith("##"), 2).otherwise(0))
-        return enc.select("doc_id", "n_unk",
-                          piece_chars.alias("tok_chars"))
-
-    q["text_wordpiece_tiling"] = text_wordpiece_tiling
-
-    def text_unigram_vocab(spark, sf_dir):
-        """REAL unigram-LM tokenizer training (operators/unigram.py
-        — SentencePiece-style hard-EM, Kudo 2018) on the BPE fixture
-        corpus. The trainer is float-free: segmentations compare as
-        exact integers (Π count · total^(L−k)), ties to fewer pieces
-        then lexicographic order, so the learned vocabulary is a
-        pure function of the corpus — the oracle pins every
-        multi-occurrence piece. (An independent check of the same
-        determinism claim lives in tests/test_unigram.py.)"""
-        from siridb_server_spark.operators import unigram as U
-        v = U.unigram_train(_bpe_fixture(spark), vocab_size=60,
-                            seed_size=600, n_iters=3)
-        return v.where(F.col("count") >= 2) \
-            .select("rank", "piece", "count")
-
-    q["text_unigram_vocab"] = text_unigram_vocab
-
-    def text_unigram_encode(spark, sf_dir):
-        """Viterbi encoding under the trained unigram vocabulary:
-        the full token stream of every fixture document, pinned
-        verbatim (joined with '|') — frequent words surface as
-        single pieces, morphology falls back to learned subwords,
-        NULL/empty docs tokenize to nothing."""
-        from siridb_server_spark.operators import unigram as U
-        docs = _bpe_fixture(spark)
-        v = U.unigram_train(docs, vocab_size=60, seed_size=600,
-                            n_iters=3)
-        enc = U.unigram_encode(docs, v)
-        return enc.select(
-            "doc_id", "n_tokens",
-            F.concat_ws("|", "tokens").alias("stream"))
-
-    q["text_unigram_encode"] = text_unigram_encode
-
-    def text_unigram_tiling(spark, sf_dir):
-        """Unigram tokenization over the FULL documents corpus,
-        verified through its tiling invariant: the characters of a
-        document's tokens, concatenated, are exactly the word
-        characters of the document — so per doc, total token chars
-        must equal what the oracle computes by just stripping
-        non-word characters. Training runs on a 1-in-10 doc slice
-        (the capped driver-side EM), encoding covers every doc —
-        tiling holds for ANY total-coverage vocabulary, which is
-        precisely why it is a safe corpus-wide contract."""
-        from siridb_server_spark.operators import unigram as U
-        docs = load(spark, sf_dir, "documents")
-        v = U.unigram_train(docs.where("doc_id % 10 = 0"),
-                            vocab_size=400, seed_size=4000,
-                            n_iters=2)
-        enc = U.unigram_encode(docs, v)
-        return enc.select(
-            "doc_id",
-            F.aggregate("tokens", F.lit(0).cast("long"),
-                        lambda a, t: a + F.length(t))
-            .alias("tok_chars"))
-
-    q["text_unigram_tiling"] = text_unigram_tiling
-
-    q["sim_label_centroids"] = lambda spark, sf_dir: \
-        SIM.label_centroid_dims(load(spark, sf_dir, "embeddings"))
-
-    def sim_centroid_shift(spark, sf_dir):
-        """Per-label centroid drift between snapshots
-        (operators/similarity.py centroid_shift): even vec_ids are
-        the old snapshot, odd the new — with label 0 REMOVED from
-        the new side, so the vanished-class NULL path is part of
-        the contract. Integer sufficient statistics only (micro-
-        scaled centroid components → exact dot/na/nb sums); the
-        drift cosine is the caller's float."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        return SIM.centroid_shift(
-            emb.where("vec_id % 2 = 0"),
-            emb.where("vec_id % 2 = 1 AND label <> 0"))
-
-    q["sim_centroid_shift"] = sim_centroid_shift
-
-    def sim_standardize(spark, sf_dir):
-        """Whitened embeddings, projected to long (id, dim, z) form
-        for the value comparison (the operator itself reassembles
-        the array)."""
-        out = SIM.standardize_embeddings(
-            load(spark, sf_dir, "embeddings"))
-        return out.select(
-            "vec_id", F.posexplode("vector").alias("dim", "z")) \
-            .select("vec_id", F.col("dim").cast("long").alias("dim"),
-                    "z")
-
-    q["sim_standardize"] = sim_standardize
-
-    def ts_asof_join(spark, sf_dir):
-        """Every purchase event joined to the most recent error event
-        of the same user at-or-before it (left semantics)."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(
-            F.col("event_id").cast("long").alias("event_id"),
-            F.col("user_id").cast("long").alias("user_id"),
-            "event_type", epoch_ns(ev).alias("ts"), "value")
-        left = (base.where(F.col("event_type") == "purchase")
-                .drop("event_type"))
-        # dedup right per (user, ts): keep the max-event_id row so the
-        # carry-forward (and the oracle) pick deterministically
-        right = (base.where(F.col("event_type") == "error")
-                 .groupBy("user_id", "ts")
-                 .agg(F.max(F.struct("event_id", "value")).alias("m"))
-                 .select("user_id", "ts",
-                         F.col("m.value").alias("err_value")))
-        res = AS.asof_join(left, right, on="ts", by="user_id",
-                           right_cols=["err_value"])
-        # matched rows only (ASOF JOIN inner semantics) — the driver
-        # compare stays null-free; left semantics are unit-tested
-        return res.where(F.col("err_value").isNotNull()).select(
-            "user_id", "event_id", "ts",
-            (F.round("value", 6) + F.lit(0.0)).alias("value"),
-            (F.round("err_value", 6) + F.lit(0.0)).alias("err_value"),
-            "ts_right")
-
-    q["ts_asof_join"] = ts_asof_join
-
-    def _pts_dedup(spark, sf_dir):
-        """events points, one row per (series, ts): last-writer-wins
-        by seq so window ordering is deterministic on both engines.
-
-        Implemented as a window dedup partitioned by SERIES ONLY
-        (sort (ts asc, seq desc, val desc); keep each ts-run's first
-        row ≡ the old groupBy(series, ts) max(struct(seq, val))) so
-        every downstream consumer — all partitioned or grouped by
-        series or (series, bucket) — satisfies its distribution from
-        THIS exchange: HashPartitioning(series) ⊆ any grouping that
-        contains series, and the (ts, seq desc) sort prefix covers
-        the ts-ordered windows. One shuffle total instead of the old
-        dedup-shuffle + operator-shuffle (guide §2.4); values are
-        identical row for row.
-
-        The fan-out must sit HERE, below the dedup window: a keyed
-        repartition placed between this window and a downstream one
-        is provably redundant (the child is already
-        hash-partitioned on series) and the optimizer removes it,
-        leaving only the window's own ENSURE_REQUIREMENTS exchange,
-        which AQE coalesces by PRE-expansion bytes — serializing
-        every row-expanding consumer (resample's grid explode ran
-        2-threaded). Below the window the repartition IS the
-        chain's one exchange (REPARTITION_BY_NUM — AQE never
-        coalesces a user-numbered repartition), so all 15 series-
-        keyed consumers inherit core-count parallelism. Gated on
-        the source's on-disk size (free os.stat — the optimizer-
-        stats fallback costs ~0.1 s per call): no-op at realistic
-        scale."""
-        pts = fan_out_keyed(
-            events_points(spark, sf_dir), "series",
-            est_bytes=table_bytes(sf_dir, "events"))
-        w = Window.partitionBy("series").orderBy(
-            F.col("ts").asc(), F.col("seq").desc(),
-            F.col("val_dbl").desc())
-        return (pts
-                .withColumn("_prev_ts", F.lag("ts").over(w))
-                .where(F.col("_prev_ts").isNull()
-                       | (F.col("_prev_ts") != F.col("ts")))
-                .select("series", "ts",
-                        F.col("val_dbl").alias("val")))
-
-    q["ts_resample_interp"] = lambda spark, sf_dir: \
-        TSO.resample_interpolate(_pts_dedup(spark, sf_dir),
-                                 est_bytes=table_bytes(
-                                     sf_dir, "events"),
-                                 step=3_600_000_000_000)
-
-    def ts_backtest_seasonal(spark, sf_dir):
-        """Seasonal-naive forecast backtest (operators/
-        timeseries.py seasonal_backtest): hold out each series'
-        last 8 points, forecast each with the actual 24 points
-        earlier (row-indexed seasonal naive), score against
-        naive-1 — sae_seasonal/sae_naive is the MASE-style
-        is-the-seasonality-real gate a forecasting pipeline runs
-        before fitting any model. Integer contract: scaled-long
-        absolute-error sums, floor(|err|·1000 + 0.5); full SQL
-        replay of the same lag windows over the deduped points."""
-        return TSO.seasonal_backtest(_pts_dedup(spark, sf_dir),
-                                     season=24, horizon=8)
-
-    q["ts_backtest_seasonal"] = ts_backtest_seasonal
-
-    def ts_decompose(spark, sf_dir):
-        """Classical seasonal decomposition (STL-lite): hourly
-        bucket means → centered 5-bucket moving-average TREND →
-        per-(series, hour-of-day) mean of the detrended values as
-        the SEASONAL component → REMAINDER. Every mean is an exact
-        DECIMAL(38,18) sum divided by a count (associative,
-        partition-order-free on both engines) and every derived
-        value is built from IEEE-exact ops only, then
-        micro-quantized at birth — the contract policy applied to a
-        three-layer windowed pipeline. Shape: one bucket groupBy,
-        one per-series ordered window, one per-(series, phase)
-        window — all key-partitioned, nothing global."""
-        from siridb_server_spark.functions.stable import scaled_term
-        H = 3_600_000_000_000
-        pts = _pts_dedup(spark, sf_dir)
-        dec = lambda c: F.sum(c.cast("decimal(38,18)")) \
-            .cast("double")
-        b = (pts.groupBy("series",
-                         ((F.col("ts") - F.col("ts") % H))
-                         .alias("hb"))
-             .agg((dec(F.col("val")) / F.count(F.lit(1)))
-                  .alias("vh")))
-        decw = lambda c, w: F.sum(c.cast("decimal(38,18)")) \
-            .over(w).cast("double")
-        w5 = (Window.partitionBy("series").orderBy("hb")
-              .rowsBetween(-2, 2))
-        t = (b.withColumn("ts5", decw(F.col("vh"), w5))
-             .withColumn("n5", F.count(F.lit(1)).over(w5))
-             .where(F.col("n5") == 5)
-             .withColumn("trend", F.col("ts5") / F.lit(5.0))
-             .withColumn("det", F.col("vh") - F.col("trend"))
-             .withColumn("phase", (F.col("hb") / F.lit(H))
-                         .cast("long") % 24))
-        wp = Window.partitionBy("series", "phase")
-        seas = (decw(F.col("det"), wp)
-                / F.count(F.lit(1)).over(wp))
-        return (t.withColumn("seasonal", seas)
-                .select("series", "hb",
-                        scaled_term(F.col("trend")).alias("trend_micro"),
-                        scaled_term(F.col("seasonal"))
-                        .alias("seasonal_micro"),
-                        scaled_term(F.col("det") - F.col("seasonal"))
-                        .alias("resid_micro")))
-
-    q["ts_decompose"] = ts_decompose
-
-    def ts_sessionize(spark, sf_dir):
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(
-            F.col("event_id").cast("long").alias("event_id"),
-            F.col("user_id").cast("long").alias("user_id"),
-            epoch_ns(ev).alias("ts"))
-        return TSO.sessionize(base, gap=3_600_000_000_000,
-                              seq_col="event_id")
-
-    q["ts_sessionize"] = ts_sessionize
-
-    def events_funnel(spark, sf_dir):
-        """Conversion funnel: per user, signup events that are
-        followed by a purchase within 24 h. One hash shuffle on
-        user_id feeds a per-user sort; the carry-forward is a
-        single min-over-following-window — no self-join, no range
-        join blowup (the as-of pattern in reverse). Output: per-day
-        signup count, converted count, conversion rate."""
-        ev = load(spark, sf_dir, "events")
-        day_ns = 86_400_000_000_000
-        base = (ev.where(F.col("event_type").isin("signup", "purchase"))
-                .select(F.col("user_id").cast("long").alias("user_id"),
-                        "event_type", epoch_ns(ev).alias("ts"),
-                        F.col("event_id").cast("long").alias("eid")))
-        w = (Window.partitionBy("user_id").orderBy("ts", "eid")
-             .rowsBetween(1, Window.unboundedFollowing))
-        nxt_purchase = F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).over(w)
-        sign = (base.withColumn("_np", nxt_purchase)
-                .where(F.col("event_type") == "signup")
-                .select("ts",
-                        (F.col("_np").isNotNull()
-                         & (F.col("_np") - F.col("ts") <= day_ns))
-                        .alias("conv")))
-        return (sign.groupBy((F.col("ts") - F.col("ts") % day_ns)
-                             .alias("day"))
-                .agg(F.count(F.lit(1)).alias("signups"),
-                     F.sum(F.col("conv").cast("long"))
-                     .alias("converted"),
-                     # exact-int sum / count: order-free, unlike a
-                     # double avg (see functions/stable.py)
-                     (F.round(F.sum(F.col("conv").cast("long"))
-                              / F.count(F.lit(1)), 6)
-                      + F.lit(0.0)).alias("rate")))
-
-    q["events_funnel"] = events_funnel
-
-    q["ts_counter_rate"] = lambda spark, sf_dir: \
-        TSO.counter_rate(_pts_dedup(spark, sf_dir),
-                         scale=1_000_000_000)
-
-    q["ts_zscore_anomalies"] = lambda spark, sf_dir: \
-        TSO.zscore_anomalies(_pts_dedup(spark, sf_dir),
-                             window=20, threshold=2.5)
-
-    q["curation_sample_sources"] = lambda spark, sf_dir: \
-        CU.sample_by_source(load(spark, sf_dir, "documents"),
-                            alpha=0.5, target_frac=0.5)
-
-    q["curation_pack_sequences"] = lambda spark, sf_dir: \
-        CU.pack_sequences(load(spark, sf_dir, "documents"), budget=256)
-
-    q["curation_split"] = lambda spark, sf_dir: \
-        CU.assign_splits(load(spark, sf_dir, "documents"))
-
-    q["text_bigram_lm"] = lambda spark, sf_dir: \
-        TX.bigram_logprob(load(spark, sf_dir, "documents")) \
-        .select("doc_id", "n_bigrams", "sum_nab", "sum_na", "v")
-
-    q["text_trigram_lm"] = lambda spark, sf_dir: \
-        TX.trigram_logprob(load(spark, sf_dir, "documents")) \
-        .select("doc_id", "n_trigrams", "sum_nabc", "sum_nab",
-                "sum_nbc", "sum_nb", "sum_nc", "v")
-
-    def curation_token_budget(spark, sf_dir):
-        """Greedy token-budget selection (operators/curation.py
-        token_budget_select): docs ranked by type diversity
-        (distinct whitespace tokens — an integer quality proxy,
-        ties to the smaller id) are kept while the cumulative
-        token count fits a 12k budget — the step that turns
-        per-doc scores into a training set. The Spark side runs
-        the DISTRIBUTED two-level prefix sum (per-score totals +
-        |scores|-row offset window + score-partitioned intra
-        cumsum); the oracle replays the contract with one plain
-        global-window cumsum — the equality IS the proof the
-        decomposition is exact."""
-        docs = load(spark, sf_dir, "documents")
-        w = TX.words(F.col("text"))
-        empty = F.length(F.trim(F.col("text"))) == 0
-        scored = docs.select(
-            "doc_id",
-            TX.token_count(F.col("text")).alias("n_tokens"),
-            F.when(empty, F.lit(0))
-            .otherwise(F.size(F.array_distinct(w)))
-            .cast("long").alias("n_types"))
-        return CU.token_budget_select(
-            scored, budget_tokens=12_000,
-            score_col="n_types", token_col="n_tokens")
-
-    q["curation_token_budget"] = curation_token_budget
-
-    # alpha=0.5: the temperature term is sqrt (correctly rounded on
-    # every engine) — the pow-seeded 0.3 variant was driver-hash-red
-    # four rounds running (ARCHITECTURE.md contract policy)
-    q["curation_mix_weights"] = lambda spark, sf_dir: \
-        CU.mix_weights(load(spark, sf_dir, "documents"),
-                       alpha=0.5, max_weight=5.0)
-
-    q["curation_shard_export"] = lambda spark, sf_dir: \
-        CU.shard_export(load(spark, sf_dir, "documents"), n_shards=32)
-
-    q["curation_epoch_plan"] = lambda spark, sf_dir: \
-        CU.epoch_plan(load(spark, sf_dir, "documents"),
-                      alpha=0.5, max_weight=5.0)
-
-    q["curation_length_buckets"] = lambda spark, sf_dir: \
-        CU.length_buckets(load(spark, sf_dir, "documents"),
-                          batch_docs=32)
-
-    def curation_curriculum(spark, sf_dir):
-        """Curriculum assignment: within each SOURCE, rank documents
-        by the quality logit and cut into 4 curriculum stages
-        (ntile — low-quality stages trained first, high-quality
-        last, the standard quality-curriculum schedule). The window
-        partitions by source, so ranking parallelizes across
-        sources — no single-partition sort; ordering ties break on
-        doc_id and the logit is the IEEE-exact micro-quantized
-        z_micro, so stage boundaries are engine-identical. Empty
-        docs (NULL logit) are excluded, matching the gate's
-        fail-closed posture. Output: per (source, stage) doc count
-        and the stage's logit span."""
-        docs = load(spark, sf_dir, "documents")
-        sc = (TX.quality_score_linear(docs)
-              .select("doc_id", "z_micro")
-              .where(F.col("z_micro").isNotNull()))
-        j = docs.select("doc_id", "source").join(sc, "doc_id")
-        w = Window.partitionBy("source") \
-            .orderBy(F.asc("z_micro"), F.asc("doc_id"))
-        return (j.withColumn("stage",
-                             F.ntile(4).over(w).cast("long"))
-                .groupBy("source", "stage")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.min("z_micro").alias("z_lo"),
-                     F.max("z_micro").alias("z_hi")))
-
-    q["curation_curriculum"] = curation_curriculum
-
-    q["sim_ann_recall"] = lambda spark, sf_dir: \
-        SIM.ann_recall_curve(load(spark, sf_dir, "embeddings"),
-                             k=10, nprobes=(1, 2, 4, 10),
-                             n_queries=20)
-
-    # hashed contract = the exact-integer sufficient statistics; the
-    # ln-seeded dsir score itself is pytest-verified, never hashed
-    q["curation_dsir"] = lambda spark, sf_dir: \
-        CU.dsir_weights(load(spark, sf_dir, "documents"),
-                        is_target=F.col("lang") == "en") \
-        .select("doc_id", "n_tokens", "sum_nt", "sum_nr")
-
-    def ts_ewma(spark, sf_dir):
-        """EWMA smoothing; the entry projects each series' final
-        smoothed level (the full trajectory is pinned point-by-point
-        in pytest) — a left fold DuckDB replays via list_reduce."""
-        e = TSO.ewma(_pts_dedup(spark, sf_dir), alpha=0.25)
-        return (e.groupBy("series")
-                .agg(F.count(F.lit(1)).alias("n_points"),
-                     F.max_by("ewma", "ts").alias("_last"))
-                .select("series", "n_points",
-                        (F.round("_last", 6) + F.lit(0.0))
-                        .alias("ewma_last")))
-
-    q["ts_ewma"] = ts_ewma
-
-    def text_boilerplate(spark, sf_dir):
-        """C4-style boilerplate-line removal. The synthetic docs are
-        single-line, so wrap each into 8-word lines first (row-local)
-        — cross-doc repeated 8-word lines (which dedup_spans proved
-        exist) then read as boilerplate and are dropped."""
-        docs = load(spark, sf_dir, "documents")
-        ws = F.split(F.trim(F.col("text")), r"\s+")
-        n = F.size(ws)
-        wrapped = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.ceil(n / F.lit(8)) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.slice(ws, i * 8 + 1, 8))), "\n")
-        return TX.remove_boilerplate_lines(
-            docs.select("doc_id", wrapped.alias("text")), min_docs=2)
-
-    q["text_boilerplate"] = text_boilerplate
-
-    q["dedup_containment"] = lambda spark, sf_dir: \
-        D.containment_pairs(
-            load(spark, sf_dir, "documents").where("doc_id < 300"),
-            threshold=0.5, shingle_n=3)
-
-    def events_cohorts(spark, sf_dir):
-        """Weekly cohort-retention matrix: cohort = a user's first
-        active week; one distinct (user, week) reduction, a tiny
-        per-user min, one counting aggregate — three hash shuffles
-        on user-sized data, no window over the full event stream."""
-        week = 7 * 24 * 3600 * 10 ** 9
-        ev = load(spark, sf_dir, "events")
-        wk = (ev.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            epoch_ns(ev).alias("ets"))
-            .select("user_id",
-                    F.expr(f"ets div {week}").alias("week"))
-            .distinct())
-        first = wk.groupBy("user_id").agg(
-            F.min("week").alias("cohort"))
-        return (wk.join(first, "user_id")
-                .groupBy("cohort",
-                         (F.col("week") - F.col("cohort"))
-                         .alias("week_offset"))
-                .agg(F.countDistinct("user_id").alias("n_users")))
-
-    q["events_cohorts"] = events_cohorts
-
-    def events_flow(spark, sf_dir):
-        """User-flow transition matrix: P(next event type | current)
-        across each user's time-ordered event stream — the Markov
-        view behind funnel/journey analytics. One lag window per
-        user (single hash shuffle), one counting aggregate over
-        |types|² keys, a broadcast per-source total."""
-        ev = load(spark, sf_dir, "events")
-        e = ev.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("event_type").alias("et"),
-            epoch_ns(ev).alias("ts"),
-            F.col("event_id").cast("long").alias("event_id"))
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        pairs = (e.withColumn("nxt", F.lead("et").over(w))
-                 .where(F.col("nxt").isNotNull())
-                 .groupBy(F.col("et").alias("src"),
-                          F.col("nxt").alias("dst"))
-                 .agg(F.count(F.lit(1)).alias("n")))
-        totals = pairs.groupBy("src").agg(
-            F.sum("n").alias("n_src"))
-        return (pairs.join(F.broadcast(totals), "src")
-                .select("src", "dst", "n",
-                        (F.round(F.col("n") / F.col("n_src"), 6)
-                         + F.lit(0.0)).alias("p")))
-
-    q["events_flow"] = events_flow
-
-    def ts_seasonal_profile(spark, sf_dir):
-        """Hour-of-day seasonal baseline per event-type series."""
-        ev = load(spark, sf_dir, "events")
-        pts = ev.select(F.col("event_type").alias("series"),
-                        epoch_ns(ev).alias("ts"),
-                        F.col("value").alias("val"))
-        return TSO.seasonal_profile(
-            pts, period_ns=3_600_000_000_000, n_buckets=24)
-
-    q["ts_seasonal_profile"] = ts_seasonal_profile
-
-    def ts_latency_quantiles(spark, sf_dir):
-        """p50/p90/p99 per event-type series — the SLO rollup. One
-        partial-aggregated groupBy; exact interpolated percentiles
-        (Spark percentile = DuckDB quantile_cont; at 100 TB swap in
-        approx_percentile/t-digest, same plan shape)."""
-        ev = load(spark, sf_dir, "events")
-        pts = ev.select(F.col("event_type").alias("series"),
-                        F.col("value").alias("val"))
-        g = pts.groupBy("series").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.percentile("val", F.lit(0.5)).alias("_p50"),
-            F.percentile("val", F.lit(0.9)).alias("_p90"),
-            F.percentile("val", F.lit(0.99)).alias("_p99"))
-        return g.select(
-            "series", "n",
-            (F.round("_p50", 6) + F.lit(0.0)).alias("p50"),
-            (F.round("_p90", 6) + F.lit(0.0)).alias("p90"),
-            (F.round("_p99", 6) + F.lit(0.0)).alias("p99"))
-
-    q["ts_latency_quantiles"] = ts_latency_quantiles
-
-    def ts_seasonal_anomalies(spark, sf_dir):
-        """Points abnormal FOR THEIR HOUR-OF-DAY (seasonal z-score
-        vs the broadcast per-phase baseline)."""
-        ev = load(spark, sf_dir, "events")
-        pts = ev.select(F.col("event_type").alias("series"),
-                        epoch_ns(ev).alias("ts"),
-                        F.col("value").alias("val"))
-        return TSO.seasonal_anomalies(
-            pts, period_ns=3_600_000_000_000, n_buckets=24,
-            threshold=2.5)
-
-    q["ts_seasonal_anomalies"] = ts_seasonal_anomalies
-
-    def ts_corr_topk(spark, sf_dir):
-        """Top-10 series most correlated with the busiest series
-        (hourly bucket means, Pearson over co-present buckets).
-        Per-event-type series — dense enough for shared buckets."""
-        ev = load(spark, sf_dir, "events")
-        pts = ev.select(F.col("event_type").alias("series"),
-                        epoch_ns(ev).alias("ts"),
-                        F.col("value").alias("val"))
-        return TSO.correlated_series(
-            pts, group_ns=3_600_000_000_000, k=10)
-
-    q["ts_corr_topk"] = ts_corr_topk
-
-    def ts_range_join(spark, sf_dir):
-        """Bucketed point-in-interval join: the 100 longest user
-        sessions become intervals; count ALL events inside each
-        window ("total system activity during this session"). The
-        theta-join collapses to an equi-join on 1 h buckets — see
-        timeseries.point_in_interval_join."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(
-            F.col("event_id").cast("long").alias("event_id"),
-            F.col("user_id").cast("long").alias("user_id"),
-            epoch_ns(ev).alias("ts"))
-        sess = TSO.sessionize(base, gap=3_600_000_000_000,
-                              seq_col="event_id")
-        ivl = (sess.groupBy(F.col("user_id").alias("s_user"),
-                            "session_id")
-               .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")))
-        top = (ivl.orderBy(F.desc(F.col("hi") - F.col("lo")),
-                           "s_user", "session_id").limit(100))
-        joined = TSO.point_in_interval_join(
-            base.select("ts"), top, width=3_600_000_000_000)
-        return (joined.groupBy("s_user", "session_id", "lo", "hi")
-                .agg(F.count(F.lit(1)).alias("n_events"))
-                .select(F.col("s_user").alias("user_id"),
-                        "session_id", "lo", "hi", "n_events"))
-
-    q["ts_range_join"] = ts_range_join
-
-    def text_topk_per_source(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        scored = TX.quality_features(docs, keep=("source",))
-        return TX.topk_per_group(
-            scored.select("doc_id", "source", "n_stopwords",
-                          "n_tokens"),
-            "source",
-            [F.col("n_stopwords").desc(), F.col("doc_id")], k=5)
-
-    q["text_topk_per_source"] = text_topk_per_source
-
-    # --- similarity search
-    def _query_vec(spark, sf_dir):
-        row = load(spark, sf_dir, "embeddings") \
-            .where(F.col("vec_id") == 0).select("embedding").first()
-        return list(row["embedding"])
-
-    def sim_bruteforce_topk(spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        vec = _query_vec(spark, sf_dir)
-        return SIM.brute_force_topk(
-            emb.where(F.col("vec_id") != 0), vec, k=10)
-
-    q["sim_bruteforce_topk"] = sim_bruteforce_topk
-
-    def sim_dim_truncation_recall(spark, sf_dir):
-        """Matryoshka truncation audit (operators/similarity.py
-        dim_truncation_recall): top-10-by-cosine over the first
-        8/16/32 coordinates scored against the full 64-dim exact
-        top-10 — one corpus scan, one dim-partitioned window.
-        Integer contract: (dim, k, hits); recall@k is the caller's
-        hits/k."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        vec = _query_vec(spark, sf_dir)
-        return SIM.dim_truncation_recall(emb, vec,
-                                         dims=(8, 16, 32), k=10)
-
-    q["sim_dim_truncation_recall"] = sim_dim_truncation_recall
-
-    def sim_knn_join(spark, sf_dir):
-        """Batch kNN join: 3 query vectors against the rest of the
-        corpus in one pass — per-Arrow-batch BLAS scoring with a
-        deterministic local top-k cut, so the shuffle carries
-        partitions·q·k rows, never corpus·q scores."""
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.where(F.col("vec_id") < 3) \
-            .select(F.col("vec_id").alias("qid"), "embedding")
-        return SIM.knn_join(emb.where(F.col("vec_id") >= 3),
-                            queries, k=5)
-
-    q["sim_knn_join"] = sim_knn_join
-
-    def sim_ivf_knn_join(spark, sf_dir):
-        """Batch IVF ANN join (operators/similarity.py
-        ivf_knn_join): every query's top-5 neighbors drawn from its
-        2 nearest coarse cells only — the corpus-vs-corpus ANN
-        shape where BOTH sides stay distributed (knn_join collects
-        the query side). Broadcast centroid ranking per query,
-        cell-keyed hash join, exact per-candidate cosine rounded
-        to 6 before ranking; the oracle replays centroids,
-        per-query probes, scores and ranks end to end."""
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.where(F.col("vec_id") < 3) \
-            .select(F.col("vec_id").alias("qid"), "embedding")
-        return SIM.ivf_knn_join(emb.where(F.col("vec_id") >= 3),
-                                queries, k=5, nprobe=2)
-
-    q["sim_ivf_knn_join"] = sim_ivf_knn_join
-
-    def sim_ivf_sq_knn_join(spark, sf_dir):
-        """Batch IVF-SQ8 join (operators/similarity.py
-        ivf_sq_knn_join — the full FAISS-style batch serving path):
-        per-query probes bound candidates at nprobe/|cells|, the
-        probed-cell scan is exact int64 multiply-adds over int8
-        codes (corpus codes unclamped off the corpus-max scale,
-        query codes clamped), only the 20 coarse survivors per
-        query reach the full-precision rescore. The oracle replays
-        centroids → per-query probes → codes → integer coarse cut
-        → rescore → ranks entirely in SQL."""
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.where(F.col("vec_id") < 3) \
-            .select(F.col("vec_id").alias("qid"), "embedding")
-        return SIM.ivf_sq_knn_join(emb.where(F.col("vec_id") >= 3),
-                                   queries, k=5, nprobe=2, rerank=4)
-
-    q["sim_ivf_sq_knn_join"] = sim_ivf_sq_knn_join
-
-    def sim_ivf_topk(spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        vec = _query_vec(spark, sf_dir)
-        return SIM.ivf_topk(emb.where(F.col("vec_id") != 0), vec,
-                            k=10, nprobe=3)
-
-    q["sim_ivf_topk"] = sim_ivf_topk
-
-    def _ann_props(spark, sf_dir, res: DataFrame, k: int) -> DataFrame:
-        """Invariant rows for an approximate top-k result: k rows
-        returned; every (id, cos) matches the exact cosine recomputed
-        from the table; no approximate hit outscores the true top-1."""
-        emb = load(spark, sf_dir, "embeddings")
-        vec = _query_vec(spark, sf_dir)
-        q_arr = F.array(*[F.lit(float(x)) for x in vec])
-        truth = emb.where(F.col("vec_id") != 0).select(
-            "vec_id",
-            (F.round(SIM.cosine(F.col("embedding"), q_arr), 6)
-             + F.lit(0.0)).alias("true_cos"))
-        joined = res.join(truth, "vec_id", "left")
-        bad_cos = joined.where(
-            F.col("true_cos").isNull()
-            | (F.abs(F.col("cos") - F.col("true_cos")) > 1e-9))
-        top1 = SIM.brute_force_topk(
-            emb.where(F.col("vec_id") != 0), vec, k=1)
-        beats = res.crossJoin(
-            top1.select(F.col("cos").alias("best"))).where(
-            F.col("cos") > F.col("best") + 1e-9)
-        return (
-            res.agg(F.lit("k_returned").alias("prop"),
-                    F.count(F.lit(1)).cast("long").alias("n"))
-            .unionByName(_prop("cos_mismatch", bad_cos))
-            .unionByName(_prop("beats_exact_top1", beats)))
-
-    def sim_ivf_kmeans(spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        vec = _query_vec(spark, sf_dir)
-        cents = SIM.kmeans_fit(emb, k=4, iters=3)
-        res = SIM.ivf_topk_trained(
-            emb.where(F.col("vec_id") != 0), vec, cents,
-            k=10, nprobe=2)
-        return _ann_props(spark, sf_dir, res, 10)
-
-    q["sim_ivf_kmeans"] = sim_ivf_kmeans
-
-    def sim_lsh_topk(spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        vec = _query_vec(spark, sf_dir)
-        res = SIM.lsh_topk(emb.where(F.col("vec_id") != 0), vec,
-                           k=10, n_planes=4)
-        return _ann_props(spark, sf_dir, res, 10)
-
-    q["sim_lsh_topk"] = sim_lsh_topk
-
-    q["sim_cosine_pairs"] = lambda spark, sf_dir: SIM.cosine_pairs_blocked(
-        load(spark, sf_dir, "embeddings"), threshold=0.3)
-
-    # --- multimodal plumbing (decode stubbed; Arrow path real)
-    q["multimodal_meta"] = lambda spark, sf_dir: MM.decode_image_meta(
-        MM.documents_as_media(load(spark, sf_dir, "documents")))
-    q["multimodal_frames"] = lambda spark, sf_dir: MM.frame_sample(
-        MM.documents_as_media(load(spark, sf_dir, "documents")),
-        every_n=10)
-
-    def _ppm(w, h, px, comment=False):
-        head = b"P6\n" + (b"# c\n" if comment else b"") \
-            + f"{w} {h}\n255\n".encode()
-        return head + b"".join(bytes(p) for p in px)
-
-    def _wav(channels, rate, frames):
-        import struct
-        data = b"".join(struct.pack("<h", s)
-                        for f in frames for s in f)
-        fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                          rate * channels * 2, channels * 2, 16)
-        body = b"fmt " + struct.pack("<I", len(fmt)) + fmt \
-            + b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", 4 + len(body)) \
-            + b"WAVE" + body
-
-    def multimodal_ppm_decode(spark, sf_dir):
-        """REAL P6 decode through the Arrow path on hand-constructed
-        images whose metadata is known exactly (uniform color → means
-        equal the color; the oracle is those constants)."""
-        rows = [
-            (1, "image", _ppm(4, 3, [(10, 20, 30)] * 12), "image/ppm"),
-            (2, "image", _ppm(2, 2, [(0, 0, 0), (255, 255, 255),
-                                     (255, 0, 0), (1, 2, 3)]),
-             "image/ppm"),
-            (3, "image", _ppm(1, 1, [(5, 6, 7)], comment=True),
-             "image/ppm"),
-            (4, "image", b"not a ppm", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_ppm_meta(media)
-
-    q["multimodal_ppm_decode"] = multimodal_ppm_decode
-
-    def multimodal_png_decode(spark, sf_dir):
-        """REAL PNG decode (stdlib zlib inflate + per-filter
-        unfilter) through the same Arrow path as the PPM entry, on
-        hand-built images covering every scanline filter (0/1/2 on
-        the uniform RGB, 4/3 on the mixed one) and every supported
-        color type (RGB, gray, RGBA, palette) — metadata is known
-        exactly, so the oracle is constants. A 16-bit image and a
-        non-PNG payload yield NULLs (out of the declared subset)."""
-        import numpy as np
-        rgb1 = np.tile(np.array([10, 20, 30], np.uint8), (3, 4, 1))
-        rgb2 = np.array([[(0, 0, 0), (255, 255, 255)],
-                         [(255, 0, 0), (1, 2, 3)]], np.uint8)
-        gray = np.array([[10, 30]], np.uint8)
-        rgba = np.array([[(10, 20, 30, 255), (30, 40, 50, 0)]],
-                        np.uint8)
-        pal = np.array([[0, 1]], np.uint8)
-        bad16 = MM.encode_png(rgb1)  # corrupt depth byte to 16
-        depth_at = len(b"\x89PNG\r\n\x1a\n") + 8 + 8
-        bad16 = bad16[:depth_at] + b"\x10" + bad16[depth_at + 1:]
-        rows = [
-            (1, "image", MM.encode_png(rgb1, filters=[0, 1, 2]),
-             "image/png"),
-            (2, "image", MM.encode_png(rgb2, filters=[4, 3]),
-             "image/png"),
-            (3, "image", MM.encode_png(gray, color_type=0),
-             "image/png"),
-            (4, "image", MM.encode_png(rgba, color_type=6,
-                                       filters=[1]), "image/png"),
-            (5, "image", MM.encode_png(
-                pal, color_type=3,
-                palette=[(0, 0, 0), (255, 0, 0)]), "image/png"),
-            (6, "image", bad16, "image/png"),
-            (7, "image", b"not a png", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_png_meta(media)
-
-    q["multimodal_png_decode"] = multimodal_png_decode
-
-    def multimodal_gif_decode(spark, sf_dir):
-        """REAL GIF decode (library-free LZW + palette + interlace)
-        on hand-built images: a 2-frame animation (first-frame means
-        are the PPM/PNG mixed-color constants), a uniform frame
-        behind a graphic-control extension, an INTERLACED frame
-        whose row reordering must reproduce the sequential means,
-        and an invalid payload -> NULLs. The frame count comes from
-        the full block walk, not the first frame."""
-        import numpy as np
-        pal_mixed = [(0, 0, 0), (255, 255, 255), (255, 0, 0),
-                     (1, 2, 3)]
-        g1 = MM.encode_gif(
-            [np.array([[0, 1], [2, 3]]), np.zeros((2, 2), int)],
-            pal_mixed)
-        g2 = MM.encode_gif([np.zeros((3, 4), int)],
-                           [(10, 20, 30), (0, 0, 0)],
-                           with_extension=True)
-        gray = [(0, 0, 0), (40, 40, 40), (80, 80, 80),
-                (120, 120, 120)]
-        g3 = MM.encode_gif(
-            [np.arange(8).reshape(8, 1) % 4], gray,
-            interlace_first=True)
-        rows = [
-            (1, "image", g1, "image/gif"),
-            (2, "image", g2, "image/gif"),
-            (3, "image", g3, "image/gif"),
-            (4, "image", b"GIF89ajunk", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_gif_meta(media)
-
-    q["multimodal_gif_decode"] = multimodal_gif_decode
-
-    def multimodal_jpeg_decode(spark, sf_dir):
-        """REAL JPEG decode — baseline SOF0 AND progressive SOF2
-        (from-scratch Huffman entropy decode + multi-scan spectral/
-        successive-approximation accumulation + dequant + IDCT +
-        YCbCr) on hand-built images whose expected values are
-        independently derivable: flat and flat-tile images survive
-        the all-ones-quant pipeline EXACTLY (a flat 8x8 block is
-        pure DC, which rounds without loss), so the oracle is
-        constants. Covers DC prediction across blocks, restart
-        intervals, 4:2:0 subsampling, real progressive scans (gray
-        + subsampled color), a MALFORMED progressive reject (SOF2
-        with a baseline scan header) and a non-JPEG reject."""
-        import numpy as np
-        flat = np.full((8, 8), 100, np.uint8)
-        tiles = np.zeros((16, 16), np.uint8)
-        tiles[:8, 8:], tiles[8:, :8], tiles[8:, 8:] = 50, 100, 250
-        color = np.zeros((16, 16, 3), np.uint8)
-        color[:] = (200, 50, 120)
-        bad = bytearray(MM.encode_jpeg_baseline(flat))
-        bad[bad.index(b"\xFF\xC0") + 1] = 0xC2  # corrupt scan combo
-        rows = [
-            (1, "image", MM.encode_jpeg_baseline(flat),
-             "image/jpeg"),
-            (2, "image", MM.encode_jpeg_baseline(tiles),
-             "image/jpeg"),
-            (3, "image", MM.encode_jpeg_baseline(
-                tiles, restart_interval=1), "image/jpeg"),
-            (4, "image", MM.encode_jpeg_baseline(
-                color, subsample=(2, 2)), "image/jpeg"),
-            (5, "image", bytes(bad), "image/jpeg"),
-            (6, "image", b"not a jpeg", "application/octet-stream"),
-            (7, "image", MM.encode_jpeg_progressive(tiles),
-             "image/jpeg"),
-            (8, "image", MM.encode_jpeg_progressive(
-                color, subsample=(2, 2)), "image/jpeg"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_jpeg_meta(media)
-
-    q["multimodal_jpeg_decode"] = multimodal_jpeg_decode
-
-    def multimodal_gif_frames(spark, sf_dir):
-        """REAL frame sampling over GIF animations: indices stride
-        the TRUE frame count (5 frames sampled every 2 -> 0, 2, 4;
-        1 frame -> 0; an invalid GIF contributes nothing)."""
-        import numpy as np
-        f = np.zeros((2, 2), int)
-        pal = [(0, 0, 0), (255, 255, 255)]
-        rows = [
-            (1, "video", MM.encode_gif([f] * 5, pal), "image/gif"),
-            (2, "video", MM.encode_gif([f], pal), "image/gif"),
-            (3, "video", b"GIF89ajunk", "image/gif"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.frame_sample(media, every_n=2)
-
-    q["multimodal_gif_frames"] = multimodal_gif_frames
-
-    def _mp4_fixture_rows():
-        """Two spec-correct hand-muxed MP4s (multimodal.py
-        build_minimal_mp4 — ISO/IEC 14496-12 box layout) + an
-        invalid payload + a NULL payload."""
-        a = MM.build_minimal_mp4(
-            320, 240, [100, 200, 150, 50, 75],
-            timescale=600, delta=60, samples_per_chunk=2)
-        b = MM.build_minimal_mp4(
-            1920, 1080, [4096] * 7, timescale=90000, delta=3000,
-            samples_per_chunk=3, codec=b"hvc1")
-        return [
-            (1, "video", a, "video/mp4"),
-            (2, "video", b, "video/mp4"),
-            (3, "video", b"not an mp4", "application/octet-stream"),
-            (4, "video", None, "video/mp4"),
-        ]
-
-    def multimodal_mp4_decode(spark, sf_dir):
-        """REAL MP4 container decode via the library-free ISO-BMFF
-        box walk: brand, codec fourcc, tkhd dimensions, true stsz
-        frame count, mvhd duration. Invalid/NULL payloads yield
-        NULL metadata (kept). Oracle pins every value byte-derived
-        from the deterministic muxer output."""
-        media = _media_df(spark, _mp4_fixture_rows())
-        return MM.decode_mp4_meta(media)
-
-    q["multimodal_mp4_decode"] = multimodal_mp4_decode
-
-    def multimodal_mp4_frames(spark, sf_dir):
-        """REAL strided frame byte-ranges from the stsc/stco/stsz
-        tables: every 2nd sample's true file offset + size —
-        the range-read contract of a distributed frame extractor.
-        Non-BMFF payloads contribute no rows."""
-        media = _media_df(spark, _mp4_fixture_rows())
-        return MM.mp4_frame_offsets(media, every_n=2)
-
-    q["multimodal_mp4_frames"] = multimodal_mp4_frames
-
-    def multimodal_h264_frames(spark, sf_dir):
-        """REAL H.264 video PIXEL decode (operators/h264.py:
-        from-scratch CAVLC + intra prediction + exact integer
-        transforms; the r5 stub is gone). Fixture: an MP4 whose avc1
-        track carries three I-frames of the same 16x16 tile image —
-        one I_PCM (lossless), one Intra_16x16, one Intra_4x4 — plus
-        a raw Annex B color frame (integer-YCbCr PCM roundtrip maps
-        (200,50,120) to (200,50,121)), a non-video payload (no
-        rows), and an avcC-less MP4 whose zero-byte samples yield
-        NULL pixel columns. All decode output is deterministic pure
-        integer math, so the oracle pins exact constants."""
-        import numpy as np
-        tiles = np.zeros((16, 16), np.uint8)
-        tiles[:8, 8:], tiles[8:, :8], tiles[8:, 8:] = 50, 100, 250
-        streams = [H264.encode_h264_annexb(tiles, mode=m, qp=10)[0]
-                   for m in ("pcm", "i16", "i4")]
-        avcc = H264.build_avcc(streams[0])
-        samples = [H264.annexb_to_avcc_sample(s) for s in streams]
-        mp4 = MM.build_minimal_mp4(16, 16, [],
-                                   sample_payloads=samples,
-                                   avcc=avcc)
-        color = np.full((32, 48, 3), (200, 50, 120), np.uint8)
-        raw = H264.encode_h264_annexb(color, mode="pcm", qp=26)[0]
-        rows = [(1, "video", mp4, "video/mp4"),
-                (2, "video", raw, "video/h264"),
-                (3, "video", b"not a video", "application/x-junk"),
-                (4, "video", MM.build_minimal_mp4(8, 8, [5, 5]),
-                 "video/mp4")]
-        media = _media_df(spark, rows)
-        return MM.decode_video_frames(media)
-
-    q["multimodal_h264_frames"] = multimodal_h264_frames
-
-    def multimodal_h264_pframes(spark, sf_dir):
-        """H.264 P-frame (inter) decode through the Spark video
-        surface (operators/h264.py round 8: MV prediction,
-        quarter-pel MC, P_Skip, every P partition shape, inter
-        deblocking bS): an IDR + two P frames of a moving pattern,
-        delivered BOTH as an MP4 avc1 track (stateful sample-order
-        decode, one sample per access unit) and as the raw Annex B
-        stream — both must produce the same three frames. The whole
-        pipeline is deterministic integer math, so the oracle pins
-        the per-frame channel means as exact constants (golden;
-        bit-exactness against the encoder's embedded reconstruction
-        is asserted independently in tests/test_h264.py)."""
-        rows = _h264_pframes_rows()
-        media = _media_df(spark, rows)
-        return MM.decode_video_frames(media)
-
-    q["multimodal_h264_pframes"] = multimodal_h264_pframes
-
-    def _phash_fixture(spark):
-        """Four images + junk: a smooth radial-gradient PNG, the
-        SAME pixels as raw P6 PPM (format-independent hash), a
-        brightness-shifted copy (near-dup), an unrelated noise image
-        (far), and an undecodable payload (NULLs)."""
-        import numpy as np
-        yy, xx = np.mgrid[0:40, 0:50]
-        r2 = ((yy - 20.0) ** 2 / 400 + (xx - 25.0) ** 2 / 625)
-        img = np.stack([np.clip(255 - 180 * r2, 0, 255),
-                        np.clip(90 + 120 * np.exp(-r2 * 2), 0, 255),
-                        np.clip(40 + 150 * r2, 0, 255)],
-                       -1).astype(np.uint8)
-        bright = np.clip(img.astype(int) + 12, 0,
-                         255).astype(np.uint8)
-        rng = np.random.default_rng(9)
-        other = rng.integers(0, 256, img.shape).astype(np.uint8)
-        ppm = b"P6\n50 40\n255\n" + img.tobytes()
-        rows = [(1, "image", MM.encode_png(img), "image/png"),
-                (2, "image", ppm, "image/x-portable-pixmap"),
-                (3, "image", MM.encode_png(bright), "image/png"),
-                (4, "image", MM.encode_png(other), "image/png"),
-                (5, "image", b"junk", "application/x-junk")]
-        return _media_df(spark, rows)
-
-    def multimodal_image_phash(spark, sf_dir):
-        """Perceptual image hash (multimodal dedup, round 8): decode
-        → integer luma → 32x32 nearest resize → FIXED-POINT integer
-        DCT-II (hardcoded cosine table — no libm in the lineage) →
-        63-bit low-frequency median threshold. Exact integer math
-        end-to-end, so the golden constants hold on any platform;
-        robustness/discrimination properties are pytest-asserted."""
-        return MM.image_phash(_phash_fixture(spark))
-
-    q["multimodal_image_phash"] = multimodal_image_phash
-
-    def dedup_image_phash_pairs(spark, sf_dir):
-        """Near-duplicate image pairs: pHash signatures through the
-        generic banded Hamming join (dedup.hamming_pairs — banding
-        guarantees recall below ``bands``, candidates verify via
-        bit_count(xor), never all-pairs). The identical-pixels pair
-        lands at 0, the brightness-shifted copy at 2, the unrelated
-        image (hamming 30) is excluded."""
-        return MM.phash_pairs(_phash_fixture(spark), max_hamming=6)
-
-    q["dedup_image_phash_pairs"] = dedup_image_phash_pairs
-
-    def _audio_fixture(spark):
-        """Three PCM16 WAVs: a six-tone melody, the SAME melody
-        delayed by 4096 samples with mild noise (a re-encoded
-        excerpt, the containment case), and unrelated noise — plus
-        junk (no landmarks)."""
-        import struct
-
-        import numpy as np
-
-        def wav_of(sig16, rate=8000):
-            data = sig16.astype("<i2").tobytes()
-            fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2,
-                              2, 16)
-            body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data)
-            return (b"RIFF" + struct.pack("<I", 4 + len(body))
-                    + b"WAVE" + body)
-
-        rng = np.random.default_rng(5)
-        t = np.arange(16384) / 8000.0
-        sig = np.concatenate(
-            [np.sin(2 * np.pi * f * t[:2730]) * 9000
-             for f in (440, 660, 550, 880, 495, 770)])[:16384]
-        delayed = np.concatenate([np.zeros(4096), sig])[:20480]
-        delayed = delayed + rng.normal(0, 50, len(delayed))
-        rows = [(1, "audio", wav_of(sig), "audio/wav"),
-                (2, "audio",
-                 wav_of(np.clip(delayed, -32768, 32767)),
-                 "audio/wav"),
-                (3, "audio",
-                 wav_of(rng.normal(0, 8000, 16384)
-                        .clip(-32768, 32767)), "audio/wav"),
-                (4, "audio", b"junk", "application/x-junk")]
-        return _media_df(spark, rows)
-
-    def multimodal_audio_fingerprint(spark, sf_dir):
-        """Landmark audio fingerprints (peak-constellation hashing,
-        Wang 2003): STFT peaks → (f1, f2, dt) hashes, one row per
-        landmark — summarized per clip as exact landmark/distinct-fp
-        counts (golden constants; the matching behavior itself is
-        the dedup_audio_match entry)."""
-        fps = MM.audio_fingerprint(_audio_fixture(spark))
-        return (fps.groupBy("media_id")
-                .agg(F.count(F.lit(1)).alias("n_landmarks"),
-                     F.count_distinct("fp").alias("n_distinct_fp")))
-
-    q["multimodal_audio_fingerprint"] = multimodal_audio_fingerprint
-
-    def dedup_audio_match(spark, sf_dir):
-        """Audio near-dup/containment matching: fingerprints joined
-        on the landmark hash, then the time-offset histogram — the
-        delayed copy aligns EVERY landmark of the original at one
-        constant offset (−16 frames = 4096 samples / 256 hop), the
-        unrelated clip never clears min_matches. One equi-join + one
-        groupBy; never all-pairs."""
-        return MM.audio_match_pairs(_audio_fixture(spark),
-                                    min_matches=5)
-
-    q["dedup_audio_match"] = dedup_audio_match
-
-    def dedup_video_match(spark, sf_dir):
-        """Video near-dup/excerpt detection — the multimodal dedup
-        triad's third leg (text SimHash / image pHash / audio
-        landmarks / video = per-frame pHash + offset histogram):
-        three H.264 streams (a 6-frame textured pan, a 4-frame
-        re-encode of its frames 2..5 — the excerpt case — and
-        unrelated noise, plus junk). Frame pairs within the Hamming
-        threshold come from the banded join (lossy re-encodes land a
-        few bits apart, so exact equality is the wrong key); the
-        excerpt aligns ALL four frames at offset 2; noise never
-        pairs. Golden single-row oracle; separation margins are
-        pytest-asserted."""
-        media = _media_df(spark, _video_match_rows())
-        return MM.video_match_pairs(media, max_hamming=8,
-                                    min_matches=2, bands=8)
-
-    q["dedup_video_match"] = dedup_video_match
-
-    def multimodal_resize_any(spark, sf_dir):
-        """REAL format-agnostic resize to 2x2 across ALL the really-
-        decoded formats in one frame: a PNG (sampled source pixels
-        known exactly), a baseline JPEG of flat 8x8 tiles (flat
-        tiles decode exactly, nearest-neighbor samples one pixel per
-        tile), a GIF (identity 2x2), and an invalid payload ->
-        NULLs. Output re-encodes as PNG; n_bytes/payload dropped so
-        the oracle pins only decoder-derivable constants."""
-        import numpy as np
-        png = MM.encode_png(np.array(
-            [[(0, 0, 0), (9, 9, 9), (20, 40, 60), (7, 7, 7)],
-             [(100, 0, 0), (8, 8, 8), (200, 0, 0), (6, 6, 6)]],
-            np.uint8), filters=[2, 4])
-        tiles = np.zeros((16, 16), np.uint8)
-        tiles[:8, 8:], tiles[8:, :8], tiles[8:, 8:] = 50, 100, 250
-        jpg = MM.encode_jpeg_baseline(tiles)
-        gif = MM.encode_gif(
-            [np.array([[0, 1], [2, 3]])],
-            [(0, 0, 0), (4, 8, 12), (16, 20, 24), (40, 44, 48)])
-        rows = [
-            (1, "image", png, "image/png"),
-            (2, "image", jpg, "image/jpeg"),
-            (3, "image", gif, "image/gif"),
-            (4, "image", b"not an image", "text/plain"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.resize_image(media, 2, 2).drop("payload",
-                                                 "n_bytes")
-
-    q["multimodal_resize_any"] = multimodal_resize_any
-
-    def multimodal_wav_features(spark, sf_dir):
-        """REAL spectral features (numpy STFT) on signals whose
-        spectra are single exact DFT bins: a Nyquist alternation
-        (±1000 at 8 kHz -> one spike at 4000 Hz, rms exactly 1000)
-        and a period-4 square (±500 -> 2000 Hz spike, rms 500 —
-        stereo with identical channels, so the channel mean is the
-        same signal). Dominant frequency == spectral centroid ==
-        the bin frequency, all hand-derivable constants. A clip
-        shorter than one frame and an invalid payload yield NULLs."""
-        nyq = [(1000,) if i % 2 == 0 else (-1000,)
-               for i in range(512)]
-        sq = [((500, 500) if i % 4 < 2 else (-500, -500))
-              for i in range(256)]
-        rows = [
-            (1, "audio", _wav(1, 8000, nyq), "audio/wav"),
-            (2, "audio", _wav(2, 8000, sq), "audio/wav"),
-            (3, "audio", _wav(1, 8000, [(100,)] * 64), "audio/wav"),
-            (4, "audio", b"RIFFxxxx", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.wav_features(media, frame=256, hop=128)
-
-    q["multimodal_wav_features"] = multimodal_wav_features
-
-    def multimodal_ppm_resize(spark, sf_dir):
-        """REAL nearest-neighbor resize to 2x2 on hand-constructed
-        P6 images — sampled source pixels (y*h//2, x*w//2) are known
-        exactly, so the oracle is constants."""
-        rows = [
-            # 4x2: sampled pixels are (0,0) (0,2) (1,0) (1,2)
-            (1, "image", _ppm(4, 2, [
-                (0, 0, 0), (9, 9, 9), (20, 40, 60), (7, 7, 7),
-                (100, 0, 0), (8, 8, 8), (200, 0, 0), (6, 6, 6)]),
-             "image/ppm"),
-            # 2x2 → identity sampling
-            (2, "image", _ppm(2, 2, [(0, 0, 0), (4, 8, 12),
-                                     (16, 20, 24), (40, 44, 48)]),
-             "image/ppm"),
-            (3, "image", b"not a ppm", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.resize_ppm(media, 2, 2).drop("payload")
-
-    q["multimodal_ppm_resize"] = multimodal_ppm_resize
-
-    def multimodal_wav_decode(spark, sf_dir):
-        rows = [
-            (1, "audio", _wav(1, 8000, [(100,), (-100,), (100,),
-                                        (-100,)]), "audio/wav"),
-            (2, "audio", _wav(2, 44100, [(1000, -1000),
-                                         (1000, -1000)]), "audio/wav"),
-            (3, "audio", b"RIFFxxxx", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_wav_meta(media)
-
-    q["multimodal_wav_decode"] = multimodal_wav_decode
-
-    def multimodal_audio_meta(spark, sf_dir):
-        """Format-dispatched audio metadata on spec-correct
-        fixtures: WAV (PCM sample scan), FLAC (STREAMINFO bits),
-        MPEG-1 Layer III (frame walk, behind an ID3v2 tag), junk →
-        NULLs. Oracle is the hand-derived constants."""
-        rows = [
-            (1, "audio", _wav(1, 8000, [(100,), (-100,), (100,),
-                                        (-100,)]), "audio/wav"),
-            (2, "audio", MM.build_flac_header(2, 44100, 16, 441000),
-             "audio/flac"),
-            (3, "audio", MM.build_mp3(10, id3_pad=32),
-             "audio/mpeg"),
-            (4, "audio", b"not audio", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.decode_audio_meta(media)
-
-    q["multimodal_audio_meta"] = multimodal_audio_meta
-
-    def multimodal_wav_resample(spark, sf_dir):
-        """REAL linear resample to 8 kHz on hand-built PCM16 audio:
-        equal rate is identity, 4 kHz upsamples with midpoint
-        interpolation, a clip too short for one output frame and an
-        invalid payload both yield NULLs — oracle is constants."""
-        rows = [
-            (1, "audio", _wav(1, 8000, [(0,), (100,), (200,),
-                                        (300,)]), "audio/wav"),
-            (2, "audio", _wav(1, 4000, [(0,), (100,)]), "audio/wav"),
-            (3, "audio", _wav(2, 44100, [(1000, -1000),
-                                         (1000, -1000)]),
-             "audio/wav"),
-            (4, "audio", b"RIFFxxxx", "application/octet-stream"),
-        ]
-        media = _media_df(spark, rows)
-        return MM.resample_wav(media, 8000).drop("payload")
-
-    q["multimodal_wav_resample"] = multimodal_wav_resample
-
-    # --- general analytics (TPC-H style; broadcast-join shape)
-    def tpch_q1ish(spark, sf_dir):
-        # money/quantity columns carry ≤ 2 decimals, so the 1e6-
-        # scaled long accumulation (functions/stable.py scaled_dsum)
-        # is EXACT here and ~3× cheaper than the decimal(38,18) fold
-        # it replaces (the r5 perf-weak cell); still associative and
-        # cross-engine bit-identical
-        li = load(spark, sf_dir, "lineitem")
-        return (
-            li.groupBy("l_returnflag", "l_linestatus")
-            .agg((F.round(SSD(F.col("l_quantity")), 4)
-                  + F.lit(0.0)).alias("sum_qty"),
-                 (F.round(SSD(F.col("l_extendedprice")), 2)
-                  + F.lit(0.0)).alias("sum_price"),
-                 (F.round(SSD(F.col("l_discount"))
-                          / F.count(F.lit(1)), 6)
-                  + F.lit(0.0)).alias("avg_disc"),
-                 F.count(F.lit(1)).alias("count_order"))
-        )
-
-    q["tpch_q1ish"] = tpch_q1ish
-
-    def tpch_join_revenue(spark, sf_dir):
-        # Scale shape: orders/customer are fact-sized at 100 TB, so no
-        # forced broadcast (AQE picks broadcast when a side is small).
-        # Pre-aggregating lineitem by orderkey shrinks the join's left
-        # side 4:1 and its hash partitioning is reused by the join —
-        # no extra shuffle versus joining raw lineitem.
-        from siridb_server_spark.functions.stable import scaled_term
-
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        # the inner per-order partial is a 1e6-scaled LONG sum; the
-        # outer sum of partials equals the oracle's flat scaled sum
-        # exactly (long addition is associative) at ~3× less cost
-        # than the decimal(38,18) fold it replaces
-        pre = (li.select("l_orderkey",
-                         scaled_term(rev, 6).alias("rev_s"))
-               .groupBy("l_orderkey")
-               .agg(F.sum("rev_s").alias("rev_s"),
-                    F.count(F.lit(1)).alias("n")))
-        o2 = orders.select("o_orderkey", "o_custkey", "o_orderpriority")
-        c2 = cust.select("c_custkey")
-        return (
-            pre.join(o2, pre.l_orderkey == o2.o_orderkey)
-            .join(c2, o2.o_custkey == c2.c_custkey)
-            .groupBy("o_orderpriority")
-            .agg((F.round(F.sum("rev_s") / F.lit(1e6), 2)
-                  + F.lit(0.0)).alias("revenue"),
-                 F.sum("n").alias("n_items"))
-        )
-
-    q["tpch_join_revenue"] = tpch_join_revenue
-
-    def events_json_props(spark, sf_dir):
-        ev = load(spark, sf_dir, "events")
-        return (
-            ev.select(F.col("event_type"),
-                      F.get_json_object("props", "$.k").cast("long")
-                      .alias("k"))
-            .groupBy("event_type")
-            .agg(F.sum("k").alias("sum_k"),
-                 F.count(F.lit(1)).alias("n"))
-        )
-
-    q["events_json_props"] = events_json_props
-
-    def tpch_q6ish(spark, sf_dir):
-        # date-band + value-band filtered revenue: every predicate
-        # reaches the parquet scan (PushedFilters on l_shipdate
-        # min/max + discount/quantity), so at 100 TB only the
-        # matching row groups are read
-        li = load(spark, sf_dir, "lineitem")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1997-01-01").cast("timestamp_ntz")
-        return (
-            li.where((F.col("l_shipdate") >= a)
-                     & (F.col("l_shipdate") < b)
-                     & (F.col("l_discount") >= 0.03)
-                     & (F.col("l_discount") <= 0.07)
-                     & (F.col("l_quantity") < 24))
-            .agg((F.round(SSD(F.col("l_extendedprice")
-                              * F.col("l_discount")), 4)
-                  + F.lit(0.0)).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items"))
-        )
-
-    q["tpch_q6ish"] = tpch_q6ish
-
-    def tpch_monthly_revenue(spark, sf_dir):
-        orders = load(spark, sf_dir, "orders")
-        return (
-            orders.groupBy(F.date_format("o_orderdate", "yyyy-MM")
-                           .alias("month"))
-            .agg((F.round(SSD(F.col("o_totalprice")), 2)
-                  + F.lit(0.0)).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_orders"))
-        )
-
-    q["tpch_monthly_revenue"] = tpch_monthly_revenue
-
-    def tpch_q3ish(spark, sf_dir):
-        """q3 shape: top-10 orders by pre-ship revenue for one market
-        segment — date predicates push to both fact scans, the
-        customer dim broadcasts, and the final top-k is a
-        TakeOrdered on the rounded revenue (cross-engine tie-safe)."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        cut = F.lit("1998-01-01").cast("timestamp_ntz")
-        c2 = cust.where(F.col("c_mktsegment") == "BUILDING") \
-            .select("c_custkey")
-        o2 = (orders.where(F.col("o_orderdate") < cut)
-              .select("o_orderkey", "o_custkey", "o_orderdate"))
-        l2 = (li.where(F.col("l_shipdate") >= cut)
-              .select("l_orderkey",
-                      (F.col("l_extendedprice")
-                       * (1 - F.col("l_discount"))).alias("rev")))
-        return (
-            l2.join(o2, l2.l_orderkey == o2.o_orderkey)
-            .join(F.broadcast(c2), o2.o_custkey == c2.c_custkey)
-            .groupBy("o_orderkey",
-                     F.date_format("o_orderdate", "yyyy-MM-dd")
-                     .alias("orderdate"))
-            .agg((F.round(SSD(F.col("rev")), 2) + F.lit(0.0))
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-            .limit(10)
-        )
-
-    q["tpch_q3ish"] = tpch_q3ish
-
-    def tpch_q5ish(spark, sf_dir):
-        """q5 shape — regional supplier revenue: the classic
-        dimension BROADCAST CHAIN. region filters nation, nation
-        keys supplier and customer, and only the lineitem⋈orders
-        fact join shuffles; the c_nationkey = s_nationkey local-
-        supplier condition rides the join, never a second shuffle.
-        region/nation/supplier are broadcast explicitly (tiny at any
-        scale); customer/orders stay AQE-planned (fact-sized at
-        100 TB). Revenue accumulates as an exact 1e6-scaled long sum
-        (functions/stable.py scaled_dsum)."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        supp = load(spark, sf_dir, "supplier")
-        nat = load(spark, sf_dir, "nation")
-        reg = load(spark, sf_dir, "region")
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        nr = (nat.join(F.broadcast(
-            reg.where(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"))
-            .select("n_nationkey", "n_name"))
-        s2 = (supp.join(F.broadcast(nr),
-                        F.col("s_nationkey") == F.col("n_nationkey"))
-              .select("s_suppkey", "s_nationkey", "n_name"))
-        return (
-            li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(s2),
-                  (F.col("l_suppkey") == F.col("s_suppkey"))
-                  & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .groupBy("n_name")
-            .agg((F.round(SSD(rev), 2) + F.lit(0.0))
-                 .alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items"))
-        )
-
-    q["tpch_q5ish"] = tpch_q5ish
-
-    def tpch_q14ish(spark, sf_dir):
-        """q14 shape — promotion revenue share for one ship-month:
-        lineitem⋈part on partkey (part broadcasts while it fits;
-        the date band pushes into the fact scan), then one
-        conditional-vs-total aggregate. Both sums accumulate as
-        exact scaled longs; the share divides the two exact values,
-        so the 6-decimal rounding is partition-order-free."""
-        li = load(spark, sf_dir, "lineitem")
-        part = load(spark, sf_dir, "part")
-        a = F.lit("1996-03-01").cast("timestamp_ntz")
-        b = F.lit("1996-04-01").cast("timestamp_ntz")
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        promo = F.when(F.col("p_type") == "PROMO", rev) \
-            .otherwise(F.lit(0.0))
-        return (
-            li.where((F.col("l_shipdate") >= a)
-                     & (F.col("l_shipdate") < b))
-            .join(F.broadcast(part.select("p_partkey", "p_type")),
-                  F.col("l_partkey") == F.col("p_partkey"))
-            .agg((F.round(F.lit(100.0) * SSD(promo) / SSD(rev), 6)
-                  + F.lit(0.0)).alias("promo_pct"),
-                 (F.round(SSD(rev), 2) + F.lit(0.0))
-                 .alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items"))
-        )
-
-    q["tpch_q14ish"] = tpch_q14ish
-
-    def tpch_q4ish(spark, sf_dir):
-        """q4 shape — order-priority checking via a SEMI join:
-        orders in one quarter that have at least one line shipped
-        more than 90 days after the order date. The EXISTS compiles
-        to LeftSemi, so lineitem rows never multiply the output and
-        the date predicates push to both scans."""
-        orders = load(spark, sf_dir, "orders")
-        li = load(spark, sf_dir, "lineitem")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1996-04-01").cast("timestamp_ntz")
-        o2 = orders.where((F.col("o_orderdate") >= a)
-                          & (F.col("o_orderdate") < b))
-        late = (o2.join(
-            li.select("l_orderkey", "l_shipdate"),
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate")
-               > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")),
-            "leftsemi"))
-        return (late.groupBy("o_orderpriority")
-                .agg(F.count(F.lit(1)).alias("order_count")))
-
-    q["tpch_q4ish"] = tpch_q4ish
-
-    def tpch_q12ish(spark, sf_dir):
-        """q12 shape — CASE pivot over a fact join: per return
-        flag, how many 1996-shipped lines belong to high- vs
-        low-priority orders. Counts are exact integers; the pivot
-        is two conditional sums in one aggregate pass."""
-        orders = load(spark, sf_dir, "orders")
-        li = load(spark, sf_dir, "lineitem")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1997-01-01").cast("timestamp_ntz")
-        hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        return (
-            li.where((F.col("l_shipdate") >= a)
-                     & (F.col("l_shipdate") < b))
-            .select("l_orderkey", "l_returnflag")
-            .join(orders.select("o_orderkey", "o_orderpriority"),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_returnflag")
-            .agg(F.sum(F.when(hi, 1).otherwise(0))
-                 .alias("high_line_count"),
-                 F.sum(F.when(hi, 0).otherwise(1))
-                 .alias("low_line_count")))
-
-    q["tpch_q12ish"] = tpch_q12ish
-
-    def tpch_q16ish(spark, sf_dir):
-        """q16 shape — ANTI join: brands of parts that moved no
-        volume in 1996. The NOT EXISTS compiles to LeftAnti against
-        the distinct moved-part set (aggregated BEFORE the join so
-        the anti probe is part-sized, not lineitem-sized)."""
-        part = load(spark, sf_dir, "part")
-        li = load(spark, sf_dir, "lineitem")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1997-01-01").cast("timestamp_ntz")
-        moved = (li.where((F.col("l_shipdate") >= a)
-                          & (F.col("l_shipdate") < b))
-                 .select("l_partkey").distinct())
-        return (part.join(moved,
-                          F.col("p_partkey") == F.col("l_partkey"),
-                          "leftanti")
-                .groupBy("p_brand")
-                .agg(F.count(F.lit(1)).alias("idle_parts"))
-                .orderBy(F.desc("idle_parts"), F.asc("p_brand"))
-                .limit(10))
-
-    q["tpch_q16ish"] = tpch_q16ish
-
-    def tpch_q18ish(spark, sf_dir):
-        """q18 shape — HAVING over a fact pre-aggregate: orders
-        whose total quantity exceeds 150, decorated with customer
-        name. The quantity rollup happens on lineitem FIRST (the
-        having filter kills ~all groups before any join), then the
-        surviving handful of orders join orders+customer."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        big = (li.groupBy("l_orderkey")
-               .agg((F.round(SSD(F.col("l_quantity")), 4)
-                     + F.lit(0.0)).alias("sum_qty"))
-               .where(F.col("sum_qty") > 150))
-        return (big.join(orders,
-                         F.col("l_orderkey") == F.col("o_orderkey"))
-                .join(cust,
-                      F.col("o_custkey") == F.col("c_custkey"))
-                .select("c_name", "o_orderkey",
-                        F.date_format("o_orderdate", "yyyy-MM-dd")
-                        .alias("orderdate"),
-                        (F.round(F.col("o_totalprice"), 2)
-                         + F.lit(0.0)).alias("totalprice"),
-                        "sum_qty")
-                .orderBy(F.desc("sum_qty"), F.asc("o_orderkey"))
-                .limit(20))
-
-    q["tpch_q18ish"] = tpch_q18ish
-
-    def tpch_q19ish(spark, sf_dir):
-        """q19 shape — OR-of-ANDs across a join: three
-        (brand, size-band, quantity-band) disjuncts. The part side
-        prunes to the three brands BEFORE the join (the disjunction
-        of p_brand predicates pushes to the part scan) and
-        broadcasts; the mixed predicate rides the join condition."""
-        li = load(spark, sf_dir, "lineitem")
-        part = load(spark, sf_dir, "part")
-        bands = [("Brand#12", 1, 15, 1, 11),
-                 ("Brand#23", 1, 25, 10, 20),
-                 ("Brand#34", 1, 35, 20, 30)]
-        disj = None
-        for brand, s0, s1, q0, q1 in bands:
-            c = ((F.col("p_brand") == brand)
-                 & F.col("p_size").between(s0, s1)
-                 & F.col("l_quantity").between(q0, q1))
-            disj = c if disj is None else (disj | c)
-        p2 = part.where(
-            F.col("p_brand").isin([b[0] for b in bands])) \
-            .select("p_partkey", "p_brand", "p_size")
-        return (
-            li.select("l_partkey", "l_quantity", "l_extendedprice",
-                      "l_discount")
-            .join(F.broadcast(p2),
-                  (F.col("l_partkey") == F.col("p_partkey")) & disj)
-            .agg((F.round(SSD(F.col("l_extendedprice")
-                              * (1 - F.col("l_discount"))), 2)
-                  + F.lit(0.0)).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-    q["tpch_q19ish"] = tpch_q19ish
-
-    def tpch_q10ish(spark, sf_dir):
-        """q10 shape — returned-item revenue by customer, top 20:
-        the date band pushes to the orders scan, the returnflag
-        predicate to the lineitem scan, the customer dim broadcasts,
-        and the top-k is a TakeOrdered on the rounded revenue."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        a = F.lit("1996-07-01").cast("timestamp_ntz")
-        b = F.lit("1996-10-01").cast("timestamp_ntz")
-        o2 = (orders.where((F.col("o_orderdate") >= a)
-                           & (F.col("o_orderdate") < b))
-              .select("o_orderkey", "o_custkey"))
-        l2 = (li.where(F.col("l_returnflag") == "R")
-              .select("l_orderkey",
-                      (F.col("l_extendedprice")
-                       * (1 - F.col("l_discount"))).alias("rev")))
-        return (
-            l2.join(o2, l2.l_orderkey == o2.o_orderkey)
-            .join(F.broadcast(cust.select("c_custkey", "c_name")),
-                  o2.o_custkey == F.col("c_custkey"))
-            .groupBy("c_custkey", "c_name")
-            .agg((F.round(SSD(F.col("rev")), 2) + F.lit(0.0))
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-            .limit(20))
-
-    q["tpch_q10ish"] = tpch_q10ish
-
-    def tpch_q13ish(spark, sf_dir):
-        """q13 shape — customer order-count distribution: a LEFT
-        join keeps zero-order customers (the part a plain groupBy
-        silently drops), then a counting aggregate over the counts.
-        All integer math — exact on any engine."""
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        o2 = (orders.where(F.col("o_orderpriority") != "1-URGENT")
-              .select("o_custkey", "o_orderkey"))
-        per = (cust.select("c_custkey")
-               .join(o2, F.col("c_custkey") == F.col("o_custkey"),
-                     "left")
-               .groupBy("c_custkey")
-               .agg(F.count("o_orderkey").alias("c_count")))
-        return (per.groupBy("c_count")
-                .agg(F.count(F.lit(1)).alias("custdist"))
-                .orderBy(F.desc("custdist"), F.desc("c_count")))
-
-    q["tpch_q13ish"] = tpch_q13ish
-
-    def tpch_q17ish(spark, sf_dir):
-        """q17 shape — small-quantity-order revenue: the classic
-        correlated scalar subquery (per-part average quantity)
-        decorrelated into a per-part aggregate broadcast back onto
-        the fact. Quantities are integral, so the membership test
-        ``l_quantity < 0.2 · avg`` runs as EXACT integer math
-        (5·q·cnt < sum) — no float average can flip a row between
-        engines."""
-        li = load(spark, sf_dir, "lineitem")
-        part = load(spark, sf_dir, "part")
-        p2 = part.where(F.col("p_brand") == "Brand#11") \
-            .select("p_partkey")
-        l2 = (li.join(F.broadcast(p2),
-                      F.col("l_partkey") == F.col("p_partkey"))
-              .select("l_partkey",
-                      # floor on both sides: engine-identical
-                      # quantization (Spark cast truncates, DuckDB
-                      # CAST rounds)
-                      F.floor(F.col("l_quantity")).cast("long")
-                      .alias("qi"),
-                      "l_extendedprice"))
-        per_part = (l2.groupBy(F.col("l_partkey").alias("pk"))
-                    .agg(F.sum("qi").alias("qsum"),
-                         F.count(F.lit(1)).alias("qcnt")))
-        small = (l2.join(F.broadcast(per_part),
-                         F.col("l_partkey") == F.col("pk"))
-                 .where(F.col("qi") * 5 * F.col("qcnt")
-                        < F.col("qsum")))
-        return small.agg(
-            (F.round(SSD(F.col("l_extendedprice")) / 7.0, 2)
-             + F.lit(0.0)).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_items"))
-
-    q["tpch_q17ish"] = tpch_q17ish
-
-    def tpch_q22ish(spark, sf_dir):
-        """q22 shape — dormant above-average customers per nation:
-        the global average-balance threshold and an ANTI join
-        against the urgent-order customers (in this synthetic data
-        every customer has SOME order; "no urgent order" keeps the
-        anti join non-trivial). Balances carry 2 decimals, so they quantize
-        exactly to cents and the threshold test runs as exact
-        integer math (cents·n > cents_sum) — engine-portable."""
-        from siridb_server_spark.functions.stable import scaled_term
-
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        c2 = cust.select("c_custkey", "c_nationkey",
-                         scaled_term(F.col("c_acctbal"), 2)
-                         .alias("ab_cents"))
-        pos = c2.where(F.col("ab_cents") > 0)
-        thr = pos.agg(F.sum("ab_cents").alias("cents_sum"),
-                      F.count(F.lit(1)).alias("n_pos"))
-        rich = (c2.crossJoin(F.broadcast(thr))
-                .where(F.col("ab_cents") * F.col("n_pos")
-                       > F.col("cents_sum")))
-        dormant = rich.join(
-            orders.where(F.col("o_orderpriority") == "1-URGENT")
-            .select(F.col("o_custkey").alias("c_custkey")),
-            "c_custkey", "left_anti")
-        return (dormant.groupBy(F.col("c_nationkey").alias("cntry"))
-                .agg(F.count(F.lit(1)).alias("numcust"),
-                     (F.sum("ab_cents") / F.lit(100.0))
-                     .alias("totacctbal"))
-                .orderBy("cntry"))
-
-    q["tpch_q22ish"] = tpch_q22ish
-
-    def tpch_q15ish(spark, sf_dir):
-        """q15 shape — top supplier(s) by quarterly revenue: the
-        revenue-equals-max pattern (a HAVING against a 1-row
-        aggregate broadcast), not a top-k — ties all surface.
-        Equality on the rounded scaled-long revenue is exact: both
-        sides derive from the identical integer sum."""
-        li = load(spark, sf_dir, "lineitem")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1996-04-01").cast("timestamp_ntz")
-        rev = (li.where((F.col("l_shipdate") >= a)
-                        & (F.col("l_shipdate") < b))
-               .groupBy("l_suppkey")
-               .agg((F.round(SSD(F.col("l_extendedprice")
-                                 * (1 - F.col("l_discount"))), 2)
-                     + F.lit(0.0)).alias("total_revenue")))
-        mx = rev.agg(F.max("total_revenue").alias("mx"))
-        return (rev.join(F.broadcast(mx),
-                         F.col("total_revenue") == F.col("mx"))
-                .select("l_suppkey", "total_revenue")
-                .orderBy("l_suppkey"))
-
-    q["tpch_q15ish"] = tpch_q15ish
-
-    def tpch_q7ish(spark, sf_dir):
-        """q7 shape — volume shipping between two nations, both
-        directions: the two tiny nation dims broadcast onto supplier
-        and (through orders) customer; only the fact joins shuffle.
-        Group by (supp_nation, cust_nation, ship year); exact
-        1e6-scaled long revenue sum."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        supp = load(spark, sf_dir, "supplier")
-        nat = load(spark, sf_dir, "nation")
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        n1 = nat.select(F.col("n_nationkey").alias("snk"),
-                        F.col("n_name").alias("supp_nation"))
-        n2 = nat.select(F.col("n_nationkey").alias("cnk"),
-                        F.col("n_name").alias("cust_nation"))
-        pair_ok = (
-            ((F.col("supp_nation") == "NATION_1")
-             & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2")
-               & (F.col("cust_nation") == "NATION_1")))
-        return (
-            li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(supp),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .join(F.broadcast(n1),
-                  F.col("s_nationkey") == F.col("snk"))
-            .join(F.broadcast(n2),
-                  F.col("c_nationkey") == F.col("cnk"))
-            .where(pair_ok)
-            .groupBy("supp_nation", "cust_nation",
-                     F.year("l_shipdate").cast("long").alias("l_year"))
-            .agg((F.round(SSD(rev), 2) + F.lit(0.0))
-                 .alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-    q["tpch_q7ish"] = tpch_q7ish
-
-    def tpch_q8ish(spark, sf_dir):
-        """q8 shape — national market share: ECONOMY-part order
-        volume into ASIA customers per year, with NATION_1's
-        supplier share. The share is a RATIO OF THE EXACT 1e6-scaled
-        LONG SUMS (int_ppm — pure integer division), so the hashed
-        contract carries no float ratio; part/supplier/nation/region
-        broadcast, the fact joins shuffle once each."""
-        from siridb_server_spark.functions.stable import (int_ppm,
-                                                          scaled_term)
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        cust = load(spark, sf_dir, "customer")
-        supp = load(spark, sf_dir, "supplier")
-        nat = load(spark, sf_dir, "nation")
-        reg = load(spark, sf_dir, "region")
-        part = load(spark, sf_dir, "part")
-        rev_q = scaled_term(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")))
-        asia_c = (cust.join(
-            F.broadcast(nat.join(F.broadcast(
-                reg.where(F.col("r_name") == "ASIA")),
-                F.col("n_regionkey") == F.col("r_regionkey"))
-                .select("n_nationkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"))
-            .select("c_custkey"))
-        sn = (supp.join(F.broadcast(nat),
-                        F.col("s_nationkey") == F.col("n_nationkey"))
-              .select("s_suppkey",
-                      F.col("n_name").alias("supp_nation")))
-        base = (
-            li.join(F.broadcast(
-                part.where(F.col("p_type") == "ECONOMY")
-                .select("p_partkey")),
-                F.col("l_partkey") == F.col("p_partkey"))
-            .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(asia_c, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(sn),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .select(F.year("o_orderdate").cast("long").alias("o_year"),
-                    rev_q.alias("rev_q"), "supp_nation"))
-        return (base.groupBy("o_year")
-                .agg(F.sum("rev_q").alias("_tot"),
-                     F.sum(F.when(
-                         F.col("supp_nation") == "NATION_1",
-                         F.col("rev_q")).otherwise(0))
-                     .alias("_nat"))
-                .select("o_year",
-                        (F.round(F.col("_tot")
-                                 / F.lit(1000000.0), 2)
-                         + F.lit(0.0)).alias("total_revenue"),
-                        int_ppm(F.col("_nat"), F.col("_tot"))
-                        .alias("mkt_share_ppm")))
-
-    q["tpch_q8ish"] = tpch_q8ish
-
-    def tpch_q9ish(spark, sf_dir):
-        """q9 shape (sans partsupp, which the corpus lacks) — profit
-        on red parts by supplier nation and order year: part filter
-        broadcast onto the fact, supplier→nation broadcast chain,
-        one grouped aggregate. Exact scaled-long revenue."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        supp = load(spark, sf_dir, "supplier")
-        nat = load(spark, sf_dir, "nation")
-        part = load(spark, sf_dir, "part")
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        sn = (supp.join(F.broadcast(nat),
-                        F.col("s_nationkey") == F.col("n_nationkey"))
-              .select("s_suppkey", F.col("n_name").alias("nation")))
-        return (
-            li.join(F.broadcast(
-                part.where(F.col("p_name").like("%red%"))
-                .select("p_partkey")),
-                F.col("l_partkey") == F.col("p_partkey"))
-            .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(sn),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .groupBy("nation", F.year("o_orderdate").cast("long").alias("o_year"))
-            .agg((F.round(SSD(rev), 2) + F.lit(0.0)).alias("profit"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-    q["tpch_q9ish"] = tpch_q9ish
-
-    def _region_suppliers(spark, sf_dir, r_name):
-        """supplier ⋈ nation ⋈ region chain pruned to one region —
-        dims only, always broadcast onto the fact side."""
-        supp = load(spark, sf_dir, "supplier")
-        nat = load(spark, sf_dir, "nation")
-        reg = load(spark, sf_dir, "region")
-        return (supp.join(
-            F.broadcast(nat.join(
-                F.broadcast(reg.where(F.col("r_name") == r_name)),
-                F.col("n_regionkey") == F.col("r_regionkey"))
-                .select("n_nationkey")),
-            F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "s_name"))
-
-    def tpch_q2ish(spark, sf_dir):
-        """q2 shape (partsupp stood in by the lineitem bridge) —
-        minimum-cost supplier per part: the classic correlated MIN
-        subquery, decorrelated into a per-part minimum joined back
-        by EQUALITY so ties all surface. Supply cost is the exact
-        cents-quantized minimum line price per (part, supplier), so
-        the equality probe is pure integer math on both engines.
-        The (part,supplier) cost table is pre-aggregated BEFORE any
-        dim join (fact scanned once); part subset, regional
-        suppliers, and the per-part minimum all broadcast."""
-        from siridb_server_spark.functions.stable import scaled_term
-        li = load(spark, sf_dir, "lineitem")
-        part = load(spark, sf_dir, "part")
-        cost = (li.groupBy("l_partkey", "l_suppkey")
-                .agg(F.min(scaled_term(F.col("l_extendedprice"), 2))
-                     .alias("cost_cents")))
-        pe = (part.where((F.col("p_type") == "PROMO")
-                         & (F.col("p_size") <= 25))
-              .select("p_partkey", "p_brand"))
-        es = _region_suppliers(spark, sf_dir, "EUROPE")
-        c2 = (cost.join(F.broadcast(pe),
-                        F.col("l_partkey") == F.col("p_partkey"))
-              .join(F.broadcast(es),
-                    F.col("l_suppkey") == F.col("s_suppkey")))
-        mn = (c2.groupBy(F.col("p_partkey").alias("pk"))
-              .agg(F.min("cost_cents").alias("min_cents")))
-        return (c2.join(F.broadcast(mn),
-                        (F.col("p_partkey") == F.col("pk"))
-                        & (F.col("cost_cents") == F.col("min_cents")))
-                .select("p_partkey", "p_brand", "s_name",
-                        "cost_cents"))
-
-    q["tpch_q2ish"] = tpch_q2ish
-
-    def tpch_q11ish(spark, sf_dir):
-        """q11 shape — parts whose regional supply value exceeds a
-        fraction of the total: HAVING against a 1-row global
-        aggregate. Values are exact cents-quantized long sums and
-        the share test runs as integer math (value·2000 > total ⟺
-        share > 0.05%) — no float threshold can flip a part between
-        engines. One fact shuffle on l_partkey; the ASIA supplier
-        set and the 1-row total broadcast."""
-        from siridb_server_spark.functions.stable import scaled_term
-        li = load(spark, sf_dir, "lineitem")
-        asup = _region_suppliers(spark, sf_dir, "ASIA") \
-            .select("s_suppkey")
-        val = (li.join(F.broadcast(asup),
-                       F.col("l_suppkey") == F.col("s_suppkey"))
-               .groupBy(F.col("l_partkey").alias("p_partkey"))
-               .agg(F.sum(scaled_term(F.col("l_extendedprice"), 2))
-                    .alias("value_cents")))
-        tot = val.agg(F.sum("value_cents").alias("total_cents"))
-        return (val.crossJoin(F.broadcast(tot))
-                .where(F.col("value_cents") * 2000
-                       > F.col("total_cents"))
-                .select("p_partkey", "value_cents"))
-
-    q["tpch_q11ish"] = tpch_q11ish
-
-    def tpch_q20ish(spark, sf_dir):
-        """q20 shape — suppliers whose 1996 shipments of widget
-        parts dominate their all-time volume for that part
-        (2·qty_96 > qty_all, the availqty>½·shipped test re-based
-        on shipping history): a per-(supplier,part) integer
-        aggregate, an integer-math HAVING, then a distinct semi-join
-        into the regional supplier dim. Quantities are integral so
-        every comparison is exact."""
-        li = load(spark, sf_dir, "lineitem")
-        part = load(spark, sf_dir, "part")
-        pw = part.where(F.col("p_name").like("%widget%")) \
-            .select("p_partkey")
-        a = F.lit("1996-01-01").cast("timestamp_ntz")
-        b = F.lit("1997-01-01").cast("timestamp_ntz")
-        # floor(), not cast("long"): Spark's cast truncates while
-        # DuckDB's CAST AS BIGINT rounds — floor on BOTH sides makes
-        # the quantization rule engine-identical by construction
-        # even if quantities ever stop being integral
-        qi = F.floor(F.col("l_quantity")).cast("long")
-        in96 = (F.col("l_shipdate") >= a) & (F.col("l_shipdate") < b)
-        per = (li.join(F.broadcast(pw),
-                       F.col("l_partkey") == F.col("p_partkey"))
-               .groupBy("l_suppkey", "l_partkey")
-               .agg(F.sum(F.when(in96, qi).otherwise(0))
-                    .alias("qty_96"),
-                    F.sum(qi).alias("qty_all")))
-        hot = (per.where(F.col("qty_96") * 2 > F.col("qty_all"))
-               .select("l_suppkey").distinct())
-        ams = _region_suppliers(spark, sf_dir, "AMERICA")
-        return (hot.join(F.broadcast(ams),
-                         F.col("l_suppkey") == F.col("s_suppkey"))
-                .select("s_suppkey", "s_name"))
-
-    q["tpch_q20ish"] = tpch_q20ish
-
-    def tpch_q21ish(spark, sf_dir):
-        """q21 shape — suppliers who alone held up multi-supplier
-        orders (late = shipped >180 days after the order date; the
-        corpus has no commit/receipt dates). The EXISTS/NOT-EXISTS
-        pair decorrelates into ONE per-order aggregate: an order
-        qualifies iff it has ≥2 distinct suppliers and EXACTLY ONE
-        distinct late supplier — that supplier's late-line count is
-        the original correlated l1 row count. Computed as TWO
-        ordinary aggregates (per (order,supplier) late-line counts,
-        then per-order rollup) instead of two countDistincts in one
-        aggregate: Catalyst executes multi-countDistinct via Expand
-        (3x the shuffle rows) — the pre-aggregate shape measures
-        ~25% faster here and shuffles 3x fewer bytes at 100 TB.
-        Broadcast name join; dates compare exactly."""
-        li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders")
-        supp = load(spark, sf_dir, "supplier")
-        of = (orders.where(F.col("o_orderstatus") == "F")
-              .select("o_orderkey", "o_orderdate"))
-        lo = (li.select("l_orderkey", "l_suppkey", "l_shipdate")
-              .join(of, F.col("l_orderkey") == F.col("o_orderkey"))
-              .select("l_orderkey", "l_suppkey",
-                      F.when(F.col("l_shipdate")
-                             > F.col("o_orderdate")
-                             + F.expr("INTERVAL 180 DAYS"), 1)
-                      .otherwise(0).alias("late")))
-        ps = (lo.groupBy("l_orderkey", "l_suppkey")
-              .agg(F.sum("late").alias("late_lines")))
-        late_sup = F.when(F.col("late_lines") > 0,
-                          F.col("l_suppkey"))
-        po = (ps.groupBy("l_orderkey")
-              .agg(F.count(F.lit(1)).alias("n_supp"),
-                   F.count(late_sup).alias("n_late_supp"),
-                   F.max(late_sup).alias("late_supp"),
-                   F.sum("late_lines").alias("n_late_lines")))
-        return (po.where((F.col("n_supp") >= 2)
-                         & (F.col("n_late_supp") == 1))
-                .join(F.broadcast(
-                    supp.select("s_suppkey", "s_name")),
-                    F.col("late_supp") == F.col("s_suppkey"))
-                .groupBy("s_name")
-                .agg(F.sum("n_late_lines").alias("numwait"))
-                .orderBy(F.desc("numwait"), F.asc("s_name"))
-                .limit(20))
-
-    q["tpch_q21ish"] = tpch_q21ish
-
-    def text_quality_score(spark, sf_dir):
-        """Hashed contract = (doc_id, z_micro, keep): the logit's
-        lineage is only correctly-rounded IEEE ops, so the quantized
-        value is engine-identical; the sigmoid score_micro is
-        transcendental and pytest-verified instead of hashed."""
-        return TX.quality_score_linear(
-            load(spark, sf_dir, "documents")) \
-            .select("doc_id", "z_micro", "keep")
-
-    q["text_quality_score"] = text_quality_score
-
-    q["ts_moving_avg"] = lambda spark, sf_dir: TSO.moving_avg(
-        _pts_dedup(spark, sf_dir), window=5)
-
-    q["ts_rolling_median"] = lambda spark, sf_dir: \
-        TSO.rolling_median(_pts_dedup(spark, sf_dir), window=7)
-
-    def ts_holt_forecast(spark, sf_dir):
-        """Final Holt (level, trend) per series with ≥2 points and
-        the 5-step-ahead linear forecast off that state."""
-        h = TSO.holt_linear(_pts_dedup(spark, sf_dir))
-        last = (h.groupBy("series")
-                .agg(F.count(F.lit(1)).alias("n_points"),
-                     F.max_by(F.struct("level", "trend"), "ts")
-                     .alias("m"))
-                .where(F.col("n_points") >= 2))
-        return last.select(
-            "series", "n_points",
-            (F.round(F.col("m.level"), 6) + F.lit(0.0))
-            .alias("level"),
-            (F.round(F.col("m.trend"), 6) + F.lit(0.0))
-            .alias("trend"),
-            (F.round(F.col("m.level") + F.lit(5) * F.col("m.trend"),
-                     6) + F.lit(0.0)).alias("forecast_5"))
-
-    q["ts_holt_forecast"] = ts_holt_forecast
-
-    q["ts_winsorize"] = lambda spark, sf_dir: \
-        TSO.winsorize(_pts_dedup(spark, sf_dir), lo=0.05, hi=0.95)
-
-    q["ts_mad"] = lambda spark, sf_dir: \
-        TSO.robust_scale(_pts_dedup(spark, sf_dir))
-
-    q["ts_acf"] = lambda spark, sf_dir: \
-        TSO.acf(_pts_dedup(spark, sf_dir), lags=(1, 2, 3))
-
-    q["ts_linear_trend"] = lambda spark, sf_dir: \
-        TSO.linear_trend(_pts_dedup(spark, sf_dir))
-
-    q["ts_level_shifts"] = lambda spark, sf_dir: \
-        TSO.level_shifts(_pts_dedup(spark, sf_dir),
-                         window=10, threshold=2.0)
-
-    q["ts_value_hist"] = lambda spark, sf_dir: \
-        TSO.value_histogram(_pts_dedup(spark, sf_dir), n_bins=10)
-
-    q["ts_pct_change"] = lambda spark, sf_dir: \
-        TSO.bucket_pct_change(_pts_dedup(spark, sf_dir),
-                              bucket_ns=86_400_000_000_000)
-
-    q["ts_uptime"] = lambda spark, sf_dir: \
-        TSO.uptime_report(_pts_dedup(spark, sf_dir),
-                          heartbeat_ns=86_400_000_000_000)
-
-    def events_gap_stats(spark, sf_dir):
-        """Inter-event time per event type: gaps between consecutive
-        events of the same (user, type), rolled up per type — "how
-        often do users click?" One (user, type) lag window, one
-        counting agg; exact interpolated median."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(F.col("user_id").cast("long")
-                         .alias("user_id"), "event_type",
-                         epoch_ns(ev).alias("ts"),
-                         F.col("event_id").cast("long").alias("eid"))
-        w = Window.partitionBy("user_id", "event_type") \
-            .orderBy("ts", "eid")
-        # seconds, not raw ns: an avg over ~1e14-ns gaps carries a
-        # summation-order float error bigger than any sane rounding
-        # grid; per-gap division happens BEFORE aggregation on both
-        # engines, so the inputs are identical doubles
-        gap = (F.col("ts") - F.lag("ts").over(w)) / F.lit(1e9)
-        gaps = base.select("event_type", gap.alias("gap")) \
-            .where(F.col("gap").isNotNull())
-        return (gaps.groupBy("event_type")
-                .agg(F.count(F.lit(1)).alias("n_gaps"),
-                     # decimal sum / count — order-free double mean
-                     (F.round(SD(F.col("gap"))
-                              / F.count(F.lit(1)), 3)
-                      + F.lit(0.0))
-                     .alias("avg_gap"),
-                     (F.round(F.percentile("gap", F.lit(0.5)), 3)
-                      + F.lit(0.0)).alias("p50_gap")))
-
-    q["events_gap_stats"] = events_gap_stats
-
-    def events_stickiness(spark, sf_dir):
-        """DAU/WAU stickiness: per day, the exact count of active
-        users, the exact rolling-7-day active-user count, and their
-        ratio in exact integer ppm. The rolling distinct is computed
-        by FORWARD-exploding each (day, user) pair into the ≤7
-        window anchors it serves — a bounded 7× fan-out of the
-        per-day DISTINCT pairs (already deduped, so the fan-out is
-        over unique user-days, not raw events), then one
-        countDistinct per anchor. No self-join, no window over an
-        unbounded frame; at extreme scale the approximate path swaps
-        the exact distinct for an HLL sketch per day and merges
-        sketches across the 7 anchors. Trailing anchors beyond the
-        observed day range drop out via the inner join with DAU."""
-        from siridb_server_spark.functions.stable import int_ppm
-        ev = load(spark, sf_dir, "events")
-        dd = ev.select(
-            F.unix_date(F.to_date("ts")).cast("long")
-            .alias("d"), "user_id").distinct()
-        dau = dd.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
-        ex = dd.select(
-            F.explode(F.sequence(F.col("d"), F.col("d") + F.lit(6)))
-            .alias("td"), "user_id")
-        wau = (ex.groupBy(F.col("td").alias("d"))
-               .agg(F.countDistinct("user_id").alias("wau")))
-        return (dau.join(wau, "d")
-                .select("d", "dau", "wau",
-                        int_ppm(F.col("dau"), F.col("wau"))
-                        .alias("stickiness_ppm")))
-
-    q["events_stickiness"] = events_stickiness
-
-    def events_rfm(spark, sf_dir):
-        """RFM report: per user, recency (last event timestamp),
-        frequency (event count), and monetary value (exact
-        cents-quantized sum of the value column). One map-side-
-        partial groupBy on user_id — the canonical per-entity
-        rollup; every output column is an exact integer."""
-        from siridb_server_spark.functions.stable import scaled_term
-        ev = load(spark, sf_dir, "events")
-        return (ev.select("user_id", epoch_ns(ev).alias("ts"),
-                          scaled_term(F.col("value"), 2).alias("vc"))
-                .groupBy("user_id")
-                .agg(F.max("ts").alias("last_ts"),
-                     F.count(F.lit(1)).alias("n_events"),
-                     F.sum("vc").alias("value_cents")))
-
-    q["events_rfm"] = events_rfm
-
-    def events_sessions_rollup(spark, sf_dir):
-        """Session-level facts: duration, event count, and whether
-        the session converted (contained a purchase) — the rollup a
-        product dashboard reads instead of raw events. Reuses the
-        sessionize window (one user shuffle); the rollup groupBy
-        shares the same partitioning."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(
-            F.col("event_id").cast("long").alias("event_id"),
-            F.col("user_id").cast("long").alias("user_id"),
-            "event_type", epoch_ns(ev).alias("ts"))
-        s = TSO.sessionize(base, gap=3_600_000_000_000,
-                           seq_col="event_id")
-        return (s.groupBy("user_id", "session_id")
-                .agg(F.count(F.lit(1)).alias("n_events"),
-                     (F.max("ts") - F.min("ts")).alias("duration"),
-                     F.max(F.when(F.col("event_type") == "purchase",
-                                  F.lit(1)).otherwise(F.lit(0))
-                           .cast("long")).alias("converted")))
-
-    q["events_sessions_rollup"] = events_sessions_rollup
-
-    def events_funnel_steps(spark, sf_dir):
-        """Ordered 3-step funnel view → click → purchase: how many
-        users reach each step with strict time ordering."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
-                         epoch_ns(ev).alias("ts"), "event_type")
-        per_user = TSO.funnel_steps(
-            base, ["view", "click", "purchase"])
-        return per_user.agg(
-            F.count("t1").alias("step1_users"),
-            F.count("t2").alias("step2_users"),
-            F.count("t3").alias("step3_users"))
-
-    q["events_funnel_steps"] = events_funnel_steps
-
-    def events_funnel_ci(spark, sf_dir):
-        """Funnel conversion rates WITH uncertainty
-        (operators/timeseries.py wilson_bounds): per adjacent step
-        pair, the exact integer ppm conversion plus the 95% Wilson
-        score interval — built from +,−,×,/ and sqrt only (IEEE
-        requires sqrt correctly rounded, unlike the banned ln/exp),
-        so with the fixed operator order the bounds hash
-        cross-engine. The number a funnel report needs before
-        anyone compares two rates."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
-                         epoch_ns(ev).alias("ts"), "event_type")
-        per_user = TSO.funnel_steps(
-            base, ["view", "click", "purchase"])
-        c = per_user.agg(F.count("t1").alias("k1"),
-                         F.count("t2").alias("k2"),
-                         F.count("t3").alias("k3"))
-        pairs = c.select(F.explode(F.array(
-            F.struct(F.lit(2).cast("long").alias("step"),
-                     F.col("k2").alias("k"),
-                     F.col("k1").alias("n")),
-            F.struct(F.lit(3).cast("long").alias("step"),
-                     F.col("k3").alias("k"),
-                     F.col("k2").alias("n")))).alias("s")) \
-            .select("s.*")
-        lo, hi = TSO.wilson_bounds(F.col("k"), F.col("n"))
-        return pairs.select(
-            "step", "k", "n",
-            F.expr("k * 1000000 div greatest(n, 1)")
-            .alias("conv_ppm"),
-            (F.round(lo, 6) + F.lit(0.0)).alias("wilson_lo"),
-            (F.round(hi, 6) + F.lit(0.0)).alias("wilson_hi"))
-
-    q["events_funnel_ci"] = events_funnel_ci
-
-    def events_coverage(spark, sf_dir):
-        """Minutes-active per user: union of 5-minute activity
-        intervals opened by each event (overlaps merge)."""
-        ev = load(spark, sf_dir, "events")
-        base = ev.select(F.col("user_id").cast("long").alias("user_id"),
-                         epoch_ns(ev).alias("ts"))
-        return TSO.interval_coverage(base, length=300_000_000_000)
-
-    q["events_coverage"] = events_coverage
-
-    q["ts_top_series"] = lambda spark, sf_dir: TSO.top_series(
-        _pts_dedup(spark, sf_dir), k=20)
-
-    q["text_length_hist"] = lambda spark, sf_dir: TX.length_histogram(
-        load(spark, sf_dir, "documents"), width=16)
-
-    # hashed contract = exact-integer posting statistics for a fixed
-    # probe set; the ln-seeded scores/rankings of tfidf_top_terms and
-    # bm25_topk are pytest-verified with tolerance instead of hashed
-    # (ARCHITECTURE.md "Hashed oracle contract policy")
-    q["text_tfidf_sources"] = lambda spark, sf_dir: TX.tfidf_stats(
-        load(spark, sf_dir, "documents"),
-        ["scan", "merge", "window", "spark", "batch"])
-
-    q["text_bm25_search"] = lambda spark, sf_dir: TX.bm25_stats(
-        load(spark, sf_dir, "documents"),
-        ["hash", "join", "vector"])
-
-    def text_hybrid_rrf(spark, sf_dir):
-        """Hybrid retrieval with reciprocal-rank fusion: an
-        exact-integer lexical ranker (idf-weighted tf with weights
-        ``int_ppm(n_docs, df)`` — pure integer math standing in for
-        BM25's ln-idf, which the contract policy keeps out of
-        hashed lineage) fused with a dense cosine ranker over the
-        id-aligned embedding table. Both rankers order by their
-        exact/quantized integer score with id tie-breaks, so ranks
-        are engine-identical; the RRF score 1/(60+r_lex)+1/(60+r_vec)
-        ships in exact RATIONAL form — integer (rrf_num, rrf_den)
-        columns, no float division anywhere in the hashed contract.
-        At 100 TB both candidate streams arrive index-pruned
-        (term postings / ANN cells) before the k-sized global rank,
-        which is the only single-partition step."""
-        from siridb_server_spark.functions.stable import (int_ppm,
-                                                          scaled_term)
-        K, k = 60, 20
-        docs = load(spark, sf_dir, "documents")
-        emb = load(spark, sf_dir, "embeddings")
-        stats = TX.bm25_stats(docs, ["hash", "join", "vector"])
-        nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-        lex = (stats.crossJoin(F.broadcast(nd))
-               .select("doc_id",
-                       (F.col("tf")
-                        * int_ppm(F.col("n_docs"), F.col("df")))
-                       .alias("w"))
-               .groupBy("doc_id")
-               .agg(F.sum("w").alias("score")))
-        # top-k FIRST (TakeOrdered: per-partition heap + merge),
-        # then the single-partition rank window sees only k rows
-        wlex = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        lr = (lex.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-              .withColumn("r_lex", F.row_number().over(wlex)
-                          .cast("long"))
-              .select("doc_id", "r_lex"))
-        qv = _query_vec(spark, sf_dir)
-        vd = F.transform(F.col("embedding"),
-                         lambda c: c.cast("double"))
-        fold = (lambda arr: F.aggregate(
-            arr, F.lit(0.0), lambda acc, y: acc + y))
-        qlit = F.array(*[F.lit(float(v)) for v in qv])
-        dot = fold(F.zip_with(vd, qlit, lambda a, b: a * b))
-        nv = F.sqrt(fold(F.transform(vd, lambda a: a * a)))
-        nq = float(sum(v * v for v in qv)) ** 0.5
-        cosr = (emb.where(F.col("vec_id") != 0)
-                .select("vec_id",
-                        scaled_term(dot / (nv * F.lit(nq)), 6)
-                        .alias("cos_micro")))
-        wvec = Window.orderBy(F.desc("cos_micro"), F.asc("vec_id"))
-        vr = (cosr.orderBy(F.desc("cos_micro"), F.asc("vec_id"))
-              .limit(k)
-              .withColumn("r_vec", F.row_number().over(wvec)
-                          .cast("long"))
-              .select("vec_id", "r_vec"))
-        f = (lr.join(vr, lr.doc_id == vr.vec_id, "full")
-             .select(F.coalesce("doc_id", "vec_id").alias("doc_id"),
-                     "r_lex", "r_vec"))
-        both = F.col("r_lex").isNotNull() & F.col("r_vec").isNotNull()
-        return f.select(
-            "doc_id", "r_lex", "r_vec",
-            F.when(both, F.lit(2 * K) + F.col("r_lex")
-                   + F.col("r_vec")).otherwise(F.lit(1))
-            .cast("long").alias("rrf_num"),
-            (F.coalesce(F.col("r_lex") + K, F.lit(1))
-             * F.coalesce(F.col("r_vec") + K, F.lit(1)))
-            .cast("long").alias("rrf_den"))
-
-    q["text_hybrid_rrf"] = text_hybrid_rrf
-
-    def sim_mmr(spark, sf_dir):
-        """Maximal-marginal-relevance diversified top-k (Carbonell &
-        Goldstein 1998) — the RAG serving op that trades relevance
-        against redundancy: greedily pick the candidate maximizing
-        λ·rel − (1−λ)·max-sim-to-selected, λ=0.5, so the doubled
-        score is the pure INTEGER rel_micro − max(sim_micro).
-        Scale shape: the DISTRIBUTED part prunes the corpus to a
-        C=20 candidate set (TakeOrdered on the quantized cosine) and
-        scores the C×C pair matrix with one broadcast self-join; the
-        greedy tail is O(k·C) driver arithmetic over those bounded
-        integers — the same audited-bounded-collect class as the IVF
-        centroid pull. Every input to the greedy loop is a quantized
-        long with id tie-breaks, so selection order is
-        engine-identical; the oracle replays all five steps
-        UNROLLED in SQL. Output: (step, vec_id, rel_micro,
-        mmr2x_micro); step 1's score is its relevance (empty
-        penalty set)."""
-        from siridb_server_spark.functions.stable import scaled_term
-        C, k = 20, 5
-        emb = load(spark, sf_dir, "embeddings")
-        qv = _query_vec(spark, sf_dir)
-        vd = F.transform(F.col("embedding"),
-                         lambda c: c.cast("double"))
-        fold = (lambda arr: F.aggregate(
-            arr, F.lit(0.0), lambda acc, y: acc + y))
-        qlit = F.array(*[F.lit(float(v)) for v in qv])
-        dot = fold(F.zip_with(vd, qlit, lambda a, b: a * b))
-        nv = F.sqrt(fold(F.transform(vd, lambda a: a * a)))
-        nq = float(sum(v * v for v in qv)) ** 0.5
-        cand = (emb.where(F.col("vec_id") != 0)
-                .select("vec_id", "embedding",
-                        scaled_term(dot / (nv * F.lit(nq)), 6)
-                        .alias("rel"))
-                .orderBy(F.desc("rel"), F.asc("vec_id"))
-                .limit(C))
-        # ONE corpus pass: collect the C candidates (ids + vectors +
-        # rel) and score the C×C pair matrix over a literal local
-        # relation — same expressions on the same float values (the
-        # collect round-trips array<float> exactly), so sims are
-        # bit-identical to the former second corpus TakeOrdered
-        cand_rows = cand.collect()
-        cand = arrow_df(
-            spark, [(r["vec_id"], r["embedding"], r["rel"])
-                    for r in cand_rows],
-            cand.schema)
-        a = cand.select(F.col("vec_id").alias("id_a"),
-                        F.col("embedding").alias("ea"))
-        b = cand.select(F.col("vec_id").alias("id_b"),
-                        F.col("embedding").alias("eb"))
-        da = F.transform(F.col("ea"), lambda c: c.cast("double"))
-        db = F.transform(F.col("eb"), lambda c: c.cast("double"))
-        pdot = fold(F.zip_with(da, db, lambda x, y: x * y))
-        na = F.sqrt(fold(F.transform(da, lambda x: x * x)))
-        nb = F.sqrt(fold(F.transform(db, lambda x: x * x)))
-        sims = (a.join(F.broadcast(b),
-                       F.col("id_a") != F.col("id_b"))
-                .select("id_a", "id_b",
-                        scaled_term(pdot / (na * nb), 6)
-                        .alias("sim")))
-        rel = {r["vec_id"]: r["rel"] for r in cand_rows}
-        sm = {(r["id_a"], r["id_b"]): r["sim"]
-              for r in sims.collect()}
-        picked, rows = [], []
-        for step in range(1, k + 1):
-            best = None
-            for v, rv in rel.items():
-                if v in picked:
-                    continue
-                pen = max((sm[(v, s)] for s in picked), default=0)
-                score = rv - pen if picked else rv
-                key = (-score, v)
-                if best is None or key < best[0]:
-                    best = (key, v, rv, score)
-            if best is None:  # candidate pool exhausted before k
-                break
-            picked.append(best[1])
-            rows.append((step, best[1], best[2], best[3]))
-        return arrow_df(
-            spark, rows, "step long, vec_id long, rel_micro long,"
-                         " mmr2x_micro long")
-
-    q["sim_mmr"] = sim_mmr
-
-    def sim_dup_clusters(spark, sf_dir):
-        """Embedding near-dup clustering: cosine pairs above the
-        threshold (within quantizer blocks) become edges; connected
-        components assign every vector to its cluster representative
-        (min vec_id)."""
-        emb = load(spark, sf_dir, "embeddings")
-        pairs = SIM.cosine_pairs_blocked(emb, threshold=0.3)
-        return (D.resolve_duplicates(emb, pairs, id_col="vec_id")
-                .withColumnRenamed("doc_id", "vec_id"))
-
-    q["sim_dup_clusters"] = sim_dup_clusters
-
-    def sim_semdedup(spark, sf_dir):
-        """SemDeDup-style semantic dedup (Abbas et al. 2023,
-        arXiv:2303.09540): cluster the embedding space (the corpus
-        label stands in for the k-means cell; ``SIM.kmeans_fit`` is
-        the unlabeled path), edge within-cluster pairs whose cosine
-        clears the threshold, then keep ONE member per duplicate
-        group — the LEAST prototypical one (lowest cosine to its
-        cluster centroid), the paper's keep-low policy, ties to the
-        smaller id. The centroid enters only through the
-        per-cluster per-dim SUM vector (the 1/n scale cancels
-        inside the cosine), accumulated as exact DECIMAL(38,18) so
-        both engines derive bit-identical centroid vectors; the
-        per-row dot/norms are row-local array folds and the score
-        is micro-quantized at birth. Cluster-local pairs only —
-        never all-pairs — so the shape survives 100 TB; the
-        centroid table is labels×dims and broadcasts."""
-        from siridb_server_spark.functions.stable import scaled_term
-        emb = load(spark, sf_dir, "embeddings")
-        x = (emb.select("vec_id", "label",
-                        F.posexplode("embedding")
-                        .alias("pos", "v0"))
-             .select("label", "pos",
-                     F.col("v0").cast("double").alias("v")))
-        s = (x.groupBy("label", "pos")
-             .agg(F.sum(F.col("v").cast("decimal(38,18)"))
-                  .cast("double").alias("sv")))
-        sarr = (s.groupBy("label")
-                .agg(F.array_sort(F.collect_list(
-                    F.struct("pos", "sv"))).alias("ps"))
-                .select("label",
-                        F.transform("ps", lambda r: r["sv"])
-                        .alias("svec")))
-        vd = F.transform(F.col("embedding"),
-                         lambda c: c.cast("double"))
-        fold = (lambda arr: F.aggregate(
-            arr, F.lit(0.0), lambda acc, y: acc + y))
-        dot = fold(F.zip_with(vd, F.col("svec"),
-                              lambda a, b: a * b))
-        nv = F.sqrt(fold(F.transform(vd, lambda a: a * a)))
-        ns = F.sqrt(fold(F.transform(
-            F.col("svec"), lambda a: a * a)))
-        scored = (emb.join(F.broadcast(sarr), "label")
-                  .select("vec_id",
-                          scaled_term(dot / (nv * ns), 6)
-                          .alias("cos_c_micro"))
-                  .withColumn("_neg", -F.col("cos_c_micro")))
-        pairs = SIM.cosine_pairs_blocked(emb, threshold=0.3)
-        res = (D.resolve_duplicates_by(scored, pairs,
-                                       score_col="_neg",
-                                       id_col="vec_id")
-               .withColumnRenamed("doc_id", "vec_id"))
-        return (res.join(scored.select("vec_id", "cos_c_micro"),
-                         "vec_id")
-                .select("vec_id", "keep_id", "is_kept",
-                        "cos_c_micro"))
-
-    q["sim_semdedup"] = sim_semdedup
-
-    def sim_pq_ann(spark, sf_dir):
-        """Property rows for the product-quantization index: k rows
-        returned, every code within [0, k_codebook), and recall@10
-        against the exact-L2 top-10 of at least 5 (deterministic
-        pipeline; generous floor so borderline float summation order
-        can't flip it)."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        vec = _query_vec(spark, sf_dir)
-        idx = SIM.PQIndex.train(emb, m=8, k=16, iters=3)
-        # the rows are computed before the index's persisted codes
-        # are released, so the entry leaves no cached RDD behind
-        try:
-            res = idx.search_rerank(emb, vec, k=10, shortlist=200)
-            exact = SIM.l2_topk_exact(emb, vec, k=10)
-            hit = res.join(exact.select("vec_id"), "vec_id", "semi")
-            bad_code = idx.codes.where(
-                F.exists("code", lambda c: (c < 0) | (c >= 16)))
-            props = [
-                ("k_returned", res.count()),
-                ("code_out_of_range", bad_code.count()),
-                ("recall_at_10_ge_5", int(hit.count() >= 5)),
-            ]
-        finally:
-            idx.unpersist()
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_pq_ann"] = sim_pq_ann
-
-    def sim_pq_knn_join(spark, sf_dir):
-        """Batch PQ ADC serving (operators/similarity.py
-        PQIndex.knn_join; r11 verdict #3): top-k for EVERY query
-        row in one job — per-query m×k ADC tables built in pure
-        Catalyst on the query side, broadcast against the m-byte
-        codes scan, per-qid window top-k; optional exact rerank
-        from the source vectors. AUDIT contract (k-means has no
-        SQL replay — property posture like sim_pq_ann): for each
-        of 3 query vectors the batch join equals the
-        PQIndex.search loop exactly (ids, 6-decimal ADC, rank
-        order), the rerank variant equals the search_rerank loop,
-        and k rows come back per query."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        idx = SIM.PQIndex.train(emb, m=8, k=16, iters=3)
-        try:
-            qrows = emb.orderBy("vec_id").limit(3).collect()
-            qvecs = {int(r["vec_id"]) + 1000:
-                     [float(x) for x in r["embedding"]]
-                     for r in qrows}
-            queries = arrow_df(
-                spark, sorted(qvecs.items()),
-                "qid long, embedding array<double>")
-            got = {}
-            for r in idx.knn_join(queries, k=10).collect():
-                got.setdefault(r["qid"], []).append(
-                    (r["rank"], r["vec_id"], r["adc"]))
-            equal = int(all(
-                sorted(got.get(qid, [])) ==
-                [(i + 1, r["vec_id"], r["adc"]) for i, r in
-                 enumerate(idx.search(qv, k=10).collect())]
-                for qid, qv in qvecs.items()))
-            got_rr = {}
-            for r in idx.knn_join(queries, k=5, emb=emb,
-                                  shortlist=50).collect():
-                got_rr.setdefault(r["qid"], []).append(
-                    (r["rank"], r["vec_id"], r["d2"]))
-            equal_rr = int(all(
-                sorted(got_rr.get(qid, [])) ==
-                [(i + 1, r["vec_id"], r["d2"]) for i, r in
-                 enumerate(idx.search_rerank(
-                     emb, qv, k=5, shortlist=50).collect())]
-                for qid, qv in qvecs.items()))
-        finally:
-            idx.unpersist()
-        props = [
-            ("equal_to_per_query_search", equal),
-            ("equal_to_per_query_rerank", equal_rr),
-            ("rows_returned", sum(len(v) for v in got.values())),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_pq_knn_join"] = sim_pq_knn_join
-
-    def sim_pq_index_append(spark, sf_dir):
-        """PQ index lifecycle — append (operators/similarity.py
-        pq_index_append): a delta encoded with the saved index's
-        FROZEN codebooks lands as an idempotent batch-stamped
-        codes_delta (SQIndex's layout). Property contract: every
-        delta row indexed, a blind retry is a no-op, and a search
-        on the loaded appended index equals the in-memory union
-        encoded with the same frozen books (k-means isn't
-        SQL-replayable, so this family pins properties like
-        sim_pq_ann)."""
-        import hashlib
-        import shutil
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        base = emb.where(F.col("vec_id") % 7 != 1)
-        delta = emb.where(F.col("vec_id") % 7 == 1)
-        vec = _query_vec(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/sparksiri-pqapp-{tag}"
-        shutil.rmtree(path, ignore_errors=True)
-        idx = SIM.PQIndex.train(base, m=4, k=8, iters=2)
-        try:
-            idx.save(path)
-            books, dsub = idx.codebooks, idx.dsub
-        finally:
-            idx.unpersist()
-        n = SIM.pq_index_append(spark, path, delta)
-        n2 = SIM.pq_index_append(spark, path, delta)  # no-op
-        loaded = SIM.PQIndex.load(spark, path)
-        got = [(r["vec_id"], r["adc"]) for r in
-               loaded.search(vec, k=10).collect()]
-        ref = SIM.PQIndex(
-            books,
-            emb.select("vec_id",
-                       SIM._pq_encode(books, dsub, "embedding")
-                       .alias("code")),
-            dsub)
-        want = [(r["vec_id"], r["adc"]) for r in
-                ref.search(vec, k=10).collect()]
-        props = [
-            ("delta_rows_indexed",
-             int(n == delta.count()
-                 and loaded.codes.count() == base.count() + n)),
-            ("retry_is_noop", int(n2 == n)),
-            ("equal_to_in_memory_union", int(got == want)),
-            ("k_returned", len(got)),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_pq_index_append"] = sim_pq_index_append
-
-    def sim_pq_index_drift(spark, sf_dir):
-        """PQ drift report (operators/similarity.py
-        pq_index_drift): per (subspace, code) — stored-code usage
-        vs what the frozen quantizer would assign the delta, exact
-        integer ppm shares, and the delta's mean quantization error
-        (order-free DECIMAL sums). Property contract (codebooks
-        come from k-means — not SQL-replayable): full m×k grid,
-        exact count totals both sides, per-sub ppm bounded, qerr
-        present exactly where deltas landed."""
-        import hashlib
-        import shutil
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        base = emb.where(F.col("vec_id") % 7 != 1)
-        delta = emb.where(F.col("vec_id") % 7 == 1)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/sparksiri-pqdrift-{tag}"
-        shutil.rmtree(path, ignore_errors=True)
-        idx = SIM.PQIndex.train(base, m=4, k=8, iters=2)
-        try:
-            idx.save(path)
-        finally:
-            idx.unpersist()
-        rep = SIM.pq_index_drift(spark, path, delta).collect()
-        nb = sum(r["n_base"] for r in rep)
-        nn = sum(r["n_new"] for r in rep)
-        ppm_ok = all(
-            0 < sum(r["new_share_ppm"] for r in rep
-                    if r["sub"] == s) <= 1_000_000
-            for s in range(4))
-        qerr_ok = all(
-            (r["mean_qerr_new"] is not None
-             and r["mean_qerr_new"] >= 0)
-            == (r["n_new"] > 0) for r in rep)
-        props = [
-            ("grid_rows", len(rep)),
-            ("base_counts_exact", int(nb == base.count() * 4)),
-            ("new_counts_exact", int(nn == delta.count() * 4)),
-            ("ppm_per_sub_bounded", int(ppm_ok)),
-            ("qerr_iff_delta_landed", int(qerr_ok)),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_pq_index_drift"] = sim_pq_index_drift
-
-    def dedup_embedding_contamination(spark, sf_dir):
-        """Cross-snapshot eval-leakage sweep in EMBEDDING space
-        (operators/similarity.py embedding_contamination): each
-        eval vector's nearest TRAIN vector through the batch IVF
-        join (k=1, nprobe=3 — both corpora distributed, candidates
-        cell-bounded), verdict at threshold 0.9 as exact micro-int
-        compare. The eval set is the held-out slice PLUS planted
-        exact copies of train rows (qid = vec_id + 1e6) — the
-        leaked-eval scenario the sweep exists to catch: copies that
-        probe their source's cell flag contaminated at cos 1.0,
-        clean evals on this near-orthogonal corpus stay far below
-        threshold. Full SQL replay: centroids → per-eval probes →
-        exact cosine → rank-1 → micro verdict."""
-        emb = load(spark, sf_dir, "embeddings")
-        train = emb.where("vec_id % 19 <> 1")
-        clean = emb.where("vec_id % 19 = 1").select(
-            F.col("vec_id").alias("qid"), "embedding")
-        planted = train.where("vec_id % 23 = 2").select(
-            (F.col("vec_id") + 1000000).alias("qid"), "embedding")
-        return SIM.embedding_contamination(
-            train, clean.unionByName(planted),
-            threshold=0.9, nprobe=3)
-
-    q["dedup_embedding_contamination"] = \
-        dedup_embedding_contamination
-
-    def sim_sq_codes(spark, sf_dir):
-        """int8 scalar quantization of the embedding corpus
-        (operators/similarity.py scalar_quantize): symmetric codes
-        floor(x·127/smax + 0.5) with smax the corpus max |x| — pure
-        double arithmetic in a fixed op order, so every code is
-        bit-identical across Spark/DuckDB/CPython and the WHOLE
-        quantized corpus is pinned by the value hash. The 4×-smaller
-        serving copy that sq_topk scans."""
-        emb = load(spark, sf_dir, "embeddings")
-        scale = SIM.sq_scale(emb)
-        return SIM.scalar_quantize(emb, scale).select(
-            "vec_id", F.posexplode("qvec").alias("i", "q"))
-
-    q["sim_sq_codes"] = sim_sq_codes
-
-    def sim_sq_scores(spark, sf_dir):
-        """Integer coarse scores of the quantized corpus against the
-        quantized query (vec_id 0): exact int64 multiply-adds — the
-        scan stays in whole-stage codegen over int arrays, no floats
-        until the rescore stage. Top 40 by iscore with id
-        tie-break, the candidate set sq_topk rescores."""
-        emb = load(spark, sf_dir, "embeddings")
-        scale = SIM.sq_scale(emb)
-        qdf = SIM.scalar_quantize(emb.where(F.col("vec_id") != 0),
-                                  scale)
-        qcodes = SIM.quantize_query(_query_vec(spark, sf_dir), scale)
-        return (SIM.sq_coarse_scores(qdf, qcodes)
-                .orderBy(F.col("iscore").desc(), "vec_id")
-                .limit(40))
-
-    q["sim_sq_scores"] = sim_sq_scores
-
-    def sim_sq_recall(spark, sf_dir):
-        """Accuracy audit for the quantized search path: recall of
-        sq_topk (int8 coarse top-40 → exact cosine rescore → top-10)
-        against the exact brute-force top-10, as hashed integers.
-        On this corpus the rescored path recovers the exact answer
-        set — the hash pins that, so a quantization regression
-        (wrong scale, rounding drift, lost rescore) flips the
-        gate."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        vec = _query_vec(spark, sf_dir)
-        sq = SIM.sq_topk(emb, vec, k=10, rerank=4)
-        exact = SIM.brute_force_topk(emb, vec, k=10)
-        hits = sq.join(exact.select("vec_id"), "vec_id", "semi")
-        return (sq.agg(F.lit("k_returned").alias("prop"),
-                       F.count(F.lit(1)).cast("long").alias("n"))
-                .unionByName(hits.agg(
-                    F.lit("recall_hits_at_10").alias("prop"),
-                    F.count(F.lit(1)).cast("long").alias("n"))))
-
-    q["sim_sq_recall"] = sim_sq_recall
-
-    def sim_ivf_sq_topk(spark, sf_dir):
-        """IVF + int8 composition (operators/similarity.py
-        ivf_sq_topk — the FAISS IVF-SQ8 serving shape): label-cell
-        centroids ranked on the driver, int8 coarse scan inside the
-        3 probed cells only, exact cosine rescore of the top 40.
-        Partition pruning × ¼ code width × bounded float work. The
-        oracle replays cells, codes, coarse ranking, and rescore
-        entirely in SQL — the full-value contract, same as
-        sim_ivf_topk."""
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        return SIM.ivf_sq_topk(emb, _query_vec(spark, sf_dir),
-                               k=10, nprobe=3, rerank=4)
-
-    q["sim_ivf_sq_topk"] = sim_ivf_sq_topk
-
-    def sim_sq_index(spark, sf_dir):
-        """Persisted IVF-SQ8 index (operators/similarity.py
-        SQIndex): scale + int8 codes + centroids pinned once per
-        corpus snapshot, cells laid out as parquet
-        partitionBy(cell). Property contract pins the serving
-        promises: a search on the LOADED index returns exactly the
-        fresh per-call ivf_sq_topk result with the same pinned
-        scale/centroids (ids, order and full-precision cosines),
-        and its scan plan carries a PartitionFilter on cell —
-        probing IS directory pruning, no per-call corpus max scan
-        or centroid aggregate."""
-        import hashlib
-        import re
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        vec = _query_vec(spark, sf_dir)
-        idx = SIM.SQIndex.from_labels(emb)
-        try:
-            # stable per-corpus dir: deterministic rebuild makes
-            # re-runs byte-identical overwrites
-            tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-            path = f"{tempfile.gettempdir()}/sparksiri-sqidx-{tag}"
-            idx.save(path)
-            fresh = [(r["vec_id"], r["cos"]) for r in
-                     SIM.ivf_sq_topk(emb, vec, k=10, nprobe=3,
-                                     rerank=4, scale=idx.scale,
-                                     centroids=idx.centroids)
-                     .collect()]
-        finally:
-            idx.unpersist()
-        loaded = SIM.SQIndex.load(spark, path)
-        got_df = loaded.search(vec, k=10, nprobe=3, rerank=4)
-        got = [(r["vec_id"], r["cos"]) for r in got_df.collect()]
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-        props = [
-            ("k_returned", len(got)),
-            ("equal_to_fresh_build", int(got == fresh)),
-            ("partition_pruned", int(bool(re.search(
-                r"PartitionFilters: \[[^]]*cell", plan)))),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_sq_index"] = sim_sq_index
-
-    def sim_sq_index_append(spark, sf_dir):
-        """Incremental SQIndex growth (operators/similarity.py
-        sq_index_append): a delta batch quantized with the saved
-        index's PINNED scale (clamped like out-of-range queries),
-        assigned to its nearest frozen centroid by the search-side
-        cosine rule, landed as a batch-stamped cells_delta dir
-        (idempotent by content-fingerprint batch id — the streaming
-        sink's layout). Properties pin the contract: every delta row is
-        indexed, and a search on the loaded appended index equals
-        the in-memory index over the same union with the same
-        pinned scale/centroids (a pure persistence/quantization
-        round-trip check — the quantizer is frozen BY DESIGN, so
-        equality with a full retrain is NOT the contract)."""
-        import hashlib
-        import shutil
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        base = emb.where(F.col("vec_id") % 7 != 1)
-        delta = emb.where(F.col("vec_id") % 7 == 1)
-        vec = _query_vec(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/sparksiri-sqapp-{tag}"
-        shutil.rmtree(path, ignore_errors=True)  # fresh base per
-        # run: the props compare against base+delta exactly once
-        # (the append itself is idempotent since r11 — a leftover
-        # done-marker would just short-circuit it)
-        idx = SIM.SQIndex.from_labels(base)
-        try:
-            idx.save(path)
-            scale, cents = idx.scale, idx.centroids
-        finally:
-            idx.unpersist()
-        n = SIM.sq_index_append(spark, path, delta)
-        loaded = SIM.SQIndex.load(spark, path)
-        got = [(r["vec_id"], r["cos"]) for r in
-               loaded.search(vec, k=10, nprobe=3).collect()]
-
-        cent = arrow_df(
-            spark,
-            [(int(c), [float(x) for x in v]) for c, v in cents],
-            "_cell long, _centroid array<double>")
-        d = SIM.dot(F.col("embedding"), F.col("_centroid"))
-        na = SIM.dot(F.col("embedding"), F.col("embedding"))
-        nb = SIM.dot(F.col("_centroid"), F.col("_centroid"))
-        ccos = F.when((na == 0) | (nb == 0), F.lit(0.0)) \
-            .otherwise(d / (F.sqrt(na) * F.sqrt(nb)))
-        from pyspark.sql import Window as W
-        w = W.partitionBy("vec_id").orderBy(
-            F.desc("_cc"), F.asc("_cell"))
-        dcells = (delta.select("vec_id", "embedding")
-                  .crossJoin(F.broadcast(cent))
-                  .withColumn("_cc", ccos)
-                  .withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") == 1)
-                  .select("vec_id", "embedding",
-                          F.col("_cell").alias("label")))
-        union = base.select("vec_id", "embedding", "label") \
-            .unionByName(dcells)
-        qv = F.transform(
-            F.col("embedding"),
-            lambda x: F.greatest(
-                F.lit(-SIM.SQ_LIM),
-                F.least(F.lit(SIM.SQ_LIM),
-                        SIM._sq_code(x, scale))))
-        ref = SIM.SQIndex(cents, scale, union.select(
-            "vec_id", "embedding", qv.alias("qvec"),
-            F.col("label").cast("long").alias("_cell")))
-        want = [(r["vec_id"], r["cos"]) for r in
-                ref.search(vec, k=10, nprobe=3).collect()]
-        props = [
-            ("delta_rows_indexed",
-             int(n == delta.count()
-                 and loaded.cells.count() == base.count() + n)),
-            ("equal_to_in_memory_union", int(got == want)),
-            ("k_returned", len(got)),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_sq_index_append"] = sim_sq_index_append
-
-    def sim_sq_index_drift(spark, sf_dir):
-        """Frozen-quantizer drift report (operators/similarity.py
-        sq_index_drift): per saved cell, indexed vs would-append
-        counts (exact, + integer ppm delta share) and mean centroid
-        cosine of base vs delta members (order-free DECIMAL sums,
-        rounded once) — the retrain signal the append path's frozen
-        quantizer defers to. The oracle replays centroids, the
-        frozen assignment rule, and both aggregate families."""
-        import hashlib
-        import shutil
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        base = emb.where(F.col("vec_id") % 7 != 1)
-        delta = emb.where(F.col("vec_id") % 7 == 1)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/sparksiri-sqdrift-{tag}"
-        shutil.rmtree(path, ignore_errors=True)
-        idx = SIM.SQIndex.from_labels(base)
-        try:
-            idx.save(path)
-        finally:
-            idx.unpersist()
-        return SIM.sq_index_drift(spark, path, delta)
-
-    q["sim_sq_index_drift"] = sim_sq_index_drift
-
-    def sim_sq_index_rebuild(spark, sf_dir):
-        """Quantizer rebuild (operators/similarity.py
-        sq_index_rebuild) — the remediation the drift report
-        triggers: fresh k-means quantizer + fresh scale over
-        everything indexed (base + appended deltas), saved as a NEW
-        snapshot (rotation, not in-place mutation). Properties pin
-        the row-preservation contract: every (id, vector) from the
-        old index — including the appended delta — survives into
-        the rebuilt one, the requested cell count holds, and a
-        search on the loaded rebuilt snapshot serves k rows."""
-        import hashlib
-        import shutil
-        import tempfile
-
-        emb = load(spark, sf_dir, "embeddings").where(
-            F.col("vec_id") != 0)
-        base = emb.where(F.col("vec_id") % 5 != 1)
-        delta = emb.where(F.col("vec_id") % 5 == 1)
-        vec = _query_vec(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        p0 = f"{tempfile.gettempdir()}/sparksiri-sqrb0-{tag}"
-        p1 = f"{tempfile.gettempdir()}/sparksiri-sqrb1-{tag}"
-        shutil.rmtree(p0, ignore_errors=True)
-        shutil.rmtree(p1, ignore_errors=True)
-        idx = SIM.SQIndex.from_labels(base)
-        try:
-            idx.save(p0)
-        finally:
-            idx.unpersist()
-        SIM.sq_index_append(spark, p0, delta)
-        new = SIM.sq_index_rebuild(spark, p0, p1, k=4, iters=3)
-        new.unpersist()
-        old_rows = (SIM.SQIndex.load(spark, p0).cells
-                    .select("vec_id", "embedding"))
-        loaded = SIM.SQIndex.load(spark, p1)
-        new_rows = loaded.cells.select("vec_id", "embedding")
-        props = [
-            ("rows_preserved",
-             int(old_rows.exceptAll(new_rows).count() == 0
-                 and new_rows.exceptAll(old_rows).count() == 0)),
-            ("cells_requested",
-             int(len(loaded.centroids) == 4)),
-            ("k_returned",
-             loaded.search(vec, k=10, nprobe=4).count()),
-        ]
-        return arrow_df(spark, props, "prop string, n long")
-
-    q["sim_sq_index_rebuild"] = sim_sq_index_rebuild
-
-    def text_nb_model(spark, sf_dir):
-        """Multinomial Naive Bayes training
-        (operators/classify.py): the per-(language, term) token
-        counts — ONE map-side-combinable groupBy whose shuffle is
-        bounded by |labels|·|vocab| — which ARE the classifier
-        (plus the per-label totals the oracle re-derives by
-        summing). The trainable quality/domain-filter shape of
-        corpus curation pipelines, as exact hashed integers."""
-        m = CL.nb_train(load(spark, sf_dir, "documents"),
-                        label_col="lang")
-        return m.counts.select("label", "term", "cnt")
-
-    q["text_nb_model"] = text_nb_model
-
-    def text_nb_confusion(spark, sf_dir):
-        """End-to-end NB classification pinned cross-engine: the
-        confusion matrix of the QUANTIZED-LOG scorer (fixlog2 —
-        exponent + linear mantissa off the binary string, exact
-        int64, no libm) over the language labels. DuckDB replays
-        tokenize → train → score → argmax entirely in integer SQL,
-        so one flipped prediction anywhere flips the hash. The
-        full-precision float path's accuracy (and its agreement
-        with this path on separable data) is pytest-verified
-        (tests/test_classify.py, transcendental-ban policy)."""
-        docs = load(spark, sf_dir, "documents")
-        m = CL.nb_train(docs, label_col="lang")
-        pred = CL.nb_predict_int(m, docs)
-        return (CL.nb_confusion(docs, pred, label_col="lang")
-                .select("label", "pred", "n"))
-
-    q["text_nb_confusion"] = text_nb_confusion
-
-    def text_hash_embed(spark, sf_dir):
-        """Feature-hashing document vectors (operators/text.py
-        hash_embed — the hashing trick): md5-bucketed ±1 signed
-        word counts in dim 64, one explode + one map-side-combined
-        groupBy. Model-free embeddings for prefiltering; EXACT
-        integers, the full matrix is the hashed contract."""
-        return TX.hash_embed(load(spark, sf_dir, "documents"))
-
-    q["text_hash_embed"] = text_hash_embed
-
-    def text_hash_embed_sim(spark, sf_dir):
-        """Cheap similarity search over the hash embeddings: top 20
-        neighbors of doc 0 by exact integer dot product (query
-        components broadcast onto the bucket index, one groupBy
-        sum). Composes with the int8/ANN serving stack; every
-        (doc_id, dot) pair is in the hash."""
-        return TX.hash_embed_neighbors(
-            load(spark, sf_dir, "documents"), query_id=0)
-
-    q["text_hash_embed_sim"] = text_hash_embed_sim
-
-    def text_hash_embed_tfidf(spark, sf_dir):
-        """TF-IDF-weighted feature hashing (operators/text.py
-        hash_embed_tfidf): each word contributes
-        sign·tf·(fixlog2(N) − fixlog2(df)) — the exact fixed-point
-        log₂(N/df), so rare terms dominate like real tf-idf while
-        the whole matrix stays integer and hashable. Two partial
-        aggregates + one vocab-sized hash join."""
-        return TX.hash_embed_tfidf(load(spark, sf_dir, "documents"))
-
-    q["text_hash_embed_tfidf"] = text_hash_embed_tfidf
-
-    def text_quality_percentile(spark, sf_dir):
-        """Within-source rank normalization of the quality logit
-        (operators/text.py quality_percentile): curation thresholds
-        set on per-source percentiles instead of raw scores. Ranks
-        on the already-exact z_micro with doc_id ties —
-        pct_ppm = (rank−1)·10⁶ div (n−1), integers end to end."""
-        return TX.quality_percentile(load(spark, sf_dir,
-                                          "documents"))
-
-    q["text_quality_percentile"] = text_quality_percentile
-
-    q["text_quality_gate"] = lambda spark, sf_dir: TX.quality_gate(
-        load(spark, sf_dir, "documents"))
-
-    def text_langid_confusion(spark, sf_dir):
-        """Heuristic-vs-label confusion matrix — the evaluation view
-        of the language-ID operator (which slices of the corpus does
-        the heuristic get wrong, and toward what)."""
-        docs = load(spark, sf_dir, "documents")
-        return (docs.select(F.col("lang").alias("label"),
-                            TX.lang_id(F.col("text"))
-                            .alias("pred"))
-                .groupBy("label", "pred")
-                .agg(F.count(F.lit(1)).alias("n")))
-
-    q["text_langid_confusion"] = text_langid_confusion
-
-    def corpus_sketch_stats(spark, sf_dir):
-        """Sketch-based corpus statistics — at 100 TB exact distinct
-        counts and exact quantiles need corpus-sized shuffles, so the
-        serving path is HLL++ (approx_count_distinct) and KLL-style
-        quantiles (percentile_approx), both mergeable map-side
-        sketches. Property rows pin them to the exact answers at this
-        scale: relative HLL error within 3×rsd, approx quantiles
-        within one exact-rank neighborhood."""
-        docs = load(spark, sf_dir, "documents")
-        toks = (docs.select(F.explode(F.split(F.lower("text"),
-                                              "[^a-z]+")).alias("t"))
-                .where(F.col("t") != ""))
-        ex = toks.agg(F.count_distinct("t").alias("x")).first()["x"]
-        ap = toks.agg(F.approx_count_distinct("t", rsd=0.02)
-                      .alias("x")).first()["x"]
-        hll_ok = 1 if abs(ap - ex) <= max(1, int(0.06 * ex)) else 0
-        lens = docs.select(F.length("text").alias("n"))
-        exact = lens.agg(
-            F.expr("percentile(n, array(0.5, 0.9, 0.99))")
-            .alias("p")).first()["p"]
-        approx = lens.agg(
-            F.percentile_approx("n", [0.5, 0.9, 0.99], 10000)
-            .alias("p")).first()["p"]
-        q_ok = 1 if all(
-            abs(a - e) <= max(2.0, 0.02 * e)
-            for a, e in zip(approx, exact)) else 0
-        return arrow_df(
-            spark, [("hll_within_3rsd", hll_ok),
-                    ("quantiles_within_2pct", q_ok)],
-            "prop string, n long")
-
-    q["corpus_sketch_stats"] = corpus_sketch_stats
-
-    def corpus_integrity(spark, sf_dir):
-        """Pre-training data-integrity gate: the checks a pipeline
-        runs before pointing a trainer at a corpus snapshot —
-        duplicate ids on either table, docs without an embedding,
-        orphan embeddings, malformed vectors (wrong dimension /
-        non-finite components), and empty texts. Every check is an
-        exact count from one aggregate or one anti-join; the
-        id-match joins are the bucketed-table shape
-        (sources/bucketed.py) when both sides are fact-sized.
-        Output: (check, n) — a green snapshot is all zeros except
-        the row counts."""
-        docs = load(spark, sf_dir, "documents")
-        emb = load(spark, sf_dir, "embeddings")
-        did = docs.select(F.col("doc_id").alias("id"))
-        vid = emb.select(F.col("vec_id").alias("id"))
-
-        def cnt(name, df):
-            return df.agg(F.lit(name).alias("check"),
-                          F.count(F.lit(1)).cast("long").alias("n"))
-
-        dup_docs = (did.groupBy("id")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .where(F.col("c") > 1))
-        dup_vecs = (vid.groupBy("id")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .where(F.col("c") > 1))
-        no_emb = did.join(vid, "id", "left_anti")
-        orphan = vid.join(did, "id", "left_anti")
-        bad_vec = emb.where(
-            (F.size("embedding") != 64)
-            | F.exists(F.transform("embedding",
-                                   lambda x: x.cast("double")),
-                       lambda x: x.isNull() | F.isnan(x)))
-        empty = docs.where(F.length(F.trim("text")) == 0)
-        return (cnt("n_docs", docs)
-                .unionByName(cnt("n_embeddings", emb))
-                .unionByName(cnt("dup_doc_ids", dup_docs))
-                .unionByName(cnt("dup_vec_ids", dup_vecs))
-                .unionByName(cnt("docs_without_embedding", no_emb))
-                .unionByName(cnt("orphan_embeddings", orphan))
-                .unionByName(cnt("malformed_vectors", bad_vec))
-                .unionByName(cnt("empty_texts", empty)))
-
-    q["corpus_integrity"] = corpus_integrity
-
-    # deliberately last: the driver's correctness run caps at 50
-    # entries, and these share the apply_bucket_agg path with ten
-    # earlier green entries (typed min/max is also covered by
-    # siri_minmax_int_to_one; stddev/last were driver-green in r01
-    # with their variance/first twins still in-window) — the least
-    # information lost if skipped
-    q["siri_min_bucket"] = _sel("select min(1d) from /.*/")
-    q["siri_max_bucket"] = _sel("select max(1d) from /.*/")
-    q["siri_median_low_bucket"] = _sel("select median_low(1d) from /.*/")
-    q["siri_median_high_bucket"] = _sel("select median_high(1d) from /.*/")
-    q["siri_pvariance_bucket"] = _sel("select pvariance(1d) from /.*/",
-                                      "val_dbl", 6)
-    q["siri_stddev_bucket"] = _sel("select stddev(1d) from /.*/",
-                                   "val_dbl", 6)
-    q["siri_last_bucket"] = _sel("select last(1d) from /.*/")
-    q["siri_timeval"] = _sel("select timeval() from /signup.*/",
-                             "val_int")
-    q["siri_head"] = _sel("select * from /purchase.*/ head 3")
-    q["siri_tail"] = _sel("select * from /purchase.*/ tail 3")
-    q["siri_first_to_one"] = _sel("select first() from /.*/")
-    q["siri_difference_bucket"] = _sel("select difference(1d) from /.*/")
-    q["siri_minmax_int_to_one"] = _sel("select max() from /.*/",
-                                       "val_int", as_int=True)
-
-    # window curation: the driver's correctness run checks the FIRST
-    # 50 entries only. Every operator keeps its queries()+oracle_sql()
-    # contract (scripts/check_oracle.py verifies the full set), but
-    # entries that were driver-green in round 2 AND carry redundant
-    # pytest/golden coverage yield their window slot to the
-    # round-new operators so fresh code gets driver-checked first.
-    # _HEAD: every entry whose HASHED CONTRACT changed in round 8
-    # (the transcendental-removal sweep + the new P-frame decode)
-    # moves to the front so the driver verifies the whole fix class,
-    # not just the five previously-red cells.
-    _HEAD = ("text_unigram_lm", "text_bigram_lm", "text_trigram_lm",
-             "text_vocab_stats", "curation_mix_weights",
-             "curation_epoch_plan", "curation_dsir",
-             "text_quality_score", "text_tfidf_sources",
-             "text_bm25_search", "curation_sample_sources",
-             "multimodal_h264_pframes", "multimodal_image_phash",
-             "dedup_image_phash_pairs", "multimodal_audio_fingerprint",
-             "dedup_audio_match", "dedup_video_match",
-             "curation_pipeline_report")
-    _TAIL = ("siri_sum_int_bucket", "siri_between_mean",
-             "siri_catalog", "text_langid", "text_clean",
-             "text_pii_mask", "text_top_ngrams", "text_fingerprint",
-             "text_repetition", "text_topk_per_source",
-             "dedup_ngram_jaccard", "curation_pack_sequences",
-             "curation_split", "sim_ivf_kmeans", "sim_lsh_topk",
-             "multimodal_meta", "multimodal_frames")
-    q = {**{k: q[k] for k in _HEAD if k in q},
-         **{k: v for k, v in q.items()
-            if k not in _TAIL and k not in _HEAD},
-         **{k: q[k] for k in _TAIL if k in q}}
-    return q
-
-
-# ------------------------------------------------------------------ oracles
 def oracle_sql() -> dict[str, str]:
-    P = EVENTS_PTS_SQL
-    PI = EVENTS_PTS_INT_SQL
-    o: dict[str, str] = {}
-    # decimal-accumulated double sum, the mirror of
-    # functions/stable.py::stable_dsum — exact, associative,
-    # partition-order-free on BOTH engines
-    _SD = ("CAST(sum(CAST(CAST({x} AS DOUBLE)"
-           " AS DECIMAL(38,18))) AS DOUBLE)")
-
-    # 1e6-scaled long sum, the mirror of stable.py::scaled_dsum —
-    # the cheap path for money-like sums (every step IEEE-identical
-    # on both engines)
-    from siridb_server_spark.functions.stable import (INT_PPM_SQL,
-                                                      SCALED_DSUM_SQL)
-
-    def _SC6(x: str) -> str:
-        return SCALED_DSUM_SQL.format(x=x, s=10 ** 6)
-
-    # exact parts-per-million of two integer columns, the mirror of
-    # stable.py::int_ppm — pure integer math, byte-identical hashes
-    _PPM = INT_PPM_SQL
-
-    from siridb_server_spark.functions.stable import SCALED_TERM_SQL
-
-    def _QTERM(x: str) -> str:
-        # one micro-unit quantized term, the mirror of
-        # stable.py::scaled_term at scale 6. CONTRACT (see
-        # ARCHITECTURE.md "Hashed oracle contract policy"): the
-        # expression x must be built ONLY from correctly-rounded
-        # IEEE ops (+, -, ×, /, sqrt, floor, least/greatest) over
-        # exact integer-derived values — then both engines compute a
-        # bit-identical double and the quantization can never
-        # diverge. ln/exp/pow are forbidden here; their scores are
-        # pytest-verified instead (tests/test_contract_policy.py
-        # enforces this).
-        return SCALED_TERM_SQL.format(x=x, s=10 ** 6)
-
-    def _QTERM2(x: str) -> str:
-        # cents (scale 2) — for money-like columns with 2 decimals
-        return SCALED_TERM_SQL.format(x=x, s=10 ** 2)
-
-    o["siri_count_bucket"] = _bucket_sql("count(*)", H)
-    # decimal-fold mirrors (pipeline.stable_double_sum): both
-    # engines quantize each term once and fold exactly, so the
-    # pre-round double is bit-identical by construction
-    o["siri_sum_bucket"] = _bucket_sql(
-        "CAST(sum(CAST(val AS DECIMAL(38,18))) AS DOUBLE)", H, nd=4)
-    o["siri_mean_bucket"] = _bucket_sql(
-        "(CAST(sum(CAST(val AS DECIMAL(38,18))) AS DOUBLE) / count(val))", D6, nd=6)
-    o["siri_min_bucket"] = _bucket_sql("min(val)", D6)
-    o["siri_max_bucket"] = _bucket_sql("max(val)", D6)
-    o["siri_median_bucket"] = _bucket_sql("quantile_cont(val, 0.5)",
-                                          D6, nd=6)
-    for name, idx in (("siri_median_low_bucket", "(n - 1) // 2 + 1"),
-                      ("siri_median_high_bucket", "n // 2 + 1")):
-        o[name] = (
-            f"{P}, b AS (SELECT series,"
-            f" ((ts + {D6 - 1}) // {D6}) * {D6} AS ts, val,"
-            " row_number() OVER (PARTITION BY series,"
-            f" ((ts + {D6 - 1}) // {D6}) ORDER BY val) AS rn,"
-            " count(*) OVER (PARTITION BY series,"
-            f" ((ts + {D6 - 1}) // {D6})) AS n FROM pts)"
-            f" SELECT series, ts, val FROM b WHERE rn = {idx}"
-        )
-    o["siri_variance_bucket"] = _bucket_sql(
-        "coalesce(var_samp(val), 0.0)", D6, nd=6)
-    o["siri_pvariance_bucket"] = _bucket_sql(
-        "coalesce(var_pop(val), 0.0)", D6, nd=6)
-    o["siri_stddev_bucket"] = _bucket_sql(
-        "coalesce(stddev_samp(val), 0.0)", D6, nd=6)
-    for name, rn in (("siri_first_bucket", "ASC"),
-                     ("siri_last_bucket", "DESC")):
-        o[name] = (
-            f"{P}, b AS (SELECT series,"
-            f" ((ts + {D6 - 1}) // {D6}) * {D6} AS bts, val,"
-            " row_number() OVER (PARTITION BY series,"
-            f" ((ts + {D6 - 1}) // {D6}) ORDER BY ts {rn}, seq {rn})"
-            " AS rn FROM pts)"
-            " SELECT series, bts AS ts, val FROM b WHERE rn = 1"
-        )
-    o["siri_difference_bucket"] = (
-        f"{P}, b AS (SELECT series,"
-        f" ((ts + {D6 - 1}) // {D6}) * {D6} AS bts, val,"
-        " row_number() OVER (PARTITION BY series,"
-        f" ((ts + {D6 - 1}) // {D6}) ORDER BY ts, seq) AS rf,"
-        " row_number() OVER (PARTITION BY series,"
-        f" ((ts + {D6 - 1}) // {D6}) ORDER BY ts DESC, seq DESC) AS rl"
-        " FROM pts)"
-        " SELECT series, bts AS ts,"
-        " max(CASE WHEN rl = 1 THEN val END)"
-        " - max(CASE WHEN rf = 1 THEN val END) AS val"
-        " FROM b GROUP BY 1, 2"
-    )
-    o["siri_derivative_bucket"] = (
-        f"{P}, b AS (SELECT series,"
-        f" ((ts + {D6 - 1}) // {D6}) * {D6} AS bts, val,"
-        " row_number() OVER (PARTITION BY series,"
-        f" ((ts + {D6 - 1}) // {D6}) ORDER BY ts, seq) AS rf,"
-        " row_number() OVER (PARTITION BY series,"
-        f" ((ts + {D6 - 1}) // {D6}) ORDER BY ts DESC, seq DESC) AS rl"
-        " FROM pts)"
-        " SELECT series, bts AS ts,"
-        " round((max(CASE WHEN rl = 1 THEN val END)"
-        f" - max(CASE WHEN rf = 1 THEN val END)) * (1000000000.0 / {D6}),"
-        " 6) + 0.0 AS val FROM b GROUP BY 1, 2"
-    )
-
-    o["siri_sum_int_bucket"] = (
-        f"{PI} SELECT series, ((ts + {D6 - 1}) // {D6}) * {D6} AS ts,"
-        " CAST(sum(val) AS BIGINT) AS val FROM pts GROUP BY 1, 2"
-    )
-    o["siri_minmax_int_to_one"] = (
-        f"{PI} SELECT series, max(ts) AS ts, max(val) AS val"
-        " FROM pts GROUP BY 1"
-    )
-
-    o["siri_difference_points"] = (
-        f"{P}, f AS (SELECT * FROM pts WHERE val > 190)"
-        " SELECT series, ts, val - lag(val) OVER"
-        " (PARTITION BY series ORDER BY ts, seq) AS val FROM f"
-        " QUALIFY lag(val) OVER (PARTITION BY series ORDER BY ts, seq)"
-        " IS NOT NULL"
-    )
-    o["siri_derivative_points"] = (
-        f"{P}, f AS (SELECT * FROM pts WHERE series IN"
-        " ('purchase|1', 'error|2'))"
-        " SELECT series, ts, round((val - lag(val) OVER w)"
-        " / CAST(ts - lag(ts) OVER w AS DOUBLE) * 1000000000.0, 6)"
-        " + 0.0 AS val"
-        " FROM f WINDOW w AS (PARTITION BY series ORDER BY ts, seq)"
-        " QUALIFY lag(ts) OVER w IS NOT NULL"
-    )
-    o["siri_interval"] = (
-        f"{P}, f AS (SELECT * FROM pts WHERE"
-        " regexp_matches(series, '^(?:error.*)'))"
-        " SELECT series, ts, ts - lag(ts) OVER"
-        " (PARTITION BY series ORDER BY ts, seq) AS val FROM f"
-        " QUALIFY lag(ts) OVER (PARTITION BY series ORDER BY ts, seq)"
-        " IS NOT NULL"
-    )
-    o["siri_timeval"] = (
-        f"{P} SELECT series, ts, ts AS val FROM pts"
-        " WHERE regexp_matches(series, '^(?:signup.*)')"
-    )
-    o["siri_filter_range"] = (
-        f"{P} SELECT series, ts, val FROM pts"
-        " WHERE val > 50 AND val <= 150"
-    )
-
-    o["siri_count_to_one"] = (
-        f"{P} SELECT series, max(ts) AS ts, count(*) AS val"
-        " FROM pts GROUP BY 1"
-    )
-    o["siri_first_to_one"] = (
-        f"{P}, b AS (SELECT series, ts, val, row_number() OVER"
-        " (PARTITION BY series ORDER BY ts, seq) AS rn,"
-        " min(ts) OVER (PARTITION BY series) AS fts FROM pts)"
-        " SELECT series, fts AS ts, val FROM b WHERE rn = 1"
-    )
-
-    o["siri_set_algebra"] = (
-        f"{P} SELECT series, max(ts) AS ts, count(*) AS val FROM pts"
-        " WHERE (regexp_matches(series, '^(?:error.*)')"
-        " OR regexp_matches(series, '^(?:signup.*)'))"
-        " AND series <> 'error|13' GROUP BY 1"
-    )
-    o["siri_where_length"] = (
-        f"{P}, keep AS (SELECT series FROM pts GROUP BY 1"
-        " HAVING count(*) > 20),"
-        " b AS (SELECT p.series, ts, val, row_number() OVER"
-        " (PARTITION BY p.series ORDER BY ts DESC, seq DESC) AS rn,"
-        " max(ts) OVER (PARTITION BY p.series) AS lts"
-        " FROM pts p JOIN keep k ON p.series = k.series)"
-        " SELECT series, lts AS ts, val FROM b WHERE rn = 1"
-    )
-    o["siri_between_mean"] = (
-        f"{P} SELECT series, ((ts + {D6 - 1}) // {D6}) * {D6} AS ts,"
-        " round((CAST(sum(CAST(val AS DECIMAL(38,18))) AS DOUBLE) / count(val)), 6) + 0.0 AS val FROM pts"
-        f" WHERE ts >= {BETWEEN_A} AND ts < {BETWEEN_B} GROUP BY 1, 2"
-    )
-    for name, order in (("siri_head", "ASC"), ("siri_tail", "DESC")):
-        o[name] = (
-            f"{P}, b AS (SELECT series, ts, val, row_number() OVER"
-            f" (PARTITION BY series ORDER BY ts {order}, seq {order})"
-            " AS rn FROM pts WHERE"
-            " regexp_matches(series, '^(?:purchase.*)'))"
-            " SELECT series, ts, val FROM b WHERE rn <= 3"
-        )
-
-    o["siri_merge_using_mean"] = (
-        f"{P} SELECT 'all' AS series,"
-        f" ((ts + {D6 - 1}) // {D6}) * {D6} AS ts,"
-        " round((CAST(sum(CAST(val AS DECIMAL(38,18))) AS DOUBLE) / count(val)), 6) + 0.0 AS val FROM pts GROUP BY 1, 2"
-    )
-    # offset: the engine sweeps (aggregate.c:1188-1220) — with a dense
-    # merged stream every bucket is (B_{k-1}, B_k], B_k = k*g + off,
-    # except the first, labeled GROUP_TS(min_ts)
-    o["siri_offset_bucket"] = (
-        f"{P}, m AS (SELECT ((min(ts) + {D6 - 1}) // {D6}) * {D6}"
-        f" + {H} AS l1 FROM pts)"
-        " SELECT 'all' AS series,"
-        " CASE WHEN ts <= l1 THEN l1 ELSE"
-        f" ((ts - {H} + {D6 - 1}) // {D6}) * {D6} + {H} END AS ts,"
-        " count(*) AS val FROM pts, m GROUP BY 1, 2"
-    )
-
-    # limit(N, mean): the reference's adaptive downsample
-    # (aggregate.c:677-694) — per-series computed g/off feeding the
-    # same sweep (aggregate.c:1188-1220), here via its window-function
-    # closed form (jump = bucket min in the offset tail; absorption
-    # alternates within runs of adjacent jumping buckets)
-    _LN = 20
-    o["siri_limit_downsample"] = (
-        f"{P},"
-        " st AS (SELECT series, min(ts) AS f, max(ts) AS l,"
-        " count(*) AS n FROM pts GROUP BY 1),"
-        f" par AS (SELECT series, n, (l - f) // {_LN} + 1 AS g,"
-        f" (f - 1) % ((l - f) // {_LN} + 1) AS off FROM st),"
-        " small AS (SELECT p.series, p.ts, round(p.val, 6) + 0.0 AS val"
-        f" FROM pts p JOIN par USING (series) WHERE n <= {_LN}),"
-        " cand AS (SELECT p.series, p.ts, p.val, g, off,"
-        " ((p.ts - off + g - 1) // g) * g + off AS b"
-        f" FROM pts p JOIN par USING (series) WHERE n > {_LN}),"
-        " bst AS (SELECT series, b, any_value(g) AS g,"
-        " any_value(off) AS off, min(ts) AS m FROM cand GROUP BY 1, 2),"
-        " chain AS (SELECT series, b, g, off, m, (m > b - off) AS jump,"
-        " coalesce(lag(m > b - off) OVER w AND b = lag(b) OVER w + g,"
-        " FALSE) AS c, row_number() OVER w AS rn FROM bst"
-        " WINDOW w AS (PARTITION BY series ORDER BY b)),"
-        " runs AS (SELECT series, b, g, jump, c, rn,"
-        " max(CASE WHEN NOT c THEN rn END)"
-        " OVER (PARTITION BY series ORDER BY b ROWS UNBOUNDED"
-        " PRECEDING) AS runstart FROM chain),"
-        " lab AS (SELECT series, b,"
-        " CASE WHEN c AND (rn - runstart) % 2 = 1 THEN b"
-        " WHEN jump THEN b + g ELSE b END AS label FROM runs),"
-        " big AS (SELECT c.series, lab.label AS ts,"
-        " round((CAST(sum(CAST(c.val AS DECIMAL(38,18))) AS DOUBLE)"
-        " / count(c.val)), 6) + 0.0 AS val FROM cand c"
-        " JOIN lab ON c.series = lab.series AND c.b = lab.b"
-        " GROUP BY 1, 2)"
-        " SELECT * FROM small UNION ALL SELECT * FROM big"
-    )
-
-    o["siri_catalog"] = (
-        f"{P} SELECT series AS name,"
-        " 'float' AS type, count(*) AS length,"
-        " min(ts) AS start, max(ts) AS end_ts FROM pts GROUP BY 1"
-    )
-    o["siri_count_series_length"] = (
-        f"{P} SELECT count(*) AS total_points FROM pts"
-    )
-
-    # --- dedup / text / similarity / multimodal
-    o["dedup_exact"] = (
-        "SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,"
-        " count(*) AS n_copies FROM documents GROUP BY 1"
-    )
-    # CDC tiling: the oracle computes the per-source byte totals
-    # WITHOUT running the chunker — equality proves every document
-    # in the corpus was tiled exactly (no lost/overlapping bytes)
-    o["dedup_cdc_tiling"] = (
-        "SELECT source, count(*) AS n_docs,"
-        " CAST(sum(strlen(text)) AS BIGINT) AS total_bytes"
-        " FROM documents WHERE text IS NOT NULL AND strlen(text) > 0"
-        " GROUP BY 1"
-    )
-    # CDC resync: constants computed from the deterministic fixture
-    # (LCG corpus, xxhash64 chunk hashes — both engine-independent);
-    # the property itself is what the numbers SAY: 18/19 chunks
-    # survive a header insert or a mid-document edit, 0 survive a
-    # content swap
-    # HLL sketches: the oracle rebuilds the register table from md5
-    # in pure SQL (operators/sketches.py HLL_REGISTERS_SQL) — both
-    # entries hash against the DIRECT construction, so the merge
-    # entry's equality IS the mergeability theorem
-    from siridb_server_spark.operators.sketches import \
-        HLL_REGISTERS_SQL as _HLL
-    _hll_direct = (
-        "SELECT event_type, bucket, CAST(max(rho) AS INT) AS rho"
-        " FROM (" + _HLL.format(
-            member="CAST(user_id AS VARCHAR)", keys="event_type",
-            table="events") + ") GROUP BY 1, 2")
-    o["sketch_hll_registers"] = _hll_direct
-    o["sketch_hll_merge"] = _hll_direct
-    _kmv_direct = (
-        "WITH hs AS (SELECT DISTINCT event_type,"
-        " CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))"
-        " AS BIGINT) AS h FROM events WHERE user_id IS NOT NULL),"
-        " r AS (SELECT event_type, h, row_number() OVER"
-        " (PARTITION BY event_type ORDER BY h) AS pos FROM hs)"
-        " SELECT event_type, CAST(pos AS INT) AS pos, h FROM r"
-        " WHERE pos <= 256")
-    o["sketch_kmv_values"] = _kmv_direct
-    o["sketch_kmv_merge"] = _kmv_direct
-    # quantile sketch: the oracle rebuilds the bottom-k priority
-    # sample from the same md5 expression; merge hashes against the
-    # DIRECT construction (= the mergeability theorem), estimates
-    # replay the integer ceil-rank order statistic, and the accuracy
-    # audit recomputes exact population ranks — every hashed column
-    # integer or a source-value pass-through
-    _qsk_cte = (
-        "WITH s AS (SELECT DISTINCT event_type, value AS val,"
-        " CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))"
-        " AS BIGINT) AS pri FROM events WHERE value IS NOT NULL"
-        " AND event_id IS NOT NULL),"
-        " r AS (SELECT event_type, pri, val, row_number() OVER"
-        " (PARTITION BY event_type ORDER BY pri, val) AS pos FROM s),"
-        " sk AS (SELECT event_type, pri, val, CAST(pos AS INT) AS pos"
-        " FROM r WHERE pos <= 256)")
-    _qsk_direct = (_qsk_cte +
-                   " SELECT event_type, pos, pri, val FROM sk")
-    o["sketch_quantile_sample"] = _qsk_direct
-    o["sketch_quantile_merge"] = _qsk_direct
-    # bloom membership: build (md5 7-hex slices mod 2^16, distinct
-    # bits) AND probe (semi-join + hits==4) replayed end to end —
-    # the FP count is a deterministic VALUE, not a tolerance
-    _bloom_pos = ("unnest(["
-                  "('0x' || substr(md5(w), 1, 7))::BIGINT % 65536,"
-                  "('0x' || substr(md5(w), 8, 7))::BIGINT % 65536,"
-                  "('0x' || substr(md5(w), 15, 7))::BIGINT % 65536,"
-                  "('0x' || substr(md5(w), 22, 7))::BIGINT % 65536"
-                  "]) AS bit")
-    o["sketch_bloom_membership"] = (
-        "WITH tok AS (SELECT doc_id,"
-        " list_filter(string_split(lower(trim(text)), ' '),"
-        " x -> x <> '') AS wl FROM documents),"
-        " grams AS (SELECT doc_id, unnest(list_distinct("
-        " list_transform(range(1, greatest(len(wl) - 2, 1) + 1),"
-        " i -> array_to_string(wl[i:i+2], ' ')))) AS w FROM tok),"
-        " ref AS (SELECT DISTINCT w FROM grams"
-        " WHERE doc_id % 20 <> 0),"
-        " probe AS (SELECT DISTINCT w FROM grams"
-        " WHERE doc_id % 20 = 0),"
-        f" rpos AS (SELECT w, {_bloom_pos} FROM ref),"
-        " bits AS (SELECT DISTINCT bit FROM rpos),"
-        f" ppos AS (SELECT w, {_bloom_pos} FROM probe),"
-        " rh AS (SELECT w, count(*) AS hits FROM rpos"
-        " SEMI JOIN bits USING (bit) GROUP BY 1),"
-        " ph AS (SELECT w, count(*) AS hits FROM ppos"
-        " SEMI JOIN bits USING (bit) GROUP BY 1)"
-        " SELECT 'bits_set' AS prop, CAST(count(*) AS BIGINT) AS n"
-        " FROM bits"
-        " UNION ALL SELECT 'ref_total', count(*) FROM ref"
-        " UNION ALL SELECT 'ref_missed', count(*) FROM ref"
-        " LEFT JOIN rh USING (w) WHERE coalesce(hits, 0) <> 4"
-        " UNION ALL SELECT 'probe_total', count(*) FROM probe"
-        " UNION ALL SELECT 'probe_flagged', count(*) FROM ph"
-        " WHERE hits = 4"
-    )
-    # bloom-approximate per-doc novelty: the same build replayed,
-    # probed per (doc, shingle) with the hits==4 verdict
-    o["dedup_bloom_novelty"] = (
-        "WITH tok AS (SELECT doc_id,"
-        " list_filter(string_split(lower(trim(text)), ' '),"
-        " x -> x <> '') AS wl FROM documents),"
-        " grams AS (SELECT doc_id, unnest(list_distinct("
-        " list_transform(range(1, greatest(len(wl) - 2, 1) + 1),"
-        " i -> array_to_string(wl[i:i+2], ' ')))) AS w FROM tok),"
-        " ref AS (SELECT DISTINCT w FROM grams"
-        " WHERE doc_id % 20 <> 0),"
-        f" rpos AS (SELECT w, {_bloom_pos} FROM ref),"
-        " bits AS (SELECT DISTINCT bit FROM rpos),"
-        " new AS (SELECT doc_id, w FROM grams"
-        " WHERE doc_id % 20 = 0),"
-        f" npos AS (SELECT doc_id, w, {_bloom_pos} FROM new),"
-        " nh AS (SELECT doc_id, w, count(*) AS hits FROM npos"
-        " SEMI JOIN bits USING (bit) GROUP BY 1, 2),"
-        " seen AS (SELECT doc_id, count(*) AS n_seen FROM nh"
-        " WHERE hits = 4 GROUP BY 1),"
-        " tot AS (SELECT doc_id, count(*) AS n_ngrams FROM new"
-        " GROUP BY 1)"
-        " SELECT t.doc_id, CAST(t.n_ngrams AS BIGINT) AS n_ngrams,"
-        " CAST(coalesce(s.n_seen, 0) AS BIGINT) AS n_seen"
-        " FROM tot t LEFT JOIN seen s USING (doc_id)"
-    )
-    _qsk_est = (
-        _qsk_cte + ","
-        " rv AS (SELECT event_type, val, row_number() OVER"
-        " (PARTITION BY event_type ORDER BY val, pri) AS pos FROM sk),"
-        " kk AS (SELECT event_type, CAST(max(pos) AS INT) AS sample_n"
-        " FROM rv GROUP BY 1),"
-        " qs AS (SELECT CAST(unnest([500000, 900000, 990000]) AS INT)"
-        " AS q_ppm),"
-        " tgt AS (SELECT event_type, q_ppm, sample_n,"
-        " GREATEST(1, LEAST(CAST((CAST(q_ppm AS BIGINT) * sample_n"
-        " + 999999) // 1000000 AS INT), sample_n)) AS tpos"
-        " FROM kk, qs)"
-        " SELECT t.event_type, t.q_ppm, t.sample_n, rv.val AS est"
-        " FROM tgt t JOIN rv ON rv.event_type = t.event_type"
-        " AND rv.pos = t.tpos")
-    o["sketch_quantile_estimates"] = _qsk_est
-    # SAX words: full SQL mirror — same ts-then-val ordering, the
-    # integer bucket/PAA/breakpoint arithmetic replayed verbatim
-    # (both engines truncate integer division toward zero)
-    o["ts_sax_words"] = (
-        EVENTS_PTS_SQL + ","
-        " r AS (SELECT series,"
-        " CAST(floor(val * 1000.0) AS BIGINT) AS v,"
-        " row_number() OVER (PARTITION BY series"
-        " ORDER BY ts, val) AS rn FROM pts),"
-        " tk AS (SELECT series, v, rn - 1 AS i FROM r"
-        " WHERE rn <= 128),"
-        " nn AS (SELECT series, count(*) AS n FROM tk GROUP BY 1),"
-        " b AS (SELECT tk.series,"
-        " (CAST(tk.i AS BIGINT) * 8) // nn.n AS j, tk.v, nn.n"
-        " FROM tk JOIN nn USING (series)),"
-        " paa AS (SELECT series, j,"
-        " CAST(sum(v) AS BIGINT) // count(*) AS paa,"
-        " max(n) AS n FROM b GROUP BY 1, 2),"
-        " rng AS (SELECT series, min(paa) AS lo, max(paa) AS hi,"
-        " max(n) AS n_points FROM paa GROUP BY 1),"
-        " sym AS (SELECT p.series, p.j,"
-        " LEAST(3, CAST((p.paa - g.lo) * 4 AS BIGINT)"
-        " // (g.hi - g.lo + 1)) AS s, g.n_points"
-        " FROM paa p JOIN rng g USING (series))"
-        " SELECT series, CAST(max(n_points) AS BIGINT) AS n_points,"
-        " string_agg(substr('0123', CAST(s AS INT) + 1, 1), ''"
-        " ORDER BY j) AS word FROM sym GROUP BY 1")
-    # content ids: the same md5(salt || NUL || text) 60-bit
-    # truncation in SQL
-    o["corpus_assign_ids"] = (
-        "SELECT doc_id,"
-        " CAST(('0x' || substr(md5(coalesce(CAST(source AS VARCHAR),"
-        " '') || chr(0) || coalesce(text, '')), 1, 15)) AS BIGINT)"
-        " AS content_id FROM documents")
-    # DTW: property oracle — a recursive DP has no SQL mirror; the
-    # DP itself is pinned exactly in pytest against a reference
-    # implementation (test_dtw_topk_matches_reference_dp)
-    o["ts_dtw_topk"] = (
-        "SELECT 'k_returned' AS prop, CAST(10 AS BIGINT) AS n"
-        " UNION ALL SELECT 'top1_is_query_at_zero', 1"
-        " UNION ALL SELECT 'neg_cost_rows', 0")
-    # SAX-gated DTW: the gate is heuristic candidate generation
-    # with exact re-scoring, so the CONTRACT is equality with the
-    # unfiltered ranking (computed Spark-side on both paths and
-    # pinned here as the property)
-    o["ts_dtw_prefilter"] = (
-        "SELECT 'k_returned' AS prop, CAST(10 AS BIGINT) AS n"
-        " UNION ALL SELECT 'equal_to_unfiltered', 1"
-        " UNION ALL SELECT 'top1_is_query_at_zero', 1")
-    # batch DTW join: contract is per-query equality with the
-    # (itself exactness-proven) dtw_topk prefilter loop
-    o["ts_dtw_knn_join"] = (
-        "SELECT 'n_queries_served' AS prop, CAST(3 AS BIGINT) AS n"
-        " UNION ALL SELECT 'equal_to_per_query_loop', 1"
-        " UNION ALL SELECT"
-        " 'each_query_ranks_self_first_at_zero', 1")
-    # skew report: exact counts + integer ppm shares, ties to key
-    o["corpus_skew_report"] = (
-        "WITH c AS (SELECT event_type || '|' ||"
-        " CAST(user_id AS VARCHAR) AS key, count(*) AS n"
-        " FROM events GROUP BY 1),"
-        " t AS (SELECT sum(n) AS t FROM c)"
-        " SELECT key, CAST(n AS BIGINT) AS n,"
-        " CAST(t.t AS BIGINT) AS total,"
-        " CAST(n * 1000000 // t.t AS BIGINT) AS share_ppm"
-        " FROM c, t ORDER BY n DESC, key LIMIT 10")
-    # sketch-driven curation gate: the same bottom-k construction
-    # per source over n_chars, estimates at 50k/950k ppm, keep bits
-    # replayed exactly
-    o["curation_quantile_filter"] = (
-        "WITH s AS (SELECT DISTINCT source, n_chars AS val,"
-        " CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))"
-        " AS BIGINT) AS pri FROM documents"
-        " WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),"
-        " r AS (SELECT source, pri, val, row_number() OVER"
-        " (PARTITION BY source ORDER BY pri, val) AS pos FROM s),"
-        " sk AS (SELECT source, pri, val FROM r WHERE pos <= 256),"
-        " rv AS (SELECT source, val, row_number() OVER"
-        " (PARTITION BY source ORDER BY val, pri) AS pos FROM sk),"
-        " kk AS (SELECT source, CAST(max(pos) AS INT) AS sample_n"
-        " FROM rv GROUP BY 1),"
-        " qs AS (SELECT CAST(unnest([50000, 950000]) AS INT)"
-        " AS q_ppm),"
-        " tgt AS (SELECT source, q_ppm, sample_n,"
-        " GREATEST(1, LEAST(CAST((CAST(q_ppm AS BIGINT) * sample_n"
-        " + 999999) // 1000000 AS INT), sample_n)) AS tpos"
-        " FROM kk, qs),"
-        " est AS (SELECT t.source, t.q_ppm, rv.val AS est"
-        " FROM tgt t JOIN rv ON rv.source = t.source"
-        " AND rv.pos = t.tpos),"
-        " b AS (SELECT source,"
-        " min(CASE WHEN q_ppm = 50000 THEN est END) AS lo,"
-        " min(CASE WHEN q_ppm = 950000 THEN est END) AS hi"
-        " FROM est GROUP BY 1)"
-        " SELECT d.doc_id, d.source,"
-        " CAST(d.n_chars AS BIGINT) AS value,"
-        " CAST(b.lo AS BIGINT) AS lo, CAST(b.hi AS BIGINT) AS hi,"
-        " d.n_chars >= b.lo AND d.n_chars <= b.hi AS keep"
-        " FROM documents d JOIN b USING (source)"
-        " WHERE d.n_chars IS NOT NULL")
-    o["sketch_quantile_accuracy"] = (
-        "WITH est AS (" + _qsk_est + ")"
-        " SELECT e.event_type, est.q_ppm,"
-        " CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(CASE WHEN e.value <= est.est THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS exact_rank,"
-        " CAST((CAST(est.q_ppm AS BIGINT) * count(*) + 999999)"
-        " // 1000000 AS BIGINT) AS target_rank,"
-        " CAST(abs(sum(CASE WHEN e.value <= est.est THEN 1 ELSE 0"
-        " END) - (CAST(est.q_ppm AS BIGINT) * count(*) + 999999)"
-        " // 1000000) AS BIGINT) AS abs_err"
-        " FROM events e JOIN est ON e.event_type = est.event_type"
-        " WHERE e.value IS NOT NULL GROUP BY 1, 2, est.est")
-    # vocab drift: identical mutation, tokenization, integer
-    # cross-product deviation, and top-k tie-break in SQL
-    o["text_vocab_drift"] = (
-        "WITH newdocs AS (SELECT doc_id, CASE WHEN source = 'web'"
-        " THEN coalesce(text, '') ||"
-        " ' driftmarker phrase injected' ELSE text END AS text"
-        " FROM documents),"
-        " wo AS (SELECT unnest(string_split_regex(lower(text),"
-        " '[^a-z0-9'']+')) AS term FROM documents),"
-        " wn AS (SELECT unnest(string_split_regex(lower(text),"
-        " '[^a-z0-9'']+')) AS term FROM newdocs),"
-        " co AS (SELECT term, count(*) AS c_old FROM wo"
-        " WHERE term <> '' GROUP BY 1),"
-        " cn AS (SELECT term, count(*) AS c_new FROM wn"
-        " WHERE term <> '' GROUP BY 1),"
-        " t AS (SELECT (SELECT sum(c_old) FROM co) AS t_old,"
-        " (SELECT sum(c_new) FROM cn) AS t_new),"
-        " j AS (SELECT coalesce(co.term, cn.term) AS term,"
-        " coalesce(c_old, 0) AS c_old, coalesce(c_new, 0) AS c_new"
-        " FROM co FULL OUTER JOIN cn ON co.term = cn.term)"
-        " SELECT term, CAST(c_old AS BIGINT) AS c_old,"
-        " CAST(c_new AS BIGINT) AS c_new,"
-        " CAST(abs(c_old * t_new - c_new * t_old) AS BIGINT) AS dev,"
-        " CAST(t_old AS BIGINT) AS t_old,"
-        " CAST(t_new AS BIGINT) AS t_new FROM j, t"
-        " ORDER BY dev DESC, term LIMIT 20"
-    )
-    # corpus diff: the oracle rebuilds the same mutated snapshot and
-    # the same full-outer md5 compare (NULL text gets its own class)
-    o["curation_corpus_diff"] = (
-        "WITH oldh AS (SELECT doc_id,"
-        " md5(coalesce(text, chr(0) || 'null')) AS ho"
-        " FROM documents),"
-        " kept AS (SELECT doc_id, CASE WHEN doc_id % 89 = 0"
-        " THEN 'REVISED:: ' || coalesce(text, '') ELSE text END"
-        " AS text FROM documents WHERE doc_id % 97 <> 0),"
-        " added AS (SELECT doc_id + 10000000 AS doc_id, text"
-        " FROM documents WHERE doc_id % 101 = 0),"
-        " newh AS (SELECT doc_id,"
-        " md5(coalesce(text, chr(0) || 'null')) AS hn"
-        " FROM (SELECT * FROM kept UNION ALL SELECT * FROM added))"
-        " SELECT coalesce(oldh.doc_id, newh.doc_id) AS doc_id,"
-        " CASE WHEN ho IS NULL THEN 'added'"
-        " WHEN hn IS NULL THEN 'removed'"
-        " WHEN ho <> hn THEN 'changed' ELSE 'same' END AS status"
-        " FROM oldh FULL OUTER JOIN newh"
-        " ON oldh.doc_id = newh.doc_id"
-    )
-    # retrieval eval: full SQL mirror — tf ranking with identical
-    # tie-break, containment qrels, and the same integer metrics
-    o["eval_retrieval_metrics"] = (
-        "WITH q AS (SELECT unnest(['hash', 'join', 'model',"
-        " 'data', 'spark']) AS query),"
-        " w AS (SELECT doc_id,"
-        " unnest(string_split_regex(lower(text), '[^a-z0-9'']+'))"
-        " AS w FROM documents),"
-        " tf AS (SELECT query, doc_id, count(*) AS tf FROM w"
-        " JOIN q ON w = query GROUP BY 1, 2),"
-        " run AS (SELECT query, doc_id, rank FROM ("
-        " SELECT query, doc_id, row_number() OVER ("
-        " PARTITION BY query ORDER BY tf DESC, doc_id) AS rank"
-        " FROM tf) WHERE rank <= 10),"
-        " qrels AS (SELECT DISTINCT query, doc_id FROM w"
-        " JOIN q ON w = query),"
-        " nrel AS (SELECT query, count(*) AS n_rel FROM qrels"
-        " GROUP BY 1),"
-        " hit AS (SELECT run.query, count(*) AS hits_at_k,"
-        " min(rank) AS first_rank FROM run JOIN qrels"
-        " ON run.query = qrels.query AND run.doc_id = qrels.doc_id"
-        " GROUP BY 1)"
-        " SELECT nrel.query, CAST(n_rel AS BIGINT) AS n_rel,"
-        " CAST(coalesce(hits_at_k, 0) AS BIGINT) AS hits_at_k,"
-        " CAST(coalesce(2520 / first_rank, 0) AS BIGINT)"
-        " AS rr_x2520"
-        " FROM nrel LEFT JOIN hit ON nrel.query = hit.query"
-    )
-    # TFRecord round-trip: the oracle reads the SAME rows straight
-    # from parquet — equality proves the export→CRC→proto→read chain
-    # reproduced every record exactly
-    o["io_tfrecord_roundtrip"] = (
-        "SELECT doc_id,"
-        " CAST(length(coalesce(text, '')) AS BIGINT) AS n_chars,"
-        " coalesce(source, '') AS source FROM documents"
-    )
-    o["io_arrowipc_roundtrip"] = o["io_tfrecord_roundtrip"]
-    o["dedup_cdc_resync"] = (
-        "SELECT pair, CAST(n_shared AS BIGINT) AS n_shared,"
-        " CAST(n_left AS BIGINT) AS n_left,"
-        " CAST(n_right AS BIGINT) AS n_right FROM (VALUES"
-        " ('header_insert', 18, 19, 19),"
-        " ('mid_edit', 18, 19, 19),"
-        " ('unrelated', 0, 19, 15))"
-        " AS t(pair, n_shared, n_left, n_right)"
-    )
-    # dwf applies the same max_df=100000 posting-list cutoff as the
-    # Spark entries (dedup._cap_posting_lists): sizes and the
-    # inverted-index join both read the CAPPED postings, so the SQL
-    # stays the exact mirror even at a scale where the cutoff binds
-    o["dedup_ngram_jaccard"] = (
-        "WITH dw AS (SELECT DISTINCT doc_id,"
-        " unnest(string_split(lower(trim(text)), ' ')) AS w"
-        " FROM documents WHERE doc_id < 300),"
-        " dwf AS (SELECT * FROM dw WHERE w <> ''"
-        " AND w IN (SELECT w FROM dw WHERE w <> ''"
-        " GROUP BY 1 HAVING count(*) <= 100000)),"
-        " sz AS (SELECT doc_id, count(*) AS n FROM dwf GROUP BY 1),"
-        " i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-        " count(*) AS i FROM dwf a JOIN dwf b ON a.w = b.w"
-        " AND a.doc_id < b.doc_id GROUP BY 1, 2)"
-        " SELECT id_a, id_b,"
-        " round(i * 1.0 / (sa.n + sb.n - i), 6) + 0.0 AS jaccard"
-        " FROM i JOIN sz sa ON id_a = sa.doc_id"
-        " JOIN sz sb ON id_b = sb.doc_id"
-        " WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.8"
-    )
-    # asymmetric containment (excerpt detection): shared distinct
-    # 3-shingles over each side's own shingle count
-    o["dedup_containment"] = (
-        "WITH tok AS (SELECT doc_id, string_split_regex("
-        "lower(trim(text)), '\\s+') AS w FROM documents"
-        " WHERE doc_id < 300),"
-        " sh AS (SELECT doc_id, unnest(list_distinct("
-        "list_transform(range(1, greatest(len(w) - 2, 1) + 1),"
-        " i -> array_to_string(w[i:i+2], ' ')))) AS s FROM tok),"
-        " sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),"
-        " i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-        " count(*) AS i FROM sh a JOIN sh b ON a.s = b.s"
-        " AND a.doc_id < b.doc_id GROUP BY 1, 2)"
-        " SELECT id_a, id_b,"
-        " round(i * 1.0 / sa.n, 6) + 0.0 AS contain_a,"
-        " round(i * 1.0 / sb.n, 6) + 0.0 AS contain_b"
-        " FROM i JOIN sz sa ON id_a = sa.doc_id"
-        " JOIN sz sb ON id_b = sb.doc_id"
-        " WHERE i * 1.0 / sa.n >= 0.5 OR i * 1.0 / sb.n >= 0.5"
-    )
-
-    # train/eval decontamination: distinct shared 3-gram count per
-    # training doc against the eval slice's gram set (slice w[i:i+2]
-    # is 1-based inclusive — DuckDB's clamp at short docs matches
-    # Spark's slice(w, i, 3))
-    o["dedup_contamination"] = (
-        "WITH tok AS (SELECT doc_id,"
-        " list_filter(string_split(lower(trim(text)), ' '),"
-        " x -> x <> '') AS w FROM documents),"
-        " grams AS (SELECT doc_id, list_distinct(list_transform("
-        " range(1, greatest(len(w) - 2, 1) + 1),"
-        " i -> array_to_string(w[i:i+2], ' '))) AS gs FROM tok),"
-        " x AS (SELECT doc_id, unnest(gs) AS g FROM grams),"
-        " ev AS (SELECT DISTINCT g FROM x WHERE doc_id % 20 = 0),"
-        " tr AS (SELECT doc_id, g FROM x WHERE doc_id % 20 <> 0)"
-        " SELECT tr.doc_id, count(*) AS overlap"
-        " FROM tr JOIN ev USING (g) GROUP BY 1 HAVING count(*) >= 1"
-    )
-    # n-gram novelty: the contamination CTE reversed — the scored
-    # slice left_anti-joins the reference's distinct shingles; the
-    # oracle joins on shingle STRINGS where Spark joins on their
-    # xxhash64 (the family's established hash↔string equivalence)
-    o["text_ngram_novelty"] = (
-        "WITH tok AS (SELECT doc_id,"
-        " list_filter(string_split(lower(trim(text)), ' '),"
-        " x -> x <> '') AS w FROM documents),"
-        " grams AS (SELECT doc_id, list_distinct(list_transform("
-        " range(1, greatest(len(w) - 2, 1) + 1),"
-        " i -> array_to_string(w[i:i+2], ' '))) AS gs FROM tok),"
-        " x AS (SELECT doc_id, unnest(gs) AS g FROM grams),"
-        " new AS (SELECT doc_id, g FROM x WHERE doc_id % 20 = 0),"
-        " ref AS (SELECT DISTINCT g FROM x WHERE doc_id % 20 <> 0),"
-        " tot AS (SELECT doc_id, count(*) AS n_ngrams FROM new"
-        " GROUP BY 1),"
-        " nov AS (SELECT doc_id, count(*) AS n_novel FROM new"
-        " ANTI JOIN ref USING (g) GROUP BY 1)"
-        " SELECT t.doc_id, CAST(t.n_ngrams AS BIGINT) AS n_ngrams,"
-        " CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel"
-        " FROM tot t LEFT JOIN nov USING (doc_id)"
-    )
-    # duplicate-cluster resolution: connected components (min label
-    # reachable over the undirected near-dup graph) via recursive CTE
-    _JP = o["dedup_ngram_jaccard"]
-
-    # single-doc Jaccard retrieval: the query doc's distinct tokens
-    # prune the inverted index before any aggregation
-    o["dedup_similar_docs"] = (
-        "WITH dw AS (SELECT DISTINCT doc_id, w FROM"
-        " (SELECT doc_id, unnest(list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), x -> x <> '')) AS w"
-        " FROM documents)),"
-        " q AS (SELECT DISTINCT w FROM dw WHERE doc_id = 7),"
-        " nq AS (SELECT count(*) AS n_q FROM q),"
-        " i AS (SELECT doc_id, count(*) AS i FROM dw"
-        " JOIN q USING (w) WHERE doc_id <> 7 GROUP BY 1),"
-        " s AS (SELECT doc_id, count(*) AS n FROM dw GROUP BY 1)"
-        " SELECT i.doc_id,"
-        " round(i.i / (s.n + nq.n_q - i.i), 6) + 0.0 AS jaccard"
-        " FROM i JOIN s USING (doc_id), nq"
-        " ORDER BY jaccard DESC, doc_id LIMIT 10"
-    )
-
-    # one-row corpus redundancy report composed from the verified
-    # exact-dedup, pair-join, and connected-components oracles
-    o["dedup_pipeline_summary"] = (
-        "WITH RECURSIVE pairs AS (" + _JP + "),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS ("
-        " SELECT a, a FROM edges"
-        " UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk GROUP BY 1),"
-        " d AS (SELECT doc_id, text FROM documents"
-        " WHERE doc_id < 300),"
-        " ex AS (SELECT md5(text) AS h, count(*) AS n FROM d"
-        " GROUP BY 1),"
-        " exs AS (SELECT count(*) AS n_contents,"
-        " CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT)"
-        " AS n_docs_in_exact_dups FROM ex),"
-        " r AS (SELECT d.doc_id,"
-        " coalesce(cc.comp, d.doc_id) AS keep_id FROM d"
-        " LEFT JOIN cc ON d.doc_id = cc.node),"
-        " rs AS (SELECT count(*) AS n_docs,"
-        " CAST(sum(CASE WHEN doc_id = keep_id THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS n_keep,"
-        " count(DISTINCT CASE WHEN doc_id <> keep_id"
-        " THEN keep_id END) AS n_clusters FROM r),"
-        " ps AS (SELECT count(*) AS n_near_pairs FROM pairs)"
-        " SELECT n_docs, n_contents, n_docs_in_exact_dups,"
-        " n_near_pairs, n_clusters, n_keep FROM rs, exs, ps"
-    )
-
-    # cross-source duplication matrix over the same exact-Jaccard
-    # pairs; undirected source key ordered lexicographically
-    o["dedup_cross_source"] = (
-        "WITH pairs AS (" + _JP + "),"
-        " s AS (SELECT doc_id, coalesce(source, '(unknown)') AS source FROM documents)"
-        " SELECT least(sa.source, sb.source) AS source_a,"
-        " greatest(sa.source, sb.source) AS source_b,"
-        " count(*) AS n_pairs,"
-        f" round({_SD.format(x='jaccard')}, 6) + 0.0 AS sum_jaccard"
-        " FROM pairs JOIN s sa ON pairs.id_a = sa.doc_id"
-        " JOIN s sb ON pairs.id_b = sb.doc_id GROUP BY 1, 2"
-    )
-
-    # policy-aware resolution: same recursive-CTE components, winner
-    # = max n_chars then min id per component
-    o["dedup_resolve_quality"] = (
-        "WITH RECURSIVE pairs AS (" + _JP + "),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS ("
-        " SELECT a, a FROM edges"
-        " UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk GROUP BY 1),"
-        " d AS (SELECT doc_id, n_chars FROM documents"
-        " WHERE doc_id < 300),"
-        " wc AS (SELECT d.doc_id, d.n_chars,"
-        " coalesce(cc.comp, d.doc_id) AS comp"
-        " FROM d LEFT JOIN cc ON d.doc_id = cc.node),"
-        " win AS (SELECT comp, doc_id AS keep_id FROM"
-        " (SELECT comp, doc_id, row_number() OVER"
-        " (PARTITION BY comp ORDER BY n_chars DESC, doc_id) AS rn"
-        " FROM wc) WHERE rn = 1)"
-        " SELECT wc.doc_id, win.keep_id,"
-        " wc.doc_id = win.keep_id AS is_kept"
-        " FROM wc JOIN win USING (comp)"
-    )
-
-    o["dedup_resolve"] = (
-        "WITH RECURSIVE pairs AS (" + _JP + "),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS ("
-        " SELECT a, a FROM edges"
-        " UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk GROUP BY 1)"
-        " SELECT d.doc_id, coalesce(cc.comp, d.doc_id) AS keep_id,"
-        " d.doc_id = coalesce(cc.comp, d.doc_id) AS is_kept"
-        " FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d"
-        " LEFT JOIN cc ON d.doc_id = cc.node"
-    )
-
-    # leakage-safe split: the dedup_resolve CC plus the md5 draw on
-    # the representative — the whole cluster shares one draw
-    o["curation_leakage_safe_split"] = (
-        "WITH RECURSIVE pairs AS (" + _JP + "),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS ("
-        " SELECT a, a FROM edges"
-        " UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk GROUP BY 1),"
-        " res AS (SELECT d.doc_id,"
-        " coalesce(cc.comp, d.doc_id) AS keep_id"
-        " FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d"
-        " LEFT JOIN cc ON d.doc_id = cc.node)"
-        " SELECT doc_id, keep_id,"
-        " CASE WHEN ('0x' || substr(md5(CAST(keep_id AS VARCHAR)),"
-        " 1, 8))::BIGINT / 4294967296.0 * 1000000.0 < 200000.0"
-        " THEN 'eval' ELSE 'train' END AS split FROM res"
-    )
-    # span-level exact dedup: keep-first over non-overlapping 10-word
-    # spans; winner = min (doc_id, position) per distinct span text.
-    # Spark groups by xxhash64(span), DuckDB by the span itself — the
-    # equivalence classes (and so the winners) are identical.
-    o["dedup_spans"] = (
-        "WITH w AS (SELECT doc_id,"
-        " string_split_regex(trim(text), '\\s+') AS ws"
-        " FROM documents WHERE length(trim(text)) > 0),"
-        " s AS (SELECT doc_id, j,"
-        " array_to_string(ws[(j*10+1):(j*10+10)], ' ') AS span"
-        " FROM w, unnest(range(0, CAST(ceil(len(ws)/10.0) AS INT)))"
-        " AS t(j)),"
-        " r AS (SELECT doc_id, j, span, row_number() OVER"
-        " (PARTITION BY span ORDER BY doc_id, j) AS rn FROM s)"
-        " SELECT doc_id, count(*) AS n_spans,"
-        " CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS n_kept,"
-        " coalesce(string_agg(CASE WHEN rn = 1 THEN span END, ' '"
-        " ORDER BY j), '') AS cleaned_text"
-        " FROM r GROUP BY doc_id"
-    )
-
-    # MinHash+LSH property oracle. high_j_pairs_total is genuinely
-    # cross-engine (DuckDB recomputes exact 3-word-shingle Jaccard
-    # from scratch); the other two rows pin recall/precision
-    # invariants that hold deterministically for these tables + fixed
-    # hash functions (no pairs in the (0.35, 0.9) Jaccard gap).
-    # Shingle construction mirrors operators/dedup.py shingles():
-    # w = split(lower(trim(text)), '\\s+') (unfiltered),
-    # grams = distinct concat of w[i:i+2], i in 1..max(len-2, 1).
-    _SHJ = (
-        "WITH tok AS (SELECT doc_id,"
-        " string_split_regex(trim(lower(text)), '\\s+') AS w"
-        " FROM documents),"
-        " g AS (SELECT doc_id, list_distinct(list_transform("
-        " range(1, greatest(len(w) - 2, 1) + 1),"
-        " i -> array_to_string(w[i:i+2], ' '))) AS gs FROM tok),"
-        " x AS (SELECT doc_id, unnest(gs) AS s FROM g),"
-        " sz AS (SELECT doc_id, count(*) AS n FROM x GROUP BY 1),"
-        " i AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-        " count(*) AS i FROM x a JOIN x b ON a.s = b.s"
-        " AND a.doc_id < b.doc_id GROUP BY 1, 2),"
-        " j AS (SELECT id_a, id_b, i * 1.0 / (sa.n + sb.n - i) AS j"
-        " FROM i JOIN sz sa ON id_a = sa.doc_id"
-        " JOIN sz sb ON id_b = sb.doc_id)"
-    )
-    o["dedup_minhash_lsh"] = (
-        _SHJ +
-        " SELECT 'high_j_pairs_total' AS prop,"
-        " CAST(count(*) AS BIGINT) AS n FROM j WHERE j >= 0.5"
-        " UNION ALL SELECT 'high_j_pairs_missed', 0"
-        " UNION ALL SELECT 'emitted_below_floor', 0"
-    )
-    # estimator audit: the exact >=0.3 pair count is SQL ground
-    # truth (integer rational test, no float j); the second row pins
-    # the every-estimate-within-0.25 invariant (observed max 0.11 at
-    # sf0.001/0.01) as an equal count — MinHash itself has no SQL twin
-    o["dedup_minhash_accuracy"] = (
-        _SHJ.replace(" j AS (SELECT", " jx AS (SELECT")
-        .replace("FROM documents)",
-                 "FROM documents WHERE doc_id < 1500)") +
-        ", truth AS (SELECT id_a, id_b, i, sa.n + sb.n - i AS u"
-        " FROM i JOIN sz sa ON id_a = sa.doc_id"
-        " JOIN sz sb ON id_b = sb.doc_id"
-        " WHERE i * 10 >= (sa.n + sb.n - i) * 3)"
-        " SELECT 'n_true_pairs' AS prop,"
-        " CAST(count(*) AS BIGINT) AS n FROM truth"
-        " UNION ALL SELECT 'est_within_quarter',"
-        " CAST(count(*) AS BIGINT) FROM truth"
-    )
-    # SimHash property oracle: n_docs is cross-engine; the two zero
-    # rows pin the pigeonhole theorem (4 bands, hamming<=3 → at least
-    # one band collides → the banded join emits exactly the exact
-    # all-pairs close set).
-    o["dedup_simhash"] = (
-        "SELECT 'n_docs' AS prop, CAST(count(*) AS BIGINT) AS n"
-        " FROM documents"
-        " UNION ALL SELECT 'close_pairs_missed', 0"
-        " UNION ALL SELECT 'emitted_not_close', 0"
-    )
-
-    o["text_quality"] = (
-        "SELECT doc_id, length(text) AS n_chars,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,"
-        " round(length(text) * 1.0 /"
-        " len(string_split_regex(trim(text), '\\s+')), 6)"
-        " + 0.0 AS avg_token_len,"
-        " len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,"
-        " round(len(regexp_extract_all(text, '[^\\w\\s]')) * 1.0"
-        " / length(text), 6) + 0.0 AS punct_ratio,"
-        " round(len(regexp_extract_all(text, '[0-9]')) * 1.0"
-        " / length(text), 6) + 0.0 AS digit_ratio,"
-        " (CASE WHEN ' ' || lower(text) || ' ' LIKE '% the %' THEN 1"
-        " ELSE 0 END + CASE WHEN ' ' || lower(text) || ' ' LIKE"
-        " '% and %' THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text)"
-        " || ' ' LIKE '% of %' THEN 1 ELSE 0 END + CASE WHEN ' ' ||"
-        " lower(text) || ' ' LIKE '% to %' THEN 1 ELSE 0 END +"
-        " CASE WHEN ' ' || lower(text) || ' ' LIKE '% is %' THEN 1"
-        " ELSE 0 END) AS n_stopwords FROM documents"
-    )
-
-    def _hits(markers):
-        return " + ".join(
-            "CASE WHEN ' ' || lower(text) || ' ' LIKE '% " + m
-            + " %' THEN 1 ELSE 0 END" for m in markers)
-
-    # fixed-weight logistic quality scorer: the hashed contract is
-    # the quantized LOGIT (z_micro — its lineage is only
-    # correctly-rounded IEEE ops, bit-identical across engines) and
-    # keep = z_micro >= 0; the transcendental sigmoid score is
-    # pytest-verified, never hashed. The z op order replays
-    # operators/text.py::quality_score_linear verbatim
-    _QSZ = ("-1.0 + 8.0 * (CASE WHEN n_tokens = 0 THEN NULL"
-            " ELSE CAST(n_stop AS DOUBLE) / n_tokens END)"
-            " + (-6.0) * (CASE WHEN n_chars = 0 THEN NULL"
-            " ELSE CAST(n_punct AS DOUBLE) / n_chars END)"
-            " + 1.5 * least(CAST(n_tokens AS DOUBLE), 400.0)"
-            " / 400.0")
-    _QF = (
-        "f AS (SELECT doc_id,"
-        " CAST(length(text) AS DOUBLE) AS n_chars,"
-        " CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END"
-        " AS DOUBLE) AS n_tokens,"
-        " len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,"
-        " (CASE WHEN ' ' || lower(text) || ' ' LIKE '% the %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% and %' THEN 1 ELSE 0 END + CASE WHEN ' ' ||"
-        " lower(text) || ' ' LIKE '% of %' THEN 1 ELSE 0 END +"
-        " CASE WHEN ' ' || lower(text) || ' ' LIKE '% to %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% is %' THEN 1 ELSE 0 END) AS n_stop"
-        " FROM documents)")
-    # per-source quality-logit quartiles: ntile ties broken by
-    # doc_id, logit = the same IEEE-exact micro-quantized z
-    o["curation_curriculum"] = (
-        "WITH " + _QF + ","
-        f" z AS (SELECT doc_id, {_QSZ} AS zv FROM f),"
-        f" zq AS (SELECT doc_id, {_QTERM('zv')} AS z_micro FROM z"
-        " WHERE zv IS NOT NULL),"
-        " j AS (SELECT d.source, zq.doc_id, zq.z_micro"
-        " FROM documents d JOIN zq ON d.doc_id = zq.doc_id),"
-        " st AS (SELECT source, z_micro, CAST(ntile(4) OVER"
-        " (PARTITION BY source ORDER BY z_micro, doc_id)"
-        " AS BIGINT) AS stage FROM j)"
-        " SELECT source, stage, count(*) AS n_docs,"
-        " min(z_micro) AS z_lo, max(z_micro) AS z_hi"
-        " FROM st GROUP BY 1, 2"
-    )
-    o["text_quality_score"] = (
-        "WITH f AS (SELECT doc_id,"
-        " CAST(length(text) AS DOUBLE) AS n_chars,"
-        " CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END"
-        " AS DOUBLE) AS n_tokens,"
-        " len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,"
-        " (CASE WHEN ' ' || lower(text) || ' ' LIKE '% the %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% and %' THEN 1 ELSE 0 END + CASE WHEN ' ' ||"
-        " lower(text) || ' ' LIKE '% of %' THEN 1 ELSE 0 END +"
-        " CASE WHEN ' ' || lower(text) || ' ' LIKE '% to %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% is %' THEN 1 ELSE 0 END) AS n_stop"
-        " FROM documents),"
-        f" z AS (SELECT doc_id, {_QSZ} AS zv FROM f)"
-        " SELECT doc_id,"
-        f" {_QTERM('zv')} AS z_micro,"
-        f" {_QTERM('zv')} >= 0 AS keep"
-        " FROM z"
-    )
-    # within-source percentile of the same z_micro: rank with
-    # doc_id ties, (rank−1)·10⁶ // (n−1) — integer replay of the
-    # quality-score CTE plus one window
-    o["text_quality_percentile"] = (
-        o["text_quality_score"]
-        .replace(" SELECT doc_id,", " , zm AS (SELECT f2.doc_id,"
-                 " d.source,", 1)
-        .replace(" FROM z",
-                 " FROM z f2 JOIN documents d ON f2.doc_id ="
-                 " d.doc_id)"
-                 " SELECT doc_id, source,"
-                 " CAST(row_number() OVER (PARTITION BY source"
-                 " ORDER BY z_micro DESC, doc_id) AS BIGINT)"
-                 " AS rank,"
-                 " CAST(count(*) OVER (PARTITION BY source)"
-                 " AS BIGINT) AS n,"
-                 " CAST((row_number() OVER (PARTITION BY source"
-                 " ORDER BY z_micro DESC, doc_id) - 1) * 1000000"
-                 " // GREATEST(count(*) OVER (PARTITION BY source)"
-                 " - 1, 1) AS BIGINT) AS pct_ppm"
-                 " FROM zm WHERE z_micro IS NOT NULL", 1))
-
-    # data card: scalar subqueries over the same proven fragments
-    # (whitespace tokens, md5 dup groups, the z_micro gate via the
-    # _QSZ/_QTERM helpers used by text_quality_score)
-    o["corpus_datacard"] = (
-        "WITH f AS (SELECT doc_id,"
-        " CAST(length(text) AS DOUBLE) AS n_chars,"
-        " CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END"
-        " AS DOUBLE) AS n_tokens,"
-        " len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,"
-        " (CASE WHEN ' ' || lower(text) || ' ' LIKE '% the %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% and %' THEN 1 ELSE 0 END + CASE WHEN ' ' ||"
-        " lower(text) || ' ' LIKE '% of %' THEN 1 ELSE 0 END +"
-        " CASE WHEN ' ' || lower(text) || ' ' LIKE '% to %'"
-        " THEN 1 ELSE 0 END + CASE WHEN ' ' || lower(text) || ' '"
-        " LIKE '% is %' THEN 1 ELSE 0 END) AS n_stop"
-        " FROM documents),"
-        f" z AS (SELECT doc_id, {_QSZ} AS zv FROM f),"
-        " d AS (SELECT md5(text) AS h, count(*) AS c"
-        " FROM documents WHERE text IS NOT NULL GROUP BY 1)"
-        " SELECT CAST(count(*) AS BIGINT) AS n_docs,"
-        " CAST(sum(CASE WHEN length(trim(text)) > 0 THEN 1 ELSE 0"
-        " END) AS BIGINT) AS n_nonempty,"
-        " CAST(count(DISTINCT source) AS BIGINT) AS n_sources,"
-        " CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,"
-        " CAST(sum(length(text)) AS BIGINT) AS total_chars,"
-        " CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END)"
-        " AS BIGINT) AS total_tokens,"
-        " CAST((SELECT coalesce(sum(CASE WHEN c > 1 THEN c END), 0)"
-        " FROM d) AS BIGINT) AS dup_docs,"
-        f" CAST((SELECT sum(CASE WHEN {_QTERM('zv')} >= 0"
-        " THEN 1 ELSE 0 END) FROM z) AS BIGINT) AS quality_keep"
-        " FROM documents")
-    o["tpch_q15ish"] = (
-        "WITH rev AS (SELECT l_suppkey,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0 AS total_revenue FROM lineitem"
-        " WHERE l_shipdate >= TIMESTAMP '1996-01-01'"
-        " AND l_shipdate < TIMESTAMP '1996-04-01' GROUP BY 1),"
-        " mx AS (SELECT max(total_revenue) AS m FROM rev)"
-        " SELECT l_suppkey, total_revenue FROM rev, mx"
-        " WHERE total_revenue = m ORDER BY l_suppkey"
-    )
-
-    marks = TX.LANG_MARKERS
-    o["text_topk_per_source"] = (
-        "WITH q AS (SELECT doc_id, source, (" + _hits(marks["en"])
-        + ") AS n_stopwords, CASE WHEN length(trim(text)) = 0 THEN 0"
-        " ELSE len(string_split_regex(trim(text), '\\s+')) END"
-        " AS n_tokens FROM documents),"
-        " r AS (SELECT *, row_number() OVER (PARTITION BY source"
-        " ORDER BY n_stopwords DESC, doc_id) AS rk FROM q)"
-        " SELECT doc_id, source, n_stopwords, n_tokens"
-        " FROM r WHERE rk <= 5"
-    )
-    o["text_langid"] = (
-        "WITH s AS (SELECT doc_id,"
-        + ", ".join(f"({_hits(ms)}) AS s_{lang}"
-                    for lang, ms in marks.items())
-        + " FROM documents) SELECT doc_id,"
-        " CASE"
-        " WHEN s_fr > s_de AND s_fr > s_es AND s_fr > s_en"
-        " THEN 'fr'"
-        " WHEN s_de > s_es AND s_de > s_en THEN 'de'"
-        " WHEN s_es > s_en THEN 'es'"
-        " WHEN s_en > 0 THEN 'en'"
-        " ELSE 'und' END AS pred_lang FROM s"
-    )
-    o["text_tokens"] = (
-        "SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END AS ws_tokens,"
-        " len(regexp_extract_all(text,"
-        " '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe_tokens"
-        " FROM documents"
-    )
-    # cleaning / PII masking: regexes stay in the Java-regex ∩ RE2
-    # subset so both engines apply identical semantics (DuckDB needs
-    # the 'g' flag; Spark replaces all matches by default)
-    o["text_clean"] = (
-        "SELECT doc_id, trim(regexp_replace("
-        "replace(replace(replace(replace(replace(replace("
-        "regexp_replace(text, '<[^>]*>', ' ', 'g'),"
-        " '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),"
-        " '&quot;', '\"'), '&#39;', ''''), '&amp;', '&'),"
-        " '\\s+', ' ', 'g')) AS cleaned FROM documents"
-    )
-    o["text_pii_mask"] = (
-        "SELECT doc_id, regexp_replace(regexp_replace(regexp_replace("
-        "text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',"
-        " '<EMAIL>', 'g'),"
-        " '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b',"
-        " '<IP>', 'g'),"
-        " '\\+?[0-9][0-9()\\-. ]{7,}[0-9]', '<PHONE>', 'g')"
-        " AS masked FROM documents"
-    )
-    o["text_fingerprint"] = (
-        "SELECT doc_id, md5(array_to_string(list_sort("
-        "string_split_regex(trim(lower(text)), '\\s+')), ' ')) AS fp"
-        " FROM documents"
-    )
-
-    # repetition features: the oracle recomputes via unnest + GROUP BY
-    # (different algorithm, same result as the row-local sorted-run
-    # fold). All ratios: round(x,6)+0.0, empty docs → 0.0.
-    o["text_repetition"] = (
-        "WITH w AS (SELECT doc_id, text,"
-        " string_split_regex(trim(lower(text)), '\\s+') AS ws,"
-        " list_filter(list_transform(string_split(text, chr(10)),"
-        " l -> trim(l)), l -> l <> '') AS lines"
-        " FROM documents),"
-        " bg AS (SELECT doc_id, unnest(list_transform("
-        " range(1, greatest(len(ws), 1)),"
-        " i -> ws[i] || ' ' || ws[i+1])) AS g FROM w),"
-        " bgc AS (SELECT doc_id, max(c) AS top_c, sum(c) AS n_bg FROM"
-        " (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2)"
-        " GROUP BY 1),"
-        " tg AS (SELECT doc_id, unnest(list_transform("
-        " range(1, greatest(len(ws) - 1, 1)),"
-        " i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g"
-        " FROM w),"
-        " tgc AS (SELECT doc_id, sum(c) - count(*) AS dup_tg,"
-        " sum(c) AS n_tg FROM (SELECT doc_id, g, count(*) AS c"
-        " FROM tg GROUP BY 1, 2) GROUP BY 1)"
-        " SELECT w.doc_id,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(ws) END"
-        " AS n_words,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE coalesce("
-        " round((len(ws) - len(list_distinct(ws))) * 1.0 / len(ws), 6)"
-        " + 0.0, 0.0) END AS dup_word_frac,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE coalesce("
-        " round((len(lines) - len(list_distinct(lines))) * 1.0"
-        " / len(lines), 6) + 0.0, 0.0) END AS dup_line_frac,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE coalesce("
-        " round(top_c * 1.0 / n_bg, 6) + 0.0, 0.0) END"
-        " AS top_bigram_frac,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0.0 ELSE coalesce("
-        " round(dup_tg * 1.0 / n_tg, 6) + 0.0, 0.0) END"
-        " AS dup_trigram_frac"
-        " FROM w LEFT JOIN bgc ON w.doc_id = bgc.doc_id"
-        " LEFT JOIN tgc ON w.doc_id = tgc.doc_id"
-    )
-
-    # temperature sampling: the keep decision replays bit-identically
-    # (same md5-prefix uniform, same IEEE op order for the rate —
-    # sqrt is correctly rounded everywhere, unlike pow; the rate's
-    # lineage is only +,×,/ on integer-derived doubles)
-    o["curation_sample_sources"] = (
-        "WITH c AS (SELECT source, count(*) AS n_s,"
-        " CAST(floor(sqrt(CAST(count(*) AS DOUBLE))"
-        " * 1000000.0 + 0.5) AS BIGINT)"
-        " AS pw_q FROM documents GROUP BY 1),"
-        " t AS (SELECT CAST(sum(n_s) AS BIGINT) AS n_tot,"
-        " CAST(sum(pw_q) AS BIGINT) AS w_tot_q FROM c),"
-        " r AS (SELECT source, least(1000000,"
-        + _QTERM("CAST(pw_q AS DOUBLE) / CAST(w_tot_q AS DOUBLE)"
-                 " * 0.5 / (CAST(n_s AS DOUBLE)"
-                 " / CAST(n_tot AS DOUBLE))")
-        + ") AS keep_rate_ppm FROM c, t)"
-        " SELECT d.doc_id, d.source, keep_rate_ppm"
-        " FROM documents d JOIN r ON d.source = r.source"
-        " WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))"
-        "::BIGINT / 4294967296.0 * 1000000.0 < keep_rate_ppm"
-    )
-
-    o["curation_pack_sequences"] = (
-        "WITH n AS (SELECT doc_id, source,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END AS n_tokens"
-        " FROM documents),"
-        " s AS (SELECT doc_id, source, n_tokens,"
-        " coalesce(sum(n_tokens) OVER (PARTITION BY source"
-        " ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " 1 PRECEDING), 0) AS start FROM n)"
-        " SELECT doc_id, source, n_tokens,"
-        " CAST(start // 256 AS BIGINT) AS seq_id,"
-        " CAST(start % 256 AS BIGINT) AS seq_offset FROM s"
-    )
-
-    # unigram-LM sufficient statistics: DuckDB rebuilds the same
-    # corpus frequency table and score join (Spark groups by
-    # xxhash64(w), DuckDB by w itself — identical classes); only the
-    # exact-integer statistics are hashed, the ln-seeded xent is
-    # pytest-verified (ARCHITECTURE.md contract policy)
-    o["text_unigram_lm"] = (
-        "WITH toks AS (SELECT doc_id, unnest(string_split_regex("
-        "trim(lower(text)), '\\s+')) AS w FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " t2 AS (SELECT doc_id, w FROM toks WHERE w <> ''),"
-        " f AS (SELECT w, count(*) AS n_w FROM t2 GROUP BY 1)"
-        " SELECT doc_id, count(*) AS n_tokens,"
-        " count(DISTINCT w) AS n_types,"
-        " CAST(sum(n_w) AS BIGINT) AS sum_nw,"
-        " CAST(max(n_w) AS BIGINT) AS max_nw"
-        " FROM t2 JOIN f USING (w) GROUP BY doc_id"
-    )
-
-    # corpus bigram census: exact counts, deterministic tie-break
-    o["text_top_ngrams"] = (
-        "WITH w AS (SELECT string_split_regex(trim(lower(text)),"
-        " '\\s+') AS ws FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " g AS (SELECT unnest(list_transform(range(1, len(ws)),"
-        " i -> array_to_string(ws[i:i+1], ' '))) AS ngram"
-        " FROM w WHERE len(ws) >= 2),"
-        " c AS (SELECT ngram, count(*) AS n_occurrences FROM g"
-        " GROUP BY 1)"
-        " SELECT ngram, n_occurrences FROM c"
-        " ORDER BY n_occurrences DESC, ngram LIMIT 50"
-    )
-
-    # count-min heavy hitters: the md5-derived sketch hashes make the
-    # full estimate (including collision inflation) replayable in SQL
-    o["text_approx_top_ngrams"] = (
-        "WITH w AS (SELECT doc_id, string_split_regex("
-        "trim(lower(text)), '\\s+') AS ws FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " g AS (SELECT doc_id, unnest(list_transform("
-        "range(1, len(ws)), i -> array_to_string(ws[i:i+1], ' ')))"
-        " AS g FROM w WHERE len(ws) >= 2),"
-        " cells AS (SELECT r, ('0x' || substr(md5(g),"
-        " CAST(1 + 8 * r AS INT), 8))::BIGINT % 4096"
-        " AS c, count(*) AS cnt"
-        " FROM g, range(0, 4) t(r) GROUP BY 1, 2),"
-        " samp AS (SELECT g FROM g WHERE ('0x' ||"
-        " substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " / 4294967296.0 < 0.25),"
-        " cand AS (SELECT g, count(*) AS s_cnt FROM samp"
-        " GROUP BY 1 ORDER BY s_cnt DESC, g LIMIT 200),"
-        " cc AS (SELECT g, r, ('0x' || substr(md5(g),"
-        " CAST(1 + 8 * r AS INT), 8))::BIGINT % 4096"
-        " AS c FROM cand, range(0, 4) t(r)),"
-        " est AS (SELECT g, min(cnt) AS est_count"
-        " FROM cc JOIN cells USING (r, c) GROUP BY 1)"
-        " SELECT g AS ngram, est_count FROM est"
-        " ORDER BY est_count DESC, g LIMIT 20"
-    )
-
-    # pre-training integrity gate: exact counts, one aggregate or
-    # anti-join each; a green snapshot is all zeros + the row counts
-    o["corpus_integrity"] = (
-        "SELECT 'n_docs' AS \"check\","
-        " CAST(count(*) AS BIGINT) AS n FROM documents"
-        " UNION ALL SELECT 'n_embeddings',"
-        " CAST(count(*) AS BIGINT) FROM embeddings"
-        " UNION ALL SELECT 'dup_doc_ids', CAST((SELECT count(*)"
-        " FROM (SELECT doc_id FROM documents GROUP BY 1"
-        " HAVING count(*) > 1)) AS BIGINT)"
-        " UNION ALL SELECT 'dup_vec_ids', CAST((SELECT count(*)"
-        " FROM (SELECT vec_id FROM embeddings GROUP BY 1"
-        " HAVING count(*) > 1)) AS BIGINT)"
-        # NOT EXISTS, not NOT IN: the Spark side counts via a
-        # left_anti join, and NOT IN returns ZERO rows whenever the
-        # subquery yields a NULL — the two engines would diverge
-        # exactly on the malformed (NULL-id) data this gate exists
-        # to catch. NOT EXISTS has anti-join NULL semantics.
-        " UNION ALL SELECT 'docs_without_embedding',"
-        " CAST((SELECT count(*) FROM documents d WHERE NOT EXISTS"
-        " (SELECT 1 FROM embeddings e WHERE e.vec_id = d.doc_id))"
-        " AS BIGINT)"
-        " UNION ALL SELECT 'orphan_embeddings',"
-        " CAST((SELECT count(*) FROM embeddings e WHERE NOT EXISTS"
-        " (SELECT 1 FROM documents d WHERE d.doc_id = e.vec_id))"
-        " AS BIGINT)"
-        " UNION ALL SELECT 'malformed_vectors',"
-        " CAST((SELECT count(*) FROM embeddings"
-        " WHERE len(embedding) <> 64 OR len(list_filter(embedding,"
-        " x -> x IS NULL OR isnan(CAST(x AS DOUBLE)))) > 0)"
-        " AS BIGINT)"
-        " UNION ALL SELECT 'empty_texts',"
-        " CAST((SELECT count(*) FROM documents"
-        " WHERE length(trim(text)) = 0) AS BIGINT)"
-    )
-    # count-min audit: same sketch/candidate CTEs, plus the exact
-    # count of each candidate gram — overshoot >= 0 is the sketch's
-    # never-underestimate theorem, carried row by row
-    o["text_cms_accuracy"] = (
-        "WITH w AS (SELECT doc_id, string_split_regex("
-        "trim(lower(text)), '\\s+') AS ws FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " g AS (SELECT doc_id, unnest(list_transform("
-        "range(1, len(ws)), i -> array_to_string(ws[i:i+1], ' ')))"
-        " AS g FROM w WHERE len(ws) >= 2),"
-        " cells AS (SELECT r, ('0x' || substr(md5(g),"
-        " CAST(1 + 8 * r AS INT), 8))::BIGINT % 4096"
-        " AS c, count(*) AS cnt"
-        " FROM g, range(0, 4) t(r) GROUP BY 1, 2),"
-        " samp AS (SELECT g FROM g WHERE ('0x' ||"
-        " substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " / 4294967296.0 < 0.25),"
-        " cand AS (SELECT g, count(*) AS s_cnt FROM samp"
-        " GROUP BY 1 ORDER BY s_cnt DESC, g LIMIT 200),"
-        " cc AS (SELECT g, r, ('0x' || substr(md5(g),"
-        " CAST(1 + 8 * r AS INT), 8))::BIGINT % 4096"
-        " AS c FROM cand, range(0, 4) t(r)),"
-        " est AS (SELECT g, min(cnt) AS est_count"
-        " FROM cc JOIN cells USING (r, c) GROUP BY 1),"
-        " exact AS (SELECT g.g, count(*) AS exact_count FROM g"
-        " WHERE g.g IN (SELECT g FROM cand) GROUP BY 1)"
-        " SELECT est.g AS ngram, est_count, exact_count,"
-        " est_count - exact_count AS overshoot"
-        " FROM est JOIN exact ON est.g = exact.g"
-    )
-    # Flesch-style readability inputs: exact counts + integer-ppm
-    # ratios; the float grade formula stays with the consumer
-    o["text_readability"] = (
-        "WITH c AS (SELECT doc_id,"
-        " CAST(len(list_filter(list_transform("
-        "string_split_regex(text, '[.!?]+'), s -> trim(s)),"
-        " s -> s <> '')) AS BIGINT) AS n_sentences,"
-        " CAST(len(list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), w -> w <> '')) AS BIGINT)"
-        " AS n_words,"
-        " CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))"
-        " AS BIGINT) AS n_syllables FROM documents)"
-        " SELECT doc_id, n_sentences, n_words, n_syllables,"
-        " coalesce("
-        + INT_PPM_SQL.format(
-            num="n_words",
-            den="CASE WHEN n_sentences > 0 THEN n_sentences END")
-        + ", 0) AS words_per_sentence_ppm,"
-        " coalesce("
-        + INT_PPM_SQL.format(
-            num="n_syllables",
-            den="CASE WHEN n_words > 0 THEN n_words END")
-        + ", 0) AS syllables_per_word_ppm FROM c"
-    )
-    # sentence count / mean / max length in words per document
-    o["text_sentences"] = (
-        "WITH f AS (SELECT doc_id, list_filter(list_transform("
-        "string_split_regex(text, '[.!?]+'), s -> trim(s)),"
-        " s -> s <> '') AS fr FROM documents),"
-        " c AS (SELECT doc_id, list_transform(fr,"
-        " s -> len(string_split_regex(s, '\\s+'))) AS wc FROM f)"
-        " SELECT doc_id, CAST(len(wc) AS BIGINT) AS n_sentences,"
-        " round(CAST(list_sum(wc) AS DOUBLE)"
-        " / nullif(CAST(len(wc) AS DOUBLE), 0), 6) + 0.0"
-        " AS avg_sentence_words,"
-        " CAST(list_max(list_concat(wc, [0])) AS BIGINT)"
-        " AS max_sentence_words FROM c"
-    )
-
-    # sliding-window chunking: chunk i = tokens [i·48, i·48+64);
-    # n_chunks = max(1, ceil((n−16)/48)) so short docs chunk once
-    o["text_chunking"] = (
-        "WITH d AS (SELECT doc_id, list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), x -> x <> '') AS ws"
-        " FROM documents WHERE length(trim(text)) > 0),"
-        " d2 AS (SELECT doc_id, ws, len(ws) AS n FROM d"
-        " WHERE len(ws) > 0),"
-        " c AS (SELECT doc_id, ws, unnest(range(0, greatest(1,"
-        " CAST(ceil((n - 16) / 48.0) AS BIGINT)))) AS chunk_id"
-        " FROM d2)"
-        " SELECT doc_id, chunk_id,"
-        " array_to_string(ws[chunk_id * 48 + 1 : chunk_id * 48 + 64],"
-        " ' ') AS chunk_text,"
-        " CAST(len(ws[chunk_id * 48 + 1 : chunk_id * 48 + 64])"
-        " AS BIGINT) AS n_tokens FROM c"
-    )
-
-    # per-dimension z-scored embeddings in long form; zero-variance
-    # dims → NULL (arity preserved by the operator's reassembly)
-    o["sim_standardize"] = (
-        "WITH x AS (SELECT vec_id,"
-        " unnest(range(len(embedding))) AS dim,"
-        " unnest(embedding) AS v FROM embeddings),"
-        " s AS (SELECT dim, avg(v) AS mu, stddev_samp(v) AS sd"
-        " FROM x GROUP BY 1)"
-        " SELECT vec_id, CAST(dim AS BIGINT) AS dim,"
-        " round((v - mu) / nullif(sd, 0), 6) + 0.0 AS z"
-        " FROM x JOIN s USING (dim)"
-    )
-
-    # per-label mean-pooled centroids in long (label, dim) form
-    o["sim_label_centroids"] = (
-        "WITH x AS (SELECT label,"
-        " unnest(range(len(embedding))) AS dim,"
-        " unnest(embedding) AS v FROM embeddings)"
-        " SELECT label, CAST(dim AS BIGINT) AS dim,"
-        " count(*) AS n_vectors,"
-        f" round({_SD.format(x='v')} / count(*), 6) + 0.0 AS centroid"
-        " FROM x GROUP BY 1, 2"
-    )
-
-    # centroid drift: both snapshots' 6-decimal centroid components
-    # micro-scaled to ints, then exact integer dot/norm sums — the
-    # one float (the cosine) never enters the hash
-    _cdim = (
-        "(SELECT label, dim, count(*) AS {n},"
-        " CAST(floor((round({sd} / count(*), 6) + 0.0)"
-        " * 1000000.0 + 0.5) AS BIGINT) AS {c}"
-        " FROM (SELECT label, unnest(range(len(embedding))) AS dim,"
-        " unnest(embedding) AS v FROM embeddings"
-        " WHERE vec_id <> 0 AND {side}) GROUP BY 1, 2)"
-    )
-    o["sim_centroid_shift"] = (
-        "WITH co AS " + _cdim.format(
-            n="n_old", c="ca", sd=_SD.format(x="v"),
-            side="vec_id % 2 = 0")
-        + ", cn AS " + _cdim.format(
-            n="n_new", c="cb", sd=_SD.format(x="v"),
-            side="vec_id % 2 = 1 AND label <> 0")
-        + ", j AS (SELECT coalesce(co.label, cn.label) AS label,"
-        " co.n_old, cn.n_new, co.ca, cn.cb FROM co"
-        " FULL JOIN cn ON co.label = cn.label AND co.dim = cn.dim)"
-        " SELECT label, CAST(max(n_old) AS BIGINT) AS n_old,"
-        " CAST(max(n_new) AS BIGINT) AS n_new,"
-        " CAST(sum(ca * cb) AS BIGINT) AS dot_scaled,"
-        " CAST(sum(ca * ca) AS BIGINT) AS na_scaled,"
-        " CAST(sum(cb * cb) AS BIGINT) AS nb_scaled"
-        " FROM j GROUP BY 1"
-    )
-
-    # as-of join: DuckDB's native ASOF LEFT JOIN is the oracle for
-    # the union+carry-forward window implementation
-    o["ts_asof_join"] = (
-        "WITH e AS (SELECT event_id, user_id, epoch_ns(ts) AS ts,"
-        " event_type, value FROM events),"
-        " l AS (SELECT event_id, user_id, ts, value FROM e"
-        " WHERE event_type = 'purchase'),"
-        " r0 AS (SELECT user_id, ts, value, row_number() OVER"
-        " (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn"
-        " FROM e WHERE event_type = 'error'),"
-        " r AS (SELECT user_id, ts, value AS err_value FROM r0"
-        " WHERE rn = 1)"
-        " SELECT l.user_id, l.event_id, l.ts,"
-        " round(l.value, 6) + 0.0 AS value,"
-        " round(r.err_value, 6) + 0.0 AS err_value,"
-        " r.ts AS ts_right"
-        " FROM l ASOF JOIN r"
-        " ON l.user_id = r.user_id AND l.ts >= r.ts"
-    )
-
-    # (series, ts)-deduped points shared by the timeseries oracles:
-    # last-writer-wins by seq, mirroring _pts_dedup
-    _PD = (
-        P + ", pd0 AS (SELECT series, ts, val, row_number() OVER"
-        " (PARTITION BY series, ts ORDER BY seq DESC) AS rn FROM pts),"
-        " pd AS (SELECT series, ts, val FROM pd0 WHERE rn = 1)"
-    )
-
-    # STL-lite decomposition: every mean is an exact DECIMAL(38,18)
-    # sum / count; trend from a centered 5-bucket window, seasonal
-    # from the per-(series, hour-of-day) partition, all IEEE-exact
-    # before the micro quantization
-    _H_NS = 3_600_000_000_000
-    o["ts_decompose"] = (
-        _PD + ", b AS (SELECT series,"
-        f" ts - ts % {_H_NS} AS hb,"
-        " CAST(sum(CAST(val AS DECIMAL(38,18))) AS DOUBLE)"
-        " / count(*) AS vh FROM pd GROUP BY 1, 2),"
-        " t AS (SELECT series, hb, vh,"
-        " CAST(sum(CAST(vh AS DECIMAL(38,18))) OVER w AS DOUBLE)"
-        " AS ts5, count(*) OVER w AS n5 FROM b"
-        " WINDOW w AS (PARTITION BY series ORDER BY hb"
-        " ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)),"
-        " f AS (SELECT series, hb, vh, ts5 / 5.0 AS trend,"
-        " vh - ts5 / 5.0 AS det,"
-        f" (hb // {_H_NS}) % 24 AS phase"
-        " FROM t WHERE n5 = 5),"
-        " g AS (SELECT series, hb, trend, det,"
-        " CAST(sum(CAST(det AS DECIMAL(38,18))) OVER p AS DOUBLE)"
-        " / count(*) OVER p AS seasonal FROM f"
-        " WINDOW p AS (PARTITION BY series, phase))"
-        " SELECT series, hb,"
-        f" {_QTERM('trend')} AS trend_micro,"
-        f" {_QTERM('seasonal')} AS seasonal_micro,"
-        f" {_QTERM('det - seasonal')} AS resid_micro FROM g"
-    )
-    # grid resample + linear interpolation, step = 1h in ns; grid
-    # arithmetic stays in BIGINT (ts - ts % step), never double
-    o["ts_resample_interp"] = (
-        _PD + ", p AS (SELECT series, ts, val AS v0,"
-        " lead(ts) OVER w AS t1, lead(val) OVER w AS v1,"
-        " row_number() OVER w AS rn FROM pd"
-        " WINDOW w AS (PARTITION BY series ORDER BY ts)),"
-        " g AS (SELECT series, ts, v0, t1, v1,"
-        " unnest(generate_series(ts - ts % 3600000000000"
-        " + 3600000000000, t1 - t1 % 3600000000000,"
-        " 3600000000000)) AS gts FROM p WHERE t1 IS NOT NULL"
-        " UNION ALL SELECT series, ts, v0, t1, v1, ts FROM p"
-        " WHERE rn = 1 AND ts % 3600000000000 = 0)"
-        " SELECT series, gts AS ts, round(CASE WHEN gts = ts THEN v0"
-        " ELSE v0 + (v1 - v0) * (gts - ts) / (t1 - ts) END, 6) + 0.0"
-        " AS val FROM g"
-    )
-
-    # inactivity-gap sessionization over raw events per user, 1h gap
-    o["ts_sessionize"] = (
-        "WITH e AS (SELECT event_id, user_id, epoch_ns(ts) AS ts"
-        " FROM events),"
-        " s AS (SELECT event_id, user_id, ts, CASE WHEN"
-        " lag(ts) OVER w IS NULL OR ts - lag(ts) OVER w"
-        " > 3600000000000 THEN 1 ELSE 0 END AS ns FROM e"
-        " WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))"
-        " SELECT event_id, user_id, ts, CAST(sum(ns) OVER"
-        " (PARTITION BY user_id ORDER BY ts, event_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS BIGINT) AS session_id FROM s"
-    )
-
-    # session-level rollup over the same sessionize windows
-    o["events_sessions_rollup"] = (
-        "WITH e AS (SELECT event_id, user_id, event_type,"
-        " epoch_ns(ts) AS ts FROM events),"
-        " s AS (SELECT event_id, user_id, event_type, ts, CASE WHEN"
-        " lag(ts) OVER w IS NULL OR ts - lag(ts) OVER w"
-        " > 3600000000000 THEN 1 ELSE 0 END AS ns FROM e"
-        " WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),"
-        " i AS (SELECT user_id, event_type, ts, CAST(sum(ns) OVER"
-        " (PARTITION BY user_id ORDER BY ts, event_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS BIGINT) AS session_id FROM s)"
-        " SELECT user_id, session_id, count(*) AS n_events,"
-        " max(ts) - min(ts) AS duration,"
-        " CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS converted FROM i GROUP BY 1, 2"
-    )
-
-    # trailing z-score anomalies, exclusive 20-point frame, |z| > 2.5
-    o["ts_zscore_anomalies"] = (
-        _PD + ", r AS (SELECT series, ts, val,"
-        " avg(val) OVER w AS mu, stddev_samp(val) OVER w AS sd,"
-        " count(val) OVER w AS n FROM pd"
-        " WINDOW w AS (PARTITION BY series ORDER BY ts"
-        " ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))"
-        " SELECT series, ts, val,"
-        " round((val - mu) / sd, 6) + 0.0 AS z FROM r"
-        " WHERE n >= 3 AND sd > 0 AND abs((val - mu) / sd) > 2.5"
-    )
-    # signup→purchase-within-24h funnel; the forward-looking min is
-    # the same window on both engines
-    o["events_funnel"] = (
-        "WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts,"
-        " event_id AS eid FROM events"
-        " WHERE event_type IN ('signup', 'purchase')),"
-        " x AS (SELECT *, min(CASE WHEN event_type = 'purchase'"
-        " THEN ts END) OVER (PARTITION BY user_id ORDER BY ts, eid"
-        " ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS np"
-        " FROM e),"
-        " s AS (SELECT ts, (np IS NOT NULL AND"
-        " np - ts <= 86400000000000) AS conv FROM x"
-        " WHERE event_type = 'signup')"
-        " SELECT ts - ts % 86400000000000 AS day,"
-        " count(*) AS signups,"
-        " CAST(sum(CASE WHEN conv THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS converted,"
-        " round(sum(CASE WHEN conv THEN 1 ELSE 0 END)"
-        " / count(*), 6) + 0.0"
-        " AS rate FROM s GROUP BY 1"
-    )
-    # reset-aware counter rate per second (scale = 1e9 on ns)
-    o["ts_counter_rate"] = (
-        _PD + ", r AS (SELECT series, ts,"
-        " CASE WHEN val >= lag(val) OVER w THEN val - lag(val) OVER w"
-        " ELSE val END * 1000000000 / (ts - lag(ts) OVER w) AS rate"
-        " FROM pd WINDOW w AS (PARTITION BY series ORDER BY ts))"
-        " SELECT series, ts, round(rate, 6) + 0.0 AS rate FROM r"
-        " WHERE rate IS NOT NULL"
-    )
-
-    # deterministic train/val/test split: same md5-prefix uniform as
-    # sampling, cumulative ladder 0.9 / 0.05 / 0.05
-    o["curation_split"] = (
-        "SELECT doc_id, CASE WHEN u < 0.9 THEN 'train'"
-        " WHEN u < 0.95 THEN 'validation'"
-        " ELSE 'test' END AS split FROM"
-        " (SELECT doc_id, ('0x' ||"
-        " substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " / 4294967296.0 AS u FROM documents)"
-    )
-
-    o["text_bigram_lm"] = (
-        "WITH d AS (SELECT doc_id, list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), x -> x <> '') AS ws"
-        " FROM documents WHERE length(trim(text)) > 0),"
-        " d2 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 2),"
-        " bi AS (SELECT doc_id, unnest(list_transform("
-        "range(1, len(ws)),"
-        " i -> struct_pack(a := ws[i], b := ws[i + 1]))) AS p"
-        " FROM d2),"
-        " b2 AS (SELECT doc_id, struct_extract(p, 'a') AS a,"
-        " struct_extract(p, 'b') AS b FROM bi),"
-        " c2 AS (SELECT a, b, count(*) AS n_ab FROM b2 GROUP BY 1, 2),"
-        " c1 AS (SELECT a, count(*) AS n_a FROM b2 GROUP BY 1),"
-        " v AS (SELECT count(DISTINCT b) AS v FROM b2)"
-        " SELECT doc_id, count(*) AS n_bigrams,"
-        " CAST(sum(n_ab) AS BIGINT) AS sum_nab,"
-        " CAST(sum(n_a) AS BIGINT) AS sum_na,"
-        " CAST(min(v) AS BIGINT) AS v"
-        " FROM b2 JOIN c2 USING (a, b) JOIN c1 USING (a), v"
-        " GROUP BY doc_id"
-    )
-
-    # interpolated trigram LM sufficient statistics: every count
-    # table over the same trigram stream; the λ-interpolated
-    # ln-score is pytest-verified, never hashed
-    o["text_trigram_lm"] = (
-        "WITH d AS (SELECT doc_id, list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), x -> x <> '') AS ws"
-        " FROM documents WHERE length(trim(text)) > 0),"
-        " d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 3),"
-        " tr AS (SELECT doc_id, unnest(list_transform("
-        "range(1, len(ws) - 1),"
-        " i -> struct_pack(a := ws[i], b := ws[i + 1],"
-        " c := ws[i + 2]))) AS t FROM d3),"
-        " t3 AS MATERIALIZED (SELECT doc_id, struct_extract(t, 'a') AS a,"
-        " struct_extract(t, 'b') AS b, struct_extract(t, 'c') AS c"
-        " FROM tr),"
-        " c3 AS (SELECT a, b, c, count(*) AS n_abc FROM t3"
-        " GROUP BY 1, 2, 3),"
-        " cab AS (SELECT a, b, count(*) AS n_ab FROM t3"
-        " GROUP BY 1, 2),"
-        " cbc AS (SELECT b, c, count(*) AS n_bc FROM t3"
-        " GROUP BY 1, 2),"
-        " cb AS (SELECT b, count(*) AS n_b FROM t3 GROUP BY 1),"
-        " cc AS (SELECT c, count(*) AS n_c FROM t3 GROUP BY 1),"
-        " k AS (SELECT count(*) AS n_tot, count(DISTINCT c) AS v"
-        " FROM t3)"
-        " SELECT doc_id, count(*) AS n_trigrams,"
-        " CAST(sum(n_abc) AS BIGINT) AS sum_nabc,"
-        " CAST(sum(n_ab) AS BIGINT) AS sum_nab,"
-        " CAST(sum(n_bc) AS BIGINT) AS sum_nbc,"
-        " CAST(sum(n_b) AS BIGINT) AS sum_nb,"
-        " CAST(sum(n_c) AS BIGINT) AS sum_nc,"
-        " CAST(min(v) AS BIGINT) AS v"
-        " FROM t3 JOIN c3 USING (a, b, c) JOIN cab USING (a, b)"
-        " JOIN cbc USING (b, c) JOIN cb USING (b)"
-        " JOIN cc USING (c), k GROUP BY doc_id"
-    )
-
-    # temperature α=0.5 ⇒ sqrt, CORRECTLY ROUNDED by IEEE-754 on
-    # every engine (the pow-0.3 variant was driver-hash-red four
-    # rounds running); every share/weight is a chain of +,×,/ over
-    # integer-derived doubles — bit-identical across engines — so
-    # the micro-quantizations can never diverge
-    _MXW = ("WITH per AS (SELECT source, count(*) AS n_docs,"
-            " sum(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-            " len(string_split_regex(trim(text), '\\s+')) END)"
-            " AS n_tokens FROM documents GROUP BY 1),"
-            " perq AS (SELECT source, n_docs,"
-            " CAST(n_tokens AS BIGINT) AS n_tokens,"
-            " CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))"
-            " * 1000000.0 + 0.5) AS BIGINT) AS pw_q FROM per),"
-            " tot AS (SELECT CAST(sum(n_tokens) AS BIGINT)"
-            " AS tok_tot, CAST(sum(pw_q) AS BIGINT) AS w_tot_q"
-            " FROM perq)")
-    _MXW_W = ("(CAST(pw_q AS DOUBLE) / CAST(w_tot_q AS DOUBLE))"
-              " / (CAST(n_tokens AS DOUBLE)"
-              " / CAST(tok_tot AS DOUBLE))")
-    # token-budget selection: the oracle's single global-window
-    # cumsum over (score desc, id) replays the distributed
-    # two-level prefix sum exactly
-    o["curation_token_budget"] = (
-        "WITH tok AS (SELECT doc_id,"
-        " CASE WHEN len(trim(text)) = 0 THEN []::VARCHAR[]"
-        " ELSE string_split_regex(trim(text), '\\s+') END AS w"
-        " FROM documents),"
-        " d AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,"
-        " CAST(len(list_distinct(w)) AS BIGINT) AS n_types"
-        " FROM tok)"
-        " SELECT doc_id, n_types AS score, n_tokens,"
-        " CAST(sum(n_tokens) OVER (ORDER BY n_types DESC, doc_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS BIGINT) AS cum_tokens,"
-        " sum(n_tokens) OVER (ORDER BY n_types DESC, doc_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " <= 12000 AS selected"
-        " FROM d"
-    )
-    o["curation_mix_weights"] = (
-        _MXW
-        + " SELECT source, n_docs, n_tokens,"
-        f" {_QTERM('CAST(n_tokens AS DOUBLE) / CAST(tok_tot AS DOUBLE)')}"
-        " AS token_share_ppm,"
-        f" {_QTERM('CAST(pw_q AS DOUBLE) / CAST(w_tot_q AS DOUBLE)')}"
-        " AS target_share_ppm,"
-        f" least(5000000, {_QTERM(_MXW_W)})"
-        " AS weight_ppm"
-        " FROM perq, tot"
-    )
-
-    o["curation_epoch_plan"] = (
-        # mix_weights' engine-identical weight pipeline (sqrt
-        # temperature), expanded into the per-epoch repeat list
-        # (floor(w) full epochs + one more on the md5 fractional
-        # draw keyed on doc_id and the full-epoch count)
-        _MXW
-        + f", w AS (SELECT source, least(5000000, {_QTERM(_MXW_W)})"
-        " AS weight_ppm FROM perq, tot),"
-        " d AS (SELECT doc_id, d.source, weight_ppm // 1000000"
-        " AS f, weight_ppm % 1000000 AS frac"
-        " FROM documents d JOIN w ON d.source = w.source),"
-        " e AS (SELECT doc_id, source, f + (CASE WHEN"
-        " ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' ||"
-        " CAST(f AS VARCHAR)), 1, 8))::BIGINT / 4294967296.0"
-        " * 1000000.0 < frac THEN 1 ELSE 0 END) AS n FROM d)"
-        " SELECT doc_id, source, CAST(unnest(range(n)) AS INT)"
-        " AS epoch FROM e WHERE n > 0"
-    )
-
-    o["curation_length_buckets"] = (
-        # power-of-two length buckets via integer bit-width
-        # (length(bin(n)) — no float log2), md5-ordered batches
-        "WITH n AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0"
-        " THEN 0 ELSE len(string_split_regex(trim(text), '\\s+'))"
-        " END AS n_tokens FROM documents),"
-        " b AS (SELECT doc_id, n_tokens,"
-        " CAST(length(bin(n_tokens)) AS INT) AS bucket FROM n"
-        " WHERE n_tokens > 0),"
-        " r AS (SELECT *, row_number() OVER (PARTITION BY bucket"
-        " ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS rk"
-        " FROM b)"
-        " SELECT doc_id, n_tokens, bucket,"
-        " CAST(rk // 32 AS BIGINT) AS batch_id,"
-        " CAST(rk % 32 AS INT) AS pos FROM r"
-    )
-
-    o["curation_shard_export"] = (
-        "WITH k AS (SELECT doc_id, ('0x' ||"
-        " substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " AS skey FROM documents)"
-        " SELECT doc_id, CAST(skey % 32 AS INT) AS shard,"
-        " CAST(row_number() OVER (PARTITION BY skey % 32"
-        " ORDER BY skey, doc_id) - 1 AS BIGINT) AS pos FROM k"
-    )
-
-    # DSIR sufficient statistics: target = lang 'en'; the integer
-    # Σ of both class counts each token joined against pins the
-    # tokenizer, the two-class count table, and the λ join exactly —
-    # the ln-seeded λ score is pytest-verified, never hashed
-    o["curation_dsir"] = (
-        "WITH d AS (SELECT doc_id, lang = 'en' AS is_t,"
-        " list_filter(string_split_regex(trim(lower(text)), '\\s+'),"
-        " x -> x <> '') AS ws"
-        " FROM documents WHERE length(trim(text)) > 0),"
-        " t AS (SELECT doc_id, is_t, unnest(ws) AS w FROM d),"
-        " c0 AS (SELECT w,"
-        " sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS n_t,"
-        " sum(CASE WHEN NOT is_t THEN 1 ELSE 0 END) AS n_r"
-        " FROM t GROUP BY 1)"
-        " SELECT doc_id, count(*) AS n_tokens,"
-        " CAST(sum(n_t) AS BIGINT) AS sum_nt,"
-        " CAST(sum(n_r) AS BIGINT) AS sum_nr"
-        " FROM t JOIN c0 USING (w) GROUP BY doc_id"
-    )
-
-    # EWMA final level per series: DuckDB's list_reduce replays the
-    # exact (1-a)*acc + a*x left fold over the time-ordered values
-    o["ts_ewma"] = (
-        _PD + ", l AS (SELECT series, count(*) AS n_points,"
-        " list_reduce(CAST(list(val ORDER BY ts) AS DOUBLE[]),"
-        " (acc, x) -> 0.75 * acc + 0.25 * x) AS e"
-        " FROM pd GROUP BY series)"
-        " SELECT series, n_points,"
-        " round(e, 6) + 0.0 AS ewma_last FROM l"
-    )
-
-    o["text_boilerplate"] = (
-        "WITH d0 AS (SELECT doc_id, string_split_regex(trim(text),"
-        " '\\s+') AS ws FROM documents),"
-        " w AS (SELECT doc_id, array_to_string(list_transform("
-        "range(0, CAST(ceil(len(ws) / 8.0) AS BIGINT)),"
-        " i -> array_to_string(ws[i * 8 + 1 : i * 8 + 8], ' ')),"
-        " chr(10)) AS text FROM d0),"
-        " dl AS (SELECT doc_id, string_split(text, chr(10)) AS ls"
-        " FROM w),"
-        " ln AS (SELECT doc_id, ls,"
-        " unnest(range(1, len(ls) + 1)) AS i FROM dl),"
-        " l AS (SELECT doc_id, CAST(i AS BIGINT) AS i, ls[i] AS line"
-        " FROM ln),"
-        " f AS (SELECT trim(line) AS t FROM l WHERE trim(line) <> ''"
-        " GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),"
-        " k AS (SELECT doc_id, i, line FROM l"
-        " WHERE NOT EXISTS (SELECT 1 FROM f"
-        " WHERE f.t = trim(line))),"
-        " reb AS (SELECT doc_id, count(*) AS n_kept,"
-        " string_agg(line, chr(10) ORDER BY i, line) AS text_clean"
-        " FROM k GROUP BY 1),"
-        " tot AS (SELECT doc_id, count(*) AS n_lines FROM l"
-        " GROUP BY 1)"
-        " SELECT doc_id, n_lines, coalesce(n_kept, 0) AS n_kept,"
-        " coalesce(text_clean, '') AS text_clean"
-        " FROM tot LEFT JOIN reb USING (doc_id)"
-    )
-
-    o["events_flow"] = (
-        "WITH e AS (SELECT user_id, event_type AS et,"
-        " epoch_ns(ts) AS ts, event_id FROM events),"
-        " nx AS (SELECT et AS src, lead(et) OVER ("
-        " PARTITION BY user_id ORDER BY ts, event_id) AS dst"
-        " FROM e),"
-        " pairs AS (SELECT src, dst, count(*) AS n FROM nx"
-        " WHERE dst IS NOT NULL GROUP BY 1, 2),"
-        " tot AS (SELECT src, sum(n) AS n_src FROM pairs GROUP BY 1)"
-        " SELECT src, dst, n, round(n / n_src, 6) + 0.0 AS p"
-        " FROM pairs JOIN tot USING (src)"
-    )
-
-    o["ts_latency_quantiles"] = (
-        "SELECT event_type AS series, count(*) AS n,"
-        " round(quantile_cont(value, 0.5), 6) + 0.0 AS p50,"
-        " round(quantile_cont(value, 0.9), 6) + 0.0 AS p90,"
-        " round(quantile_cont(value, 0.99), 6) + 0.0 AS p99"
-        " FROM events GROUP BY 1"
-    )
-
-    o["ts_seasonal_anomalies"] = (
-        "WITH pts AS (SELECT event_type AS series, epoch_ns(ts)"
-        " AS ts, value AS val FROM events),"
-        " a AS (SELECT series, (ts // 3600000000000) % 24 AS phase,"
-        " count(*) AS n, sum(val) AS sx, sum(val * val) AS sxx"
-        " FROM pts GROUP BY 1, 2),"
-        " prof AS (SELECT series, phase, n,"
-        " round(sx / n, 6) + 0.0 AS avg_val,"
-        " round(sqrt(greatest(0.0, sxx - sx * sx / n)"
-        " / nullif(n - 1, 0)), 6) + 0.0 AS std_val FROM a),"
-        " j AS (SELECT p.series, p.ts, p.val,"
-        " (p.ts // 3600000000000) % 24 AS phase,"
-        " (p.val - f.avg_val) / f.std_val AS z"
-        " FROM pts p JOIN prof f ON p.series = f.series"
-        " AND (p.ts // 3600000000000) % 24 = f.phase"
-        " WHERE f.n >= 3 AND f.std_val > 0)"
-        " SELECT series, ts, val, phase, round(z, 6) + 0.0 AS z"
-        " FROM j WHERE abs(z) > 2.5"
-    )
-
-    o["ts_seasonal_profile"] = (
-        "WITH pts AS (SELECT event_type AS series, epoch_ns(ts)"
-        " AS ts, value AS val FROM events),"
-        " a AS (SELECT series, (ts // 3600000000000) % 24 AS phase,"
-        " count(*) AS n, sum(val) AS sx, sum(val * val) AS sxx"
-        " FROM pts GROUP BY 1, 2)"
-        " SELECT series, phase, n,"
-        " round(sx / n, 6) + 0.0 AS avg_val,"
-        " round(sqrt(greatest(0.0, sxx - sx * sx / n)"
-        " / nullif(n - 1, 0)), 6) + 0.0 AS std_val FROM a"
-    )
-
-    o["events_cohorts"] = (
-        "WITH wk AS (SELECT DISTINCT user_id,"
-        " epoch_ns(ts) // 604800000000000 AS week FROM events),"
-        " f AS (SELECT user_id, min(week) AS cohort FROM wk"
-        " GROUP BY 1)"
-        " SELECT cohort, week - cohort AS week_offset,"
-        " count(DISTINCT user_id) AS n_users"
-        " FROM wk JOIN f USING (user_id) GROUP BY 1, 2"
-    )
-
-    o["ts_corr_topk"] = (
-        "WITH pts AS (SELECT event_type AS series, epoch_ns(ts)"
-        " AS ts, value AS val FROM events)"
-        ", bm AS (SELECT series, ts // 3600000000000 AS b,"
-        " avg(val) AS v FROM pts GROUP BY 1, 2),"
-        " ref AS (SELECT series FROM pts GROUP BY series"
-        " ORDER BY count(*) DESC, series LIMIT 1),"
-        " refb AS (SELECT b, v AS qv FROM bm"
-        " WHERE series IN (SELECT series FROM ref)),"
-        " j AS (SELECT bm.series, bm.v, refb.qv FROM bm"
-        " JOIN refb USING (b)"
-        " WHERE NOT EXISTS (SELECT 1 FROM ref"
-        " WHERE ref.series = bm.series)),"
-        " a AS (SELECT series, count(*) AS n_buckets,"
-        " sum(v * qv) AS sxy, sum(v) AS sx, sum(qv) AS sy,"
-        " sum(v * v) AS sxx, sum(qv * qv) AS syy FROM j GROUP BY 1),"
-        " c AS (SELECT series, n_buckets,"
-        " (n_buckets * sxy - sx * sy) / nullif(sqrt("
-        " greatest(0.0, n_buckets * sxx - sx * sx)"
-        " * greatest(0.0, n_buckets * syy - sy * sy)), 0) AS c"
-        " FROM a)"
-        " SELECT series, n_buckets, round(c, 6) + 0.0 AS corr"
-        " FROM c WHERE n_buckets >= 3 AND c IS NOT NULL"
-        " AND NOT isnan(c)"
-        " ORDER BY corr DESC, series LIMIT 10"
-    )
-
-    o["ts_range_join"] = (
-        "WITH e AS (SELECT event_id, user_id, epoch_ns(ts) AS ts"
-        " FROM events),"
-        " s AS (SELECT event_id, user_id, ts, CASE WHEN"
-        " lag(ts) OVER w IS NULL OR ts - lag(ts) OVER w"
-        " > 3600000000000 THEN 1 ELSE 0 END AS ns FROM e"
-        " WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),"
-        " sess AS (SELECT user_id, ts, CAST(sum(ns) OVER"
-        " (PARTITION BY user_id ORDER BY ts, event_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS BIGINT) AS session_id FROM s),"
-        " ivl AS (SELECT user_id, session_id, min(ts) AS lo,"
-        " max(ts) AS hi FROM sess GROUP BY 1, 2),"
-        " top AS (SELECT * FROM ivl ORDER BY hi - lo DESC,"
-        " user_id, session_id LIMIT 100)"
-        " SELECT t.user_id, t.session_id, t.lo, t.hi,"
-        " count(*) AS n_events FROM top t"
-        " JOIN e ON e.ts >= t.lo AND e.ts <= t.hi"
-        " GROUP BY 1, 2, 3, 4"
-    )
-
-    cos_core = (
-        "WITH q AS (SELECT embedding AS qe FROM embeddings"
-        " WHERE vec_id = 0),"
-        " prod AS (SELECT e.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe) AS DOUBLE) AS y"
-        " FROM embeddings e, q WHERE e.vec_id <> 0),"
-        " s AS (SELECT vec_id, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1)"
-    )
-    o["sim_bruteforce_topk"] = (
-        cos_core
-        + " SELECT vec_id, round(d / (sqrt(na) * sqrt(nb)), 6)"
-        " + 0.0 AS cos"
-        " FROM s ORDER BY d / (sqrt(na) * sqrt(nb)) DESC, vec_id"
-        " LIMIT 10"
-    )
-    # truncation audit: per prefix dim, rank on the 6-decimal
-    # cosine over the sliced vectors (ties to the smaller id —
-    # exactly the operator's window), hits against the full-dim set
-    o["sim_dim_truncation_recall"] = (
-        "WITH dims(dim) AS (VALUES (8), (16), (32), (64)),"
-        " q AS (SELECT embedding AS qe FROM embeddings"
-        " WHERE vec_id = 0),"
-        " prod AS (SELECT dims.dim, e.vec_id,"
-        " CAST(unnest(e.embedding[1:dims.dim]) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe[1:dims.dim]) AS DOUBLE) AS y"
-        " FROM embeddings e, q, dims WHERE e.vec_id <> 0),"
-        " s AS (SELECT dim, vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb FROM prod"
-        " GROUP BY 1, 2),"
-        " r AS (SELECT dim, vec_id, row_number() OVER ("
-        " PARTITION BY dim ORDER BY round(CASE WHEN na = 0 OR"
-        " nb = 0 THEN 0.0 ELSE d / (sqrt(na) * sqrt(nb)) END, 6)"
-        " DESC, vec_id) AS rn FROM s),"
-        " top AS (SELECT dim, vec_id FROM r WHERE rn <= 10),"
-        " f AS (SELECT vec_id FROM top WHERE dim = 64),"
-        " h AS (SELECT t.dim, count(*) AS hits FROM top t"
-        " JOIN f USING (vec_id) WHERE t.dim <> 64 GROUP BY 1)"
-        " SELECT CAST(d.dim AS BIGINT) AS dim,"
-        " CAST(10 AS BIGINT) AS k,"
-        " CAST(coalesce(h.hits, 0) AS BIGINT) AS hits"
-        " FROM (SELECT dim FROM dims WHERE dim <> 64) d"
-        " LEFT JOIN h ON d.dim = h.dim"
-    )
-    # batch kNN join: every query (vec_id < 3) against the corpus;
-    # rank on the 6-decimal-rounded cosine with vec_id tie-break,
-    # exactly like the Spark operator's global window
-    o["sim_knn_join"] = (
-        "WITH prod AS (SELECT q.vec_id AS qid, e.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.embedding) AS DOUBLE) AS y"
-        " FROM embeddings e, embeddings q"
-        " WHERE e.vec_id >= 3 AND q.vec_id < 3),"
-        " s AS (SELECT qid, vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb"
-        " FROM prod GROUP BY 1, 2),"
-        " sc AS (SELECT qid, vec_id,"
-        " round(CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END, 6) + 0.0 AS cos"
-        " FROM s),"
-        " r AS (SELECT qid, vec_id, cos, row_number() OVER"
-        " (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank"
-        " FROM sc)"
-        " SELECT qid, vec_id, cos, CAST(rank AS INT) AS rank"
-        " FROM r WHERE rank <= 5"
-    )
-    # batch IVF-SQ8 join: per-query probes + int8 codes + integer
-    # coarse cut + rescore, all replayed per query
-    o["sim_ivf_sq_knn_join"] = (
-        "WITH e AS (SELECT vec_id, label, embedding"
-        " FROM embeddings WHERE vec_id >= 3),"
-        " q AS (SELECT vec_id AS qid, embedding AS qe"
-        " FROM embeddings WHERE vec_id < 3),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " qd AS (SELECT qid, CAST(unnest(qe) AS DOUBLE) AS y,"
-        " unnest(range(1, len(qe) + 1)) AS i FROM q),"
-        " cdist AS (SELECT qid, label, sum(c * y) AS d,"
-        " sum(y * y) AS na, sum(c * c) AS nb"
-        " FROM cent JOIN qd USING (i) GROUP BY 1, 2),"
-        " pr AS (SELECT qid, label FROM (SELECT qid, label,"
-        " row_number() OVER (PARTITION BY qid ORDER BY"
-        " CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END DESC, label) AS rn"
-        " FROM cdist) WHERE rn <= 2),"
-        " m AS (SELECT max(abs(CAST(x AS DOUBLE))) AS s FROM"
-        " (SELECT unnest(embedding) AS x FROM e)),"
-        " cq AS (SELECT vec_id, label,"
-        " CAST(unnest(range(len(embedding))) AS INT) AS i,"
-        " CAST(floor(CAST(unnest(embedding) AS DOUBLE)"
-        " * 127.0 / m.s + 0.5) AS INT) AS cqv FROM e, m),"
-        " qq AS (SELECT qid, CAST(unnest(range(len(qe))) AS INT)"
-        " AS i, GREATEST(-127, LEAST(127,"
-        " CAST(floor(CAST(unnest(qe) AS DOUBLE)"
-        " * 127.0 / m.s + 0.5) AS INT))) AS qqv FROM q, m),"
-        " isc AS (SELECT p.qid, c.vec_id,"
-        " sum(CAST(c.cqv AS BIGINT) * q2.qqv) AS iscore"
-        " FROM pr p JOIN cq c ON c.label = p.label"
-        " JOIN qq q2 ON q2.qid = p.qid AND q2.i = c.i"
-        " GROUP BY 1, 2),"
-        " cand AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,"
-        " row_number() OVER (PARTITION BY qid"
-        " ORDER BY iscore DESC, vec_id) AS rn FROM isc)"
-        " WHERE rn <= 20),"
-        " prod AS (SELECT cd2.qid, cd2.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe) AS DOUBLE) AS y"
-        " FROM cand cd2 JOIN e USING (vec_id)"
-        " JOIN q ON q.qid = cd2.qid),"
-        " s AS (SELECT qid, vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb"
-        " FROM prod GROUP BY 1, 2),"
-        " sc AS (SELECT qid, vec_id,"
-        " round(CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END, 6) + 0.0 AS cos"
-        " FROM s),"
-        " r AS (SELECT qid, vec_id, cos, row_number() OVER"
-        " (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank"
-        " FROM sc)"
-        " SELECT qid, vec_id, cos, CAST(rank AS INT) AS rank"
-        " FROM r WHERE rank <= 5"
-    )
-    # batch IVF join: per-QUERY cell ranking (row_number over qid,
-    # ties to the smaller cell id, zero-norm guarded), then scores
-    # and ranks only inside each query's probed cells
-    o["sim_ivf_knn_join"] = (
-        "WITH e AS (SELECT vec_id, label, embedding"
-        " FROM embeddings WHERE vec_id >= 3),"
-        " q AS (SELECT vec_id AS qid, embedding AS qe"
-        " FROM embeddings WHERE vec_id < 3),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " qd AS (SELECT qid, CAST(unnest(qe) AS DOUBLE) AS y,"
-        " unnest(range(1, len(qe) + 1)) AS i FROM q),"
-        " cd AS (SELECT qid, label, sum(c * y) AS d,"
-        " sum(y * y) AS na, sum(c * c) AS nb"
-        " FROM cent JOIN qd USING (i) GROUP BY 1, 2),"
-        " pr AS (SELECT qid, label FROM (SELECT qid, label,"
-        " row_number() OVER (PARTITION BY qid ORDER BY"
-        " CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END DESC, label) AS rn"
-        " FROM cd) WHERE rn <= 2),"
-        " prod AS (SELECT p.qid, e.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe) AS DOUBLE) AS y"
-        " FROM pr p JOIN e USING (label)"
-        " JOIN q ON q.qid = p.qid),"
-        " s AS (SELECT qid, vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb"
-        " FROM prod GROUP BY 1, 2),"
-        " sc AS (SELECT qid, vec_id,"
-        " round(CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END, 6) + 0.0 AS cos"
-        " FROM s),"
-        " r AS (SELECT qid, vec_id, cos, row_number() OVER"
-        " (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank"
-        " FROM sc)"
-        " SELECT qid, vec_id, cos, CAST(rank AS INT) AS rank"
-        " FROM r WHERE rank <= 5"
-    )
-    # embedding contamination: the ivf_knn_join chain at k=1 with
-    # the planted-copy eval set and the micro-int verdict tail
-    o["dedup_embedding_contamination"] = (
-        "WITH e AS (SELECT vec_id, label, embedding"
-        " FROM embeddings WHERE vec_id % 19 <> 1),"
-        " q AS (SELECT vec_id AS qid, embedding AS qe"
-        " FROM embeddings WHERE vec_id % 19 = 1"
-        " UNION ALL SELECT vec_id + 1000000, embedding"
-        " FROM embeddings WHERE vec_id % 19 <> 1"
-        " AND vec_id % 23 = 2),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " qd AS (SELECT qid, CAST(unnest(qe) AS DOUBLE) AS y,"
-        " unnest(range(1, len(qe) + 1)) AS i FROM q),"
-        " cd AS (SELECT qid, label, sum(c * y) AS d,"
-        " sum(y * y) AS na, sum(c * c) AS nb"
-        " FROM cent JOIN qd USING (i) GROUP BY 1, 2),"
-        " pr AS (SELECT qid, label FROM (SELECT qid, label,"
-        " row_number() OVER (PARTITION BY qid ORDER BY"
-        " CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END DESC, label) AS rn"
-        " FROM cd) WHERE rn <= 3),"
-        " prod AS (SELECT p.qid, e.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe) AS DOUBLE) AS y"
-        " FROM pr p JOIN e USING (label)"
-        " JOIN q ON q.qid = p.qid),"
-        " s AS (SELECT qid, vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb"
-        " FROM prod GROUP BY 1, 2),"
-        " sc AS (SELECT qid, vec_id,"
-        " round(CASE WHEN na = 0 OR nb = 0 THEN 0.0"
-        " ELSE d / (sqrt(na) * sqrt(nb)) END, 6) + 0.0 AS cos"
-        " FROM s),"
-        " r AS (SELECT qid, vec_id, cos, row_number() OVER"
-        " (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank"
-        " FROM sc)"
-        " SELECT qid, vec_id AS train_id, cos,"
-        " CAST(floor(cos * 1000000 + 0.5) AS BIGINT) AS cos_micro,"
-        " floor(cos * 1000000 + 0.5) >= 900000 AS contaminated"
-        " FROM r WHERE rank = 1"
-    )
-    # Full-value IVF oracle: DuckDB recomputes the label centroids,
-    # ranks cells by centroid cosine, probes the top 3, and
-    # brute-forces within them — the whole deterministic IVF path
-    # (positional unnest pairs of a list and range() zip in DuckDB).
-    o["sim_ivf_topk"] = (
-        "WITH e AS (SELECT vec_id, label, embedding FROM embeddings"
-        " WHERE vec_id <> 0),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " qv AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS y,"
-        " unnest(range(1, len(embedding) + 1)) AS i FROM embeddings"
-        " WHERE vec_id = 0),"
-        " cd AS (SELECT label, sum(c * y) AS d, sum(c * c) AS na,"
-        " sum(y * y) AS nb FROM cent JOIN qv USING (i) GROUP BY 1),"
-        " probes AS (SELECT label FROM cd"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC LIMIT 3),"
-        " prod AS (SELECT e.vec_id,"
-        " CAST(unnest(e.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.qe) AS DOUBLE) AS y"
-        " FROM e, (SELECT embedding AS qe FROM embeddings"
-        " WHERE vec_id = 0) q"
-        " WHERE e.label IN (SELECT label FROM probes)),"
-        " s AS (SELECT vec_id, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1)"
-        " SELECT vec_id, round(d / (sqrt(na) * sqrt(nb)), 6)"
-        " + 0.0 AS cos FROM s"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10"
-    )
-    # IVF-SQ8: the sim_ivf_topk probe CTEs + the int8 code CTEs,
-    # composed — cells ranked by centroid cosine, integer coarse
-    # top-40 inside the probed cells, exact rescore
-    o["sim_ivf_sq_topk"] = (
-        "WITH e AS (SELECT vec_id, label, embedding FROM embeddings"
-        " WHERE vec_id <> 0),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " qv AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS y,"
-        " unnest(range(1, len(embedding) + 1)) AS i FROM embeddings"
-        " WHERE vec_id = 0),"
-        " cd AS (SELECT label, sum(c * y) AS d, sum(c * c) AS na,"
-        " sum(y * y) AS nb FROM cent JOIN qv USING (i) GROUP BY 1),"
-        " probes AS (SELECT label FROM cd"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC LIMIT 3),"
-        " sub AS (SELECT * FROM e WHERE label IN"
-        " (SELECT label FROM probes)),"
-        " m AS (SELECT max(abs(CAST(x AS DOUBLE))) AS s FROM"
-        " (SELECT unnest(embedding) AS x FROM e)),"
-        " xc AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM sub),"
-        " qc AS (SELECT vec_id, i,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT) AS q"
-        " FROM xc, m),"
-        " xq AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM embeddings WHERE vec_id = 0),"
-        " q0 AS (SELECT i, GREATEST(-127, LEAST(127,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT))) AS q"
-        " FROM xq, m),"
-        " sc AS (SELECT c.vec_id,"
-        " sum(CAST(c.q AS BIGINT) * q0.q) AS iscore"
-        " FROM qc c JOIN q0 USING (i) GROUP BY 1),"
-        " cand AS (SELECT vec_id FROM sc"
-        " ORDER BY iscore DESC, vec_id LIMIT 40),"
-        " prod AS (SELECT s2.vec_id,"
-        " CAST(unnest(s2.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.embedding) AS DOUBLE) AS y"
-        " FROM sub s2 JOIN cand USING (vec_id), embeddings q"
-        " WHERE q.vec_id = 0),"
-        " s AS (SELECT vec_id, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1)"
-        " SELECT vec_id, round(d / (sqrt(na) * sqrt(nb)), 6)"
-        " + 0.0 AS cos FROM s"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10"
-    )
-    # Approximate-ANN property oracles: k rows back, every returned
-    # cosine equals the exact cosine for that id, and nothing
-    # outscores the true top-1.
-    _ANN_PROPS = (
-        "SELECT 'k_returned' AS prop, CAST(10 AS BIGINT) AS n"
-        " UNION ALL SELECT 'cos_mismatch', 0"
-        " UNION ALL SELECT 'beats_exact_top1', 0"
-    )
-    o["sim_ivf_kmeans"] = _ANN_PROPS
-    o["sim_lsh_topk"] = _ANN_PROPS
-
-    # IVF recall@k curve, full replay: exact decimal centroid means,
-    # decimal-accumulated cosines quantized to micro-units, id/label
-    # tiebreaks, integer-ppm recall — every step order-free on both
-    # engines (operators/similarity.py::ann_recall_curve)
-    _SDX = "CAST(sum(CAST({x} AS DECIMAL(38,18))) AS DOUBLE)"
-    _CSC = _QTERM("d / (sqrt(nq) * sqrt(nc))")
-
-    # pair scoring: per-dimension products quantized to the 1e-12
-    # grid and summed as exact longs (mirror of the row-local
-    # pico_fold in ann_recall_curve), then the micro-quantized score
-    def _P12(x: str) -> str:
-        return "sum(" + SCALED_TERM_SQL.format(x=x, s=10 ** 12) + ")"
-
-    _PSC = _QTERM("(d / 1000000000000.0) /"
-                  " (sqrt(nq / 1000000000000.0)"
-                  " * sqrt(nc / 1000000000000.0))")
-    o["sim_ann_recall"] = (
-        "WITH q AS (SELECT vec_id AS qid, embedding AS qe"
-        " FROM embeddings WHERE vec_id < 20),"
-        " c AS (SELECT vec_id, label, embedding AS ce"
-        " FROM embeddings WHERE vec_id >= 20),"
-        " xp AS (SELECT qid, vec_id,"
-        " CAST(unnest(qe) AS DOUBLE) AS a,"
-        " CAST(unnest(ce) AS DOUBLE) AS b FROM q, c),"
-        f" xs AS (SELECT qid, vec_id, {_P12('a * b')} AS d,"
-        f" {_P12('a * a')} AS nq,"
-        f" {_P12('b * b')} AS nc FROM xp GROUP BY 1, 2),"
-        " xr AS (SELECT qid, vec_id, row_number() OVER ("
-        f" PARTITION BY qid ORDER BY {_PSC} DESC, vec_id) AS rk"
-        " FROM xs),"
-        " exact AS (SELECT qid, vec_id FROM xr WHERE rk <= 10),"
-        " cd AS (SELECT label, unnest(range(len(ce))) AS dim,"
-        " CAST(unnest(ce) AS DOUBLE) AS v FROM c),"
-        f" cent AS (SELECT label, dim, {_SDX.format(x='v')}"
-        " / count(*) AS m FROM cd GROUP BY 1, 2),"
-        " qdim AS (SELECT qid, unnest(range(len(qe))) AS dim,"
-        " CAST(unnest(qe) AS DOUBLE) AS qv FROM q),"
-        " qc AS (SELECT qid, label,"
-        f" {_SDX.format(x='qv * m')} AS d,"
-        f" {_SDX.format(x='qv * qv')} AS nq,"
-        f" {_SDX.format(x='m * m')} AS nc"
-        " FROM qdim JOIN cent USING (dim) GROUP BY 1, 2),"
-        " ranked AS (SELECT qid, label, row_number() OVER ("
-        f" PARTITION BY qid ORDER BY {_CSC} DESC, label) AS crank"
-        " FROM qc),"
-        " np AS (SELECT unnest([1, 2, 4, 10]) AS nprobe),"
-        " probes AS (SELECT nprobe, qid, label FROM ranked, np"
-        " WHERE crank <= nprobe),"
-        " cp AS (SELECT nprobe, p.qid AS qid, c.vec_id AS vec_id,"
-        " CAST(unnest(qe) AS DOUBLE) AS a,"
-        " CAST(unnest(ce) AS DOUBLE) AS b"
-        " FROM probes p JOIN c USING (label)"
-        " JOIN q ON q.qid = p.qid),"
-        " cs2 AS (SELECT nprobe, qid, vec_id,"
-        f" {_P12('a * b')} AS d,"
-        f" {_P12('a * a')} AS nq,"
-        f" {_P12('b * b')} AS nc"
-        " FROM cp GROUP BY 1, 2, 3),"
-        " ar AS (SELECT nprobe, qid, vec_id, row_number() OVER ("
-        " PARTITION BY nprobe, qid"
-        f" ORDER BY {_PSC} DESC, vec_id) AS rk FROM cs2),"
-        " appr AS (SELECT nprobe, qid, vec_id FROM ar"
-        " WHERE rk <= 10),"
-        " h AS (SELECT nprobe, count(*) AS n_hits FROM appr"
-        " JOIN exact USING (qid, vec_id) GROUP BY 1),"
-        " qn AS (SELECT count(*) AS nqq FROM q)"
-        " SELECT nprobe, nqq AS n_queries,"
-        " COALESCE(n_hits, 0) AS n_hits,"
-        f" {_PPM.format(num='COALESCE(n_hits, 0)', den='nqq * 10')}"
-        " AS recall_ppm FROM np LEFT JOIN h USING (nprobe), qn"
-    )
-    o["sim_pq_ann"] = (
-        "SELECT 'k_returned' AS prop, CAST(10 AS BIGINT) AS n"
-        " UNION ALL SELECT 'code_out_of_range', 0"
-        " UNION ALL SELECT 'recall_at_10_ge_5', 1"
-    )
-    # PQ batch serving (r12): property contract — equality with the
-    # per-query search/search_rerank loops (k-means, no SQL replay)
-    o["sim_pq_knn_join"] = (
-        "SELECT 'equal_to_per_query_search' AS prop,"
-        " CAST(1 AS BIGINT) AS n"
-        " UNION ALL SELECT 'equal_to_per_query_rerank', 1"
-        " UNION ALL SELECT 'rows_returned', 30")
-    # PQ lifecycle (r11): property contracts — the codebooks come
-    # from k-means, which has no SQL replay (same posture as
-    # sim_pq_ann)
-    o["sim_pq_index_append"] = (
-        "SELECT 'delta_rows_indexed' AS prop, CAST(1 AS BIGINT)"
-        " AS n UNION ALL SELECT 'retry_is_noop', 1"
-        " UNION ALL SELECT 'equal_to_in_memory_union', 1"
-        " UNION ALL SELECT 'k_returned', 10")
-    o["sim_pq_index_drift"] = (
-        "SELECT 'grid_rows' AS prop, CAST(32 AS BIGINT) AS n"
-        " UNION ALL SELECT 'base_counts_exact', 1"
-        " UNION ALL SELECT 'new_counts_exact', 1"
-        " UNION ALL SELECT 'ppm_per_sub_bounded', 1"
-        " UNION ALL SELECT 'qerr_iff_delta_landed', 1")
-    # Naive Bayes: the model is the (label, term, cnt) table over the
-    # proven whitespace tokenizer; the confusion matrix replays the
-    # ENTIRE quantized-log path in integer SQL — fixlog2(x) =
-    # (len(bin(x))−1)·2^16 + (x·2^16 // 2^(len(bin(x))−1)) − 2^16,
-    # spelled with << and // (Spark reads the same mantissa off the
-    # binary string; both are exact int64, no libm anywhere)
-    _nb_toks = (
-        "SELECT doc_id, lang, unnest(list_filter("
-        "string_split_regex(trim(lower(text)), '\\s+'),"
-        " x -> x <> '')) AS term FROM documents"
-        " WHERE length(trim(text)) > 0")
-    _nb_counts = (
-        "SELECT lang AS label, term, count(*) AS cnt FROM ("
-        + _nb_toks + ") GROUP BY 1, 2")
-    o["text_nb_model"] = (
-        "SELECT label, term, CAST(cnt AS BIGINT) AS cnt FROM ("
-        + _nb_counts + ")")
-    _fix = ("((length(bin({x})) - 1) * 65536"
-            " + ({x} * 65536) // (1::BIGINT << (length(bin({x})) - 1))"
-            " - 65536)")
-    o["text_nb_confusion"] = (
-        "WITH toks AS (" + _nb_toks + "),"
-        " c AS (" + _nb_counts + "),"
-        " lt AS (SELECT label, sum(cnt) AS n_tokens FROM c"
-        " GROUP BY 1),"
-        " ld AS (SELECT lang AS label, count(*) AS n_docs"
-        " FROM documents WHERE length(trim(text)) > 0 GROUP BY 1),"
-        " v AS (SELECT count(DISTINCT term) AS vocab FROM c),"
-        # zero-token docs (char-gram path: text shorter than n)
-        # score the prior alone via a synthetic tf=0 row — mirror
-        # of classify._doc_label_scores' tokenless union
-        " tf0 AS (SELECT doc_id, term, count(*) AS tf FROM toks"
-        " GROUP BY 1, 2),"
-        " dd AS (SELECT doc_id FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " tf AS (SELECT doc_id, term, tf FROM tf0 UNION ALL"
-        " SELECT d.doc_id, CAST(NULL AS VARCHAR) AS term,"
-        " CAST(0 AS BIGINT) AS tf FROM dd d"
-        " WHERE NOT EXISTS (SELECT 1 FROM tf0"
-        " WHERE tf0.doc_id = d.doc_id)),"
-        " j AS (SELECT t.doc_id, l.label, t.tf,"
-        " CAST(coalesce(c.cnt, 0) + 1 AS BIGINT) AS num,"
-        " CAST(l.n_tokens + v.vocab AS BIGINT) AS den,"
-        " CAST(ld.n_docs AS BIGINT) AS nd"
-        " FROM tf t CROSS JOIN lt l JOIN ld USING (label)"
-        " CROSS JOIN v"
-        " LEFT JOIN c ON c.label = l.label AND c.term = t.term),"
-        " sc AS (SELECT doc_id, label,"
-        " sum(tf * (" + _fix.format(x="num") + " - "
-        + _fix.format(x="den") + ")) + min("
-        + _fix.format(x="nd") + ") AS iscore"
-        " FROM j GROUP BY 1, 2),"
-        " pred AS (SELECT doc_id, label AS pred FROM ("
-        " SELECT doc_id, label, row_number() OVER ("
-        " PARTITION BY doc_id ORDER BY iscore DESC, label) AS rn"
-        " FROM sc) WHERE rn = 1)"
-        " SELECT d.lang AS label, p.pred,"
-        " CAST(count(*) AS BIGINT) AS n"
-        " FROM documents d JOIN pred p USING (doc_id)"
-        " GROUP BY 1, 2")
-    # NB language gate, word-feature OPTION (r11: the unsuffixed
-    # name is the char default below): same CTE chain as the
-    # confusion matrix, per-document keep bits
-    o["curation_nb_lang_gate_word"] = (
-        o["text_nb_confusion"].replace(
-            " SELECT d.lang AS label, p.pred,"
-            " CAST(count(*) AS BIGINT) AS n"
-            " FROM documents d JOIN pred p USING (doc_id)"
-            " GROUP BY 1, 2",
-            " SELECT d.doc_id, d.lang AS label, p.pred,"
-            " d.lang = p.pred AS keep"
-            " FROM documents d JOIN pred p USING (doc_id)"))
-    # char-3-gram language gate — THE default: the SAME CTE chain
-    # with the token stream swapped for overlapping character
-    # trigrams of lower(trim(text)) (short tail grams dropped by
-    # the length filter — the exact _tokens(features="chars")
-    # definition)
-    _nb_toks3 = (
-        "SELECT doc_id, lang, unnest(list_filter(list_transform("
-        "range(1, greatest(length(trim(lower(text))), 1) + 1),"
-        " p -> substr(trim(lower(text)), CAST(p AS INT), 3)),"
-        " g -> length(g) = 3)) AS term FROM documents"
-        " WHERE length(trim(text)) > 0")
-    o["curation_nb_lang_gate"] = \
-        o["curation_nb_lang_gate_word"].replace(_nb_toks, _nb_toks3)
-    # char-3-gram confusion matrix: the word chain with the token
-    # stream swapped, same matrix tail
-    o["text_nb_confusion_ngram"] = \
-        o["text_nb_confusion"].replace(_nb_toks, _nb_toks3)
-    # feature hashing: DuckDB rebuilds the md5 bucket/sign mapping
-    # and the signed-count sums; the neighbor entry replays the
-    # integer dot-product ranking
-    _he = (
-        "SELECT doc_id, CAST("
-        " CAST(('0x' || substr(h, 1, 15)) AS BIGINT) % 64 AS BIGINT)"
-        " AS i,"
-        " CASE WHEN CAST(('0x' || substr(h, 16, 1)) AS BIGINT) < 8"
-        " THEN 1 ELSE -1 END AS s"
-        " FROM (SELECT doc_id, md5(word) AS h FROM ("
-        " SELECT doc_id, unnest(list_filter(string_split_regex("
-        "trim(lower(text)), '\\s+'), x -> x <> '')) AS word"
-        " FROM documents WHERE length(trim(text)) > 0))")
-    o["text_hash_embed"] = (
-        "SELECT doc_id, i, CAST(sum(s) AS BIGINT) AS v FROM ("
-        + _he + ") GROUP BY 1, 2")
-    o["text_hash_embed_sim"] = (
-        "WITH emb AS (SELECT doc_id, i, CAST(sum(s) AS BIGINT) AS v"
-        " FROM (" + _he + ") GROUP BY 1, 2),"
-        " qv AS (SELECT i, v AS qv FROM emb WHERE doc_id = 0)"
-        " SELECT e.doc_id, CAST(sum(e.v * qv.qv) AS BIGINT) AS dot"
-        " FROM emb e JOIN qv USING (i) WHERE e.doc_id <> 0"
-        " GROUP BY 1 ORDER BY dot DESC, e.doc_id LIMIT 20")
-    # tf-idf-weighted variant: same bucket/sign mapping, weights
-    # tf·(fixlog2(N) − fixlog2(df)) — the fixlog2 spelled with
-    # bin()/<<// exactly like the NB confusion oracle
-    o["text_hash_embed_tfidf"] = (
-        "WITH toks AS (SELECT doc_id, unnest(list_filter("
-        "string_split_regex(trim(lower(text)), '\\s+'),"
-        " x -> x <> '')) AS word FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " nd AS (SELECT count(DISTINCT doc_id) AS nd FROM toks),"
-        " dfreq AS (SELECT word, count(DISTINCT doc_id) AS df"
-        " FROM toks GROUP BY 1),"
-        " tf AS (SELECT doc_id, word, count(*) AS tf FROM toks"
-        " GROUP BY 1, 2),"
-        " j AS (SELECT t.doc_id, md5(t.word) AS h, t.tf,"
-        " (" + _fix.format(x="nd.nd") + " - "
-        + _fix.format(x="d.df") + ") AS idf"
-        " FROM tf t JOIN dfreq d USING (word) CROSS JOIN nd)"
-        " SELECT doc_id, CAST(CAST(('0x' || substr(h, 1, 15))"
-        " AS BIGINT) % 64 AS BIGINT) AS i,"
-        " CAST(sum((CASE WHEN CAST(('0x' || substr(h, 16, 1))"
-        " AS BIGINT) < 8 THEN 1 ELSE -1 END) * tf * idf)"
-        " AS BIGINT) AS v"
-        " FROM j GROUP BY 1, 2")
-    # scalar quantization: DuckDB rebuilds the int8 codes from the
-    # same floor(x·127/smax + 0.5) double expression (op order
-    # fixed; sqrt/floor are IEEE-exact, unlike the banned ln/exp/
-    # pow), the integer coarse scores from a positional join, and
-    # the recall audit replays coarse-then-rescore end to end
-    o["sim_sq_codes"] = (
-        "WITH m AS (SELECT max(abs(CAST(x AS DOUBLE))) AS s FROM"
-        " (SELECT unnest(embedding) AS x FROM embeddings)),"
-        " x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM embeddings)"
-        " SELECT vec_id, i,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT) AS q"
-        " FROM x, m"
-    )
-    o["sim_sq_scores"] = (
-        "WITH m AS (SELECT max(abs(CAST(x AS DOUBLE))) AS s FROM"
-        " (SELECT unnest(embedding) AS x FROM embeddings)),"
-        " x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM embeddings),"
-        " qc AS (SELECT vec_id, i,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT) AS q FROM x, m),"
-        " q0 AS (SELECT i, GREATEST(-127, LEAST(127, q)) AS q"
-        " FROM qc WHERE vec_id = 0),"
-        " sc AS (SELECT c.vec_id,"
-        " sum(CAST(c.q AS BIGINT) * q0.q) AS iscore"
-        " FROM qc c JOIN q0 USING (i) WHERE c.vec_id <> 0"
-        " GROUP BY 1)"
-        " SELECT vec_id, CAST(iscore AS BIGINT) AS iscore FROM sc"
-        " ORDER BY iscore DESC, vec_id LIMIT 40"
-    )
-    # persisted IVF-SQ8 index: the contract is equality with the
-    # per-call path (computed Spark-side on both) + a plan-asserted
-    # partition-pruned probe, pinned as properties
-    o["sim_sq_index"] = (
-        "SELECT 'k_returned' AS prop, CAST(10 AS BIGINT) AS n"
-        " UNION ALL SELECT 'equal_to_fresh_build', 1"
-        " UNION ALL SELECT 'partition_pruned', 1")
-    o["sim_sq_index_append"] = (
-        "SELECT 'delta_rows_indexed' AS prop, CAST(1 AS BIGINT)"
-        " AS n"
-        " UNION ALL SELECT 'equal_to_in_memory_union', 1"
-        " UNION ALL SELECT 'k_returned', 10")
-    o["sim_sq_index_rebuild"] = (
-        "SELECT 'rows_preserved' AS prop, CAST(1 AS BIGINT) AS n"
-        " UNION ALL SELECT 'cells_requested', 1"
-        " UNION ALL SELECT 'k_returned', 10")
-    # drift report: full replay — centroids, per-row cosines, the
-    # frozen assignment rule (rn=1 per delta row, ties to smaller
-    # cell), exact counts + ppm shares, order-free decimal-sum means
-    _sdsum = ("CAST(sum(CAST(CAST({x} AS DOUBLE)"
-              " AS DECIMAL(38,18))) AS DOUBLE)")
-    o["sim_sq_index_drift"] = (
-        "WITH e AS (SELECT vec_id, label, embedding"
-        " FROM embeddings WHERE vec_id <> 0 AND vec_id % 7 <> 1),"
-        " dl AS (SELECT vec_id, embedding FROM embeddings"
-        " WHERE vec_id <> 0 AND vec_id % 7 = 1),"
-        " pos AS (SELECT label, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " cent AS (SELECT label AS cell, i, avg(x) AS c FROM pos"
-        " GROUP BY 1, 2),"
-        " bp AS (SELECT vec_id, label AS cell,"
-        " CAST(unnest(embedding) AS DOUBLE) AS x,"
-        " unnest(range(1, len(embedding) + 1)) AS i FROM e),"
-        " bs0 AS (SELECT b.vec_id, b.cell, sum(b.x * c.c) AS d,"
-        " sum(b.x * b.x) AS na, sum(c.c * c.c) AS nb"
-        " FROM bp b JOIN cent c ON c.cell = b.cell AND c.i = b.i"
-        " GROUP BY 1, 2),"
-        " bcos AS (SELECT cell, CASE WHEN na = 0 OR nb = 0"
-        " THEN 0.0 ELSE d / (sqrt(na) * sqrt(nb)) END AS cos"
-        " FROM bs0),"
-        " bs AS (SELECT cell, count(*) AS n_base,"
-        " round(" + _sdsum.format(x="cos") + " / count(*), 6)"
-        " + 0.0 AS mean_cos_base FROM bcos GROUP BY 1),"
-        " dp AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, unnest(range(1, len(embedding) + 1)) AS i FROM dl),"
-        " ds0 AS (SELECT p.vec_id, c.cell, sum(p.x * c.c) AS d,"
-        " sum(p.x * p.x) AS na, sum(c.c * c.c) AS nb"
-        " FROM dp p JOIN cent c USING (i) GROUP BY 1, 2),"
-        " dcos AS (SELECT vec_id, cell, CASE WHEN na = 0 OR nb = 0"
-        " THEN 0.0 ELSE d / (sqrt(na) * sqrt(nb)) END AS cos"
-        " FROM ds0),"
-        " asg AS (SELECT vec_id, cell, cos FROM (SELECT vec_id,"
-        " cell, cos, row_number() OVER (PARTITION BY vec_id"
-        " ORDER BY cos DESC, cell) AS rn FROM dcos) WHERE rn = 1),"
-        " ns AS (SELECT cell, count(*) AS n_new,"
-        " round(" + _sdsum.format(x="cos") + " / count(*), 6)"
-        " + 0.0 AS mean_cos_new FROM asg GROUP BY 1),"
-        " t AS (SELECT sum(n_new) AS t FROM ns),"
-        " cl AS (SELECT DISTINCT cell FROM cent)"
-        " SELECT cl.cell,"
-        " CAST(coalesce(bs.n_base, 0) AS BIGINT) AS n_base,"
-        " CAST(coalesce(ns.n_new, 0) AS BIGINT) AS n_new,"
-        " CAST(coalesce(ns.n_new, 0) * 1000000"
-        " // greatest(t.t, 1) AS BIGINT) AS new_share_ppm,"
-        " bs.mean_cos_base, ns.mean_cos_new"
-        " FROM cl LEFT JOIN bs USING (cell)"
-        " LEFT JOIN ns USING (cell), t")
-    o["sim_sq_recall"] = (
-        "WITH e AS (SELECT * FROM embeddings WHERE vec_id <> 0),"
-        " m AS (SELECT max(abs(CAST(x AS DOUBLE))) AS s FROM"
-        " (SELECT unnest(embedding) AS x FROM e)),"
-        " xc AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE)"
-        " AS x, CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM e),"
-        " qc AS (SELECT vec_id, i,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT) AS q"
-        " FROM xc, m),"
-        " xq AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(range(len(embedding))) AS INT) AS i"
-        " FROM embeddings WHERE vec_id = 0),"
-        " q0 AS (SELECT i, GREATEST(-127, LEAST(127,"
-        " CAST(floor(x * 127.0 / m.s + 0.5) AS INT))) AS q"
-        " FROM xq, m),"
-        " sc AS (SELECT c.vec_id,"
-        " sum(CAST(c.q AS BIGINT) * q0.q) AS iscore"
-        " FROM qc c JOIN q0 USING (i) GROUP BY 1),"
-        " cand AS (SELECT vec_id FROM sc"
-        " ORDER BY iscore DESC, vec_id LIMIT 40),"
-        " prod AS (SELECT e2.vec_id,"
-        " CAST(unnest(e2.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.embedding) AS DOUBLE) AS y"
-        " FROM e e2 JOIN cand USING (vec_id), embeddings q"
-        " WHERE q.vec_id = 0),"
-        " s AS (SELECT vec_id, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1),"
-        " sq10 AS (SELECT vec_id FROM s"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10),"
-        " prodall AS (SELECT e2.vec_id,"
-        " CAST(unnest(e2.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(q.embedding) AS DOUBLE) AS y"
-        " FROM e e2, embeddings q WHERE q.vec_id = 0),"
-        " sall AS (SELECT vec_id, sum(x * y) AS d,"
-        " sum(x * x) AS na, sum(y * y) AS nb FROM prodall"
-        " GROUP BY 1),"
-        " ex10 AS (SELECT vec_id FROM sall"
-        " ORDER BY d / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10)"
-        " SELECT 'k_returned' AS prop,"
-        " CAST(count(*) AS BIGINT) AS n FROM sq10"
-        " UNION ALL SELECT 'recall_hits_at_10',"
-        " CAST(count(*) AS BIGINT) FROM sq10 JOIN ex10"
-        " USING (vec_id)"
-    )
-    o["corpus_sketch_stats"] = (
-        "SELECT 'hll_within_3rsd' AS prop, CAST(1 AS BIGINT) AS n"
-        " UNION ALL SELECT 'quantiles_within_2pct', 1"
-    )
-    # confusion matrix over the same CASE expression as text_langid
-    _lid = o["text_langid"]
-    o["text_langid_confusion"] = (
-        "WITH pred AS (" + _lid.replace("SELECT doc_id,",
-                                        "SELECT doc_id, lang,", 1)
-        .replace("FROM documents) SELECT doc_id,",
-                 "FROM documents) SELECT doc_id, lang,", 1)
-        + ") SELECT d.lang AS label, p.pred_lang AS pred,"
-        " count(*) AS n FROM documents d JOIN pred p USING (doc_id)"
-        " GROUP BY 1, 2"
-    )
-    # Gopher-style keep/drop: same feature math as text_quality
-    o["text_quality_gate"] = (
-        "WITH f AS (SELECT doc_id,"
-        " CASE WHEN length(trim(text)) = 0 THEN 0 ELSE"
-        " len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,"
-        " round(length(text) * 1.0 /"
-        " len(string_split_regex(trim(text), '\\s+')), 6) + 0.0"
-        " AS avg_tok,"
-        " round(len(regexp_extract_all(text, '[^\\w\\s]')) * 1.0"
-        " / length(text), 6) + 0.0 AS punct,"
-        " round(len(regexp_extract_all(text, '[0-9]')) * 1.0"
-        " / length(text), 6) + 0.0 AS digit FROM documents)"
-        " SELECT doc_id, n_tokens, coalesce("
-        " n_tokens BETWEEN 10 AND 1000"
-        " AND avg_tok BETWEEN 2.0 AND 12.0"
-        " AND punct <= 0.2 AND digit <= 0.2, FALSE) AS keep FROM f"
-    )
-
-    o["sim_cosine_pairs"] = (
-        "WITH prod AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-        " CAST(unnest(a.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(b.embedding) AS DOUBLE) AS y"
-        " FROM embeddings a JOIN embeddings b ON a.label = b.label"
-        " AND a.vec_id < b.vec_id),"
-        " s AS (SELECT id_a, id_b, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1, 2)"
-        " SELECT id_a, id_b, round(d / (sqrt(na) * sqrt(nb)), 6)"
-        " + 0.0 AS cos FROM s"
-        " WHERE round(d / (sqrt(na) * sqrt(nb)), 6) >= 0.3"
-    )
-
-    o["multimodal_meta"] = (
-        "SELECT doc_id AS media_id,"
-        " octet_length(encode(text)) AS n_bytes,"
-        " (octet_length(encode(text)) * 7) % 640 + 1 AS width,"
-        " (octet_length(encode(text)) * 13) % 480 + 1 AS height,"
-        " octet_length(encode(text)) % 97 + 1 AS n_frames"
-        " FROM documents"
-    )
-    o["multimodal_frames"] = (
-        "SELECT doc_id AS media_id, unnest(range(0,"
-        " octet_length(encode(text)) % 97 + 1, 10)) AS frame_idx"
-        " FROM documents"
-    )
-
-    # real container-format decodes on hand-constructed payloads:
-    # the expected metadata is known by construction
-    o["multimodal_ppm_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(4 AS BIGINT)"
-        " AS width, CAST(3 AS BIGINT) AS height, CAST(255 AS BIGINT)"
-        " AS maxval, CAST(10.0 AS DOUBLE) AS mean_r,"
-        " CAST(20.0 AS DOUBLE) AS mean_g,"
-        " CAST(30.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 2, 2, 255, 127.75, 64.25, 64.5"
-        " UNION ALL SELECT 3, 1, 1, 255, 5.0, 6.0, 7.0"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-    o["multimodal_png_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(4 AS BIGINT)"
-        " AS width, CAST(3 AS BIGINT) AS height,"
-        " CAST(3 AS BIGINT) AS channels, CAST(10.0 AS DOUBLE)"
-        " AS mean_r, CAST(20.0 AS DOUBLE) AS mean_g,"
-        " CAST(30.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 2, 2, 3, 127.75, 64.25, 64.5"
-        " UNION ALL SELECT 3, 2, 1, 1, 20.0, 20.0, 20.0"
-        " UNION ALL SELECT 4, 2, 1, 4, 20.0, 30.0, 40.0"
-        " UNION ALL SELECT 5, 2, 1, 1, 127.5, 0.0, 0.0"
-        " UNION ALL SELECT 6, NULL, NULL, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 7, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-    o["multimodal_gif_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(2 AS BIGINT)"
-        " AS width, CAST(2 AS BIGINT) AS height,"
-        " CAST(2 AS BIGINT) AS n_frames, CAST(127.75 AS DOUBLE)"
-        " AS mean_r, CAST(64.25 AS DOUBLE) AS mean_g,"
-        " CAST(64.5 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 4, 3, 1, 10.0, 20.0, 30.0"
-        " UNION ALL SELECT 3, 1, 8, 1, 60.0, 60.0, 60.0"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-    # tiles mean: (0 + 50 + 100 + 250) / 4 = 100 exactly (flat 8x8
-    # tiles are pure DC under all-ones quant — no rounding loss)
-    o["multimodal_jpeg_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(8 AS BIGINT)"
-        " AS width, CAST(8 AS BIGINT) AS height,"
-        " CAST(1 AS BIGINT) AS channels, CAST(100.0 AS DOUBLE)"
-        " AS mean_r, CAST(100.0 AS DOUBLE) AS mean_g,"
-        " CAST(100.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 16, 16, 1, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 3, 16, 16, 1, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 4, 16, 16, 3, 200.0, 50.0, 120.0"
-        " UNION ALL SELECT 5, NULL, NULL, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 6, NULL, NULL, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 7, 16, 16, 1, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 8, 16, 16, 3, 200.0, 50.0, 120.0"
-    )
-    o["multimodal_gif_frames"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(0 AS BIGINT) AS frame_idx"
-        " UNION ALL SELECT 1, 2 UNION ALL SELECT 1, 4"
-        " UNION ALL SELECT 2, 0"
-    )
-    # sampled pixels: png (0,0)(0,2)(1,0)(1,2) like the ppm case;
-    # jpeg one pixel per flat tile (0/50/100/250, exact); gif 2x2
-    # identity
-    o["multimodal_resize_any"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(2 AS BIGINT)"
-        " AS width, CAST(2 AS BIGINT) AS height,"
-        " CAST(80.0 AS DOUBLE) AS mean_r,"
-        " CAST(10.0 AS DOUBLE) AS mean_g,"
-        " CAST(15.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 2, 2, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 3, 2, 2, 15.0, 18.0, 21.0"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL, NULL"
-    )
-    o["multimodal_wav_features"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(3 AS BIGINT) AS n_frames,"
-        " CAST(4000.0 AS DOUBLE) AS dominant_hz,"
-        " CAST(4000.0 AS DOUBLE) AS spectral_centroid_hz,"
-        " CAST(1000.0 AS DOUBLE) AS rms"
-        " UNION ALL SELECT 2, 1, 2000.0, 2000.0, 500.0"
-        " UNION ALL SELECT 3, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL"
-    )
-    o["multimodal_ppm_resize"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(2 AS BIGINT)"
-        " AS width, CAST(2 AS BIGINT) AS height, CAST(23 AS BIGINT)"
-        " AS n_bytes, CAST(80.0 AS DOUBLE) AS mean_r,"
-        " CAST(10.0 AS DOUBLE) AS mean_g,"
-        " CAST(15.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 2, 2, 2, 23, 15.0, 18.0, 21.0"
-        " UNION ALL SELECT 3, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-
-    o["multimodal_wav_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(1 AS BIGINT)"
-        " AS channels, CAST(8000 AS BIGINT) AS sample_rate,"
-        " CAST(16 AS BIGINT) AS bits, CAST(4 AS BIGINT) AS n_samples,"
-        " CAST(0.0005 AS DOUBLE) AS duration_s,"
-        " CAST(100.0 AS DOUBLE) AS rms"
-        " UNION ALL SELECT 2, 2, 44100, 16, 2, 0.000045, 1000.0"
-        " UNION ALL SELECT 3, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-
-    # hand-derived constants: wav 4 samples @8 kHz → 0.5 ms half-up
-    # 1; flac STREAMINFO 441000 @44.1 kHz → 10 s; mp3 10×1152
-    # samples @44.1 kHz → 261.22 ms half-up 261; junk → NULLs
-    o["multimodal_audio_meta"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, 'wav' AS container,"
-        " CAST(1 AS BIGINT) AS channels,"
-        " CAST(8000 AS BIGINT) AS sample_rate,"
-        " CAST(16 AS BIGINT) AS bits,"
-        " CAST(4 AS BIGINT) AS n_samples,"
-        " CAST(1 AS BIGINT) AS duration_ms"
-        " UNION ALL SELECT 2, 'flac', 2, 44100, 16, 441000, 10000"
-        " UNION ALL SELECT 3, 'mp3', 1, 44100, NULL, 11520, 261"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-
-    # linear resample to 8 kHz: identity / midpoint-interpolated
-    # upsample / too-short clip → NULLs / invalid → NULLs;
-    # rms(id1) = sqrt((0²+100²+200²+300²)/4) = sqrt(35000)
-    o["multimodal_wav_resample"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id, CAST(8000 AS BIGINT)"
-        " AS sample_rate, CAST(4 AS BIGINT) AS n_samples,"
-        " CAST(52 AS BIGINT) AS n_bytes,"
-        " CAST(187.082869 AS DOUBLE) AS rms"
-        " UNION ALL SELECT 2, 8000, 4, 52, 75.0"
-        " UNION ALL SELECT 3, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 4, NULL, NULL, NULL, NULL"
-    )
-
-    # MP4 box-walk metadata: every constant byte-derived from the
-    # deterministic muxer (build_minimal_mp4): file lengths 1207 /
-    # 29312, tkhd dims, stsz frame counts, mvhd durations
-    # 5*60/600=0.5 and 7*3000/90000=0.233333
-    o["multimodal_mp4_decode"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(1207 AS BIGINT) AS n_bytes, 'isom' AS brand,"
-        " 'avc1' AS codec, CAST(320 AS BIGINT) AS width,"
-        " CAST(240 AS BIGINT) AS height,"
-        " CAST(5 AS BIGINT) AS n_frames,"
-        " CAST(0.5 AS DOUBLE) AS duration_s"
-        " UNION ALL SELECT 2, 29312, 'isom', 'hvc1', 1920, 1080,"
-        " 7, 0.233333"
-        " UNION ALL SELECT 3, 10, NULL, NULL, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 4, 0, NULL, NULL, NULL, NULL, NULL, NULL"
-    )
-    # every-2nd-sample byte ranges reconstructed from stsc (2 resp. 3
-    # samples/chunk) + stco chunk offsets + stsz sizes
-    o["multimodal_mp4_frames"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(0 AS BIGINT) AS frame_idx,"
-        " CAST(632 AS BIGINT) AS sample_offset,"
-        " CAST(100 AS BIGINT) AS sample_size"
-        " UNION ALL SELECT 1, 2, 932, 150"
-        " UNION ALL SELECT 1, 4, 1132, 75"
-        " UNION ALL SELECT 2, 0, 640, 4096"
-        " UNION ALL SELECT 2, 2, 8832, 4096"
-        " UNION ALL SELECT 2, 4, 17024, 4096"
-        " UNION ALL SELECT 2, 6, 25216, 4096"
-    )
-    # H.264 decode is deterministic integer math: I_PCM reproduces
-    # the tile image exactly (mean (0+50+100+250)/4 = 100), the
-    # I16/I4 lossy frames reconstruct it exactly at qp 10 (flat 8x8
-    # tiles are pure-DC), and the raw PCM color frame lands on the
-    # integer-YCbCr roundtrip of (200,50,120) = (200,50,121)
-    o["multimodal_h264_frames"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(0 AS BIGINT) AS frame_idx,"
-        " CAST(16 AS BIGINT) AS width,"
-        " CAST(16 AS BIGINT) AS height,"
-        " CAST(100.0 AS DOUBLE) AS mean_r,"
-        " CAST(100.0 AS DOUBLE) AS mean_g,"
-        " CAST(100.0 AS DOUBLE) AS mean_b"
-        " UNION ALL SELECT 1, 1, 16, 16, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 1, 2, 16, 16, 100.0, 100.0, 100.0"
-        " UNION ALL SELECT 2, 0, 48, 32, 200.0, 50.0, 121.0"
-        " UNION ALL SELECT 4, 0, NULL, NULL, NULL, NULL, NULL"
-        " UNION ALL SELECT 4, 1, NULL, NULL, NULL, NULL, NULL"
-    )
-    # pHash goldens: exact-integer pipeline (hardcoded cosine
-    # table), so the 63-bit hashes are platform-exact constants;
-    # PNG and PPM of the same pixels share one hash
-    o["multimodal_image_phash"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(50 AS BIGINT) AS width, CAST(40 AS BIGINT) AS height,"
-        " CAST(192259225235958612 AS BIGINT) AS phash"
-        " UNION ALL SELECT 2, 50, 40, 192259225235958612"
-        " UNION ALL SELECT 3, 50, 40, 157356328123837268"
-        " UNION ALL SELECT 4, 50, 40, 8003364334614956497"
-        " UNION ALL SELECT 5, NULL, NULL, NULL"
-    )
-    o["dedup_image_phash_pairs"] = (
-        "SELECT CAST(1 AS BIGINT) AS id_a, CAST(2 AS BIGINT) AS id_b,"
-        " CAST(0 AS BIGINT) AS hamming"
-        " UNION ALL SELECT 1, 3, 2"
-        " UNION ALL SELECT 2, 3, 2"
-    )
-    # audio landmark goldens (deterministic synthesis + numpy rfft
-    # on the one machine both engines run on; matching properties
-    # are additionally pytest-asserted)
-    o["multimodal_audio_fingerprint"] = (
-        "SELECT CAST(1 AS BIGINT) AS media_id,"
-        " CAST(909 AS BIGINT) AS n_landmarks,"
-        " CAST(179 AS BIGINT) AS n_distinct_fp"
-        " UNION ALL SELECT 2, 1149, 403"
-        " UNION ALL SELECT 3, 924, 914"
-    )
-    o["dedup_audio_match"] = (
-        "SELECT CAST(1 AS BIGINT) AS id_a, CAST(2 AS BIGINT) AS id_b,"
-        " CAST(-16 AS BIGINT) AS offset,"
-        " CAST(909 AS BIGINT) AS n_matches"
-    )
-    o["dedup_video_match"] = (
-        "SELECT CAST(1 AS BIGINT) AS id_a, CAST(2 AS BIGINT) AS id_b,"
-        " CAST(2 AS BIGINT) AS offset,"
-        " CAST(4 AS BIGINT) AS n_matches"
-    )
-    # P-frame golden (deterministic integer decode; the mp4 track
-    # and the raw Annex B stream must agree frame-for-frame)
-    _PF = (("124.087891", "124.041016", "124.091797"),
-           ("125.006836", "124.683594", "124.265625"),
-           ("123.983398", "124.255859", "124.22168"))
-    o["multimodal_h264_pframes"] = " UNION ALL ".join(
-        f"SELECT CAST({mid} AS BIGINT) AS media_id,"
-        f" CAST({i} AS BIGINT) AS frame_idx,"
-        " CAST(32 AS BIGINT) AS width, CAST(32 AS BIGINT) AS height,"
-        f" CAST({r} AS DOUBLE) AS mean_r,"
-        f" CAST({g} AS DOUBLE) AS mean_g,"
-        f" CAST({b} AS DOUBLE) AS mean_b"
-        for mid in (1, 2) for i, (r, g, b) in enumerate(_PF))
-    # BPE training/encoding is exactly deterministic (count-desc,
-    # lexicographic tie-breaks; greedy left-to-right merges), so the
-    # fixture-corpus results are constants — independently re-derived
-    # by a second in-memory implementation in tests/test_bpe.py
-    # positional phrase search, replayed in SQL: lateral
-    # generate_series indexes the token list, overlapping anchors
-    # count separately ("scan scan scan" holds two)
-    o["text_phrase_search"] = (
-        "WITH toks AS ("
-        " SELECT doc_id, i - 1 AS pos, l[i] AS term FROM ("
-        "  SELECT doc_id, l,"
-        "   unnest(generate_series(1, len(l))) AS i FROM ("
-        "   SELECT doc_id,"
-        "    regexp_extract_all(lower(text), '[a-z0-9'']+') AS l"
-        "   FROM documents))),"
-        " anchors AS ("
-        " SELECT doc_id, anchor FROM ("
-        "  SELECT doc_id, pos - j AS anchor, j FROM toks,"
-        "   (VALUES (0), (1)) AS slots(j)"
-        "  WHERE term = 'scan' AND pos - j >= 0)"
-        " GROUP BY 1, 2 HAVING count(DISTINCT j) = 2)"
-        " SELECT doc_id, count(*) AS n_matches,"
-        " min(anchor) AS first_pos FROM anchors GROUP BY 1"
-    )
-    # character diversity: positional substr char explode (identical
-    # semantics on both engines — no empty-delimiter split quirks),
-    # exact integer counts + int_ppm collision mass
-    o["text_char_diversity"] = (
-        "WITH ch AS (SELECT doc_id, substr(text, CAST(i AS INT), 1)"
-        " AS ch FROM (SELECT doc_id, text,"
-        " unnest(range(1, length(text) + 1)) AS i FROM documents"
-        " WHERE length(text) > 0)),"
-        " cc AS (SELECT doc_id, ch, count(*) AS c FROM ch"
-        " GROUP BY 1, 2)"
-        " SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_chars,"
-        " count(*) AS n_distinct_chars,"
-        + INT_PPM_SQL.format(
-            num="sum(c * c)",
-            den="CAST(sum(c) AS HUGEINT) * CAST(sum(c) AS HUGEINT)")
-        + " AS collision_ppm FROM cc GROUP BY 1"
-    )
-
-    # whitespace-token vocabulary (the driver-green tokenizer shared
-    # by every other text entry); hashed contract = the three exact
-    # COUNT columns — the ppm ratios are derived pure functions of
-    # them, pytest-verified (this entry was driver-hash-red in r6+r7
-    # with the [a-z0-9']+ extraction + ppm surface)
-    o["text_vocab_stats"] = (
-        "WITH t AS (SELECT source, unnest(list_filter("
-        "string_split_regex(trim(lower(text)), '\\s+'),"
-        " x -> x <> '')) AS word FROM documents"
-        " WHERE length(trim(text)) > 0),"
-        " wc AS (SELECT source, word, count(*) AS n FROM t"
-        " GROUP BY 1, 2)"
-        " SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,"
-        " count(*) AS n_vocab,"
-        " CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS n_hapax"
-        " FROM wc GROUP BY 1"
-    )
-    o["curation_stratified_sample"] = (
-        "SELECT doc_id, source FROM ("
-        " SELECT doc_id, source, row_number() OVER ("
-        "  PARTITION BY source"
-        "  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk"
-        " FROM documents) WHERE rk <= 20"
-    )
-    o["text_unigram_vocab"] = (
-        "SELECT CAST(rank AS INT) AS rank, piece,"
-        " CAST(cnt AS BIGINT) AS count FROM (VALUES"
-        " (0, 'the', 6), (1, 'and', 4), (2, 'low', 3),"
-        " (3, 'lower', 3), (4, 'lowest', 2), (5, 'wider', 2))"
-        " AS t(rank, piece, cnt)"
-    )
-    o["text_unigram_encode"] = (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(n AS BIGINT) AS n_tokens, stream FROM (VALUES"
-        " (1, 7, 'the|lower|the|better|when|lowering|lowers'),"
-        " (2, 6, 'new|newer|newest|lower|and|lowest'),"
-        " (3, 8, 'wider|and|wider|widths|widen|the|widest|cases'),"
-        " (4, 6, 'low|lows|lowest|lower|low|low'),"
-        " (5, 8, 'the|the|the|and|and|a|42|42''s'),"
-        " (6, 0, ''), (7, 0, ''))"
-        " AS t(doc_id, n, stream)"
-    )
-    # unigram tiling: the oracle strips non-word characters — no
-    # tokenizer on its side; equality proves every token stream
-    # tiles its document's word characters exactly
-    o["text_unigram_tiling"] = (
-        "SELECT doc_id, CAST(length(regexp_replace(lower("
-        "coalesce(text, '')), '[^a-z0-9'']', '', 'g')) AS BIGINT)"
-        " AS tok_chars FROM documents"
-    )
-    o["text_bpe_merges"] = (
-        "SELECT CAST(0 AS INT) AS rank, 'l' AS left,"
-        " 'o' AS right, CAST(11 AS BIGINT) AS pair_count"
-        " UNION ALL SELECT 1, 'lo', 'w', 11"
-        " UNION ALL SELECT 2, 'e', 'r', 9"
-        " UNION ALL SELECT 3, 'er', '</w>', 7"
-        " UNION ALL SELECT 4, 'h', 'e', 7"
-        " UNION ALL SELECT 5, 'he', '</w>', 6"
-        " UNION ALL SELECT 6, 't', 'he</w>', 6"
-        " UNION ALL SELECT 7, 'e', 's', 5"
-    )
-    o["text_bpe_encode"] = (
-        "SELECT CAST(1 AS BIGINT) AS doc_id,"
-        " CAST(23 AS BIGINT) AS n_tokens,"
-        " 'the</w> low er</w> the</w> b e t t er</w> w he n </w>"
-        " low er i n g </w> low er s </w>' AS token_str"
-        " UNION ALL SELECT 2, 24, 'n e w </w> n e w er</w> n e w"
-        " es t </w> low er</w> a n d </w> low es t </w>'"
-        " UNION ALL SELECT 3, 37, 'w i d er</w> a n d </w> w i d"
-        " er</w> w i d t h s </w> w i d e n </w> the</w> w i d es"
-        " t </w> c a s es </w>'"
-        " UNION ALL SELECT 4, 15, 'low </w> low s </w> low es t"
-        " </w> low er</w> low </w> low </w>'"
-        " UNION ALL SELECT 5, 21, 'the</w> the</w> the</w> a n d"
-        " </w> a n d </w> a </w> 4 2 </w> 4 2 '' s </w>'"
-        " UNION ALL SELECT 6, 0, ''"
-        " UNION ALL SELECT 7, 0, ''"
-    )
-    # WordPiece: the fixture vocabulary and encodings are exact
-    # deterministic constants (likelihood-scored merges with
-    # integer cross-multiplied comparisons, lexical ties); the
-    # corpus-wide contract is the tiling oracle below
-    o["text_wordpiece_vocab"] = "SELECT * FROM (VALUES ('''', CAST(0 AS INT)), ('2', CAST(1 AS INT)), ('4', CAST(2 AS INT)), ('a', CAST(3 AS INT)), ('b', CAST(4 AS INT)), ('c', CAST(5 AS INT)), ('d', CAST(6 AS INT)), ('e', CAST(7 AS INT)), ('g', CAST(8 AS INT)), ('h', CAST(9 AS INT)), ('i', CAST(10 AS INT)), ('l', CAST(11 AS INT)), ('n', CAST(12 AS INT)), ('o', CAST(13 AS INT)), ('r', CAST(14 AS INT)), ('s', CAST(15 AS INT)), ('t', CAST(16 AS INT)), ('w', CAST(17 AS INT)), ('##''', CAST(18 AS INT)), ('##2', CAST(19 AS INT)), ('##4', CAST(20 AS INT)), ('##a', CAST(21 AS INT)), ('##b', CAST(22 AS INT)), ('##c', CAST(23 AS INT)), ('##d', CAST(24 AS INT)), ('##e', CAST(25 AS INT)), ('##g', CAST(26 AS INT)), ('##h', CAST(27 AS INT)), ('##i', CAST(28 AS INT)), ('##l', CAST(29 AS INT)), ('##n', CAST(30 AS INT)), ('##o', CAST(31 AS INT)), ('##r', CAST(32 AS INT)), ('##s', CAST(33 AS INT)), ('##t', CAST(34 AS INT)), ('##w', CAST(35 AS INT)), ('42', CAST(36 AS INT)), ('wi', CAST(37 AS INT)), ('th', CAST(38 AS INT)), ('an', CAST(39 AS INT)), ('and', CAST(40 AS INT)), ('wid', CAST(41 AS INT)), ('lo', CAST(42 AS INT)), ('low', CAST(43 AS INT)), ('##st', CAST(44 AS INT)), ('##er', CAST(45 AS INT)), ('##est', CAST(46 AS INT)), ('##ew', CAST(47 AS INT))) AS t(piece, rank)"
-    o["text_wordpiece_encode"] = "SELECT * FROM (VALUES (CAST(1 AS BIGINT), CAST(23 AS BIGINT), CAST(0 AS BIGINT), 'th ##e low ##er th ##e b ##e ##t ##t ##er w ##h ##e ##n low ##er ##i ##n ##g low ##er ##s'), (CAST(2 AS BIGINT), CAST(13 AS BIGINT), CAST(0 AS BIGINT), 'n ##ew n ##ew ##er n ##ew ##est low ##er and low ##est'), (CAST(3 AS BIGINT), CAST(21 AS BIGINT), CAST(0 AS BIGINT), 'wid ##er and wid ##er wid ##t ##h ##s wid ##e ##n th ##e wid ##est c ##a ##s ##e ##s'), (CAST(4 AS BIGINT), CAST(9 AS BIGINT), CAST(0 AS BIGINT), 'low low ##s low ##est low ##er low low'), (CAST(5 AS BIGINT), CAST(13 AS BIGINT), CAST(0 AS BIGINT), 'th ##e th ##e th ##e and and a 42 42 ##'' ##s'), (CAST(6 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT), ''), (CAST(7 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT), '')) AS t(doc_id, n_tokens, n_unk, token_str)"
-    o["text_wordpiece_tiling"] = (
-        "SELECT doc_id, CAST(0 AS BIGINT) AS n_unk,"
-        " CAST(length(regexp_replace(lower("
-        "coalesce(text, '')), '[^a-z0-9'']', '', 'g')) AS BIGINT)"
-        " AS tok_chars FROM documents"
-    )
-    o["tpch_q1ish"] = (
-        "SELECT l_returnflag, l_linestatus,"
-        f" round({_SC6('l_quantity')}, 4) + 0.0 AS sum_qty,"
-        f" round({_SC6('l_extendedprice')}, 2) + 0.0"
-        " AS sum_price,"
-        f" round({_SC6('l_discount')} / count(*), 6) + 0.0"
-        " AS avg_disc,"
-        " count(*) AS count_order"
-        " FROM lineitem GROUP BY 1, 2"
-    )
-    o["tpch_join_revenue"] = (
-        "SELECT o_orderpriority,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0 AS revenue,"
-        " count(*) AS n_items"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " GROUP BY 1"
-    )
-    o["events_json_props"] = (
-        "SELECT event_type,"
-        " CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))"
-        " AS BIGINT) AS sum_k, count(*) AS n"
-        " FROM events GROUP BY 1"
-    )
-    o["tpch_q6ish"] = (
-        "SELECT round("
-        f"{_SC6('l_extendedprice * l_discount')}, 4) + 0.0"
-        " AS revenue, count(*) AS n_items FROM lineitem"
-        " WHERE l_shipdate >= TIMESTAMP '1996-01-01'"
-        " AND l_shipdate < TIMESTAMP '1997-01-01'"
-        " AND l_discount BETWEEN 0.03 AND 0.07"
-        " AND l_quantity < 24"
-    )
-    o["tpch_q5ish"] = (
-        "SELECT n_name,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0 AS revenue,"
-        " count(*) AS n_items"
-        " FROM lineitem"
-        " JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " JOIN supplier ON l_suppkey = s_suppkey"
-        " AND c_nationkey = s_nationkey"
-        " JOIN nation ON s_nationkey = n_nationkey"
-        " JOIN region ON n_regionkey = r_regionkey"
-        " WHERE r_name = 'ASIA' GROUP BY 1"
-    )
-    _REV = "l_extendedprice * (1 - l_discount)"
-    _PROMO = (f"CASE WHEN p_type = 'PROMO' THEN {_REV}"
-              " ELSE 0.0 END")
-    o["tpch_q14ish"] = (
-        "SELECT"
-        f" round(100.0 * {_SC6(_PROMO)}"
-        f" / {_SC6(_REV)}, 6) + 0.0 AS promo_pct,"
-        f" round({_SC6(_REV)}, 2) + 0.0 AS revenue,"
-        " count(*) AS n_items"
-        " FROM lineitem JOIN part ON l_partkey = p_partkey"
-        " WHERE l_shipdate >= TIMESTAMP '1996-03-01'"
-        " AND l_shipdate < TIMESTAMP '1996-04-01'"
-    )
-    o["tpch_q4ish"] = (
-        "SELECT o_orderpriority, count(*) AS order_count"
-        " FROM orders"
-        " WHERE o_orderdate >= TIMESTAMP '1996-01-01'"
-        " AND o_orderdate < TIMESTAMP '1996-04-01'"
-        " AND EXISTS (SELECT 1 FROM lineitem"
-        "  WHERE l_orderkey = o_orderkey"
-        "  AND l_shipdate > o_orderdate + INTERVAL 90 DAY)"
-        " GROUP BY 1"
-    )
-    o["tpch_q12ish"] = (
-        "SELECT l_returnflag,"
-        " sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')"
-        "  THEN 1 ELSE 0 END) AS high_line_count,"
-        " sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')"
-        "  THEN 0 ELSE 1 END) AS low_line_count"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " WHERE l_shipdate >= TIMESTAMP '1996-01-01'"
-        " AND l_shipdate < TIMESTAMP '1997-01-01'"
-        " GROUP BY 1"
-    )
-    o["tpch_q16ish"] = (
-        "SELECT p_brand, count(*) AS idle_parts FROM part"
-        " WHERE NOT EXISTS (SELECT 1 FROM lineitem"
-        "  WHERE l_partkey = p_partkey"
-        "  AND l_shipdate >= TIMESTAMP '1996-01-01'"
-        "  AND l_shipdate < TIMESTAMP '1997-01-01')"
-        " GROUP BY 1 ORDER BY idle_parts DESC, p_brand LIMIT 10"
-    )
-    o["tpch_q18ish"] = (
-        "WITH big AS (SELECT l_orderkey,"
-        f" round({_SC6('l_quantity')}, 4) + 0.0 AS sum_qty"
-        " FROM lineitem GROUP BY 1"
-        " HAVING sum_qty > 150)"
-        " SELECT c_name, o_orderkey,"
-        " strftime(o_orderdate, '%Y-%m-%d') AS orderdate,"
-        " round(o_totalprice, 2) + 0.0 AS totalprice, sum_qty"
-        " FROM big JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " ORDER BY sum_qty DESC, o_orderkey LIMIT 20"
-    )
-    o["tpch_q19ish"] = (
-        "SELECT"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0 AS revenue, count(*) AS n_items"
-        " FROM lineitem JOIN part ON l_partkey = p_partkey"
-        " WHERE (p_brand = 'Brand#12'"
-        "  AND p_size BETWEEN 1 AND 15"
-        "  AND l_quantity BETWEEN 1 AND 11)"
-        " OR (p_brand = 'Brand#23'"
-        "  AND p_size BETWEEN 1 AND 25"
-        "  AND l_quantity BETWEEN 10 AND 20)"
-        " OR (p_brand = 'Brand#34'"
-        "  AND p_size BETWEEN 1 AND 35"
-        "  AND l_quantity BETWEEN 20 AND 30)"
-    )
-    o["tpch_monthly_revenue"] = (
-        "SELECT strftime(o_orderdate, '%Y-%m') AS month,"
-        f" round({_SC6('o_totalprice')}, 2) + 0.0"
-        " AS revenue,"
-        " count(*) AS n_orders FROM orders GROUP BY 1"
-    )
-    o["tpch_q10ish"] = (
-        "SELECT c_custkey, c_name,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0 AS revenue"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " WHERE l_returnflag = 'R'"
-        " AND o_orderdate >= TIMESTAMP '1996-07-01'"
-        " AND o_orderdate < TIMESTAMP '1996-10-01'"
-        " GROUP BY 1, 2 ORDER BY revenue DESC, c_custkey LIMIT 20"
-    )
-    o["tpch_q13ish"] = (
-        "WITH per AS (SELECT c_custkey, count(o_orderkey) AS c_count"
-        " FROM customer LEFT JOIN orders ON c_custkey = o_custkey"
-        " AND o_orderpriority <> '1-URGENT' GROUP BY 1)"
-        " SELECT c_count, count(*) AS custdist FROM per"
-        " GROUP BY 1 ORDER BY custdist DESC, c_count DESC"
-    )
-    o["tpch_q17ish"] = (
-        # the avg-quantity threshold in exact integer math:
-        # q < 0.2·(sum/cnt) ⟺ 5·q·cnt < sum (quantities integral)
-        "WITH l2 AS (SELECT l_partkey,"
-        " CAST(floor(l_quantity) AS BIGINT) AS qi, l_extendedprice"
-        " FROM lineitem JOIN part ON l_partkey = p_partkey"
-        " WHERE p_brand = 'Brand#11'),"
-        " pp AS (SELECT l_partkey AS pk, sum(qi) AS qsum,"
-        " count(*) AS qcnt FROM l2 GROUP BY 1)"
-        " SELECT"
-        f" round({_SC6('l_extendedprice')} / 7.0, 2) + 0.0"
-        " AS avg_yearly, count(*) AS n_items"
-        " FROM l2 JOIN pp ON l_partkey = pk"
-        " WHERE qi * 5 * qcnt < qsum"
-    )
-    o["tpch_q22ish"] = (
-        # exact-cents threshold: acctbal quantizes exactly at 2
-        # decimals; cents·n > cents_sum is pure integer math
-        "WITH c2 AS (SELECT c_custkey, c_nationkey,"
-        f" {_QTERM2('c_acctbal')} AS ab_cents FROM customer),"
-        " thr AS (SELECT sum(ab_cents) AS cents_sum,"
-        " count(*) AS n_pos FROM c2 WHERE ab_cents > 0),"
-        " rich AS (SELECT c_custkey, c_nationkey, ab_cents"
-        " FROM c2, thr WHERE ab_cents * n_pos > cents_sum),"
-        " dormant AS (SELECT * FROM rich WHERE NOT EXISTS"
-        " (SELECT 1 FROM orders"
-        " WHERE o_custkey = rich.c_custkey"
-        " AND o_orderpriority = '1-URGENT'))"
-        " SELECT c_nationkey AS cntry, count(*) AS numcust,"
-        " sum(ab_cents) / 100.0 AS totacctbal"
-        " FROM dormant GROUP BY 1 ORDER BY 1"
-    )
-    _ES = (" (SELECT s_suppkey, s_name FROM supplier"
-           " JOIN nation ON s_nationkey = n_nationkey"
-           " JOIN region ON n_regionkey = r_regionkey"
-           " WHERE r_name = '{r}')")
-    o["tpch_q2ish"] = (
-        # exact-cents minimum supply cost; equality join keeps ties
-        "WITH cost AS (SELECT l_partkey, l_suppkey,"
-        f" min({_QTERM2('l_extendedprice')}) AS cost_cents"
-        " FROM lineitem GROUP BY 1, 2),"
-        " pe AS (SELECT p_partkey, p_brand FROM part"
-        " WHERE p_type = 'PROMO' AND p_size <= 25),"
-        " es AS" + _ES.format(r="EUROPE") + ","
-        " c2 AS (SELECT p_partkey, p_brand, s_name, cost_cents"
-        " FROM cost JOIN pe ON l_partkey = p_partkey"
-        " JOIN es ON l_suppkey = s_suppkey),"
-        " mn AS (SELECT p_partkey AS pk, min(cost_cents)"
-        " AS min_cents FROM c2 GROUP BY 1)"
-        " SELECT p_partkey, p_brand, s_name, cost_cents"
-        " FROM c2 JOIN mn ON p_partkey = pk"
-        " AND cost_cents = min_cents"
-    )
-    o["tpch_q11ish"] = (
-        # share test as integer math: value·2000 > total
-        "WITH asup AS (SELECT s_suppkey FROM supplier"
-        " JOIN nation ON s_nationkey = n_nationkey"
-        " JOIN region ON n_regionkey = r_regionkey"
-        " WHERE r_name = 'ASIA'),"
-        " val AS (SELECT l_partkey AS p_partkey,"
-        f" CAST(sum({_QTERM2('l_extendedprice')}) AS BIGINT)"
-        " AS value_cents"
-        " FROM lineitem JOIN asup ON l_suppkey = s_suppkey"
-        " GROUP BY 1),"
-        " tot AS (SELECT sum(value_cents) AS total_cents FROM val)"
-        " SELECT p_partkey, value_cents FROM val, tot"
-        " WHERE value_cents * 2000 > total_cents"
-    )
-    o["tpch_q20ish"] = (
-        "WITH pw AS (SELECT p_partkey FROM part"
-        " WHERE p_name LIKE '%widget%'),"
-        " per AS (SELECT l_suppkey, l_partkey,"
-        " CAST(sum(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'"
-        " AND l_shipdate < TIMESTAMP '1997-01-01'"
-        " THEN CAST(floor(l_quantity) AS BIGINT) ELSE 0 END)"
-        " AS BIGINT) AS qty_96,"
-        " CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT)"
-        " AS qty_all"
-        " FROM lineitem JOIN pw ON l_partkey = p_partkey"
-        " GROUP BY 1, 2),"
-        " hot AS (SELECT DISTINCT l_suppkey FROM per"
-        " WHERE qty_96 * 2 > qty_all),"
-        " ams AS" + _ES.format(r="AMERICA") +
-        " SELECT s_suppkey, s_name"
-        " FROM hot JOIN ams ON l_suppkey = s_suppkey"
-    )
-    o["tpch_q21ish"] = (
-        # the EXISTS / NOT-EXISTS pair as one per-order aggregate:
-        # qualifies iff ≥2 suppliers and exactly one late supplier
-        "WITH lo AS (SELECT l_orderkey, l_suppkey,"
-        " CASE WHEN l_shipdate > o_orderdate + INTERVAL 180 DAY"
-        " THEN 1 ELSE 0 END AS late"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " WHERE o_orderstatus = 'F'),"
-        " po AS (SELECT l_orderkey,"
-        " count(DISTINCT l_suppkey) AS n_supp,"
-        " count(DISTINCT CASE WHEN late = 1 THEN l_suppkey END)"
-        " AS n_late_supp,"
-        " max(CASE WHEN late = 1 THEN l_suppkey END) AS late_supp,"
-        " CAST(sum(late) AS BIGINT) AS n_late_lines"
-        " FROM lo GROUP BY 1)"
-        " SELECT s_name, CAST(sum(n_late_lines) AS BIGINT)"
-        " AS numwait"
-        " FROM po JOIN supplier ON late_supp = s_suppkey"
-        " WHERE n_supp >= 2 AND n_late_supp = 1"
-        " GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20"
-    )
-    o["tpch_q3ish"] = (
-        "SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d')"
-        " AS orderdate,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}"
-        ", 2) + 0.0"
-        " AS revenue"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " WHERE c_mktsegment = 'BUILDING'"
-        " AND o_orderdate < TIMESTAMP '1998-01-01'"
-        " AND l_shipdate >= TIMESTAMP '1998-01-01'"
-        " GROUP BY 1, 2"
-        " ORDER BY revenue DESC, o_orderkey LIMIT 10"
-    )
-    # trailing 5-point moving average over the deduped points
-    o["ts_moving_avg"] = (
-        _PD + " SELECT series, ts, round(avg(val) OVER"
-        " (PARTITION BY series ORDER BY ts"
-        " ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) + 0.0"
-        " AS avg FROM pd"
-    )
-    # seasonal-naive backtest: identical lag windows + the exact
-    # scaled-long floor(|err|*1000 + 0.5) terms, summed per series
-    o["ts_backtest_seasonal"] = (
-        _PD + ", t AS (SELECT series, ts, val,"
-        " row_number() OVER (PARTITION BY series ORDER BY ts DESC)"
-        " AS rev,"
-        " lag(val, 24) OVER (PARTITION BY series ORDER BY ts)"
-        " AS slag,"
-        " lag(val, 1) OVER (PARTITION BY series ORDER BY ts)"
-        " AS nlag FROM pd)"
-        " SELECT series,"
-        " CAST(sum(CASE WHEN slag IS NOT NULL AND nlag IS NOT NULL"
-        " THEN 1 ELSE 0 END) AS BIGINT) AS n_test,"
-        " CAST(sum(CASE WHEN slag IS NULL OR nlag IS NULL"
-        " THEN 1 ELSE 0 END) AS BIGINT) AS n_skipped,"
-        " CAST(sum(CASE WHEN slag IS NOT NULL AND nlag IS NOT NULL"
-        " THEN CAST(floor(abs(val - slag) * 1000 + 0.5) AS BIGINT)"
-        " ELSE 0 END) AS BIGINT) AS sae_seasonal,"
-        " CAST(sum(CASE WHEN slag IS NOT NULL AND nlag IS NOT NULL"
-        " THEN CAST(floor(abs(val - nlag) * 1000 + 0.5) AS BIGINT)"
-        " ELSE 0 END) AS BIGINT) AS sae_naive"
-        " FROM t WHERE rev <= 8 GROUP BY 1"
-    )
-    # ordered 3-step funnel with strict inter-step ordering
-    o["events_funnel_steps"] = (
-        "WITH e AS (SELECT user_id, epoch_ns(ts) AS ts, event_type"
-        " FROM events),"
-        " u1 AS (SELECT user_id, min(CASE WHEN event_type = 'view'"
-        " THEN ts END) AS t1 FROM e GROUP BY 1),"
-        " u2 AS (SELECT e.user_id, u1.t1,"
-        " min(CASE WHEN event_type = 'click' AND e.ts > u1.t1"
-        " THEN e.ts END) AS t2"
-        " FROM e JOIN u1 USING (user_id) GROUP BY 1, 2),"
-        " u3 AS (SELECT e.user_id, u2.t1, u2.t2,"
-        " min(CASE WHEN event_type = 'purchase' AND e.ts > u2.t2"
-        " THEN e.ts END) AS t3"
-        " FROM e JOIN u2 USING (user_id) GROUP BY 1, 2, 3)"
-        " SELECT count(t1) AS step1_users,"
-        " count(t2) AS step2_users,"
-        " count(t3) AS step3_users FROM u3"
-    )
-
-    # funnel conversions + Wilson 95% bounds: same funnel CTE, then
-    # the identical fixed-op-order sqrt formula per step pair
-    _wl = ("CASE WHEN n > 0 THEN"
-           " round(((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)"
-           " + (1.96 * 1.96) / (2.0 * CAST(n AS DOUBLE)))"
-           " / (1.0 + (1.96 * 1.96) / CAST(n AS DOUBLE)))"
-           " {sign} (1.96 * sqrt((CAST(k AS DOUBLE)"
-           " / CAST(n AS DOUBLE))"
-           " * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))"
-           " / CAST(n AS DOUBLE) + (1.96 * 1.96)"
-           " / (4.0 * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))"
-           " / (1.0 + (1.96 * 1.96) / CAST(n AS DOUBLE))), 6)"
-           " + 0.0 END")
-    o["events_funnel_ci"] = (
-        "WITH e AS (SELECT user_id, epoch_ns(ts) AS ts, event_type"
-        " FROM events),"
-        " u1 AS (SELECT user_id, min(CASE WHEN event_type = 'view'"
-        " THEN ts END) AS t1 FROM e GROUP BY 1),"
-        " u2 AS (SELECT e.user_id, u1.t1,"
-        " min(CASE WHEN event_type = 'click' AND e.ts > u1.t1"
-        " THEN e.ts END) AS t2"
-        " FROM e JOIN u1 USING (user_id) GROUP BY 1, 2),"
-        " u3 AS (SELECT e.user_id, u2.t1, u2.t2,"
-        " min(CASE WHEN event_type = 'purchase' AND e.ts > u2.t2"
-        " THEN e.ts END) AS t3"
-        " FROM e JOIN u2 USING (user_id) GROUP BY 1, 2, 3),"
-        " c AS (SELECT count(t1) AS k1, count(t2) AS k2,"
-        " count(t3) AS k3 FROM u3),"
-        " p AS (SELECT CAST(2 AS BIGINT) AS step,"
-        " CAST(k2 AS BIGINT) AS k, CAST(k1 AS BIGINT) AS n FROM c"
-        " UNION ALL SELECT 3, CAST(k3 AS BIGINT),"
-        " CAST(k2 AS BIGINT) FROM c)"
-        " SELECT step, k, n,"
-        " CAST(k * 1000000 // greatest(n, 1) AS BIGINT)"
-        " AS conv_ppm,"
-        " " + _wl.format(sign="-") + " AS wilson_lo,"
-        " " + _wl.format(sign="+") + " AS wilson_hi FROM p")
-    # per-series heartbeat uptime: gap excess beyond 1 day = downtime
-    o["ts_uptime"] = (
-        _PD + ", g AS (SELECT series, ts, ts - lag(ts) OVER"
-        " (PARTITION BY series ORDER BY ts) AS gap FROM pd),"
-        " a AS (SELECT series, count(*) AS n_points,"
-        " max(ts) - min(ts) AS span, max(gap) AS max_gap,"
-        " CAST(sum(CASE WHEN gap > 86400000000000"
-        " THEN gap - 86400000000000 ELSE 0 END) AS BIGINT)"
-        " AS downtime FROM g GROUP BY 1)"
-        " SELECT series, n_points, span, max_gap, downtime,"
-        " round(1.0 - CAST(downtime AS DOUBLE)"
-        " / nullif(CAST(span AS DOUBLE), 0), 6) + 0.0"
-        " AS uptime_frac FROM a"
-    )
-
-    # per-series daily rollup with period-over-period change
-    o["ts_pct_change"] = (
-        _PD + ", a AS (SELECT series,"
-        " ts - ts % 86400000000000 AS bucket,"
-        " sum(val) AS tot FROM pd GROUP BY 1, 2),"
-        " l AS (SELECT series, bucket, tot,"
-        " lag(tot) OVER (PARTITION BY series ORDER BY bucket)"
-        " AS prev FROM a)"
-        " SELECT series, bucket, round(tot, 6) + 0.0 AS total,"
-        " round(tot - prev, 6) + 0.0 AS change,"
-        " round((tot - prev) / nullif(prev, 0), 6) + 0.0"
-        " AS pct_change FROM l"
-    )
-
-    # inter-event gap stats per event type over (user, type) lags
-    o["events_rfm"] = (
-        "SELECT user_id, max(epoch_ns(ts)) AS last_ts,"
-        " count(*) AS n_events,"
-        f" CAST(sum({_QTERM2('value')}) AS BIGINT) AS value_cents"
-        " FROM events GROUP BY 1"
-    )
-    o["events_stickiness"] = (
-        "WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS dt,"
-        " user_id FROM events),"
-        " dd AS (SELECT CAST(dt - DATE '1970-01-01' AS BIGINT)"
-        " AS d, user_id FROM du),"
-        " dau AS (SELECT d, count(*) AS dau FROM dd GROUP BY 1),"
-        " ex AS (SELECT d + i AS td, user_id FROM dd"
-        " CROSS JOIN range(7) r(i)),"
-        " wau AS (SELECT td AS d, count(DISTINCT user_id) AS wau"
-        " FROM ex GROUP BY 1)"
-        " SELECT dau.d, dau.dau, wau.wau,"
-        f" {INT_PPM_SQL.format(num='dau.dau', den='wau.wau')}"
-        " AS stickiness_ppm"
-        " FROM dau JOIN wau ON dau.d = wau.d"
-    )
-    o["events_gap_stats"] = (
-        "WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts,"
-        " event_id FROM events),"
-        " g AS (SELECT event_type, (ts - lag(ts) OVER"
-        " (PARTITION BY user_id, event_type ORDER BY ts, event_id))"
-        " / 1e9 AS gap FROM e)"
-        " SELECT event_type, count(*) AS n_gaps,"
-        f" round({_SD.format(x='gap')} / count(*), 3) + 0.0"
-        " AS avg_gap,"
-        " round(quantile_cont(gap, 0.5), 3) + 0.0 AS p50_gap"
-        " FROM g WHERE gap IS NOT NULL GROUP BY 1"
-    )
-
-    # per-series 10-bin value histogram over each series' own range
-    o["ts_value_hist"] = (
-        _PD + ", r AS (SELECT series, min(val) AS vmin,"
-        " max(val) AS vmax FROM pd GROUP BY 1),"
-        " w AS (SELECT series, vmin, (vmax - vmin) / 10.0 AS wd"
-        " FROM r),"
-        " b AS (SELECT pd.series, CASE WHEN wd > 0 THEN"
-        " least(CAST(9 AS BIGINT),"
-        " CAST(floor((val - vmin) / wd) AS BIGINT))"
-        " ELSE CAST(0 AS BIGINT) END AS bin, vmin, wd"
-        " FROM pd JOIN w USING (series))"
-        " SELECT series, bin, count(*) AS n,"
-        " round(vmin + bin * wd, 6) + 0.0 AS lo,"
-        " round(vmin + (bin + 1) * wd, 6) + 0.0 AS hi"
-        " FROM b GROUP BY series, bin, vmin, wd"
-    )
-
-    # level-shift detection: two ROWS frames, full windows required
-    o["ts_level_shifts"] = (
-        _PD + ", f AS (SELECT series, ts,"
-        " count(val) OVER pre AS np, count(val) OVER post AS nq,"
-        " avg(val) OVER pre AS pre_mean,"
-        " stddev_samp(val) OVER pre AS pre_std,"
-        " avg(val) OVER post AS post_mean FROM pd"
-        " WINDOW pre AS (PARTITION BY series ORDER BY ts"
-        " ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING),"
-        " post AS (PARTITION BY series ORDER BY ts"
-        " ROWS BETWEEN CURRENT ROW AND 9 FOLLOWING)),"
-        " g AS (SELECT series, ts, pre_mean, post_mean,"
-        " (post_mean - pre_mean) / nullif(pre_std, 0) AS z"
-        " FROM f WHERE np = 10 AND nq = 10 AND pre_std > 0)"
-        " SELECT series, ts, round(pre_mean, 6) + 0.0 AS pre_mean,"
-        " round(post_mean, 6) + 0.0 AS post_mean,"
-        " round(z, 6) + 0.0 AS shift_z FROM g WHERE abs(z) > 2.0"
-    )
-
-    # per-series OLS trend: five sums, time re-based per series
-    # before squaring; NULL slope on zero time-variance
-    # sample autocorrelation at lags 1-3: mean/deviation/lag windows
-    # replayed identically; zero-variance series -> NULL
-    o["ts_acf"] = (
-        _PD + ", d AS (SELECT series, ts,"
-        " val - avg(val) OVER (PARTITION BY series) AS dv FROM pd),"
-        " l AS (SELECT series, dv,"
-        " dv * lag(dv, 1) OVER (PARTITION BY series ORDER BY ts)"
-        " AS p1,"
-        " dv * lag(dv, 2) OVER (PARTITION BY series ORDER BY ts)"
-        " AS p2,"
-        " dv * lag(dv, 3) OVER (PARTITION BY series ORDER BY ts)"
-        " AS p3 FROM d)"
-        " SELECT series, count(*) AS n_points,"
-        " round(sum(p1) / nullif(sum(dv * dv), 0), 6) + 0.0 AS acf_1,"
-        " round(sum(p2) / nullif(sum(dv * dv), 0), 6) + 0.0 AS acf_2,"
-        " round(sum(p3) / nullif(sum(dv * dv), 0), 6) + 0.0 AS acf_3"
-        " FROM l GROUP BY 1"
-    )
-
-    o["ts_linear_trend"] = (
-        _PD + ", b AS (SELECT series,"
-        " (ts - min(ts) OVER (PARTITION BY series)) / 1e9 AS x,"
-        " val AS y FROM pd),"
-        " a AS (SELECT series, count(*) AS n_points,"
-        " sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,"
-        " sum(x * x) AS sxx, sum(y * y) AS syy FROM b GROUP BY 1)"
-        " SELECT series, n_points,"
-        " round((sxy - sx * sy / n_points)"
-        " / nullif(sxx - sx * sx / n_points, 0), 6) + 0.0"
-        " AS slope_per_s,"
-        " round((sy - ((sxy - sx * sy / n_points)"
-        " / nullif(sxx - sx * sx / n_points, 0)) * sx)"
-        " / n_points, 6) + 0.0 AS intercept,"
-        " round((sxy - sx * sy / n_points)"
-        " * (sxy - sx * sy / n_points)"
-        " / nullif((sxx - sx * sx / n_points)"
-        " * (syy - sy * sy / n_points), 0), 6) + 0.0 AS r2"
-        " FROM a"
-    )
-
-    # median/MAD robust location+scale per series
-    o["ts_mad"] = (
-        _PD + ", m AS (SELECT series,"
-        " quantile_cont(val, 0.5) AS med,"
-        " count(*) AS n_points FROM pd GROUP BY 1),"
-        " d AS (SELECT pd.series, m.med, m.n_points,"
-        " abs(pd.val - m.med) AS dv FROM pd JOIN m USING (series))"
-        " SELECT series, n_points, round(med, 6) + 0.0 AS med,"
-        " round(quantile_cont(dv, 0.5), 6) + 0.0 AS mad"
-        " FROM d GROUP BY series, n_points, med"
-    )
-
-    # per-series winsorization: clip into the interpolated
-    # [p05, p95] band (quantile_cont ≡ Spark percentile)
-    o["ts_winsorize"] = (
-        _PD + ", q AS (SELECT series,"
-        " quantile_cont(val, 0.05) AS qlo,"
-        " quantile_cont(val, 0.95) AS qhi FROM pd GROUP BY 1)"
-        " SELECT series, ts, val,"
-        " round(least(greatest(val, qlo), qhi), 6) + 0.0 AS clipped"
-        " FROM pd JOIN q USING (series)"
-    )
-
-    # union-of-intervals activity coverage per user (5 min window);
-    # gap-and-island via a running max of interval ends
-    o["events_coverage"] = (
-        "WITH e AS (SELECT user_id, epoch_ns(ts) AS ts FROM events),"
-        " f AS (SELECT user_id, ts, CASE WHEN"
-        " max(ts + 300000000000) OVER pw IS NULL OR"
-        " ts > max(ts + 300000000000) OVER pw THEN 1 ELSE 0 END"
-        " AS ni FROM e WINDOW pw AS (PARTITION BY user_id"
-        " ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING"
-        " AND 1 PRECEDING)),"
-        " i AS (SELECT user_id, ts, sum(ni) OVER"
-        " (PARTITION BY user_id ORDER BY ts ROWS BETWEEN"
-        " UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM f),"
-        " g AS (SELECT user_id, island,"
-        " max(ts + 300000000000) - min(ts) AS span FROM i"
-        " GROUP BY 1, 2)"
-        " SELECT user_id, count(*) AS n_islands,"
-        " CAST(sum(span) AS BIGINT) AS covered FROM g GROUP BY 1"
-    )
-
-    # Holt level+trend: a recursive CTE replays the exact fold — the
-    # 0.25/0.75 and 0.125/0.875 literals are exactly-complemented
-    # doubles, so both engines run identical IEEE sequences
-    o["ts_holt_forecast"] = (
-        _PD.replace("WITH ", "WITH RECURSIVE ", 1)
-        + ", p AS (SELECT series, ts, val, row_number() OVER"
-        " (PARTITION BY series ORDER BY ts) AS rn FROM pd),"
-        " nn AS (SELECT series, max(rn) AS n FROM p GROUP BY 1),"
-        " it(series, i, l, b) AS ("
-        " SELECT p1.series, 2, CAST(p2.val AS DOUBLE),"
-        " CAST(p2.val - p1.val AS DOUBLE)"
-        " FROM p p1 JOIN p p2 ON p1.series = p2.series"
-        " AND p1.rn = 1 AND p2.rn = 2"
-        " UNION ALL"
-        " SELECT it.series, it.i + 1,"
-        " 0.25 * p.val + 0.75 * (it.l + it.b),"
-        " 0.125 * ((0.25 * p.val + 0.75 * (it.l + it.b)) - it.l)"
-        " + 0.875 * it.b"
-        " FROM it JOIN p ON p.series = it.series"
-        " AND p.rn = it.i + 1)"
-        " SELECT it.series, CAST(nn.n AS BIGINT) AS n_points,"
-        " round(l, 6) + 0.0 AS level,"
-        " round(b, 6) + 0.0 AS trend,"
-        " round(l + 5 * b, 6) + 0.0 AS forecast_5"
-        " FROM it JOIN nn ON nn.series = it.series AND it.i = nn.n"
-    )
-
-    # trailing 7-point rolling median (interpolated, like Spark's
-    # percentile) — the robust despiking twin of the moving average
-    o["ts_rolling_median"] = (
-        _PD + " SELECT series, ts,"
-        " round(quantile_cont(val, 0.5) OVER"
-        " (PARTITION BY series ORDER BY ts"
-        " ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) + 0.0"
-        " AS median FROM pd"
-    )
-    # top-20 series by total value; totals rounded BEFORE ranking so
-    # the order is insensitive to summation order, ties by name
-    o["ts_top_series"] = (
-        _PD + ", t AS (SELECT series,"
-        f" round({_SD.format(x='val')}, 4) + 0.0"
-        " AS total FROM pd GROUP BY 1)"
-        " SELECT series, total FROM t"
-        " ORDER BY total DESC, series LIMIT 20"
-    )
-    # token counting mirrors operators/text.py token_count():
-    # whitespace split of the trimmed text, empty text → 0
-    o["text_length_hist"] = (
-        "WITH t AS (SELECT lang, CASE WHEN length(trim(text)) = 0"
-        " THEN 0 ELSE len(string_split_regex(trim(text), '\\s+'))"
-        " END AS n_tok, length(text) AS n_chars FROM documents)"
-        " SELECT lang, n_tok - n_tok % 16 AS bucket,"
-        " count(*) AS n_docs,"
-        " round(sum(n_chars) / count(*), 4) + 0.0 AS avg_chars"
-        " FROM t GROUP BY 1, 2"
-    )
-    # terms = lowercase letter runs; hashed contract = exact-integer
-    # posting statistics (tf per source, df over sources, source
-    # count) for a fixed probe set — the ln-seeded tf-idf score and
-    # its top-k ranking are pytest-verified, never hashed
-    o["text_tfidf_sources"] = (
-        "WITH terms AS (SELECT source, unnest(string_split_regex("
-        "lower(text), '[^a-z]+')) AS term FROM documents),"
-        " tf AS (SELECT source, term, count(*) AS tf FROM terms"
-        " WHERE term IN ('scan', 'merge', 'window', 'spark',"
-        " 'batch') GROUP BY 1, 2),"
-        " dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),"
-        " n AS (SELECT CAST(count(DISTINCT source) AS BIGINT)"
-        " AS n_sources FROM documents WHERE source IS NOT NULL)"
-        " SELECT source, term, tf, df, n_sources"
-        " FROM tf JOIN dfreq USING (term) CROSS JOIN n"
-    )
-    # Okapi BM25 posting statistics over the letter-run tokenizer:
-    # (tf, dl, df) per matching (doc, query term) determine the
-    # score exactly; the ln-seeded score/ranking is pytest-verified
-    o["text_bm25_search"] = (
-        "WITH toks AS (SELECT doc_id, unnest(string_split_regex("
-        "lower(text), '[^a-z]+')) AS term FROM documents),"
-        " t AS (SELECT doc_id, term FROM toks WHERE term <> ''),"
-        " per_doc AS (SELECT doc_id, count(*) AS dl FROM t"
-        " GROUP BY 1),"
-        " tf AS (SELECT doc_id, term, count(*) AS tf FROM t"
-        " WHERE term IN ('hash', 'join', 'vector') GROUP BY 1, 2),"
-        " dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)"
-        " SELECT doc_id, term, tf, dl, df"
-        " FROM tf JOIN dfreq USING (term)"
-        " JOIN per_doc USING (doc_id)"
-    )
-    # hybrid retrieval: exact-integer lexical rank (tf · ppm-idf)
-    # fused with the quantized cosine rank; RRF ships as an exact
-    # rational (num, den) pair — no float division in the contract
-    o["text_hybrid_rrf"] = (
-        "WITH toks AS (SELECT doc_id, unnest(string_split_regex("
-        "lower(text), '[^a-z]+')) AS term FROM documents),"
-        " t AS (SELECT doc_id, term FROM toks WHERE term <> ''),"
-        " tf AS (SELECT doc_id, term, count(*) AS tf FROM t"
-        " WHERE term IN ('hash', 'join', 'vector') GROUP BY 1, 2),"
-        " dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),"
-        " nd AS (SELECT count(*) AS n_docs FROM documents),"
-        " lex AS (SELECT doc_id, CAST(sum(tf *"
-        f" {INT_PPM_SQL.format(num='n_docs', den='df')}"
-        ") AS BIGINT) AS score"
-        " FROM tf JOIN dfreq USING (term) CROSS JOIN nd"
-        " GROUP BY 1),"
-        " lr AS (SELECT doc_id, r_lex FROM (SELECT doc_id,"
-        " row_number() OVER (ORDER BY score DESC, doc_id)"
-        " AS r_lex FROM lex) WHERE r_lex <= 20),"
-        " qv AS (SELECT generate_subscripts(embedding, 1) AS pos,"
-        " CAST(unnest(embedding) AS DOUBLE) AS q"
-        " FROM embeddings WHERE vec_id = 0),"
-        " qn AS (SELECT sqrt(sum(q * q)) AS nq FROM qv),"
-        " x AS (SELECT vec_id, generate_subscripts(embedding, 1)"
-        " AS pos, CAST(unnest(embedding) AS DOUBLE) AS v"
-        " FROM embeddings WHERE vec_id <> 0),"
-        " cosr AS (SELECT vec_id,"
-        f" {SCALED_TERM_SQL.format(x='sum(v * q) / (sqrt(sum(v * v)) * max(nq))', s=10 ** 6)}"
-        " AS cos_micro FROM x JOIN qv USING (pos) CROSS JOIN qn"
-        " GROUP BY vec_id),"
-        " vr AS (SELECT vec_id, r_vec FROM (SELECT vec_id,"
-        " row_number() OVER (ORDER BY cos_micro DESC, vec_id)"
-        " AS r_vec FROM cosr) WHERE r_vec <= 20)"
-        " SELECT coalesce(lr.doc_id, vr.vec_id) AS doc_id,"
-        " r_lex, r_vec,"
-        " CAST(CASE WHEN r_lex IS NOT NULL AND r_vec IS NOT NULL"
-        " THEN 120 + r_lex + r_vec ELSE 1 END AS BIGINT)"
-        " AS rrf_num,"
-        " CAST(coalesce(r_lex + 60, 1) * coalesce(r_vec + 60, 1)"
-        " AS BIGINT) AS rrf_den"
-        " FROM lr FULL JOIN vr ON lr.doc_id = vr.vec_id"
-    )
-    # MMR diversified top-k: the five greedy steps UNROLLED — each
-    # sel_i picks argmax(rel − max sim to selected) over the
-    # quantized integers with id tie-breaks, exactly the entry's
-    # driver loop
-    _CQ = SCALED_TERM_SQL.format(
-        x="sum(v * q) / (sqrt(sum(v * v)) * max(nq))", s=10 ** 6)
-    _SQ = SCALED_TERM_SQL.format(
-        x="sum(xx * yy) / (sqrt(sum(xx * xx)) * sqrt(sum(yy * yy)))",
-        s=10 ** 6)
-    _mmr_steps = []
-    for _i in range(2, 6):
-        _prev = " UNION ".join(
-            f"SELECT vec_id FROM sel{_j}" for _j in range(1, _i))
-        _mmr_steps.append(
-            f" selu{_i} AS ({_prev}),"
-            f" sc{_i} AS (SELECT c.vec_id, c.rel,"
-            " c.rel - (SELECT max(s.sim) FROM sims s"
-            " WHERE s.id_a = c.vec_id AND s.id_b IN"
-            f" (SELECT vec_id FROM selu{_i})) AS mmr"
-            " FROM cand c WHERE NOT EXISTS"
-            f" (SELECT 1 FROM selu{_i} u"
-            " WHERE u.vec_id = c.vec_id)),"
-            f" sel{_i} AS (SELECT CAST({_i} AS BIGINT) AS step,"
-            " vec_id, rel, mmr"
-            f" FROM sc{_i} ORDER BY mmr DESC, vec_id LIMIT 1)")
-    o["sim_mmr"] = (
-        "WITH qv AS (SELECT generate_subscripts(embedding, 1)"
-        " AS pos, CAST(unnest(embedding) AS DOUBLE) AS q"
-        " FROM embeddings WHERE vec_id = 0),"
-        " qn AS (SELECT sqrt(sum(q * q)) AS nq FROM qv),"
-        " x AS (SELECT vec_id, generate_subscripts(embedding, 1)"
-        " AS pos, CAST(unnest(embedding) AS DOUBLE) AS v"
-        " FROM embeddings WHERE vec_id <> 0),"
-        f" cosr AS (SELECT vec_id, {_CQ} AS rel"
-        " FROM x JOIN qv USING (pos) CROSS JOIN qn"
-        " GROUP BY vec_id),"
-        " cand AS (SELECT vec_id, rel FROM cosr"
-        " ORDER BY rel DESC, vec_id LIMIT 20),"
-        " cemb AS (SELECT c.vec_id, e.embedding FROM cand c"
-        " JOIN embeddings e USING (vec_id)),"
-        " px AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-        " CAST(unnest(a.embedding) AS DOUBLE) AS xx,"
-        " CAST(unnest(b.embedding) AS DOUBLE) AS yy"
-        " FROM cemb a JOIN cemb b ON a.vec_id <> b.vec_id),"
-        f" sims AS (SELECT id_a, id_b, {_SQ} AS sim"
-        " FROM px GROUP BY 1, 2),"
-        " sel1 AS (SELECT CAST(1 AS BIGINT) AS step, vec_id,"
-        " rel, rel AS mmr FROM cand"
-        " ORDER BY rel DESC, vec_id LIMIT 1),"
-        + ",".join(_mmr_steps) +
-        " SELECT step, vec_id, rel AS rel_micro,"
-        " mmr AS mmr2x_micro FROM sel1"
-        + "".join(
-            f" UNION ALL SELECT step, vec_id, rel, mmr FROM sel{_j}"
-            for _j in range(2, 6))
-    )
-    # connected components over the exact block-local cosine pair
-    # graph (same edges as sim_cosine_pairs), min-label clusters
-    o["sim_dup_clusters"] = (
-        "WITH RECURSIVE prod AS (SELECT a.vec_id AS id_a,"
-        " b.vec_id AS id_b,"
-        " CAST(unnest(a.embedding) AS DOUBLE) AS x,"
-        " CAST(unnest(b.embedding) AS DOUBLE) AS y"
-        " FROM embeddings a JOIN embeddings b ON a.label = b.label"
-        " AND a.vec_id < b.vec_id),"
-        " s AS (SELECT id_a, id_b, sum(x * y) AS d, sum(x * x) AS na,"
-        " sum(y * y) AS nb FROM prod GROUP BY 1, 2),"
-        " pairs AS (SELECT id_a, id_b FROM s"
-        " WHERE round(d / (sqrt(na) * sqrt(nb)), 6) >= 0.3),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS ("
-        " SELECT a, a FROM edges"
-        " UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk GROUP BY 1)"
-        " SELECT v.vec_id, coalesce(cc.comp, v.vec_id) AS keep_id,"
-        " v.vec_id = coalesce(cc.comp, v.vec_id) AS is_kept"
-        " FROM (SELECT vec_id FROM embeddings) v"
-        " LEFT JOIN cc ON v.vec_id = cc.node"
-    )
-
-    o["sim_semdedup"] = (
-        # same edge CTE as sim_dup_clusters; winner per component =
-        # LOWEST centroid-cosine (micro-quantized), ties to min id.
-        # The centroid is the exact DECIMAL(38,18) per-dim sum
-        # (scale cancels in the cosine), mirroring the Spark side.
-        "WITH RECURSIVE x AS (SELECT vec_id, label,"
-        " generate_subscripts(embedding, 1) AS pos,"
-        " CAST(unnest(embedding) AS DOUBLE) AS v"
-        " FROM embeddings),"
-        " s AS (SELECT label, pos,"
-        " CAST(sum(CAST(v AS DECIMAL(38,18))) AS DOUBLE) AS sv"
-        " FROM x GROUP BY 1, 2),"
-        " sn AS (SELECT label, sqrt(sum(sv * sv)) AS ns"
-        " FROM s GROUP BY 1),"
-        " cosc AS (SELECT vec_id,"
-        f" {SCALED_TERM_SQL.format(x='sum(v * sv) / (sqrt(sum(v * v)) * max(ns))', s=10 ** 6)}"
-        " AS cos_c_micro"
-        " FROM x JOIN s USING (label, pos)"
-        " JOIN sn USING (label) GROUP BY vec_id),"
-        " prod AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-        " CAST(unnest(a.embedding) AS DOUBLE) AS px,"
-        " CAST(unnest(b.embedding) AS DOUBLE) AS py"
-        " FROM embeddings a JOIN embeddings b ON a.label = b.label"
-        " AND a.vec_id < b.vec_id),"
-        " ps AS (SELECT id_a, id_b, sum(px * py) AS d,"
-        " sum(px * px) AS na, sum(py * py) AS nb"
-        " FROM prod GROUP BY 1, 2),"
-        " pairs AS (SELECT id_a, id_b FROM ps"
-        " WHERE round(d / (sqrt(na) * sqrt(nb)), 6) >= 0.3),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS (SELECT a, a FROM edges UNION"
-        " SELECT e.b, w.comp FROM walk w"
-        " JOIN edges e ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk"
-        " GROUP BY 1),"
-        " scored AS (SELECT c.vec_id,"
-        " coalesce(cc.comp, c.vec_id) AS comp, c.cos_c_micro"
-        " FROM cosc c LEFT JOIN cc ON c.vec_id = cc.node),"
-        " best AS (SELECT comp, min(cos_c_micro) AS cmin"
-        " FROM scored GROUP BY 1),"
-        " winners AS (SELECT s.comp, min(s.vec_id) AS keep_id"
-        " FROM scored s JOIN best USING (comp)"
-        " WHERE s.cos_c_micro = best.cmin GROUP BY 1)"
-        " SELECT s.vec_id, w.keep_id,"
-        " s.vec_id = w.keep_id AS is_kept, s.cos_c_micro"
-        " FROM scored s JOIN winners w USING (comp)"
-    )
-
-    # q7 shape: two-nation shipping volume, both directions
-    o["tpch_q7ish"] = (
-        "SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,"
-        " year(l_shipdate) AS l_year,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}, 2)"
-        " + 0.0 AS revenue, count(*) AS n_items"
-        " FROM lineitem"
-        " JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " JOIN supplier ON l_suppkey = s_suppkey"
-        " JOIN nation n1 ON s_nationkey = n1.n_nationkey"
-        " JOIN nation n2 ON c_nationkey = n2.n_nationkey"
-        " WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')"
-        " OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')"
-        " GROUP BY 1, 2, 3"
-    )
-    # q8 shape: market share as an int_ppm RATIO of exact
-    # 1e6-scaled long sums — no float ratio in the hashed contract
-    _Q8REV = _QTERM("l_extendedprice * (1 - l_discount)")
-    o["tpch_q8ish"] = (
-        "WITH base AS (SELECT year(o_orderdate) AS o_year,"
-        f" {_Q8REV} AS rev_q, n1.n_name AS supp_nation"
-        " FROM lineitem"
-        " JOIN part ON l_partkey = p_partkey"
-        " AND p_type = 'ECONOMY'"
-        " JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN customer ON o_custkey = c_custkey"
-        " JOIN nation nc ON c_nationkey = nc.n_nationkey"
-        " JOIN region ON nc.n_regionkey = r_regionkey"
-        " AND r_name = 'ASIA'"
-        " JOIN supplier ON l_suppkey = s_suppkey"
-        " JOIN nation n1 ON s_nationkey = n1.n_nationkey),"
-        " agg AS (SELECT o_year, CAST(sum(rev_q) AS BIGINT) AS tot,"
-        " CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN rev_q"
-        " ELSE 0 END) AS BIGINT) AS nat FROM base GROUP BY 1)"
-        " SELECT o_year,"
-        " round(tot / 1000000.0, 2) + 0.0 AS total_revenue,"
-        f" {_PPM.format(num='nat', den='tot')} AS mkt_share_ppm"
-        " FROM agg"
-    )
-    # q9 shape (no partsupp in the corpus): red-part profit by
-    # supplier nation and order year
-    o["tpch_q9ish"] = (
-        "SELECT n_name AS nation, year(o_orderdate) AS o_year,"
-        f" round({_SC6('l_extendedprice * (1 - l_discount)')}, 2)"
-        " + 0.0 AS profit, count(*) AS n_items"
-        " FROM lineitem"
-        " JOIN part ON l_partkey = p_partkey"
-        " AND p_name LIKE '%red%'"
-        " JOIN orders ON l_orderkey = o_orderkey"
-        " JOIN supplier ON l_suppkey = s_suppkey"
-        " JOIN nation ON s_nationkey = n_nationkey"
-        " GROUP BY 1, 2"
-    )
-
-    # staged curation pipeline: every stage replayed in SQL over the
-    # previous stage's survivors — gate features + marker langid
-    # (both proven as their own green entries), md5 keep-first
-    # window, jaccard pairs + recursive-CTE components with
-    # longest-wins resolution; zero-count stages included
-    o["curation_pipeline_report"] = (
-        "WITH RECURSIVE"
-        " base AS (SELECT doc_id, text FROM documents"
-        " WHERE doc_id < 300),"
-        f" gate AS (SELECT * FROM ({o['text_quality_gate']})),"
-        f" lid AS (SELECT * FROM ({_lid})),"
-        " early AS (SELECT b.doc_id, b.text,"
-        " CASE WHEN NOT g.keep THEN 'quality'"
-        " WHEN l.pred_lang <> 'en' THEN 'lang' END AS stage"
-        " FROM base b JOIN gate g USING (doc_id)"
-        " JOIN lid l USING (doc_id)),"
-        " surv1 AS (SELECT doc_id, text FROM early"
-        " WHERE stage IS NULL),"
-        " ex AS (SELECT doc_id, text, CASE WHEN doc_id <>"
-        " min(doc_id) OVER (PARTITION BY md5(text))"
-        " THEN 'exact_dup' END AS stage FROM surv1),"
-        " surv2 AS (SELECT doc_id, text, length(text) AS n_chars"
-        " FROM ex WHERE stage IS NULL),"
-        " dw AS (SELECT DISTINCT doc_id,"
-        " unnest(string_split(lower(trim(text)), ' ')) AS w"
-        " FROM surv2),"
-        " dwf AS (SELECT * FROM dw WHERE w <> ''"
-        " AND w IN (SELECT w FROM dw WHERE w <> ''"
-        " GROUP BY 1 HAVING count(*) <= 100000)),"
-        " sz AS (SELECT doc_id, count(*) AS n FROM dwf GROUP BY 1),"
-        " ii AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-        " count(*) AS i FROM dwf a JOIN dwf b ON a.w = b.w"
-        " AND a.doc_id < b.doc_id GROUP BY 1, 2),"
-        " pairs AS (SELECT id_a, id_b FROM ii"
-        " JOIN sz sa ON id_a = sa.doc_id"
-        " JOIN sz sb ON id_b = sb.doc_id"
-        " WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.8),"
-        " edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs),"
-        " walk(node, comp) AS (SELECT a, a FROM edges UNION"
-        " SELECT e.b, w.comp FROM walk w JOIN edges e"
-        " ON e.a = w.node),"
-        " cc AS (SELECT node, min(comp) AS comp FROM walk"
-        " GROUP BY 1),"
-        " wc AS (SELECT s.doc_id, s.n_chars,"
-        " coalesce(cc.comp, s.doc_id) AS comp FROM surv2 s"
-        " LEFT JOIN cc ON s.doc_id = cc.node),"
-        " win AS (SELECT comp, doc_id AS keep_id FROM"
-        " (SELECT comp, doc_id, row_number() OVER (PARTITION BY"
-        " comp ORDER BY n_chars DESC, doc_id) AS rn FROM wc)"
-        " WHERE rn = 1),"
-        " near AS (SELECT wc.doc_id, CASE WHEN"
-        " wc.doc_id = win.keep_id THEN 'kept' ELSE 'near_dup' END"
-        " AS stage FROM wc JOIN win USING (comp)),"
-        " staged AS ("
-        " SELECT doc_id, stage FROM early WHERE stage IS NOT NULL"
-        " UNION ALL SELECT doc_id, stage FROM ex"
-        " WHERE stage = 'exact_dup'"
-        " UNION ALL SELECT doc_id, stage FROM near),"
-        " allst AS (SELECT unnest(['quality', 'lang', 'exact_dup',"
-        " 'near_dup', 'kept']) AS stage)"
-        " SELECT allst.stage,"
-        " CAST(coalesce(c.n_docs, 0) AS BIGINT) AS n_docs"
-        " FROM allst LEFT JOIN (SELECT stage, count(*) AS n_docs"
-        " FROM staged GROUP BY 1) c USING (stage)"
-    )
-    return o
+    return {n: e.oracle for n, e in registry.entries().items()
+            if e.body is not None}

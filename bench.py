@@ -218,145 +218,14 @@ def session(app: str = "sparksiri-bench"):
 def main():
     spark = session()
 
-    import __spark_entry__ as entry
+    import registry
+    from registry.sim import reset_bench_sq_delta
 
-    qs = entry.queries()
-
-    # time the RAW near-dup operators here — their queries() entries
-    # wrap them in property-verification joins for the correctness
-    # gate, which isn't what the headline timing should measure
-    from siridb_server_spark.operators import dedup as D
-    from siridb_server_spark.sources.testdata import load as _load
-
-    qs["dedup_minhash_lsh"] = lambda s, d: D.minhash_lsh_pairs(
-        _load(s, d, "documents"), threshold=0.5)
-    qs["dedup_simhash"] = lambda s, d: D.simhash_pairs(
-        _load(s, d, "documents"), max_hamming=3)
-
-    # serving-path IVF: the index (quantizer + cell-partitioned,
-    # persisted corpus) is built ONCE, untimed; the entry times the
-    # repeated-query cost — probe-pruned scan of the cached cells
-    from siridb_server_spark.operators import similarity as SIM
-
-    _emb = _load(spark, SF_DIR, "embeddings")
-    _qvec = [float(x) for x in _emb.where("vec_id = 0")
-             .select("embedding").first()["embedding"]]
-    _ivf = SIM.IVFIndex.from_labels(_emb.where("vec_id <> 0"))
-    qs["sim_ivf_index_search"] = (
-        lambda s, d: _ivf.search(_qvec, k=10, nprobe=3))
-
-    # heavy AUDIT entries (r10 verdict): their queries() bodies
-    # deliberately run the audit harness — the gated AND the
-    # ungated DTW search to pin their equality; a fresh index
-    # build+save+load per sample — which belongs in the sf0.01
-    # correctness gate, not the headline timing. Here the fixture
-    # (saved index / assembled points) is built ONCE untimed and
-    # the timed entry measures the OPERATOR: the gated search, one
-    # append+probe, one drift report, one probe on a loaded index.
-    import hashlib
-    import shutil as _sh
-    import tempfile as _tf
-
-    from pyspark.sql import functions as F
-
-    from siridb_server_spark.operators import timeseries as TSO
-    from siridb_server_spark.sources.testdata import events_points
-
-    _pts = events_points(spark, SF_DIR).select(
-        "series", "ts", F.col("val_dbl").alias("val"))
-    _dtw_q = _pts.agg(F.min("series")).first()[0]
-    from siridb_server_spark.sources.testdata import table_bytes
-
-    qs["ts_dtw_prefilter"] = lambda s, d: TSO.dtw_topk(
-        _pts, _dtw_q, k=10, prefilter=True,
-        est_bytes=table_bytes(SF_DIR, "events"))
-
-    _tag = hashlib.md5(SF_DIR.encode()).hexdigest()[:10]
-    _sq_base = _emb.where("vec_id <> 0 and vec_id % 7 <> 1")
-    _sq_delta = _emb.where("vec_id % 7 = 1")
-    _sq_path = f"{_tf.gettempdir()}/sparksiri-benchsq-{_tag}"
-    _sh.rmtree(_sq_path, ignore_errors=True)
-    _bidx = SIM.SQIndex.from_labels(_sq_base)
-    _bidx.save(_sq_path)
-    _bidx.unpersist()
-    _sq_loaded = SIM.SQIndex.load(spark, _sq_path)
-    qs["sim_sq_index"] = lambda s, d: _sq_loaded.search(
-        _qvec, k=10, nprobe=3, rerank=4)
-    qs["sim_sq_index_drift"] = lambda s, d: SIM.sq_index_drift(
-        s, _sq_path, _sq_delta)
-
-    def _reset_sq_delta():
-        # drop the shared fixture's delta state (local-FS cleanup,
-        # microseconds) — ONE definition used by the append entry's
-        # per-sample reset and the warm-phase cleanup, so the delta
-        # layout can't drift between the two
-        _sh.rmtree(os.path.join(_sq_path, "cells_delta"),
-                   ignore_errors=True)
-        for m in os.listdir(_sq_path):
-            if m.startswith("_batch-") and m.endswith(".done"):
-                os.remove(os.path.join(_sq_path, m))
-
-    def _bench_sq_append(s, d):
-        # reset so every sample appends the SAME batch against the
-        # SAME base, then serve one probe from the appended index —
-        # the operator pair the entry exists to time. Explicit
-        # batch id: the caller-tracked-id path (the content-
-        # fingerprint default is the gate entry's job)
-        _reset_sq_delta()
-        SIM.sq_index_append(s, _sq_path, _sq_delta,
-                            batch_id="bench")
-        return SIM.SQIndex.load(s, _sq_path).search(
-            _qvec, k=10, nprobe=3)
-
-    qs["sim_sq_index_append"] = _bench_sq_append
-
-    # curation_pipeline_report (r11 verdict #2, same recipe as the
-    # r10 heavies above): the queries() body deliberately re-runs
-    # the five-stage pipeline end to end — gate → langid → exact
-    # dedup → near-dup connected components — the AUDIT shape the
-    # sf0.01 correctness gate pays for, and the largest single
-    # headline contributor (4.4 s steady / 8.8 s cold in r11). The
-    # staged per-document attribution is built ONCE untimed here;
-    # the timed entry measures the report OPERATOR (full-pipeline-
-    # order retention accounting) over it. The stage operators keep
-    # their own headline entries (text_quality_percentile,
-    # dedup_ngram_jaccard, dedup_minhash_lsh, sim_dup_clusters).
-    from siridb_server_spark import pipelines as PIPE
-
-    _cdocs = _load(spark, SF_DIR, "documents") \
-        .where("doc_id < 300").select("doc_id", "text")
-    _, _staged = PIPE.curate_corpus(
-        _cdocs, langs=("en",), near_threshold=0.8,
-        max_df=100_000)  # queries()'s MAX_DF — never binds here
-    _staged = _staged.persist()
-    _staged.count()
-    qs["curation_pipeline_report"] = (
-        lambda s, d: PIPE.curation_report(_staged))
-
-    # text_nb_confusion: training (the per-(label, term) count
-    # tables — a model's BUILD step, paid once per model lifetime)
-    # vs serving (score + argmax + confusion — what a curation run
-    # pays per corpus pass). The model trains ONCE untimed; the
-    # timed entry measures the scoring path. The end-to-end
-    # train→score→confusion contract stays in the sf0.01 gate.
-    from siridb_server_spark.operators import classify as CL
-
-    _nb_docs = _load(spark, SF_DIR, "documents")
-    _nb_model = CL.nb_train(_nb_docs, label_col="lang")
-    # the model's count tables are lazy frames — materialize them
-    # (a trained model IS materialized); otherwise every timed
-    # sample would silently re-run the training aggregates
-    _nb_model.counts = _nb_model.counts.persist()
-    _nb_model.labels = _nb_model.labels.persist()
-    _nb_model.counts.count()
-    _nb_model.labels.count()
-
-    def _bench_nb_confusion(s, d):
-        pred = CL.nb_predict_int(_nb_model, _nb_docs)
-        return CL.nb_confusion(_nb_docs, pred, label_col="lang") \
-            .select("label", "pred", "n")
-
-    qs["text_nb_confusion"] = _bench_nb_confusion
+    # each entry's timed body: its declared bench body where it has
+    # one (the declaration's fixture is built here, once, untimed),
+    # else its driver-contract body
+    qs = {n: e.bench(spark, SF_DIR) if e.bench else e.body
+          for n, e in registry.entries().items()}
 
     # untimed warmup: JVM/codegen spin-up + file-index priming so the
     # timings measure steady-state query cost, not session startup
@@ -370,7 +239,10 @@ def main():
         # in a session forks the daemon + worker pool and initializes
         # Arrow IPC (1-5 s, high variance); without this the first
         # Arrow-kernel entry (dedup_simhash) absorbs that cost
-        D.simhash(_load(spark, SF_DIR, "documents").limit(64)).write \
+        from siridb_server_spark.operators import dedup as D
+        from siridb_server_spark.sources.testdata import load
+
+        D.simhash(load(spark, SF_DIR, "documents").limit(64)).write \
             .format("noop").mode("overwrite").save()
         # ...and the heavy-tail entries' plan shapes (index assign/
         # delta-write/load/probe + the gated DTW): each spans ~5
@@ -390,7 +262,7 @@ def main():
                 qs[_warm](spark, SF_DIR).write \
                     .format("noop").mode("overwrite").save()
         finally:
-            _reset_sq_delta()
+            reset_bench_sq_delta(SF_DIR)
     except Exception as exc:  # still bench what we can
         errors["_warmup"] = repr(exc)
 

@@ -3,7 +3,10 @@ queries() entry and its oracle_sql() side-by-side, compares row count,
 column names, and (sorted, rounded) values. Usage:
 
     python scripts/check_oracle.py [sf_dir] [name ...] \
-        [--record] [--stability]
+        [--family <family>] [--record] [--stability]
+
+``--family`` runs the entries one family declares (``registry``
+module names: siri, dedup, text, ...).
 
 Values are compared at FULL precision (repr bytes, no rounding —
 matching the driver's value hash). ``--stability`` additionally
@@ -29,6 +32,7 @@ rotates; this file covers the whole inventory).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 TABLES = ("region", "nation", "customer", "supplier", "part",
@@ -123,10 +127,19 @@ def compare_one(spark, con, sf_dir: str, name: str, fn,
 def main():
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    import registry
 
     argv = sys.argv[1:]
+    family = None
+    if "--family" in argv:
+        i = argv.index("--family")
+        if i + 1 >= len(argv) or argv[i + 1] not in registry.FAMILIES:
+            sys.exit(f"usage: --family <one of {registry.FAMILIES}>")
+        family = argv[i + 1]
+        del argv[i:i + 2]
     full_record = None
     if "--full-record" in argv:
         i = argv.index("--full-record")
@@ -141,6 +154,9 @@ def main():
     stability = "--stability" in argv
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
+    if family is not None:
+        only |= {n for n, e in registry.entries().items()
+                 if e.family == family and e.body is not None}
 
     spark = (
         SparkSession.builder.master("local[4]")
@@ -187,7 +203,9 @@ def main():
                                and n in oracles),
             "stability": stability,
             "failures": [f[0] for f in failures]}}
-        with open("/root/repo/PROGRESS.jsonl", "a") as fh:
+        with open(os.path.join(os.path.dirname(os.path.dirname(
+                os.path.abspath(__file__))), "PROGRESS.jsonl"),
+                "a") as fh:
             fh.write(_json.dumps(line) + "\n")
     if full_record:
         import json as _json

@@ -391,17 +391,17 @@ class SiriEngine:
 
     def _read_store_catalog(self) -> tuple:
         """``(stats, files)`` of the store's catalog, read with
-        pyarrow. A stale pending marker (crashed append) or a pre-r6
-        legacy file first runs the store's one-time Spark repair
-        (``repair_catalog``); a listed file that a racing compaction
-        removed means listing again."""
+        pyarrow. A stale pending marker (crashed append) first runs
+        the store's one-time Spark repair (``repair_catalog``); a
+        listed file that a racing compaction removed means listing
+        again."""
         while True:
             files = self.store.catalog_files()
             raw = None if files is None \
                 else self.store.read_catalog_local(files)
             if raw is not None:
                 return raw, files
-            if files is None or self.store._legacy_catalog():
+            if files is None:
                 self.store.repair_catalog(self.spark)
 
     def _fold_snapshot(self, stats):

@@ -616,9 +616,7 @@ class PointsStore:
     # the reference's split between live in-memory series stats and
     # the periodically-flushed database file (series.h:54-72 / db.c).
     # Every fold is :func:`merge_stats` over pyarrow reads on the
-    # driver. Stores written before the flat layout keep their files
-    # under ``bucket=N/`` subdirectories; the listing walks them and
-    # their first compaction rewrites them flat.
+    # driver.
     @property
     def _delta_path(self) -> str:
         return os.path.join(self.path, "_catalog_delta")
@@ -724,17 +722,12 @@ class PointsStore:
 
     @staticmethod
     def _parquet_files(top: str) -> list:
-        """Parquet files under ``top`` as absolute paths, skipping
-        dot-prefixed in-flight stages and temp files."""
-        out = []
+        """Parquet files in the flat directory ``top`` as absolute
+        paths, skipping dot-prefixed in-flight temp files."""
         if not os.path.isdir(top):
-            return out
-        for root, dirs, files in os.walk(top):
-            dirs[:] = [d for d in dirs if not d.startswith(".")]
-            out.extend(os.path.join(root, f) for f in files
-                       if f.endswith(".parquet")
-                       and not f.startswith("."))
-        return out
+            return []
+        return [os.path.join(top, f) for f in os.listdir(top)
+                if f.endswith(".parquet") and not f.startswith(".")]
 
     def _delta_files(self) -> list:
         """Current delta parquet files, as absolute paths."""
@@ -760,18 +753,11 @@ class PointsStore:
         left)`` — the file set the compaction read and the file set
         it left — so a driver snapshot of ``folded_from`` can be
         re-keyed to ``left``. None when there was nothing to fold,
-        another compactor held the lock, the legacy-layout rebuild
-        ran, or a concurrent appender's delta landed meanwhile (no
-        clean re-key exists then)."""
+        another compactor held the lock, or a concurrent appender's
+        delta landed meanwhile (no clean re-key exists then)."""
         if not self._acquire_compact_lock():
             return None  # another compactor is live; ours fold later
         try:
-            if self._legacy_catalog():
-                # pre-r6 layout lacks the first/last value columns
-                # the folds carry now: one-time full recompute from
-                # the points (includes any just-appended batch)
-                self.rebuild_catalog(spark)
-                return None
             # Snapshot the delta FILE LIST first and fold exactly
             # those files; afterwards delete exactly those files. An
             # rmtree of the whole delta dir would race a concurrent
@@ -788,12 +774,6 @@ class PointsStore:
             for f in files:
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(f)
-            # sweep the delta dir and a pre-flat layout's bucket=N/
-            # dirs once empty (a concurrent append's file keeps its dir)
-            for d in sorted({os.path.dirname(f) for f in files}
-                            | {self._delta_path}, key=len, reverse=True):
-                with contextlib.suppress(OSError):
-                    os.rmdir(d)
             if self._delta_files():
                 return None  # a concurrent append's delta landed
             return (frozenset(base + files),
@@ -804,18 +784,13 @@ class PointsStore:
     def _write_base(self, table):
         """Replace the base catalog with ``table``: write it as one
         new ``base-<uuid>.parquet`` (dot-temp + rename), then remove
-        every other entry under ``_catalog/`` — older base files and a
-        pre-flat layout's ``bucket=N/`` dirs. Base writers are
+        every other file under ``_catalog/``. Base writers are
         serialized (compaction lock) or run on a quiesced store;
         crash consistency comes from the caller's pending marker."""
         keep = _write_catalog_file(self._catalog_path, "base", table)
         for entry in os.listdir(self._catalog_path):
             p = os.path.join(self._catalog_path, entry)
-            if p == keep:
-                continue
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            else:
+            if p != keep:
                 os.remove(p)
 
     # --------------------------------------------- crash-safe rewrites
@@ -867,20 +842,6 @@ class PointsStore:
         shutil.rmtree(target)
         os.rename(tmp, target)
 
-    def _legacy_catalog(self) -> bool:
-        """True when any catalog/delta file predates the r6 layout
-        (no first/last value columns) — one-time migration via
-        rebuild_catalog, same stance as the marker repair. Checks
-        every file, as :meth:`read_catalog_local` does, so the two
-        never disagree on whether a migration is due."""
-        for f in self._base_files() + self._delta_files():
-            try:
-                if "f_seq" not in pq.read_schema(f).names:
-                    return True
-            except FileNotFoundError:
-                continue  # racing compaction; decided by the rest
-        return False
-
     def read_catalog_local(self, files=None) -> dict | None:
         """Driver-side catalog snapshot WITHOUT a Spark job: fold the
         base + delta parquet files (``files``, default the current
@@ -890,9 +851,8 @@ class PointsStore:
         list/count/skip-points selects from in-memory series structs;
         Spark's job floor is ~0.2 s). Returns None when a crashed
         append needs :meth:`repair_catalog` first (stale pending
-        marker), when a pre-r6 legacy file lacks the value columns
-        (:meth:`repair_catalog` migrates it), or when a racing
-        compaction removed a listed file (list again)."""
+        marker) or when a racing compaction removed a listed file
+        (list again)."""
         if files is None:
             files = self.catalog_files()
             if files is None:
@@ -902,8 +862,7 @@ class PointsStore:
     @staticmethod
     def _fold_files(files) -> dict | None:
         """:func:`merge_stats` fold of the catalog parquet ``files``,
-        read with pyarrow. None when a file predates the r6 layout or
-        a racing compaction removed it."""
+        read with pyarrow. None when a racing compaction removed one."""
         out: dict = {}
         for f in files:
             try:
@@ -911,8 +870,6 @@ class PointsStore:
             except FileNotFoundError:
                 return None  # racing compaction removed the file
             with pf:
-                if "f_seq" not in pf.schema_arrow.names:
-                    return None  # legacy layout: repair_catalog migrates
                 d = pf.read(columns=CATALOG_COLS).to_pydict()
             merge_stats(out, catalog_stats(d))
         return out
@@ -961,8 +918,8 @@ class PointsStore:
 
     def repair_catalog(self, spark: SparkSession):
         """Make the catalog files trustworthy for a driver fold: the
-        one-time rebuild after a crashed append (stale pending marker)
-        or of a pre-r6 legacy layout. A no-op otherwise."""
+        one-time rebuild after a crashed append (stale pending
+        marker). A no-op otherwise."""
         stale = self._stale_markers()
         if stale:
             # an append CRASHED between points and catalog (its
@@ -973,8 +930,6 @@ class PointsStore:
             self.rebuild_catalog(spark)
             for m in stale:
                 self._clear_pending(m)
-        elif self._legacy_catalog():
-            self.rebuild_catalog(spark)  # one-time r6 migration
 
     def rebuild_catalog(self, spark: SparkSession):
         """Full recompute — the rare maintenance path (after expire,

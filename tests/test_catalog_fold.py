@@ -7,9 +7,6 @@ the points."""
 import math
 import os
 import random
-import uuid
-
-import pyarrow.parquet as pq
 
 from siridb_server_spark import SiriEngine
 from siridb_server_spark.model import POINTS_SCHEMA
@@ -17,17 +14,9 @@ from siridb_server_spark.sources import store as S
 from siridb_server_spark.sources.datasource import register
 from siridb_server_spark.sources.store import (
     PointsStore,
-    _catalog_table,
     catalog_stats,
     merge_stats,
 )
-
-
-def point_stats(r) -> tuple:
-    """``(name, stats)`` of one points row (the ``POINTS_SCHEMA``
-    tuple), ready for ``merge_stats``."""
-    vals = (r[2], r[3], r[4], r[5])
-    return r[0], (1, r[1], r[1], r[6], vals, vals)
 
 
 def _write(df, path):
@@ -79,60 +68,6 @@ def test_sink_fold_exact_for_int64_and_nan(spark, tmp_path):
     (ts, first), = eng.query("select first() from 'd'")["d"]
     assert ts == 10 and math.isnan(first)
     assert eng.query("select last() from 'd'") == {"d": [[30, 2.5]]}
-
-
-def test_hash_bucketed_catalog_layout_reads_and_compacts_flat(
-        spark, tmp_path):
-    """A catalog in the earlier hash-bucketed layout — Spark-style
-    ``bucket=N/part-*.parquet`` files under both ``_catalog/`` and
-    ``_catalog_delta/``, plus its bucket-count file — folds to the
-    same catalog, and its first compaction rewrites it as one flat
-    base file with the answers unchanged."""
-    path = str(tmp_path / "db")
-    st = PointsStore(path, 1000, 1000)
-    rows = [(f"s{i % 5}", 100 * i, i, i, None, None, 0)
-            for i in range(40)]
-    st.append_local(spark, rows)
-    want = st.read_catalog_local()
-    eng = SiriEngine.open(spark, path, precision="s")
-    count = eng.query("count series")
-    last = eng.query("select last() from /s.*/")
-
-    def write_buckets(top, part):
-        folded = merge_stats({}, map(point_stats, part))
-        for b in (0, 1):
-            d = os.path.join(top, f"bucket={b}")
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(
-                _catalog_table({n: s for n, s in folded.items()
-                                if int(n[1:]) % 2 == b}),
-                os.path.join(d, f"part-00000-{uuid.uuid4()}"
-                                ".c000.snappy.parquet"))
-
-    for top in (st._catalog_path, st._delta_path):
-        for root, _dirs, files in os.walk(top):
-            for f in files:
-                os.remove(os.path.join(root, f))
-    write_buckets(st._catalog_path, rows[:20])
-    write_buckets(st._delta_path, rows[20:30])
-    write_buckets(st._delta_path, rows[30:])
-    open(os.path.join(st._catalog_path, "_SUCCESS"), "w").close()
-    with open(os.path.join(path, "_catalog.meta.json"), "w") as fh:
-        fh.write('{"buckets": 2}')
-    assert st.read_catalog_local() == want
-    eng._invalidate()
-    assert eng.query("count series") == count
-    assert eng.query("select last() from /s.*/") == last
-
-    _, left = st._compact_catalog(spark)
-    assert len(left) == 1
-    assert os.listdir(st._catalog_path) == [
-        os.path.basename(next(iter(left)))]
-    assert not os.path.exists(st._delta_path)
-    assert st.read_catalog_local() == want
-    eng._invalidate()
-    assert eng.query("count series") == count
-    assert eng.query("select last() from /s.*/") == last
 
 
 def test_catalog_writers_fold_to_points_truth(spark, tmp_path,

@@ -21,7 +21,7 @@ from siridb_server_spark.sources.store import PointsStore
 
 def _catalog(store, spark):
     """The store's catalog as ``{name: stats}``, after its one-time
-    crash/legacy repair, folded on the driver."""
+    crash repair, folded on the driver."""
     store.repair_catalog(spark)
     return store.read_catalog_local()
 

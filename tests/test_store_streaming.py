@@ -21,7 +21,7 @@ from siridb_server_spark.streaming import ingest as ING
 
 def _catalog(store, spark):
     """The store's catalog as ``{name: stats}``, after its one-time
-    crash/legacy repair, folded on the driver."""
+    crash repair, folded on the driver."""
     store.repair_catalog(spark)
     return store.read_catalog_local()
 
@@ -1130,35 +1130,6 @@ def test_streaming_holt_matches_batch_across_restart(spark, tmp_path):
         glv, gtr, gf = got[k]
         assert glv == lv and gtr == tr
         assert gf == (None if tr is None else lv + tr)
-
-
-def test_catalog_r6_migration_from_legacy_layout(spark, tmp_path):
-    """A store whose catalog predates the first/last value columns
-    (pre-r6 layout) migrates transparently: repair_catalog detects the
-    legacy schema and rebuilds once from the points; the skip-points
-    first()/last() fast path works right after."""
-    from siridb_server_spark import SiriEngine
-
-    eng = SiriEngine.open(spark, str(tmp_path / "mdb"), precision="s")
-    eng.insert({"m": [[100, 1.5], [300, 9.5], [200, 4.5]]})
-    # overwrite the catalog with the r5 (legacy) shape
-    import pyarrow as pa
-    eng.store._write_base(pa.table({
-        "name": ["m"], "length": [3], "start": [100], "end": [300],
-        "tp": pa.array([1], pa.int32())}))
-    eng._invalidate()
-    assert eng.store._legacy_catalog()
-    # the driver fold refuses legacy files; the repair migrates, and
-    # afterwards the catalog carries the values
-    assert eng.store.read_catalog_local() is None
-    cat = {n: (st[0], st[4][2], st[5][2])
-           for n, st in _catalog(eng.store, spark).items()}
-    assert cat == {"m": (3, 1.5, 9.5)}
-    assert not eng.store._legacy_catalog()
-    assert eng.query("select first() from 'm'") == {
-        "m": [[100, 1.5]]}
-    assert eng.query("select last() from 'm'") == {
-        "m": [[300, 9.5]]}
 
 
 def test_catalog_first_last_values_fold_across_appends(spark,
